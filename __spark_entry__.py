@@ -6031,7 +6031,8 @@ def q_uniform_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two staged files are independent fixture writes — land them as
     # concurrent jobs (guide §2.6, the bucketed_join/iceberg_addfiles
     # shape) instead of serially; the stream still starts only after
-    # BOTH are on disk, so batch content and order are unchanged.
+    # BOTH are on disk.  Which file becomes the first micro-batch may
+    # change, and the result is order-insensitive.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as _pool:

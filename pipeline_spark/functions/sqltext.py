@@ -54,12 +54,16 @@ def sql_lit(v):
     raise ValueError(f"sql_lit: unsupported literal type {type(v).__name__}")
 
 
-# URI -> raw path normalization, the text twin of the Column expression
-# used by stamp_lineage/_apply_row_deletes/apply_identity_fill and the
-# delta reader's __dv_fp: scheme strip, '+' protected from url_decode's
-# form-decoding, then percent-decode.  '\\+' in SQL-literal escaping is
-# the two-character regex \+ .
+# '\\+' in SQL-literal escaping is the two-character regex \+ .
 def fp_norm_sql(src: str) -> str:
+    """``_metadata.file_path`` (a URI: scheme + percent-encoding) → the
+    raw filesystem path driver-side code uses, as in stamp_lineage,
+    _apply_row_deletes, apply_identity_fill and the delta reader's
+    __dv_fp.  A hive partition value with a space arrives as %20 — an
+    undecoded comparison silently misses the file and deleted rows
+    resurrect.  ``url_decode`` form-decodes '+' as space, so a literal
+    '+' is escaped to %2B first; the URI encoder escapes '%' itself, so
+    every remaining %XX is a valid escape."""
     return (
         "url_decode(regexp_replace(regexp_replace("
         f"{src}, '^file:/+', '/'), '\\\\+', '%2B'))"
@@ -67,8 +71,10 @@ def fp_norm_sql(src: str) -> str:
 
 
 def scheme_strip_sql(src: str) -> str:
-    """Text twin of strip_scheme_col (no percent-decode — stored paths
-    are literal, only _metadata-derived ones are URI-encoded)."""
+    """Scheme-strip a STORED path column (delete-file contents, DV
+    references), the column-side :func:`norm_path` of the iceberg
+    reader: no percent-decode — stored paths are literal, only
+    ``_metadata``-derived ones are URI-encoded."""
     return f"regexp_replace({src}, '^file:/+', '/')"
 
 

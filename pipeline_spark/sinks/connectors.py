@@ -1,20 +1,25 @@
 """Cloud-connector sinks: bigquery / spanner / firestore / datastore /
-bigtable / pubsub / iceberg.
+bigtable / pubsub / iceberg / kafka.
 
 Reference surface (SURVEY §2.7): module/sink/{BigQuery,Spanner,Firestore,
 Datastore,Bigtable,PubSub,Iceberg}Sink.java.  Spark-first mapping:
 
-  bigquery   df.write.format("bigquery")          (spark-bigquery-connector)
-  spanner    foreachBatch JDBC/mutation client
-  iceberg    df.writeTo(table).append()           (iceberg-spark-runtime)
-  pubsub     writeStream via connector / Kafka bridge
-  firestore/datastore/bigtable  foreachBatch client writes
+  bigquery   df.write.format("bigquery") (spark-bigquery-connector); without
+             the jar, staged parquet + one load job, or client inserts
+  spanner/firestore/datastore/bigtable/pubsub
+             one client per partition writing mutation batches
+             (sinks/drive.py write_mutations)
+  iceberg    df.writeTo(table) with the runtime jar; without it a native
+             commit per write, one per micro-batch when streaming
+  kafka      the kafka connector with its jar; without it the stdlib wire
+             producer per partition (sinks/drive.py write_partitions)
 
 Each module resolves its connector lazily and raises a clear, actionable
-error when the connector jar / SDK is absent (none are bundled in this
-container).  The config surface — module name, parameters, mutation-op
+error when the connector jar / SDK is absent (none are bundled with this
+package).  The config surface — module name, parameters, mutation-op
 column semantics (SURVEY §2.10) — is the reference's, so configs validate
-and plans build; only the final action needs the connector.
+and plans build; only the final action needs the connector.  Streaming
+input runs through the same writers, one foreachBatch per micro-batch.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from pyspark.sql import functions as F
 
 from pipeline_spark.functions.jvmclass import jvm_class_present
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_batches, write_mutations, write_partitions
 
 
 def _require_connector(ctx: ModuleContext, fmt: str, hint: str) -> None:
@@ -142,14 +148,16 @@ def _bigquery_native_write(ctx: ModuleContext, p: dict, table: str) -> None:
         "STORAGE_WRITE_API",
         "STORAGE_API_AT_LEAST_ONCE",
     ):
-        _write_with_client(
+        write_mutations(
             ctx.input,
             factory_path=factory,
             params={**p, "method": method},
-            target=table,
-            op_field=p.get("mutationOpField", "__op__"),
-            default_op=str(p.get("mutationType", "INSERT")).upper(),
             batch_size=int(p.get("batchSize", 500)),
+            to_mutations=_row_mutations(
+                table,
+                p.get("mutationOpField", "__op__"),
+                str(p.get("mutationType", "INSERT")).upper(),
+            ),
         )
     else:
         raise ValueError(f"bigquery sink: unsupported method '{method}'")
@@ -257,16 +265,13 @@ def iceberg_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
             mode_b = first_mode if batch_id == 0 else "append"
             write_iceberg_native(bdf, {**sp, "mode": mode_b})
 
-        query = (
-            ctx.input.writeStream
-            .outputMode(p.get("outputMode", "append"))
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        write_batches(
+            ctx.input,
+            write_batch,
+            checkpoint=checkpoint,
+            output_mode=p.get("outputMode", "append"),
+            wait=p.get("await", True),
         )
-        if p.get("await", True):
-            query.awaitTermination()
         return {"": ctx.input}
     try:
         _require_connector(ctx, "iceberg", "org.apache.iceberg.spark.SparkCatalog")
@@ -291,51 +296,15 @@ def iceberg_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
     return {"": ctx.input}
 
 
-def _write_with_client(
-    df: DataFrame,
-    *,
-    factory_path: str,
-    params: dict,
-    target: str,
-    op_field: str,
-    default_op: str,
-    batch_size: int,
-) -> None:
-    """Executor-side mutation writes: every partition builds its own
-    client from the dotted factory path and streams mutation batches —
-    no driver materialization, parallelism = partition count (the
-    reference's per-bundle client in SpannerSink.java WriteMutationDoFn).
+def _row_mutations(target: str, op_field: str, default_op: str):
+    """Row dict → one mutation: op from the ``op_field`` column (falls
+    back to ``default_op``), the op column stripped from the row."""
 
-    Mutation shape (SURVEY §2.10 UnifiedMutation): ``{"op", "table",
-    "row"}`` with op from the ``__op__`` column (falls back to
-    ``default_op``); the op column is stripped from the written row.
-    """
+    def to_mutations(d: dict) -> tuple[dict]:
+        op = d.pop(op_field, None) or default_op
+        return ({"op": str(op).upper(), "table": target, "row": d},)
 
-    def write_partition(rows) -> None:
-        from pipeline_spark.operators.ml import resolve_factory
-
-        client = resolve_factory(factory_path)(params)
-        buf: list[dict] = []
-        for row in rows:
-            d = row.asDict(recursive=True)
-            op = d.pop(op_field, None) or default_op
-            buf.append({"op": str(op).upper(), "table": target, "row": d})
-            if len(buf) >= batch_size:
-                client.write(buf)
-                buf = []
-        if buf:
-            client.write(buf)
-
-    if df.isStreaming:
-        (
-            df.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, _bid: bdf.foreachPartition(write_partition))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    else:
-        df.foreachPartition(write_partition)
+    return to_mutations
 
 
 def _client_sink(name: str, default_factory: str, target_keys: tuple[str, ...]):
@@ -345,14 +314,16 @@ def _client_sink(name: str, default_factory: str, target_keys: tuple[str, ...]):
         target = next((p[k] for k in target_keys if p.get(k)), None)
         if target is None:
             raise ValueError(f"{name} sink requires one of {target_keys}")
-        _write_with_client(
+        write_mutations(
             ctx.input,
             factory_path=p.get("clientFactory", default_factory),
             params=dict(p),
-            target=str(target),
-            op_field=p.get("mutationOpField", "__op__"),
-            default_op=str(p.get("mutationOp", "UPSERT")).upper(),
             batch_size=int(p.get("batchSize", 500)),
+            to_mutations=_row_mutations(
+                str(target),
+                p.get("mutationOpField", "__op__"),
+                str(p.get("mutationOp", "UPSERT")).upper(),
+            ),
         )
         return {"": ctx.input}
 
@@ -693,7 +664,7 @@ def kafka_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
     explicit_part = p.get("partition")
     client_id = str(p.get("clientId", "pipeline-spark"))
 
-    def produce_partition(rows) -> None:
+    def produce_rows(rows) -> None:
         import time as _time
 
         clients: dict[int, KafkaClient] = {}
@@ -736,20 +707,11 @@ def kafka_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
             for cl in clients.values():
                 cl.close()
 
-    if payload.isStreaming:
-        query = (
-            payload.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, _bid: bdf.foreachPartition(produce_partition))
-            .option(
-                "checkpointLocation",
-                p.get("checkpointLocation")
-                or f"/tmp/pipeline_spark_kafka_sink_{topic}_checkpoint",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        if p.get("await", True):
-            query.awaitTermination()
-    else:
-        payload.foreachPartition(produce_partition)
+    write_partitions(
+        payload,
+        produce_rows,
+        checkpoint=p.get("checkpointLocation")
+        or f"/tmp/pipeline_spark_kafka_sink_{topic}_checkpoint",
+        wait=p.get("await", True),
+    )
     return {}

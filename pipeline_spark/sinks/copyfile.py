@@ -1,8 +1,8 @@
 """`copyfile` sink: storage-to-storage object copy.
 
 Reference: module/sink/CopyFileSink.java — copies files named by row fields
-between storages.  Executor-side copies via foreachPartition (local/posix
-paths in this environment; cloud FS via fsspec when present).
+between storages.  Executor-side copies per partition (sinks/drive.py;
+local/posix paths), per micro-batch for streaming input.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ import shutil
 from pyspark.sql import DataFrame
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_partitions
 
 
 @module("copyfile", kind=KIND_SINK)
@@ -21,9 +22,9 @@ def copyfile_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
     src_field = p.get("sourceField", "source")
     dst_field = p.get("destinationField", "destination")
 
-    def copy_partition(rows):
+    def copy_rows(rows):
         for row in rows:
             shutil.copyfile(row[src_field], row[dst_field])
 
-    df.foreachPartition(copy_partition)
+    write_partitions(df, copy_rows)
     return {"": df}

@@ -36,6 +36,7 @@ import uuid
 from typing import Any
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_batches
 from pipeline_spark.sources.delta_native import (
     _log_dir,
     latest_version,
@@ -3834,13 +3835,11 @@ def delta_sink(ctx: ModuleContext) -> dict[str, Any]:
             ctx.spark, bdf, {**p, "mode": mode}, txn=(app_id, int(batch_id))
         )
 
-    query = (
-        df.writeStream.outputMode(p.get("outputMode", "append"))
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    write_batches(
+        df,
+        write_batch,
+        checkpoint=checkpoint,
+        output_mode=p.get("outputMode", "append"),
+        wait=p.get("await", True),
     )
-    if p.get("await", True):
-        query.awaitTermination()
     return {}

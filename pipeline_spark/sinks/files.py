@@ -1,8 +1,8 @@
 """`files` sink: one output file per row.
 
 Reference: module/sink/FilesSink.java — writes each row's payload to its
-own object (e.g. rendered documents).  Spark: ``foreachPartition`` writer;
-executor-side, no driver collect.
+own object (e.g. rendered documents).  Executor-side per-partition writer
+(sinks/drive.py), no driver collect; streaming input writes per micro-batch.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ import os
 from pyspark.sql import DataFrame
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_partitions
 
 
 @module("files", kind=KIND_SINK)
@@ -25,7 +26,7 @@ def files_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
         raise ValueError("files sink requires output dir")
     os.makedirs(out_dir, exist_ok=True)
 
-    def write_partition(rows):
+    def write_rows(rows):
         for row in rows:
             name = str(row[name_field])
             payload = row[content_field]
@@ -33,5 +34,5 @@ def files_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
             with open(os.path.join(out_dir, os.path.basename(name)), mode) as f:
                 f.write(payload)
 
-    df.foreachPartition(write_partition)
+    write_partitions(df, write_rows)
     return {"": df}

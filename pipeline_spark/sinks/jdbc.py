@@ -13,10 +13,11 @@ DELETE → ``DELETE WHERE keys`` — preserving within-partition order
 between op kinds by flushing batches at op boundaries.
 
 With ``connectionFactory`` (``pkg.mod:fn`` → PEP 249 connection) the
-write runs through ``foreachPartition``: each executor task opens its own
-connection and issues batched ``executemany`` inserts (batchSize rows per
-round-trip, one commit per partition) — no jar required, e2e-testable
-with sqlite3.  ``mode: overwrite`` clears the table driver-side first.
+write runs per partition (``sinks/drive.py``, per micro-batch for
+streaming input): each executor task opens its own connection and issues
+batched ``executemany`` inserts (batchSize rows per round-trip, one
+commit per partition) — no jar required, e2e-testable with sqlite3.
+``mode: overwrite`` clears the table driver-side first.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_partitions
 
 
 def create_statement(
@@ -158,54 +160,47 @@ def _dbapi_write(df: DataFrame, p: dict) -> None:
             f"{k} = {ph}" for k in keys
         )
 
-    def write_partition(rows):
+    def route(r) -> tuple[str, tuple]:
+        if not mutational:
+            return sql, tuple(r[c] for c in cols)
+        op = (r[op_field] or "UPSERT").upper()
+        if op == "INSERT":
+            return ins_sql, tuple(r[c] for c in data_cols)
+        if op in ("UPSERT", "REPLACE"):
+            return ups_sql, tuple(r[c] for c in data_cols)
+        if op == "UPDATE":
+            return upd_sql, tuple(r[c] for c in nonkey) + tuple(r[k] for k in keys)
+        if op == "DELETE":
+            return del_sql, tuple(r[k] for k in keys)
+        raise ValueError(f"jdbc sink: unknown mutation op '{op}'")
+
+    def write_rows(rows):
         conn = resolve_factory(factory_path)(params_snapshot)
         try:
             cur = conn.cursor()
-            if not mutational:
-                buf = []
-                for r in rows:
-                    buf.append(tuple(r[c] for c in cols))
-                    if len(buf) >= batch:
-                        cur.executemany(sql, buf)
-                        buf.clear()
+            # flush on statement change to preserve within-partition order
+            pending_sql = None
+            buf = []
+
+            def flush():
                 if buf:
-                    cur.executemany(sql, buf)
-            else:
-                # flush on op change to preserve within-partition order
-                pending_sql = None
-                buf = []
+                    cur.executemany(pending_sql, buf)
+                    buf.clear()
 
-                def flush():
-                    if buf:
-                        cur.executemany(pending_sql, buf)
-                        buf.clear()
-
-                for r in rows:
-                    op = (r[op_field] or "UPSERT").upper()
-                    if op in ("INSERT",):
-                        stmt, vals = ins_sql, tuple(r[c] for c in data_cols)
-                    elif op in ("UPSERT", "REPLACE"):
-                        stmt, vals = ups_sql, tuple(r[c] for c in data_cols)
-                    elif op == "UPDATE":
-                        stmt = upd_sql
-                        vals = tuple(r[c] for c in nonkey) + tuple(r[k] for k in keys)
-                    elif op == "DELETE":
-                        stmt, vals = del_sql, tuple(r[k] for k in keys)
-                    else:
-                        raise ValueError(f"jdbc sink: unknown mutation op '{op}'")
-                    if stmt is not pending_sql:
-                        flush()
-                        pending_sql = stmt
-                    buf.append(vals)
-                    if len(buf) >= batch:
-                        flush()
-                flush()
+            for r in rows:
+                stmt, vals = route(r)
+                if stmt is not pending_sql:
+                    flush()
+                    pending_sql = stmt
+                buf.append(vals)
+                if len(buf) >= batch:
+                    flush()
+            flush()
             conn.commit()
         finally:
             conn.close()
 
-    df.foreachPartition(write_partition)
+    write_partitions(df, write_rows)
 
 
 @module("jdbc", kind=KIND_SINK)

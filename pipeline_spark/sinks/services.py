@@ -32,9 +32,11 @@ single driver-side control-plane call by definition.
 from __future__ import annotations
 
 import json
+from collections.abc import Iterator
 from typing import Any
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_mutations
 
 _AUXIA_RESERVED = (
     "user_id", "event_name", "insert_id", "client_event_timestamp",
@@ -120,69 +122,46 @@ def auxia_sink(ctx: ModuleContext) -> dict:
     )
     client_params = {**p, "topic": topic}
 
-    def write_partition(rows) -> None:
-        from pipeline_spark.operators.ml import resolve_factory
+    def to_mutations(d: dict) -> Iterator[dict]:
+        for x in exclude:
+            d.pop(x, None)
+        if typ == "json":
+            raw = d.get(field)
+            if isinstance(raw, (bytes, bytearray)):
+                raw = bytes(raw).decode("utf-8")
+            body = json.loads(raw) if isinstance(raw, str) else dict(raw)
+            evs = body if isinstance(body, list) else [body]
+            row_user = d.get("user_id")
+            # per-EVENT attribution: an event's own user_id wins over
+            # the row's — a multi-user payload must never publish one
+            # user's event under another's id
+            events = [(e.pop("user_id", None) or row_user, e) for e in evs]
+        else:
+            row_user = d.get("user_id")
+            arr = d.get("events")
+            events = [
+                (row_user, _auxia_event(dict(e), event_name)) for e in arr
+            ] if arr else [(row_user, _auxia_event(d, event_name))]
+        for user_id, ev in events:
+            if user_id is None:
+                raise ValueError(
+                    "auxia sink: every event needs a user_id (row "
+                    "column or per-event field)"
+                )
+            request = {
+                "project_id": str(project_id),
+                "user_id": str(user_id),
+                "events": [ev],
+            }
+            yield {"op": "INSERT", "table": topic, "row": request}
 
-        client = resolve_factory(factory_path)(client_params)
-        buf: list[dict] = []
-
-        def flush():
-            if buf:
-                client.write(list(buf))
-                buf.clear()
-
-        for row in rows:
-            d = row.asDict(recursive=True)
-            for x in exclude:
-                d.pop(x, None)
-            if typ == "json":
-                raw = d.get(field)
-                if isinstance(raw, (bytes, bytearray)):
-                    raw = bytes(raw).decode("utf-8")
-                body = json.loads(raw) if isinstance(raw, str) else dict(raw)
-                evs = body if isinstance(body, list) else [body]
-                row_user = d.get("user_id")
-                # per-EVENT attribution: an event's own user_id wins over
-                # the row's — a multi-user payload must never publish one
-                # user's event under another's id
-                events = [
-                    (e.pop("user_id", None) or row_user, e) for e in evs
-                ]
-            else:
-                row_user = d.get("user_id")
-                arr = d.get("events")
-                events = [
-                    (row_user, _auxia_event(dict(e), event_name))
-                    for e in arr
-                ] if arr else [(row_user, _auxia_event(d, event_name))]
-            for user_id, ev in events:
-                if user_id is None:
-                    raise ValueError(
-                        "auxia sink: every event needs a user_id (row "
-                        "column or per-event field)"
-                    )
-                request = {
-                    "project_id": str(project_id),
-                    "user_id": str(user_id),
-                    "events": [ev],
-                }
-                buf.append({"op": "INSERT", "table": topic, "row": request})
-                if len(buf) >= batch_size:
-                    flush()
-        flush()
-
-    if ctx.input.isStreaming:
-        (
-            ctx.input.writeStream.outputMode("append")
-            .foreachBatch(
-                lambda bdf, _b: bdf.foreachPartition(write_partition)
-            )
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    else:
-        ctx.input.foreachPartition(write_partition)
+    write_mutations(
+        ctx.input,
+        factory_path=factory_path,
+        params=client_params,
+        batch_size=batch_size,
+        to_mutations=to_mutations,
+    )
     return {"": ctx.input}
 
 
@@ -214,55 +193,38 @@ def tasks_sink(ctx: ModuleContext) -> dict:
     factory_path = p.get(
         "clientFactory", "pipeline_spark.sinks.services:default_tasks_client"
     )
-    params = dict(p)
 
-    def write_partition(rows) -> None:
-        from pipeline_spark.operators.ml import resolve_factory
-
-        client = resolve_factory(factory_path)(params)
-        buf: list[dict] = []
-        for row in rows:
-            d = row.asDict(recursive=True)
-            if fmt == "json":
-                body = json.dumps(d, default=str).encode("utf-8")
-            else:
-                v = d.get(payload_field)
-                body = (
-                    bytes(v) if isinstance(v, (bytes, bytearray))
-                    else str(v or "").encode("utf-8")
-                )
-            hdrs = dict(headers)
-            for a in attributes:  # row fields surfaced as task headers
-                if d.get(a) is not None:
-                    hdrs[f"x-attr-{a}"] = str(d[a])
-            buf.append({"op": "INSERT", "table": queue, "row": {
-                "task": {
-                    "httpRequest": {
-                        "url": url,
-                        "httpMethod": method,
-                        "headers": hdrs,
-                        "body": base64.b64encode(body).decode("ascii"),
-                    }
-                }
-            }})
-            if len(buf) >= batch_size:
-                client.write(buf)
-                buf = []
-        if buf:
-            client.write(buf)
-
-    if ctx.input.isStreaming:
-        (
-            ctx.input.writeStream.outputMode("append")
-            .foreachBatch(
-                lambda bdf, _b: bdf.foreachPartition(write_partition)
+    def to_mutations(d: dict) -> tuple[dict]:
+        if fmt == "json":
+            body = json.dumps(d, default=str).encode("utf-8")
+        else:
+            v = d.get(payload_field)
+            body = (
+                bytes(v) if isinstance(v, (bytes, bytearray))
+                else str(v or "").encode("utf-8")
             )
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    else:
-        ctx.input.foreachPartition(write_partition)
+        hdrs = dict(headers)
+        for a in attributes:  # row fields surfaced as task headers
+            if d.get(a) is not None:
+                hdrs[f"x-attr-{a}"] = str(d[a])
+        return ({"op": "INSERT", "table": queue, "row": {
+            "task": {
+                "httpRequest": {
+                    "url": url,
+                    "httpMethod": method,
+                    "headers": hdrs,
+                    "body": base64.b64encode(body).decode("ascii"),
+                }
+            }
+        }},)
+
+    write_mutations(
+        ctx.input,
+        factory_path=factory_path,
+        params=dict(p),
+        batch_size=batch_size,
+        to_mutations=to_mutations,
+    )
     return {"": ctx.input}
 
 

@@ -4,9 +4,10 @@ Reference: module/sink/TextSink.java:43-270 + docs/config/module/sink/
 text.md — unlike the storage sink (many rows per file), every record
 renders a FreeMarker template into its own object, with the DESTINATION
 path itself templated per record.  Spark-first: rendering and writing
-happen executor-side in ``foreachPartition`` (no driver materialization,
-parallelism = partition count); the FreeMarker-subset engine is the same
-one behind the text select function (``compilers/select_fns.py``).
+happen executor-side per partition (``sinks/drive.py``; no driver
+materialization, parallelism = partition count, streaming input per
+micro-batch); the FreeMarker-subset engine is the same one behind the
+text select function (``compilers/select_fns.py``).
 
 Shared-filesystem paths only — GCS/S3 destinations and object metadata
 (contentType, cacheControl, …) need their storage connectors and raise
@@ -21,6 +22,7 @@ import os
 from pyspark.sql import DataFrame
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks.drive import write_partitions
 
 
 class _CSVPrinter:
@@ -77,13 +79,12 @@ def text_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
     render_row_template(str(output))
     tpl_src, out_src = str(template), str(output)
 
-    def write_partition(rows) -> None:
+    def write_rows(rows) -> None:
         from pipeline_spark.compilers.select_fns import render_row_template as rrt
 
         render_content = rrt(tpl_src)
         render_path = rrt(out_src)
-        for row in rows:
-            d = row.asDict(recursive=True)
+        for d in rows:
             d["_CSVPrinter"] = _CSVPrinter
             path = render_path(d)
             os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
@@ -93,5 +94,5 @@ def text_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
             with open(path, "wb") as fh:
                 fh.write(payload)
 
-    df.foreachPartition(write_partition)
+    write_partitions(df, write_rows)
     return {"": df}

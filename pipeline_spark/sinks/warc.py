@@ -1,11 +1,11 @@
 """`warc` sink: write rows as WARC.gz crawl archives (ISO 28500).
 
-One ``part-NNNNN.warc.gz`` per partition, written executor-side
-(``foreachPartition`` like the files sink — on a cluster the output dir
-is a DFS mount).  Each row becomes one ``resource`` (or configured type)
-record in its own gzip member, the crawl-archive convention, with
-deterministic bytes (gzip mtime pinned, stable per-row record ids from
-the uri field).
+One ``part-NNNNN.warc.gz`` per partition, written executor-side by a
+``mapInArrow`` writer drained with a ``noop`` write (on a cluster the
+output dir is a DFS mount).  Each row becomes one ``resource`` (or
+configured type) record in its own gzip member, the crawl-archive
+convention, with deterministic bytes (gzip mtime pinned, stable per-row
+record ids from the uri field).
 """
 
 from __future__ import annotations
@@ -41,10 +41,10 @@ def warc_sink(ctx: ModuleContext) -> dict:
     )
 
     # r16 (guide §4.1): the writer runs as mapInArrow — batches cross
-    # the JVM→Python boundary as Arrow columns instead of foreachPartition's
-    # row-at-a-time pickled Rows (which also forced a DataFrame→RDD
-    # conversion job).  The per-record gzip member loop is the format's
-    # requirement and unchanged; output bytes are byte-identical.
+    # the JVM→Python boundary as Arrow columns instead of row-at-a-time
+    # pickled Rows (which also forced a DataFrame→RDD conversion job).
+    # The per-record gzip member loop is the format's requirement and
+    # unchanged; output bytes are byte-identical.
     def write_batches(batches):
         import pyarrow as pa
         from pyspark import TaskContext

@@ -639,23 +639,6 @@ def delta_source(ctx: ModuleContext) -> dict[str, Any]:
     return {"": read_delta_native(ctx.spark, ctx.params)}
 
 
-def _uri_to_path(col):
-    """``_metadata.file_path`` (a URI: scheme + percent-encoding) → the
-    raw filesystem path driver-side code uses.  A hive partition value
-    with a space ('grp=4-NOT SPECIFIED/') arrives as %20 — an undecoded
-    comparison silently misses the file and deleted rows resurrect.
-    ``url_decode`` form-decodes '+' as space, so literal '+' is escaped
-    to %2B first; the URI encoder escapes '%' itself, so every remaining
-    %XX is a valid escape."""
-    from pyspark.sql import functions as F
-
-    return F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(col, "^file:/+", "/"), r"\+", "%2B"
-        )
-    )
-
-
 def read_files_with_dv(spark, table, fschema, adds, with_meta: bool = False):
     """DataFrame over these add actions' data files with their deletion
     vectors APPLIED — the one correct way to re-read table files once

@@ -452,16 +452,6 @@ def _iceberg_type_to_spark(t) -> str:
     )
 
 
-def strip_scheme_col(col):
-    """Column-side twin of :func:`norm_path`: scheme-strip a STORED
-    path column (delete-file contents, DV references) — literal names,
-    never percent-decoded (that belongs to ``_metadata``-derived
-    stamps, which Spark URI-encodes)."""
-    from pyspark.sql import functions as F
-
-    return F.regexp_replace(col, "^file:/+", "/")
-
-
 def _delete_file_columns(path: str, ids, cols):
     """Physical column name per equality id inside a delete parquet:
     field-id metadata (``PARQUET:field_id``) wins — the delete file

@@ -20,8 +20,6 @@ import shutil
 
 import pytest
 
-pytestmark = pytest.mark.slow  # property fuzz suite: fast-tier deselects (r16)
-
 from pipeline_spark.functions.avroocf import (
     read_ocf_file,
     read_ocf_file_with_meta,
@@ -34,6 +32,8 @@ from pipeline_spark.sources.iceberg_native import (
     plan_files,
     read_iceberg_native,
 )
+
+pytestmark = pytest.mark.slow  # property fuzz suite: fast-tier deselects (r16)
 
 
 def _mk_multi_snapshot_v3(spark, base_dir, name, *, partition=False):

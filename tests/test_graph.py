@@ -52,6 +52,15 @@ def test_cc_transitive_chain(spark):
     assert _cc(spark, [(1, 3), (2, 3)]) == {1: 1, 2: 1, 3: 1}
 
 
+def test_cc_distributed_small(spark):
+    # per-commit coverage of the alternating-star loop: a reversed
+    # chain plus a second component
+    edges = [(4, 3), (3, 2), (2, 1), (10, 11)]
+    assert _cc_distributed(spark, edges) == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
+    }
+
+
 @pytest.mark.slow  # fast-tier deselects (r16: driver verify window)
 def test_cc_long_chain_and_separate_components(spark):
     edges = [(i, i + 1) for i in range(1, 20)] + [(100, 101), (101, 102)]
