@@ -38,12 +38,21 @@ util/pipeline/select/stateful/Lag.java:16-162). The parser surfaces these as
 from __future__ import annotations
 
 import math
+import operator
 import re
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# comparison operator -> Column builder; each Column op is ~11 py4j
+# round-trips, so only the named one is built
+COMPARISONS: dict[str, Callable[[Column, object], Column]] = {
+    "=": operator.eq, "!=": operator.ne,
+    ">": operator.gt, ">=": operator.ge,
+    "<": operator.lt, "<=": operator.le,
+}
 
 # resolver(field_name, lag_index) -> double-valued Column
 Resolver = Callable[[str, int], Column]
@@ -146,15 +155,10 @@ class _Parser:
     def cmp_expr(self) -> Column:
         left = self.add_expr()
         op = self.peek()
-        if op in ("=", "!=", ">", ">=", "<", "<="):
+        if op in COMPARISONS:
             self.next()
             right = self.add_expr()
-            cond = {
-                "=": left == right, "!=": left != right,
-                ">": left > right, ">=": left >= right,
-                "<": left < right, "<=": left <= right,
-            }[op]
-            return _bool2d(cond)
+            return _bool2d(COMPARISONS[op](left, right))
         return left
 
     def add_expr(self) -> Column:

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pipeline_spark.compilers.expression import compile_expression, schema_resolver
+from pipeline_spark.compilers.expression import COMPARISONS, compile_expression, schema_resolver
 
 _OPS = {"=", "!=", ">", ">=", "<", "<=", "in", "not in", "match", "true", "false"}
 
@@ -169,11 +169,7 @@ def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Colu
         return cond
 
     rhs = _coerce_literal(value, dtype)
-    cmp = {
-        "=": col == rhs, "!=": col != rhs,
-        ">": col > rhs, ">=": col >= rhs,
-        "<": col < rhs, "<=": col <= rhs,
-    }[op]
+    cmp = COMPARISONS[op](col, rhs)
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         # NaN / ±Inf row values compare false under every op
         # (Filter.java:509-512 c=-2 trick)

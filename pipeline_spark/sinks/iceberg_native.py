@@ -45,6 +45,7 @@ import uuid
 from typing import Any
 
 from pipeline_spark.functions.avroocf import write_ocf_bytes
+from pipeline_spark.functions.parquetschema import read_parquet
 from pipeline_spark.sources.iceberg_native import (
     find_table_metadata,
     parse_legacy_global_deletes,
@@ -1898,7 +1899,7 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
         # the replace snapshot drops the delete manifests.
         named = set()
         for r in (
-            spark.read.parquet(*[d["path"] for d in pos])
+            read_parquet(spark, *[d["path"] for d in pos])
             .select("file_path").distinct().collect()
         ):
             named.add(_norm(r["file_path"]))
@@ -2065,7 +2066,7 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
                     spark, prev_meta, files, extra_row_id=lineage
                 )
             else:
-                bin_df = spark.read.parquet(*[d["path"] for d in files])
+                bin_df = read_parquet(spark, *[d["path"] for d in files])
         bin_fills = {d["path"]: fills[d["path"]]
                      for d in files if d["path"] in fills}
         if bin_fills or lineage:
@@ -2431,7 +2432,7 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
         if _fills:
             live = _fill_schema_read(spark, _meta, data)
         else:
-            live = spark.read.parquet(*[d["path"] for d in data])
+            live = read_parquet(spark, *[d["path"] for d in data])
     if _fills:
         # fill identity partition columns from the manifest records so a
         # WHERE on a partition column matches (positions are unaffected)
@@ -3030,7 +3031,7 @@ def _cow_mutate_where(
             # off a fill file would drop the partition columns
             probe = _fill_schema_read(spark, prev_meta, candidates)
         else:
-            probe = spark.read.parquet(*[d["path"] for d in candidates])
+            probe = read_parquet(spark, *[d["path"] for d in candidates])
         if fills:
             probe = stamp_lineage(probe)
             probe = apply_identity_fill(spark, probe, fills, ftypes)
@@ -3086,7 +3087,7 @@ def _cow_mutate_where(
             spark, prev_meta, hit, extra_row_id=lineage
         )
     else:
-        grp = spark.read.parquet(*[d["path"] for d in hit])
+        grp = read_parquet(spark, *[d["path"] for d in hit])
     if fills or lineage:
         from pipeline_spark.sources.iceberg_native import derive_row_ids
 
@@ -3685,7 +3686,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
             elif fills:
                 probe = _fill_schema_read(spark, prev_meta, candidates)
             else:
-                probe = spark.read.parquet(*[d["path"] for d in candidates])
+                probe = read_parquet(spark, *[d["path"] for d in candidates])
             if fills:
                 probe = stamp_lineage(probe)
                 probe = apply_identity_fill(spark, probe, fills, ftypes)
@@ -3743,7 +3744,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
                 spark, prev_meta, hit, extra_row_id=lineage
             )
         else:
-            grp = spark.read.parquet(*[d["path"] for d in hit])
+            grp = read_parquet(spark, *[d["path"] for d in hit])
         if fills or lineage:
             from pipeline_spark.sources.iceberg_native import derive_row_ids
 

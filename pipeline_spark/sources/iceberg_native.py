@@ -10,7 +10,7 @@ avro manifests + parquet data files.  With the stdlib avro OCF reader
   metadata/v*.metadata.json (or version-hint.text)
     → current snapshot → manifest list (avro)
     → manifests (avro; status != DELETED, content == DATA)
-    → data file paths → ``spark.read.parquet(*paths)``
+    → data file paths → ``read_parquet(spark, *paths)`` (functions/parquetschema.py)
 
 Scale posture: metadata files are KB-MB and read driver-side (same as
 Iceberg's own planning); the DATA path stays a parquet scan with full
@@ -38,6 +38,7 @@ import re
 from typing import Any
 
 from pipeline_spark.functions.avroocf import read_ocf_file, read_ocf_file_with_meta
+from pipeline_spark.functions.parquetschema import read_parquet
 
 #: manifest_entry.status — 2 marks a data file removed in this snapshot
 _STATUS_DELETED = 2
@@ -730,7 +731,7 @@ def plan_equality_deletes(
         for d in files:
             phys = _delete_file_columns(d["path"], ids, cols)
             one = (
-                spark.read.parquet(d["path"])
+                read_parquet(spark, d["path"])
                 .select(*[
                     F.col(p).alias(f"__eq_{c}__")
                     for p, c in zip(phys, cols)
@@ -787,7 +788,7 @@ def _apply_row_deletes(
     pos_frames = []
     if pos:
         pos_frames.append(
-            spark.read.parquet(*[d["path"] for d in pos])
+            read_parquet(spark, *[d["path"] for d in pos])
             .selectExpr(
                 scheme_strip_sql("file_path") + " AS __dfp__",
                 "pos AS __dpos__",
@@ -1532,7 +1533,11 @@ def read_iceberg_native(spark, p: dict[str, Any]):
                         ", `_last_updated_sequence_number` bigint")
             df = reader.schema(sch).parquet(*[d["path"] for d in data])
         else:
-            df = reader.parquet(*[d["path"] for d in data])
+            df = (
+                reader.parquet(*[d["path"] for d in data])
+                if p.get("mergeSchema")
+                else read_parquet(spark, *[d["path"] for d in data])
+            )
             for _mc in ("_row_id", "_last_updated_sequence_number"):
                 if _mc in df.columns:
                     # rewrite-materialized metadata columns — surface
@@ -1593,7 +1598,7 @@ def _state_with_lineage(spark, data: list[dict], deletes: list[dict],
     if evolved:
         df = evolved_scan(spark, spark.read, data, fields, with_lineage=True)
     else:
-        df = spark.read.parquet(*[d["path"] for d in data]).select(
+        df = read_parquet(spark, *[d["path"] for d in data]).select(
             "*",
             F.url_decode(F.regexp_replace(
                 F.regexp_replace(
@@ -1741,7 +1746,7 @@ def read_iceberg_changelog(
             )
             df = (
                 evolved_scan(spark, spark.read, added, fields)
-                if ev else spark.read.parquet(*[d["path"] for d in added])
+                if ev else read_parquet(spark, *[d["path"] for d in added])
             )
             parts.append(_stamp(df, "insert", ordinal, sid))
         if removed:
@@ -1777,8 +1782,8 @@ def read_iceberg_changelog(
                     scheme_strip_sql,
                 )
 
-                pos_pairs = spark.read.parquet(
-                    *[d["path"] for d in pos_files]
+                pos_pairs = read_parquet(
+                    spark, *[d["path"] for d in pos_files]
                 ).selectExpr(
                     scheme_strip_sql("file_path") + " AS __dfp__",
                     "pos AS __dpos__",
@@ -1861,7 +1866,7 @@ def read_iceberg_changelog(
                 keys = None
                 for d in files:
                     phys = _delete_file_columns(d["path"], ids, cols)
-                    one = spark.read.parquet(d["path"]).select(*[
+                    one = read_parquet(spark, d["path"]).select(*[
                         F.col(pc).alias(f"__eq_{c}__")
                         for pc, c in zip(phys, cols)
                     ])

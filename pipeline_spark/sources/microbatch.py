@@ -43,12 +43,13 @@ def microbatch_source(ctx: ModuleContext) -> dict[str, DataFrame]:
     if input_path:
         from pyspark.sql import functions as F
 
+        from pipeline_spark.functions.parquetschema import read_parquet
         from pipeline_spark.sources.storage import _nanos_timestamp_cols
 
         nanos_cols = _nanos_timestamp_cols([input_path])
         if nanos_cols:
             ctx.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df_in = ctx.spark.read.parquet(input_path)
+        df_in = read_parquet(ctx.spark, input_path)
         for c in nanos_cols:
             df_in = df_in.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         df_in.createOrReplaceTempView(view)

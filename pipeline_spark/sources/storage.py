@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pipeline_spark.functions.parquetschema import read_parquet
 from pipeline_spark.registry import KIND_SOURCE, ModuleContext, module
 from pipeline_spark.sources.create import build_schema
 
@@ -88,9 +89,10 @@ def storage_source(ctx: ModuleContext) -> dict[str, DataFrame]:
         reader = ctx.spark.readStream
         if explicit_schema is None and fmt != "avro":
             # avro probes inside stream_avro_native (OCF header schema)
-            probe = ctx.spark.read
             explicit_schema = (
-                probe.parquet(*paths) if fmt == "parquet" else probe.format(fmt).load(paths)
+                read_parquet(ctx.spark, *paths)
+                if fmt == "parquet"
+                else ctx.spark.read.format(fmt).load(paths)
             ).schema
         if explicit_schema is not None:
             reader = reader.schema(explicit_schema)
@@ -141,7 +143,11 @@ def storage_source(ctx: ModuleContext) -> dict[str, DataFrame]:
             # Spark cannot scan parquet TIMESTAMP(NANOS); read them as
             # long (session conf) and convert to micros timestamps.
             ctx.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = reader.parquet(*paths)
+        df = (
+            reader.parquet(*paths)
+            if explicit_schema is not None
+            else read_parquet(ctx.spark, *paths)
+        )
         for c in nanos_cols:
             # integer div: epoch-nanos exceed double's 53-bit mantissa, so
             # `/ 1000` through float would be off by hundreds of nanos
