@@ -45,7 +45,7 @@ from pipeline_spark.compilers.filter_dsl import compile_filter
 
 def _input_col(agg: dict[str, Any], df: DataFrame) -> Column:
     if agg.get("expression"):
-        return compile_expression(str(agg["expression"]), schema_resolver(df))
+        return F.expr(compile_expression(str(agg["expression"]), schema_resolver(df)))
     field = agg.get("field")
     if field is None:
         raise ValueError(f"aggregation op '{agg.get('op')}' requires field or expression")
@@ -57,7 +57,7 @@ def _guard(col: Column, agg: dict[str, Any], df: DataFrame) -> Column:
     cond = agg.get("condition")
     if cond is None:
         return col
-    return F.when(compile_filter(cond, df), col)
+    return F.when(F.expr(compile_filter(cond, df)), col)
 
 
 def agg_name(agg: dict[str, Any]) -> str:
@@ -78,7 +78,7 @@ def compile_agg(
     if op == "count":
         cond = agg.get("condition")
         if cond is not None:
-            expr = F.count(F.when(compile_filter(cond, df), F.lit(1)))
+            expr = F.count(F.when(F.expr(compile_filter(cond, df)), F.lit(1)))
         elif agg.get("field"):
             expr = F.count(F.col(agg["field"]))
         else:
@@ -106,7 +106,7 @@ def compile_agg(
 
     if op in ("argmax", "argmin"):
         if agg.get("comparingExpression"):
-            cmp = compile_expression(str(agg["comparingExpression"]), schema_resolver(df))
+            cmp = F.expr(compile_expression(str(agg["comparingExpression"]), schema_resolver(df)))
         else:
             cmp = F.col(agg["comparingField"])
         fields = agg.get("fields")
@@ -143,7 +143,7 @@ def compile_agg(
         if agg.get("xField"):
             x = F.col(agg["xField"]).cast("double")
         elif agg.get("xExpression"):
-            x = compile_expression(str(agg["xExpression"]), schema_resolver(df))
+            x = F.expr(compile_expression(str(agg["xExpression"]), schema_resolver(df)))
         elif ts is not None:
             x = (F.unix_micros(ts) / 1000).cast("double")  # event-time millis
         else:

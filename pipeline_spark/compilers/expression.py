@@ -1,4 +1,4 @@
-"""exp4j-dialect arithmetic expression → Spark Column compiler.
+"""exp4j-dialect arithmetic expression → Spark SQL text compiler.
 
 The reference evaluates config `expression` strings with exp4j, a
 double-typed interpreter where every field value is coerced to double and
@@ -25,8 +25,12 @@ timestamp_diff_{microsecond..day}(a,b) truncating toward zero;
 timestamp_to_date(micros, offset_hour) -> epoch days; abs/acos/.../signum;
 constants pi, π, e.
 
-We compile the same grammar to a Catalyst Column tree instead of
-interpreting per row, so the expression joins whole-stage codegen.
+We compile the same grammar to Spark SQL text instead of interpreting per
+row: Catalyst parses it into the expression tree the Column API would
+build, so the expression joins whole-stage codegen, and a whole select
+list ships to the JVM in one ``selectExpr`` instead of one py4j
+round-trip per Column operator.  Every subexpression is parenthesized, so
+the SQL parser's precedence never regroups the exp4j tree.
 
 Lag syntax: `field[k]` means the value k rows back per key (used by the
 stateful `lag` select function, reference:
@@ -38,24 +42,20 @@ util/pipeline/select/stateful/Lag.java:16-162). The parser surfaces these as
 from __future__ import annotations
 
 import math
-import operator
 import re
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-# comparison operator -> Column builder; each Column op is ~11 py4j
-# round-trips, so only the named one is built
-COMPARISONS: dict[str, Callable[[Column, object], Column]] = {
-    "=": operator.eq, "!=": operator.ne,
-    ">": operator.gt, ">=": operator.ge,
-    "<": operator.lt, "<=": operator.le,
-}
+from pipeline_spark.functions.sqltext import qi, sql_lit
 
-# resolver(field_name, lag_index) -> double-valued Column
-Resolver = Callable[[str, int], Column]
+# comparison operators, spelled the same in SQL (`!=` parses to
+# NOT(a = b), as the Column `!=` builds)
+COMPARISONS = frozenset({"=", "!=", ">", ">=", "<", "<="})
+
+# resolver(field_name, lag_index) -> double-valued SQL text
+Resolver = Callable[[str, int], str]
 
 _TOKEN_RE = re.compile(
     r"\s*(?:"
@@ -65,12 +65,14 @@ _TOKEN_RE = re.compile(
     r")"
 )
 
+# exp4j name -> Spark SQL function; `log` is the natural log (one-arg
+# SQL `log` would be a different node)
 _UNARY_FUNCS = {
-    "abs": F.abs, "acos": F.acos, "asin": F.asin, "atan": F.atan,
-    "cbrt": F.cbrt, "ceil": F.ceil, "cos": F.cos, "cosh": F.cosh,
-    "exp": F.exp, "floor": F.floor, "log": F.log, "ln": F.log,
-    "log10": F.log10, "log2": F.log2, "sin": F.sin, "sinh": F.sinh,
-    "sqrt": F.sqrt, "tan": F.tan, "tanh": F.tanh, "signum": F.signum,
+    "abs": "abs", "acos": "acos", "asin": "asin", "atan": "atan",
+    "cbrt": "cbrt", "ceil": "ceil", "cos": "cos", "cosh": "cosh",
+    "exp": "exp", "floor": "floor", "log": "ln", "ln": "ln",
+    "log10": "log10", "log2": "log2", "sin": "sin", "sinh": "sinh",
+    "sqrt": "sqrt", "tan": "tan", "tanh": "tanh", "signum": "signum",
 }
 
 _CONSTANTS = {"pi": math.pi, "π": math.pi, "e": math.e}
@@ -85,28 +87,33 @@ _MICROS = {
 }
 
 
-def _bool2d(c: Column) -> Column:
-    return F.when(c, F.lit(1.0)).otherwise(F.lit(0.0))
+def _bool2d(cond: str) -> str:
+    return f"CASE WHEN {cond} THEN 1.0D ELSE 0.0D END"
 
 
-def _truthy(c: Column) -> Column:
-    return c > F.lit(0.0)
+def _truthy(x: str) -> str:
+    return f"({x} > 0.0D)"
+
+
+def _tokenize(text: str) -> list[str]:
+    tokens: list[str] = []
+    pos = 0
+    while pos < len(text):
+        m = _TOKEN_RE.match(text, pos)
+        if not m or m.end() == pos:
+            if text[pos:].strip():
+                raise ValueError(f"bad expression near '{text[pos:]}' in: {text}")
+            break
+        tokens.append(m.group(m.lastgroup))
+        pos = m.end()
+    return tokens
 
 
 class _Parser:
     def __init__(self, text: str, resolver: Resolver):
         self.text = text
         self.resolver = resolver
-        self.tokens: list[str] = []
-        pos = 0
-        while pos < len(text):
-            m = _TOKEN_RE.match(text, pos)
-            if not m or m.end() == pos:
-                if text[pos:].strip():
-                    raise ValueError(f"bad expression near '{text[pos:]}' in: {text}")
-                break
-            self.tokens.append(m.group(m.lastgroup))
-            pos = m.end()
+        self.tokens = _tokenize(text)
         self.i = 0
 
     def peek(self) -> str | None:
@@ -123,82 +130,77 @@ class _Parser:
             raise ValueError(f"expected '{tok}' got '{got}' in: {self.text}")
 
     # precedence chain (loosest → tightest), mirroring exp4j registrations
-    def parse(self) -> Column:
-        col = self.or_expr()
+    def parse(self) -> str:
+        sql = self.or_expr()
         if self.peek() is not None:
             raise ValueError(f"trailing tokens from '{self.peek()}' in: {self.text}")
-        return col
+        return sql
 
-    def or_expr(self) -> Column:
+    def or_expr(self) -> str:
         left = self.and_expr()
         while self.peek() == "|":
             self.next()
             right = self.and_expr()
-            left = _bool2d(_truthy(left) | _truthy(right))
+            left = _bool2d(f"({_truthy(left)} OR {_truthy(right)})")
         return left
 
-    def and_expr(self) -> Column:
+    def and_expr(self) -> str:
         left = self.not_expr()
         while self.peek() == "&":
             self.next()
             right = self.not_expr()
-            left = _bool2d(_truthy(left) & _truthy(right))
+            left = _bool2d(f"({_truthy(left)} AND {_truthy(right)})")
         return left
 
-    def not_expr(self) -> Column:
+    def not_expr(self) -> str:
         if self.peek() == "!":
             self.next()
             inner = self.not_expr()
-            return _bool2d(~_truthy(inner))
+            return _bool2d(f"(NOT {_truthy(inner)})")
         return self.cmp_expr()
 
-    def cmp_expr(self) -> Column:
+    def cmp_expr(self) -> str:
         left = self.add_expr()
         op = self.peek()
         if op in COMPARISONS:
             self.next()
             right = self.add_expr()
-            return _bool2d(COMPARISONS[op](left, right))
+            return _bool2d(f"({left} {op} {right})")
         return left
 
-    def add_expr(self) -> Column:
+    def add_expr(self) -> str:
         left = self.mul_expr()
         while self.peek() in ("+", "-"):
             op = self.next()
-            right = self.mul_expr()
-            left = left + right if op == "+" else left - right
+            left = f"({left} {op} {self.mul_expr()})"
         return left
 
-    def mul_expr(self) -> Column:
+    def mul_expr(self) -> str:
         left = self.unary_expr()
         while self.peek() in ("*", "/", "%"):
             op = self.next()
-            right = self.unary_expr()
-            if op == "*":
-                left = left * right
-            elif op == "/":
-                left = left / right
-            else:
-                left = left % right
+            left = f"({left} {op} {self.unary_expr()})"
         return left
 
-    def unary_expr(self) -> Column:
+    def unary_expr(self) -> str:
         if self.peek() == "-":
             self.next()
-            return -self.unary_expr()
+            # `(- (x))`: a bare `- 2.0D` would parse as a negative literal,
+            # not the UnaryMinus node the Column API builds
+            return f"(- ({self.unary_expr()}))"
         if self.peek() == "+":
             self.next()
             return self.unary_expr()
         return self.pow_expr()
 
-    def pow_expr(self) -> Column:
+    def pow_expr(self) -> str:
         base = self.atom()
         if self.peek() == "^":  # right-assoc, binds tighter than unary minus on rhs
             self.next()
-            return F.pow(base, self.unary_expr())
+            return f"power({base}, {self.unary_expr()})"
         return base
 
-    def atom(self) -> Column:
+    def atom(self) -> str:
         tok = self.peek()
         if tok is None:
             raise ValueError(f"unexpected end of expression: {self.text}")
@@ -209,9 +211,9 @@ class _Parser:
             return inner
         self.next()
         if re.fullmatch(r"\d+\.\d*|\.\d+|\d+", tok):
-            return F.lit(float(tok))
+            return sql_lit(float(tok))
         if tok in _CONSTANTS and self.peek() != "(":
-            return F.lit(_CONSTANTS[tok])
+            return sql_lit(_CONSTANTS[tok])
         if self.peek() == "(":
             return self.call(tok)
         if self.peek() == "[":  # lag index: field[k]
@@ -221,9 +223,9 @@ class _Parser:
             return self.resolver(tok, k)
         return self.resolver(tok, 0)
 
-    def call(self, fname: str) -> Column:
+    def call(self, fname: str) -> str:
         self.expect("(")
-        args: list[Column] = []
+        args: list[str] = []
         if self.peek() != ")":
             args.append(self.or_expr())
             while self.peek() == ",":
@@ -234,47 +236,55 @@ class _Parser:
         if name in _UNARY_FUNCS:
             if len(args) != 1:
                 raise ValueError(f"{name}() takes 1 arg")
-            out = _UNARY_FUNCS[name](args[0])
+            out = f"{_UNARY_FUNCS[name]}({args[0]})"
             # exp4j stays double everywhere; Spark ceil/floor return long
             if name in ("ceil", "floor"):
-                out = out.cast("double")
+                out = f"CAST({out} AS DOUBLE)"
             return out
         if name == "if":
-            return F.when(_truthy(args[0]), args[1]).otherwise(args[2])
+            if len(args) != 3:
+                raise ValueError(
+                    f"if() takes 3 args (condition, then, else), got {len(args)} in: {self.text}"
+                )
+            return f"CASE WHEN {_truthy(args[0])} THEN {args[1]} ELSE {args[2]} END"
         if re.fullmatch(r"switch\d+", name):
-            col = None
-            for i in range(0, len(args), 2):
-                cond = _truthy(args[i])
-                col = F.when(cond, args[i + 1]) if col is None else col.when(cond, args[i + 1])
-            return col.otherwise(F.lit(0.0))
+            if not args or len(args) % 2:
+                raise ValueError(
+                    f"{name}() takes condition/value pairs (an even number of args), "
+                    f"got {len(args)} in: {self.text}"
+                )
+            whens = " ".join(
+                f"WHEN {_truthy(args[i])} THEN {args[i + 1]}" for i in range(0, len(args), 2)
+            )
+            return f"CASE {whens} ELSE 0.0D END"
         if name == "max":
-            return F.greatest(*args)
+            return f"greatest({', '.join(args)})"
         if name == "min":
-            return F.least(*args)
+            return f"least({', '.join(args)})"
         if name.startswith("timestamp_diff_"):
             part = name.removeprefix("timestamp_diff_")
             scale = _MICROS[part]
-            diff = args[0] - args[1]
+            diff = f"({args[0]} - {args[1]})"
             if scale == 1:
                 return diff
             # reference truncates toward zero: Double.longValue()
-            return (diff / F.lit(float(scale))).cast("long").cast("double")
+            return f"CAST(CAST(({diff} / {sql_lit(float(scale))}) AS BIGINT) AS DOUBLE)"
         if name == "timestamp_to_date":
-            micros = args[0] + args[1] * F.lit(3_600_000_000.0)
-            millis = micros.cast("long") / F.lit(1000.0)
-            return F.floor(millis / F.lit(86_400_000.0)).cast("double")
+            micros = f"({args[0]} + ({args[1]} * {sql_lit(3_600_000_000.0)}))"
+            millis = f"(CAST({micros} AS BIGINT) / 1000.0D)"
+            return f"CAST(FLOOR(({millis} / {sql_lit(86_400_000.0)})) AS DOUBLE)"
         raise ValueError(f"unknown function '{fname}' in: {self.text}")
 
 
 def field_variables(text: str) -> set[str]:
     """Names referenced by an expression (for required-field validation)."""
     names = set()
-    p = _Parser(text, lambda n, k: F.lit(0.0))
-    for i, tok in enumerate(p.tokens):
+    tokens = _tokenize(text)
+    for i, tok in enumerate(tokens):
         if re.fullmatch(r"[A-Za-z_À-ɏͰ-Ͽ][A-Za-z0-9_À-ɏͰ-Ͽ]*|π", tok):
             if tok in _CONSTANTS or tok.lower() in _UNARY_FUNCS:
                 continue
-            if i + 1 < len(p.tokens) and p.tokens[i + 1] == "(":
+            if i + 1 < len(tokens) and tokens[i + 1] == "(":
                 continue
             names.add(tok)
     return names
@@ -285,33 +295,34 @@ def max_lag_index(text: str) -> int:
     util/pipeline/select/stateful/Lag.java:56-59 derives the buffer size
     from the max array index)."""
     best = 0
-    p = _Parser(text, lambda n, k: F.lit(0.0))
-    for i, tok in enumerate(p.tokens):
-        if tok == "[" and i + 1 < len(p.tokens):
-            best = max(best, int(p.tokens[i + 1]))
+    tokens = _tokenize(text)
+    for i, tok in enumerate(tokens):
+        if tok == "[" and i + 1 < len(tokens):
+            best = max(best, int(tokens[i + 1]))
     return best
 
 
-def to_double(col: Column, dtype: T.DataType) -> Column:
+def to_double(sql: str, dtype: T.DataType) -> str:
     """Coerce a field to exp4j's double view per the reference type mapping
     (docs/config/module/common/expression.md)."""
     if isinstance(dtype, T.TimestampType):
-        return F.unix_micros(col).cast("double")
+        return f"CAST(unix_micros({sql}) AS DOUBLE)"
     if isinstance(dtype, T.DateType):
-        return F.datediff(col, F.lit("1970-01-01")).cast("double")
-    return col.cast("double")
+        return f"CAST(datediff({sql}, '1970-01-01') AS DOUBLE)"
+    return f"CAST({sql} AS DOUBLE)"
 
 
-def schema_resolver(df: DataFrame, extra: dict[str, Column] | None = None) -> Resolver:
+def schema_resolver(df: DataFrame, extra: dict[str, str] | None = None) -> Resolver:
     """Default resolver: look fields up in ``df`` with type-aware coercion.
 
-    ``extra`` lets sequentially-bound select outputs shadow input columns
-    (reference: SelectFunction.java:64-87 sequential name binding).
-    Lag indices (k>0) require a windowed resolver — see select_fns.
+    ``extra`` maps sequentially-bound select outputs (name → SQL text) that
+    shadow input columns (reference: SelectFunction.java:64-87 sequential
+    name binding); their text is inlined.  Lag indices (k>0) require a
+    windowed resolver — see stateful.py.
     """
     dtypes = {f.name: f.dataType for f in df.schema.fields}
 
-    def resolve(name: str, k: int) -> Column:
+    def resolve(name: str, k: int) -> str:
         if k != 0:
             raise ValueError(f"lag syntax {name}[{k}] only valid in stateful lag context")
         if extra and name in extra:
@@ -320,18 +331,19 @@ def schema_resolver(df: DataFrame, extra: dict[str, Column] | None = None) -> Re
             # timestamp into epoch SECONDS while a physical one
             # coerces to MICROS (silent 1e6 skew), and a bound date
             # crashes the cast outright
+            sql = f"({extra[name]})"
             try:
-                bdt = df.select(extra[name]).schema[0].dataType
+                bdt = df.selectExpr(sql).schema[0].dataType
             except Exception:  # noqa: BLE001 — unresolvable: plain cast
-                return extra[name].cast("double")
-            return to_double(extra[name], bdt)
+                return f"CAST({sql} AS DOUBLE)"
+            return to_double(sql, bdt)
         if name not in dtypes:
             raise ValueError(f"unknown field '{name}' in expression")
-        return to_double(F.col(name), dtypes[name])
+        return to_double(qi(name), dtypes[name])
 
     return resolve
 
 
-def compile_expression(text: str, resolver: Resolver) -> Column:
-    """Compile an exp4j-dialect expression to a double-valued Column."""
+def compile_expression(text: str, resolver: Resolver) -> str:
+    """Compile an exp4j-dialect expression to double-valued SQL text."""
     return _Parser(text, resolver).parse()

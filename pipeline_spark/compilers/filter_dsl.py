@@ -1,4 +1,4 @@
-"""Filter condition DSL → Spark Column compiler.
+"""Filter condition DSL → Spark SQL text compiler.
 
 The reference's filter condition is a JSON tree of ``and``/``or`` nodes over
 leaves ``{key|expression, op, value}``
@@ -22,20 +22,24 @@ reproduce exactly (Filter.java:478-541):
 * a leaf may carry an exp4j ``expression`` instead of ``key``; it is
   evaluated as double and compared to ``value`` as double.
 
-Compiling to Column keeps these predicates pushdown-eligible: a filter
-module directly after a parquet source lands in the scan's PushedFilters.
+The condition compiles to SQL text that Catalyst parses into the same
+predicate tree the Column API would build, so a whole condition ships in
+one ``df.filter(text)``/``F.expr`` call.  The predicates stay
+pushdown-eligible: a filter module directly after a parquet source lands
+in the scan's PushedFilters.
 """
 
 from __future__ import annotations
 
 import json
+import math
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from pipeline_spark.compilers.expression import COMPARISONS, compile_expression, schema_resolver
+from pipeline_spark.compilers.expression import compile_expression, schema_resolver
+from pipeline_spark.functions.sqltext import col_ref, qi, sql_lit
 
 _OPS = {"=", "!=", ">", ">=", "<", "<=", "in", "not in", "match", "true", "false"}
 
@@ -43,65 +47,78 @@ _OPS = {"=", "!=", ">", ">=", "<", "<=", "in", "not in", "match", "true", "false
 def compile_filter(
     condition: Any,
     df: DataFrame,
-    bound: dict[str, Column] | None = None,
-) -> Column:
-    """Compile a condition JSON (string or parsed) to a boolean Column.
+    bound: dict[str, str] | None = None,
+) -> str:
+    """Compile a condition JSON (string or parsed) to boolean SQL text.
 
     The result is three-valued (may be NULL); ``df.filter`` treats NULL as
     false, matching the reference.  When *negating* (partition "excluded"
     output), use :func:`as_false_on_null`.
 
-    ``bound`` maps earlier select outputs (name → Column) into the leaf
+    ``bound`` maps earlier select outputs (name → SQL text) into the leaf
     namespace, shadowing physical columns — the reference feeds prior
     outputs into every later function's input (SelectFunction.java:64-87),
     and Nullif resolves its condition variables against them
     (Nullif.java:56-64).
     """
     if condition is None:
-        return F.lit(True)
+        return "true"
     if isinstance(condition, str):
         condition = json.loads(condition)
     return _node(condition, df, bound or {})
 
 
-def as_false_on_null(cond: Column) -> Column:
-    return F.coalesce(cond, F.lit(False))
+def as_false_on_null(cond: str) -> str:
+    return f"coalesce({cond}, false)"
 
 
-def _node(node: Any, df: DataFrame, bound: dict[str, Column]) -> Column:
+def _node(node: Any, df: DataFrame, bound: dict[str, str]) -> str:
     if isinstance(node, list):
-        cols = [_node(child, df, bound) for child in node]
-        return _fold_and(cols)
+        return fold([_node(child, df, bound) for child in node], "AND")
     if not isinstance(node, dict):
         raise ValueError(f"illegal condition json: {node!r}")
     if "and" in node and "or" in node:
         raise ValueError("condition must contain only one of `and` or `or`")
     if "and" in node:
-        return _fold_and([_node(c, df, bound) for c in node["and"]])
+        return fold([_node(c, df, bound) for c in node["and"]], "AND")
     if "or" in node:
-        cols = [as_false_on_null(_node(c, df, bound)) for c in node["or"]]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out | c
-        return out
+        return fold([as_false_on_null(_node(c, df, bound)) for c in node["or"]], "OR")
     return _leaf(node, df, bound)
 
 
-def _fold_and(cols: list[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out & c
+def fold(conds: list[str], op: str) -> str:
+    """Left-deep ``AND``/``OR`` of condition texts."""
+    out = conds[0]
+    for c in conds[1:]:
+        out = f"({out} {op} {c})"
     return out
 
 
-def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Column:
+_NON_FINITE = {"inf": "Infinity", "-inf": "-Infinity", "nan": "NaN"}
+
+
+def _lit(v: Any) -> str:
+    """``sql_lit``, plus the non-finite doubles JSON can carry
+    (``NaN``/``Infinity``), which have no SQL literal: a string cast that
+    the optimizer folds to the same constant."""
+    if isinstance(v, float) and not math.isfinite(v):
+        return f"CAST('{_NON_FINITE[repr(v)]}' AS DOUBLE)"
+    return sql_lit(v)
+
+
+def _resolve_type(df: DataFrame, sql: str) -> T.DataType:
+    # driver-side analysis of one projection, no job
+    return df.selectExpr(sql).schema[0].dataType
+
+
+def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, str]) -> str:
     op = str(leaf.get("op", "=")).strip().lower()
     if op not in _OPS:
         raise ValueError(f"Filter.Op: {op} not found")
     if op == "true":
-        return F.lit(True)
+        return "true"
     if op == "false":
-        return F.lit(False)
+        return "false"
 
     value = leaf.get("value")
     dtypes = {f.name: f.dataType for f in df.schema.fields}
@@ -115,22 +132,21 @@ def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Colu
     else:
         key = leaf["key"]
         if key in bound:
-            # earlier select output shadows the physical column; its
-            # type is resolved through analysis (driver-side, no job)
-            col = bound[key]
-            dtype = df.select(col).schema[0].dataType
+            # earlier select output shadows the physical column
+            col = f"({bound[key]})"
+            dtype = _resolve_type(df, col)
         elif key in dtypes:
-            col = F.col(key)
+            col = col_ref(key)
             dtype = dtypes[key]
         elif "." in key:
             # dotted struct path (PartitionTest.java:28-31 filters on
             # nestedField.stringField): navigate field by field
             head, *rest = key.split(".")
             if head in bound:
-                col = bound[head]
-                dtype = df.select(col).schema[0].dataType
+                col = f"({bound[head]})"
+                dtype = _resolve_type(df, col)
             elif head in dtypes:
-                col = F.col(head)
+                col = qi(head)
                 dtype = dtypes[head]
             else:
                 raise ValueError(f"filter references unknown field '{key}'")
@@ -141,7 +157,7 @@ def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Colu
                     raise ValueError(
                         f"filter references unknown field '{key}'"
                     )
-                col = col.getField(part)
+                col = f"{col}.{qi(part)}"
                 dtype = dtype[part].dataType
         else:
             raise ValueError(f"filter references unknown field '{key}'")
@@ -149,32 +165,30 @@ def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Colu
     if value is None:
         # x = null → isNull; x != null → isNotNull; others → false
         if op == "=":
-            return col.isNull()
+            return f"({col} IS NULL)"
         if op == "!=":
-            return col.isNotNull()
-        return F.lit(False)
+            return f"({col} IS NOT NULL)"
+        return "false"
 
     if op == "match":
-        return col.cast("string").rlike(str(value))
+        return f"(CAST({col} AS STRING) RLIKE {sql_lit(str(value))})"
 
     if op in ("in", "not in"):
         if not isinstance(value, (list, tuple)):
             raise ValueError("`in`/`not in` value must be array")
         # reference compares value.toString() to the array's strings
-        strs = [_to_ref_string(v) for v in value]
-        svals = _stringified(col, dtype)
-        cond = svals.isin(strs)
+        strs = ", ".join(sql_lit(_to_ref_string(v)) for v in value)
+        cond = f"({_stringified(col, dtype)} IN ({strs}))"
         if op == "not in":
-            cond = ~cond & col.isNotNull()
+            cond = f"((NOT {cond}) AND ({col} IS NOT NULL))"
         return cond
 
-    rhs = _coerce_literal(value, dtype)
-    cmp = COMPARISONS[op](col, rhs)
+    cmp = f"({col} {op} {_coerce_literal(value, dtype)})"
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         # NaN / ±Inf row values compare false under every op
         # (Filter.java:509-512 c=-2 trick)
-        finite = ~F.isnan(col) & (F.abs(col) != F.lit(float("inf")))
-        cmp = finite & cmp
+        finite = f"((NOT isnan({col})) AND (abs({col}) != {_lit(float('inf'))}))"
+        cmp = f"({finite} AND {cmp})"
     return cmp
 
 
@@ -184,32 +198,30 @@ def _to_ref_string(v: Any) -> str:
     return str(v)
 
 
-def _stringified(col: Column, dtype: T.DataType) -> Column:
+def _stringified(col: str, dtype: T.DataType) -> str:
     """Java ``toString`` view of a column for in/not-in string comparison."""
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        # Java Double.toString(1.0) == "1.0"; Spark cast yields "1.0" too
-        return col.cast("string")
     if isinstance(dtype, T.BooleanType):
-        # NULL must stay NULL (a .otherwise would map it to 'false' and
-        # let `in: [false]` wrongly match NULL rows — Filter.java: a
-        # NULL row value fails every op except an explicit null check)
-        return F.when(col, "true").when(~col, "false")
-    return col.cast("string")
+        # NULL must stay NULL (an ELSE would map it to 'false' and let
+        # `in: [false]` wrongly match NULL rows — Filter.java: a NULL row
+        # value fails every op except an explicit null check)
+        return f"CASE WHEN {col} THEN 'true' WHEN (NOT {col}) THEN 'false' END"
+    # Java Double.toString(1.0) == "1.0"; Spark cast yields "1.0" too
+    return f"CAST({col} AS STRING)"
 
 
-def _coerce_literal(value: Any, dtype: T.DataType) -> Column:
+def _coerce_literal(value: Any, dtype: T.DataType) -> str:
     """Literal coercion mirroring the reference's per-type getAs* parsing
     (Filter.java:513-534): timestamps/dates parse string literals."""
     if isinstance(dtype, T.TimestampType):
         from pipeline_spark.compilers.select_fns import parse_timestamp
 
-        return parse_timestamp(F.lit(str(value)))
+        return parse_timestamp(sql_lit(str(value)))
     if isinstance(dtype, T.DateType):
-        return F.to_date(F.lit(str(value)))
+        return f"to_date({sql_lit(str(value))})"
     if isinstance(dtype, (T.FloatType, T.DoubleType)) and isinstance(value, str):
-        return F.lit(float(value))
+        return _lit(float(value))
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)) and isinstance(value, str):
-        return F.lit(int(float(value)))
+        return sql_lit(int(float(value)))
     if isinstance(dtype, T.DecimalType):
-        return F.lit(str(value)).cast(dtype)
-    return F.lit(value)
+        return f"CAST({sql_lit(str(value))} AS {dtype.simpleString()})"
+    return _lit(value)

@@ -1,4 +1,4 @@
-"""Select-function list → ordered Column list compiler.
+"""Select-function list → SQL projection compiler.
 
 The reference's projection engine is an ordered list of select functions;
 each function's output is visible to later functions (sequential name
@@ -11,12 +11,16 @@ SelectFunction.java:96-127: only {name} → pass; field+type → cast;
 field → rename; value+type → constant; type → cast; expression / text /
 fields → those funcs.
 
-Each function compiles to a Column expression; stateful variants (range
-aggregates, lag) compile to Window functions — see stateful.py.
+Each function compiles to Spark SQL text, so a stateless list ships in one
+``selectExpr``; an output with no SQL spelling (a Python UDF, the
+string-backed decimal cast, a per-element ``each`` struct) is projected
+under a hidden name first.  Stateful variants (range aggregates, lag)
+compile to Window functions — see stateful.py.
 """
 
 from __future__ import annotations
 
+import datetime
 import re
 from typing import Any
 
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pipeline_spark.compilers.expression import compile_expression, schema_resolver
+from pipeline_spark.functions.sqltext import atomic_ddl, col_ref, qi, sql_lit
 
 # config type vocabulary → Spark types (reference: Schema.java:1107-1160,
 # SURVEY §1.2 type lattice)
@@ -204,26 +209,49 @@ def compile_selects(
     selects: list[dict[str, Any]],
     df: DataFrame,
     event_time_col: str | None = None,
-    bound: dict[str, Column] | None = None,
-) -> list[tuple[str, Column]]:
-    """Compile stateless select functions to ``(name, Column)`` pairs.
+    bound: dict[str, str] | None = None,
+) -> tuple[DataFrame, list[tuple[str, str]]]:
+    """Compile stateless select functions to ``(name, SQL text)`` pairs.
 
     Sequential binding: each compiled output is added to the visible
-    namespace for subsequent functions.  ``bound`` seeds the namespace —
-    nested field lists (struct/json/map) pass the OUTER bindings so a
-    sub-field can reference an earlier top-level output (r12 review
-    find: it previously captured the stale physical column).
+    namespace for subsequent functions, which inline its text.  ``bound``
+    seeds the namespace — nested field lists (struct/json/map) pass the
+    OUTER bindings so a sub-field can reference an earlier top-level
+    output (r12 review find: it previously captured the stale physical
+    column).
+
+    Returns the frame the texts resolve against: ``df``, plus one hidden
+    column per output that must bind once — one with no SQL spelling
+    (a Python UDF, a Column-built cast), or a nondeterministic ``uuid``
+    a later function may reference (a single projection would INLINE it
+    into both slots, and Spark re-evaluates nondeterministic expressions
+    per slot — id != id2; CollapseProject never merges through a
+    nondeterministic projection, so the value binds once).
     """
     bound = dict(bound or {})
-    out: list[tuple[str, Column]] = []
-    for sf in selects:
-        if sf.get("ignore"):
-            continue
+    live = [sf for sf in selects if not sf.get("ignore")]
+    out: list[tuple[str, str]] = []
+    for i, sf in enumerate(live):
         name = sf["name"]
-        col = _compile_one(sf, df, bound, event_time_col)
-        bound[name] = col
-        out.append((name, col))
-    return out
+        df, sql = _compile_one(sf, df, bound, event_time_col)
+        if not isinstance(sql, str) or (infer_func(sf) == "uuid" and i < len(live) - 1):
+            df, sql = _hide(df, name, sql)
+        bound[name] = sql
+        out.append((name, sql))
+    return df, out
+
+
+def _hide(df: DataFrame, name: str, out: str | Column) -> tuple[DataFrame, str]:
+    """Project ``out`` under a hidden name; later texts reference it."""
+    holder = f"__b_{name}__"
+    if holder in df.columns:  # a nested list reusing an outer name
+        holder = f"__b{len(df.columns)}_{name}__"
+    col = F.expr(out) if isinstance(out, str) else out
+    return df.select("*", col.alias(holder)), qi(holder)
+
+
+def _is_hidden(column: str) -> bool:
+    return re.fullmatch(r"__b\d*_.*__", column) is not None
 
 
 def apply_select(
@@ -232,7 +260,8 @@ def apply_select(
     event_time_col: str | None = None,
     group_fields: list[str] | None = None,
 ) -> DataFrame:
-    """Project ``df`` through a select list (stateless + stateful mix)."""
+    """Project ``df`` through a select list (stateless + stateful mix):
+    the stateless list ships in one ``selectExpr``."""
     stateful = [sf for sf in selects if not sf.get("ignore") and is_stateful(sf)]
     if stateful:
         if df.isStreaming:
@@ -247,32 +276,8 @@ def apply_select(
         from pipeline_spark.compilers.stateful import apply_stateful_select
 
         return apply_stateful_select(df, selects, event_time_col, group_fields)
-    live = [sf for sf in selects if not sf.get("ignore")]
-    if any(
-        infer_func(sf) == "uuid" and i < len(live) - 1
-        for i, sf in enumerate(live)
-    ):
-        # a later select may reference the uuid output by name, and a
-        # single projection would INLINE the nondeterministic expression
-        # into both slots (Spark re-evaluates nondeterministic exprs per
-        # slot — id != id2).  Materialize each uuid behind its own
-        # projection boundary: CollapseProject never merges through a
-        # nondeterministic projection, so the value binds once.
-        work = df
-        bound: dict[str, Column] = {}
-        pairs: list[tuple[str, Column]] = []
-        for sf in live:
-            name = sf["name"]
-            col = _compile_one(sf, work, bound, event_time_col)
-            if infer_func(sf) == "uuid":
-                holder = f"__b_{name}__"
-                work = work.select("*", col.alias(holder))
-                col = F.col(holder)
-            bound[name] = col
-            pairs.append((name, col))
-        return work.select(*[c.alias(n) for n, c in pairs])
-    pairs = compile_selects(selects, df, event_time_col)
-    return df.select(*[c.alias(n) for n, c in pairs])
+    work, pairs = compile_selects(selects, df, event_time_col)
+    return work.selectExpr(*[f"{sql} AS {qi(n)}" for n, sql in pairs])
 
 
 def _element_field_names(df: DataFrame, array_field: str) -> set[str]:
@@ -286,13 +291,13 @@ def _element_field_names(df: DataFrame, array_field: str) -> set[str]:
     return set()
 
 
-def parse_timestamp(src: Column, df: DataFrame | None = None, field: str | None = None) -> Column:
-    """String → timestamp accepting the reference's DateTimeUtil formats
-    (DateTimeUtilTest.java:134-148: ISO with/without Z or fraction,
-    space-separated, date-only, ``yyyyMMdd``, ``yyyy/MM/dd``, and
-    ``+0900``-style offsets).  Spark's plain try_to_timestamp covers all
-    but the basic and slash date forms — coalesce picks the first parse.
-    Non-string inputs keep the plain cast (no-op for timestamps,
+def parse_timestamp(src: str, df: DataFrame | None = None, field: str | None = None) -> str:
+    """String → timestamp SQL accepting the reference's DateTimeUtil
+    formats (DateTimeUtilTest.java:134-148: ISO with/without Z or
+    fraction, space-separated, date-only, ``yyyyMMdd``, ``yyyy/MM/dd``,
+    and ``+0900``-style offsets).  Spark's plain try_to_timestamp covers
+    all but the basic and slash date forms — coalesce picks the first
+    parse.  Non-string inputs keep the plain cast (no-op for timestamps,
     epoch-seconds for numerics)."""
     if df is not None:
         dt = None
@@ -307,48 +312,95 @@ def parse_timestamp(src: Column, df: DataFrame | None = None, field: str | None 
             # like _cast_bigdecimal, or a numeric bound column falls
             # into the string-parse branch and yields NULL
             try:
-                dt = df.select(src).schema[0].dataType
+                dt = df.selectExpr(src).schema[0].dataType
             except Exception:
                 dt = None
         if dt is not None and not isinstance(dt, T.StringType):
-            return src.cast(T.TimestampType())
-    s = src.cast("string")
-    return F.coalesce(
-        F.try_to_timestamp(s),
-        F.try_to_timestamp(s, F.lit("yyyyMMdd")),
-        F.try_to_timestamp(s, F.lit("yyyy/MM/dd HH:mm:ss")),
-        F.try_to_timestamp(s, F.lit("yyyy/MM/dd")),
+            return f"CAST({src} AS TIMESTAMP)"
+    s = f"CAST({src} AS STRING)"
+    return (
+        f"coalesce(try_to_timestamp({s}), try_to_timestamp({s}, 'yyyyMMdd'), "
+        f"try_to_timestamp({s}, 'yyyy/MM/dd HH:mm:ss'), try_to_timestamp({s}, 'yyyy/MM/dd'))"
     )
 
 
-def _ref(name: str, df: DataFrame, bound: dict[str, Column]) -> Column:
+def _ref(name: str, bound: dict[str, str]) -> str:
     if name in bound:
-        return bound[name]
+        return f"({bound[name]})"
     # dotted paths reach into structs (ElementSchemaUtil.getInputFieldType)
-    return F.col(name)
+    return col_ref(name)
+
+
+def _lit(v: Any) -> str:
+    """SQL for the literal ``F.lit(v)`` builds from a config value."""
+    if isinstance(v, (list, tuple)):
+        return f"array({', '.join(_lit(x) for x in v)})"
+    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+        return f"DATE '{v.isoformat()}'"
+    return sql_lit(v)
+
+
+def _cast(sql: str, dt: T.DataType) -> str | Column:
+    ddl = atomic_ddl(dt)
+    if ddl is None:
+        return F.expr(sql).cast(dt)
+    return f"CAST({sql} AS {ddl})"
 
 
 def _compile_one(
     sf: dict[str, Any],
     df: DataFrame,
-    bound: dict[str, Column],
+    bound: dict[str, str],
     event_time_col: str | None,
-) -> Column:
+) -> tuple[DataFrame, str | Column]:
+    """One select function → SQL text, or a Column where the output has
+    no SQL spelling (the caller projects it under a hidden name).  Nested
+    field lists may add hidden columns, so the frame comes back too."""
     func = infer_func(sf)
+    if func in ("json", "jsons", "map", "maps") or (func == "struct" and not sf.get("each")):
+        df, inner = compile_selects(sf["fields"], df, bound=bound)
+        if func in ("map", "maps"):
+            return df, f"map({', '.join(f'{sql_lit(n)}, {c}' for n, c in inner)})"
+        out = f"struct({', '.join(f'{c} AS {qi(n)}' for n, c in inner)})"
+        if func != "struct":
+            return df, f"to_json({out})"
+        if str(sf.get("mode", "")).lower() == "repeated":
+            return df, f"array({out})"
+        return df, out
+    if func == "hash":
+        if sf.get("text"):
+            src = _compile_text(str(sf["text"]), df, bound)
+            if not isinstance(src, str):  # a per-row template render
+                df, src = _hide(df, f"{sf['name']}_text", src)
+        else:
+            fields = sf.get("fields") or [sf.get("field")]
+            cols = [f"CAST({_ref(f, bound)} AS STRING)" for f in fields]
+            src = f"concat_ws('', {', '.join(cols)})" if len(cols) > 1 else cols[0]
+        return df, _compile_hash(sf, src)
+    return df, _compile_flat(sf, func, df, bound, event_time_col)
+
+
+def _compile_flat(
+    sf: dict[str, Any],
+    func: str,
+    df: DataFrame,
+    bound: dict[str, str],
+    event_time_col: str | None,
+) -> str | Column:
     name = sf["name"]
 
     if func == "pass":
-        return _ref(name, df, bound)
+        return _ref(name, bound)
     if func == "rename":
-        return _ref(sf["field"], df, bound)
+        return _ref(sf["field"], bound)
     if func == "cast":
-        src = _ref(sf.get("field", name), df, bound)
+        src = _ref(sf.get("field", name), bound)
         if _is_bigdecimal(sf["type"]):
-            return _cast_bigdecimal(src, df)
+            return _cast_bigdecimal(F.expr(src), df)
         dt = spark_type(sf["type"])
         if isinstance(dt, T.TimestampType):
             return parse_timestamp(src, df, sf.get("field", name))
-        return src.cast(dt)
+        return _cast(src, dt)
     if func == "constant":
         v = sf["value"]
         if _is_bigdecimal(sf["type"]):
@@ -358,142 +410,69 @@ def _compile_one(
 
             s = v.strip() if isinstance(v, str) else format(
                 Decimal(str(v)), "f")
-            return F.lit(s)
+            return sql_lit(s)
         dt = spark_type(sf["type"])
         if isinstance(dt, T.TimestampType):
-            return parse_timestamp(F.lit(str(v)))
+            return parse_timestamp(sql_lit(str(v)))
         if isinstance(dt, T.DateType):
-            return F.lit(str(v)).cast(dt)
-        return F.lit(v).cast(dt)
+            return f"CAST({sql_lit(str(v))} AS DATE)"
+        return _cast(_lit(v), dt)
     if func == "expression":
         return compile_expression(str(sf["expression"]), schema_resolver(df, extra=bound))
     if func == "text":
         return _compile_text(str(sf["text"]), df, bound)
     if func == "concat":
-        cols = [_ref(f, df, bound).cast("string") for f in sf["fields"]]
-        delim = sf.get("delimiter", "")
-        return F.concat_ws(delim, *cols)
+        cols = "".join(f", CAST({_ref(f, bound)} AS STRING)" for f in sf["fields"])
+        return f"concat_ws({sql_lit(sf.get('delimiter', ''))}{cols})"
     if func == "nullif":
         from pipeline_spark.compilers.filter_dsl import compile_filter
 
         # condition leaves resolve against prior select outputs first
         # (sequential binding, Nullif.java:56-64), then physical columns
         cond = compile_filter(sf.get("condition"), df, bound)
-        src = _ref(sf.get("field", name), df, bound)
-        return F.when(cond, F.lit(None)).otherwise(src)
+        src = _ref(sf.get("field", name), bound)
+        return f"CASE WHEN {cond} THEN NULL ELSE {src} END"
     if func == "uuid":
-        return F.expr("uuid()")
-    if func == "hash":
-        return _compile_hash(sf, df, bound)
+        return "uuid()"
     if func == "event_timestamp":
         if event_time_col and event_time_col in df.columns:
-            return F.col(event_time_col)
-        return F.current_timestamp()
+            return col_ref(event_time_col)
+        return "current_timestamp()"
     if func == "current_timestamp":
-        return F.current_timestamp()
+        return "current_timestamp()"
     if func == "struct":
-        each = sf.get("each")
-        if each:
-            # iterate an array field: sub-fields evaluate per element
-            # (reference: select/Struct.java:55-86 eachField handling).
-            # A string-typed each-field holds a JSON array (reference
-            # FilterTransformTest: json select output iterated with
-            # jsonpath sub-fields); from_json to array<string> keeps each
-            # element's raw JSON for get_json_object.
-            arr = _ref(each, df, bound)
-            elem_fields = _element_field_names(df, each)
-            json_each = False
-            try:
-                json_each = isinstance(df.schema[each].dataType, T.StringType)
-            except Exception:
-                pass
-            if json_each:
-                arr = F.from_json(arr, "array<string>")
-
-            def per_elem(elem: Column) -> Column:
-                cols = []
-                for sub in sf["fields"]:
-                    if sub.get("ignore"):
-                        continue
-                    sub_name = sub["name"]
-                    sub_func = infer_func(sub)
-                    src_name = sub.get("field", sub_name)
-                    if sub_func in ("pass", "rename", "cast"):
-                        if src_name in elem_fields:
-                            src = elem[src_name]
-                        elif src_name.startswith(each + "."):
-                            # '<each>.sub.path' addresses the CURRENT
-                            # element (Struct.java eachField refs), not the
-                            # row-level array-of-subfields projection
-                            src = elem
-                            for part in src_name[len(each) + 1 :].split("."):
-                                src = src[part]
-                        else:
-                            src = _ref(src_name, df, bound)
-                        if sub_func == "cast" or "type" in sub:
-                            src = src.cast(spark_type(sub["type"]))
-                        cols.append(src.alias(sub_name))
-                    elif sub_func == "constant":
-                        cols.append(F.lit(sub["value"]).cast(spark_type(sub["type"])).alias(sub_name))
-                    elif sub_func in ("json_path", "jsonpath"):
-                        path = sub["path"]
-                        if not path.startswith("$"):
-                            path = "$." + path
-                        src = elem if sub.get("field", each) == each else _ref(sub["field"], df, bound)
-                        cols.append(F.get_json_object(src.cast("string"), path).alias(sub_name))
-                    else:
-                        raise ValueError(
-                            f"struct each: sub-func '{sub_func}' not supported inside iteration"
-                        )
-                return F.struct(*cols)
-
-            return F.transform(arr, per_elem)
-        inner = compile_selects(sf["fields"], df, bound=bound)
-        out = F.struct(*[c.alias(n) for n, c in inner])
-        if str(sf.get("mode", "")).lower() == "repeated":
-            return F.array(out)
-        return out
-    if func in ("json", "jsons"):
-        inner = compile_selects(sf["fields"], df, bound=bound)
-        return F.to_json(F.struct(*[c.alias(n) for n, c in inner]))
+        return _compile_struct_each(sf, df, bound)
     if func in ("json_path", "jsonpath"):
         path = sf["path"]
         if not path.startswith("$"):
             path = "$." + path
-        return F.get_json_object(_ref(sf["field"], df, bound).cast("string"), path)
-    if func in ("map", "maps"):
-        inner = compile_selects(sf["fields"], df, bound=bound)
-        kvs: list[Column] = []
-        for n, c in inner:
-            kvs.extend([F.lit(n), c])
-        return F.create_map(*kvs)
+        return f"get_json_object(CAST({_ref(sf['field'], bound)} AS STRING), {sql_lit(path)})"
     if func == "switch":
         return _compile_switch(sf, df, bound)
     if func == "base64_encode":
-        return F.base64(_ref(sf["field"], df, bound).cast("binary")).cast("binary")
+        return f"CAST(base64(CAST({_ref(sf['field'], bound)} AS BINARY)) AS BINARY)"
     if func == "base64_decode":
-        return F.unbase64(_ref(sf["field"], df, bound).cast("string"))
+        return f"unbase64(CAST({_ref(sf['field'], bound)} AS STRING))"
     if func == "bytes_encode":
-        # HBase Bytes.toBytes big-endian encoding — JVM-side via expr
-        src = _ref(sf["field"], df, bound)
-        return _hbase_encode(src, df, sf)
+        # HBase Bytes.toBytes big-endian encoding — JVM-side
+        return _hbase_encode(_ref(sf["field"], bound), df, sf)
     if func == "bytes_decode":
-        src = _ref(sf["field"], df, bound)
-        return _hbase_decode(src, sf["type"])
+        return _hbase_decode(_ref(sf["field"], bound), sf["type"])
     if func == "panic":
-        from pipeline_spark.compilers.filter_dsl import compile_filter
+        from pipeline_spark.compilers.filter_dsl import as_false_on_null, compile_filter
 
         cond = compile_filter(sf.get("condition"), df, bound)
         msg = sf.get("message", f"panic: {name}")
-        return F.when(F.coalesce(cond, F.lit(False)), F.raise_error(F.lit(msg))).otherwise(
-            F.lit(None).cast("string")
+        return (
+            f"CASE WHEN {as_false_on_null(cond)} THEN raise_error({sql_lit(str(msg))}) "
+            "ELSE CAST(NULL AS STRING) END"
         )
     if func == "generate":
         return _compile_generate(sf)
     if func == "reshape":
-        return _compile_reshape(sf, df, bound)
+        return _compile_reshape(sf, bound)
     if func == "scrape":
-        return _compile_scrape(sf, df, bound)
+        return _compile_scrape(sf, bound)
     if func == "http":
         raise ValueError(
             "per-row http enrichment is the `http` transform module "
@@ -502,11 +481,69 @@ def _compile_one(
     raise ValueError(f"unknown select func '{func}'")
 
 
-def _compile_reshape(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Column:
+def _compile_struct_each(sf: dict[str, Any], df: DataFrame, bound: dict[str, str]) -> Column:
+    """Iterate an array field: sub-fields evaluate per element
+    (reference: select/Struct.java:55-86 eachField handling).  A
+    string-typed each-field holds a JSON array (reference
+    FilterTransformTest: json select output iterated with jsonpath
+    sub-fields); from_json to array<string> keeps each element's raw JSON
+    for get_json_object."""
+    each = sf["each"]
+    arr = F.expr(_ref(each, bound))
+    elem_fields = _element_field_names(df, each)
+    json_each = False
+    try:
+        json_each = isinstance(df.schema[each].dataType, T.StringType)
+    except Exception:
+        pass
+    if json_each:
+        arr = F.from_json(arr, "array<string>")
+
+    def per_elem(elem: Column) -> Column:
+        cols = []
+        for sub in sf["fields"]:
+            if sub.get("ignore"):
+                continue
+            sub_name = sub["name"]
+            sub_func = infer_func(sub)
+            src_name = sub.get("field", sub_name)
+            if sub_func in ("pass", "rename", "cast"):
+                if src_name in elem_fields:
+                    src = elem[src_name]
+                elif src_name.startswith(each + "."):
+                    # '<each>.sub.path' addresses the CURRENT
+                    # element (Struct.java eachField refs), not the
+                    # row-level array-of-subfields projection
+                    src = elem
+                    for part in src_name[len(each) + 1 :].split("."):
+                        src = src[part]
+                else:
+                    src = F.expr(_ref(src_name, bound))
+                if sub_func == "cast" or "type" in sub:
+                    src = src.cast(spark_type(sub["type"]))
+                cols.append(src.alias(sub_name))
+            elif sub_func == "constant":
+                cols.append(F.lit(sub["value"]).cast(spark_type(sub["type"])).alias(sub_name))
+            elif sub_func in ("json_path", "jsonpath"):
+                path = sub["path"]
+                if not path.startswith("$"):
+                    path = "$." + path
+                src = elem if sub.get("field", each) == each else F.expr(_ref(sub["field"], bound))
+                cols.append(F.get_json_object(src.cast("string"), path).alias(sub_name))
+            else:
+                raise ValueError(
+                    f"struct each: sub-func '{sub_func}' not supported inside iteration"
+                )
+        return F.struct(*cols)
+
+    return F.transform(arr, per_elem)
+
+
+def _compile_reshape(sf: dict[str, Any], bound: dict[str, str]) -> str:
     """Treat a flat array as a tensor of ``shape``; slice by fixed leading
     ``indices`` (strided window into the flat array) — reference:
     select/Reshape.java:13-264."""
-    src = _ref(sf["field"], df, bound)
+    src = _ref(sf["field"], bound)
     shape = [int(x) for x in sf["shape"]]
     indices = [int(x) for x in sf.get("indices", [])]
     if len(indices) > len(shape):
@@ -519,19 +556,19 @@ def _compile_reshape(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column]
     strides = list(reversed(strides))
     offset = sum(i * s for i, s in zip(indices, strides))
     length = strides[len(indices) - 1] if indices else acc
-    return F.slice(src, offset + 1, length)
+    return f"slice({src}, {offset + 1}, {length})"
 
 
-def _compile_scrape(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Column:
+def _compile_scrape(sf: dict[str, Any], bound: dict[str, str]) -> str | Column:
     """HTML extraction (reference: select/Scrape.java:1-304 uses css
-    selectors via jsoup).  The regex ``pattern`` form is pure-Column
+    selectors via jsoup).  The regex ``pattern`` form is pure SQL
     (``regexp_extract``); the css ``selector`` form runs the stdlib
     selector engine (functions/htmlselect.py — tag/#id/.class/[attr]/
     descendant/child/groups subset, unsupported syntax fails at plan
     time) in a vectorized pandas UDF."""
-    src = _ref(sf["field"], df, bound).cast("string")
+    src = f"CAST({_ref(sf['field'], bound)} AS STRING)"
     if sf.get("pattern"):
-        return F.regexp_extract(src, sf["pattern"], int(sf.get("group", 1)))
+        return f"regexp_extract({src}, {sql_lit(str(sf['pattern']))}, {int(sf.get('group', 1))})"
     selector = sf.get("selector") or sf.get("css")
     if selector:
         from pipeline_spark.functions.htmlselect import _compile_path, select_text
@@ -549,7 +586,7 @@ def _compile_scrape(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column])
                 lambda h: select_text(h, str(selector), attr=attr, all_matches=all_matches)
             )
 
-        return scrape(src)
+        return scrape(F.expr(src))
     raise ValueError("scrape requires a `pattern` (regex) or `selector` (css)")
 
 
@@ -559,7 +596,7 @@ def _compile_scrape(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column])
 _SIMPLE_FIELD_RE = r"\$\{\s*([A-Za-z_][A-Za-z0-9_.]*)\s*\}"
 
 
-def _compile_text(template: str, df: DataFrame, bound: dict[str, Column]) -> Column:
+def _compile_text(template: str, df: DataFrame, bound: dict[str, str]) -> str | Column:
     """Row templating with a two-tier compile.
 
     The reference renders a full FreeMarker template per row
@@ -587,18 +624,18 @@ def _compile_text(template: str, df: DataFrame, bound: dict[str, Column]) -> Col
         and "{%" not in template
         and "<#" not in template
     ):
-        parts: list[Column] = []
+        parts: list[str] = []
         pos = 0
         for m in re.finditer(_SIMPLE_FIELD_RE, template):
             if m.start() > pos:
-                parts.append(F.lit(template[pos : m.start()]))
-            parts.append(_ref(m.group(1).strip(), df, bound).cast("string"))
+                parts.append(sql_lit(template[pos : m.start()]))
+            parts.append(f"CAST({_ref(m.group(1).strip(), bound)} AS STRING)")
             pos = m.end()
         if pos < len(template):
-            parts.append(F.lit(template[pos:]))
+            parts.append(sql_lit(template[pos:]))
         if not parts:
-            return F.lit("")
-        return F.concat(*parts)
+            return "''"
+        return f"concat({', '.join(parts)})"
     return _jinja_template_column(template, df)
 
 
@@ -711,7 +748,7 @@ def _jinja_template_column(template: str, df: DataFrame) -> Column:
     # every executor task
     render_row_template(template)
     jinja_src = freemarker_to_jinja(template)
-    cols = list(df.columns)
+    cols = [c for c in df.columns if not _is_hidden(c)]
 
     @F.pandas_udf("string")
     def render(rows: pd.DataFrame) -> pd.Series:
@@ -730,49 +767,42 @@ def _jinja_template_column(template: str, df: DataFrame) -> Column:
     return render(F.struct(*[F.col(c) for c in cols]))
 
 
-def _compile_hash(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Column:
+def _compile_hash(sf: dict[str, Any], src: str) -> str:
     """sha256 (default) / md5 / sha512 / hmac over fields or text template
     (reference: select/Hash.java:103-130, default ALGORITHM_SHA256)."""
     algorithm = str(sf.get("algorithm", "sha256")).lower()
-    if sf.get("text"):
-        src = _compile_text(str(sf["text"]), df, bound)
-    else:
-        fields = sf.get("fields") or [sf.get("field")]
-        cols = [_ref(f, df, bound).cast("string") for f in fields]
-        src = F.concat_ws("", *cols) if len(cols) > 1 else cols[0]
     secret = sf.get("secret")
     if secret:  # HMAC via expr (Spark has no builtin HMAC; use sha2 of key||msg fallback)
-        src = F.concat(F.lit(str(secret)), src)
+        src = f"concat({sql_lit(str(secret))}, {src})"
     if algorithm == "md5":
-        out = F.md5(src)
+        out = f"md5({src})"
     elif algorithm in ("sha512", "sha-512"):
-        out = F.sha2(src, 512)
+        out = f"sha2({src}, 512)"
     elif algorithm in ("sha1", "sha-1"):
-        out = F.sha1(src)
+        out = f"sha1({src})"
     else:
-        out = F.sha2(src, 256)
+        out = f"sha2({src}, 256)"
     size = sf.get("size")
     if size:
-        out = F.substring(out, 1, int(size))
+        out = f"substring({out}, 1, {int(size)})"
     return out
 
 
-def _compile_switch(sf: dict[str, Any], df: DataFrame, bound: dict[str, Column]) -> Column:
+def _compile_switch(sf: dict[str, Any], df: DataFrame, bound: dict[str, str]) -> str:
     from pipeline_spark.compilers.filter_dsl import compile_filter
 
-    cases = sf.get("cases", [])
-    col = None
-    for case in cases:
-        cond = compile_filter(case.get("when") or case.get("condition"), df, bound)
-        val = F.lit(case.get("then") if "then" in case else case.get("value"))
-        col = F.when(cond, val) if col is None else col.when(cond, val)
-    default = sf.get("default")
-    if col is None:
-        return F.lit(default)
-    return col.otherwise(F.lit(default))
+    whens = "".join(
+        f" WHEN {compile_filter(case.get('when') or case.get('condition'), df, bound)}"
+        f" THEN {_lit(case.get('then') if 'then' in case else case.get('value'))}"
+        for case in sf.get("cases", [])
+    )
+    default = _lit(sf.get("default"))
+    if not whens:
+        return default
+    return f"CASE{whens} ELSE {default} END"
 
 
-def _hbase_encode(src: Column, df: DataFrame, sf: dict[str, Any]) -> Column:
+def _hbase_encode(src: str, df: DataFrame, sf: dict[str, Any]) -> str:
     """Big-endian byte encoding like HBase Bytes.toBytes
     (reference: select/Bytes.java)."""
     dtypes = dict(df.dtypes)
@@ -783,7 +813,7 @@ def _hbase_encode(src: Column, df: DataFrame, sf: dict[str, Any]) -> Column:
         # resolve the expression's own type or an int bound column
         # silently encodes as UTF-8 text bytes instead of big-endian
         try:
-            dt = df.select(src).schema[0].dataType.simpleString()
+            dt = df.selectExpr(src).schema[0].dataType.simpleString()
         except Exception:
             dt = "string"
     if dt in ("int", "bigint", "smallint", "tinyint"):
@@ -793,38 +823,37 @@ def _hbase_encode(src: Column, df: DataFrame, sf: dict[str, Any]) -> Column:
         # the LEFTMOST chars so it would collapse every negative to all-FF
         # sign bytes — pad to full bigint width first, then take the
         # rightmost hexw chars (correct two's-complement truncation)
-        return F.unhex(F.substring(F.lpad(F.hex(src.cast("bigint")), 16, "0"), -hexw, hexw))
-    return src.cast("string").cast("binary")
+        return f"unhex(substring(lpad(hex(CAST({src} AS BIGINT)), 16, '0'), {-hexw}, {hexw}))"
+    return f"CAST(CAST({src} AS STRING) AS BINARY)"
 
 
-def _hbase_decode(src: Column, type_name: str) -> Column:
+def _hbase_decode(src: str, type_name: str) -> str:
     dt = spark_type(type_name)
     widths = {T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4, T.LongType: 8}
     if type(dt) in widths:
         w = widths[type(dt)]
         # conv() yields the UNSIGNED value; re-apply two's complement via
         # decimal(38,0) (2^64 fits) so negative encodings round-trip
-        unsigned = F.conv(F.hex(src), 16, 10).cast(T.DecimalType(38, 0))
-        # 2^63 / 2^64 exceed the JVM long F.lit() accepts — go through
-        # string→decimal literals (found by the SelectFunctionTest parity
-        # config: bytes_decode of an int64 raised at plan time)
-        dec = T.DecimalType(38, 0)
-        half = F.lit(str(2 ** (8 * w - 1))).cast(dec)
-        full = F.lit(str(2 ** (8 * w))).cast(dec)
-        signed = F.when(unsigned >= half, unsigned - full).otherwise(unsigned)
-        return signed.cast(dt)
+        unsigned = f"CAST(conv(hex({src}), 16, 10) AS DECIMAL(38,0))"
+        # 2^63 / 2^64 exceed a BIGINT literal — go through string→decimal
+        # literals (found by the SelectFunctionTest parity config:
+        # bytes_decode of an int64 raised at plan time)
+        half = f"CAST('{2 ** (8 * w - 1)}' AS DECIMAL(38,0))"
+        full = f"CAST('{2 ** (8 * w)}' AS DECIMAL(38,0))"
+        signed = f"CASE WHEN ({unsigned} >= {half}) THEN ({unsigned} - {full}) ELSE {unsigned} END"
+        return f"CAST({signed} AS {atomic_ddl(dt)})"
     if isinstance(dt, T.StringType):
-        return src.cast("string")
+        return f"CAST({src} AS STRING)"
     raise ValueError(f"bytes_decode: unsupported type {type_name}")
 
 
-def _compile_generate(sf: dict[str, Any]) -> Column:
+def _compile_generate(sf: dict[str, Any]) -> str:
     """Typed sequence/id generation (reference: select/Generate.java:19-212)."""
     gen_type = str(sf.get("type", "long")).lower()
     if gen_type in ("long", "int64", "id"):
-        return F.monotonically_increasing_id()
+        return "monotonically_increasing_id()"
     if gen_type in ("uuid", "string"):
-        return F.expr("uuid()")
+        return "uuid()"
     if gen_type == "timestamp":
-        return F.current_timestamp()
+        return "current_timestamp()"
     raise ValueError(f"generate: unsupported type {gen_type}")

@@ -22,7 +22,7 @@ them anyway.
 
 ``lag`` evaluates an exp4j expression where ``field[k]`` denotes the value
 k rows back per key (reference: select/stateful/Lag.java:16-162); compiled
-as F.lag(...).over(w) feeding the expression tree.
+as ``lag(...) OVER (...)`` SQL text feeding the expression text.
 """
 
 from __future__ import annotations
@@ -33,8 +33,9 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from pipeline_spark.compilers import select_fns
-from pipeline_spark.compilers.expression import compile_expression, to_double
+from pipeline_spark.compilers.expression import compile_expression, schema_resolver, to_double
 from pipeline_spark.compilers.filter_dsl import compile_filter
+from pipeline_spark.functions.sqltext import col_ref, qi
 
 _UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
 
@@ -90,11 +91,12 @@ def apply_stateful_select(
         name = sf["name"]
         func = select_fns.infer_func(sf)
         if not select_fns.is_stateful(sf):
-            pairs = select_fns.compile_selects([sf], work, event_time_col)
-            work = work.withColumn(name, pairs[0][1])
+            work, pairs = select_fns.compile_selects([sf], work, event_time_col)
+            work = work.withColumn(name, F.expr(pairs[0][1]))
         else:
             work = work.withColumn(
-                name, _stateful_col(sf, func, work, ts, ord_secs, group_fields)
+                name,
+                _stateful_col(sf, func, work, event_time_col, ord_secs, group_fields),
             )
         out_names.append(name)
     return work.select(*out_names)
@@ -104,26 +106,30 @@ def _stateful_col(
     sf: dict[str, Any],
     func: str,
     df: DataFrame,
-    ts: Column,
+    event_time_col: str,
     ord_secs: Column,
     group_fields: list[str],
 ) -> Column:
     range_spec = sf.get("range")
+    ts = F.col(event_time_col)
 
     if func == "lag":
         expr_text = str(sf["expression"])
-        w = _base_window(group_fields, ts)
+        partition = (
+            f"PARTITION BY {', '.join(col_ref(g) for g in group_fields)} " if group_fields else ""
+        )
+        over = f"OVER ({partition}ORDER BY {col_ref(event_time_col)})"
         dtypes = {f.name: f.dataType for f in df.schema.fields}
 
-        def resolver(fname: str, k: int) -> Column:
+        def resolver(fname: str, k: int) -> str:
             if fname not in dtypes:
                 raise ValueError(f"lag: unknown field '{fname}'")
-            base = to_double(F.col(fname), dtypes[fname])
+            base = to_double(qi(fname), dtypes[fname])
             if k == 0:
                 return base
-            return F.lag(base, k).over(w)
+            return f"lag({base}, {k}) {over}"
 
-        return compile_expression(expr_text, resolver)
+        return F.expr(compile_expression(expr_text, resolver))
 
     if func in ("row_number", "rank", "dense_rank"):
         w = _base_window(group_fields, ts)
@@ -147,11 +153,9 @@ def _stateful_col(
 def _windowable_agg(sf: dict[str, Any], func: str, df: DataFrame) -> Column:
     """Aggregate expression for window use (no alias — window aggs are named
     by the caller's withColumn)."""
-    from pipeline_spark.compilers.expression import schema_resolver
-
     def input_col() -> Column:
         if sf.get("expression"):
-            return compile_expression(str(sf["expression"]), schema_resolver(df))
+            return F.expr(compile_expression(str(sf["expression"]), schema_resolver(df)))
         fields = sf.get("fields")
         if fields and len(fields) > 1:
             # multi-field form (reference SelectTransformTest array_agg
@@ -165,11 +169,11 @@ def _windowable_agg(sf: dict[str, Any], func: str, df: DataFrame) -> Column:
         cond = sf.get("condition")
         if cond is None:
             return c
-        return F.when(compile_filter(cond, df), c)
+        return F.when(F.expr(compile_filter(cond, df)), c)
 
     if func == "count":
         if sf.get("condition") is not None:
-            return F.count(F.when(compile_filter(sf["condition"], df), F.lit(1)))
+            return F.count(F.when(F.expr(compile_filter(sf["condition"], df)), F.lit(1)))
         return F.count(F.lit(1))
     if func == "sum":
         return F.sum(guard(input_col()))
@@ -194,7 +198,7 @@ def _windowable_agg(sf: dict[str, Any], func: str, df: DataFrame) -> Column:
     if func in ("argmax", "argmin"):
         cmp = F.col(sf["comparingField"]) if sf.get("comparingField") else None
         if cmp is None and sf.get("comparingExpression"):
-            cmp = compile_expression(str(sf["comparingExpression"]), schema_resolver(df))
+            cmp = F.expr(compile_expression(str(sf["comparingExpression"]), schema_resolver(df)))
         val = input_col()
         fn = F.max_by if func == "argmax" else F.min_by
         return fn(val, guard(cmp))

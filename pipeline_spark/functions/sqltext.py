@@ -23,6 +23,14 @@ def qi(name: str) -> str:
     return "`" + str(name).replace("`", "``") + "`"
 
 
+def col_ref(name: str) -> str:
+    """The SQL spelling of ``F.col(name)``: unquoted dots navigate struct
+    fields; a name already in backtick syntax passes through."""
+    if "`" in name:
+        return name
+    return ".".join(qi(part) for part in name.split("."))
+
+
 def sql_str(s: str) -> str:
     """A Spark SQL string literal (default lexer: backslash escapes)."""
     return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"

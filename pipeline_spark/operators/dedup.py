@@ -179,6 +179,19 @@ def simhash_signature_udf():
     return sig
 
 
+def band_keys(with_sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """``(doc, band, bhash)`` rows: one per band of each ``sig``, hashing
+    that band's ``rows`` minhashes — one SQL text, not ``bands`` × 4
+    Column builds."""
+    keys = ", ".join(
+        f"struct({b} AS band, xxhash64(slice(sig, {b * rows + 1}, {rows})) AS bhash)"
+        for b in range(bands)
+    )
+    return with_sig.selectExpr("doc", f"explode(array({keys})) AS bk").select(
+        "doc", "bk.band", "bk.bhash"
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_field: str,
@@ -209,20 +222,7 @@ def minhash_lsh_pairs(
     # candidate generation shuffles ONLY (doc, band, bhash) ints — never
     # the 64-long signature arrays (shuffling + sorting those measured 8×
     # slower); pairs are enumerated bucket-locally, no self-join.
-    banded = with_sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(F.slice(F.col("sig"), b * rows + 1, rows)).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "bk.band", "bk.bhash")
+    banded = band_keys(with_sig, bands, rows)
 
     buckets = (
         banded.groupBy("band", "bhash")

@@ -4,9 +4,10 @@ Reference: module/transform/FilterTransform.java:16-103 — applies the
 condition DSL, then optional ``select`` projection and ``flattenField``
 explode.
 
-The compiled predicate is a Column, so when this module sits directly on a
-parquet source Catalyst pushes it into the scan (PushedFilters) — at 100 TB
-this is the difference between reading a partition and reading the lake.
+The compiled predicate is one SQL text that Catalyst parses into the same
+predicate tree, so when this module sits directly on a parquet source it
+is pushed into the scan (PushedFilters) — at 100 TB this is the
+difference between reading a partition and reading the lake.
 """
 
 from __future__ import annotations

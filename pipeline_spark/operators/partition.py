@@ -6,20 +6,17 @@ optional per-partition ``select`` or per-partition SQL
 (util/pipeline/Partition.java:97-139); non-matching rows → ``excluded``
 output; ``union: true`` merges everything back into one output.
 
-Spark: N× ``df.filter(cond_i)`` over the SAME scan — Catalyst caches
-nothing here but each branch pushes its own predicate down; at scale,
-prefer this over a row-at-a-time dispatcher because each partition output
-is an independent pushdown-eligible plan.
+Spark: N× ``df.filter(cond_i)`` over the SAME scan, each condition one
+SQL text — Catalyst caches nothing here but each branch pushes its own
+predicate down; at scale, prefer this over a row-at-a-time dispatcher
+because each partition output is an independent pushdown-eligible plan.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from pipeline_spark.compilers.filter_dsl import as_false_on_null, compile_filter
+from pipeline_spark.compilers.filter_dsl import as_false_on_null, compile_filter, fold
 from pipeline_spark.compilers.select_fns import apply_select
 from pipeline_spark.registry import KIND_TRANSFORM, ModuleContext, module
 
@@ -46,8 +43,7 @@ def partition_transform(ctx: ModuleContext) -> dict[str, DataFrame]:
         conds.append(as_false_on_null(cond))
         if exclusive and len(conds) > 1:
             # first-match-wins: exclude all earlier partitions' rows
-            earlier = reduce(lambda a, b: a | b, conds[:-1])
-            branch_cond = as_false_on_null(cond) & ~earlier
+            branch_cond = f"({conds[-1]} AND (NOT {fold(conds[:-1], 'OR')}))"
         else:
             branch_cond = cond
         branch = df.filter(branch_cond)
@@ -59,11 +55,7 @@ def partition_transform(ctx: ModuleContext) -> dict[str, DataFrame]:
             branch = apply_select(branch, part["select"], ts_attr)
         outs[name] = branch
 
-    if conds:
-        any_match = reduce(lambda a, b: a | b, conds)
-        outs["excluded"] = df.filter(~any_match)
-    else:
-        outs["excluded"] = df.filter(F.lit(False))
+    outs["excluded"] = df.filter(f"(NOT {fold(conds, 'OR')})" if conds else "false")
 
     if p.get("union"):
         merged = None
@@ -71,5 +63,5 @@ def partition_transform(ctx: ModuleContext) -> dict[str, DataFrame]:
             if name == "excluded":
                 continue
             merged = branch if merged is None else merged.unionByName(branch, allowMissingColumns=True)
-        return {"": merged if merged is not None else df.filter(F.lit(False))}
+        return {"": merged if merged is not None else df.filter("false")}
     return outs

@@ -193,7 +193,7 @@ def parse_exec_aggs(
             if fields:
                 val_col = F.struct(*[F.col(f) for f in fields])
             elif expr:
-                val_col = compile_expression(str(expr), schema_resolver(df))
+                val_col = F.expr(compile_expression(str(expr), schema_resolver(df)))
             elif field:
                 val_col = F.col(field)
             else:
@@ -213,15 +213,15 @@ def parse_exec_aggs(
                 # the per-row epoch it already computes (sentinel \x00ts);
                 # a condition becomes a separate boolean guard column
                 guard = (
-                    add_col(compile_filter(cond, df))
+                    add_col(F.expr(compile_filter(cond, df)))
                     if cond is not None else None
                 )
                 out.append((name, op, (add_col(val_col), "\x00ts", guard)))
                 continue
             if a.get("comparingExpression"):
-                cmp_col = compile_expression(
+                cmp_col = F.expr(compile_expression(
                     str(a["comparingExpression"]), schema_resolver(df)
-                )
+                ))
             elif a.get("comparingField"):
                 cmp_col = F.col(str(a["comparingField"]))
             else:
@@ -230,7 +230,7 @@ def parse_exec_aggs(
                     "or comparingExpression"
                 )
             if cond is not None:
-                cmp_col = F.when(compile_filter(cond, df), cmp_col)
+                cmp_col = F.when(F.expr(compile_filter(cond, df)), cmp_col)
             out.append((name, op, (add_col(val_col), add_col(cmp_col), None)))
             continue
         if op != "count" and not field and not expr:
@@ -239,7 +239,7 @@ def parse_exec_aggs(
             )
         col = None
         if expr:
-            col = compile_expression(str(expr), schema_resolver(df))
+            col = F.expr(compile_expression(str(expr), schema_resolver(df)))
         elif field:
             col = F.col(field)
         if op == "std":
@@ -248,14 +248,14 @@ def parse_exec_aggs(
             # ddof formula, mergeable for session windows
             v = col.cast("double")
             if cond is not None:
-                v = F.when(compile_filter(cond, df), v)
+                v = F.when(F.expr(compile_filter(cond, df)), v)
             out.append((name, "std", (add_col(v), int(a.get("ddof", 1)))))
             continue
         if op == "avg" and a.get("weightField"):
             w = F.col(str(a["weightField"]))
             v = col
             if cond is not None:
-                c = compile_filter(cond, df)
+                c = F.expr(compile_filter(cond, df))
                 v = F.when(c, v)
                 w = F.when(c, w)
             vw = add_col((v * w).cast("double"))
@@ -263,7 +263,7 @@ def parse_exec_aggs(
             out.append((name, "wavg", (vw, wg)))
             continue
         if cond is not None:
-            c = compile_filter(cond, df)
+            c = F.expr(compile_filter(cond, df))
             if op == "count":
                 # batch shape: a conditioned count counts matching ROWS,
                 # independent of any field's nullity

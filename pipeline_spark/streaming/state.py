@@ -450,6 +450,8 @@ def streaming_stateful_select(
             # of the stateful operator (r6, same pattern as the executor
             # pane backend) — identical expression strings share a column
             # so the single-buffer constraint below applies naturally
+            from pyspark.sql import functions as F
+
             from pipeline_spark.compilers.expression import (
                 compile_expression,
                 schema_resolver,
@@ -461,7 +463,7 @@ def streaming_stateful_select(
                 cname = f"__sexpr_{len(derived_exprs)}__"
                 df = df.withColumn(
                     cname,
-                    compile_expression(expr_str, schema_resolver(df)),
+                    F.expr(compile_expression(expr_str, schema_resolver(df))),
                 )
                 derived_exprs[key] = cname
             field = derived_exprs[key]

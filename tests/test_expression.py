@@ -34,8 +34,8 @@ def df(spark):
 
 
 def ev(df, expr):
-    col = compile_expression(expr, schema_resolver(df))
-    return df.select(col.alias("r")).collect()[0]["r"]
+    sql = compile_expression(expr, schema_resolver(df))
+    return df.select(F.expr(sql).alias("r")).collect()[0]["r"]
 
 
 def test_arithmetic(df):
@@ -113,3 +113,18 @@ def test_field_variables():
 def test_max_lag_index():
     assert max_lag_index("v[1] - v[3] + x") == 3
     assert max_lag_index("v + x") == 0
+
+
+def test_if_arity_error_names_the_function(df):
+    with pytest.raises(ValueError, match=r"if\(\) takes 3 args .* got 2"):
+        compile_expression("if(x > y, 1)", schema_resolver(df))
+
+
+def test_switch_arity_error_names_the_function(df):
+    with pytest.raises(ValueError, match=r"switch3\(\) takes condition/value pairs .* got 3"):
+        compile_expression("switch3(x > 0, 5, 7)", schema_resolver(df))
+
+
+def test_max_min_take_any_arity(df):
+    assert ev(df, "max(x, y, n)") == 7.0
+    assert ev(df, "min(x, y, n)") == 2.0

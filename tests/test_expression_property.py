@@ -11,6 +11,7 @@ import random
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from pipeline_spark.compilers.expression import compile_expression, schema_resolver
 
@@ -157,7 +158,7 @@ def test_expression_compiler_agrees_with_reference_semantics(spark):
     df = spark.createDataFrame([Row(**env)])
     exprs = [gen_expr(rng) for _ in range(40)]
     cols = [
-        compile_expression(e, schema_resolver(df)).alias(f"e{i}")
+        F.expr(compile_expression(e, schema_resolver(df))).alias(f"e{i}")
         for i, e in enumerate(exprs)
     ]
     row = df.select(*cols).collect()[0]

@@ -709,7 +709,7 @@ def test_expression_util_parity(spark):
             ", ".join(f"{k} double" for k in cols),
         )
         out = df.select(
-            compile_expression(expr, schema_resolver(df)).alias("r")
+            F.expr(compile_expression(expr, schema_resolver(df))).alias("r")
         ).collect()[0]["r"]
         return out
 

@@ -11,6 +11,7 @@ from pyspark.sql import types as T
 
 from pipeline_spark.functions.sqltext import (
     atomic_ddl,
+    col_ref,
     fp_norm_sql,
     qi,
     scheme_strip_sql,
@@ -37,6 +38,14 @@ def test_qi_quotes_and_resolves(spark):
     assert qi("a`b") == "`a``b`"
     df = spark.createDataFrame([(1, 2)], "`a``b` int, `x-y` int")
     assert df.select(F.expr(qi("a`b")), F.expr(qi("x-y"))).first() == (1, 2)
+
+
+@pytest.mark.parametrize("name", ["a", "st.b", "`x.y`", "`x.y`.z", "x-y"])
+def test_col_ref_resolves_like_f_col(spark, name):
+    df = spark.createDataFrame(
+        [(1, (2, "s"), (3,), 4)], "a int, st struct<a:int,b:string>, `x.y` struct<z:int>, `x-y` int"
+    )
+    assert _analyzed(df.select(F.expr(col_ref(name)))) == _analyzed(df.select(F.col(name)))
 
 
 def test_sql_str_round_trips(spark):
