@@ -16,15 +16,17 @@ Each function compiles to Spark SQL text, so a stateless list ships in one
 string-backed decimal cast, a per-element ``each`` struct) is projected
 under a hidden name first.  Stateful variants (range aggregates, lag)
 compile to Window functions — see stateful.py.
-"""
 
-from __future__ import annotations
+pandas is imported only inside the two pandas-UDF builders, so planning a
+pipeline that uses neither does not import it.  This file evaluates its
+annotations eagerly (no ``from __future__ import annotations``): the UDFs'
+``pd.Series`` hints must resolve against that local import when
+``pandas_udf`` reads them.
+"""
 
 import datetime
 import re
 from typing import Any
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -579,6 +581,7 @@ def _compile_scrape(sf: dict[str, Any], bound: dict[str, str]) -> str | Column:
         attr = sf.get("attribute") or sf.get("attr")
         all_matches = bool(sf.get("all", False))
         ret_type = "array<string>" if all_matches else "string"
+        import pandas as pd
 
         @F.pandas_udf(ret_type)
         def scrape(html: pd.Series) -> pd.Series:
@@ -749,6 +752,7 @@ def _jinja_template_column(template: str, df: DataFrame) -> Column:
     render_row_template(template)
     jinja_src = freemarker_to_jinja(template)
     cols = [c for c in df.columns if not _is_hidden(c)]
+    import pandas as pd
 
     @F.pandas_udf("string")
     def render(rows: pd.DataFrame) -> pd.Series:

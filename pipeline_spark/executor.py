@@ -20,11 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pipeline_spark.config import Config, ModuleConfig
 from pipeline_spark.registry import ModuleContext, get_module
 
-# Import module packages for registration side effects.
-from pipeline_spark import sources as _sources  # noqa: F401
-from pipeline_spark import operators as _operators  # noqa: F401
-from pipeline_spark import sinks as _sinks  # noqa: F401
-
 
 class PipelineExecutor:
     def __init__(self, spark: SparkSession, dry_run: bool = False):

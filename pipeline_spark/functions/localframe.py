@@ -1,31 +1,61 @@
-"""Driver-side frames for metadata-scale lookup inputs (file -> fill
-values, row-id bases, per-file sequence numbers, decoded DV positions).
+"""Driver-side rows as a JVM LocalRelation.
 
-``spark.createDataFrame(list)`` slices the list across
-``defaultParallelism`` partitions — on ``local[32]`` a 5-row lookup
-frame becomes a 32-task stage inside EVERY broadcast-exchange build that
-consumes it, and DML paths consume several per commit (r15 fix: one
-partition).  r16 goes further: metadata-scale frames build as a SQL
-VALUES LocalRelation — the broadcast build then needs NO Spark job at
-all (LocalTableScan), and the whole frame ships to the JVM in one
-spark.sql round-trip instead of RDD-serialization py4j chatter.  Large
-frames (driver-decoded DV positions up to the 131072 gate) and value
-types whose SQL spelling could drift from createDataFrame coercion
-(naive datetimes: system-tz dependent) keep the single-partition RDD
-path."""
+Rows the driver already holds — metadata-scale lookup inputs (file ->
+fill values, row-id bases, per-file sequence numbers, decoded DV
+positions), the ``create`` source's inline ``elements``, empty results —
+build as a SQL VALUES LocalRelation: the rows ship to the JVM in one
+``spark.sql`` round-trip, the plan is a LocalTableScan, a broadcast build
+over it needs no Spark job and executing it starts no Python worker.
+``spark.createDataFrame(list)`` instead pickles the rows into an RDD that
+a Python ``map`` re-serializes in ``defaultParallelism`` tasks.
+
+``schema`` is a DDL string or a StructType:
+
+* a DDL string declares CAST targets: each value is spelled as SQL and
+  cast to its column's type (lexical partition values such as '1.50'
+  into a decimal column).  A column is nullable only where one of its
+  values is NULL.  createDataFrame makes every DDL column nullable, but
+  the lookup joins built on these frames are planned on the narrower
+  nullability: forcing it cost perfbench ``text_lakehouse`` about 15%
+  more ``run_cpu_s``;
+* a StructType promises what ``spark.createDataFrame(rows, schema)``
+  gives, nullability included: rows pass PySpark's own type verifier
+  first, and only atomic types are spelled.  ``schema=None`` infers the
+  StructType from dict rows exactly as ``spark.createDataFrame(rows)``
+  does.
+
+Rows that cannot be spelled take the RDD path: more than
+``_VALUES_MAX_ROWS`` rows, naive datetimes (createDataFrame reads them in
+the SYSTEM timezone, a SQL literal in the session one), nested values,
+``Decimal`` values, and rows the verifier rejects (createDataFrame then
+raises its own error).  An empty frame is a LocalRelation of the exact
+schema, built on the JVM.
+"""
 from __future__ import annotations
 
+import calendar
 import datetime as _dt
 import math
+
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 # above this the VALUES text gets parser-hostile (a 131k-position DV
 # frame would be ~15 MB of SQL); the RDD path ships pickled bytes
 _VALUES_MAX_ROWS = 2048
 
+# the StructType field types spelled as VALUES; any other (nested,
+# timestamp_ntz, char/varchar, ...) takes the RDD path
+_SPELLED = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
+    T.TimestampType, T.DecimalType,
+)
 
-def _sql_value(v) -> str:
+
+def _sql_value(v, typ: str = "") -> str:
     """Spell one Python scalar as SQL able to CAST losslessly to the
-    declared column type; raises ValueError for types we refuse to
+    column type ``typ``; raises ValueError for values we refuse to
     spell (the caller falls back to the RDD path)."""
     if v is None:
         return "NULL"
@@ -47,10 +77,14 @@ def _sql_value(v) -> str:
     if isinstance(v, (bytes, bytearray)):
         return "X'" + bytes(v).hex() + "'"
     if isinstance(v, _dt.datetime):
-        # naive datetimes coerce through the SYSTEM timezone in classic
-        # createDataFrame; a SQL TIMESTAMP literal uses the SESSION
-        # timezone — refusing keeps the two paths bit-identical
-        raise ValueError("datetime values take the RDD path")
+        # an aware datetime is an instant: the epoch microseconds
+        # TimestampType.toInternal computes.  A naive one coerces through
+        # the SYSTEM timezone in createDataFrame but a SQL literal through
+        # the SESSION one — refusing keeps the two paths bit-identical
+        if v.tzinfo is None or typ != "timestamp":
+            raise ValueError("only aware datetimes into timestamp columns")
+        micros = calendar.timegm(v.utctimetuple()) * 1_000_000 + v.microsecond
+        return f"timestamp_micros({micros})"
     if isinstance(v, _dt.date):
         return f"DATE'{v.isoformat()}'"
     raise ValueError(f"unsupported VALUES type {type(v).__name__}")
@@ -80,32 +114,69 @@ def _split_ddl(schema: str) -> list[tuple[str, str]]:
     return out
 
 
-def _values_sql(rows, schema: str) -> str | None:
+def _values_sql(rows, schema: str | T.StructType) -> str | None:
     try:
-        fields = _split_ddl(schema)
-        if not fields or any(not t for _n, t in fields):
+        if isinstance(schema, str):
+            fields = [(n, t, False) for n, t in _split_ddl(schema)]
+        else:
+            if not all(isinstance(f.dataType, _SPELLED) for f in schema.fields):
+                return None
+            verify = T._make_type_verifier(schema)
+            for r in rows:
+                verify(r)
+            fields = [
+                (f.name, f.dataType.simpleString(), f.nullable)
+                for f in schema.fields
+            ]
+        if not fields or any(not t for _n, t, _null in fields):
             return None
         vals = ",".join(
-            "(" + ",".join(_sql_value(v) for v in r) + ")" for r in rows
+            "(" + ",".join(
+                _sql_value(v, t.lower())
+                for v, (_n, t, _null) in zip(r, fields, strict=True)
+            ) + ")"
+            for r in rows
         )
-        cols = ",".join(
-            f"CAST(__c{i} AS {t}) AS `" + n.replace("`", "``") + "`"
-            for i, (n, t) in enumerate(fields)
-        )
-        names = ",".join(f"__c{i}" for i in range(len(fields)))
-        return f"SELECT {cols} FROM VALUES {vals} AS __lf__({names})"
     except (ValueError, TypeError):
         return None
-
-
-def local_frame(spark, rows, schema: str):
-    rows = list(rows)
-    if not rows:
-        return spark.createDataFrame([], schema)
-    if len(rows) <= _VALUES_MAX_ROWS:
-        sql = _values_sql(rows, schema)
-        if sql is not None:
-            return spark.sql(sql)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
+    # NULLIF(c, NULL) is c, typed nullable: a declared-nullable column
+    # stays nullable even when none of its values is NULL
+    cols = ",".join(
+        (f"CAST(NULLIF(__c{i}, NULL) AS {t})" if nullable else f"CAST(__c{i} AS {t})")
+        + " AS `" + n.replace("`", "``") + "`"
+        for i, (n, t, nullable) in enumerate(fields)
     )
+    names = ",".join(f"__c{i}" for i in range(len(fields)))
+    sql = f"SELECT {cols} FROM VALUES {vals} AS __lf__({names})"
+    # spark.sql substitutes ${conf} / ${env:NAME} references in its text
+    return None if "${" in sql else sql
+
+
+def values_frame(spark, rows: list, schema: str | T.StructType | None):
+    """``rows`` as a LocalRelation, or None when they take the RDD path."""
+    if len(rows) > _VALUES_MAX_ROWS:
+        return None
+    if schema is None:
+        if not rows or not all(isinstance(r, dict) for r in rows):
+            return None
+        # the schema (sorted keys, merged types) createDataFrame infers
+        schema = spark._inferSchemaFromList(rows)
+        rows = [tuple(r.get(n) for n in schema.names) for r in rows]
+    if not rows:
+        if isinstance(schema, str):
+            schema = T._parse_datatype_string(schema)
+        jss = spark._jsparkSession
+        jdf = jss.createDataFrame([], jss.parseDataType(schema.json()))
+        return DataFrame(jdf, spark)
+    sql = _values_sql(rows, schema)
+    return None if sql is None else spark.sql(sql)
+
+
+def local_frame(spark, rows, schema: str | T.StructType):
+    rows = list(rows)
+    df = values_frame(spark, rows, schema)
+    if df is None:
+        # one partition: a 5-row lookup sliced across defaultParallelism
+        # would be a many-task stage inside every broadcast build using it
+        df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    return df

@@ -1,41 +1,1 @@
-"""Transform modules (registration side effects on import)."""
-
-from pipeline_spark.operators import (  # noqa: F401
-    filter as _filter,
-    select as _select,
-    partition as _partition,
-    union as _union,
-    aggregation as _aggregation,
-    beamsql as _beamsql,
-    lookup as _lookup,
-    limit as _limit,
-    unnest as _unnest,
-    compare as _compare,
-    reshuffle as _reshuffle,
-    deserialize as _deserialize,
-    tokenize as _tokenize,
-    dedup as _dedup,
-    decontaminate as _decontaminate,
-    repetition as _repetition,
-    similarity as _similarity,
-    textstats as _textstats,
-    multimodal as _multimodal,
-    http as _http,
-    crypto as _crypto,
-    ml as _ml,
-    matchrec as _matchrec,
-    processing as _processing,
-    sample as _sample,
-    scrub as _scrub,
-    pack as _pack,
-    example as _example,
-    htmlextract as _htmlextract,
-    urls as _urls,
-    chunk as _chunk,
-    dsir as _dsir,
-    topk as _topk,
-    profile as _profile,
-    asof as _asof,
-    rangejoin as _rangejoin,
-    sessionize as _sessionize,
-)
+"""Transform modules; ``registry.get_module`` imports each on first use."""

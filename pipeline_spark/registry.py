@@ -4,7 +4,10 @@ The reference registers modules by classpath annotation scan
 (reference: src/main/java/com/mercari/solution/module/Source.java:106-129,
 same pattern in Transform.java / Sink.java).  Here a module is a plain
 function decorated with ``@module("name", kind=...)``; the decorator records
-it in a flat registry keyed by name.
+it in a flat registry keyed by name.  The built-in modules are not imported
+up front: ``MODULES`` names the file that defines each one, and
+``get_module`` imports that file on the module's first use, so a pipeline
+pays the import cost of only the modules its config names.
 
 A module function has the signature::
 
@@ -18,6 +21,7 @@ several named outputs; downstream modules address them as
 
 from __future__ import annotations
 
+import importlib
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -68,6 +72,53 @@ class ModuleSpec:
 
 _REGISTRY: dict[tuple[str, str], ModuleSpec] = {}
 
+_PACKAGES = {
+    KIND_SOURCE: "pipeline_spark.sources",
+    KIND_TRANSFORM: "pipeline_spark.operators",
+    KIND_SINK: "pipeline_spark.sinks",
+}
+
+#: kind -> module name -> the file of ``_PACKAGES[kind]`` that registers
+#: it.  tests/test_registry_table.py checks this table against what
+#: importing every file registers.
+MODULES: dict[str, dict[str, str]] = {
+    KIND_SOURCE: {
+        "bigquery": "connectors", "bigtable": "connectors", "create": "create",
+        "datastore": "connectors", "delta": "delta_native",
+        "drivefile": "connectors", "files": "files", "firestore": "connectors",
+        "http": "http", "iceberg": "connectors", "jdbc": "jdbc",
+        "kafka": "connectors", "microbatch": "microbatch", "pubsub": "connectors",
+        "spanner": "connectors", "storage": "storage", "warc": "warc",
+    },
+    KIND_TRANSFORM: {
+        "aggregation": "aggregation", "asof": "asof", "beamsql": "beamsql",
+        "bigtable": "ml", "bpe_train": "tokenize", "chunk": "chunk",
+        "compare": "compare", "crypto": "crypto",
+        "decontaminate": "decontaminate", "dedup": "dedup",
+        "deserialize": "deserialize", "dsir": "dsir", "example": "example",
+        "filter": "filter", "htmlextract": "htmlextract", "http": "http",
+        "limit": "limit", "lookup": "lookup", "matchRecognize": "matchrec",
+        "multimodal": "multimodal", "onnx": "ml", "pack": "pack",
+        "partition": "partition", "pdfextract": "ml", "processing": "processing",
+        "profile": "profile", "rangejoin": "rangejoin",
+        "repetition": "repetition", "reshuffle": "reshuffle", "sample": "sample",
+        "scrub": "scrub", "select": "select", "sessionize": "sessionize",
+        "similarity": "similarity", "sql": "beamsql", "textstats": "textstats",
+        "tokenize": "tokenize", "topk": "topk", "union": "union",
+        "unnest": "unnest", "urls": "urls", "vertexai.gemini": "ml",
+    },
+    KIND_SINK: {
+        "action": "services", "auxia": "services", "bigquery": "connectors",
+        "bigtable": "connectors", "copyfile": "copyfile",
+        "datastore": "connectors", "debug": "debug", "delta": "delta_native",
+        "files": "files", "firestore": "connectors", "iceberg": "connectors",
+        "jdbc": "jdbc", "kafka": "connectors", "localH2": "localdb",
+        "memory": "memory", "pubsub": "connectors", "spanner": "connectors",
+        "storage": "storage", "tableconvert": "tableconvert", "tasks": "services",
+        "text": "text", "warc": "warc",
+    },
+}
+
 
 def module(name: str, kind: str = KIND_TRANSFORM):
     """Register a module function under ``name``/``kind``."""
@@ -79,15 +130,26 @@ def module(name: str, kind: str = KIND_TRANSFORM):
     return deco
 
 
+def module_names(kind: str) -> list[str]:
+    """Every module name of ``kind`` a config may use, importing nothing."""
+    return sorted(set(MODULES.get(kind, ())) | {n for k, n in _REGISTRY if k == kind})
+
+
 def get_module(name: str, kind: str) -> ModuleSpec:
-    try:
-        return _REGISTRY[(kind, name)]
-    except KeyError:
-        available = sorted(n for k, n in _REGISTRY if k == kind)
+    spec = _REGISTRY.get((kind, name))
+    if spec is None and name in MODULES.get(kind, ()):
+        importlib.import_module(f"{_PACKAGES[kind]}.{MODULES[kind][name]}")
+        spec = _REGISTRY.get((kind, name))
+    if spec is None:
         raise KeyError(
-            f"unknown {kind} module '{name}'; registered: {available}"
-        ) from None
+            f"unknown {kind} module '{name}'; registered: {module_names(kind)}"
+        )
+    return spec
 
 
 def registered_modules(kind: str | None = None) -> list[ModuleSpec]:
+    """Every registered module, importing all the built-in ones first."""
+    for k, files in MODULES.items():
+        for f in set(files.values()):
+            importlib.import_module(f"{_PACKAGES[k]}.{f}")
     return [s for (k, _), s in sorted(_REGISTRY.items()) if kind is None or k == kind]

@@ -28,12 +28,7 @@ from typing import Any
 from urllib.parse import parse_qsl, urlparse
 
 from pipeline_spark.config import Config, parse_config
-from pipeline_spark.registry import registered_modules
-
-# module registration side effects
-from pipeline_spark import sources as _sources  # noqa: F401
-from pipeline_spark import operators as _operators  # noqa: F401
-from pipeline_spark import sinks as _sinks  # noqa: F401
+from pipeline_spark.registry import module_names, registered_modules
 
 
 def validate_config(config: Config) -> list[str]:
@@ -47,13 +42,10 @@ def validate_config(config: Config) -> list[str]:
     for dup in sorted({n for n in names if names.count(n) > 1}):
         errors.append(f"duplicate module name '{dup}'")
 
-    registered = {
-        (s.kind, s.name): s for s in registered_modules()
-    }
     for m in mods:
         kind = "sink" if m.kind == "failure" else m.kind
-        if (kind, m.module) not in registered:
-            avail = sorted(n for k, n in registered if k == kind)
+        avail = module_names(kind)
+        if m.module not in avail:
             errors.append(
                 f"module '{m.name}': unknown {kind} module '{m.module}' "
                 f"(registered: {avail})"
@@ -152,6 +144,8 @@ class PipelineServer:
         self.allow_run = allow_run
         self.token = token
         self.factory_allow = tuple(factory_allow)
+        # import every module now, so no request pays a module's import
+        registered_modules()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):

@@ -1,3 +1,1 @@
-"""Sink modules (registration side effects on import)."""
-
-from pipeline_spark.sinks import storage, debug, memory, files, copyfile, jdbc, connectors, text, delta_native, warc, tableconvert, localdb, services  # noqa: F401
+"""Sink modules; ``registry.get_module`` imports each on first use."""

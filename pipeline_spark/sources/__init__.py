@@ -1,3 +1,1 @@
-"""Source modules (registration side effects on import)."""
-
-from pipeline_spark.sources import create, storage, files, jdbc, http, connectors, microbatch, delta_native, warc  # noqa: F401
+"""Source modules; ``registry.get_module`` imports each on first use."""

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from pipeline_spark.functions.jvmclass import jvm_class_present
+from pipeline_spark.functions.localframe import local_frame
 from pipeline_spark.registry import KIND_SOURCE, ModuleContext, module
 
 
@@ -239,7 +240,7 @@ def _kafka_native_batch(ctx: ModuleContext, p: dict) -> DataFrame:
     )
     sc = ctx.spark.sparkContext
     if not descs:
-        return ctx.spark.createDataFrame([], schema)
+        return local_frame(ctx.spark, [], schema)
 
     def read_part(desc):
         part, start, end = desc

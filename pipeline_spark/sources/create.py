@@ -6,8 +6,10 @@ int/long/date/timestamp; streaming ``rate``/``rateUnit`` generator;
 optional ``select`` + ``flattenField`` post-processing; ``splitSize``
 parallelism.
 
-Spark mapping: ``spark.createDataFrame`` for elements; ``spark.range`` +
-casts for sequences; ``format("rate")`` for the streaming generator.
+Spark mapping: elements become a JVM LocalRelation
+(functions/localframe.py; ``spark.createDataFrame`` where they cannot be
+spelled as SQL values); ``spark.range`` + casts for sequences;
+``format("rate")`` for the streaming generator.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pipeline_spark.compilers.select_fns import apply_select, spark_type
+from pipeline_spark.functions.localframe import values_frame
 from pipeline_spark.registry import KIND_SOURCE, ModuleContext, module
 
 
@@ -98,7 +101,6 @@ def create_source(ctx: ModuleContext) -> dict[str, DataFrame]:
             rows = [
                 (i, epoch, _coerce(v, vtype)) for i, v in enumerate(elements)
             ]
-            df = ctx.spark.createDataFrame(rows, schema)
         elif schema_cfg:
             fields = schema_cfg.get("fields") if isinstance(schema_cfg, dict) else schema_cfg
             schema = build_schema(fields)
@@ -106,9 +108,11 @@ def create_source(ctx: ModuleContext) -> dict[str, DataFrame]:
                 tuple(_coerce(e.get(f.name), f.dataType) for f in schema.fields)
                 for e in elements
             ]
-            df = ctx.spark.createDataFrame(rows, schema)
         else:
-            df = ctx.spark.createDataFrame(elements)
+            rows, schema = elements, None
+        df = values_frame(ctx.spark, rows, schema)
+        if df is None:
+            df = ctx.spark.createDataFrame(rows, schema)
     elif "from" in p or "to" in p:
         start = int(p.get("from", 0))
         stop = int(p["to"])

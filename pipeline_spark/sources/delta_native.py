@@ -611,6 +611,7 @@ def _is_hive_layout(adds: list[dict], part_cols: list[str]) -> bool:
     return len(roots) <= 1
 
 
+from pipeline_spark.functions.localframe import local_frame
 from pipeline_spark.registry import KIND_SOURCE, ModuleContext, module
 
 
@@ -720,7 +721,7 @@ def read_files_with_dv(spark, table, fschema, adds, with_meta: bool = False):
             out = out.drop("__dv_fp", "__dv_ri")
         parts.append(out)
     if not parts:
-        return spark.createDataFrame([], fschema)
+        return local_frame(spark, [], fschema)
     out = parts[0]
     for x in parts[1:]:
         out = out.unionByName(x)
@@ -889,7 +890,7 @@ def read_delta_cdf(spark, p: dict[str, Any]):
         empty = StructType([*schema.fields]).add("_change_type", "string").add(
             "_commit_version", "long"
         ).add("_commit_timestamp", "timestamp")
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     out = parts[0]
     for x in parts[1:]:
         out = out.unionByName(x)
@@ -1163,9 +1164,9 @@ def read_delta_native(spark, p: dict[str, Any]):
             dfilter = [dfilter]
         adds = [a for a in adds if _stats_may_match(a, dfilter, schema)]
         if not adds:
-            return _apply_data_filter(spark.createDataFrame([], schema), dfilter)
+            return _apply_data_filter(local_frame(spark, [], schema), dfilter)
     if not adds:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     paths = [os.path.join(table, urllib.parse.unquote(a["path"])) for a in adds]
 
     from pyspark.sql import functions as F
@@ -1269,8 +1270,6 @@ def read_delta_native(spark, p: dict[str, Any]):
         )
         out = to_logical_df(drop_deleted(out), cm, schema.fields, keep=keep)
         if want_ri:
-            from pipeline_spark.functions.localframe import local_frame
-
             rid = local_frame(
                 spark,
                 [

@@ -38,6 +38,7 @@ import re
 from typing import Any
 
 from pipeline_spark.functions.avroocf import read_ocf_file, read_ocf_file_with_meta
+from pipeline_spark.functions.localframe import local_frame
 from pipeline_spark.functions.parquetschema import read_parquet
 
 #: manifest_entry.status — 2 marks a data file removed in this snapshot
@@ -850,8 +851,6 @@ def _apply_row_deletes(
             irreversible=irreversible,
             legacy_explicit=legacy_explicit,
         )
-        from pipeline_spark.functions.localframe import local_frame
-
         seq_df = local_frame(
             spark, seq_rows, "__sfp__ string, __dseq__ long, __dpart__ string"
         )
@@ -1128,8 +1127,6 @@ def apply_identity_fill(spark, df, fills: dict[str, dict],
     sch = ", ".join(["__ifp__ string"] + [
         f"__fill_{i}__ {fill_types[c]}" for i, c in enumerate(cols)
     ])
-    from pipeline_spark.functions.localframe import local_frame
-
     fdf = local_frame(spark, rows, sch)
     had_fp = "__fp__" in df.columns
     pre_cols = set(df.columns)
@@ -1198,8 +1195,6 @@ def derive_row_ids(spark, df, data: list[dict], *, with_seq: bool = False):
     last updated by that file's snapshot).  One broadcast of O(files)
     rows; requires ``__fp__``/``__pos__`` stamped (``stamp_lineage``)."""
     from pyspark.sql import functions as F
-
-    from pipeline_spark.functions.localframe import local_frame
 
     rid = local_frame(
         spark,
@@ -1441,7 +1436,7 @@ def read_iceberg_native(spark, p: dict[str, Any]):
         )
         deletes = []
         if not data:
-            return spark.createDataFrame([], _spark_schema_of(meta))
+            return local_frame(spark, [], _spark_schema_of(meta))
     else:
         data, deletes, meta = plan_files(
             table_path, int(snapshot_id) if snapshot_id else None,
@@ -1500,10 +1495,7 @@ def read_iceberg_native(spark, p: dict[str, Any]):
         if not data:
             from pipeline_spark.sources.delta_native import _apply_data_filter
 
-            empty = spark.createDataFrame(
-                [],
-                _spark_schema_of(meta),
-            )
+            empty = local_frame(spark, [], _spark_schema_of(meta))
             return _apply_data_filter(empty, dfilter)
     reader = spark.read
     if p.get("mergeSchema"):
@@ -1698,8 +1690,8 @@ def read_iceberg_changelog(
 
     fields = _schema_fields(meta)
     names = [f["name"] for f in fields]
-    empty = spark.createDataFrame(
-        [], _spark_schema_of(meta) + ", _change_type string, "
+    empty = local_frame(
+        spark, [], _spark_schema_of(meta) + ", _change_type string, "
         "_change_ordinal int, _commit_snapshot_id long"
     )
 

@@ -4,6 +4,9 @@ the fallbacks (row cap, unspellable types) still engage."""
 
 import datetime as dt
 
+import pytest
+from pyspark.sql import types as T
+
 from pipeline_spark.functions.localframe import (
     _VALUES_MAX_ROWS,
     _sql_value,
@@ -85,3 +88,42 @@ def test_empty_rows(spark):
     df = local_frame(spark, [], "a string, b long")
     assert df.count() == 0
     assert df.schema.fieldNames() == ["a", "b"]
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        "a string, b long, c array<struct<x: int, y: map<string, double>>>",
+        T.StructType([
+            T.StructField("k", T.LongType(), False),
+            T.StructField("xs", T.ArrayType(T.IntegerType(), False), True),
+            T.StructField("s", T.StructType([
+                T.StructField("d", T.DateType(), False)]), False),
+        ]),
+    ],
+    ids=["ddl", "struct"],
+)
+def test_empty_frame_is_a_local_relation(spark, schema):
+    """The empty-result sites (delta/iceberg reads that match no file, a
+    kafka read with no offsets) get createDataFrame's exact schema
+    without its Scan ExistingRDD and Python stage."""
+    df = local_frame(spark, [], schema)
+    ref = spark.createDataFrame([], schema)
+
+    def jvm_schema(d):
+        return T._parse_datatype_json_string(d._jdf.schema().json())
+
+    assert jvm_schema(df) == jvm_schema(ref)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.collect() == []
+
+
+def test_struct_schema_keeps_nullability(spark):
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("v", T.StringType(), True),
+    ])
+    df = local_frame(spark, [(1, "a"), (2, "b")], schema)
+    assert T._parse_datatype_json_string(df._jdf.schema().json()) == schema
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
