@@ -722,16 +722,33 @@ def main() -> None:
         "SPARK_GRAFT_SF1_DIR",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchdata", "sf1"),
     )
-    # r16 (VERDICT r15 ask #7): the r15 committed headline run exhausted
-    # the soft budget during the main phase (guard re-runs), so the
-    # budget-multiple gates below skipped the sf1/dml/pane sections and
-    # the scaling evidence had to live in a second-run sidecar.  The
-    # scale phases now gate on an EFFECTIVE budget that starts counting
-    # from wherever the main phase actually ended: one artifact carries
-    # headline AND scaling sections regardless of main-phase overrun.
-    # Per-row semantics unchanged; the phases keep their proportional
-    # allowances (0.5x for sf1, then 0.1x/0.3x increments).
-    eff_budget = max(budget, time.time() - bench_start)
+    # The scale phases gate on time measured from the END of the main
+    # phase, each keeping its proportional allowance of the soft budget
+    # (0.5x for sf1, then 0.6x/0.9x for the DML legs and the last two
+    # sections), so a main phase that overran still lands the scaling
+    # sections in the same artifact.  sf1 is generated once
+    # (scripts/gen_sf_scale.py, SF1_FACTOR x the main SF) when missing,
+    # before the scale clock starts.
+    scale_factor = float(os.environ.get("SPARK_GRAFT_SF1_FACTOR", "10"))
+    if not os.path.isdir(sf1_dir):
+        import subprocess
+
+        gen = subprocess.run(
+            [sys.executable,
+             os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "scripts", "gen_sf_scale.py"),
+             "--src", sf_dir, "--k", str(int(scale_factor)),
+             "--out", sf1_dir],
+            capture_output=True, text=True,
+        )
+        if gen.returncode != 0:
+            print(f"sf1 generation failed: {gen.stderr[-2000:]}",
+                  file=sys.stderr)
+    scale_start = time.time()
+
+    def scale_elapsed() -> float:
+        return time.time() - scale_start
+
     scale_queries = [
         "q1_pricing_summary", "q3_shipping_priority", "agg_stats",
         "dedup_exact", "dedup_cluster", "ngram_jaccard", "minhash_pairs",
@@ -753,12 +770,11 @@ def main() -> None:
         # substring_cut are already above)
         "lang_id",
     ]
-    scale_factor = float(os.environ.get("SPARK_GRAFT_SF1_FACTOR", "10"))
-    if os.path.isdir(sf1_dir) and (time.time() - bench_start) < eff_budget:
+    if os.path.isdir(sf1_dir):
         sf1_timings: dict[str, float] = {}
         ratios: dict[str, float] = {}
         for name in scale_queries:
-            if (time.time() - bench_start) > eff_budget * 1.5:
+            if scale_elapsed() > budget * 0.5:
                 break
             best = None
             for _ in range(2):
@@ -769,7 +785,7 @@ def main() -> None:
                 best = took if best is None else min(best, took)
                 # re-run only while budget holds and the first run was slow
                 # enough for cold-start to matter
-                if took < 2.0 or (time.time() - bench_start) > eff_budget * 1.4:
+                if took < 2.0 or scale_elapsed() > budget * 0.4:
                     break
             sf1_timings[name] = round(best, 3)
             base = timings.get(name)
@@ -790,7 +806,7 @@ def main() -> None:
     # whole-table rewrites).  Tables are written key-clustered
     # (repartitionByRange), the layout the sort-order/clusterBy features
     # exist to maintain.
-    if os.path.isdir(sf1_dir) and (time.time() - bench_start) < eff_budget * 1.6:
+    if os.path.isdir(sf1_dir) and scale_elapsed() < budget * 0.6:
         import shutil
         import tempfile
 
@@ -831,7 +847,7 @@ def main() -> None:
         base = os.path.join(tempfile.gettempdir(), "ps_dml_probe")
         dml: dict[str, dict[str, float]] = {}
         for sf_label, sf_d in (("sf0.1", sf_dir), ("sf1", sf1_dir)):
-            if (time.time() - bench_start) > eff_budget * 1.9:
+            if scale_elapsed() > budget * 0.9:
                 break  # record the legs that fit; the line must land
             docs = spark.read.parquet(f"{sf_d}/documents.parquet").select(
                 "doc_id", "lang", "n_chars"
@@ -983,10 +999,10 @@ def main() -> None:
     # stream, cadence, and key space; only the agg set differs.  The
     # scheduling overhead cancels in the delta, which is what
     # paneAllowUnboundedState's O(rows) keyed state actually costs.
-    # 1.9x: the same overshoot ceiling as the dml legs — this is the
+    # 0.9x: the same overshoot ceiling as the dml legs — this is the
     # LAST section before the artifact lands, so an external kill here
     # would lose the whole line
-    if (time.time() - bench_start) < eff_budget * 1.9 and hasattr(
+    if scale_elapsed() < budget * 0.9 and hasattr(
         entrymod, "stream_pane_bench_run"
     ):
         pane_bench: dict[str, float] = {}
@@ -1010,7 +1026,7 @@ def main() -> None:
     # isolates the per-micro-batch iceberg mirror sync by subtraction;
     # the iceberg reads are timed separately.  Same last-section
     # budget ceiling as the pane microbench.
-    if (time.time() - bench_start) < eff_budget * 1.9 and hasattr(
+    if scale_elapsed() < budget * 0.9 and hasattr(
         entrymod, "uniform_stream_stage_breakdown"
     ):
         try:

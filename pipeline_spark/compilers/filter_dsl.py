@@ -32,7 +32,6 @@ in the scan's PushedFilters.
 from __future__ import annotations
 
 import json
-import math
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -92,18 +91,6 @@ def fold(conds: list[str], op: str) -> str:
     for c in conds[1:]:
         out = f"({out} {op} {c})"
     return out
-
-
-_NON_FINITE = {"inf": "Infinity", "-inf": "-Infinity", "nan": "NaN"}
-
-
-def _lit(v: Any) -> str:
-    """``sql_lit``, plus the non-finite doubles JSON can carry
-    (``NaN``/``Infinity``), which have no SQL literal: a string cast that
-    the optimizer folds to the same constant."""
-    if isinstance(v, float) and not math.isfinite(v):
-        return f"CAST('{_NON_FINITE[repr(v)]}' AS DOUBLE)"
-    return sql_lit(v)
 
 
 def _resolve_type(df: DataFrame, sql: str) -> T.DataType:
@@ -187,7 +174,7 @@ def _leaf(leaf: dict[str, Any], df: DataFrame, bound: dict[str, str]) -> str:
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         # NaN / ±Inf row values compare false under every op
         # (Filter.java:509-512 c=-2 trick)
-        finite = f"((NOT isnan({col})) AND (abs({col}) != {_lit(float('inf'))}))"
+        finite = f"((NOT isnan({col})) AND (abs({col}) != {sql_lit(float('inf'))}))"
         cmp = f"({finite} AND {cmp})"
     return cmp
 
@@ -219,9 +206,9 @@ def _coerce_literal(value: Any, dtype: T.DataType) -> str:
     if isinstance(dtype, T.DateType):
         return f"to_date({sql_lit(str(value))})"
     if isinstance(dtype, (T.FloatType, T.DoubleType)) and isinstance(value, str):
-        return _lit(float(value))
+        return sql_lit(float(value))
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)) and isinstance(value, str):
         return sql_lit(int(float(value)))
     if isinstance(dtype, T.DecimalType):
         return f"CAST({sql_lit(str(value))} AS {dtype.simpleString()})"
-    return _lit(value)
+    return sql_lit(value)

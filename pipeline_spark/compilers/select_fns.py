@@ -24,7 +24,6 @@ annotations eagerly (no ``from __future__ import annotations``): the UDFs'
 ``pandas_udf`` reads them.
 """
 
-import datetime
 import re
 from typing import Any
 
@@ -337,8 +336,6 @@ def _lit(v: Any) -> str:
     """SQL for the literal ``F.lit(v)`` builds from a config value."""
     if isinstance(v, (list, tuple)):
         return f"array({', '.join(_lit(x) for x in v)})"
-    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
-        return f"DATE '{v.isoformat()}'"
     return sql_lit(v)
 
 

@@ -33,12 +33,12 @@ schema, built on the JVM.
 """
 from __future__ import annotations
 
-import calendar
 import datetime as _dt
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from pipeline_spark.functions.sqltext import sql_lit
 
 # above this the VALUES text gets parser-hostile (a 131k-position DV
 # frame would be ~15 MB of SQL); the RDD path ships pickled bytes
@@ -57,37 +57,12 @@ def _sql_value(v, typ: str = "") -> str:
     """Spell one Python scalar as SQL able to CAST losslessly to the
     column type ``typ``; raises ValueError for values we refuse to
     spell (the caller falls back to the RDD path)."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, int):
-        if -(2**63) <= v < 2**63:
-            return str(v)
-        raise ValueError("int out of BIGINT range")
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            s = "Infinity" if v > 0 else "-Infinity"
-            return f"CAST('{s}' AS DOUBLE)"
-        return repr(v) + "D"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(v, (bytes, bytearray)):
-        return "X'" + bytes(v).hex() + "'"
-    if isinstance(v, _dt.datetime):
-        # an aware datetime is an instant: the epoch microseconds
-        # TimestampType.toInternal computes.  A naive one coerces through
-        # the SYSTEM timezone in createDataFrame but a SQL literal through
-        # the SESSION one — refusing keeps the two paths bit-identical
-        if v.tzinfo is None or typ != "timestamp":
-            raise ValueError("only aware datetimes into timestamp columns")
-        micros = calendar.timegm(v.utctimetuple()) * 1_000_000 + v.microsecond
-        return f"timestamp_micros({micros})"
-    if isinstance(v, _dt.date):
-        return f"DATE'{v.isoformat()}'"
-    raise ValueError(f"unsupported VALUES type {type(v).__name__}")
+    # an aware datetime is an instant.  A naive one coerces through the
+    # SYSTEM timezone in createDataFrame, and its inferred column type
+    # follows spark.sql.timestampType — it keeps the RDD path
+    if isinstance(v, _dt.datetime) and (v.tzinfo is None or typ != "timestamp"):
+        raise ValueError("only aware datetimes into timestamp columns")
+    return sql_lit(v)
 
 
 def _split_ddl(schema: str) -> list[tuple[str, str]]:

@@ -12,8 +12,11 @@ construction path changes.
 
 from __future__ import annotations
 
+import datetime as _dt
 import math
 import re
+
+from pyspark.sql import types as _T
 
 _SIMPLE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -38,8 +41,9 @@ def sql_str(s: str) -> str:
 
 def sql_lit(v):
     """Spell a Python scalar as the SQL literal F.lit would produce:
-    same value AND same literal type, or raise ValueError for types the
-    caller should build via the Column API instead."""
+    same value AND same literal type (non-finite doubles and instants
+    fold to it: a CAST or ``timestamp_micros`` call over a literal), or
+    raise ValueError for values with no exact spelling."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -52,13 +56,35 @@ def sql_lit(v):
             return str(v)
         raise ValueError(f"sql_lit: int out of BIGINT range: {v}")
     if isinstance(v, float):
-        if not math.isfinite(v):
-            raise ValueError(f"sql_lit: non-finite double: {v}")
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return "CAST('Infinity' AS DOUBLE)" if v > 0 else (
+                "CAST('-Infinity' AS DOUBLE)"
+            )
         # repr round-trips doubles exactly; D keeps DoubleType (a bare
         # decimal would parse as DECIMAL)
         return repr(v) + "D"
     if isinstance(v, str):
         return sql_str(v)
+    if isinstance(v, (bytes, bytearray)):
+        return "X'" + bytes(v).hex() + "'"
+    if isinstance(v, _dt.datetime):
+        # F.lit ships a java.sql.Timestamp, which the JVM rebases through
+        # its zone's historical rules: before 1900 (local mean time) that
+        # instant can differ from the epoch micros below — refuse
+        if v.year < 1900:
+            raise ValueError(f"sql_lit: datetime before 1900: {v}")
+        if v.tzinfo is None:
+            from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+            if is_timestamp_ntz_preferred():
+                return f"TIMESTAMP_NTZ'{v.isoformat(sep=' ')}'"
+        # the epoch micros createDataFrame and F.lit both compute (a
+        # naive value reads in the SYSTEM zone, as theirs do)
+        return f"timestamp_micros({_T.TimestampType().toInternal(v)})"
+    if isinstance(v, _dt.date):
+        return f"DATE'{v.isoformat()}'"
     raise ValueError(f"sql_lit: unsupported literal type {type(v).__name__}")
 
 

@@ -689,8 +689,8 @@ def write_delta_native(
             # rows into fresh files, DV/column-mapping aware); untouched
             # files never move — all in THIS one commit
             rw_removes, rw_adds = _replace_where_rewrites(
-                spark, table, prev_meta, prev_adds, cm, replace_where,
-                commit_id, now_ms,
+                spark, table, (prev_adds, prev_meta, _proto, _v),
+                replace_where, commit_id, now_ms,
             )
             actions.extend({"remove": r} for r in rw_removes)
             adds = adds + rw_adds
@@ -1006,121 +1006,19 @@ def _pv_disproves(
 
 
 def _replace_where_rewrites(
-    spark, table: str, meta: dict, prev_adds: list[dict], cm: dict | None,
-    where: list[dict], commit_id: str, now_ms: int,
+    spark, table: str, state: tuple, where: list[dict], commit_id: str,
+    now_ms: int,
 ) -> tuple[list[dict], list[dict]]:
     """The delete-side of a replaceWhere overwrite: (remove actions for
-    every file the predicate's stats bounds admit, add dicts for the
-    survivor-row rewrites of partially-matching files).  Untouched files
-    are never listed — at 100 TB a partition reload removes that
+    the files holding a row the predicate matches, add dicts for their
+    survivor-row rewrites) — a copy-on-write DELETE planned by the
+    row-level planner, staged into the write's own commit.  Untouched
+    files are never listed — at 100 TB a partition reload removes that
     partition's files, not the table's."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    from pipeline_spark.sources.delta_native import (
-        _stats_may_match,
-        data_filter_condition,
-        read_files_with_dv,
-        stats_to_logical,
-        to_logical_df,
-        to_physical_df,
+    return _mutate_where(
+        spark, {"path": table, "where": where}, None,
+        state=state, staged_by=(commit_id, now_ms),
     )
-
-    part_cols = list(meta.get("partitionColumns") or [])
-    phys_part_cols = (
-        [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
-    )
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    read_fields = cm["phys_schema"].fields if cm else full.fields
-    fschema = StructType(
-        [f for f in read_fields if f.name not in phys_part_cols]
-    )
-    log_fschema = [f for f in full.fields if f.name not in part_cols]
-    types = {f.name: f.dataType for f in full.fields}
-    log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
-    if cm:
-        check_adds = [dict(a) for a in prev_adds]
-        stats_to_logical(check_adds, cm)
-    else:
-        check_adds = prev_adds
-    phys_of = cm["phys_of"] if cm else {}
-    part_set = set(part_cols)
-
-    def pv_disproves(add: dict) -> bool:
-        return _pv_disproves(add, where, part_set, phys_of)
-
-    candidates = [
-        a
-        for a, ca in zip(prev_adds, check_adds)
-        if _stats_may_match(ca, where, None) and not pv_disproves(a)
-    ]
-    cond = data_filter_condition(where)
-    removes: list[dict] = []
-    new_adds: list[dict] = []
-    groups: dict[tuple, list[dict]] = {}
-    for a in candidates:
-        key = tuple(sorted((a.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(a)
-    for i, (key, files) in enumerate(groups.items()):
-        dfc = read_files_with_dv(spark, table, fschema, files)
-        dfc = to_logical_df(dfc, cm, log_fschema)
-        pv = dict(key)
-        for c, v in pv.items():
-            lc = log_of.get(c, c)
-            dfc = dfc.withColumn(
-                lc,
-                F.lit(v).cast(types[lc]) if v is not None
-                else F.lit(None).cast(types[lc]),
-            )
-        survivors = dfc.where(~F.coalesce(cond, F.lit(False)))
-        out_dir = os.path.join(table, f"data-rw-{commit_id}", f"grp-{i:05d}")
-        to_physical_df(
-            survivors.select(*[f.name for f in log_fschema]), cm
-        ).write.parquet(out_dir)
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fullp = os.path.join(root, name)
-                new_adds.append({
-                    "path": urllib.parse.quote(
-                        os.path.relpath(fullp, table).replace(os.sep, "/"),
-                        safe="/=",
-                    ),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(fullp),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "__full_path__": fullp,
-                })
-        for a in files:
-            removes.append({
-                "path": a["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": a.get("partitionValues") or {},
-            })
-    if new_adds:
-        stats_map = _collect_file_stats(
-            spark, [a["__full_path__"] for a in new_adds]
-        )
-        pruned: list[dict] = []
-        for a in new_adds:
-            fullp = a.pop("__full_path__")
-            st = stats_map.get(fullp)
-            # a fully-replaced file leaves a 0-row survivor rewrite —
-            # drop it rather than committing empty data files
-            if st and json.loads(st).get("numRecords") == 0:
-                try:
-                    os.remove(fullp)
-                except OSError:
-                    pass
-                continue
-            if st:
-                a["stats"] = st
-            pruned.append(a)
-        new_adds = pruned
-    return removes, new_adds
 
 
 def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
@@ -1285,22 +1183,10 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
             bin_df = bin_df.drop(
                 "__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv"
             )
-        bin_df.coalesce(1).write.parquet(out_dir)
-        pv = dict(key)
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fullp = os.path.join(root, name)
-                rel = os.path.relpath(fullp, table)
-                adds.append({
-                    "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(fullp),
-                    "modificationTime": now_ms,
-                    "dataChange": False,
-                    "__full_path__": fullp,
-                })
+        adds += _write_files(
+            table, out_dir, bin_df.coalesce(1), dict(key), now_ms,
+            data_change=False,
+        )
         for a in files:
             removes.append({
                 "path": a["path"],
@@ -1309,11 +1195,7 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
                 "partitionValues": a.get("partitionValues") or {},
             })
 
-    stats_map = _collect_file_stats(spark, [a["__full_path__"] for a in adds])
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
+    _stamp_stats(spark, adds)
 
     rt_actions: list[dict] = []
     if rowtrack and adds:
@@ -1399,28 +1281,14 @@ def _zorder_compact(
             math.ceil(sum(int(a.get("size", 0)) for a in files) / target),
         )
         out_dir = os.path.join(table, data_dir, f"grp-{i:05d}")
-        (
+        adds += _write_files(
+            table, out_dir,
             df.withColumn("__z__", z)
             .repartitionByRange(nfiles, "__z__")
             .sortWithinPartitions("__z__")
-            .drop("__z__", *tmp_cols)
-            .write.parquet(out_dir)
+            .drop("__z__", *tmp_cols),
+            dict(key), now_ms, data_change=False,
         )
-        pv = dict(key)
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fullp = os.path.join(root, name)
-                rel = os.path.relpath(fullp, table)
-                adds.append({
-                    "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(fullp),
-                    "modificationTime": now_ms,
-                    "dataChange": False,
-                    "__full_path__": fullp,
-                })
         for a in files:
             removes.append({
                 "path": a["path"],
@@ -1429,11 +1297,7 @@ def _zorder_compact(
                 "partitionValues": a.get("partitionValues") or {},
             })
 
-    stats_map = _collect_file_stats(spark, [a["__full_path__"] for a in adds])
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
+    _stamp_stats(spark, adds)
     actions: list[dict] = (
         [{"remove": r} for r in removes]
         + [{"add": a} for a in adds]
@@ -1454,29 +1318,18 @@ def _zorder_compact(
 
 
 def delete_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
-    """Row-level DELETE WHERE, copy-on-write (the jar-free Delta shape).
-
-    ``method: mor`` (or ``deletionVectors: true``) switches to
-    merge-on-read deletion vectors (_dv_delete_where): matched row
-    positions serialize into roaring-bitmap DV files and the commit
-    re-adds the SAME data files with a ``deletionVector`` descriptor —
-    zero data-file rewrite, the right shape when a takedown touches a
-    few rows in many large files.
-
-    Copy-on-write path — stats-guided: only files whose ``add.stats``
-    ADMIT a match are candidates; each candidate partition group is
-    re-read, rows matching the predicate drop (predicate-NULL rows are
-    KEPT — they did not match), and survivors rewrite as new files in
-    one remove+add commit with ``dataChange: true``.  Untouched files
-    never move — at 100 TB a targeted takedown rewrites the handful of
-    files the bounds can't
-    exclude, not the table.  ``where`` = the readers' dataFilter shape.
+    """Row-level DELETE WHERE, copy-on-write (the jar-free Delta shape):
+    only files whose ``add.stats`` ADMIT a match are probed, only files
+    holding a match rewrite (predicate-NULL rows are KEPT — they did not
+    match), one remove+add commit with ``dataChange: true``.  At 100 TB a
+    targeted takedown rewrites the handful of files holding its rows,
+    not the table.  ``method: mor`` (or ``deletionVectors: true``)
+    writes deletion vectors instead — zero data-file rewrite, the right
+    shape when a takedown touches a few rows in many large files.
+    ``where`` = the readers' dataFilter shape.  Planned by
+    sinks/rowlevel.py; see :func:`_mutate_where`.
     """
-    if p.get("deletionVectors") or str(p.get("method", "")).lower() in (
-        "mor", "dv", "deletion-vectors",
-    ):
-        return _dv_delete_where(spark, p)
-    return _cow_rewrite_where(spark, p, set_exprs=None)
+    return _mutate_where(spark, p, None)
 
 
 def _refuse_append_only(meta: dict, op: str) -> None:
@@ -1793,231 +1646,344 @@ def _commit_actions_retry(
         version = int(latest) + 1
 
 
-def _dv_delete_where(spark, p: dict[str, Any]) -> dict[str, int]:
-    return _dv_mutate_where(spark, p, set_exprs=None)
+def _mutate_where(
+    spark, p: dict[str, Any], set_exprs: dict[str, str] | None, *,
+    state: tuple | None = None, staged_by: tuple[str, int] | None = None,
+):
+    """The Delta adapter of the row-level planner (sinks/rowlevel.py):
+    the table state, a DV-aware live-row reader with partition literals,
+    per-partition staging, change-data staging and the two commits.
 
+    Copy-on-write (the default) rewrites only the files holding a match
+    in one remove+add commit.  ``method: mor`` (or ``deletionVectors:
+    true``) writes merge-on-read deletion vectors instead: each touched
+    file's matched positions, unioned with its existing DV, serialize to
+    a roaring-bitmap DV file (on the driver when the candidates' stats
+    bound the positions under the driver cap, else executor-side, one
+    applyInPandas group per file), and the commit re-adds the SAME data
+    paths with ``deletionVector`` descriptors plus the deletionVectors
+    protocol feature.  A DV DELETE moves zero data bytes; a DV UPDATE
+    also appends the matched rows, updated, as new files (delta-spark's
+    own DV-update shape).
 
-def _dv_mutate_where(
-    spark, p: dict[str, Any], set_exprs: dict[str, str] | None
-) -> dict[str, int]:
-    """Merge-on-read DELETE / UPDATE via deletion vectors.
+    ``where`` and ``set`` are logical names; files, stats and
+    partitionValues physical — translated at the boundaries.
 
-    Matched (file, row-index) pairs come from ONE stats-pruned scan with
-    ``_metadata.row_index``; each touched file's positions serialize to
-    a roaring-bitmap DV file EXECUTOR-SIDE (one applyInPandas group per
-    file — never a driver materialization of positions), unioned with
-    the file's existing DV when re-mutating.  The commit re-adds the
-    same data paths with ``deletionVector`` descriptors and upgrades the
-    protocol to the deletionVectors reader/writer feature.  DELETE moves
-    ZERO data bytes; UPDATE additionally appends ONLY the rewritten
-    matched rows as new files (delta-spark's own DV-update shape) —
-    updating 100 rows across a 100 TB table moves 100 rows, not the
-    candidate files.
+    ``staged_by=(commit_id, now_ms)`` plans a copy-on-write DELETE over
+    the snapshot ``state=(adds, meta, protocol, version)`` without
+    committing it and returns ``(remove bodies, survivor adds)``: the
+    delete side of a replaceWhere overwrite, which lands in the write's
+    own commit.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import LongType, StructField, StructType
 
+    from pipeline_spark.functions.localframe import local_frame
+    from pipeline_spark.functions.sqltext import qi
+    from pipeline_spark.sinks import rowlevel
     from pipeline_spark.sources.delta_native import (
         _column_mapping,
         _stats_may_match,
-        data_filter_condition,
+        partition_literal_sql,
+        read_files_with_dv,
         stats_to_logical,
         to_logical_df,
         to_physical_df,
     )
 
-    op_name = "update" if set_exprs else "delete"
+    mor = bool(p.get("deletionVectors")) or str(p.get("method", "")).lower() in (
+        "mor", "dv", "deletion-vectors",
+    )
+    op = "update" if set_exprs else "delete"
     table = p.get("path") or p.get("table")
     if not table:
-        raise ValueError(f"delta {op_name}: 'path' is required")
-    where = p.get("where")
-    if not where:
-        raise ValueError(f"delta {op_name}: 'where' predicate list is required")
-    if isinstance(where, dict):
-        where = [where]
-    prev_adds, meta, proto, prev_version, _txns = replay_state(table)
-    _refuse_append_only(meta, op_name)
+        raise ValueError(f"delta {op}: 'path' is required")
+    where = rowlevel.where_of("delta", op, p)
+    if state is None:
+        state = replay_state(table)[:4]
+        _refuse_append_only(state[1], op)
+    prev_adds, meta, proto, prev_version = state
     cm = _column_mapping(meta)
-    # where-predicates, set-expressions and cdc rows live in LOGICAL
-    # names; files, stats and partitionValues in PHYSICAL — translate at
-    # the boundaries.  Stats translate on COPIES: the DV path re-adds the
-    # original actions to the log, which must keep physical stats keys.
-    if cm:
-        check_adds = [dict(a) for a in prev_adds]
-        stats_to_logical(check_adds, cm)
-    else:
-        check_adds = prev_adds
     log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
     part_cols = list(meta.get("partitionColumns") or [])
-    phys_part_cols = (
-        [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
-    )
+    part_set = set(part_cols)
+    phys_part = {cm["phys_of"].get(c, c) for c in part_cols} if cm else part_set
     full = StructType.fromJson(json.loads(meta["schemaString"]))
     read_fields = cm["phys_schema"].fields if cm else full.fields
-    fschema = StructType(
-        [f for f in read_fields if f.name not in phys_part_cols]
-    )
+    fschema = StructType([f for f in read_fields if f.name not in phys_part])
     log_fschema = [f for f in full.fields if f.name not in part_cols]
     types = {f.name: f.dataType for f in full.fields}
-    cdf = _cdf_enabled(meta)
+    # row tracking (PROTOCOL.md): a staged row (a rewrite, or a DV
+    # update's re-appended row) PRESERVES its identity by materializing
+    # it into the table's configured columns
+    conf = meta.get("configuration") or {}
+    rt_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
+    rt_cv = conf.get("delta.rowTracking.materializedRowCommitVersionColumnName")
+    rowtrack = (
+        "rowTracking" in ((proto or {}).get("writerFeatures") or [])
+        and rt_id and rt_cv
+    )
+    cdf = _cdf_enabled(meta) and staged_by is None
+    commit_id, now_ms = staged_by or (
+        uuid.uuid4().hex, int(time.time() * 1000)
+    )
+    data_dir = f"data-{'rw' if staged_by else op}-{commit_id}"
     cdc_actions: list[dict] = []
-    if set_exprs:
-        unknown = [c for c in set_exprs if c not in types]
-        if unknown:
-            raise ValueError(
-                f"delta update: set targets unknown columns {unknown}"
-            )
-        bad_parts = [c for c in set_exprs if c in part_cols]
-        if bad_parts:
-            raise ValueError(
-                f"delta update: set cannot target partition columns "
-                f"{bad_parts} — rows would stay under their old "
-                "partitionValues; rewrite via overwrite instead"
-            )
 
-    empty = {f"{op_name}d_rows": 0, "dv_files": 0}
-    candidates = [
-        a
-        for a, ca in zip(prev_adds, check_adds)
-        if _stats_may_match(ca, where, None)
-    ]
-    if not candidates:
-        return empty
-    by_path = {}
-    for a in candidates:
-        ap = os.path.abspath(
+    def path_of(a: dict) -> str:
+        return os.path.abspath(
             os.path.join(table, urllib.parse.unquote(a["path"]))
         )
-        by_path[ap] = a
 
-    cond = data_filter_condition(where)
-    commit_id = uuid.uuid4().hex
-    now_ms = int(time.time() * 1000)
-    # one scan over candidate groups (partition literals attached), rows
-    # reduced to (file, physical row index) before any aggregation; for
-    # UPDATE the same matched scan also writes the rewritten rows (only
-    # the matched ones) as new files per partition group
-    groups: dict[tuple, list[dict]] = {}
-    for ap, a in by_path.items():
-        key = tuple(sorted((a.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(a)
-    frames = []
-    new_adds: list[dict] = []
-    cached: list = []
-    # hoisted out of the group loop (r16): the Column tree is reusable
-    # across frames, rebuilding it per group was pure py4j chatter
-    cond_safe = F.coalesce(cond, F.lit(False))
-    from pipeline_spark.functions.sqltext import atomic_ddl, qi, sql_lit
+    def may_match(a: dict) -> bool:
+        # partition values are exact (footer stats never carry them);
+        # stats keys are physical, `where` is logical
+        if _pv_disproves(a, where, part_set, cm["phys_of"] if cm else {}):
+            return False
+        if cm:
+            a = dict(a)
+            stats_to_logical([a], cm)
+        return _stats_may_match(a, where, None)
 
-    for i, (key, gadds) in enumerate(groups.items()):
-        # DV-aware matched scan: rows a file's existing deletion vector
-        # already removed must not re-match (they would over-count,
-        # emit phantom cdc rows, and — on UPDATE — be resurrected as
-        # rewritten copies)
-        from pipeline_spark.sources.delta_native import read_files_with_dv
+    def groups(files: list[dict]) -> list[list[dict]]:
+        by_pv: dict[tuple, list[dict]] = {}
+        for a in files:
+            key = tuple(sorted((a.get("partitionValues") or {}).items()))
+            by_pv.setdefault(key, []).append(a)
+        return list(by_pv.values())
 
-        df = read_files_with_dv(spark, table, fschema, gadds, with_meta=True)
-        df = to_logical_df(df, cm, log_fschema, keep=("__dv_fp", "__dv_ri"))
-        # partition literals attach as ONE projection (SQL text) when
-        # spellable; the Column fallback keeps exact semantics otherwise
-        lit_texts: list[str] | None = []
-        for c, v in dict(key).items():
-            lc = log_of.get(c, c)
-            ddl = atomic_ddl(types[lc])
-            if lit_texts is not None and ddl is not None:
-                try:
-                    lit_texts.append(
-                        f"CAST({sql_lit(v)} AS {ddl}) AS {qi(lc)}"
-                    )
-                    continue
-                except ValueError:
-                    pass
-            lit_texts = None
-            break
-        if lit_texts is not None:
-            if lit_texts:
-                df = df.selectExpr("*", *lit_texts)
-        else:
-            for c, v in dict(key).items():
-                lc = log_of.get(c, c)
-                df = df.withColumn(
-                    lc,
-                    F.lit(v).cast(types[lc]) if v is not None
-                    else F.lit(None).cast(types[lc]),
-                )
-        matched_df = df.where(cond_safe)
-        if cdf or set_exprs:
-            # the matched scan feeds up to three consumers (cdc staging,
-            # the update rewrite, the DV position collect) — cache it so
-            # candidate files + DV anti-join run once, not three times
-            matched_df = matched_df.persist()
-            cached.append(matched_df)
-        if cdf:
-            base_cols = [f.name for f in log_fschema]
-            pre = matched_df.select(*base_cols)
-            if set_exprs is None:
-                changes = pre.withColumn("_change_type", F.lit("delete"))
-            else:
-                post = matched_df
-                for c, expr in set_exprs.items():
-                    post = post.withColumn(
-                        c, F.expr(str(expr)).cast(types[c])
-                    )
-                changes = pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.select(*base_cols).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            cdc_actions.extend(
-                _stage_cdc(
-                    table, commit_id, i, to_physical_df(changes, cm),
-                    dict(key), now_ms,
-                )
-            )
-        frames.append(
-            matched_df.selectExpr("__dv_fp AS fp", "__dv_ri AS ri")
+    def read(files: list[dict], lineage: bool):
+        lineage = bool(lineage and rowtrack)
+        rt_cols = [rt_id, rt_cv] if lineage else []
+        sch = StructType(
+            list(fschema.fields)
+            + [StructField(c, LongType(), True) for c in rt_cols]
         )
-        if set_exprs:
-            upd = matched_df
-            for c, expr in set_exprs.items():
-                upd = upd.withColumn(c, F.expr(str(expr)).cast(types[c]))
-            out_dir = os.path.join(
-                table, f"data-update-{commit_id}", f"grp-{i:05d}"
+        parts = []
+        for gfiles in groups(files):
+            # DV-aware: rows a file's deletion vector already removed
+            # neither match nor come back in a rewrite
+            df = read_files_with_dv(spark, table, sch, gfiles, with_meta=True)
+            df = to_logical_df(
+                df, cm, log_fschema, keep=(*rt_cols, "__dv_fp", "__dv_ri")
             )
-            to_physical_df(
-                upd.select(*[f.name for f in log_fschema]), cm
-            ).write.parquet(out_dir)
-            pv = dict(key)
-            for root, _dirs, names in os.walk(out_dir):
-                for name in sorted(names):
-                    if not name.endswith(".parquet"):
-                        continue
-                    fullp = os.path.join(root, name)
-                    rel = os.path.relpath(fullp, table)
-                    new_adds.append({
-                        "path": urllib.parse.quote(
-                            rel.replace(os.sep, "/"), safe="/="
-                        ),
-                        "partitionValues": pv,
-                        "size": os.path.getsize(fullp),
-                        "modificationTime": now_ms,
-                        "dataChange": True,
-                        "__full_path__": fullp,
-                    })
-    matches = frames[0]
-    for x in frames[1:]:
-        matches = matches.unionByName(x)
+            cols = [qi(f.name) for f in log_fschema]
+            if lineage:
+                rid = local_frame(
+                    spark,
+                    [
+                        (path_of(a), int(a.get("baseRowId") or 0),
+                         int(a.get("defaultRowCommitVersion") or 0))
+                        for a in gfiles
+                    ],
+                    "__rt_fp string, __rt_base long, __rt_dcv long",
+                )
+                df = df.join(
+                    F.broadcast(rid), df["__dv_fp"] == rid["__rt_fp"], "left"
+                )
+                cols += [
+                    f"coalesce({qi(rt_id)}, (__rt_base + __dv_ri)) AS {qi(rt_id)}",
+                    f"coalesce({qi(rt_cv)}, __rt_dcv) AS {qi(rt_cv)}",
+                ]
+            pv = gfiles[0].get("partitionValues") or {}
+            parts.append(df.selectExpr(
+                *cols, "__dv_fp AS __fp__", "__dv_ri AS __pos__",
+                *partition_literal_sql(pv.items(), types, log_of),
+            ))
+        out = parts[0]
+        for x in parts[1:]:
+            out = out.unionByName(x)
+        return out
+
+    def stage(i: int, files: list[dict], df) -> list[dict]:
+        return _write_files(
+            table, os.path.join(table, data_dir, f"grp-{i:05d}"),
+            to_physical_df(df, cm),
+            files[0].get("partitionValues") or {}, now_ms,
+        )
+
+    def changes(i: int, files: list[dict], pre, post) -> None:
+        base = [qi(f.name) for f in log_fschema]
+        if post is None:
+            rows = pre.selectExpr(*base, "'delete' AS _change_type")
+        else:
+            rows = pre.selectExpr(
+                *base, "'update_preimage' AS _change_type"
+            ).unionByName(post.selectExpr(
+                *base, "'update_postimage' AS _change_type"
+            ))
+        cdc_actions.extend(_stage_cdc(
+            table, commit_id, i, to_physical_df(rows, cm),
+            files[0].get("partitionValues") or {}, now_ms,
+        ))
+
+    def commit(actions: list[dict], params: dict) -> None:
+        actions.extend(cdc_actions)
+        actions.append({"commitInfo": {
+            "timestamp": now_ms, "operation": op.upper(),
+            "operationParameters": {"predicate": json.dumps(where), **params},
+        }})
+        _commit_actions_retry(
+            table, (prev_version or 0) + 1, actions,
+            read_where=where, cm=cm, part_cols=part_cols,
+            checkpoint_interval=int(p.get("checkpointInterval", 0) or 0),
+        )
+
+    def removed(a: dict) -> dict:
+        return {"remove": {
+            "path": a["path"], "deletionTimestamp": now_ms,
+            "dataChange": True,
+            "partitionValues": a.get("partitionValues") or {},
+        }}
+
+    def commit_rewrite(plan) -> dict:
+        _stamp_stats(spark, plan.staged)
+        commit(
+            [removed(a) for a in plan.files]
+            + [{"add": a} for a in plan.staged], {},
+        )
+        return {f"{op}d_rows": plan.rows, "rewritten_files": len(plan.files)}
+
+    def commit_dvs(plan) -> dict:
+        built = _build_dvs(table, plan)
+        if not built:
+            # the stats over-admitted and nothing matched: drop the
+            # staged update and change files, commit nothing
+            for a in plan.staged:
+                _remove_quiet(a["__full_path__"])
+            for act in cdc_actions:
+                _remove_quiet(os.path.join(
+                    table, urllib.parse.unquote(act["cdc"]["path"])
+                ))
+            return None
+        _stamp_stats(spark, plan.staged)
+        actions = []
+        # DV tables need the reader/writer table feature; a column-mapped
+        # table upgrading to features-protocol must also LIST
+        # columnMapping or feature-aware readers would refuse it
+        need = {"deletionVectors"} | ({"columnMapping"} if cm else set())
+        rfeats = set((proto or {}).get("readerFeatures") or [])
+        wfeats = set((proto or {}).get("writerFeatures") or [])
+        if not need <= rfeats:
+            rfeats |= need
+            actions.append({"protocol": {
+                "minReaderVersion": 3, "minWriterVersion": 7,
+                "readerFeatures": sorted(rfeats),
+                "writerFeatures": sorted(wfeats | rfeats),
+            }})
+        by_path = {path_of(a): a for a in plan.files}
+        n = 0
+        for row in built:
+            # __fp__ derives from _metadata.file_path, which URI-encodes
+            # special chars — fall back to the unquoted form
+            a = by_path.get(row["fp"]) or by_path[
+                urllib.parse.unquote(row["fp"])
+            ]
+            n += int(row["n_new"])
+            new_add = {k: v for k, v in a.items() if k != "deletionVector"}
+            new_add["deletionVector"] = json.loads(row["desc"])
+            new_add["dataChange"] = True
+            new_add["modificationTime"] = a.get("modificationTime", now_ms)
+            actions += [removed(a), {"add": new_add}]
+        actions += [{"add": a} for a in plan.staged]
+        commit(actions, {"method": "merge-on-read"})
+        result = {f"{op}d_rows": n, "dv_files": len(built)}
+        if set_exprs:
+            result["new_files"] = len(plan.staged)
+        return result
+
+    def stage_rewrite(plan) -> tuple[list[dict], list[dict]]:
+        # a fully-replaced file leaves a 0-row survivor rewrite — drop it
+        # rather than commit an empty data file
+        _stamp_stats(spark, plan.staged)
+        adds = []
+        for a in plan.staged:
+            if json.loads(a.get("stats") or "{}").get("numRecords") == 0:
+                _remove_quiet(path_of(a))
+            else:
+                adds.append(a)
+        return [removed(a)["remove"] for a in plan.files], adds
+
+    t = rowlevel.Table(
+        fmt="delta", files=prev_adds, columns=[f.name for f in log_fschema],
+        may_match=may_match, path_of=path_of, read=read, stage=stage,
+        groups=groups, part_cols=part_cols, types=types,
+        lineage=(rt_id, rt_cv, (prev_version or 0) + 1) if rowtrack else None,
+        changes=changes if cdf else None,
+    )
+    if staged_by:
+        return rowlevel.mutate(
+            t, where, None, mor=False, commit=stage_rewrite,
+        ) or ([], [])
+    out = rowlevel.mutate(
+        t, where, set_exprs, mor=mor,
+        commit=commit_dvs if mor else commit_rewrite,
+    )
+    if out is None:
+        return {f"{op}d_rows": 0, "dv_files" if mor else "rewritten_files": 0}
+    return out
+
+
+def _write_files(
+    table: str, out_dir: str, df, pv: dict, now_ms: int,
+    data_change: bool = True,
+) -> list[dict]:
+    """Write ``df`` as parquet under ``out_dir``; one add action body per
+    file, carrying ``__full_path__`` for the stats pass (_stamp_stats)."""
+    df.write.parquet(out_dir)
+    adds = []
+    for root, _dirs, names in os.walk(out_dir):
+        for name in sorted(names):
+            if not name.endswith(".parquet"):
+                continue
+            fullp = os.path.join(root, name)
+            rel = os.path.relpath(fullp, table)
+            adds.append({
+                "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
+                "partitionValues": pv,
+                "size": os.path.getsize(fullp),
+                "modificationTime": now_ms,
+                "dataChange": data_change,
+                "__full_path__": fullp,
+            })
+    return adds
+
+
+def _stamp_stats(spark, adds: list[dict]) -> None:
+    """Footer stats onto staged adds (popping their ``__full_path__``)."""
+    stats_map = _collect_file_stats(spark, [a["__full_path__"] for a in adds])
+    for a in adds:
+        st = stats_map.get(a.pop("__full_path__"))
+        if st:
+            a["stats"] = st
+
+
+def _remove_quiet(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
+def _build_dvs(table: str, plan) -> list[dict]:
+    """One DV per touched file from the plan's matched positions, merged
+    with the file's prior DV: ``[{fp, desc (json), n_new}]``.
+
+    Strategy gate (guide §3/§5): the stats already bound the matched-row
+    count (sum of candidate numRecords).  Small mutations collect the
+    positions and build DVs on the driver — no groupBy shuffle, no
+    Python-worker stage; large or unknown keep the distributed build
+    (positions never materialize on the driver)."""
+    from pipeline_spark.functions.dvframe import _driver_max
 
     tbl_abs = os.path.abspath(table)
     old_dvs = {
-        ap: json.dumps(a["deletionVector"])
-        for ap, a in by_path.items()
-        if a.get("deletionVector")
+        os.path.abspath(os.path.join(table, urllib.parse.unquote(a["path"]))):
+            json.dumps(a["deletionVector"])
+        for a in plan.files if a.get("deletionVector")
     }
 
-    def _merge_write_dv(fp, new_positions):
+    def merge_write(fp, new_positions):
         # runs identically on the driver or inside an applyInPandas
         # group: merge with the file's prior DV, write the blob, return
         # the descriptor json
@@ -2048,18 +2014,12 @@ def _dv_mutate_where(
         import pandas as _pd
 
         fp = pdf["fp"].iloc[0]
-        desc, n_new = _merge_write_dv(fp, pdf["ri"])
+        desc, n_new = merge_write(fp, pdf["ri"])
         return _pd.DataFrame({"fp": [fp], "desc": [desc], "n_new": [n_new]})
 
-    # strategy gate (r15, guide §3/§5): the stats already bound the
-    # matched-row count (sum of candidate numRecords).  Small mutations
-    # collect (file, position) pairs and build DVs on the driver — no
-    # groupBy shuffle, no Python-worker stage; large or unknown keep the
-    # distributed build (positions never materialize on the driver).
-    from pipeline_spark.functions.dvframe import _driver_max
-
+    matches = plan.positions.selectExpr("__fp__ AS fp", "__pos__ AS ri")
     bound: int | None = 0
-    for a in candidates:
+    for a in plan.files:
         try:
             bound += int(json.loads(a.get("stats") or "null")["numRecords"])
         except (TypeError, KeyError, ValueError):
@@ -2071,100 +2031,12 @@ def _dv_mutate_where(
             by_fp.setdefault(r["fp"], []).append(int(r["ri"]))
         built = []
         for fp, ris in by_fp.items():
-            desc, n_new = _merge_write_dv(fp, ris)
+            desc, n_new = merge_write(fp, ris)
             built.append({"fp": fp, "desc": desc, "n_new": n_new})
-    else:
-        built = matches.groupBy("fp").applyInPandas(
-            build_dv, schema="fp string, desc string, n_new long"
-        ).collect()  # one row PER TOUCHED FILE — metadata scale
-    for c in cached:
-        c.unpersist()
-    if not built:
-        # drop any staged-but-unneeded update and cdc files (stats
-        # over-admitted and nothing actually matched — no commit happens)
-        for a in new_adds:
-            try:
-                os.remove(a["__full_path__"])
-            except OSError:
-                pass
-        for act in cdc_actions:
-            try:
-                os.remove(
-                    os.path.join(
-                        table, urllib.parse.unquote(act["cdc"]["path"])
-                    )
-                )
-            except OSError:
-                pass
-        return empty
-
-    if new_adds:
-        stats_map = _collect_file_stats(
-            spark, [a["__full_path__"] for a in new_adds]
-        )
-        for a in new_adds:
-            st = stats_map.get(a.pop("__full_path__"))
-            if st:
-                a["stats"] = st
-
-    actions = []
-    # protocol upgrade: DV tables need the reader/writer table feature;
-    # a column-mapped table upgrading to features-protocol must also
-    # LIST columnMapping or feature-aware readers would refuse it
-    need = {"deletionVectors"} | ({"columnMapping"} if cm else set())
-    rfeats = set((proto or {}).get("readerFeatures") or [])
-    wfeats = set((proto or {}).get("writerFeatures") or [])
-    if not need <= rfeats:
-        rfeats |= need
-        actions.append({
-            "protocol": {
-                "minReaderVersion": 3, "minWriterVersion": 7,
-                "readerFeatures": sorted(rfeats),
-                "writerFeatures": sorted(wfeats | rfeats),
-            }
-        })
-    deleted = 0
-    for row in built:
-        # __dv_fp derives from _metadata.file_path, which URI-encodes
-        # special chars (a space in a hive partition value) — fall back
-        # to the unquoted form against the raw-path index
-        a = by_path.get(row["fp"]) or by_path[
-            urllib.parse.unquote(row["fp"])
-        ]
-        deleted += int(row["n_new"])
-        actions.append({"remove": {
-            "path": a["path"], "deletionTimestamp": now_ms,
-            "dataChange": True,
-            "partitionValues": a.get("partitionValues") or {},
-        }})
-        new_add = {
-            k: v for k, v in a.items() if k != "deletionVector"
-        }
-        new_add["deletionVector"] = json.loads(row["desc"])
-        new_add["dataChange"] = True
-        new_add["modificationTime"] = a.get("modificationTime", now_ms)
-        actions.append({"add": new_add})
-    for a in new_adds:
-        actions.append({"add": a})
-    actions.extend(cdc_actions)
-    actions.append({
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": op_name.upper(),
-            "operationParameters": {
-                "predicate": json.dumps(where), "method": "merge-on-read",
-            },
-        }
-    })
-    _commit_actions_retry(
-        table, (prev_version or 0) + 1, actions,
-        read_where=where, cm=cm, part_cols=part_cols,
-        checkpoint_interval=int(p.get("checkpointInterval", 0) or 0),
-    )
-    result = {f"{op_name}d_rows": deleted, "dv_files": len(built)}
-    if set_exprs:
-        result["new_files"] = len(new_adds)
-    return result
+        return built
+    return matches.groupBy("fp").applyInPandas(
+        build_dv, schema="fp string, desc string, n_new long"
+    ).collect()  # one row PER TOUCHED FILE — metadata scale
 
 
 def update_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
@@ -2172,14 +2044,9 @@ def update_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
     candidate selection as DELETE.  ``set`` maps column name → Spark SQL
     expression (evaluated against the pre-update row); non-matching rows
     pass through byte-identical semantics."""
-    set_exprs = p.get("set")
-    if not set_exprs:
-        raise ValueError("delta update: 'set' {column: expression} is required")
-    if p.get("deletionVectors") or str(p.get("method", "")).lower() in (
-        "mor", "dv", "deletion-vectors",
-    ):
-        return _dv_mutate_where(spark, p, set_exprs=dict(set_exprs))
-    return _cow_rewrite_where(spark, p, set_exprs=dict(set_exprs))
+    from pipeline_spark.sinks import rowlevel
+
+    return _mutate_where(spark, p, rowlevel.set_of("delta", p))
 
 
 def _dv_merge(
@@ -3167,282 +3034,6 @@ def _stage_cdc(
                 "dataChange": False,
             }})
     return actions
-
-
-def _cow_rewrite_where(
-    spark, p: dict[str, Any], set_exprs: dict[str, str] | None
-) -> dict[str, int]:
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    from pipeline_spark.sources.delta_native import (
-        _column_mapping,
-        _stats_may_match,
-        data_filter_condition,
-        stats_to_logical,
-        to_logical_df,
-        to_physical_df,
-    )
-
-    op_name = "update" if set_exprs else "delete"
-    table = p.get("path") or p.get("table")
-    if not table:
-        raise ValueError(f"delta {op_name}: 'path' is required")
-    where = p.get("where")
-    if not where:
-        raise ValueError(f"delta {op_name}: 'where' predicate list is required")
-    if isinstance(where, dict):
-        where = [where]
-    prev_adds, meta, _proto, prev_version, _txns = replay_state(table)
-    _refuse_append_only(meta, op_name)
-    cm = _column_mapping(meta)
-    log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
-    part_cols = list(meta.get("partitionColumns") or [])
-    phys_part_cols = (
-        [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
-    )
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    read_fields = cm["phys_schema"].fields if cm else full.fields
-    fschema = StructType(
-        [f for f in read_fields if f.name not in phys_part_cols]
-    )
-    # row tracking (PROTOCOL.md): the rewrite PRESERVES each surviving
-    # row's identity by materializing it into the table's configured
-    # columns — updated rows keep their id and bump the commit version
-    conf_rt = meta.get("configuration") or {}
-    rt_mat_id = conf_rt.get("delta.rowTracking.materializedRowIdColumnName")
-    rt_mat_cv = conf_rt.get(
-        "delta.rowTracking.materializedRowCommitVersionColumnName"
-    )
-    rowtrack = (
-        "rowTracking" in (_proto.get("writerFeatures") or [])
-        and rt_mat_id and rt_mat_cv
-    )
-    if rowtrack:
-        from pyspark.sql.types import LongType, StructField
-
-        fschema = StructType(
-            list(fschema.fields)
-            + [StructField(c, LongType(), True)
-               for c in (rt_mat_id, rt_mat_cv)]
-        )
-    log_fschema = [f for f in full.fields if f.name not in part_cols]
-    types = {f.name: f.dataType for f in full.fields}
-    cdf = _cdf_enabled(meta)
-    cdc_actions: list[dict] = []
-
-    # stats translate on copies — where-keys are logical, log stats
-    # stay physical
-    if cm:
-        check_adds = [dict(a) for a in prev_adds]
-        stats_to_logical(check_adds, cm)
-    else:
-        check_adds = prev_adds
-    candidates = [
-        a
-        for a, ca in zip(prev_adds, check_adds)
-        if _stats_may_match(ca, where, None)
-    ]
-    if not candidates:
-        return {f"{op_name}d_rows": 0, "rewritten_files": 0}
-
-    groups: dict[tuple, list[dict]] = {}
-    for a in candidates:
-        key = tuple(sorted((a.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(a)
-
-    cond = data_filter_condition(where)
-    commit_id = uuid.uuid4().hex
-    data_dir = f"data-{op_name}-{commit_id}"
-    now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
-    removes: list[dict] = []
-    deleted = 0
-    for i, (key, files) in enumerate(groups.items()):
-        # DV-aware re-read: a candidate carrying a deletion vector must
-        # not have its deleted rows matched or resurrected by the rewrite
-        from pipeline_spark.sources.delta_native import read_files_with_dv
-
-        df = read_files_with_dv(
-            spark, table, fschema, files, with_meta=bool(rowtrack)
-        )
-        rt_keep = (
-            (rt_mat_id, rt_mat_cv, "__dv_fp", "__dv_ri") if rowtrack else ()
-        )
-        df = to_logical_df(df, cm, log_fschema, keep=rt_keep)
-        if rowtrack:
-            from pipeline_spark.functions.localframe import local_frame
-
-            rid = local_frame(
-                spark,
-                [
-                    (
-                        os.path.abspath(os.path.join(
-                            table, urllib.parse.unquote(a["path"])
-                        )),
-                        int(a.get("baseRowId") or 0),
-                        int(a.get("defaultRowCommitVersion") or 0),
-                    )
-                    for a in files
-                ],
-                "__rt_fp string, __rt_base long, __rt_dcv long",
-            )
-            # one projection (r16): same optimized plan as the
-            # withColumn/withColumn/drop chain after CollapseProject
-            from pipeline_spark.functions.sqltext import qi as _qi
-
-            helpers = {
-                "__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv"
-            }
-            df = df.join(
-                F.broadcast(rid), df["__dv_fp"] == rid["__rt_fp"], "left"
-            ).selectExpr(*[
-                f"coalesce({_qi(c)}, (__rt_base + __dv_ri)) AS {_qi(c)}"
-                if c == rt_mat_id
-                else f"coalesce({_qi(c)}, __rt_dcv) AS {_qi(c)}"
-                if c == rt_mat_cv
-                else _qi(c)
-                for c in (
-                    [f.name for f in log_fschema] + list(rt_keep)
-                )
-                if c not in helpers
-            ])
-        pv = dict(key)
-        from pipeline_spark.functions.sqltext import atomic_ddl, qi, sql_lit
-
-        lit_texts: list[str] | None = []
-        for c, v in pv.items():
-            lc = log_of.get(c, c)
-            ddl = atomic_ddl(types[lc])
-            if lit_texts is not None and ddl is not None:
-                try:
-                    lit_texts.append(
-                        f"CAST({sql_lit(v)} AS {ddl}) AS {qi(lc)}"
-                    )
-                    continue
-                except ValueError:
-                    pass
-            lit_texts = None
-            break
-        if lit_texts is not None:
-            if lit_texts:
-                df = df.selectExpr("*", *lit_texts)
-        else:
-            for c, v in pv.items():
-                lc = log_of.get(c, c)
-                df = df.withColumn(
-                    lc,
-                    F.lit(v).cast(types[lc]) if v is not None
-                    else F.lit(None).cast(types[lc]),
-                )
-        n_match = df.where(cond).count()
-        if n_match == 0:
-            continue  # bounds admitted a match the data doesn't contain
-        deleted += n_match
-        matched = F.coalesce(cond, F.lit(False))
-        if cdf:
-            base_cols = [f.name for f in log_fschema]
-            pre = df.where(matched).select(*base_cols)
-            if set_exprs is None:
-                changes = pre.withColumn("_change_type", F.lit("delete"))
-            else:
-                post = pre
-                for c, expr in set_exprs.items():
-                    post = post.withColumn(c, F.expr(str(expr)).cast(types[c]))
-                changes = pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.select(*base_cols).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            cdc_actions.extend(
-                _stage_cdc(
-                    table, commit_id, i, to_physical_df(changes, cm),
-                    dict(key), now_ms,
-                )
-            )
-        if set_exprs is None:
-            out = df.where(~matched)
-        else:
-            unknown = [c for c in set_exprs if c not in df.columns]
-            if unknown:
-                raise ValueError(f"delta update: set targets unknown columns {unknown}")
-            parts = [c for c in set_exprs if c in part_cols]
-            if parts:
-                raise ValueError(
-                    f"delta update: set cannot target partition columns "
-                    f"{parts} — rows would stay under their old "
-                    "partitionValues; rewrite via overwrite instead"
-                )
-            out = df
-            for c, expr in set_exprs.items():
-                out = out.withColumn(
-                    c,
-                    F.when(matched, F.expr(str(expr)).cast(types[c])).otherwise(
-                        F.col(c)
-                    ),
-                )
-        out_cols = [f.name for f in log_fschema]
-        if rowtrack:
-            if set_exprs is not None:
-                # updated rows KEEP their id; the commit version moves
-                # to this commit's slot (PROTOCOL.md Row Tracking)
-                out = out.withColumn(
-                    rt_mat_cv,
-                    F.when(
-                        matched, F.lit(int(prev_version) + 1)
-                    ).otherwise(F.col(rt_mat_cv)),
-                )
-            out_cols = out_cols + [rt_mat_id, rt_mat_cv]
-        keep = to_physical_df(out.select(*out_cols), cm)
-        out_dir = os.path.join(table, data_dir, f"grp-{i:05d}")
-        keep.write.parquet(out_dir)
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fullp = os.path.join(root, name)
-                rel = os.path.relpath(fullp, table)
-                adds.append({
-                    "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(fullp),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "__full_path__": fullp,
-                })
-        for a in files:
-            removes.append({
-                "path": a["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": a.get("partitionValues") or {},
-            })
-    if not removes:
-        return {f"{op_name}d_rows": 0, "rewritten_files": 0}
-
-    stats_map = _collect_file_stats(spark, [a["__full_path__"] for a in adds])
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
-    actions = (
-        [{"remove": r} for r in removes]
-        + [{"add": a} for a in adds]
-        + cdc_actions
-        + [{
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": op_name.upper(),
-                "operationParameters": {"predicate": json.dumps(where)},
-            }
-        }]
-    )
-    _commit_actions_retry(
-        table, prev_version + 1, actions,
-        read_where=where, cm=cm, part_cols=part_cols)
-    return {f"{op_name}d_rows": deleted, "rewritten_files": len(removes)}
 
 
 def vacuum_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:

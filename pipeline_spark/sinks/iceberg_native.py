@@ -2358,136 +2358,186 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     """Row-level DELETE WHERE via merge-on-read position deletes.
 
     The GDPR/takedown shape: removing a few rows from a 100 TB table
-    must not rewrite the table.  This scans the live data files with the
-    ``_metadata.file_path``/``row_index`` virtual columns (exact row
-    addressing, zero extra shuffle), writes one spec-shaped position
-    delete parquet (columns ``file_path``/``pos``, sorted as the spec
-    requires), and commits it with ``append_delete_files`` — the reader
-    applies it via its existing anti-join.  ``where`` takes the same
-    predicate list as the readers' ``dataFilter``.  Works on REST
-    catalog tables too (r7): planning reads the catalog's metadata, the
-    commit is an optimistic add-snapshot.
+    must not rewrite the table.  The live rows of the files whose
+    manifest bounds admit ``where`` are scanned with their exact
+    (file, row ordinal) address; the matched positions become one
+    spec-shaped position-delete parquet (``file_path``/``pos``, sorted as
+    the spec requires), or on a v3 table (or ``format: puffin``) one
+    puffin of deletion vectors, committed with ``append_delete_files`` —
+    the reader applies it via its existing anti-join.  ``method: cow``
+    rewrites only the files holding a match instead, the right shape when
+    the predicate deletes a large fraction of its files (position deletes
+    cap at ``maxDeleteRows``).  ``where`` takes the same predicate list as
+    the readers' ``dataFilter``.  Works on REST catalog tables too:
+    planning reads the catalog's metadata, the commit is an optimistic
+    add-snapshot.  Planned by sinks/rowlevel.py.
     """
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
-    import pyspark.sql.functions as F
+    return _mutate_where(spark, p, None)
 
-    from pipeline_spark.sources.delta_native import _apply_data_filter
-    from pipeline_spark.sources.iceberg_native import plan_files
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(rest[3].get("location") or "")
-        )
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-    where = p.get("where")
-    if not where:
-        raise ValueError("iceberg delete: 'where' predicate list is required")
-    if isinstance(where, dict):
-        where = [where]
-    if str(p.get("method", "")).lower() == "cow":
-        # copy-on-write DELETE (r8): rewrite only the files containing a
-        # match — the right shape when the predicate deletes a large
-        # fraction of its files (position deletes cap at maxDeleteRows)
-        return _cow_mutate_where(spark, {**p, "where": where}, None)
-    from pipeline_spark.sources.iceberg_native import _apply_row_deletes
-
-    all_data, prior_deletes, _meta = plan_files(
-        table_path, meta=rest[3] if rest is not None else None
-    )
+def _mutate_where(
+    spark, p: dict[str, Any], set_exprs: dict[str, str] | None
+) -> dict[str, int]:
+    """The Iceberg adapter of the row-level planner (sinks/rowlevel.py):
+    the snapshot's live files, a live-row reader (schema-evolved,
+    identity-fill and row-delete aware, v3 lineage derived), default-spec
+    staging, and the two commits — a file replacement, or position
+    deletes / deletion vectors."""
+    from pipeline_spark.sinks import rowlevel
     from pipeline_spark.sources.iceberg_native import (
+        _apply_row_deletes,
         _bounds_may_match,
         _schema_fields,
         apply_identity_fill,
+        derive_row_ids,
+        evolved_scan,
         identity_fill_plan,
+        plan_files,
         stamp_lineage,
     )
 
-    # manifest-bounds pruning (r10): a keyed MOR delete must scan only
-    # the files whose recorded bounds ADMIT the predicate — positions
-    # can only come from matching rows, so files the bounds disprove
-    # contribute nothing.  At 100 TB this is the difference between a
-    # whole-table scan and touching the batch's few files (the same
-    # prune the COW path already had).
-    _id2f = {f["id"]: f for f in _schema_fields(_meta)}
-    data = [d for d in all_data if _bounds_may_match(d, where, _id2f)]
-    if not data:
-        return {"deleted_rows": 0}
-    if any(d.get("renames") or d.get("absent") or d.get("dropped") for d in data):
-        # evolved live files: plan positions through the reader's own
-        # migrating scan (renames applied, added columns null-padded) so
-        # the ``where`` predicate sees CURRENT column names; lineage is
-        # stamped per-file inside the scan (r7, VERDICT r6 ask #5)
-        from pipeline_spark.sources.iceberg_native import evolved_scan
-
-        live = evolved_scan(
-            spark, spark.read, data, _schema_fields(_meta), with_lineage=True
-        )
-        _fills, _ftypes = identity_fill_plan(data, _meta)
+    op = "update" if set_exprs else "delete"
+    mor = not set_exprs and str(p.get("method", "")).lower() != "cow"
+    where = rowlevel.where_of("iceberg", op, p)
+    legacy = parse_legacy_global_deletes(p)
+    rest = None
+    meta = None
+    if not p.get("catalog"):
+        table_path = str(p.get("path") or p.get("table") or "")
+    elif mor:
+        rest = _rest_meta_session(p)
+        meta = rest[3]
+        table_path = str(meta.get("location") or "")
     else:
-        _fills, _ftypes = identity_fill_plan(data, _meta)
-        if _fills:
-            live = _fill_schema_read(spark, _meta, data)
+        rest = _rest_session(p)
+        meta = rest["prev_meta"]
+        table_path = rest["location"]
+        if meta is None:
+            raise FileNotFoundError(f"iceberg {op}: table does not exist")
+    table_path = re.sub(r"^file:/{0,2}(/)", r"\1", table_path)
+    data, deletes, meta = plan_files(table_path, meta=meta)
+    fields = _schema_fields(meta)
+    id2field = {f["id"]: f for f in fields}
+    # v3 row lineage: a rewrite PRESERVES each surviving row's _row_id by
+    # materializing it into the staged files (spec §Row Lineage)
+    v3 = int(meta.get("format-version", 2)) >= 3
+
+    def read(files: list[dict], lineage: bool):
+        lineage = lineage and v3
+        # identity-fill files (delta-converted / add_files imports whose
+        # parquet never materialized the identity partition columns) read
+        # under the TABLE schema and fill from the manifest partition
+        # records, so predicates on partition columns match and a
+        # rewrite materializes the columns
+        fills, ftypes = identity_fill_plan(files, meta)
+        if any(d.get("renames") or d.get("absent") or d.get("dropped")
+               for d in files):
+            df = evolved_scan(
+                spark, spark.read, files, fields, with_lineage=True,
+                keep_extra=LINEAGE_COLS if lineage else None,
+            )
+        elif fills or lineage:
+            df = _fill_schema_read(spark, meta, files, extra_row_id=lineage)
         else:
-            live = read_parquet(spark, *[d["path"] for d in data])
-    if _fills:
-        # fill identity partition columns from the manifest records so a
-        # WHERE on a partition column matches (positions are unaffected)
-        live = stamp_lineage(live)
-        live = apply_identity_fill(spark, live, _fills, _ftypes)
-    if prior_deletes:
-        # probe LIVE rows only (ADVICE r8): a row that's already deleted
-        # must not be re-counted, and a file whose only matches are dead
-        # rows must not gain a redundant delete entry.  __fp__ is the
-        # decoded raw path (spec: a position delete's file_path equals
-        # the manifest's file_path — raw, not a URI).
-        live = _apply_row_deletes(
-            spark, live, data, prior_deletes, _meta, keep_lineage=True,
-            legacy_global_deletes=parse_legacy_global_deletes(p),
-            all_data=all_data,
+            df = read_parquet(spark, *[d["path"] for d in files])
+        df = stamp_lineage(df)
+        if fills:
+            df = apply_identity_fill(spark, df, fills, ftypes)
+        if lineage:
+            df = derive_row_ids(spark, df, files, with_seq=True)
+        if deletes:
+            # LIVE rows only: a row a DV / position / equality delete
+            # already removed neither matches nor comes back
+            df = _apply_row_deletes(
+                spark, df, files, deletes, meta, keep_lineage=True,
+                legacy_global_deletes=legacy, all_data=data,
+            )
+        return df
+
+    data_dir = os.path.join(table_path, "data", f"{op}-{uuid.uuid4().hex}")
+    if not mor:
+        cur_schema = next(
+            s for s in meta["schemas"]
+            if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
         )
-    if "__fp__" not in live.columns:
-        live = live.select(
-            "*",
-            F.url_decode(F.regexp_replace(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ), r"\+", "%2B",
-            )).alias("__fp__"),
-            F.col("_metadata.row_index").alias("__pos__"),
+        spec0 = next(
+            (sp for sp in meta.get("partition-specs", [])
+             if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
+            {"fields": []},
         )
-    df = live.select(
-        F.col("__fp__").alias("file_path"),
-        F.col("__pos__").alias("pos"),
-        *[c for c in live.columns if c not in ("__fp__", "__pos__")],
+
+    def stage(_i: int, _files: list[dict], df) -> list[dict]:
+        return _stage_default_spec_files(
+            df, data_dir, spec0, cur_schema,
+            sort_cols=_default_sort_cols(meta, cur_schema),
+        )
+
+    def commit_rewrite(plan) -> dict:
+        removed = _commit_file_replacement(
+            table_path, rest, meta, cur_schema, spec0, plan.files,
+            plan.staged, operation="overwrite" if set_exprs else "delete",
+            read_where=where,
+        )
+        return {
+            f"{op}d_rows": plan.rows, "rewritten_files": removed,
+            "added_files": len(plan.staged),
+        }
+
+    def commit_positions(plan) -> dict | None:
+        # the driver materializes the delete file (one small parquet is
+        # the POINT of position deletes); a predicate matching a large
+        # fraction of the table should rewrite instead — fail fast
+        max_rows = int(p.get("maxDeleteRows", 1_000_000))
+        rows = (
+            plan.positions.selectExpr("__fp__ AS file_path", "__pos__ AS pos")
+            .orderBy("file_path", "pos").limit(max_rows + 1).collect()
+        )
+        if len(rows) > max_rows:
+            raise ValueError(
+                f"iceberg delete: predicate matches more than maxDeleteRows="
+                f"{max_rows} rows — that is a rewrite, not a position delete; "
+                "set method: cow to rewrite only the matching files"
+            )
+        if not rows:
+            return None
+        return _write_position_deletes(
+            p, table_path, rest, meta, deletes, rows
+        )
+
+    t = rowlevel.Table(
+        fmt="iceberg", files=data, columns=[f["name"] for f in fields],
+        may_match=lambda d: _bounds_may_match(d, where, id2field),
+        path_of=lambda d: d["path"], read=read, stage=stage,
+        lineage=(
+            "_row_id", "_last_updated_sequence_number",
+            int(meta.get("last-sequence-number", 0)) + 1,
+        ) if v3 and not mor else None,
     )
-    matches = (
-        _apply_data_filter(df, where)
-        .select("file_path", "pos")
-        .orderBy("file_path", "pos")
+    out = rowlevel.mutate(
+        t, where, set_exprs, mor=mor,
+        commit=commit_positions if mor else commit_rewrite,
     )
-    # the driver materializes the delete file (one small parquet is the
-    # POINT of position deletes); a predicate matching a large fraction
-    # of the table should rewrite instead — fail fast, don't OOM
-    max_rows = int(p.get("maxDeleteRows", 1_000_000))
-    rows = matches.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"iceberg delete: predicate matches more than maxDeleteRows="
-            f"{max_rows} rows — that is a rewrite, not a position delete; "
-            "set method: cow to rewrite only the matching files"
-        )
-    if not rows:
+    if out is not None:
+        return out
+    if mor:
         return {"deleted_rows": 0}
+    return {f"{op}d_rows": 0, "rewritten_files": 0, "added_files": 0}
+
+
+def _write_position_deletes(
+    p: dict[str, Any], table_path: str, rest, meta: dict,
+    prior_deletes: list[dict], rows: list,
+) -> dict[str, int]:
+    """Commit matched ``(file_path, pos)`` rows as one position-delete
+    parquet, or — on a v3 table, or ``format: puffin`` — one puffin of
+    deletion vectors."""
     fmt = str(
         p.get("format")
         # a v3 table must not gain NEW position-delete files (spec
         # §Position Delete Files: "deprecated in v3") — route unset
         # format to deletion vectors once the table is v3
-        or ("puffin" if int(_meta.get("format-version", 2)) >= 3
+        or ("puffin" if int(meta.get("format-version", 2)) >= 3
             else "parquet")
     ).lower()
     if fmt == "puffin":
@@ -2578,7 +2628,7 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
                 "record_count": b["cardinality"],
             }
             for b in blobs
-        ], rest=rest, supersede=supersede or None, base_meta=_meta)
+        ], rest=rest, supersede=supersede or None, base_meta=meta)
         return {
             "deleted_rows": len(rows), "dv_blobs": len(blobs),
             "merged_dvs": merged_dvs,
@@ -2602,7 +2652,7 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     )
     append_delete_files(
         table_path, [{"path": out, "content": 1}], rest=rest,
-        base_meta=_meta,
+        base_meta=meta,
     )
     return {"deleted_rows": len(rows)}
 
@@ -2936,215 +2986,10 @@ def update_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     expression.  One replace snapshot via the shared file-scoped commit.
     The O(batch) merge-on-read alternative for keyed updates is
     ``upsert_iceberg_native``."""
+    from pipeline_spark.sinks import rowlevel
+
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
-    set_exprs = dict(p.get("set") or {})
-    if not set_exprs:
-        raise ValueError("iceberg update: 'set' {column: expression} is required")
-    return _cow_mutate_where(spark, p, set_exprs)
-
-
-def _cow_mutate_where(
-    spark, p: dict[str, Any], set_exprs: dict[str, str] | None
-) -> dict[str, int]:
-    from pyspark.sql import functions as F
-
-    from pipeline_spark.sources.delta_native import data_filter_condition
-    from pipeline_spark.sources.iceberg_native import (
-        _apply_row_deletes,
-        _bounds_may_match,
-        plan_files,
-    )
-
-    from pipeline_spark.sources.iceberg_native import (
-        apply_identity_fill,
-        identity_fill_plan,
-        stamp_lineage,
-    )
-
-    op = "update" if set_exprs else "delete"
-    where = p.get("where")
-    if not where:
-        raise ValueError(f"iceberg {op}: 'where' predicate list is required")
-    if isinstance(where, dict):
-        where = [where]
-    rest = _rest_session(p) if p.get("catalog") else None
-    if rest is not None:
-        prev_meta = rest["prev_meta"]
-        table_path = rest["location"]
-        if prev_meta is None:
-            raise FileNotFoundError(f"iceberg {op}: table does not exist")
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1",
-            str(p.get("path") or p.get("table") or ""),
-        )
-        from pipeline_spark.sources.iceberg_native import (
-            load_table_metadata,
-        )
-
-        prev_meta = load_table_metadata(table_path)
-    data, deletes, prev_meta = plan_files(table_path, meta=prev_meta)
-    cur_schema = next(
-        s for s in prev_meta["schemas"]
-        if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
-    )
-    keep_cols = [f["name"] for f in cur_schema["fields"]]
-    if set_exprs:
-        bad = [c for c in set_exprs if c not in keep_cols]
-        if bad:
-            raise ValueError(f"iceberg update: set columns {bad} not in schema")
-
-    # identity-fill files (delta-converted / add_files imports whose
-    # parquet never materialized the identity partition columns): the
-    # probe and the rewrite read both fill from the manifest partition
-    # records, so predicates on partition columns match and the
-    # REWRITTEN files materialize the columns (fill tables migrate to
-    # normal layout one rewrite at a time)
-    fills, ftypes = identity_fill_plan(data, prev_meta)
-    # v3 row lineage: the rewrite must PRESERVE each surviving row's id
-    # by MATERIALIZING _row_id into the staged files (spec §Row Lineage
-    # — this closes the r9 "rewrites take fresh ids" boundary)
-    lineage = int(prev_meta.get("format-version", 2)) >= 3
-
-    # manifest-bounds pruning directly on the predicate, then the exact
-    # probe — only files that CONTAIN a match rewrite
-    id2field = {f["id"]: f for f in cur_schema["fields"]}
-    candidates = [d for d in data if _bounds_may_match(d, where, id2field)]
-    hit: list[dict] = []
-    matched = 0
-    if candidates:
-        evolved = any(
-            d.get("renames") or d.get("absent") or d.get("dropped")
-            for d in candidates
-        )
-        # column-pruned probe: only the predicate columns leave the scan
-        pred_cols = [
-            c for c in keep_cols
-            if c in {str(f.get("key")) for f in where}
-        ]
-        if evolved:
-            probe = _read_evolved_group(
-                spark, candidates, cur_schema, with_lineage=True
-            )
-        elif fills:
-            # fill candidates must read under the TABLE schema: inference
-            # off a fill file would drop the partition columns
-            probe = _fill_schema_read(spark, prev_meta, candidates)
-        else:
-            probe = read_parquet(spark, *[d["path"] for d in candidates])
-        if fills:
-            probe = stamp_lineage(probe)
-            probe = apply_identity_fill(spark, probe, fills, ftypes)
-        if deletes:
-            # probe LIVE rows only (ADVICE r8): rows already removed by
-            # a DV / position / equality delete must not count as
-            # matches, and a file whose only matches are dead rows must
-            # not rewrite (correct either way — rewrites materialize
-            # deletes — but the rewrite itself is wasted work)
-            probe = _apply_row_deletes(
-                spark, probe, candidates, deletes, prev_meta,
-                keep_lineage=True,
-                legacy_global_deletes=parse_legacy_global_deletes(p),
-                all_data=data,
-            )
-        if "__fp__" not in probe.columns:
-            from pipeline_spark.functions.sqltext import scheme_strip_sql
-
-            probe = probe.selectExpr(
-                "*",
-                scheme_strip_sql("_metadata.file_path") + " AS __fp__",
-            )
-        probe = probe.select(*pred_cols, "__fp__")
-        cond = data_filter_condition(where)
-        hits = (
-            probe.filter(cond).groupBy("__fp__")
-            .agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        hitset: set[str] = set()
-        for r in hits:
-            hitset.add(r["__fp__"])
-            hitset.add(urllib.parse.unquote(r["__fp__"]))
-            matched += int(r["n"])
-        hit = [
-            d for d in candidates
-            if d["path"] in hitset
-            or urllib.parse.unquote(d["path"]) in hitset
-        ]
-    if not hit:
-        return {f"{op}d_rows": 0, "rewritten_files": 0, "added_files": 0}
-
-    ev_hit = any(
-        d.get("renames") or d.get("absent") or d.get("dropped") for d in hit
-    )
-    if ev_hit:
-        grp = _read_evolved_group(
-            spark, hit, cur_schema,
-            with_lineage=bool(deletes) or bool(fills) or lineage,
-            keep_extra=(LINEAGE_COLS if lineage else None),
-        )
-    elif fills or lineage:
-        grp = _fill_schema_read(
-            spark, prev_meta, hit, extra_row_id=lineage
-        )
-    else:
-        grp = read_parquet(spark, *[d["path"] for d in hit])
-    if fills or lineage:
-        from pipeline_spark.sources.iceberg_native import derive_row_ids
-
-        grp = stamp_lineage(grp)
-        if fills:
-            grp = apply_identity_fill(spark, grp, fills, ftypes)
-        if lineage:
-            grp = derive_row_ids(spark, grp, hit, with_seq=True)
-    if deletes:
-        grp = _apply_row_deletes(
-            spark, grp, hit, deletes, prev_meta,
-            legacy_global_deletes=parse_legacy_global_deletes(p),
-            all_data=data,
-        )
-    cond = data_filter_condition(where)
-    match = F.coalesce(cond, F.lit(False))  # predicate-NULL rows are KEPT
-    out_cols = keep_cols + (LINEAGE_COLS if lineage else [])
-    if set_exprs:
-        out = grp
-        for c, e in set_exprs.items():
-            out = out.withColumn(
-                c, F.when(match, F.expr(str(e))).otherwise(F.col(c))
-            )
-        if lineage:
-            # spec §Row Lineage: an UPDATED row keeps its _row_id but
-            # its last-updated sequence moves to THIS commit's
-            out = out.withColumn(
-                "_last_updated_sequence_number",
-                F.when(
-                    match,
-                    F.lit(int(prev_meta.get("last-sequence-number", 0)) + 1),
-                ).otherwise(F.col("_last_updated_sequence_number")),
-            )
-        new_rows = out.select(*out_cols)
-    else:
-        new_rows = grp.filter(~match).select(*out_cols)
-
-    spec0 = next(
-        (sp for sp in prev_meta.get("partition-specs", [])
-         if sp.get("spec-id", 0) == prev_meta.get("default-spec-id", 0)),
-        {"fields": []},
-    )
-    data_dir = os.path.join(table_path, "data", f"{op}-{uuid.uuid4().hex}")
-    staged = _stage_default_spec_files(
-        new_rows, data_dir, spec0, cur_schema,
-        sort_cols=_default_sort_cols(prev_meta, cur_schema),
-    )
-    removed = _commit_file_replacement(
-        table_path, rest, prev_meta, cur_schema, spec0, hit, staged,
-        operation="overwrite" if set_exprs else "delete",
-        read_where=where,
-    )
-    return {
-        f"{op}d_rows": matched,
-        "rewritten_files": removed,
-        "added_files": len(staged),
-    }
+    return _mutate_where(spark, p, rowlevel.set_of("iceberg", p))
 
 
 def _commit_file_replacement(

@@ -1,0 +1,208 @@
+"""Row-level DELETE / UPDATE ... WHERE, planned once for both lakehouse
+formats.
+
+The Delta and Iceberg sinks share one ``where`` / ``set`` surface; this
+module is the only place that plans it.  A format adapter opens the
+table and describes it as a :class:`Table`: its live data files, the
+stats test, a live-row reader, the stage step and (Delta) change-data
+staging.  :func:`mutate` then
+
+1. checks ``set`` against the table's columns;
+2. keeps the files whose stats admit ``where``;
+3. copy-on-write: counts the matches per file in ONE probe
+   (``filter(cond).groupBy("__fp__").count()``), re-reads only the files
+   that hold a match and stages them rewritten — a delete keeps the rows
+   where ``NOT coalesce(cond, false)`` holds (a predicate-NULL row did
+   not match), an update applies ``CASE WHEN match THEN set`` in one
+   projection over the pre-update row, and a row keeps its lineage id
+   while an updated row's lineage version moves to the next commit;
+4. merge-on-read: builds the matched ``(__fp__, __pos__)`` frame for the
+   adapter's position encoder instead; an update also stages the matched
+   rows with ``set`` applied and their lineage kept and bumped as above;
+
+and hands the :class:`Plan` to the adapter's commit.
+"""
+
+from __future__ import annotations
+
+import urllib.parse
+from dataclasses import dataclass, field
+from typing import Any, Callable
+
+from pipeline_spark.functions.sqltext import atomic_ddl, qi
+from pipeline_spark.sources.delta_native import data_filter_sql
+
+_UNKNOWN_SET = {
+    "delta": "delta update: set targets unknown columns {}",
+    "iceberg": "iceberg update: set columns {} not in schema",
+}
+
+
+@dataclass
+class Table:
+    """One opened table, as a format adapter describes it."""
+
+    fmt: str  # "delta" / "iceberg": the error-message prefix
+    files: list[dict]  # live data-file entries
+    columns: list[str]  # the data columns a staged file holds, in order
+    may_match: Callable[[dict], bool]  # the entry's stats admit `where`
+    path_of: Callable[[dict], str]  # entry -> the raw path __fp__ holds
+    # live rows of some entries: `columns` (partition values filled in)
+    # plus __fp__/__pos__; with lineage=True also the lineage columns
+    read: Callable[[list[dict], bool], Any]
+    stage: Callable[[int, list[dict], Any], list]  # write one group's rows
+    # the units a rewrite stages separately (Delta: one per partition)
+    groups: Callable[[list[dict]], list[list[dict]]] = lambda fs: [fs]
+    part_cols: list[str] = field(default_factory=list)  # set refuses these
+    types: dict | None = None  # cast `set` results to these column types
+    lineage: tuple[str, str, int] | None = None  # (id, version, next version)
+    # (group index, entries, matched rows, their updated rows or None)
+    changes: Callable[[int, list[dict], Any, Any], None] | None = None
+
+
+@dataclass
+class Plan:
+    """What a commit gets: the entries it replaces (copy-on-write: the
+    files holding a match; merge-on-read: every candidate), the matched
+    row count from the probe (copy-on-write), the staged files, and the
+    matched ``(__fp__, __pos__)`` frame (merge-on-read)."""
+
+    files: list[dict]
+    rows: int = 0
+    staged: list = field(default_factory=list)
+    positions: Any = None
+
+
+def where_of(fmt: str, op: str, p: dict) -> list[dict]:
+    where = p.get("where")
+    if not where:
+        raise ValueError(f"{fmt} {op}: 'where' predicate list is required")
+    return [where] if isinstance(where, dict) else list(where)
+
+
+def set_of(fmt: str, p: dict) -> dict[str, str]:
+    set_exprs = p.get("set")
+    if not set_exprs:
+        raise ValueError(f"{fmt} update: 'set' {{column: expression}} is required")
+    return dict(set_exprs)
+
+
+def mutate(t: Table, where: list[dict], set_exprs: dict | None, *,
+           mor: bool, commit: Callable[[Plan], dict]) -> dict | None:
+    """Plan a DELETE (``set_exprs=None``) or UPDATE over ``t`` and return
+    ``commit(plan)``, or None when no live row matches (nothing staged).
+    Frames cached for the merge-on-read consumers are released after
+    the commit."""
+    if set_exprs:
+        unknown = [
+            c for c in set_exprs if c not in t.columns and c not in t.part_cols
+        ]
+        if unknown:
+            raise ValueError(_UNKNOWN_SET[t.fmt].format(unknown))
+        parts = [c for c in set_exprs if c in t.part_cols]
+        if parts:
+            raise ValueError(
+                f"{t.fmt} update: set cannot target partition columns "
+                f"{parts} — rows would stay under their old "
+                "partitionValues; rewrite via overwrite instead"
+            )
+    candidates = [f for f in t.files if t.may_match(f)]
+    if not candidates:
+        return None
+    cond = data_filter_sql(where)
+    match = f"coalesce(({cond}), false)"
+    if not mor:
+        plan = _rewrite(t, candidates, cond, match, set_exprs)
+        return None if plan is None else commit(plan)
+    cached: list = []
+    try:
+        return commit(_positions(t, candidates, match, set_exprs, cached))
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _rewrite(t, candidates, cond, match, set_exprs) -> Plan | None:
+    counts = (
+        t.read(candidates, False).where(cond).groupBy("__fp__").count()
+        .collect()
+    )
+    hits: set[str] = set()
+    for r in counts:
+        # __fp__ is decoded from a URI; entries may hold either spelling
+        hits |= {r[0], urllib.parse.unquote(r[0])}
+    hit = [
+        f for f in candidates
+        if t.path_of(f) in hits or urllib.parse.unquote(t.path_of(f)) in hits
+    ]
+    if not hit:
+        return None  # the stats admitted a match the rows do not hold
+    staged: list = []
+    for i, files in enumerate(t.groups(hit)):
+        df = t.read(files, True)
+        if t.changes:
+            pre = df.where(match)
+            t.changes(
+                i, files, pre,
+                pre.selectExpr(*_updated(t, set_exprs, None)) if set_exprs
+                else None,
+            )
+        if set_exprs:
+            out = df.selectExpr(*_updated(t, set_exprs, match))
+        else:
+            out = df.where(f"NOT {match}").selectExpr(*map(qi, _out_cols(t)))
+        staged += t.stage(i, files, out)
+    return Plan(hit, sum(int(r[1]) for r in counts), staged)
+
+
+def _positions(t, candidates, match, set_exprs, cached) -> Plan:
+    frames, staged = [], []
+    for i, files in enumerate(t.groups(candidates)):
+        # an update stages the matched rows again: with their lineage
+        matched = t.read(files, bool(set_exprs)).where(match)
+        if set_exprs or t.changes:
+            # up to three consumers (change rows, the updated rows, the
+            # positions): scan the candidates once
+            matched = matched.persist()
+            cached.append(matched)
+        post = (
+            matched.selectExpr(*_updated(t, set_exprs, None)) if set_exprs
+            else None
+        )
+        if t.changes:
+            t.changes(i, files, matched, post)
+        if post is not None:
+            staged += t.stage(i, files, post)
+        frames.append(matched.select("__fp__", "__pos__"))
+    positions = frames[0]
+    for x in frames[1:]:
+        positions = positions.unionByName(x)
+    return Plan(candidates, 0, staged, positions)
+
+
+def _out_cols(t: Table) -> list[str]:
+    return t.columns + (list(t.lineage[:2]) if t.lineage else [])
+
+
+def _updated(t: Table, set_exprs: dict, match: str | None) -> list[str]:
+    """The staged columns with ``set`` applied where ``match`` holds (to
+    every row when None), all evaluated over the pre-update row; the
+    lineage version of an updated row moves to the next commit.  With
+    ``t.types``, a ``set`` result is cast to its column's atomic type (a
+    nested value must already have the column's type)."""
+    out = []
+    for c in _out_cols(t):
+        if c in set_exprs:
+            v = f"({set_exprs[c]})"
+            ddl = atomic_ddl(t.types[c]) if t.types else None
+            if ddl:
+                v = f"CAST({v} AS {ddl})"
+        elif t.lineage and c == t.lineage[1]:
+            v = str(int(t.lineage[2]))
+        else:
+            out.append(qi(c))
+            continue
+        if match is not None:
+            v = f"CASE WHEN {match} THEN {v} ELSE {qi(c)} END"
+        out.append(f"{v} AS {qi(c)}")
+    return out

@@ -1007,93 +1007,68 @@ def _stats_may_match(a: dict, dfilter: list[dict], schema) -> bool:
 
 def data_filter_condition(dfilter: list[dict]):
     """The AND of a predicate list as one Column (shared by the readers'
-    dataFilter and the writers' delete-WHERE).
-
-    r16: spelled as one SQL text when every key/value is spellable —
-    one F.expr round-trip instead of ~6 Column calls per predicate on
-    every DML/read path; the Column construction below stays as the
-    exact fallback (unspellable literals, exotic key names)."""
+    dataFilter and the writers' delete-WHERE): one F.expr round-trip
+    over :func:`data_filter_sql`."""
     from pyspark.sql import functions as F
+
+    return F.expr(data_filter_sql(dfilter))
+
+
+def data_filter_sql(dfilter: list[dict]) -> str:
+    """SQL text of the AND of a predicate list.  Keys spell as F.col
+    reads them (unquoted dots navigate struct fields); values as F.lit
+    builds them (``sql_lit`` raises ValueError for a value with no exact
+    spelling); an unknown op raises ValueError."""
+    from pipeline_spark.functions.sqltext import col_ref, sql_lit
 
     if isinstance(dfilter, dict):
         dfilter = [dfilter]
-    sql = _data_filter_sql(dfilter)
-    if sql is not None:
-        return F.expr(sql)
-    conds = []
+    parts = []
     for f in dfilter:
-        key, op = f.get("key"), str(f.get("op", "=")).lower()
+        key, op = col_ref(str(f.get("key"))), str(f.get("op", "=")).lower()
         want = f.get("value")
-        c = F.col(key)
         if op in ("=", "=="):
-            cond = c == F.lit(want)
-        elif op == "!=":
-            cond = c != F.lit(want)
-        elif op == "<":
-            cond = c < F.lit(want)
-        elif op == "<=":
-            cond = c <= F.lit(want)
-        elif op == ">":
-            cond = c > F.lit(want)
-        elif op == ">=":
-            cond = c >= F.lit(want)
+            parts.append(f"({key} = {sql_lit(want)})")
+        elif op in ("!=", "<", "<=", ">", ">="):
+            parts.append(f"({key} {op} {sql_lit(want)})")
         elif op == "in":
-            cond = c.isin(list(want if isinstance(want, (list, tuple)) else [want]))
+            vals = list(want if isinstance(want, (list, tuple)) else [want])
+            if vals:
+                parts.append(
+                    f"({key} IN (" + ", ".join(sql_lit(v) for v in vals) + "))"
+                )
+            else:
+                # Column isin([]) is false for every row, NULL included;
+                # SQL has no empty IN list
+                parts.append(f"({key} IS NULL AND false)")
         elif op in ("isnull", "is_null"):
-            cond = c.isNull()
+            parts.append(f"({key} IS NULL)")
         elif op in ("isnotnull", "is_not_null"):
-            cond = c.isNotNull()
+            parts.append(f"({key} IS NOT NULL)")
         else:
             raise ValueError(f"delta dataFilter: unknown op '{op}'")
-        conds.append(cond)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
+    return " AND ".join(parts)
+
+
+def partition_literal_sql(values, types: dict, name_of=None) -> list[str]:
+    """One partition group's values (``(physical column, partitionValues
+    string)`` pairs) as ``CAST(<literal> AS <type>) AS <name>`` select
+    texts — the lexical value cast to the column type, as F.lit(v).cast
+    does.  ``name_of`` maps a physical name to the output (logical) one;
+    ``types`` is keyed by output name."""
+    from pipeline_spark.functions.sqltext import atomic_ddl, qi, sql_lit
+
+    out = []
+    for c, v in values:
+        name = (name_of or {}).get(c, c)
+        ddl = atomic_ddl(types[name])
+        if ddl is None:
+            raise ValueError(
+                f"delta: partition column {name!r} has non-atomic type "
+                f"{types[name].simpleString()}"
+            )
+        out.append(f"CAST({sql_lit(v)} AS {ddl}) AS {qi(name)}")
     return out
-
-
-_SIMPLE_KEY = re.compile(r"^[A-Za-z_][A-Za-z0-9_.]*$")
-
-
-def _data_filter_sql(dfilter: list[dict]) -> str | None:
-    """SQL text of the predicate list, or None when any piece cannot be
-    spelled with the exact semantics of the Column construction
-    (F.col parses dotted keys as nested access, so only plain/dotted
-    identifier keys qualify)."""
-    from pipeline_spark.functions.sqltext import sql_lit
-
-    parts = []
-    try:
-        for f in dfilter:
-            key, op = f.get("key"), str(f.get("op", "=")).lower()
-            if not isinstance(key, str) or not _SIMPLE_KEY.match(key):
-                return None
-            want = f.get("value")
-            if op in ("=", "=="):
-                parts.append(f"({key} = {sql_lit(want)})")
-            elif op in ("!=", "<", "<=", ">", ">="):
-                sop = "!=" if op == "!=" else op
-                parts.append(f"({key} {sop} {sql_lit(want)})")
-            elif op == "in":
-                vals = list(
-                    want if isinstance(want, (list, tuple)) else [want]
-                )
-                if not vals:
-                    return None  # Column isin([]) has its own semantics
-                parts.append(
-                    f"({key} IN ("
-                    + ", ".join(sql_lit(v) for v in vals)
-                    + "))"
-                )
-            elif op in ("isnull", "is_null"):
-                parts.append(f"({key} IS NULL)")
-            elif op in ("isnotnull", "is_not_null"):
-                parts.append(f"({key} IS NOT NULL)")
-            else:
-                return None  # unknown op: the Column path raises
-    except ValueError:
-        return None
-    return " AND ".join(parts) if parts else None
 
 
 def _apply_data_filter(df, dfilter: list[dict]):
@@ -1342,11 +1317,9 @@ def read_delta_native(spark, p: dict[str, Any]):
             .option("recursiveFileLookup", "true")
             .parquet(*gpaths)
         )
-        for c, v in zip(phys_part_cols, key):
-            df = df.withColumn(
-                c, F.lit(v).cast(types[c]) if v is not None else F.lit(None).cast(types[c])
-            )
-        parts.append(df)
+        parts.append(df.selectExpr(
+            "*", *partition_literal_sql(zip(phys_part_cols, key), types)
+        ))
     out = parts[0]
     for x in parts[1:]:
         out = out.unionByName(x)

@@ -893,6 +893,8 @@ def evolved_scan(spark, reader, data: list[dict], fields: list[dict],
     delete planning work on evolved tables (r7, VERDICT r6 ask #5)."""
     from pyspark.sql import functions as F
 
+    from pipeline_spark.functions.sqltext import fp_norm_sql, qi, sql_lit
+
     groups: dict[tuple, list[str]] = {}
     for d in data:
         key = (d.get("renames") or (), d.get("absent") or ())
@@ -925,74 +927,37 @@ def evolved_scan(spark, reader, data: list[dict], fields: list[dict],
         )
         g = reader.schema(ddl).parquet(*paths)
         mapping = dict(renames)
-        # r16: the whole per-group projection as SQL texts — one
-        # selectExpr round-trip instead of 3-5 Column calls per column
-        # per group on every evolved read.  Falls back to the Column
-        # API only for initial-default literal types SQL text cannot
-        # spell exactly (sql_lit raises).
-        from pipeline_spark.functions.sqltext import (
-            fp_norm_sql,
-            qi,
-            sql_lit,
-        )
-
-        texts: list[str] | None = [
-            f"{qi(c)} AS {qi(mapping.get(c, c))}" for c in g.columns
-        ]
-        cols = [F.col(c).alias(mapping.get(c, c)) for c in g.columns] \
-            if texts is None else None
+        # the whole per-group projection as SQL texts: one selectExpr
+        # round-trip instead of 3-5 Column calls per column per group
+        texts = [f"{qi(c)} AS {qi(mapping.get(c, c))}" for c in g.columns]
         # physical-only passthrough columns (e.g. a rewrite's
         # materialized ``_row_id``): keep when present, null-pad when not
-        for extra in (keep_extra or []):
-            if extra not in g.columns:
-                if texts is not None:
-                    texts.append(f"CAST(NULL AS BIGINT) AS {qi(extra)}")
-                else:
-                    cols.append(F.lit(None).cast("bigint").alias(extra))
+        texts += [
+            f"CAST(NULL AS BIGINT) AS {qi(extra)}"
+            for extra in (keep_extra or []) if extra not in g.columns
+        ]
         # columns added AFTER this generation's files were written pad
         # PER GROUP: v3 ``initial-default`` when the field declares one
         # (spec Default values), else null.  Group-level padding (not
         # post-union) so a generation that HAS the column never mixes
-        # with one taking the default.
-        for aname in absent:
-            f = by_name.get(aname)
-            if f is None:
-                continue
-            if texts is not None:
-                try:
-                    texts.append(
-                        f"CAST({sql_lit(f.get('initial-default'))} AS "
-                        f"{_iceberg_type_to_spark(f['type'])}) "
-                        f"AS {qi(aname)}"
-                    )
-                except ValueError:
-                    # un-spellable literal (bytes/decimal default):
-                    # rebuild everything so far through the Column API
-                    cols = [F.expr(t) for t in texts]
-                    texts = None
-            if texts is None:
-                cols.append(
-                    F.lit(f.get("initial-default"))
-                    .cast(_iceberg_type_to_spark(f["type"]))
-                    .alias(aname)
-                )
+        # with one taking the default.  A JSON default is a JSON scalar,
+        # which sql_lit always spells.
+        texts += [
+            f"CAST({sql_lit(by_name[a].get('initial-default'))} AS "
+            f"{_iceberg_type_to_spark(by_name[a]['type'])}) AS {qi(a)}"
+            for a in absent if a in by_name
+        ]
         if with_lineage:
             # the FULL path normalization (scheme strip + percent-decode
             # with '+' protection) — identical to _apply_row_deletes'
             # norm, so delete matching and identity-partition fill agree
             # with driver-side norm_path even when a partition value
             # percent-encodes into the directory name (e.g. a space)
-            lineage_texts = [
+            texts = [
                 fp_norm_sql("_metadata.file_path") + " AS __fp__",
                 "_metadata.row_index AS __pos__",
-            ]
-            if texts is not None:
-                texts = lineage_texts + texts
-            else:
-                cols = [F.expr(t) for t in lineage_texts] + cols
-        parts.append(
-            g.selectExpr(*texts) if texts is not None else g.select(*cols)
-        )
+            ] + texts
+        parts.append(g.selectExpr(*texts))
     df = parts[0]
     for x in parts[1:]:
         df = df.unionByName(x, allowMissingColumns=True)
@@ -1010,8 +975,6 @@ def evolved_scan(spark, reader, data: list[dict], fields: list[dict],
     if all("." not in c and "`" not in c for c in keep):
         # selectExpr with quoted names = select(str) for dot-free names,
         # one round-trip instead of an F.col per column (r16)
-        from pipeline_spark.functions.sqltext import qi
-
         return df.selectExpr(*[qi(c) for c in keep])
     return df.select(*keep)
 

@@ -1,14 +1,16 @@
-"""Pin the r16 SQL-text data_filter_condition against the Column
-construction it batches: identical analyzed trees for every supported
-op, and the fallback engages for unspellable inputs."""
+"""Pin the SQL-text data_filter_condition against the Column
+construction it replaced: identical analyzed trees and rows for every
+supported op, key shape and literal type."""
 
+import datetime
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipeline_spark.sources.delta_native import (
-    _data_filter_sql,
     data_filter_condition,
+    data_filter_sql,
 )
 
 
@@ -82,13 +84,38 @@ def test_sql_text_matches_column_tree(spark):
         )
 
 
-def test_fallback_engages():
-    # unknown op and exotic key must leave the SQL path (Column path
-    # raises its own actionable error for the former)
-    assert _data_filter_sql([{"key": "k", "op": "between"}]) is None
-    assert _data_filter_sql([{"key": "weird col", "op": "="}]) is None
-    assert _data_filter_sql([{"key": "k", "op": "in", "value": []}]) is None
-    # dotted keys keep F.col's nested-access semantics on BOTH paths
-    assert _data_filter_sql(
-        [{"key": "a.b", "op": "=", "value": 1}]
-    ) == "((a.b = 1))".replace("((", "(").replace("))", ")")
+def test_exotic_keys_dates_and_empty_in_match_column_tree(spark):
+    df = spark.range(6).selectExpr(
+        "id", "CAST(id AS STRING) AS `weird col`",
+        "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d",
+        "named_struct('b', id) AS a",
+        "IF(id = 0, NULL, id) AS n",
+    )
+    cases = [
+        [{"key": "weird col", "op": "=", "value": "3"}],
+        [{"key": "d", "op": ">=", "value": datetime.date(2024, 1, 4)}],
+        [{"key": "a.b", "op": "in", "value": [1, 2]}],
+        [{"key": "n", "op": "in", "value": []}],
+    ]
+    for dfilter in cases:
+        a = df.where(data_filter_condition(dfilter))
+        b = df.where(_column_path(dfilter))
+        if dfilter[0]["value"] != []:
+            pa = _norm(a._jdf.queryExecution().analyzed().toString())
+            pb = _norm(b._jdf.queryExecution().analyzed().toString())
+            assert pa == pb, dfilter
+        assert sorted(map(tuple, a.collect())) == sorted(
+            map(tuple, b.collect())
+        ), dfilter
+    # Column isin([]) is false on a NULL key too: NOT of it keeps every row
+    kept = df.where(~F.coalesce(data_filter_condition(cases[-1]), F.lit(False)))
+    assert kept.count() == 6
+
+
+def test_unknown_op_raises():
+    with pytest.raises(ValueError, match="unknown op 'between'"):
+        data_filter_sql([{"key": "k", "op": "between"}])
+    # dotted keys keep F.col's nested-access semantics
+    assert data_filter_sql([{"key": "a.b", "op": "=", "value": 1}]) == (
+        "(`a`.`b` = 1)"
+    )

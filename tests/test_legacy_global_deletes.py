@@ -198,7 +198,7 @@ def test_legit_null_delete_not_misdetected_in_pruned_scans(spark, tmp_path):
 
 
 def test_cow_update_on_legacy_table_with_apply(spark, tmp_path):
-    """r13 review find: _cow_mutate_where's rewrite-phase delete
+    """r13 review find: the COW rewrite-phase delete
     application missed the option — COW update/delete on a legacy table
     must honor legacyGlobalDeletes: apply end to end."""
     from pipeline_spark.sinks.iceberg_native import update_iceberg_native

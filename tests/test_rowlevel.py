@@ -1,0 +1,199 @@
+"""The shared row-level planner (sinks/rowlevel.py) gives the same rows
+and counts on both formats and both methods: one logical table written
+as a column-mapped, partitioned Delta table and as a schema-evolved
+Iceberg table, each with a row already removed by a prior merge-on-read
+delete, then the same DELETE and UPDATE through copy-on-write and
+merge-on-read."""
+
+import json
+import os
+
+import pytest
+
+from pipeline_spark.sinks.delta_native import (
+    delete_delta_native,
+    update_delta_native,
+    write_delta_native,
+)
+from pipeline_spark.sinks.iceberg_native import (
+    alter_iceberg_native,
+    delete_iceberg_native,
+    update_iceberg_native,
+    write_iceberg_native,
+)
+from pipeline_spark.sources.delta_native import read_delta_native
+from pipeline_spark.sources.iceberg_native import read_iceberg_native
+
+
+def _v(i):
+    return None if i in (3, 4) else i * 10  # two predicate-NULL rows
+
+
+ROWS = [(i, "abc"[i % 3], _v(i)) for i in range(30)]
+PRIOR = [{"key": "id", "op": "in", "value": [6, 13]}]
+# a partition-column predicate plus a data predicate; id 3 (grp a) has
+# a NULL v and must be KEPT, id 6 was already deleted: matches 0 and 9
+DELETE = [{"key": "grp", "op": "=", "value": "a"},
+          {"key": "v", "op": "<", "value": 100}]
+# grp b, v > 100: 16, 19, 22, 25, 28 (13 already deleted, 4 is NULL)
+UPDATE = [{"key": "grp", "op": "=", "value": "b"},
+          {"key": "v", "op": ">", "value": 100}]
+SET = {"v": "v + 1000"}
+
+
+def _delta(spark, path):
+    for k in range(3):
+        df = spark.createDataFrame(ROWS[k::3], "id long, grp string, v long")
+        write_delta_native(spark, df, {
+            "path": path, "mode": "append", "partitionBy": ["grp"],
+            "properties": {"delta.columnMapping.mode": "name"},
+        })
+    delete_delta_native(spark, {"path": path, "where": PRIOR, "method": "mor"})
+    return lambda: read_delta_native(spark, {"path": path})
+
+
+def _iceberg(spark, path):
+    # the first file is written under the column's old name: an
+    # evolved-schema file the planner reads through the migrating scan
+    write_iceberg_native(
+        spark.createDataFrame(ROWS[0::3], "id long, grp string, val long")
+        .coalesce(1), {"path": path, "mode": "create"},
+    )
+    alter_iceberg_native(spark, {"path": path, "renameColumn": {"val": "v"}})
+    for k in (1, 2):
+        write_iceberg_native(
+            spark.createDataFrame(ROWS[k::3], "id long, grp string, v long")
+            .coalesce(1), {"path": path, "mode": "append"},
+        )
+    delete_iceberg_native(spark, {"path": path, "where": PRIOR})
+    return lambda: read_iceberg_native(spark, {"path": path})
+
+
+def _rows(read):
+    return sorted(tuple(r) for r in read().select("id", "grp", "v").collect())
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+@pytest.mark.parametrize("method", ["cow", "mor"])
+def test_same_rows_and_counts_on_both_formats(spark, tmp_path, fmt, method):
+    path = str(tmp_path / fmt)
+    if fmt == "delta":
+        read = _delta(spark, path)
+        delete, update = delete_delta_native, update_delta_native
+    else:
+        read = _iceberg(spark, path)
+        delete, update = delete_iceberg_native, update_iceberg_native
+    alive = {r for r in ROWS if r[0] not in (6, 13)}
+    assert set(_rows(read)) == alive
+
+    out = delete(spark, {"path": path, "where": DELETE, "method": method})
+    assert out["deleted_rows"] == 2
+    alive = {r for r in alive if r[0] not in (0, 9)}
+    assert set(_rows(read)) == alive
+
+    # Iceberg UPDATE is copy-on-write only; Delta's runs both methods
+    out = update(spark, {"path": path, "where": UPDATE, "set": SET,
+                         "method": method})
+    assert out["updated_rows"] == 5
+    bumped = {16, 19, 22, 25, 28}
+    want = {(i, g, v + 1000 if i in bumped else v) for i, g, v in alive}
+    assert set(_rows(read)) == want
+
+
+def test_delta_cow_probes_once_and_rewrites_only_hit_files(spark, tmp_path):
+    """Three partition groups are candidates; one probe action counts
+    matches per file, and only the file holding the match rewrites."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(ROWS, "id long, grp string, v long")
+    write_delta_native(spark, df.repartition(2, "id"),
+                       {"path": path, "partitionBy": ["grp"]})
+    sc = spark.sparkContext
+    sc.setJobGroup("rowlevel-probe", "cow delete")
+    try:
+        out = delete_delta_native(spark, {
+            "path": path, "where": [{"key": "id", "op": "=", "value": 1}],
+        })
+    finally:
+        sc.setJobGroup("", "")
+    # group b holds two files; the one without id 1 stays
+    assert out == {"deleted_rows": 1, "rewritten_files": 1}
+    st = sc.statusTracker()
+    sites = []
+    for j in st.getJobIdsForGroup("rowlevel-probe"):
+        for s in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(s)
+            if info is not None:
+                sites.append(info.name)
+    probe = [s for s in sites if "rowlevel.py" in s]
+    # one collect (AQE runs its shuffle map stage as a job of its own)
+    # and the one parquet write of the hit group; no per-group count()
+    assert len(set(probe)) == 1 and probe[0].startswith("collect at")
+    assert not [s for s in sites if s.startswith("count at")]
+    assert len(st.getJobIdsForGroup("rowlevel-probe")) == 3
+
+
+@pytest.mark.parametrize("method", ["cow", "mor"])
+def test_delta_delete_honours_checkpoint_interval(spark, tmp_path, method):
+    path = str(tmp_path / "t")
+    write_delta_native(
+        spark, spark.createDataFrame(ROWS, "id long, grp string, v long"),
+        {"path": path},
+    )
+    delete_delta_native(spark, {
+        "path": path, "where": [{"key": "id", "op": "<", "value": 5}],
+        "method": method, "checkpointInterval": 1,
+    })
+    with open(os.path.join(path, "_delta_log", "_last_checkpoint")) as fh:
+        assert json.load(fh)["version"] == 1
+
+
+@pytest.mark.parametrize("fmt,method", [
+    ("delta", "cow"), ("delta", "mor"), ("iceberg", "cow"),
+])
+def test_set_reads_the_pre_update_row(spark, tmp_path, fmt, method):
+    """Every ``set`` expression, and the match itself, reads the row as
+    it was before the update: setting the predicate column does not stop
+    the other assignments, and they see its old value."""
+    path = str(tmp_path / fmt)
+    df = spark.createDataFrame([(1, 10), (2, 20)], "x long, y long")
+    if fmt == "delta":
+        write_delta_native(spark, df, {"path": path})
+        update, read = update_delta_native, read_delta_native
+    else:
+        write_iceberg_native(df.coalesce(1), {"path": path, "mode": "create"})
+        update, read = update_iceberg_native, read_iceberg_native
+    out = update(spark, {
+        "path": path, "method": method,
+        "where": [{"key": "x", "op": "=", "value": 1}],
+        "set": {"x": "x + 5", "y": "x + 100"},
+    })
+    assert out["updated_rows"] == 1
+    got = sorted(tuple(r) for r in read(spark, {"path": path}).collect())
+    assert got == [(2, 20), (6, 101)]
+
+
+@pytest.mark.parametrize("method", ["cow", "mor"])
+def test_delta_update_keeps_row_ids(spark, tmp_path, method):
+    """Row tracking: an updated row keeps its ``_row_id`` and its commit
+    version moves to the update's commit, whether the update rewrites
+    the file or re-appends the row beside a deletion vector."""
+    path = str(tmp_path / "t")
+    write_delta_native(
+        spark,
+        spark.createDataFrame([(i, i) for i in range(5)], "id long, v long")
+        .coalesce(1),
+        {"path": path, "properties": {"delta.enableRowTracking": "true"}},
+    )
+    update_delta_native(spark, {
+        "path": path, "method": method,
+        "where": [{"key": "id", "op": "=", "value": 2}],
+        "set": {"v": "v + 100"},
+    })
+    got = sorted(
+        (r["id"], r["v"], r["_row_id"], r["_row_commit_version"])
+        for r in read_delta_native(
+            spark, {"path": path, "withRowIds": True}
+        ).collect()
+    )
+    assert got == [(0, 0, 0, 0), (1, 1, 1, 0), (2, 102, 2, 1),
+                   (3, 3, 3, 0), (4, 4, 4, 0)]

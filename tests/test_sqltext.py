@@ -66,12 +66,69 @@ def test_sql_lit_matches_f_lit(spark, value):
     assert text.first()["v"] == col.first()["v"]
 
 
+def _optimized(df) -> str:
+    return re.sub(
+        r"#\d+L?", "", df._jdf.queryExecution().optimizedPlan().toString()
+    )
+
+
 @pytest.mark.parametrize(
     "value",
-    [2**63, -(2**63) - 1, float("nan"), float("inf"), float("-inf"),
-     decimal.Decimal("1.5"), datetime.date(2024, 1, 1), b"x", [1]],
+    [float("nan"), float("inf"), float("-inf"), datetime.date(2024, 1, 1),
+     datetime.date(1000, 2, 28), b"x", bytearray(b"\x00\xff"),
+     datetime.datetime(2024, 3, 10, 2, 30, 5, 123),
+     datetime.datetime(2024, 3, 10, 2, 30, 5, 123,
+                       tzinfo=datetime.timezone.utc),
+     datetime.datetime(1900, 1, 1, tzinfo=datetime.timezone(
+         datetime.timedelta(hours=-5)))],
+    ids=["nan", "inf", "-inf", "date", "old-date", "x", "bytearray",
+         "naive-datetime", "aware-datetime", "1900-datetime"],
+)
+def test_sql_lit_matches_f_lit_folded(spark, value):
+    """Non-finite doubles and instants spell as a foldable CAST /
+    timestamp_micros over a literal: equal optimized plans (dates and
+    bytes are plain literals: equal analyzed plans) and equal values,
+    under a non-UTC session zone."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        one = spark.range(1)
+        text = one.select(F.expr(sql_lit(value)).alias("v"))
+        col = one.select(F.lit(value).alias("v"))
+        if isinstance(value, (float, datetime.datetime)):
+            assert _optimized(text) == _optimized(col)
+        else:
+            assert _analyzed(text) == _analyzed(col)
+        a, b = text.first()["v"], col.first()["v"]
+        assert a == b or (a != a and b != b)  # NaN != NaN
+        # a CAST from a string analyzes nullable; folded, it is not
+        assert text.schema["v"].dataType == col.schema["v"].dataType
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_sql_lit_naive_datetime_follows_timestamp_type(spark):
+    v = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
+    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try:
+        one = spark.range(1)
+        text = one.select(F.expr(sql_lit(v)).alias("v"))
+        col = one.select(F.lit(v).alias("v"))
+        assert _analyzed(text) == _analyzed(col)
+        assert text.first()["v"] == col.first()["v"] == v
+    finally:
+        spark.conf.unset("spark.sql.timestampType")
+
+
+@pytest.mark.parametrize(
+    "value",
+    [2**63, -(2**63) - 1, datetime.datetime(1899, 12, 31, 23, 59),
+     datetime.datetime(1, 1, 1, tzinfo=datetime.timezone.utc), 1j,
+     decimal.Decimal("1.5"), {1}, object(), [1]],
 )
 def test_sql_lit_refuses(value):
+    """Ints beyond BIGINT, datetimes F.lit rebases through the JVM zone's
+    historical rules (before 1900), and types with no literal."""
     with pytest.raises(ValueError):
         sql_lit(value)
 
