@@ -20,10 +20,7 @@ from __future__ import annotations
 
 import json
 import os
-import re
-import time
 import urllib.parse
-import uuid
 from typing import Any
 
 
@@ -56,23 +53,23 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     inference over the directory (the same types a hive reader would
     assign); data column types come from one footer.  Appends require
     the import's schema to match the table's (by name and type)."""
-    from pipeline_spark.functions.avroocf import read_ocf_file, write_ocf_bytes
     from pipeline_spark.sinks.iceberg_native import (
-        _MANIFEST_FILE_SCHEMA,
-        _footer_column_stats,
-        _manifest_entry_schema,
+        IcebergTable,
+        _added_entry,
+        _manifest_list_of,
+        _name_mapping,
+        _new_snapshot,
         _parquet_stats,
-        _publish_metadata_exclusive,
+        _stamp_data_entries,
+        commit_snapshot,
+        create_table,
         iceberg_schema,
+        write_manifest,
     )
-    from pipeline_spark.sources.iceberg_native import load_table_metadata
+    from pipeline_spark.sources.iceberg_native import _strip_scheme
 
-    table = re.sub(
-        r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table") or "")
-    )
-    src_dir = re.sub(
-        r"^file:/{0,2}(/)", r"\1", str(p.get("sourceDir") or "")
-    )
+    table = _strip_scheme(str(p.get("path") or p.get("table") or ""))
+    src_dir = _strip_scheme(str(p.get("sourceDir") or ""))
     if not table or not src_dir:
         raise ValueError("iceberg addFiles: 'path' and 'sourceDir' required")
     files = _walk_hive_files(src_dir)
@@ -100,26 +97,20 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
             "schema inference"
         )
 
-    meta_dir = os.path.join(table, "metadata")
-    prev_meta = None
-    try:
-        prev_meta = load_table_metadata(table)
-    except FileNotFoundError:
-        pass
-
+    handle = IcebergTable({"path": table}, must_exist=False)
+    prev_meta = handle.meta
     if prev_meta is not None:
-        cur_schema = next(
+        schema = next(
             s for s in prev_meta["schemas"]
             if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
         )
-        want = {(f["name"], f["type"]) for f in cur_schema["fields"]}
+        want = {(f["name"], f["type"]) for f in schema["fields"]}
         have = {(f["name"], f["type"]) for f in full_schema["fields"]}
         if want != have:
             raise ValueError(
                 "iceberg addFiles: import schema "
                 f"{sorted(have)} != table schema {sorted(want)}"
             )
-        schema = cur_schema
         spec = next(
             (sp for sp in prev_meta.get("partition-specs", [])
              if sp.get("spec-id", 0) == prev_meta.get("default-spec-id", 0)),
@@ -137,187 +128,60 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
                 f"iceberg addFiles: import partitioning {part_cols} != "
                 f"table's identity spec {spec_names}"
             )
-        spec_fields = spec.get("fields", [])
-        seq = int(prev_meta.get("last-sequence-number", 0)) + 1
-        version = int(prev_meta.get("__version") or 0) + 1
+        base = prev_meta
     else:
         # fresh table: schema ids assigned by iceberg_schema; identity
         # spec over the discovered partition columns
         schema = {"type": "struct", "schema-id": 0,
                   "fields": full_schema["fields"]}
-        spec_fields = [
+        spec = {"spec-id": 0, "fields": [
             {"name": c, "transform": "identity",
              "source-id": by_name[c]["id"], "field-id": 1000 + i}
             for i, c in enumerate(part_cols)
-        ]
-        seq = 1
-        version = 1
+        ]}
+        base = create_table(handle, {
+            "location": table, "schema": schema, "partition-spec": spec,
+            "properties": {
+                "write.format.default": "parquet",
+                "schema.name-mapping.default": json.dumps(
+                    _name_mapping(schema["fields"])
+                ),
+            },
+        })
 
-    sby_name = {f["name"]: f for f in schema["fields"]}
-    part_kinds = [
-        (c, "long" if sby_name[c]["type"] in ("int", "long") else "string")
-        for c in part_cols
-    ]
-    part_avro_fields = [
-        {"name": sf["name"],
-         "type": ["null",
-                  "long" if sby_name[sf["name"]]["type"] in ("int", "long")
-                  else "string"],
-         "default": None,
-         "field-id": sf.get("field-id", 1000 + i)}
-        for i, sf in enumerate(spec_fields)
-    ]
-    colmap = {
-        f["name"]: (f["id"], f["type"])
-        for f in schema["fields"]
-        if isinstance(f["type"], str) and f["name"] not in part_cols
-    }
-
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    commit_uuid = str(uuid.uuid4())
-    os.makedirs(meta_dir, exist_ok=True)
+    long_cols = {f["name"] for f in schema["fields"]
+                 if f["type"] in ("int", "long")}
+    snapshot_id, seq, commit_uuid = _new_snapshot(base)
     entries = []
-    total_rows = 0
-    kinds = dict(part_kinds)
     for fp, pv in files:
         rows, size = _parquet_stats(fp)
         if rows == 0:
             continue
-        total_rows += rows
-        nulls, lows, highs = _footer_column_stats(fp, colmap)
         part = {
             c: (None if pv.get(c) is None
-                else (int(pv[c]) if kinds[c] == "long" else str(pv[c])))
+                else (int(pv[c]) if c in long_cols else str(pv[c])))
             for c in part_cols
         }
-        entries.append({
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0,
-                "file_path": fp,
-                "file_format": "PARQUET",
-                "partition": part,
-                "record_count": rows,
-                "file_size_in_bytes": size,
-                "null_value_counts": nulls,
-                "lower_bounds": lows,
-                "upper_bounds": highs,
-                "equality_ids": None,
-            },
-        })
+        entries.append(_added_entry(snapshot_id, seq, fp, part, rows, size))
     if not entries:
         raise ValueError(f"iceberg addFiles: only empty parquet in {src_dir}")
-
-    mp = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-    mb = write_ocf_bytes(
-        _manifest_entry_schema(part_avro_fields), entries,
-        extra_meta={
-            "schema": json.dumps(schema),
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": str(
-                (prev_meta or {}).get("default-spec-id", 0)
-            ),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    with open(mp, "wb") as fh:
-        fh.write(mb)
-    manifests = []
-    if prev_meta is not None:
-        prev_snap = next(
-            (s for s in prev_meta.get("snapshots", [])
-             if s.get("snapshot-id") == prev_meta.get("current-snapshot-id")),
-            None,
-        )
-        if prev_snap is not None:
-            _, pm = read_ocf_file(re.sub(
-                r"^file:/{0,2}(/)", r"\1", prev_snap["manifest-list"]
-            ))
-            manifests.extend(dict(m) for m in pm)
-    manifests.append({
-        "manifest_path": mp,
-        "manifest_length": len(mb),
-        "partition_spec_id": (prev_meta or {}).get("default-spec-id", 0),
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    })
-    lp = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-    lb = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA, manifests,
-        extra_meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
-    )
-    with open(lp, "wb") as fh:
-        fh.write(lb)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": lp,
-        "schema-id": schema.get("schema-id", 0),
-        "summary": {
+    # the files never hold the partition columns, so their footer stats
+    # cover the data columns only; a v3 table gives them row ids
+    fv = int(base.get("format-version", 2))
+    _stamp_data_entries(entries, schema, base if fv >= 3 else None)
+    manifests = _manifest_list_of(base, base.get("current-snapshot-id"))
+    manifests.append(write_manifest(
+        os.path.join(handle.meta_dir, f"{commit_uuid}-m0.avro"), entries,
+        seq=seq, snapshot_id=snapshot_id, spec=spec, schema=schema, fv=fv,
+    ))
+    total_rows = manifests[-1]["added_rows_count"]
+    commit_snapshot(
+        handle, base, manifests, {
             "operation": "append",
-            "added-data-files": str(len(entries)),
-            "added-records": str(total_rows),
+            "added-data-files": len(entries),
+            "added-records": total_rows,
             "imported-from": src_dir,
         },
-    }
-    if prev_meta is not None:
-        meta = dict(prev_meta)
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        meta["current-snapshot-id"] = snapshot_id
-        meta["refs"] = {
-            **(meta.get("refs") or {}),
-            "main": {"snapshot-id": snapshot_id, "type": "branch"},
-        }
-        meta["snapshots"] = list(meta.get("snapshots") or []) + [snapshot]
-        meta["snapshot-log"] = (
-            list(meta.get("snapshot-log") or [])
-            + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-        )[-10:]
-        meta["__version"] = version
-    else:
-        nm = [{"field-id": f["id"], "names": [f["name"]]}
-              for f in schema["fields"]]
-        meta = {
-            "format-version": 2,
-            "table-uuid": commit_uuid,
-            "location": table,
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            "last-column-id": max(f["id"] for f in schema["fields"]),
-            "current-schema-id": 0,
-            "schemas": [schema],
-            "default-spec-id": 0,
-            "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-            "last-partition-id": 999 + len(spec_fields),
-            "default-sort-order-id": 0,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "properties": {
-                "write.format.default": "parquet",
-                "schema.name-mapping.default": json.dumps(nm),
-            },
-            "current-snapshot-id": snapshot_id,
-            "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
-            "snapshots": [snapshot],
-            "snapshot-log": [
-                {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-            ],
-            "metadata-log": [],
-            "__version": 1,
-        }
-    _publish_metadata_exclusive(meta_dir, version, meta)
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+    )
     return {"added_files": len(entries), "rows": total_rows}

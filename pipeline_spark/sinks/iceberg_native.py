@@ -47,7 +47,8 @@ from typing import Any
 from pipeline_spark.functions.avroocf import write_ocf_bytes
 from pipeline_spark.functions.parquetschema import read_parquet
 from pipeline_spark.sources.iceberg_native import (
-    find_table_metadata,
+    _strip_scheme,
+    load_table_metadata,
     parse_legacy_global_deletes,
 )
 
@@ -336,42 +337,380 @@ def _footer_column_stats(path: str, colmap: dict[str, tuple[int, str]]):
     return nulls or None, lows or None, highs or None
 
 
-def _rest_session(p: dict[str, Any]) -> dict[str, Any]:
-    """Open a REST-catalog write session: load the table (or note its
-    absence) and resolve the posix staging location for data/manifest
-    files.  The catalog server owns the METADATA; the client stages the
-    files and commits via requirements/updates."""
-    import urllib.error
+class IcebergTable:
+    """One handle over a filesystem table or a REST-catalog table.
 
-    from pipeline_spark.sources.iceberg_rest import RestCatalog
+    ``meta`` is the metadata an operation plans from (None = no table
+    yet) and ``path`` the posix location files stage under.  ``load()``
+    re-reads fresh metadata — what the optimistic retry loops rebase
+    on.  A filesystem table's metadata carries ``__version``, the
+    ``vN.metadata.json`` it was read from."""
 
-    table = p.get("table") or p.get("tableName")
-    ns, _, name = str(table or "").rpartition(".")
-    if not ns:
-        raise ValueError(
-            "iceberg rest write: 'table' must be \"namespace.table\""
+    def __init__(self, p: dict[str, Any], *, must_exist: bool = True,
+                 stage: bool = False):
+        self.catalog = self.namespace = self.name = None
+        location = p.get("path") or p.get("table") or ""
+        if p.get("catalog"):
+            from pipeline_spark.sources.iceberg_rest import RestCatalog
+
+            ns, _, self.name = str(
+                p.get("table") or p.get("tableName") or ""
+            ).rpartition(".")
+            if not ns:
+                raise ValueError(
+                    f"iceberg rest{' write' if stage else ''}: 'table' must "
+                    'be "namespace.table"'
+                )
+            self.catalog = RestCatalog(p["catalog"], opener=p.get("_opener"))
+            self.namespace = ns.replace(".", "\x1f")
+            self.meta = self.load(must_exist)
+            location = (self.meta or {}).get("location") or p.get("location")
+            if stage and (
+                not location or "://" in str(location).replace("file://", "")
+            ):
+                raise ValueError(
+                    "iceberg rest write: a posix 'location' is required to "
+                    "stage data/manifest files (object-store locations need "
+                    "the jar)"
+                )
+        self.path = _strip_scheme(str(location or ""))
+        if self.catalog is None:
+            self.meta = self.load(must_exist)
+
+    @property
+    def meta_dir(self) -> str:
+        return os.path.join(self.path, "metadata")
+
+    def load(self, must_exist: bool = True) -> dict | None:
+        import urllib.error
+
+        try:
+            if self.catalog is not None:
+                return self.catalog.load_table(self.namespace, self.name)[0]
+            return load_table_metadata(self.path)
+        except urllib.error.HTTPError as exc:
+            if exc.code != 404 or must_exist:
+                raise
+        except FileNotFoundError:
+            if must_exist:
+                raise
+        return None
+
+
+#: REST ``add-*`` action → (payload key, metadata list, id key)
+_ADD_ACTIONS = {
+    "add-schema": ("schema", "schemas", "schema-id"),
+    "add-spec": ("spec", "partition-specs", "spec-id"),
+    "add-sort-order": ("sort-order", "sort-orders", "order-id"),
+}
+#: REST ``set-*`` action → (payload key, metadata key, the add action
+#: whose just-added id ``-1`` names)
+_SET_ACTIONS = {
+    "set-current-schema": ("schema-id", "current-schema-id", "add-schema"),
+    "set-default-spec": ("spec-id", "default-spec-id", "add-spec"),
+    "set-default-sort-order": (
+        "sort-order-id", "default-sort-order-id", "add-sort-order",
+    ),
+}
+
+
+def apply_updates(meta: dict, updates: list[dict]) -> dict:
+    """Table metadata after the REST-spec ``TableUpdate`` list — what a
+    catalog does on CommitTableRequest, applied to a filesystem table.
+    v3 row lineage: an added snapshot advances ``next-row-id`` past the
+    rows it adds (spec §Row Lineage)."""
+    out = dict(meta)
+    added: dict[str, int] = {}
+    for u in updates:
+        action = u["action"]
+        if action == "add-snapshot":
+            snap = u["snapshot"]
+            out["snapshots"] = [*(out.get("snapshots") or []), snap]
+            out["last-sequence-number"] = max(
+                int(out.get("last-sequence-number") or 0),
+                int(snap.get("sequence-number") or 0),
+            )
+            if (int(out.get("format-version", 2)) >= 3
+                    and snap.get("first-row-id") is not None):
+                out["next-row-id"] = max(
+                    int(out.get("next-row-id") or 0),
+                    int(snap["first-row-id"]) + int(
+                        (snap.get("summary") or {}).get("added-records") or 0
+                    ),
+                )
+        elif action == "set-snapshot-ref":
+            out["refs"] = {**(out.get("refs") or {}), u["ref-name"]: {
+                "snapshot-id": u["snapshot-id"], "type": u.get("type", "branch"),
+            }}
+            if u["ref-name"] == "main":
+                out["current-snapshot-id"] = u["snapshot-id"]
+        elif action == "remove-snapshots":
+            gone = set(u["snapshot-ids"])
+            out["snapshots"] = [s for s in out.get("snapshots") or []
+                                if s.get("snapshot-id") not in gone]
+            out["snapshot-log"] = [e for e in out.get("snapshot-log") or []
+                                   if e.get("snapshot-id") not in gone]
+        elif action in _ADD_ACTIONS:
+            key, list_key, id_key = _ADD_ACTIONS[action]
+            item = u[key]
+            out[list_key] = [*(out.get(list_key) or []), item]
+            added[action] = item[id_key]
+            if action == "add-schema":
+                out["last-column-id"] = max(
+                    int(out.get("last-column-id") or 0),
+                    int(u.get("last-column-id") or 0),
+                )
+            elif action == "add-spec":
+                out["last-partition-id"] = max(
+                    [int(out.get("last-partition-id", 999))]
+                    + [int(f["field-id"]) for f in item.get("fields", [])]
+                )
+        elif action in _SET_ACTIONS:
+            key, meta_key, add_action = _SET_ACTIONS[action]
+            out[meta_key] = added[add_action] if u[key] == -1 else u[key]
+        elif action == "set-properties":
+            out["properties"] = {**(out.get("properties") or {}),
+                                 **u["updates"]}
+        elif action == "upgrade-format-version":
+            out["format-version"] = max(int(out.get("format-version", 2)),
+                                        int(u["format-version"]))
+            if out["format-version"] >= 3:
+                out.setdefault("next-row-id", 0)
+        else:
+            raise ValueError(f"iceberg: unsupported table update {action!r}")
+    return out
+
+
+def commit(
+    table: IcebergTable, prev_meta: dict, updates: list[dict],
+    requirements: list[dict],
+) -> None:
+    """The one Iceberg metadata commit.  A REST table sends the update
+    list as one optimistic CommitTableRequest (a failed requirement
+    raises ``CommitConflictError``).  A filesystem table applies the
+    same list to ``prev_meta``, does the bookkeeping a catalog would
+    (last-updated-ms, snapshot-log when main moves, metadata-log) and
+    claims ``v{N+1}.metadata.json`` create-exclusively, N pinned to the
+    metadata the commit was planned from: a racing writer that claimed
+    it first makes this one fail with ``FileExistsError`` instead of
+    being silently erased."""
+    if table.catalog is not None:
+        table.catalog.commit_table(
+            table.namespace, table.name,
+            requirements=requirements, updates=updates,
         )
-    cat = RestCatalog(p["catalog"], opener=p.get("_opener"))
-    ns_key = ns.replace(".", "\x1f")
-    prev_meta = None
-    try:
-        prev_meta, _loc = cat.load_table(ns_key, name)
-    except urllib.error.HTTPError as exc:
-        if exc.code != 404:
-            raise
-    location = (prev_meta or {}).get("location") or p.get("location")
-    if not location or "://" in str(location).replace("file://", ""):
-        raise ValueError(
-            "iceberg rest write: a posix 'location' is required to stage "
-            "data/manifest files (object-store locations need the jar)"
-        )
-    return {
-        "catalog": cat,
-        "namespace": ns_key,
-        "name": name,
-        "prev_meta": prev_meta,
-        "location": re.sub(r"^file:/{0,2}(/)", r"\1", str(location)),
+        return
+    meta = apply_updates(prev_meta, updates)
+    version = int(prev_meta.get("__version") or 0) + 1
+    now_ms = int(time.time() * 1000)
+    meta["last-updated-ms"] = now_ms
+
+    def log(key: str, entry: dict) -> None:  # both logs keep 10 entries
+        meta[key] = [*(meta.get(key) or []),
+                     {"timestamp-ms": now_ms, **entry}][-10:]
+
+    current = meta.get("current-snapshot-id")
+    if current is not None and current != prev_meta.get("current-snapshot-id"):
+        log("snapshot-log", {"snapshot-id": current})
+    prev_file = os.path.join(table.meta_dir, f"v{version - 1}.metadata.json")
+    if os.path.exists(prev_file):
+        log("metadata-log", {"metadata-file": prev_file})
+    meta["__version"] = version
+    os.makedirs(table.meta_dir, exist_ok=True)
+    _publish_metadata_exclusive(table.meta_dir, version, meta)
+
+
+def create_table(table: IcebergTable, body: dict) -> dict:
+    """Table creation from one REST ``CreateTableRequest`` body: a REST
+    table sends it to the catalog and returns the catalog's metadata; a
+    filesystem table turns it into its initial, unpublished metadata
+    (version 0) — the first ``commit`` publishes ``v1``."""
+    if table.catalog is not None:
+        return table.catalog.create_table(table.namespace, body)
+    props = {str(k): str(v) for k, v in (body.get("properties") or {}).items()}
+    spec = body.get("partition-spec") or {"spec-id": 0, "fields": []}
+    order = body.get("write-order")
+    schema = {k: v for k, v in body["schema"].items()
+              if k != "identifier-field-ids"}
+    meta = {
+        "format-version": 3 if props.get("format-version") == "3" else 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": body["location"],
+        "last-sequence-number": 0,
+        "last-updated-ms": int(time.time() * 1000),
+        "last-column-id": _max_field_id(schema),
+        "current-schema-id": schema.get("schema-id", 0),
+        "schemas": [schema],
+        "default-spec-id": spec.get("spec-id", 0),
+        "partition-specs": [spec],
+        "last-partition-id": max(
+            [999] + [int(f["field-id"]) for f in spec.get("fields", [])]
+        ),
+        "default-sort-order-id": order["order-id"] if order else 0,
+        "sort-orders": [{"order-id": 0, "fields": []}]
+        + ([order] if order else []),
+        "properties": props,
+        "current-snapshot-id": None,
+        "refs": {},
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+        "__version": 0,
     }
+    if meta["format-version"] >= 3:
+        meta["next-row-id"] = 0
+    return meta
+
+
+def _max_field_id(node) -> int:
+    """Highest field id in a schema (nested list/map/struct ids too)."""
+    if isinstance(node, list):
+        return max((_max_field_id(x) for x in node), default=0)
+    if not isinstance(node, dict):
+        return 0
+    own = [int(node[k]) for k in ("id", "element-id", "key-id", "value-id")
+           if isinstance(node.get(k), int)]
+    return max(own + [_max_field_id(v) for v in node.values()
+                      if isinstance(v, (dict, list))], default=0)
+
+
+def _new_snapshot(prev_meta: dict | None) -> tuple[int, int, str]:
+    """(snapshot id, sequence number, commit uuid) of the next snapshot."""
+    snapshot_id = int(time.time() * 1000) * 1000 + uuid.uuid4().int % 1000
+    seq = int((prev_meta or {}).get("last-sequence-number") or 0) + 1
+    return snapshot_id, seq, str(uuid.uuid4())
+
+
+def _spec_avro_fields(spec: dict, schema: dict) -> list[dict]:
+    """The manifest's partition-record avro fields for ``spec`` — value
+    types from the spec transforms over the schema's source types."""
+    from pipeline_spark.functions.icebergpart import spec_field_avro_type
+
+    src_types = {f["id"]: f["type"] for f in schema["fields"]}
+    return [
+        {
+            "name": sf["name"],
+            "type": ["null", spec_field_avro_type(
+                sf["transform"], str(src_types.get(sf.get("source-id"), "")),
+            )],
+            "default": None,
+            "field-id": sf.get("field-id", 1000 + i),
+        }
+        for i, sf in enumerate(spec.get("fields", []))
+    ]
+
+
+def write_manifest(
+    path: str, entries: list[dict], *, seq: int, snapshot_id: int,
+    spec: dict, schema: dict | str | None = None, fv: int = 2,
+    content: int = 0, part_fields: list[dict] | None = None,
+    writer: tuple[dict, dict] | None = None,
+) -> dict:
+    """Write one manifest (OCF avro) and return its manifest-list entry:
+    the file/row counts and the minimum sequence number come from the
+    entries' statuses (1 added, 0 existing, 2 deleted).  ``writer`` =
+    a source manifest's (avro schema, header), reused verbatim by a
+    rewrite; otherwise both derive from ``schema``/``spec`` under
+    format version ``fv`` (v3 data manifests carry ``first_row_id``;
+    deletion-vector entries add the puffin addressing fields)."""
+    if writer is not None:
+        avro_schema, header = writer
+    else:
+        avro_schema = _manifest_entry_schema(
+            _spec_avro_fields(spec, schema) if part_fields is None
+            else part_fields,
+            dv_fields=any(e["data_file"].get("file_format") == "PUFFIN"
+                          for e in entries),
+            lineage_fields=fv >= 3 and content == 0,
+        )
+        header = {
+            "schema": schema if isinstance(schema, str) else json.dumps(schema),
+            "partition-spec": json.dumps(spec.get("fields", [])),
+            "partition-spec-id": str(spec.get("spec-id", 0)),
+            "format-version": str(fv),
+            "content": "deletes" if content else "data",
+        }
+    data = write_ocf_bytes(avro_schema, entries, extra_meta=header)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as fh:
+        fh.write(data)
+    files = {0: 0, 1: 0, 2: 0}
+    rows = {0: 0, 1: 0, 2: 0}
+    for e in entries:
+        files[e["status"]] += 1
+        rows[e["status"]] += int(e["data_file"].get("record_count") or 0)
+    live_seqs = [e["sequence_number"] for e in entries if e["status"] != 2]
+    return {
+        "manifest_path": path,
+        "manifest_length": len(data),
+        "partition_spec_id": int(spec.get("spec-id", 0)),
+        "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": min(live_seqs, default=seq),
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": files[1],
+        "existing_files_count": files[0],
+        "deleted_files_count": files[2],
+        "added_rows_count": rows[1],
+        "existing_rows_count": rows[0],
+        "deleted_rows_count": rows[2],
+    }
+
+
+def commit_snapshot(
+    table: IcebergTable, prev_meta: dict, manifests: list[dict],
+    summary: dict, *, snapshot_id: int, seq: int, commit_uuid: str,
+    ref: str = "main", updates: list[dict] = (),
+) -> None:
+    """Write the manifest list, build the snapshot and ``commit`` it:
+    ``updates`` (schema/spec/format/property changes riding the same
+    commit), ``add-snapshot`` and the ref move, asserting the ref still
+    points where this snapshot was planned from (null = the ref must
+    not exist yet).  The snapshot takes the schema id the updates leave
+    current; on a v3 table it takes ``first-row-id`` = the table's
+    ``next-row-id``."""
+    planned = apply_updates(prev_meta, list(updates))
+    fv = int(planned.get("format-version", 2))
+    # carried entries of foreign manifest lists may hold nulls or extra
+    # fields the list schema does not encode
+    keys = [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
+    manifests = [
+        {k: m.get(k) if k == "manifest_path" else int(m.get(k) or 0)
+         for k in keys}
+        for m in manifests
+    ]
+    list_path = os.path.join(
+        table.meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
+    )
+    with open(list_path, "wb") as fh:
+        fh.write(write_ocf_bytes(
+            _MANIFEST_FILE_SCHEMA, manifests,
+            extra_meta={"format-version": str(fv),
+                        "snapshot-id": str(snapshot_id)},
+        ))
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        "sequence-number": seq,
+        "timestamp-ms": int(time.time() * 1000),
+        "manifest-list": list_path,
+        "schema-id": planned.get("current-schema-id", 0),
+        "summary": {str(k): str(v) for k, v in summary.items()},
+    }
+    if fv >= 3:
+        snapshot["first-row-id"] = int(planned.get("next-row-id") or 0)
+    if ref == "main":
+        prev_id = prev_meta.get("current-snapshot-id")
+    else:
+        prev_id = ((prev_meta.get("refs") or {}).get(ref) or {}).get(
+            "snapshot-id")
+    commit(
+        table, prev_meta,
+        [*updates, {"action": "add-snapshot", "snapshot": snapshot},
+         {"action": "set-snapshot-ref", "ref-name": ref, "type": "branch",
+          "snapshot-id": snapshot_id}],
+        [{"type": "assert-ref-snapshot-id", "ref": ref,
+          "snapshot-id": prev_id}],
+    )
 
 
 def write_iceberg_native(df, p: dict[str, Any]) -> None:
@@ -382,18 +721,16 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     optimistic CommitTableRequest (assert-ref-snapshot-id requirement +
     add-snapshot / set-snapshot-ref updates) — a concurrent writer's
     conflict surfaces as a loud retryable error, never a lost update."""
-    rest = _rest_session(p) if p.get("catalog") else None
-    if rest is not None:
-        table_path = rest["location"]
-    else:
-        table_path = str(p.get("path") or p.get("table") or "")
-        if not table_path or "://" in table_path.replace("file://", ""):
+    if not p.get("catalog"):
+        loc = str(p.get("path") or p.get("table") or "")
+        if not loc or "://" in loc.replace("file://", ""):
             raise ValueError(
                 "iceberg native writer needs a local/posix table location "
                 "or a REST catalog config (non-REST catalog URIs need the "
                 "runtime jar)"
             )
-        table_path = re.sub(r"^file:/{0,2}(/)", r"\1", table_path)
+    table = IcebergTable(p, must_exist=False, stage=True)
+    table_path = table.path
     mode = str(p.get("mode", "append")).lower()
     if mode == "addfiles":
         # add_files import (iceberg's own procedure): register existing
@@ -454,7 +791,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         else:
             upserts = df
             touched = df.select(*keys).distinct()
-        if rest is not None:
+        if table.catalog is not None:
             # REST merge: plan the existing rows through the catalog's
             # delete-aware metadata (r5's read path), commit below via
             # the same optimistic CommitTableRequest as overwrite
@@ -463,31 +800,20 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 "table": p.get("table") or p.get("tableName"),
                 "_opener": p.get("_opener"),
             }
-            table_missing = rest["prev_meta"] is None
         else:
             read_params = {"path": table_path}
-            table_missing = False
-        if branch:
-            # a MERGE into a branch reads the BRANCH head, not main —
-            # otherwise rows upserted/removed only on the branch would
-            # regress.  A branch that does not exist yet forks from main
-            # (same rule as the append chaining below), so only pass the
-            # ref when it resolves.
-            if rest is not None:
-                _refs = (rest["prev_meta"] or {}).get("refs") or {}
-            else:
-                try:
-                    with open(find_table_metadata(table_path)) as fh:
-                        _refs = json.load(fh).get("refs") or {}
-                except FileNotFoundError:
-                    _refs = {}
-            if branch in _refs:
-                read_params["ref"] = branch
+        # a MERGE into a branch reads the BRANCH head, not main —
+        # otherwise rows upserted/removed only on the branch would
+        # regress.  A branch that does not exist yet forks from main
+        # (same rule as the append chaining below), so only pass the
+        # ref when it resolves.
+        if branch in ((table.meta or {}).get("refs") or {}):
+            read_params["ref"] = branch
         try:
             # delete-aware read: merging over a merge-on-read table must
             # not resurrect rows its delete files already removed
             existing = (
-                None if table_missing
+                None if table.meta is None
                 else read_iceberg_native(spark, read_params)
             )
         except FileNotFoundError:
@@ -529,22 +855,8 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         df_w = df_w.withColumn(tmp, col)
         part_info.append((tmp, fld, kind))
 
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_meta: dict | None = None
-    prev_version = 0
-    if rest is not None:
-        prev_meta = rest["prev_meta"]  # versioning is server-side
-    elif os.path.isdir(meta_dir):
-        try:
-            prev_file_found = find_table_metadata(table_path)
-            with open(prev_file_found) as fh:
-                prev_meta = json.load(fh)
-            m = re.search(r"v(\d+)\.metadata\.json$", prev_file_found)
-            prev_version = (
-                int(m.group(1)) if m else prev_meta.get("__version", 0)
-            )
-        except FileNotFoundError:
-            prev_meta = None
+    meta_dir = table.meta_dir
+    prev_meta = table.meta
     if branch and prev_meta is None:
         # Iceberg refuses branch writes to tables that do not exist: the
         # branch would have no fork point and a later {ref: branch} read
@@ -560,11 +872,12 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     evolve_spec = False
     this_spec_id = 0
     part_field_ids = [1000 + i for i in range(len(part_info))]
-    if mode == "append" and prev_meta is not None:
+    if prev_meta is not None:
         # an append must not silently rewrite the table's partition spec:
         # old manifests keep referencing spec-id 0, so a mismatched spec
         # would corrupt the metadata for every reader.  Checked BEFORE the
-        # data write so a rejected append leaves no orphan files.
+        # data write so a rejected append leaves no orphan files.  An
+        # overwrite with a new spec adds it the same way an evolution does.
         from pipeline_spark.functions.icebergpart import spec_transform_str as _sts
 
         prev_specs = prev_meta.get("partition-specs") or [{}]
@@ -581,7 +894,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         ]
         new_fields = [(fld["name"], _sts(fld)) for _t, fld, _k in part_info]
         if prev_fields != new_fields:
-            if p.get("evolvePartitionSpec"):
+            if p.get("evolvePartitionSpec") or mode != "append":
                 # partition-spec EVOLUTION (r7, spec §Partition Evolution):
                 # the new spec lands under a fresh spec-id with fresh
                 # partition field-ids (continuing last-partition-id); old
@@ -622,7 +935,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     # no orphan files.
     reuse_schema: dict | None = None
     evolved_last_column_id: int | None = None
-    if mode == "append" and prev_meta is not None:
+    if prev_meta is not None:
         prev_schema = next(
             s for s in prev_meta["schemas"]
             if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
@@ -634,7 +947,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
             f for f in prev_schema["fields"]
             if f.get("write-default") is not None
             and f["name"] not in df.columns
-        ]
+        ] if mode == "append" else []
         if wd:
             from pyspark.sql import functions as F
 
@@ -676,7 +989,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         prev_sig = _sig(prev_schema)
         if new_sig == prev_sig:
             reuse_schema = prev_schema
-        else:
+        elif mode == "append":
             added = sorted(n for n, _ in new_sig - prev_sig)
             removed = sorted(n for n, _ in prev_sig - new_sig)
             prev_names = {f["name"] for f in prev_schema["fields"]}
@@ -746,11 +1059,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                     "or changed types); set mergeSchema: true to add new "
                     "optional columns, or use mode: overwrite to evolve"
                 )
-    os.makedirs(meta_dir, exist_ok=True)
-
     commit_uuid = str(uuid.uuid4())
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
 
     # 1. data files — a plain distributed parquet write into data/<uuid>/
     # (hive-style transform-value dirs when partitioned; the transform
@@ -837,15 +1146,68 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         return vals
 
     # 2-4. manifest / manifest list / snapshot / metadata — built from
-    # (prev_meta, prev_version) inside a closure so a lost optimistic
-    # race can rebase the COMMIT on fresh metadata without re-staging
-    # the data files (r9: the append twin of the DML retry wrappers).
-    def _commit(prev_meta, prev_version):
-        seq = (prev_meta or {}).get("last-sequence-number", 0) + 1
+    # prev_meta inside a closure so a lost optimistic race can rebase the
+    # COMMIT on fresh metadata without re-staging the data files (r9: the
+    # append twin of the DML retry wrappers).
+    user_props = {str(k): str(v) for k, v in (p.get("properties") or {}).items()}
+
+    def _commit(prev_meta):
+        snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
+        if reuse_schema is not None:
+            schema = reuse_schema
+        else:
+            schema = iceberg_schema(df.schema)
+            schema.pop("__last_column_id")
+        source_ids = {f["name"]: f["id"] for f in schema["fields"]}
+        spec = {"spec-id": this_spec_id, "fields": [
+            {
+                "name": fld["name"],
+                "transform": spec_transform_str(fld),
+                "source-id": source_ids[fld["source"]],
+                "field-id": part_field_ids[i],
+            }
+            for i, (_tmp, fld, _kind) in enumerate(part_info)
+        ]}
+        order_fields = [
+            {"transform": "identity", "source-id": source_ids[c],
+             "direction": "asc", "null-order": "nulls-first"}
+            for c in sort_by
+        ]
+        updates: list[dict] = []
+        base = prev_meta
+        if prev_meta is None:
+            base = create_table(table, {
+                "name": table.name,
+                "location": table_path,
+                "schema": {**schema, "schema-id": 0, "identifier-field-ids": []},
+                "partition-spec": spec,
+                "write-order": (
+                    {"order-id": 1, "fields": order_fields}
+                    if sort_by else None
+                ),
+                "stage-create": False,
+                "properties": {
+                    # user table properties first (e.g. the spec's
+                    # per-column write.parquet.bloom-filter-enabled.column.X),
+                    # reserved keys below always win
+                    **user_props,
+                    "write.format.default": "parquet",
+                    "schema.name-mapping.default": json.dumps(
+                        _name_mapping(schema["fields"])
+                    ),
+                },
+            })
+        else:
+            updates = _write_updates(
+                prev_meta, schema, spec, order_fields, user_props,
+                new_schema=reuse_schema is None
+                or evolved_last_column_id is not None,
+                new_spec=evolve_spec, replace=mode != "append",
+            )
+        lineage = int(apply_updates(base, updates).get("format-version", 2)) >= 3
 
         # 2. manifest (one per commit; entries = the new files)
         entries = []
-        added_rows = 0
         for path in data_files:
             if not os.path.exists(path):
                 continue  # empty part removed by a prior commit attempt
@@ -855,101 +1217,13 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 # manifest (and later scans) to live data only
                 os.remove(path)
                 continue
-            added_rows += rows
-            entries.append(
-                {
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": path,
-                        "file_format": "PARQUET",
-                        "partition": _partition_values(path),
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                        "equality_ids": None,
-                    },
-                }
-            )
-        live_files = [e["data_file"]["file_path"] for e in entries]
-        # v3 row lineage (spec field-id 142): stamp each data file's
-        # EXPLICIT first_row_id off the table's next-row-id so readers
-        # derive _row_id = first_row_id + position without the
-        # snapshot-inheritance walk
-        lineage = (
-            prev_meta is not None
-            and int(prev_meta.get("format-version", 2)) >= 3
-        ) or (
-            prev_meta is None
-            and str((p.get("properties") or {}).get("format-version", ""))
-            == "3"
-        )
-        if lineage:
-            _frid = int((prev_meta or {}).get("next-row-id") or 0)
-            for e in entries:
-                e["data_file"]["first_row_id"] = _frid
-                _frid += int(e["data_file"]["record_count"])
-        if reuse_schema is not None:
-            schema = reuse_schema
-            last_column_id = (
-                evolved_last_column_id
-                if evolved_last_column_id is not None
-                else (prev_meta or {}).get("last-column-id", 0)
-            )
-        else:
-            schema = iceberg_schema(df.schema)
-            last_column_id = schema.pop("__last_column_id")
-        source_ids = {f["name"]: f["id"] for f in schema["fields"]}
-
+            entries.append(_added_entry(
+                snapshot_id, seq, path, _partition_values(path), rows, size,
+            ))
         # per-file column stats (field-id-keyed null counts + Appendix-D
-        # serialized bounds) so readers can skip files at the MANIFEST level
-        colmap = {
-            f["name"]: (f["id"], f["type"])
-            for f in schema["fields"]
-            if isinstance(f["type"], str)
-        }
-        if colmap:
-            for e in entries:
-                nulls, lows, highs = _footer_column_stats(
-                    e["data_file"]["file_path"], colmap
-                )
-                e["data_file"]["null_value_counts"] = nulls
-                e["data_file"]["lower_bounds"] = lows
-                e["data_file"]["upper_bounds"] = highs
-        part_avro_fields = [
-            {
-                "name": fld["name"],
-                "type": ["null", avro_partition_type(kind)],
-                "default": None,
-                "field-id": part_field_ids[i],
-            }
-            for i, (_tmp, fld, kind) in enumerate(part_info)
-        ]
-        spec_fields = [
-            {
-                "name": fld["name"],
-                "transform": spec_transform_str(fld),
-                "source-id": source_ids[fld["source"]],
-                "field-id": part_field_ids[i],
-            }
-            for i, (_tmp, fld, _kind) in enumerate(part_info)
-        ]
-        manifest_path = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-        manifest_bytes = write_ocf_bytes(
-            _manifest_entry_schema(part_avro_fields, lineage_fields=lineage),
-            entries,
-            extra_meta={
-                "schema": json.dumps(schema),
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": str(this_spec_id),
-                "format-version": "3" if lineage else "2",
-                "content": "data",
-            },
-        )
-        with open(manifest_path, "wb") as fh:
-            fh.write(manifest_bytes)
+        # serialized bounds) so readers can skip files at the MANIFEST
+        # level; v3 row lineage stamps each file's explicit first_row_id
+        _stamp_data_entries(entries, schema, base if lineage else None)
 
         # 3. manifest list: prior snapshot's manifests (append) + the new one.
         # A branch append chains from the BRANCH head (forking from main's
@@ -961,317 +1235,43 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 head_id = (
                     (prev_meta.get("refs") or {}).get(branch) or {}
                 ).get("snapshot-id", head_id)
-            prev_snap = next(
-                (
-                    s
-                    for s in prev_meta.get("snapshots", [])
-                    if s.get("snapshot-id") == head_id
-                ),
-                None,
-            )
-            if prev_snap is not None:
-                from pipeline_spark.functions.avroocf import read_ocf_file
-
-                prev_list = re.sub(
-                    r"^file:/{0,2}(/)", r"\1", prev_snap["manifest-list"]
-                )
-                _, prev_manifests = read_ocf_file(prev_list)
-                manifests.extend(dict(m) for m in prev_manifests)
-        manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": len(manifest_bytes),
-                "partition_spec_id": this_spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(live_files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": added_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-        list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-        list_bytes = write_ocf_bytes(
-            _MANIFEST_FILE_SCHEMA,
-            manifests,
-            extra_meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
-        )
-        with open(list_path, "wb") as fh:
-            fh.write(list_bytes)
-
-        # 4. table metadata vN + version-hint (HadoopCatalog convention)
-        total_rows = sum(m["added_rows_count"] + m["existing_rows_count"] for m in manifests)
-        total_files = sum(m["added_files_count"] + m["existing_files_count"] for m in manifests)
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": list_path,
-            "schema-id": 0,
-            "summary": {
+            manifests = _manifest_list_of(prev_meta, head_id)
+        manifests.append(write_manifest(
+            os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
+            seq=seq, snapshot_id=snapshot_id, spec=spec, schema=schema,
+            fv=3 if lineage else 2,
+            part_fields=[
+                {
+                    "name": fld["name"],
+                    "type": ["null", avro_partition_type(kind)],
+                    "default": None,
+                    "field-id": part_field_ids[i],
+                }
+                for i, (_tmp, fld, kind) in enumerate(part_info)
+            ],
+        ))
+        added_rows = manifests[-1]["added_rows_count"]
+        commit_snapshot(
+            table, base, manifests, {
                 "operation": "append" if mode == "append" else "overwrite",
-                "added-data-files": str(len(live_files)),
-                "added-records": str(added_rows),
-                "total-records": str(total_rows),
-                "total-data-files": str(total_files),
+                "added-data-files": len(entries),
+                "added-records": added_rows,
+                "total-records": sum(
+                    m["added_rows_count"] + m["existing_rows_count"]
+                    for m in manifests
+                ),
+                "total-data-files": sum(
+                    m["added_files_count"] + m["existing_files_count"]
+                    for m in manifests
+                ),
                 # caller bookkeeping (spec: summary is a string map) — the
                 # streaming sink stamps its (appId, batchId) here for
                 # exactly-once replay detection, Flink's own pattern
-                **{str(k): str(v)
-                   for k, v in (p.get("summaryProperties") or {}).items()},
+                **(p.get("summaryProperties") or {}),
             },
-        }
-        if rest is not None:
-            if prev_meta is not None:
-                _stamp_row_lineage(prev_meta, snapshot, None, added_rows)
-            # catalog-owned metadata: the commit is the spec's optimistic
-            # CommitTableRequest — the staged snapshot either lands atomically
-            # on the asserted ref or conflicts loudly.  A branch write asserts
-            # and moves ONLY the branch ref (assert-ref-snapshot-id with a
-            # null snapshot-id = "the ref must not exist yet", per the spec),
-            # so main and a concurrent branch writer never race each other.
-            cat = rest["catalog"]
-            ref_name = branch or "main"
-            updates: list[dict] = []
-            if prev_meta is None:
-                cat.create_table(rest["namespace"], {
-                    "name": rest["name"],
-                    "location": table_path,
-                    "schema": {**schema, "identifier-field-ids": []},
-                    "partition-spec": {"spec-id": 0, "fields": spec_fields},
-                    "write-order": (
-                        {"order-id": 1, "fields": [
-                            {"transform": "identity",
-                             "source-id": source_ids[c],
-                             "direction": "asc", "null-order": "nulls-first"}
-                            for c in sort_by
-                        ]} if sort_by else None
-                    ),
-                    "stage-create": False,
-                    "properties": {
-                        "write.format.default": "parquet",
-                        "schema.name-mapping.default": json.dumps(
-                            _name_mapping(schema["fields"])
-                        ),
-                    },
-                })
-                prev_snap_id = None
-            else:
-                if branch:
-                    prev_snap_id = (
-                        (prev_meta.get("refs") or {}).get(branch) or {}
-                    ).get("snapshot-id")
-                else:
-                    prev_snap_id = prev_meta.get("current-snapshot-id")
-                if evolved_last_column_id is not None:
-                    # mergeSchema on a catalog table: the evolution and the
-                    # snapshot land in ONE optimistic commit (spec's
-                    # add-schema + set-current-schema; -1 = the just-added)
-                    new_sid = max(
-                        (s.get("schema-id", 0)
-                         for s in prev_meta.get("schemas", [])),
-                        default=0,
-                    ) + 1
-                    snapshot["schema-id"] = new_sid
-                    updates.append({
-                        "action": "add-schema",
-                        "schema": {**schema, "schema-id": new_sid},
-                        "last-column-id": evolved_last_column_id,
-                    })
-                    updates.append(
-                        {"action": "set-current-schema", "schema-id": -1}
-                    )
-            if evolve_spec:
-                # spec evolution rides the SAME optimistic commit (spec's
-                # add-spec + set-default-spec; -1 = the just-added spec)
-                updates.append({
-                    "action": "add-spec",
-                    "spec": {"spec-id": this_spec_id, "fields": spec_fields},
-                })
-                updates.append({"action": "set-default-spec", "spec-id": -1})
-            updates.append({"action": "add-snapshot", "snapshot": snapshot})
-            updates.append({
-                "action": "set-snapshot-ref", "ref-name": ref_name,
-                "type": "branch", "snapshot-id": snapshot_id,
-            })
-            cat.commit_table(
-                rest["namespace"], rest["name"],
-                requirements=[{
-                    "type": "assert-ref-snapshot-id",
-                    "ref": ref_name,
-                    "snapshot-id": prev_snap_id,
-                }],
-                updates=updates,
-            )
-            return
-        if prev_meta is not None:
-            version = prev_version + 1
-            snapshots = list(prev_meta.get("snapshots", [])) + [snapshot]
-            snapshot_log = list(prev_meta.get("snapshot-log", []))
-            metadata_log = list(prev_meta.get("metadata-log", []))
-            table_uuid = prev_meta.get("table-uuid", commit_uuid)
-            last_column_id = max(last_column_id, prev_meta.get("last-column-id", 0))
-            refs = dict(prev_meta.get("refs") or {})
-        else:
-            version = 1
-            snapshots = [snapshot]
-            snapshot_log = []
-            metadata_log = []
-            table_uuid = commit_uuid
-            refs = {}
-        if branch and prev_meta is not None:
-            # branch write: only the branch ref moves; main (current) and
-            # the main snapshot-log stay where they are
-            refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-            current_id = prev_meta.get("current-snapshot-id")
-        else:
-            refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-            current_id = snapshot_id
-            snapshot_log.append(
-                {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-            )
-
-        prev_file = os.path.join(meta_dir, f"v{version - 1}.metadata.json")
-        if version > 1 and os.path.exists(prev_file):
-            metadata_log.append({"timestamp-ms": now_ms, "metadata-file": prev_file})
-
-        # schema history (r7): appends PRESERVE the table's schema list and
-        # name-mapping — a reused schema changes nothing; a mergeSchema
-        # evolution ADDS the evolved schema under a fresh schema-id (spec
-        # rule: schemas are immutable once written, history shows the names
-        # of its day) and MERGES new fields into the existing name-mapping
-        # so names recorded by earlier alters keep resolving.
-        if mode == "append" and prev_meta is not None:
-            schemas_list = [dict(s) for s in prev_meta.get("schemas", [])]
-            cur_sid = prev_meta.get("current-schema-id", 0)
-            props = dict(prev_meta.get("properties") or {})
-            if evolved_last_column_id is not None:
-                cur_sid = max(
-                    (s.get("schema-id", 0) for s in schemas_list), default=0
-                ) + 1
-                schemas_list.append({**schema, "schema-id": cur_sid})
-                prior: dict[int, list[str]] = {}
-                try:
-                    for e in json.loads(
-                        props.get("schema.name-mapping.default", "[]")
-                    ):
-                        if e.get("field-id") is not None:
-                            prior[int(e["field-id"])] = list(e.get("names") or [])
-                except (ValueError, TypeError):
-                    prior = {}
-                mapping = []
-                for f in schema["fields"]:
-                    entry_names = [f["name"]] + [
-                        n for n in prior.get(f["id"], []) if n != f["name"]
-                    ]
-                    mapping.append({"field-id": f["id"], "names": entry_names})
-                props["schema.name-mapping.default"] = json.dumps(mapping)
-            props.setdefault("write.format.default", "parquet")
-        else:
-            schemas_list = [{**schema, "schema-id": 0}]
-            cur_sid = 0
-            props = {
-                # user table properties first (e.g. the spec's per-column
-                # write.parquet.bloom-filter-enabled.column.X), reserved
-                # keys below always win
-                **{str(k): str(v) for k, v in (p.get("properties") or {}).items()},
-                "write.format.default": "parquet",
-                "schema.name-mapping.default": json.dumps(
-                    _name_mapping(schema["fields"])
-                ),
-            }
-        snapshot["schema-id"] = cur_sid
-
-        # partition specs: appends preserve the table's spec history (an
-        # evolution ADDS the new spec and flips the default; a reuse changes
-        # nothing); create/overwrite start fresh at spec-id 0
-        if mode == "append" and prev_meta is not None:
-            specs_list = [
-                dict(sp) for sp in (prev_meta.get("partition-specs") or []) if sp
-            ]
-            if evolve_spec or not specs_list:
-                specs_list.append({"spec-id": this_spec_id, "fields": spec_fields})
-            last_partition_id = max(
-                [int(prev_meta.get("last-partition-id", 999))]
-                + [f["field-id"] for f in spec_fields]
-            )
-        else:
-            specs_list = [{"spec-id": 0, "fields": spec_fields}]
-            last_partition_id = 999 + len(spec_fields)
-
-        # sort orders: create-with-sortBy records order-id 1 and makes it
-        # the default; appends preserve the table's order history verbatim
-        if mode == "append" and prev_meta is not None:
-            sort_orders_list = [
-                dict(o) for o in (
-                    prev_meta.get("sort-orders")
-                    or [{"order-id": 0, "fields": []}]
-                )
-            ]
-            default_sort_id = prev_meta.get("default-sort-order-id", 0)
-        elif sort_by:
-            sort_orders_list = [
-                {"order-id": 0, "fields": []},
-                {"order-id": 1, "fields": [
-                    {"transform": "identity", "source-id": source_ids[c],
-                     "direction": "asc", "null-order": "nulls-first"}
-                    for c in sort_by
-                ]},
-            ]
-            default_sort_id = 1
-        else:
-            sort_orders_list = [{"order-id": 0, "fields": []}]
-            default_sort_id = 0
-
-        meta = {
-            "format-version": 2,
-            "table-uuid": table_uuid,
-            "location": table_path,
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            "last-column-id": last_column_id,
-            "current-schema-id": cur_sid,
-            "schemas": schemas_list,
-            "default-spec-id": this_spec_id,
-            "partition-specs": specs_list,
-            "last-partition-id": last_partition_id,
-            "default-sort-order-id": default_sort_id,
-            "sort-orders": sort_orders_list,
-            "properties": props,
-            "current-snapshot-id": current_id,
-            "refs": refs,
-            "snapshots": snapshots,
-            "snapshot-log": snapshot_log[-10:],
-            "metadata-log": metadata_log[-10:],
-            "__version": version,
-        }
-        if (
-            prev_meta is not None
-            and int(prev_meta.get("format-version", 2)) >= 3
-        ):
-            # a v3 table (puffin DVs landed) must STAY v3: the history
-            # this metadata carries still references DV manifests, which
-            # a format-version-2 stamp would make spec-invalid — and the
-            # row-lineage high-water must survive and advance
-            meta["format-version"] = int(prev_meta["format-version"])
-            _stamp_row_lineage(prev_meta, snapshot, meta, added_rows)
-        elif prev_meta is None and str(
-            (p.get("properties") or {}).get("format-version", "")
-        ) == "3":
-            # CREATE TBLPROPERTIES('format-version'='3') — iceberg's own
-            # opt-in; the first snapshot starts the row-id space at 0
-            meta["format-version"] = 3
-            snapshot["first-row-id"] = 0
-            meta["next-row-id"] = added_rows
-        # create-exclusive: a concurrent writer that claimed this version
-        # first wins; the loser surfaces a loud FileExistsError (the DML
-        # paths — merge/update/delete/MOR — retry via their conflict-checked
-        # wrappers; a plain append re-runs cheaply at the caller)
-        _publish_metadata_exclusive(meta_dir, version, meta)
+            snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+            ref=branch or "main", updates=updates,
+        )
 
     from pipeline_spark.sources.iceberg_rest import CommitConflictError
 
@@ -1279,7 +1279,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     attempts = 3
     while True:
         try:
-            return _commit(prev_meta, prev_version)
+            return _commit(prev_meta)
         except (FileExistsError, CommitConflictError) as conflict:
             # a racing writer claimed this version / moved the ref.
             # Only plain appends rebase: they read nothing a disjoint
@@ -1294,14 +1294,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 raise
             attempts -= 1
             try:
-                if rest is not None:
-                    fresh, _loc = rest["catalog"].load_table(
-                        rest["namespace"], rest["name"]
-                    )
-                    rest["prev_meta"] = fresh
-                else:
-                    with open(find_table_metadata(table_path)) as fh:
-                        fresh = json.load(fh)
+                fresh = table.load()
                 # disjointness proof: an append conflicts only with shape
                 # drift or a rollback of its base (check_adds=False —
                 # blind appends read no rows an interleave could change)
@@ -1316,23 +1309,128 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 # disjointness, so the original conflict stays loud
                 raise conflict from None
             prev_meta = fresh
-            prev_version = int(fresh.get("__version") or 0)
 
 
-def _rest_meta_session(p: dict[str, Any]):
-    """Metadata-only REST session for tag/rollback/alter: load the table
-    (it must exist — these operate on history) and return
-    ``(catalog, namespace, name, meta)``.  No staging location needed."""
-    from pipeline_spark.sources.iceberg_rest import RestCatalog
+def _write_updates(
+    meta: dict, schema: dict, spec: dict, order_fields: list[dict],
+    user_props: dict, *, new_schema: bool, new_spec: bool, replace: bool,
+) -> list[dict]:
+    """The metadata updates a write into an existing table rides on its
+    snapshot: a merged-schema append or a replacing write adds its
+    schema (fresh schema-id) and name-mapping; an evolved spec is added
+    and made default; a replacing write also makes its ``sortBy`` the
+    default sort order (unsorted without one) and sets its properties."""
+    updates: list[dict] = []
+    if new_schema:
+        # name mapping: an append MERGES into the existing entries so
+        # names recorded by earlier alters keep resolving their field ids
+        prior = _name_mapping_names(meta)
+        mapping = _name_mapping(schema["fields"]) if replace else [
+            {"field-id": f["id"], "names": [f["name"]] + [
+                n for n in prior.get(f["id"], []) if n != f["name"]
+            ]}
+            for f in schema["fields"]
+        ]
+        updates += [
+            {"action": "add-schema",
+             "schema": {**schema, "schema-id": max(
+                 s.get("schema-id", 0) for s in meta["schemas"]) + 1},
+             "last-column-id": _max_field_id(schema)},
+            {"action": "set-current-schema", "schema-id": -1},
+            {"action": "set-properties", "updates": {
+                "schema.name-mapping.default": json.dumps(mapping)}},
+        ]
+    if new_spec:
+        updates += [{"action": "add-spec", "spec": spec},
+                    {"action": "set-default-spec", "spec-id": -1}]
+    if not replace:
+        return updates
+    orders = meta.get("sort-orders") or [{"order-id": 0, "fields": []}]
+    default = next((o for o in orders if o.get("order-id")
+                    == meta.get("default-sort-order-id", 0)), orders[0])
+    if not order_fields and default.get("fields"):
+        updates.append({"action": "set-default-sort-order", "sort-order-id": 0})
+    elif order_fields and default.get("fields") != order_fields:
+        updates += [
+            {"action": "add-sort-order", "sort-order": {
+                "order-id": max(o.get("order-id", 0) for o in orders) + 1,
+                "fields": order_fields,
+            }},
+            {"action": "set-default-sort-order", "sort-order-id": -1},
+        ]
+    if user_props:
+        updates.append({"action": "set-properties", "updates": user_props})
+    return updates
 
-    table = p.get("table") or p.get("tableName")
-    ns, _, name = str(table or "").rpartition(".")
-    if not ns:
-        raise ValueError('iceberg rest: \'table\' must be "namespace.table"')
-    cat = RestCatalog(p["catalog"], opener=p.get("_opener"))
-    ns_key = ns.replace(".", "\x1f")
-    meta, _loc = cat.load_table(ns_key, name)  # 404 propagates: must exist
-    return cat, ns_key, name, meta
+
+def _name_mapping_names(meta: dict) -> dict[int, list[str]]:
+    """field id → every name the table's name-mapping records for it."""
+    prior: dict[int, list[str]] = {}
+    try:
+        for e in json.loads(
+            (meta.get("properties") or {}).get(
+                "schema.name-mapping.default", "[]"
+            )
+        ):
+            if e.get("field-id") is not None:
+                prior[int(e["field-id"])] = list(e.get("names") or [])
+    except (ValueError, TypeError):
+        prior = {}
+    return prior
+
+
+def _added_entry(snapshot_id: int, seq: int, path: str, partition: dict,
+                 rows: int, size: int, content: int = 0) -> dict:
+    """An ADDED manifest entry for one data or delete file."""
+    return {
+        "status": _STATUS_ADDED,
+        "snapshot_id": snapshot_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": {
+            "content": content,
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": rows,
+            "file_size_in_bytes": size,
+            "equality_ids": None,
+        },
+    }
+
+
+def _stamp_data_entries(entries: list[dict], schema: dict,
+                        lineage_meta: dict | None) -> None:
+    """Footer column stats for ADDED data entries under ``schema``'s
+    field ids; with ``lineage_meta`` (a v3 table) each file also takes
+    an explicit first_row_id range off the table's next-row-id — the
+    same base the snapshot's first-row-id takes."""
+    colmap = {
+        f["name"]: (f["id"], f["type"])
+        for f in schema["fields"]
+        if isinstance(f["type"], str)
+    }
+    frid = int((lineage_meta or {}).get("next-row-id") or 0)
+    for e in entries:
+        d = e["data_file"]
+        if colmap:
+            (d["null_value_counts"], d["lower_bounds"],
+             d["upper_bounds"]) = _footer_column_stats(d["file_path"], colmap)
+        if lineage_meta is not None:
+            d["first_row_id"] = frid
+            frid += int(d["record_count"])
+
+
+def _manifest_list_of(meta: dict, snapshot_id) -> list[dict]:
+    """The manifest-list entries of one snapshot (none when absent)."""
+    from pipeline_spark.functions.avroocf import read_ocf_file
+
+    snap = next((s for s in meta.get("snapshots") or []
+                 if s.get("snapshot-id") == snapshot_id), None)
+    if snap is None:
+        return []
+    _, manifests = read_ocf_file(_strip_scheme(snap["manifest-list"]))
+    return [dict(m) for m in manifests]
 
 
 def rollback_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
@@ -1341,27 +1439,13 @@ def rollback_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     the target, the snapshot-log records the rollback as a new entry,
     and nothing is deleted, so the rollback itself can be rolled back
     (until expire_snapshots trims history).  ``snapshotId`` or
-    ``asOfTimestamp`` picks the target.  On a REST catalog (r7) the flip
-    is one optimistic set-snapshot-ref commit asserting main's current
-    position — a concurrent writer conflicts loudly, never a lost
-    rollback."""
-    from pipeline_spark.sources.iceberg_native import (
-        _snapshot_at_timestamp,
-        find_table_metadata,
-    )
+    ``asOfTimestamp`` picks the target.  The flip is one optimistic
+    set-snapshot-ref commit asserting main's current position — a
+    concurrent writer conflicts loudly, never a lost rollback."""
+    from pipeline_spark.sources.iceberg_native import _snapshot_at_timestamp
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        _cat, _ns, _name, meta = rest
-        table_path = str(meta.get("location") or "")
-        prev_file = None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            meta = json.load(fh)
+    table = IcebergTable(p)
+    meta = table.meta
     snap_id = p.get("snapshotId")
     ts = p.get("asOfTimestamp")
     if (snap_id is None) == (ts is None):
@@ -1369,7 +1453,7 @@ def rollback_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             "iceberg rollback: exactly one of snapshotId / asOfTimestamp"
         )
     if ts is not None:
-        snap_id = _snapshot_at_timestamp(table_path, ts, meta)
+        snap_id = _snapshot_at_timestamp(table.path, ts, meta)
     snap_id = int(snap_id)
     known = {s["snapshot-id"] for s in meta.get("snapshots") or []}
     if snap_id not in known:
@@ -1379,40 +1463,13 @@ def rollback_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         )
     if meta.get("current-snapshot-id") == snap_id:
         return {"rolled_back_to": snap_id, "changed": False}
-    if rest is not None:
-        cat, ns_key, name, _m = rest
-        cat.commit_table(
-            ns_key, name,
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": "main",
-                "snapshot-id": meta.get("current-snapshot-id"),
-            }],
-            updates=[{
-                "action": "set-snapshot-ref", "ref-name": "main",
-                "type": "branch", "snapshot-id": snap_id,
-            }],
-        )
-        return {"rolled_back_to": snap_id, "changed": True}
-    m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-    version = (int(m.group(1)) if m else meta.get("__version", 0)) + 1
-    now_ms = int(time.time() * 1000)
-    meta = dict(meta)
-    meta["current-snapshot-id"] = snap_id
-    # main tracks current (refs stay consistent for ref-reads and expire)
-    meta["refs"] = {
-        **(meta.get("refs") or {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    meta["last-updated-ms"] = now_ms
-    meta["snapshot-log"] = (list(meta.get("snapshot-log") or []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ])[-10:]
-    meta["metadata-log"] = (list(meta.get("metadata-log") or []) + [
-        {"timestamp-ms": now_ms, "metadata-file": prev_file}
-    ])[-10:]
-    meta["__version"] = version
-    meta_dir = os.path.join(table_path, "metadata")
-    _publish_metadata_exclusive(meta_dir, version, meta)
+    commit(
+        table, meta,
+        [{"action": "set-snapshot-ref", "ref-name": "main",
+          "type": "branch", "snapshot-id": snap_id}],
+        [{"type": "assert-ref-snapshot-id", "ref": "main",
+          "snapshot-id": meta.get("current-snapshot-id")}],
+    )
     return {"rolled_back_to": snap_id, "changed": True}
 
 
@@ -1420,29 +1477,17 @@ def tag_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     """Create (or move) a named snapshot ref — ``refType: tag`` (default,
     an immutable bookmark for reproducibility: "the exact table state
     run X trained on") or ``refType: branch``.  Metadata-only; tagged
-    snapshots survive expire_snapshots (retention protects refs).  On a
-    REST catalog (r7) the ref lands through one optimistic
-    set-snapshot-ref commit asserting the ref's prior position (null =
-    must not exist yet)."""
-    from pipeline_spark.sources.iceberg_native import find_table_metadata
-
+    snapshots survive expire_snapshots (retention protects refs).  The
+    ref lands through one optimistic set-snapshot-ref commit asserting
+    the ref's prior position (null = must not exist yet)."""
     name = p.get("tagName") or p.get("refName")
     if not name:
         raise ValueError("iceberg tag: 'tagName' is required")
     ref_type = str(p.get("refType", "tag")).lower()
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"iceberg tag: refType '{ref_type}' (tag/branch)")
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        _cat, _ns, _tname, meta = rest
-        prev_file = None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            meta = json.load(fh)
+    table = IcebergTable(p)
+    meta = table.meta
     snap_id = p.get("snapshotId")
     if snap_id is None:
         snap_id = meta.get("current-snapshot-id")
@@ -1454,35 +1499,14 @@ def tag_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         raise ValueError(
             f"iceberg tag: snapshot {snap_id} is not in the table's history"
         )
-    if rest is not None:
-        cat, ns_key, tname, _m = rest
-        prior = ((meta.get("refs") or {}).get(str(name)) or {}).get(
-            "snapshot-id"
-        )
-        cat.commit_table(
-            ns_key, tname,
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": str(name),
-                "snapshot-id": prior,
-            }],
-            updates=[{
-                "action": "set-snapshot-ref", "ref-name": str(name),
-                "type": ref_type, "snapshot-id": snap_id,
-            }],
-        )
-        return {"ref": str(name), "snapshot_id": snap_id, "type": ref_type}
-    m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-    version = (int(m.group(1)) if m else meta.get("__version", 0)) + 1
-    now_ms = int(time.time() * 1000)
-    meta = dict(meta)
-    meta["refs"] = {
-        **(meta.get("refs") or {}),
-        str(name): {"snapshot-id": snap_id, "type": ref_type},
-    }
-    meta["last-updated-ms"] = now_ms
-    meta["__version"] = version
-    meta_dir = os.path.join(table_path, "metadata")
-    _publish_metadata_exclusive(meta_dir, version, meta)
+    prior = ((meta.get("refs") or {}).get(str(name)) or {}).get("snapshot-id")
+    commit(
+        table, meta,
+        [{"action": "set-snapshot-ref", "ref-name": str(name),
+          "type": ref_type, "snapshot-id": snap_id}],
+        [{"type": "assert-ref-snapshot-id", "ref": str(name),
+          "snapshot-id": prior}],
+    )
     return {"ref": str(name), "snapshot_id": snap_id, "type": ref_type}
 
 
@@ -1494,11 +1518,10 @@ def alter_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     schema-generation machinery maps their parquet column names to the
     current logical names by id).  The name-mapping property keeps EVERY
     historical name per field id so id-less files stay resolvable
-    (spec: Name Mapping).  On a REST catalog (r7) the alter is one
-    optimistic commit: add-schema (fresh schema-id) + set-current-schema
-    + set-properties, asserting the current schema hasn't moved.
+    (spec: Name Mapping).  The alter is one optimistic commit:
+    add-schema (fresh schema-id) + set-current-schema + set-properties,
+    asserting the current schema hasn't moved.
     """
-    rest = _rest_meta_session(p) if p.get("catalog") else None
     renames = dict(p.get("renameColumn") or {})
     drops = list(p.get("dropColumn") or [])
     adds_in = p.get("addColumn") or []
@@ -1515,23 +1538,12 @@ def alter_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             "iceberg alter: set sortBy in its own alter call (a rename "
             "could invalidate the order's source columns mid-commit)"
         )
+    table = IcebergTable(p)
+    meta = table.meta
     if sort_by is not None:
-        return _alter_sort_order(p, rest, [str(c) for c in sort_by])
-    if rest is not None:
-        _cat, _ns, _tname, meta = rest
-        prev_file = None
-        version = None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            meta = json.load(fh)
-        m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-        version = (int(m.group(1)) if m else meta.get("__version", 0)) + 1
+        return _alter_sort_order(table, meta, [str(c) for c in sort_by])
     cur_id = meta.get("current-schema-id", 0)
-    schemas = [dict(s) for s in meta["schemas"]]
+    schemas = meta["schemas"]
     cur = next(s for s in schemas if s.get("schema-id", 0) == cur_id)
     names = {f["name"] for f in cur["fields"]}
     bad = [c for c in list(renames) + drops if c not in names]
@@ -1605,21 +1617,10 @@ def alter_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     # (r7, advisor: in-place mutation leaked post-alter names into
     # history for spec-compliant external readers)
     new_sid = max((s.get("schema-id", 0) for s in schemas), default=0) + 1
-    schemas.append({**cur, "schema-id": new_sid, "fields": new_fields})
     # name mapping: MERGE into the existing entries so every historical
     # name keeps resolving its field id — chained renames (a->b then
     # b->c) must not drop 'a' (r7, advisor)
-    prior: dict[int, list[str]] = {}
-    try:
-        for e in json.loads(
-            (meta.get("properties") or {}).get(
-                "schema.name-mapping.default", "[]"
-            )
-        ):
-            if e.get("field-id") is not None:
-                prior[int(e["field-id"])] = list(e.get("names") or [])
-    except (ValueError, TypeError):
-        prior = {}
+    prior = _name_mapping_names(meta)
     mapping = []
     for f in new_fields:
         entry_names = [f["name"]]
@@ -1627,87 +1628,42 @@ def alter_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             if n and n not in entry_names:
                 entry_names.append(n)
         mapping.append({"field-id": f["id"], "names": entry_names})
-    if rest is not None:
-        cat, ns_key, tname, _m = rest
-        cat.commit_table(
-            ns_key, tname,
-            requirements=[{
-                "type": "assert-current-schema-id", "current-schema-id": cur_id,
-            }],
-            updates=[
-                *([{"action": "upgrade-format-version",
-                    "format-version": 3}]
-                  if any_default
-                  and int(meta.get("format-version", 2)) < 3 else []),
-                {
-                    "action": "add-schema",
-                    "schema": {**cur, "schema-id": new_sid,
-                               "fields": new_fields},
-                    "last-column-id": max(
-                        int(meta.get("last-column-id", 0)), next_col_id
-                    ),
-                },
-                {"action": "set-current-schema", "schema-id": -1},
-                {
-                    "action": "set-properties",
-                    "updates": {
-                        "schema.name-mapping.default": json.dumps(mapping)
-                    },
-                },
-            ],
-        )
-        out_alter = {"renamed": renames, "dropped": drops}
-        if added_fields:
-            out_alter["added"] = [f["name"] for f in added_fields]
-        return out_alter
-    now_ms = int(time.time() * 1000)
-    meta = dict(meta)
-    meta["schemas"] = schemas
-    meta["current-schema-id"] = new_sid
-    meta["last-column-id"] = max(
-        int(meta.get("last-column-id", 0)), next_col_id
+    commit(
+        table, meta,
+        [
+            # initial-default is a v3 construct (spec Default values): a
+            # spec-strict v2 reader would ignore it and resurrect nulls
+            *([{"action": "upgrade-format-version", "format-version": 3}]
+              if any_default and int(meta.get("format-version", 2)) < 3
+              else []),
+            {
+                "action": "add-schema",
+                "schema": {**cur, "schema-id": new_sid, "fields": new_fields},
+                "last-column-id": max(
+                    int(meta.get("last-column-id", 0)), next_col_id
+                ),
+            },
+            {"action": "set-current-schema", "schema-id": -1},
+            {"action": "set-properties", "updates": {
+                "schema.name-mapping.default": json.dumps(mapping),
+            }},
+        ],
+        [{"type": "assert-current-schema-id", "current-schema-id": cur_id}],
     )
-    if any_default and int(meta.get("format-version", 2)) < 3:
-        # initial-default is a v3 construct (spec Default values): a
-        # spec-strict v2 reader would ignore it and resurrect nulls
-        meta["format-version"] = 3
-        meta.setdefault("next-row-id", 0)
-    meta["last-updated-ms"] = now_ms
-    meta["properties"] = {
-        **(meta.get("properties") or {}),
-        "schema.name-mapping.default": json.dumps(mapping),
-    }
-    meta["metadata-log"] = (list(meta.get("metadata-log") or []) + [
-        {"timestamp-ms": now_ms, "metadata-file": prev_file}
-    ])[-10:]
-    meta["__version"] = version
-    meta_dir = os.path.join(table_path, "metadata")
-    _publish_metadata_exclusive(meta_dir, version, meta)
     out_alter = {"renamed": renames, "dropped": drops}
     if added_fields:
         out_alter["added"] = [f["name"] for f in added_fields]
     return out_alter
 
 
-def _alter_sort_order(p: dict[str, Any], rest, sort_by: list[str]) -> dict:
+def _alter_sort_order(table: IcebergTable, meta: dict,
+                      sort_by: list[str]) -> dict:
     """ALTER ... WRITE ORDERED BY (spec §Sorting): one metadata commit
     adds the order under a fresh order-id and flips the default —
     existing files keep their layout, future writes and compaction
     re-cluster on the new columns.  ``sortBy: []`` resets the default to
-    order-id 0 (unsorted).  On REST: add-sort-order +
-    set-default-sort-order (-1 = the just-added) in one commit."""
-    if rest is not None:
-        _cat, _ns, _tname, meta = rest
-        prev_file, version = None, None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            meta = json.load(fh)
-        m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-        version = (int(m.group(1)) if m else meta.get("__version", 0)) + 1
+    order-id 0 (unsorted): add-sort-order + set-default-sort-order (-1 =
+    the just-added) in one commit."""
     cur = next(
         s for s in meta["schemas"]
         if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
@@ -1716,43 +1672,23 @@ def _alter_sort_order(p: dict[str, Any], rest, sort_by: list[str]) -> dict:
     bad = [c for c in sort_by if c not in by_name]
     if bad:
         raise ValueError(f"iceberg alter: sortBy columns {bad} not in schema")
-    orders = [dict(o) for o in (meta.get("sort-orders")
-                                or [{"order-id": 0, "fields": []}])]
+    orders = meta.get("sort-orders") or [{"order-id": 0, "fields": []}]
+    updates: list[dict] = [
+        {"action": "set-default-sort-order", "sort-order-id": 0}
+    ]
     if sort_by:
-        new_oid = max(o.get("order-id", 0) for o in orders) + 1
-        new_order = {"order-id": new_oid, "fields": [
-            {"transform": "identity", "source-id": by_name[c],
-             "direction": "asc", "null-order": "nulls-first"}
-            for c in sort_by
-        ]}
-        orders.append(new_order)
-    else:
-        new_oid = 0
-        new_order = None
-    if rest is not None:
-        cat, ns_key, tname, _m = rest
-        updates: list[dict] = []
-        if new_order is not None:
-            updates.append(
-                {"action": "add-sort-order", "sort-order": new_order})
-            updates.append(
-                {"action": "set-default-sort-order", "sort-order-id": -1})
-        else:
-            updates.append(
-                {"action": "set-default-sort-order", "sort-order-id": 0})
-        cat.commit_table(ns_key, tname, requirements=[], updates=updates)
-        return {"sort_by": sort_by}
-    now_ms = int(time.time() * 1000)
-    meta = dict(meta)
-    meta["sort-orders"] = orders
-    meta["default-sort-order-id"] = new_oid
-    meta["last-updated-ms"] = now_ms
-    meta["metadata-log"] = (list(meta.get("metadata-log") or []) + [
-        {"timestamp-ms": now_ms, "metadata-file": prev_file}
-    ])[-10:]
-    meta["__version"] = version
-    meta_dir = os.path.join(table_path, "metadata")
-    _publish_metadata_exclusive(meta_dir, version, meta)
+        updates = [
+            {"action": "add-sort-order", "sort-order": {
+                "order-id": max(o.get("order-id", 0) for o in orders) + 1,
+                "fields": [
+                    {"transform": "identity", "source-id": by_name[c],
+                     "direction": "asc", "null-order": "nulls-first"}
+                    for c in sort_by
+                ],
+            }},
+            {"action": "set-default-sort-order", "sort-order-id": -1},
+        ]
+    commit(table, meta, updates, [])
     return {"sort_by": sort_by}
 
 
@@ -1832,29 +1768,17 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
     every delete manifest (Iceberg's own rewrite+remove-dangling-deletes
     contract) and deleted rows stay deleted.
     """
-    from pipeline_spark.functions.avroocf import (
-        read_ocf_file,
-        read_ocf_file_with_meta,
-    )
+    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
     from pipeline_spark.sources.iceberg_native import (
         _apply_row_deletes,
         plan_files,
     )
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(rest[3].get("location") or "")
-        )
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
+    table = IcebergTable(p)
+    table_path = table.path
     target = int(p.get("targetFileBytes", 128 * 1024 * 1024))
     min_group = max(2, int(p.get("minFilesPerGroup", 2)))
-    data, deletes, prev_meta = plan_files(
-        table_path, meta=rest[3] if rest is not None else None
-    )
+    data, deletes, prev_meta = plan_files(table_path, meta=table.meta)
     from pipeline_spark.sources.iceberg_native import identity_fill_plan
 
     fills, ftypes = identity_fill_plan(data, prev_meta)
@@ -1873,8 +1797,7 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
     # inference is preserved byte-for-byte.  ``migrateSchema: true``
     # remains the opt-in full rewrite of every live file.
 
-    def _norm(path: str) -> str:
-        return re.sub(r"^file:/{0,2}(/)", r"\1", str(path))
+    _norm = _strip_scheme
 
     # delete-aware: the set of data files any delete file can apply to
     pos_all = [d for d in deletes if d["content"] == 1]
@@ -1961,35 +1884,14 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
         # live file): nothing to materialize, the no-op is sound
         return {"compacted_files": 0, "new_files": 0}
 
-    meta_dir = os.path.join(table_path, "metadata")
-    if rest is not None:
-        version = None
-    else:
-        # version pins to the metadata this compaction PLANNED from — a
-        # fresh read here could wrap stale content in a later version
-        # number and silently erase an interleaved commit; pinned, the
-        # race collides on the exclusive claim and the wrapper re-plans
-        version = int(prev_meta.get("__version") or 0) + 1
-        if not prev_meta.get("__version"):
-            m = re.search(
-                r"v(\d+)\.metadata\.json$", find_table_metadata(table_path)
-            )
-            version = (int(m.group(1)) if m else 0) + 1
-    commit_uuid = str(uuid.uuid4())
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    seq = prev_meta.get("last-sequence-number", 0) + 1
+    meta_dir = table.meta_dir
+    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
 
     # partition avro fields + write schema come from a prior manifest's
     # embedded writer schema — the spec-shaped source of truth for how
     # THIS table encodes its partition record
-    prev_snap = next(
-        s for s in prev_meta["snapshots"]
-        if s.get("snapshot-id") == prev_meta.get("current-snapshot-id")
-    )
-    prev_list = re.sub(r"^file:/{0,2}(/)", r"\1", prev_snap["manifest-list"])
-    _, prev_manifests = read_ocf_file(prev_list)
-    prev_manifests = list(prev_manifests)
+    prev_manifests = _manifest_list_of(
+        prev_meta, prev_meta.get("current-snapshot-id"))
     # one writer-schema triple PER SPEC GENERATION: an evolved table's
     # manifests embed different partition records, and a rewrite must
     # reproduce its generation's encoding byte-for-byte
@@ -2001,7 +1903,7 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
         if sid in spec_info:
             continue
         wschema, mmeta, _entries = read_ocf_file_with_meta(
-            re.sub(r"^file:/{0,2}(/)", r"\1", mf["manifest_path"])
+            _strip_scheme(mf["manifest_path"])
         )
         df_rec = next(
             f for f in wschema["fields"] if f["name"] == "data_file"
@@ -2019,28 +1921,9 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
         s for s in prev_meta["schemas"]
         if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
     )
-    colmap = {
-        f["name"]: (f["id"], f["type"])
-        for f in cur_schema["fields"]
-        if isinstance(f["type"], str)
-    }
     # the table's default sort order (r7): rewritten bins re-cluster on
     # its identity columns so compaction preserves the write contract
-    sort_cols: list[str] = []
-    dsid = prev_meta.get("default-sort-order-id", 0)
-    if dsid:
-        order = next(
-            (o for o in (prev_meta.get("sort-orders") or [])
-             if o.get("order-id") == dsid),
-            None,
-        )
-        by_id = {f["id"]: f["name"] for f in cur_schema["fields"]}
-        sort_cols = [
-            by_id[f["source-id"]]
-            for f in (order or {}).get("fields", [])
-            if f.get("transform") == "identity"
-            and f.get("source-id") in by_id
-        ]
+    sort_cols = _default_sort_cols(prev_meta, cur_schema)
     compacted_paths = {d["path"] for _key, files in bins for d in files}
 
     # 1. rewrite each bin (distributed parquet read+write per bin)
@@ -2146,30 +2029,12 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
                 fullp = os.path.join(root, name)
                 rows, fsize = _parquet_stats(fullp)
                 added_rows += rows
-                nulls, lows, highs = (
-                    _footer_column_stats(fullp, colmap) if colmap else (None,) * 3
-                )
-                new_by_spec.setdefault(bin_spec, []).append({
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": fullp,
-                        "file_format": "PARQUET",
-                        "partition": pv,
-                        "record_count": rows,
-                        "file_size_in_bytes": fsize,
-                        "null_value_counts": nulls,
-                        "lower_bounds": lows,
-                        "upper_bounds": highs,
-                        "equality_ids": None,
-                        # rewritten files carry MATERIALIZED _row_id;
-                        # no fresh range needed
-                        **({"first_row_id": None} if lineage else {}),
-                    },
-                })
+                new_by_spec.setdefault(bin_spec, []).append(_added_entry(
+                    snapshot_id, seq, fullp, pv, rows, fsize,
+                ))
+    for entries in new_by_spec.values():
+        # rewritten files carry MATERIALIZED _row_id: no fresh range
+        _stamp_data_entries(entries, cur_schema, None)
     # 2. consolidated EXISTING manifests for untouched files, original
     # seqs, one per (spec generation, SCHEMA generation) — files from
     # different schema generations must never share a manifest, or its
@@ -2208,65 +2073,31 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
                 # v3 row lineage: a surviving file KEEPS its explicit
                 # first_row_id — dropping it here would orphan the ids
                 # of every non-rewritten row
-                **({"first_row_id": d.get("first_row_id")}
-                   if lineage else {}),
+                "first_row_id": d.get("first_row_id"),
             },
         })
 
-    manifests = []
-    midx = 0
+    manifests: list[dict] = []
     n_new = sum(len(v) for v in new_by_spec.values())
     n_existing = sum(len(v) for v in existing_by_spec.values())
     cur_schema_json = json.dumps(cur_schema)
 
-    def _emit(kind: str, sid: int, entries: list[dict], schema_json: str):
-        nonlocal midx
+    def _emit(sid: int, entries: list[dict], schema_json: str):
         info = spec_info[sid]
-        mp = os.path.join(meta_dir, f"{commit_uuid}-m{midx}.avro")
-        midx += 1
-        mb = write_ocf_bytes(
-            _manifest_entry_schema(
-                info["part_avro_fields"], lineage_fields=lineage
-            ),
-            entries,
-            extra_meta={
-                "schema": schema_json,
-                "partition-spec": info["spec_json"],
-                "partition-spec-id": str(sid),
-                "format-version": "3" if lineage else "2",
-                "content": "data",
-            },
-        )
-        with open(mp, "wb") as fh:
-            fh.write(mb)
-        rows = sum(
-            int(e["data_file"].get("record_count") or 0) for e in entries
-        )
-        seqs = [e["sequence_number"] for e in entries]
-        manifests.append({
-            "manifest_path": mp,
-            "manifest_length": len(mb),
-            "partition_spec_id": sid,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": min(seqs),
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries) if kind == "added" else 0,
-            "existing_files_count": (
-                len(entries) if kind == "existing" else 0
-            ),
-            "deleted_files_count": 0,
-            "added_rows_count": rows if kind == "added" else 0,
-            "existing_rows_count": rows if kind == "existing" else 0,
-            "deleted_rows_count": 0,
-        })
+        manifests.append(write_manifest(
+            os.path.join(meta_dir, f"{commit_uuid}-m{len(manifests)}.avro"),
+            entries, seq=seq, snapshot_id=snapshot_id,
+            spec={"spec-id": sid, "fields": json.loads(info["spec_json"])},
+            schema=schema_json, fv=3 if lineage else 2,
+            part_fields=info["part_avro_fields"],
+        ))
 
     # rewrites land under the CURRENT schema (the evolved read upgraded
     # them), so their manifests embed it; an unevolved table's write-time
     # schema is name-identical either way
     for sid in sorted(new_by_spec):
         _emit(
-            "added", sid, new_by_spec[sid],
+            sid, new_by_spec[sid],
             cur_schema_json if evolved else spec_info[sid]["schema_json"],
         )
     # surviving files: one EXISTING manifest per (spec, schema generation),
@@ -2284,69 +2115,20 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
                     _mm.get("schema") or b"{}"
                 ).decode()
             sjson = _gen_schema_cache[src]
-        _emit("existing", sid, existing_by_spec[gkey], sjson)
+        _emit(sid, existing_by_spec[gkey], sjson)
 
-    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-    list_bytes = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA,
-        manifests,
-        extra_meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
-    )
-    with open(list_path, "wb") as fh:
-        fh.write(list_bytes)
-
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": prev_meta.get("current-schema-id", 0),
-        "summary": {
+    commit_snapshot(
+        table, prev_meta, manifests, {
             "operation": "replace",
-            "added-data-files": str(n_new),
-            "deleted-data-files": str(len(compacted_paths)),
-            "removed-delete-files": str(len(deletes)),
-            "added-records": str(added_rows),
-            "total-records": str(added_rows + existing_rows),
-            "total-data-files": str(n_new + n_existing),
+            "added-data-files": n_new,
+            "deleted-data-files": len(compacted_paths),
+            "removed-delete-files": len(deletes),
+            "added-records": added_rows,
+            "total-records": added_rows + existing_rows,
+            "total-data-files": n_new + n_existing,
         },
-    }
-    if rest is not None:
-        _stamp_row_lineage(prev_meta, snapshot, None, added_rows)
-        cat, ns_key, tname, _m2 = rest
-        cat.commit_table(
-            ns_key, tname,
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": "main",
-                "snapshot-id": prev_meta.get("current-snapshot-id"),
-            }],
-            updates=[
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {"action": "set-snapshot-ref", "ref-name": "main",
-                 "type": "branch", "snapshot-id": snapshot_id},
-            ],
-        )
-        return {
-            "compacted_files": len(compacted_paths),
-            "new_files": n_new,
-            "materialized_delete_files": len(deletes),
-        }
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["current-snapshot-id"] = snapshot_id
-    meta["refs"] = {
-        **(meta.get("refs") or {}),
-        "main": {"snapshot-id": snapshot_id, "type": "branch"},
-    }
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = (
-        list(prev_meta.get("snapshot-log", []))
-        + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-    )[-10:]
-    _stamp_row_lineage(prev_meta, snapshot, meta, added_rows)
-    meta["__version"] = version
-    _publish_metadata_exclusive(meta_dir, version, meta)
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+    )
     return {
         "compacted_files": len(compacted_paths),
         "new_files": n_new,
@@ -2398,25 +2180,16 @@ def _mutate_where(
     )
 
     op = "update" if set_exprs else "delete"
-    mor = not set_exprs and str(p.get("method", "")).lower() != "cow"
+    # merge-on-read is a delete's default and an update's opt-in (the
+    # Delta rule: an update writes deletion vectors only when asked)
+    method = str(p.get("method", "")).lower()
+    mor = (method in ("mor", "dv", "merge-on-read") if set_exprs
+           else method != "cow")
     where = rowlevel.where_of("iceberg", op, p)
     legacy = parse_legacy_global_deletes(p)
-    rest = None
-    meta = None
-    if not p.get("catalog"):
-        table_path = str(p.get("path") or p.get("table") or "")
-    elif mor:
-        rest = _rest_meta_session(p)
-        meta = rest[3]
-        table_path = str(meta.get("location") or "")
-    else:
-        rest = _rest_session(p)
-        meta = rest["prev_meta"]
-        table_path = rest["location"]
-        if meta is None:
-            raise FileNotFoundError(f"iceberg {op}: table does not exist")
-    table_path = re.sub(r"^file:/{0,2}(/)", r"\1", table_path)
-    data, deletes, meta = plan_files(table_path, meta=meta)
+    table = IcebergTable(p, stage=True)
+    table_path = table.path
+    data, deletes, meta = plan_files(table_path, meta=table.meta)
     fields = _schema_fields(meta)
     id2field = {f["id"]: f for f in fields}
     # v3 row lineage: a rewrite PRESERVES each surviving row's _row_id by
@@ -2456,16 +2229,15 @@ def _mutate_where(
         return df
 
     data_dir = os.path.join(table_path, "data", f"{op}-{uuid.uuid4().hex}")
-    if not mor:
-        cur_schema = next(
-            s for s in meta["schemas"]
-            if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-        )
-        spec0 = next(
-            (sp for sp in meta.get("partition-specs", [])
-             if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
-            {"fields": []},
-        )
+    cur_schema = next(
+        s for s in meta["schemas"]
+        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
+    )
+    spec0 = next(
+        (sp for sp in meta.get("partition-specs", [])
+         if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
+        {"fields": []},
+    )
 
     def stage(_i: int, _files: list[dict], df) -> list[dict]:
         return _stage_default_spec_files(
@@ -2475,7 +2247,7 @@ def _mutate_where(
 
     def commit_rewrite(plan) -> dict:
         removed = _commit_file_replacement(
-            table_path, rest, meta, cur_schema, spec0, plan.files,
+            table, meta, cur_schema, spec0, plan.files,
             plan.staged, operation="overwrite" if set_exprs else "delete",
             read_where=where,
         )
@@ -2501,9 +2273,13 @@ def _mutate_where(
             )
         if not rows:
             return None
-        return _write_position_deletes(
-            p, table_path, rest, meta, deletes, rows
+        out = _write_position_deletes(
+            p, table, meta, deletes, rows, plan.staged
         )
+        if set_exprs:
+            out["updated_rows"] = out.pop("deleted_rows")
+            out["added_files"] = len(plan.staged)
+        return out
 
     t = rowlevel.Table(
         fmt="iceberg", files=data, columns=[f["name"] for f in fields],
@@ -2512,7 +2288,7 @@ def _mutate_where(
         lineage=(
             "_row_id", "_last_updated_sequence_number",
             int(meta.get("last-sequence-number", 0)) + 1,
-        ) if v3 and not mor else None,
+        ) if v3 else None,
     )
     out = rowlevel.mutate(
         t, where, set_exprs, mor=mor,
@@ -2521,17 +2297,19 @@ def _mutate_where(
     if out is not None:
         return out
     if mor:
-        return {"deleted_rows": 0}
+        return {f"{op}d_rows": 0}
     return {f"{op}d_rows": 0, "rewritten_files": 0, "added_files": 0}
 
 
 def _write_position_deletes(
-    p: dict[str, Any], table_path: str, rest, meta: dict,
-    prior_deletes: list[dict], rows: list,
+    p: dict[str, Any], table: IcebergTable, meta: dict,
+    prior_deletes: list[dict], rows: list, data_files: list[dict],
 ) -> dict[str, int]:
     """Commit matched ``(file_path, pos)`` rows as one position-delete
     parquet, or — on a v3 table, or ``format: puffin`` — one puffin of
-    deletion vectors."""
+    deletion vectors, in one snapshot with ``data_files`` (a
+    merge-on-read update's rewritten rows)."""
+    table_path = table.path
     fmt = str(
         p.get("format")
         # a v3 table must not gain NEW position-delete files (spec
@@ -2628,7 +2406,8 @@ def _write_position_deletes(
                 "record_count": b["cardinality"],
             }
             for b in blobs
-        ], rest=rest, supersede=supersede or None, base_meta=meta)
+        ], table=table, data_files=data_files, supersede=supersede or None,
+            base_meta=meta)
         return {
             "deleted_rows": len(rows), "dv_blobs": len(blobs),
             "merged_dvs": merged_dvs,
@@ -2651,8 +2430,8 @@ def _write_position_deletes(
         out,
     )
     append_delete_files(
-        table_path, [{"path": out, "content": 1}], rest=rest,
-        base_meta=meta,
+        table_path, [{"path": out, "content": 1}], table=table,
+        data_files=data_files, base_meta=meta,
     )
     return {"deleted_rows": len(rows)}
 
@@ -2681,30 +2460,16 @@ def equality_delete_iceberg_native(
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     from pyspark.sql import functions as F
 
-    from pipeline_spark.sources.iceberg_native import (
-        _iceberg_type_to_spark,
-        find_table_metadata,
-    )
+    from pipeline_spark.sources.iceberg_native import _iceberg_type_to_spark
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        meta = rest[3]
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(meta.get("location") or "")
-        )
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
     values = p.get("values")
     if keys_df is None and not values:
         raise ValueError(
             "iceberg equality delete: 'values' (list of key dicts) or a "
             "keys DataFrame is required"
         )
-    if rest is None:
-        with open(find_table_metadata(table_path)) as fh:
-            meta = json.load(fh)
+    table = IcebergTable(p)
+    table_path, meta = table.path, table.meta
     cur_schema = next(
         s for s in meta["schemas"]
         if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
@@ -2767,7 +2532,7 @@ def equality_delete_iceberg_native(
     append_delete_files(
         table_path,
         [{"path": f, "content": 2, "equality_ids": ids} for f in files],
-        rest=rest,
+        table=table,
     )
     return {"delete_files": len(files)}
 
@@ -2876,10 +2641,7 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     from pyspark.sql import functions as F
 
-    from pipeline_spark.sources.iceberg_native import (
-        _iceberg_type_to_spark,
-        find_table_metadata,
-    )
+    from pipeline_spark.sources.iceberg_native import _iceberg_type_to_spark
 
     keys = list(p.get("primaryKeys") or p.get("keyFields") or [])
     if not keys:
@@ -2894,24 +2656,9 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
         upserts = df
         touched = df.select(*keys).distinct()
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        meta = rest[3]
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str((meta or {}).get("location") or "")
-        )
-        missing = meta is None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        try:
-            with open(find_table_metadata(table_path)) as fh:
-                meta = json.load(fh)
-            missing = False
-        except FileNotFoundError:
-            missing = True
-    if missing:
+    table = IcebergTable(p, must_exist=False)
+    table_path, meta = table.path, table.meta
+    if meta is None:
         write_iceberg_native(upserts, {**p, "mode": "create"})
         return {"delete_files": 0, "data_files": -1}
     spec0 = next(
@@ -2969,7 +2716,7 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     append_delete_files(
         table_path,
         [{"path": f, "content": 2, "equality_ids": ids} for f in del_files],
-        rest=rest,
+        table=table,
         data_files=data_files,
         summary_properties=p.get("summaryProperties"),
     )
@@ -2984,8 +2731,10 @@ def update_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     are kept unmodified, the three-valued-logic rule); everything else
     carries forward in the metadata.  ``set`` maps column → SQL
     expression.  One replace snapshot via the shared file-scoped commit.
-    The O(batch) merge-on-read alternative for keyed updates is
-    ``upsert_iceberg_native``."""
+    ``method: mor`` rewrites no file instead: the matched rows are
+    deleted by position (deletion vectors on a v3 table) and their
+    updated copies land in the same snapshot.  The O(batch) merge-on-read
+    alternative for keyed updates is ``upsert_iceberg_native``."""
     from pipeline_spark.sinks import rowlevel
 
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
@@ -2993,7 +2742,7 @@ def update_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
 
 def _commit_file_replacement(
-    table_path: str, rest, prev_meta: dict, cur_schema: dict, spec0: dict,
+    table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
     hit: list[dict], staged: list[dict], operation: str = "overwrite",
     *, read_where: list[dict] | None = None, check_adds: bool = True,
     retries: int = 3,
@@ -3015,22 +2764,15 @@ def _commit_file_replacement(
     while True:
         try:
             return _commit_file_replacement_once(
-                table_path, rest, prev_meta, cur_schema, spec0, hit,
-                staged, operation,
+                table, prev_meta, cur_schema, spec0, hit, staged, operation,
             )
         except (FileExistsError, CommitConflictError):
             if retries <= 0:
                 raise
             retries -= 1
-        if rest is not None:
-            fresh, _loc = rest["catalog"].load_table(
-                rest["namespace"], rest["name"]
-            )
-        else:
-            with open(find_table_metadata(table_path)) as fh:
-                fresh = json.load(fh)
+        fresh = table.load()
         check_commit_conflicts(
-            table_path, base_meta, fresh,
+            table.path, base_meta, fresh,
             removed_paths=hit_paths, read_where=read_where,
             check_adds=check_adds,
         )
@@ -3038,7 +2780,7 @@ def _commit_file_replacement(
 
 
 def _commit_file_replacement_once(
-    table_path: str, rest, prev_meta: dict, cur_schema: dict, spec0: dict,
+    table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
     hit: list[dict], staged: list[dict], operation: str = "overwrite",
 ) -> int:
     """ONE replace snapshot for a file-scoped rewrite (shared by MERGE /
@@ -3047,71 +2789,31 @@ def _commit_file_replacement_once(
     EXISTING at original sequence numbers, removed entries DELETED),
     ``staged`` files land as ADDED under the default spec with footer
     stats, and row-level delete manifests ride along (rewrites must
-    have MATERIALIZED their deletes).  REST tables commit via one
-    optimistic CommitTableRequest.  Returns the removed-file count."""
-    from pipeline_spark.functions.avroocf import (
-        read_ocf_file,
-        read_ocf_file_with_meta,
-    )
-    from pipeline_spark.functions.icebergpart import spec_field_avro_type
-    from pipeline_spark.sources.iceberg_native import _strip_scheme
+    have MATERIALIZED their deletes).  Returns the removed-file count."""
+    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
 
-    commit_uuid = str(uuid.uuid4())
-    meta_dir = os.path.join(table_path, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    seq = prev_meta.get("last-sequence-number", 0) + 1
+    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
+    fv = int(prev_meta.get("format-version", 2))
     hit_paths = {d["path"] for d in hit}
     hit_paths |= {urllib.parse.unquote(x) for x in set(hit_paths)}
 
-    prev_snap = next(
-        (s for s in prev_meta.get("snapshots") or []
-         if s.get("snapshot-id") == prev_meta.get("current-snapshot-id")),
-        None,
-    )
-    prev_manifests: list[dict] = []
-    if prev_snap is not None:
-        _, pm = read_ocf_file(_strip_scheme(prev_snap["manifest-list"]))
-        prev_manifests = list(pm)
-
-    list_keys = [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
-
-    def _carry(m: dict) -> dict:
-        out = {k: m.get(k) for k in list_keys}
-        for k in list_keys:
-            if k != "manifest_path":
-                out[k] = int(out.get(k) or 0)
-        return out
-
     out_manifests: list[dict] = []
-    midx = 0
-    removed_files = 0
-    removed_rows = 0
-    total_rows = 0
-    total_files = 0
-    for m in prev_manifests:
+    for m in _manifest_list_of(prev_meta, prev_meta.get("current-snapshot-id")):
         if m.get("content", 0) != 0:
-            out_manifests.append(_carry(m))  # delete manifests ride along
+            out_manifests.append(m)  # delete manifests ride along
             continue
-        mpath = _strip_scheme(m["manifest_path"])
-        wschema, mmeta, entries = read_ocf_file_with_meta(mpath)
-        entries = list(entries)
+        wschema, mmeta, entries = read_ocf_file_with_meta(
+            _strip_scheme(m["manifest_path"])
+        )
         live = [
             e for e in entries
             if e.get("status") != 2 and e.get("data_file")
         ]
-        live_paths = {
-            _strip_scheme(e["data_file"].get("file_path", "")) for e in live
-        }
-        if not (live_paths & hit_paths):
+        if not any(_strip_scheme(e["data_file"].get("file_path", ""))
+                   in hit_paths for e in live):
             # untouched manifest: carry the LIST ENTRY forward verbatim —
             # the 100 TB bulk of the table costs zero metadata writes
-            out_manifests.append(_carry(m))
-            total_files += len(live)
-            total_rows += sum(
-                int(e["data_file"].get("record_count") or 0) for e in live
-            )
+            out_manifests.append(m)
             continue
         # rewrite this manifest in place: survivors EXISTING with their
         # original (inheritance-materialized) sequence numbers, removed
@@ -3123,259 +2825,70 @@ def _commit_file_replacement_once(
         df_rec = next(
             f for f in wschema["fields"] if f["name"] == "data_file"
         )
-        pfields_avro = next(
-            f for f in df_rec["type"]["fields"] if f["name"] == "partition"
-        )["type"]["fields"]
         inherit_seq = int(m.get("sequence_number", 0) or 0)
         new_entries: list[dict] = []
-        man_kept_rows = 0
-        man_removed_rows = 0
-        man_removed = 0
-        min_seqs: list[int] = []
         for e in live:
-            d = e["data_file"]
             eseq = e.get("sequence_number")
             eseq = inherit_seq if eseq is None else int(eseq)
             fseq = e.get("file_sequence_number")
-            fseq = eseq if fseq is None else int(fseq)
-            rep_lineage = int(prev_meta.get("format-version", 2)) >= 3
-            ent = {
-                "status": 0,
-                "snapshot_id": e.get("snapshot_id"),
+            removed = (_strip_scheme(e["data_file"].get("file_path", ""))
+                       in hit_paths)
+            new_entries.append({
+                **e, "status": 2 if removed else 0,
+                "snapshot_id": snapshot_id if removed else e.get("snapshot_id"),
                 "sequence_number": eseq,
-                "file_sequence_number": fseq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": d.get("file_path"),
-                    "file_format": d.get("file_format", "PARQUET"),
-                    "partition": d.get("partition") or {},
-                    "record_count": int(d.get("record_count") or 0),
-                    "file_size_in_bytes": int(d.get("file_size_in_bytes") or 0),
-                    "null_value_counts": d.get("null_value_counts"),
-                    "lower_bounds": d.get("lower_bounds"),
-                    "upper_bounds": d.get("upper_bounds"),
-                    "equality_ids": None,
-                    # v3 row lineage: survivors keep their explicit
-                    # first_row_id through the in-place manifest rewrite
-                    **({"first_row_id": d.get("first_row_id")}
-                       if rep_lineage else {}),
-                },
-            }
-            rows = int(d.get("record_count") or 0)
-            if _strip_scheme(d.get("file_path", "")) in hit_paths:
-                ent["status"] = 2  # DELETED
-                ent["snapshot_id"] = snapshot_id
-                man_removed += 1
-                man_removed_rows += rows
-            else:
-                man_kept_rows += rows
-                total_files += 1
-            min_seqs.append(eseq)
-            new_entries.append(ent)
-        total_rows += man_kept_rows
-        removed_files += man_removed
-        removed_rows += man_removed_rows
-        extra = {
-            "schema": (mmeta.get("schema") or b"{}").decode(),
-            "partition-spec": (mmeta.get("partition-spec") or b"[]").decode(),
-            "partition-spec-id": str(int(m.get("partition_spec_id", 0) or 0)),
-            "format-version": "2",
-            "content": "data",
-        }
-        mp = os.path.join(meta_dir, f"{commit_uuid}-m{midx}.avro")
-        midx += 1
-        mb = write_ocf_bytes(
-            _manifest_entry_schema(
-                pfields_avro,
-                lineage_fields=int(prev_meta.get("format-version", 2)) >= 3,
-            ),
-            new_entries,
-            extra_meta=extra,
-        )
-        with open(mp, "wb") as fh:
-            fh.write(mb)
-        out_manifests.append({
-            "manifest_path": mp,
-            "manifest_length": len(mb),
-            "partition_spec_id": int(m.get("partition_spec_id", 0) or 0),
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": min(min_seqs) if min_seqs else seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": 0,
-            "existing_files_count": len(new_entries) - man_removed,
-            "deleted_files_count": man_removed,
-            "added_rows_count": 0,
-            "existing_rows_count": man_kept_rows,
-            "deleted_rows_count": man_removed_rows,
-        })
-
-    # ADDED manifest for the staged rewrite+upsert files (default spec,
-    # current schema, footer stats for future pruning)
-    added_rows = 0
-    if staged:
-        src_types = {f["id"]: f["type"] for f in cur_schema["fields"]}
-        part_avro_fields = [
-            {
-                "name": sf["name"],
-                "type": [
-                    "null",
-                    spec_field_avro_type(
-                        sf["transform"],
-                        str(src_types.get(sf.get("source-id"), "")),
-                    ),
-                ],
-                "default": None,
-                "field-id": sf.get("field-id", 1000 + i),
-            }
-            for i, sf in enumerate(spec0.get("fields", []))
-        ]
-        colmap = {
-            f["name"]: (f["id"], f["type"])
-            for f in cur_schema["fields"]
-            if isinstance(f["type"], str)
-        }
-        added_entries = []
-        rep_lin = int(prev_meta.get("format-version", 2)) >= 3
-        # v3 row lineage: each staged file gets an explicit first_row_id
-        # range off the table's next-row-id (the same base the snapshot
-        # advance uses) — survivors' MATERIALIZED ids win per row, and
-        # fresh (upserted) rows derive first_row_id + position, so merge
-        # inserts get real ids instead of permanent nulls
-        _rep_frid = int(prev_meta.get("next-row-id") or 0) if rep_lin else 0
-        for rec in staged:
-            rows, fsize = _parquet_stats(rec["path"])
-            added_rows += rows
-            nulls, lows, highs = (
-                _footer_column_stats(rec["path"], colmap)
-                if colmap else (None,) * 3
-            )
-            added_entries.append({
-                "status": _STATUS_ADDED,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": rec["path"],
-                    "file_format": "PARQUET",
-                    "partition": rec["partition"],
-                    "record_count": rows,
-                    "file_size_in_bytes": fsize,
-                    "null_value_counts": nulls,
-                    "lower_bounds": lows,
-                    "upper_bounds": highs,
-                    "equality_ids": None,
-                    **({"first_row_id": _rep_frid} if rep_lin else {}),
-                },
+                "file_sequence_number": eseq if fseq is None else int(fseq),
             })
-            if rep_lin:
-                _rep_frid += rows
-        mp = os.path.join(meta_dir, f"{commit_uuid}-m{midx}.avro")
-        midx += 1
-        mb = write_ocf_bytes(
-            _manifest_entry_schema(
-                part_avro_fields,
-                lineage_fields=int(prev_meta.get("format-version", 2)) >= 3,
-            ),
-            added_entries,
-            extra_meta={
-                "schema": json.dumps(cur_schema),
-                "partition-spec": json.dumps(spec0.get("fields", [])),
-                "partition-spec-id": str(spec0.get("spec-id", 0)),
-                "format-version": "2",
-                "content": "data",
-            },
-        )
-        with open(mp, "wb") as fh:
-            fh.write(mb)
-        out_manifests.insert(0, {
-            "manifest_path": mp,
-            "manifest_length": len(mb),
-            "partition_spec_id": int(spec0.get("spec-id", 0)),
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(added_entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": added_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        })
-        total_rows += added_rows
-        total_files += len(added_entries)
+        out_manifests.append(write_manifest(
+            os.path.join(table.meta_dir,
+                         f"{commit_uuid}-m{len(out_manifests)}.avro"),
+            new_entries, seq=seq, snapshot_id=snapshot_id,
+            spec={"spec-id": int(m.get("partition_spec_id", 0) or 0),
+                  "fields": json.loads(
+                      (mmeta.get("partition-spec") or b"[]").decode())},
+            schema=(mmeta.get("schema") or b"{}").decode(), fv=fv,
+            part_fields=next(
+                f for f in df_rec["type"]["fields"] if f["name"] == "partition"
+            )["type"]["fields"],
+        ))
 
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
-    )
-    list_bytes = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA,
-        out_manifests,
-        extra_meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
-    )
-    with open(list_path, "wb") as fh:
-        fh.write(list_bytes)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": prev_meta.get("current-schema-id", 0),
-        "summary": {
+    if staged:
+        # ADDED manifest for the staged rewrite+upsert files (default
+        # spec, current schema, footer stats for future pruning; v3 row
+        # lineage: survivors' MATERIALIZED ids win per row, fresh rows
+        # derive first_row_id + position)
+        added = [
+            _added_entry(snapshot_id, seq, rec["path"], rec["partition"],
+                         *_parquet_stats(rec["path"]))
+            for rec in staged
+        ]
+        _stamp_data_entries(added, cur_schema, prev_meta if fv >= 3 else None)
+        out_manifests.insert(0, write_manifest(
+            os.path.join(table.meta_dir, f"{commit_uuid}-m{len(out_manifests)}.avro"),
+            added, seq=seq, snapshot_id=snapshot_id, spec=spec0,
+            schema=cur_schema, fv=fv,
+        ))
+    live_data = [m for m in out_manifests if m.get("content", 0) == 0]
+    new_list = [m for m in live_data if m.get("added_snapshot_id") == snapshot_id]
+    commit_snapshot(
+        table, prev_meta, out_manifests, {
             "operation": operation,
-            "added-data-files": str(len(staged)),
-            "deleted-data-files": str(removed_files),
-            "added-records": str(added_rows),
-            "deleted-records": str(removed_rows),
-            "total-records": str(total_rows),
-            "total-data-files": str(total_files),
+            "added-data-files": len(staged),
+            "deleted-data-files": sum(
+                int(m["deleted_files_count"]) for m in new_list),
+            "added-records": sum(int(m["added_rows_count"]) for m in new_list),
+            "deleted-records": sum(
+                int(m["deleted_rows_count"]) for m in new_list),
+            "total-records": sum(
+                int(m.get("added_rows_count") or 0)
+                + int(m.get("existing_rows_count") or 0) for m in live_data),
+            "total-data-files": sum(
+                int(m.get("added_files_count") or 0)
+                + int(m.get("existing_files_count") or 0) for m in live_data),
         },
-    }
-    if rest is not None:
-        _stamp_row_lineage(prev_meta, snapshot, None, added_rows)
-        rest["catalog"].commit_table(
-            rest["namespace"], rest["name"],
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": "main",
-                "snapshot-id": prev_meta.get("current-snapshot-id"),
-            }],
-            updates=[
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {"action": "set-snapshot-ref", "ref-name": "main",
-                 "type": "branch", "snapshot-id": snapshot_id},
-            ],
-        )
-        return removed_files
-    # version pins to the metadata this commit was BUILT from — reading
-    # the latest file here instead would let an interleaved commit be
-    # silently erased (fresh version number wrapping stale content);
-    # pinned, the racing claim collides and the conflict-checked retry
-    # rebuilds on fresh metadata
-    version = int(prev_meta.get("__version") or 0) + 1
-    if not prev_meta.get("__version"):
-        m = re.search(
-            r"v(\d+)\.metadata\.json$", find_table_metadata(table_path)
-        )
-        version = (int(m.group(1)) if m else 0) + 1
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["current-snapshot-id"] = snapshot_id
-    meta["refs"] = {
-        **(meta.get("refs") or {}),
-        "main": {"snapshot-id": snapshot_id, "type": "branch"},
-    }
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = (
-        list(prev_meta.get("snapshot-log", []))
-        + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-    )[-10:]
-    _stamp_row_lineage(prev_meta, snapshot, meta, added_rows)
-    meta["__version"] = version
-    _publish_metadata_exclusive(meta_dir, version, meta)
-    return removed_files
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+    )
+    return sum(int(m["deleted_files_count"]) for m in new_list)
 
 
 def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
@@ -3415,15 +2928,9 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     from pyspark.sql import functions as F
 
-    from pipeline_spark.functions.avroocf import (
-        read_ocf_file,
-        read_ocf_file_with_meta,
-    )
-    from pipeline_spark.functions.icebergpart import spec_field_avro_type
     from pipeline_spark.sources.iceberg_native import (
         _apply_row_deletes,
         _bounds_may_match,
-        _strip_scheme,
         plan_files,
     )
 
@@ -3440,23 +2947,8 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
         upserts = df
         touched = df.select(*keys).distinct()
 
-    rest = _rest_session(p) if p.get("catalog") else None
-    if rest is not None:
-        prev_meta = rest["prev_meta"]
-        table_path = rest["location"]
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1",
-            str(p.get("path") or p.get("table") or ""),
-        )
-        try:
-            from pipeline_spark.sources.iceberg_native import (
-                load_table_metadata,
-            )
-
-            prev_meta = load_table_metadata(table_path)
-        except FileNotFoundError:
-            prev_meta = None
+    table = IcebergTable(p, must_exist=False, stage=True)
+    table_path, prev_meta = table.path, table.meta
     if prev_meta is None:
         # no table yet: merge degenerates to create (the delta rule)
         write_iceberg_native(upserts, {**p, "mode": "create"})
@@ -3634,7 +3126,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     )
 
     removed = _commit_file_replacement(
-        table_path, rest, prev_meta, cur_schema, spec0, hit, staged,
+        table, prev_meta, cur_schema, spec0, hit, staged,
         read_where=key_where,
     )
     return {
@@ -3657,19 +3149,12 @@ def clone_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     deep-copy via an overwrite write when the source's lifecycle is not
     yours)."""
     source = p.get("source") or p.get("from")
-    target = re.sub(
-        r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table") or "")
-    )
+    target = _strip_scheme(str(p.get("path") or p.get("table") or ""))
     if not source or not target:
         raise ValueError("iceberg clone: 'source' and 'path' are required")
-    with open(find_table_metadata(re.sub(
-        r"^file:/{0,2}(/)", r"\1", str(source)
-    ))) as fh:
-        meta = json.load(fh)
-    tgt_meta_dir = os.path.join(target, "metadata")
-    if os.path.isdir(tgt_meta_dir) and any(
-        n.endswith(".metadata.json") for n in os.listdir(tgt_meta_dir)
-    ):
+    meta = load_table_metadata(_strip_scheme(str(source)))
+    table = IcebergTable({"path": target}, must_exist=False)
+    if table.meta is not None:
         raise FileExistsError(f"iceberg clone: table already exists at {target}")
     snap_id = p.get("snapshotId")
     snaps = meta.get("snapshots") or []
@@ -3681,7 +3166,6 @@ def clone_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
                 f"iceberg clone: snapshot {snap_id} not in the source "
                 f"(have {[s.get('snapshot-id') for s in snaps]})"
             )
-        keep = [snap]
     else:
         snap = next(
             (s for s in snaps
@@ -3690,22 +3174,19 @@ def clone_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         )
         if snap is None:
             raise ValueError("iceberg clone: source has no current snapshot")
-        keep = [snap]
-    now_ms = int(time.time() * 1000)
-    out = dict(meta)
-    out["table-uuid"] = str(uuid.uuid4())
-    out["location"] = target
-    out["last-updated-ms"] = now_ms
-    out["current-snapshot-id"] = snap["snapshot-id"]
-    out["snapshots"] = keep
-    out["refs"] = {"main": {"snapshot-id": snap["snapshot-id"],
-                            "type": "branch"}}
-    out["snapshot-log"] = [
-        {"timestamp-ms": now_ms, "snapshot-id": snap["snapshot-id"]}]
-    out["metadata-log"] = []
-    out["__version"] = 1
-    os.makedirs(tgt_meta_dir, exist_ok=True)
-    _publish_metadata_exclusive(tgt_meta_dir, 1, out)
+    # the clone is the source's metadata with a fresh identity and no
+    # history, committed as v1 holding the one cloned snapshot
+    commit(
+        table, {
+            **meta, "table-uuid": str(uuid.uuid4()), "location": target,
+            "current-snapshot-id": None, "refs": {}, "snapshots": [],
+            "snapshot-log": [], "metadata-log": [], "__version": 0,
+        },
+        [{"action": "add-snapshot", "snapshot": snap},
+         {"action": "set-snapshot-ref", "ref-name": "main",
+          "type": "branch", "snapshot-id": snap["snapshot-id"]}],
+        [],
+    )
     return {"cloned_snapshot": snap["snapshot-id"]}
 
 
@@ -3717,20 +3198,8 @@ def last_streaming_batch(p: dict[str, Any], app_id: str) -> int:
     the stream never wrote; a replayed micro-batch at or below this id
     must no-op for exactly-once."""
     try:
-        if p.get("catalog"):
-            rest = _rest_meta_session(p)
-            meta = rest[3]
-            if meta is None:
-                return -1
-        else:
-            table_path = re.sub(
-                r"^file:/{0,2}(/)",
-                r"\1",
-                str(p.get("path") or p.get("table")),
-            )
-            with open(find_table_metadata(table_path)) as fh:
-                meta = json.load(fh)
-    except (FileNotFoundError, ValueError):
+        meta = IcebergTable(p, must_exist=False).meta or {}
+    except ValueError:
         return -1
     best = -1
     for s in meta.get("snapshots", []):
@@ -3756,29 +3225,12 @@ def expire_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     Storage reclamation is the point: compaction's replace snapshots
     keep old files alive for time travel until expiry lets them go.
     """
-    from pipeline_spark.functions.avroocf import read_ocf_file
     from pipeline_spark.sources.iceberg_native import plan_files
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
+    table = IcebergTable(p)
+    table_path, prev_meta, meta_dir = table.path, table.meta, table.meta_dir
     retain_last = max(1, int(p.get("retainLast", 1)))
     dry = bool(p.get("dryRun", False))
-    if rest is not None:
-        # REST (r7): the catalog owns the metadata — expiry becomes one
-        # remove-snapshots commit; file cleanup still runs client-side
-        # against the posix staging location the client wrote
-        _cat, _ns, _tname, prev_meta = rest
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(prev_meta.get("location") or "")
-        )
-        prev_file = None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            prev_meta = json.load(fh)
-    meta_dir = os.path.join(table_path, "metadata")
     snaps = list(prev_meta.get("snapshots", []))
     if len(snaps) <= retain_last:
         return {"expired_snapshots": 0, "removed_data_files": 0,
@@ -3805,15 +3257,9 @@ def expire_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     kept_parquet: set[str] = set()
     kept_avro: set[str] = set()
     for s in keep:
-        lst = re.sub(r"^file:/{0,2}(/)", r"\1", s["manifest-list"])
-        kept_avro.add(os.path.normpath(lst))
-        _, manifests = read_ocf_file(lst)
-        for mf in manifests:
-            kept_avro.add(
-                os.path.normpath(
-                    re.sub(r"^file:/{0,2}(/)", r"\1", mf["manifest_path"])
-                )
-            )
+        kept_avro.add(os.path.normpath(_strip_scheme(s["manifest-list"])))
+        for mf in _manifest_list_of(prev_meta, s["snapshot-id"]):
+            kept_avro.add(os.path.normpath(_strip_scheme(mf["manifest_path"])))
         data, deletes, _m = plan_files(
             table_path, s["snapshot-id"], meta=prev_meta
         )
@@ -3844,38 +3290,14 @@ def expire_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
                 if not dry:
                     os.remove(full)
 
-    if not dry and rest is not None:
-        cat, ns_key, tname, _m2 = rest
-        cat.commit_table(
-            ns_key, tname,
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": "main",
-                "snapshot-id": prev_meta.get("current-snapshot-id"),
-            }],
-            updates=[{
-                "action": "remove-snapshots",
-                "snapshot-ids": [s["snapshot-id"] for s in drop],
-            }],
-        )
-        return {
-            "expired_snapshots": len(drop),
-            "removed_data_files": removed_data,
-            "removed_manifests": removed_manifests,
-        }
     if not dry:
-        m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-        version = (int(m.group(1)) if m else prev_meta.get("__version", 0)) + 1
-        now_ms = int(time.time() * 1000)
-        kept_ids = {s["snapshot-id"] for s in keep}
-        meta = dict(prev_meta)
-        meta["snapshots"] = keep
-        meta["snapshot-log"] = [
-            e for e in prev_meta.get("snapshot-log", [])
-            if e.get("snapshot-id") in kept_ids
-        ][-10:]
-        meta["last-updated-ms"] = now_ms
-        meta["__version"] = version
-        _publish_metadata_exclusive(meta_dir, version, meta)
+        commit(
+            table, prev_meta,
+            [{"action": "remove-snapshots",
+              "snapshot-ids": [s["snapshot-id"] for s in drop]}],
+            [{"type": "assert-ref-snapshot-id", "ref": "main",
+              "snapshot-id": prev_meta.get("current-snapshot-id")}],
+        )
         for root, _dirs, _files in os.walk(table_path, topdown=False):
             if (
                 os.path.normpath(root) not in (os.path.normpath(table_path),
@@ -3925,41 +3347,18 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
     data.  ``minManifestsPerGroup`` (default 2) skips already-compact
     groups; ``dryRun: true`` reports only.
     """
-    from pipeline_spark.functions.avroocf import (
-        read_ocf_file,
-        read_ocf_file_with_meta,
-    )
+    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        prev_meta = rest[3]
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(prev_meta.get("location") or "")
-        )
-        prev_file, version = None, None
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            prev_meta = json.load(fh)
-        m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-        version = (int(m.group(1)) if m else prev_meta.get("__version", 0)) + 1
-    meta_dir = os.path.join(table_path, "metadata")
+    table = IcebergTable(p)
+    prev_meta = table.meta
     min_group = max(2, int(p.get("minManifestsPerGroup", 2)))
     dry = bool(p.get("dryRun", False))
 
     cur_id = prev_meta.get("current-snapshot-id")
-    cur_snap = next(
-        (s for s in prev_meta.get("snapshots", [])
-         if s.get("snapshot-id") == cur_id),
-        None,
-    )
-    if cur_snap is None:
+    if not any(s.get("snapshot-id") == cur_id
+               for s in prev_meta.get("snapshots", [])):
         raise ValueError("iceberg rewrite_manifests: table has no snapshots")
-    prev_list = re.sub(r"^file:/{0,2}(/)", r"\1", cur_snap["manifest-list"])
-    _, mf_records = read_ocf_file(prev_list)
+    mf_records = _manifest_list_of(prev_meta, cur_id)
 
     # identity-fill homogeneity: the READER probes ONE file per manifest
     # to decide whether identity partition columns need filling from the
@@ -3983,8 +3382,8 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
 
     passthrough: list[dict] = []
     groups: dict[tuple, list[tuple[dict, dict, dict, list[dict]]]] = {}
-    for mf in (dict(m) for m in mf_records):
-        mpath = re.sub(r"^file:/{0,2}(/)", r"\1", mf["manifest_path"])
+    for mf in mf_records:
+        mpath = _strip_scheme(mf["manifest_path"])
         schema_json, meta_bytes, recs = read_ocf_file_with_meta(mpath)
         entries = [dict(e) for e in recs]
         if any(e.get("status") == 2 for e in entries):  # DELETED tombstones
@@ -3999,9 +3398,8 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
                     (meta_bytes.get("schema") or b"{}").decode()
                 ).get("fields", [])
                 _wname = {f["id"]: f["name"] for f in _wfields if "id" in f}
-                _names = set(pq.read_schema(re.sub(
-                    r"^file:/{0,2}(/)", r"\1",
-                    entries[0]["data_file"]["file_path"],
+                _names = set(pq.read_schema(_strip_scheme(
+                    entries[0]["data_file"]["file_path"]
                 )).names)
                 fill_sig = frozenset(
                     cname for fid, cname in ident_by_id.items()
@@ -4033,13 +3431,8 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
             "kept_manifests": len(passthrough),
         }
 
-    commit_uuid = str(uuid.uuid4())
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-
+    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
     manifests = list(passthrough)
-    created = 0
     rewritten = 0
     for i, ((content, spec_id, _sb, _pb, _fill), group) in enumerate(
         sorted(
@@ -4048,7 +3441,6 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
         )
     ):
         merged: list[dict] = []
-        rows = 0
         for mf, _schema, _meta, entries in group:
             rewritten += 1
             for e in entries:
@@ -4056,105 +3448,36 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
                 if e_seq is None:  # v2 inheritance: null = manifest's seq
                     e_seq = mf.get("sequence_number", 0)
                 f_seq = e.get("file_sequence_number")
-                if f_seq is None:
-                    f_seq = e_seq
                 snap = e.get("snapshot_id")
-                if snap is None:
-                    snap = mf.get("added_snapshot_id")
-                rows += int(e["data_file"].get("record_count") or 0)
                 merged.append({
                     "status": 0,  # EXISTING
-                    "snapshot_id": snap,
+                    "snapshot_id": (mf.get("added_snapshot_id")
+                                    if snap is None else snap),
                     "sequence_number": e_seq,
-                    "file_sequence_number": f_seq,
+                    "file_sequence_number": e_seq if f_seq is None else f_seq,
                     "data_file": e["data_file"],
                 })
-        schema_json = group[0][1]
-        extra = {
-            k: v.decode()
-            for k, v in group[0][2].items()
-            if k not in ("avro.schema", "avro.codec")
-        }
-        mp = os.path.join(meta_dir, f"{commit_uuid}-m{i}.avro")
-        mb = write_ocf_bytes(schema_json, merged, extra_meta=extra)
-        with open(mp, "wb") as fh:
-            fh.write(mb)
-        manifests.append({
-            "manifest_path": mp,
-            "manifest_length": len(mb),
-            "partition_spec_id": spec_id,
-            "content": content,
-            "sequence_number": seq,
-            "min_sequence_number": min(
-                e["sequence_number"] for e in merged
-            ),
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": 0,
-            "existing_files_count": len(merged),
-            "deleted_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": rows,
-            "deleted_rows_count": 0,
-        })
-        created += 1
-
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
-    )
-    list_bytes = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA,
-        manifests,
-        extra_meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
-    )
-    with open(list_path, "wb") as fh:
-        fh.write(list_bytes)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": prev_meta.get("current-schema-id", 0),
-        "summary": {
+        manifests.append(write_manifest(
+            os.path.join(table.meta_dir, f"{commit_uuid}-m{i}.avro"), merged,
+            seq=seq, snapshot_id=snapshot_id,
+            spec={"spec-id": spec_id}, content=content,
+            writer=(group[0][1], {
+                k: v.decode() for k, v in group[0][2].items()
+                if k not in ("avro.schema", "avro.codec")
+            }),
+        ))
+    commit_snapshot(
+        table, prev_meta, manifests, {
             "operation": "replace",
-            "manifests-replaced": str(rewritten),
-            "manifests-created": str(created),
-            "manifests-kept": str(len(passthrough)),
+            "manifests-replaced": rewritten,
+            "manifests-created": len(mergeable),
+            "manifests-kept": len(passthrough),
         },
-    }
-    if rest is not None:
-        cat, ns_key, tname, _m2 = rest
-        cat.commit_table(
-            ns_key, tname,
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": "main",
-                "snapshot-id": cur_id,
-            }],
-            updates=[
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {"action": "set-snapshot-ref", "ref-name": "main",
-                 "type": "branch", "snapshot-id": snapshot_id},
-            ],
-        )
-    else:
-        meta = dict(prev_meta)
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        meta["current-snapshot-id"] = snapshot_id
-        meta["refs"] = {
-            **(meta.get("refs") or {}),
-            "main": {"snapshot-id": snapshot_id, "type": "branch"},
-        }
-        meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [snapshot]
-        meta["snapshot-log"] = (
-            list(prev_meta.get("snapshot-log", []))
-            + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-        )[-10:]
-        _stamp_row_lineage(prev_meta, snapshot, meta, 0)
-        meta["__version"] = version
-        _publish_metadata_exclusive(meta_dir, version, meta)
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+    )
     return {
         "rewritten_manifests": rewritten,
-        "created_manifests": created,
+        "created_manifests": len(mergeable),
         "kept_manifests": len(passthrough),
     }
 
@@ -4175,25 +3498,14 @@ def remove_orphans_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     """
     from pipeline_spark.functions.avroocf import read_ocf_file
 
-    rest = _rest_meta_session(p) if p.get("catalog") else None
-    if rest is not None:
-        prev_meta = rest[3]
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(prev_meta.get("location") or "")
-        )
-    else:
-        table_path = re.sub(
-            r"^file:/{0,2}(/)", r"\1", str(p.get("path") or p.get("table"))
-        )
-        with open(find_table_metadata(table_path)) as fh:
-            prev_meta = json.load(fh)
-    meta_dir = os.path.join(table_path, "metadata")
+    table = IcebergTable(p)
+    table_path, prev_meta, meta_dir = table.path, table.meta, table.meta_dir
     dry = bool(p.get("dryRun", False))
     older_ms = int(p.get("olderThanMs", 3 * 24 * 3600 * 1000))
     cutoff = time.time() - older_ms / 1000.0
 
     def _norm(path: str) -> str:
-        return os.path.normpath(re.sub(r"^file:/{0,2}(/)", r"\1", str(path)))
+        return os.path.normpath(_strip_scheme(str(path)))
 
     reachable: set[str] = set()
     for s in prev_meta.get("snapshots", []):
@@ -4282,33 +3594,6 @@ def _publish_metadata_exclusive(meta_dir: str, version: int, meta: dict) -> None
     if version > cur:
         with open(hint, "w") as fh:
             fh.write(str(version))
-
-
-def _stamp_row_lineage(
-    prev_meta: dict, snapshot: dict, meta: dict | None, added_rows: int
-) -> None:
-    """v3 row lineage on an already-v3 table: every snapshot assigns a
-    first-row-id and advances the table's next-row-id by the rows its
-    added data files carry (spec §Row Lineage — strict readers require
-    both fields once format-version is 3).  No-op below v3.
-
-    ``meta=None`` = a REST commit: the snapshot still carries its
-    first-row-id, but the table-level next-row-id advance is the
-    CATALOG's responsibility when it applies add-snapshot (the v3 REST
-    contract — the client never writes catalog metadata directly).
-
-    r10: rewrites (compaction / COW delete / update / merge survivors)
-    are lineage-PRESERVING — each surviving row's id is MATERIALIZED
-    into a physical ``_row_id`` column of the rewritten file, and reads
-    prefer it over first_row_id + position (the r9 fresh-ids boundary
-    is closed).  Appends stamp per-file explicit ``first_row_id``
-    (manifest field-id 142)."""
-    if int(prev_meta.get("format-version", 2)) < 3:
-        return
-    next_row_id = int(prev_meta.get("next-row-id") or 0)
-    snapshot["first-row-id"] = next_row_id
-    if meta is not None:
-        meta["next-row-id"] = next_row_id + int(added_rows)
 
 
 def check_commit_conflicts(
@@ -4484,11 +3769,7 @@ def _supersede_prior_deletes(
     EXISTING at materialized sequence numbers and superseded entries
     DELETED under the new snapshot.  Returns the new manifest-list
     entries and the superseded-entry count."""
-    from pipeline_spark.functions.avroocf import (
-        read_ocf_file_with_meta,
-        write_ocf_bytes,
-    )
-    from pipeline_spark.sources.iceberg_native import _strip_scheme
+    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
 
     def _key(e: dict) -> tuple[str, int | None]:
         d = e.get("data_file") or {}
@@ -4500,77 +3781,54 @@ def _supersede_prior_deletes(
 
     out: list[dict] = []
     removed_total = 0
-    midx = 100  # distinct namespace from the commit's own -m0/-m1
     for m in prev_manifests:
         if int(m.get("content", 0) or 0) != 1:
-            out.append(dict(m))
+            out.append(m)
             continue
-        mpath = _strip_scheme(m["manifest_path"])
-        wschema, mmeta, entries = read_ocf_file_with_meta(mpath)
+        wschema, mmeta, entries = read_ocf_file_with_meta(
+            _strip_scheme(m["manifest_path"])
+        )
         live = [
             e for e in entries
             if e.get("status") != 2 and e.get("data_file")
         ]
         if not any(_key(e) in superseded for e in live):
-            out.append(dict(m))
+            out.append(m)
             continue
         inherit_seq = int(m.get("sequence_number", 0) or 0)
         new_entries: list[dict] = []
-        kept = kept_rows = removed = removed_rows = 0
-        min_seqs: list[int] = []
         for e in live:
             eseq = e.get("sequence_number")
             eseq = inherit_seq if eseq is None else int(eseq)
             fseq = e.get("file_sequence_number")
-            fseq = eseq if fseq is None else int(fseq)
-            ent = dict(e)
-            ent["sequence_number"] = eseq
-            ent["file_sequence_number"] = fseq
-            rows = int((e.get("data_file") or {}).get("record_count") or 0)
-            if _key(e) in superseded:
-                ent["status"] = 2  # DELETED: replaced by the merged DV
-                ent["snapshot_id"] = snapshot_id
-                removed += 1
-                removed_rows += rows
-            else:
-                ent["status"] = 0  # EXISTING
-                kept += 1
-                kept_rows += rows
-                min_seqs.append(eseq)
-            new_entries.append(ent)
-        extra = {
-            k: (mmeta.get(k) or b"").decode()
-            for k in ("schema", "partition-spec", "partition-spec-id",
-                      "format-version", "content")
-            if mmeta.get(k) is not None
-        }
-        mp = os.path.join(meta_dir, f"{commit_uuid}-m{midx}.avro")
-        midx += 1
-        mb = write_ocf_bytes(wschema, new_entries, extra_meta=extra)
-        with open(mp, "wb") as fh:
-            fh.write(mb)
-        out.append({
-            "manifest_path": mp,
-            "manifest_length": len(mb),
-            "partition_spec_id": int(m.get("partition_spec_id", 0) or 0),
-            "content": 1,
-            "sequence_number": int(m.get("sequence_number", 0) or 0),
-            "min_sequence_number": min(min_seqs) if min_seqs else inherit_seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": 0,
-            "existing_files_count": kept,
-            "deleted_files_count": removed,
-            "added_rows_count": 0,
-            "existing_rows_count": kept_rows,
-            "deleted_rows_count": removed_rows,
-        })
-        removed_total += removed
+            gone = _key(e) in superseded  # replaced by the merged DV
+            removed_total += gone
+            new_entries.append({
+                **e, "status": 2 if gone else 0,
+                "snapshot_id": snapshot_id if gone else e.get("snapshot_id"),
+                "sequence_number": eseq,
+                "file_sequence_number": eseq if fseq is None else int(fseq),
+            })
+        # -m100.. : a namespace apart from the commit's own -m0/-m1
+        out.append(write_manifest(
+            os.path.join(meta_dir, f"{commit_uuid}-m{100 + len(out)}.avro"),
+            new_entries, seq=inherit_seq, snapshot_id=snapshot_id,
+            spec={"spec-id": int(m.get("partition_spec_id", 0) or 0)},
+            content=1,
+            writer=(wschema, {
+                k: (mmeta.get(k) or b"").decode()
+                for k in ("schema", "partition-spec", "partition-spec-id",
+                          "format-version", "content")
+                if mmeta.get(k) is not None
+            }),
+        ))
     return out, removed_total
 
 
 def append_delete_files(
-    table_path: str, delete_files: list[dict], *, rest=None,
-    data_files: list[str] | None = None,
+    table_path: str, delete_files: list[dict], *,
+    table: IcebergTable | None = None,
+    data_files: list | None = None,
     summary_properties: dict | None = None,
     supersede: set[tuple[str, int | None]] | None = None,
     base_meta: dict | None = None, retries: int = 3,
@@ -4582,10 +3840,14 @@ def append_delete_files(
     upserts (the delete outranks them by sequence number, the Flink CDC
     convention), while a concurrent rewrite of a file our position/DV
     deletes reference, a concurrent delete on a file we're re-vectoring,
-    or a schema/spec change fails loudly.  ``base_meta`` is the metadata
-    the CALLER planned its row positions from (defaults to the metadata
-    this commit itself read)."""
+    or a schema/spec change fails loudly.  ``table`` is the opened table
+    (default: the filesystem table at ``table_path``); ``base_meta`` is
+    the metadata the CALLER planned its row positions from (defaults to
+    the metadata this commit itself read)."""
     from pipeline_spark.sources.iceberg_rest import CommitConflictError
+
+    if table is None:
+        table = IcebergTable({"path": table_path})
 
     def _conflict_sets() -> tuple[set[str], set[str]]:
         # computed lazily on FIRST conflict only — reading the delete
@@ -4605,42 +3867,35 @@ def append_delete_files(
                 )
         return referenced, dv_refs
 
-    used: dict = {}
+    prev_meta = table.meta
+    sets = None
     while True:
         try:
             return _append_delete_files_once(
-                table_path, delete_files, rest=rest, data_files=data_files,
+                table, prev_meta, delete_files, data_files=data_files,
                 summary_properties=summary_properties, supersede=supersede,
-                _used=used,
             )
         except (FileExistsError, CommitConflictError):
             if retries <= 0:
                 raise
             retries -= 1
-        if rest is not None:
-            cat, ns_key, name, _stale = rest
-            fresh, _loc = cat.load_table(ns_key, name)
-            rest = (cat, ns_key, name, fresh)
-        else:
-            with open(find_table_metadata(table_path)) as fh:
-                fresh = json.load(fh)
-        if "sets" not in used:
-            used["sets"] = _conflict_sets()  # computed once, reused on
-            # later retries — delete_files never changes across attempts
-        referenced, dv_refs = used["sets"]
+        fresh = table.load()
+        if sets is None:
+            sets = _conflict_sets()  # delete_files never change
+        referenced, dv_refs = sets
         check_commit_conflicts(
-            table_path, base_meta or used.get("meta") or fresh, fresh,
+            table.path, base_meta or prev_meta, fresh,
             referenced_paths=referenced | dv_refs, dv_referenced=dv_refs,
             check_adds=False,
         )
+        prev_meta = fresh
 
 
 def _append_delete_files_once(
-    table_path: str, delete_files: list[dict], *, rest=None,
-    data_files: list[str] | None = None,
+    table: IcebergTable, prev_meta: dict, delete_files: list[dict], *,
+    data_files: list | None = None,
     summary_properties: dict | None = None,
     supersede: set[tuple[str, int | None]] | None = None,
-    _used: dict | None = None,
 ) -> None:
     """Commit a merge-on-read snapshot adding v2 row-level DELETE files
     to an existing table — the write-side counterpart of the reader's
@@ -4650,35 +3905,13 @@ def _append_delete_files_once(
     Each entry: ``{"path": <parquet delete file>, "content": 1|2,
     "equality_ids": [field-ids]}`` — content 1 = position deletes
     (columns ``file_path``, ``pos``), content 2 = equality deletes
-    (the identifier columns named by ``equality_ids``).
-
-    ``rest`` (r7) = the ``(catalog, namespace, name, meta)`` tuple from
-    ``_rest_meta_session``: the delete manifests stage in the table's
-    posix location exactly as on filesystem tables, but the snapshot
-    lands through one optimistic add-snapshot + set-snapshot-ref commit.
+    (the identifier columns named by ``equality_ids``).  ``data_files``
+    (``{"path", "partition"}`` or bare paths) land in the same snapshot.
     """
-    table_path = re.sub(r"^file:/{0,2}(/)", r"\1", str(table_path))
-    meta_dir = os.path.join(table_path, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    if rest is not None:
-        prev_meta = rest[3]
-        prev_file = None
-        version = None
-    else:
-        prev_file = find_table_metadata(table_path)
-        with open(prev_file) as fh:
-            prev_meta = json.load(fh)
-        m = re.search(r"v(\d+)\.metadata\.json$", prev_file)
-        version = (int(m.group(1)) if m else prev_meta.get("__version", 0)) + 1
-    if _used is not None:
-        _used["meta"] = prev_meta  # what this attempt planned against
+    meta_dir = table.meta_dir
+    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
 
-    commit_uuid = str(uuid.uuid4())
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-
-    entries, deleted_rows = [], 0
+    entries = []
     any_dv = any(
         str(d.get("format", "")).upper() == "PUFFIN" for d in delete_files
     )
@@ -4704,41 +3937,22 @@ def _append_delete_files_once(
             size = os.path.getsize(d["path"])
         else:
             rows, size = _parquet_stats(d["path"])
-        deleted_rows += rows
-        df_rec = {
-            "content": content,
-            "file_path": d["path"],
-            "file_format": "PUFFIN" if puffin else "PARQUET",
-            "partition": {},
-            "record_count": rows,
-            "file_size_in_bytes": size,
-            "equality_ids": list(d.get("equality_ids") or []) or None,
-        }
-        if any_dv:
-            df_rec["referenced_data_file"] = d.get("referenced_data_file")
-            df_rec["content_offset"] = (
-                int(d["content_offset"]) if puffin else None
+        e = _added_entry(snapshot_id, seq, d["path"], {}, rows, size, content)
+        e["data_file"]["equality_ids"] = list(d.get("equality_ids") or []) or None
+        if puffin:
+            e["data_file"].update(
+                file_format="PUFFIN",
+                referenced_data_file=d.get("referenced_data_file"),
+                content_offset=int(d["content_offset"]),
+                content_size_in_bytes=int(d.get("content_size_in_bytes") or 0),
             )
-            df_rec["content_size_in_bytes"] = (
-                int(d.get("content_size_in_bytes") or 0) if puffin else None
-            )
-        entries.append(
-            {
-                "status": _STATUS_ADDED,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": df_rec,
-            }
-        )
+        entries.append(e)
 
-    manifest_path = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
     cur_schema = next(
         s
         for s in prev_meta["schemas"]
         if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
     )
-    schema_json = json.dumps(cur_schema)
     spec0 = next(
         (
             sp
@@ -4747,6 +3961,13 @@ def _append_delete_files_once(
         ),
         {"fields": []},
     )
+    updates: list[dict] = []
+    if any_dv and int(prev_meta.get("format-version", 2)) < 3:
+        # puffin DVs are a v3 construct: a spec-strict reader must see
+        # format-version 3 or it would rightly reject the manifests
+        # (the catalog copy of the metadata upgrades too, ADVICE r8)
+        updates.append({"action": "upgrade-format-version", "format-version": 3})
+    fv = max(3 if any_dv else 2, int(prev_meta.get("format-version", 2)))
     # this writer's deletes are GLOBAL (path-addressed positions /
     # table-wide equality keys), and the spec scopes a delete manifest
     # by its declared partition: on a PARTITIONED table an all-null
@@ -4756,7 +3977,6 @@ def _append_delete_files_once(
     # instead — registered in the table metadata if not already there
     # (r11; spec: global equality deletes use the unpartitioned spec).
     del_spec = spec0
-    added_spec = None
     if spec0.get("fields"):
         del_spec = next(
             (sp for sp in prev_meta.get("partition-specs", [])
@@ -4772,20 +3992,21 @@ def _append_delete_files_once(
                 ) + 1,
                 "fields": [],
             }
-            added_spec = del_spec
-    manifest_bytes = write_ocf_bytes(
-        _manifest_entry_schema([], dv_fields=any_dv),
-        entries,
-        extra_meta={
-            "schema": schema_json,
-            "partition-spec": json.dumps(del_spec.get("fields", [])),
-            "partition-spec-id": str(del_spec.get("spec-id", 0)),
-            "format-version": "3" if any_dv else "2",
-            "content": "deletes",
-        },
-    )
-    with open(manifest_path, "wb") as fh:
-        fh.write(manifest_bytes)
+            # registered, default-spec-id unchanged
+            updates.append({"action": "add-spec", "spec": del_spec})
+    if any(
+        int(d.get("content", 1)) == 2 for d in delete_files
+    ) and "pipeline-spark.eq-scope-strict-since-seq" not in (
+        prev_meta.get("properties") or {}
+    ):
+        # r15: self-identifying equality deletes — the first eq-delete
+        # commit stamps its sequence number as the spec-strict-era
+        # cutoff; the reader's legacy-ambiguity detector treats every
+        # delete file at/after it as unambiguous (see
+        # sources/iceberg_native.py plan_equality_deletes)
+        updates.append({"action": "set-properties", "updates": {
+            "pipeline-spark.eq-scope-strict-since-seq": str(seq),
+        }})
 
     # upsert shape (r7, the Flink-connector commit): DATA files land in
     # the SAME snapshot under the SAME sequence number as the equality
@@ -4793,265 +4014,53 @@ def _append_delete_files_once(
     # to every EARLIER file but never to these, so delete-old-then-
     # insert-new is one atomic commit
     data_entries: list[dict] = []
-    added_rows = 0
-    if data_files:
-        colmap = {
-            f["name"]: (f["id"], f["type"])
-            for f in cur_schema["fields"]
-            if isinstance(f["type"], str)
-        }
-        for d in data_files:
-            path, pv = (
-                (d["path"], d.get("partition") or {})
-                if isinstance(d, dict) else (d, {})
-            )
-            rows, size = _parquet_stats(path)
-            if rows == 0:
-                os.remove(path)
-                continue
-            added_rows += rows
-            nulls, lows, highs = (
-                _footer_column_stats(path, colmap)
-                if colmap else (None,) * 3
-            )
-            data_entries.append({
-                "status": _STATUS_ADDED,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": path,
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": rows,
-                    "file_size_in_bytes": size,
-                    "null_value_counts": nulls,
-                    "lower_bounds": lows,
-                    "upper_bounds": highs,
-                    "equality_ids": None,
-                },
-            })
-    data_manifest = None
-    if data_entries:
-        # v3 row lineage: upsert batch files take explicit first_row_id
-        # off the table's next-row-id (fresh rows of this snapshot)
-        up_lineage = int(prev_meta.get("format-version", 2)) >= 3
-        if up_lineage:
-            _ufrid = int(prev_meta.get("next-row-id") or 0)
-            for e in data_entries:
-                e["data_file"]["first_row_id"] = _ufrid
-                _ufrid += int(e["data_file"]["record_count"])
-        # the DATA manifest (unlike the delete manifest, which declares
-        # an unpartitioned spec) carries the table's default spec — its
-        # avro partition-record fields come from the spec transforms
-        from pipeline_spark.functions.icebergpart import spec_field_avro_type
-
-        src_types = {f["id"]: f["type"] for f in cur_schema["fields"]}
-        part_avro_fields = [
-            {
-                "name": sf["name"],
-                "type": [
-                    "null",
-                    spec_field_avro_type(
-                        sf["transform"],
-                        str(src_types.get(sf.get("source-id"), "")),
-                    ),
-                ],
-                "default": None,
-                "field-id": sf.get("field-id", 1000 + i),
-            }
-            for i, sf in enumerate(spec0.get("fields", []))
-        ]
-        dm_path = os.path.join(meta_dir, f"{commit_uuid}-m1.avro")
-        dm_bytes = write_ocf_bytes(
-            _manifest_entry_schema(
-                part_avro_fields, lineage_fields=up_lineage
-            ),
-            data_entries,
-            extra_meta={
-                "schema": schema_json,
-                "partition-spec": json.dumps(spec0.get("fields", [])),
-                "partition-spec-id": str(spec0.get("spec-id", 0)),
-                "format-version": "3" if up_lineage else "2",
-                "content": "data",
-            },
+    for d in data_files or []:
+        path, pv = (
+            (d["path"], d.get("partition") or {})
+            if isinstance(d, dict) else (d, {})
         )
-        with open(dm_path, "wb") as fh:
-            fh.write(dm_bytes)
-        data_manifest = {
-            "manifest_path": dm_path,
-            "manifest_length": len(dm_bytes),
-            "partition_spec_id": spec0.get("spec-id", 0),
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(data_entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": added_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
+        rows, size = _parquet_stats(path)
+        if rows == 0:
+            os.remove(path)
+            continue
+        data_entries.append(_added_entry(snapshot_id, seq, path, pv, rows, size))
+    # v3 row lineage: the batch's files take explicit first_row_id off
+    # the table's next-row-id (fresh rows of this snapshot)
+    _stamp_data_entries(data_entries, cur_schema,
+                        prev_meta if fv >= 3 else None)
 
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s.get("snapshot-id") == prev_meta.get("current-snapshot-id")
-    )
-    prev_list = re.sub(r"^file:/{0,2}(/)", r"\1", prev_snap["manifest-list"])
-    from pipeline_spark.functions.avroocf import read_ocf_file
-
-    _, prev_manifests = read_ocf_file(prev_list)
+    manifests = [dict(mf) for mf in _manifest_list_of(
+        prev_meta, prev_meta.get("current-snapshot-id"))]
     superseded_count = 0
     if supersede:
         manifests, superseded_count = _supersede_prior_deletes(
-            list(prev_manifests), supersede, meta_dir, commit_uuid,
-            snapshot_id,
+            manifests, supersede, meta_dir, commit_uuid, snapshot_id,
         )
-    else:
-        manifests = [dict(mf) for mf in prev_manifests]
-    manifests.append(
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(manifest_bytes),
-            "partition_spec_id": int(del_spec.get("spec-id", 0)),
-            "content": 1,  # delete manifest
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": 0,
-            "deleted_rows_count": deleted_rows,
-        }
-    )
-    if data_manifest is not None:
-        manifests.append(data_manifest)
-    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-    list_bytes = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA,
-        manifests,
-        extra_meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
-    )
-    with open(list_path, "wb") as fh:
-        fh.write(list_bytes)
-
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": prev_meta.get("current-schema-id", 0),
-        "summary": {
+    manifests.append(write_manifest(
+        os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
+        seq=seq, snapshot_id=snapshot_id, spec=del_spec, schema=cur_schema,
+        fv=fv, content=1, part_fields=[],
+    ))
+    if data_entries:
+        # the DATA manifest (unlike the delete manifest, which declares
+        # an unpartitioned spec) carries the table's default spec
+        manifests.append(write_manifest(
+            os.path.join(meta_dir, f"{commit_uuid}-m1.avro"), data_entries,
+            seq=seq, snapshot_id=snapshot_id, spec=spec0, schema=cur_schema,
+            fv=fv,
+        ))
+    commit_snapshot(
+        table, prev_meta, manifests, {
             "operation": "overwrite" if data_entries else "delete",
-            "added-delete-files": str(len(entries)),
-            "removed-delete-files": str(superseded_count),
-            "added-position-delete-records": str(deleted_rows),
-            "added-data-files": str(len(data_entries)),
-            "added-records": str(added_rows),
-            **{str(k): str(v) for k, v in (summary_properties or {}).items()},
+            "added-delete-files": len(entries),
+            "removed-delete-files": superseded_count,
+            "added-position-delete-records": sum(
+                int(e["data_file"]["record_count"]) for e in entries),
+            "added-data-files": len(data_entries),
+            "added-records": sum(
+                int(e["data_file"]["record_count"]) for e in data_entries),
+            **(summary_properties or {}),
         },
-    }
-    if any_dv or int(prev_meta.get("format-version", 2)) >= 3:
-        # v3 row lineage: every snapshot in a v3 table (this commit's DV
-        # upgrade OR an already-v3 table's non-DV commit) assigns a
-        # first-row-id and advances the table's next-row-id by the rows
-        # in its added data files; data files omit first_row_id and
-        # inherit from the snapshot (spec §Row Lineage inheritance)
-        next_row_id = int(prev_meta.get("next-row-id") or 0)
-        snapshot["first-row-id"] = next_row_id
-    if rest is not None:
-        cat, ns_key, name, _m2 = rest
-        updates = []
-        if any_dv and int(prev_meta.get("format-version", 2)) < 3:
-            # puffin DVs are a v3 construct — the catalog copy of the
-            # metadata must upgrade too, not just the local manifests
-            # (ADVICE r8): spec-strict readers of a format-version 2
-            # table would reject DV manifest entries
-            updates.append(
-                {"action": "upgrade-format-version", "format-version": 3}
-            )
-        if added_spec is not None:
-            # the delete manifest declares the unpartitioned spec —
-            # the catalog metadata must know it (default stays spec0)
-            updates.append({"action": "add-spec", "spec": added_spec})
-        if any(
-            int(d.get("content", 1)) == 2 for d in delete_files
-        ) and "pipeline-spark.eq-scope-strict-since-seq" not in (
-            prev_meta.get("properties") or {}
-        ):
-            # r15: self-identifying equality deletes — stamp the first
-            # eq-delete commit's sequence number; files at/after it are
-            # spec-strict by construction (never pre-r11 legacy), so
-            # the reader's legacy-ambiguity detector skips them
-            updates.append({
-                "action": "set-properties",
-                "updates": {
-                    "pipeline-spark.eq-scope-strict-since-seq": str(seq)
-                },
-            })
-        updates += [
-            {"action": "add-snapshot", "snapshot": snapshot},
-            {"action": "set-snapshot-ref", "ref-name": "main",
-             "type": "branch", "snapshot-id": snapshot_id},
-        ]
-        cat.commit_table(
-            ns_key, name,
-            requirements=[{
-                "type": "assert-ref-snapshot-id", "ref": "main",
-                "snapshot-id": prev_meta.get("current-snapshot-id"),
-            }],
-            updates=updates,
-        )
-        return
-    meta = dict(prev_meta)
-    if added_spec is not None:
-        # register the unpartitioned spec the delete manifest declares
-        # (default-spec-id unchanged; no partition fields, so
-        # last-partition-id is untouched)
-        meta["partition-specs"] = (
-            list(prev_meta.get("partition-specs", [])) + [added_spec]
-        )
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["current-snapshot-id"] = snapshot_id
-    meta["refs"] = {
-        **(meta.get("refs") or {}),
-        "main": {"snapshot-id": snapshot_id, "type": "branch"},
-    }
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = (
-        list(prev_meta.get("snapshot-log", []))
-        + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-    )[-10:]
-    if any_dv or int(prev_meta.get("format-version", 2)) >= 3:
-        # puffin DVs are a v3 construct: a spec-strict reader must see
-        # format-version 3 or it would rightly reject the manifests
-        if any_dv:
-            meta["format-version"] = max(
-                3, int(meta.get("format-version", 2))
-            )
-        # v3 row lineage (spec-required fields for strict readers): the
-        # snapshot's first-row-id was stamped above; the table high-water
-        # advances by the rows this commit's data files added
-        meta["next-row-id"] = int(snapshot["first-row-id"]) + added_rows
-    if any(
-        int(d.get("content", 1)) == 2 for d in delete_files
-    ) and "pipeline-spark.eq-scope-strict-since-seq" not in (
-        meta.get("properties") or {}
-    ):
-        # r15: self-identifying equality deletes — the first eq-delete
-        # commit stamps its sequence number as the spec-strict-era
-        # cutoff; the reader's legacy-ambiguity detector treats every
-        # delete file at/after it as unambiguous (see
-        # sources/iceberg_native.py plan_equality_deletes)
-        meta["properties"] = {
-            **(meta.get("properties") or {}),
-            "pipeline-spark.eq-scope-strict-since-seq": str(seq),
-        }
-    meta["__version"] = version
-    _publish_metadata_exclusive(meta_dir, version, meta)
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+        updates=updates,
+    )

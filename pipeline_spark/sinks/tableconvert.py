@@ -49,13 +49,13 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import urllib.parse
 import uuid
 from typing import Any
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sources.iceberg_native import _strip_scheme
 
 _DELTA_TO_ICE = {
     "long": "long", "integer": "int", "short": "int", "byte": "int",
@@ -96,9 +96,8 @@ def _ice_type_to_delta(t: Any) -> str:
 
 
 def convert_delta_to_iceberg(spark, p: dict[str, Any]) -> dict[str, Any]:
-    table = re.sub(
-        r"^file:/{0,2}(/)", r"\1",
-        str(p.get("path") or p.get("table") or p.get("source") or ""),
+    table = _strip_scheme(
+        str(p.get("path") or p.get("table") or p.get("source") or "")
     )
     if not table:
         raise ValueError("convert: 'path' of the delta table is required")
@@ -161,9 +160,8 @@ def convert_parquet_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
     )
     from pipeline_spark.sinks.iceberg_addfiles import _walk_hive_files
 
-    table = re.sub(
-        r"^file:/{0,2}(/)", r"\1",
-        str(p.get("path") or p.get("table") or p.get("source") or ""),
+    table = _strip_scheme(
+        str(p.get("path") or p.get("table") or p.get("source") or "")
     )
     if not table:
         raise ValueError("convert: 'path' of the parquet directory is required")
@@ -248,18 +246,20 @@ def sync_uniform_append(
     Returns False when the shape doesn't fit (caller full-regens):
     no iceberg metadata yet, a v3/DV table (full regen keeps the DV
     manifests and row-id space coherent), or a schema drift."""
-    from pipeline_spark.functions.avroocf import read_ocf_file, write_ocf_bytes
     from pipeline_spark.sinks.iceberg_native import (
-        _MANIFEST_FILE_SCHEMA,
-        _manifest_entry_schema,
-        _publish_metadata_exclusive,
+        IcebergTable,
+        _added_entry,
+        _manifest_list_of,
+        _new_snapshot,
+        commit_snapshot,
+        write_manifest,
     )
-    from pipeline_spark.sources.iceberg_native import load_table_metadata
 
     try:
-        meta = load_table_metadata(table)
+        handle = IcebergTable({"path": table})
     except (FileNotFoundError, ValueError):
         return False
+    meta = handle.meta
     props = meta.get("properties") or {}
     if props.get("delta.universalFormat") != "true":
         return False
@@ -302,7 +302,6 @@ def sync_uniform_append(
     if any(sf.get("transform") != "identity" for sf in spec.get("fields", [])):
         return False
     part_kinds = []
-    part_avro_fields = []
     for sf in spec.get("fields", []):
         src_f = by_id.get(sf.get("source-id"))
         if src_f is None:
@@ -311,10 +310,6 @@ def sync_uniform_append(
         part_kinds.append(
             (sf["name"], phys_by_id.get(src_f["id"], src_f["name"]), kind)
         )
-        part_avro_fields.append({
-            "name": sf["name"], "type": ["null", kind],
-            "default": None, "field-id": sf.get("field-id", 1000),
-        })
     colmap = {
         phys_by_id.get(f["id"], f["name"]): (f["id"], f["type"])
         for f in cur_schema["fields"]
@@ -325,13 +320,8 @@ def sync_uniform_append(
         {**f, "name": phys_by_id.get(f["id"], f["name"])}
         for f in cur_schema["fields"]
     ]
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    commit_uuid = str(uuid.uuid4())
-    meta_dir = os.path.join(table, "metadata")
+    snapshot_id, seq, commit_uuid = _new_snapshot(meta)
     entries = []
-    total_rows = 0
     for a in add_actions:
         full = os.path.join(table, urllib.parse.unquote(a["path"]))
         rc, nulls, lows, highs = _bounds_from_delta_stats(
@@ -346,106 +336,38 @@ def sync_uniform_append(
             part[pname] = None if v is None else (
                 int(v) if kind == "long" else str(v)
             )
-        total_rows += int(rc)
-        entries.append({
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0,
-                "file_path": full,
-                "file_format": "PARQUET",
-                "partition": part,
-                "record_count": int(rc),
-                "file_size_in_bytes": int(a.get("size") or 0),
-                "null_value_counts": nulls,
-                "lower_bounds": lows,
-                "upper_bounds": highs,
-                "equality_ids": None,
-            },
-        })
+        e = _added_entry(snapshot_id, seq, full, part, int(rc),
+                         int(a.get("size") or 0))
+        e["data_file"].update(null_value_counts=nulls, lower_bounds=lows,
+                              upper_bounds=highs)
+        entries.append(e)
     if not entries:
         return False
-    mp = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-    mb = write_ocf_bytes(
-        _manifest_entry_schema(part_avro_fields), entries,
-        extra_meta={
-            "schema": json.dumps(
-                {**cur_schema, "fields": write_fields}
-            ),
-            "partition-spec": json.dumps(spec.get("fields", [])),
-            "partition-spec-id": str(spec.get("spec-id", 0)),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    with open(mp, "wb") as fh:
-        fh.write(mb)
-    from pipeline_spark.sources.iceberg_native import _strip_scheme
-
-    _, prev_manifests = read_ocf_file(
-        _strip_scheme(prev_snap["manifest-list"])
-    )
-    manifests = [dict(m) for m in prev_manifests] + [{
-        "manifest_path": mp,
-        "manifest_length": len(mb),
-        "partition_spec_id": int(spec.get("spec-id", 0)),
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }]
-    lp = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-    lb = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA, manifests,
-        extra_meta={"format-version": "2",
-                    "snapshot-id": str(snapshot_id)},
-    )
-    with open(lp, "wb") as fh:
-        fh.write(lb)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": lp,
-        "schema-id": cur_schema.get("schema-id", 0),
-        "summary": {
+    manifests = _manifest_list_of(meta, snap_id_prev)
+    manifests.append(write_manifest(
+        os.path.join(handle.meta_dir, f"{commit_uuid}-m0.avro"), entries,
+        seq=seq, snapshot_id=snapshot_id, spec=spec,
+        schema={**cur_schema, "fields": write_fields},
+    ))
+    updates = []
+    if delta_version is not None:
+        updates.append({"action": "set-properties", "updates": {
+            "delta.uniform.deltaVersion": str(delta_version),
+        }})
+    # the mirror keeps its last 10 snapshots: the delta log owns history
+    old_ids = [s["snapshot-id"] for s in meta.get("snapshots") or []][:-9]
+    if old_ids:
+        updates.append({"action": "remove-snapshots", "snapshot-ids": old_ids})
+    commit_snapshot(
+        handle, meta, manifests, {
             "operation": "append",
-            "added-data-files": str(len(entries)),
-            "added-records": str(total_rows),
+            "added-data-files": len(entries),
+            "added-records": manifests[-1]["added_rows_count"],
             "converted-from": "delta-uniform-append",
         },
-    }
-    version = int(meta.get("__version") or 0) + 1
-    new_meta = dict(meta)
-    if delta_version is not None:
-        new_meta["properties"] = {
-            **(meta.get("properties") or {}),
-            "delta.uniform.deltaVersion": str(delta_version),
-        }
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["refs"] = {
-        **(meta.get("refs") or {}),
-        "main": {"snapshot-id": snapshot_id, "type": "branch"},
-    }
-    new_meta["snapshots"] = (
-        list(meta.get("snapshots") or []) + [snapshot]
-    )[-10:]
-    new_meta["snapshot-log"] = (
-        list(meta.get("snapshot-log") or [])
-        + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-    )[-10:]
-    new_meta["__version"] = version
-    _publish_metadata_exclusive(meta_dir, version, new_meta)
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+        updates=updates,
+    )
     return True
 
 
@@ -527,13 +449,15 @@ def _iceberg_metadata_over_delta(
       3 with row-lineage fields.
     """
     from pipeline_spark.sinks.iceberg_native import (
-        _MANIFEST_FILE_SCHEMA,
+        IcebergTable,
+        _added_entry,
         _footer_column_stats,
-        _manifest_entry_schema,
+        _new_snapshot,
         _parquet_stats,
-        _publish_metadata_exclusive,
+        commit_snapshot,
+        create_table,
+        write_manifest,
     )
-    from pipeline_spark.functions.avroocf import write_ocf_bytes
     from pipeline_spark.sources.delta_native import (
         _column_mapping,
         replay_state,
@@ -585,23 +509,19 @@ def _iceberg_metadata_over_delta(
     # identity partition spec over delta's partition columns
     part_cols = list(dmeta.get("partitionColumns") or [])
     spec_fields: list[dict] = []
-    part_avro_fields: list[dict] = []
     part_kinds: list[tuple[str, str]] = []
     for j, c in enumerate(part_cols):
         if c not in by_name:
             raise ValueError(f"convert: partition column {c!r} not in schema")
         src = by_name[c]
-        kind = "long" if src["type"] in ("int", "long") else "string"
-        pfid = 1000 + j
         spec_fields.append({
             "name": c, "transform": "identity",
-            "source-id": src["id"], "field-id": pfid,
+            "source-id": src["id"], "field-id": 1000 + j,
         })
-        part_avro_fields.append({
-            "name": c, "type": ["null", kind],
-            "default": None, "field-id": pfid,
-        })
-        part_kinds.append((c, kind))
+        part_kinds.append(
+            (c, "long" if src["type"] in ("int", "long") else "string")
+        )
+    spec = {"spec-id": 0, "fields": spec_fields}
 
     def typed_partition(a: dict) -> dict:
         pv = a.get("partitionValues") or {}
@@ -621,14 +541,37 @@ def _iceberg_metadata_over_delta(
         if f["name"] not in part_cols and isinstance(f["type"], str)
     }
 
+    # name-mapping resolves files written without parquet field ids:
+    # list the physical name first (what files carry), the logical name
+    # as an alias when mapped
+    nm = []
+    for fl in ice_fields:
+        phys = phys_of.get(fl["name"], fl["name"])
+        names = [phys] if phys == fl["name"] else [phys, fl["name"]]
+        nm.append({"field-id": fl["id"], "names": names})
+    props = {
+        "write.format.default": "parquet",
+        "schema.name-mapping.default": json.dumps(nm),
+    }
+    if stats_source == "log":
+        # UniForm sync: mark the metadata as delta-owned so the commit
+        # hook can gate cheaply without replaying the delta log, and
+        # stamp WHICH delta version this mirror reflects — the
+        # incremental append path refuses to chain onto a stale mirror
+        props["delta.universalFormat"] = "true"
+        props["delta.uniform.deltaVersion"] = str(_version)
+    handle = IcebergTable({"path": table}, must_exist=False)
+    # every conversion starts a fresh one-snapshot table at `version`
+    base = {**create_table(handle, {
+        "location": table, "schema": schema, "partition-spec": spec,
+        "properties": props,
+    }), "__version": version - 1}
+
     dv_adds = [a for a in adds if a.get("deletionVector")]
     fmt = 3 if dv_adds else 2
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    commit_uuid = str(uuid.uuid4())
+    snapshot_id, seq, commit_uuid = _new_snapshot(base)
     os.makedirs(meta_dir, exist_ok=True)
     entries = []
-    total_rows = 0
     for a in adds:
         full = os.path.join(table, urllib.parse.unquote(a["path"]))
         if stats_source == "log":
@@ -642,62 +585,25 @@ def _iceberg_metadata_over_delta(
         else:
             rows, size = _parquet_stats(full)
             nulls, lows, highs = _footer_column_stats(full, colmap)
-        total_rows += rows
-        entries.append({
-            "status": 1,  # ADDED
-            "snapshot_id": snapshot_id,
-            "sequence_number": 1,
-            "file_sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": full,
-                "file_format": "PARQUET",
-                "partition": typed_partition(a),
-                "record_count": rows,
-                "file_size_in_bytes": size,
-                "null_value_counts": nulls,
-                "lower_bounds": lows,
-                "upper_bounds": highs,
-                "equality_ids": None,
-            },
-        })
+        e = _added_entry(snapshot_id, seq, full, typed_partition(a),
+                         rows, size)
+        e["data_file"].update(null_value_counts=nulls, lower_bounds=lows,
+                              upper_bounds=highs)
+        entries.append(e)
     if fmt >= 3:
         # v3 row lineage: converted files take explicit first_row_id so
         # withRowIds works from the first read (next-row-id advances by
-        # the same running total below)
+        # the same running total)
         _frid = 0
         for e in entries:
             e["data_file"]["first_row_id"] = _frid
             _frid += int(e["data_file"]["record_count"])
-    manifest_path = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-    mb = write_ocf_bytes(
-        _manifest_entry_schema(part_avro_fields, lineage_fields=fmt >= 3),
-        entries,
-        extra_meta={
-            "schema": json.dumps(write_schema),
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": "0",
-            "format-version": str(fmt),
-            "content": "data",
-        },
-    )
-    with open(manifest_path, "wb") as fh:
-        fh.write(mb)
-    manifest_files = [{
-        "manifest_path": manifest_path,
-        "manifest_length": len(mb),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": 1,
-        "min_sequence_number": 1,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }]
+    manifests = [write_manifest(
+        os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
+        seq=seq, snapshot_id=snapshot_id, spec=spec, schema=write_schema,
+        fv=fmt,
+    )]
+    total_rows = manifests[0]["added_rows_count"]
 
     deleted_rows = 0
     if dv_adds:
@@ -718,129 +624,33 @@ def _iceberg_metadata_over_delta(
         dentries = []
         for a, d in zip(dv_adds, descs):
             deleted_rows += d["cardinality"]
-            dentries.append({
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": 1,
-                "file_sequence_number": 1,
-                "data_file": {
-                    "content": 1,
-                    "file_path": puffin_path,
-                    "file_format": "PUFFIN",
-                    "partition": typed_partition(a),
-                    "record_count": d["cardinality"],
-                    "file_size_in_bytes": psize,
-                    "null_value_counts": None,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": None,
-                    "referenced_data_file": d["referenced"],
-                    "content_offset": d["offset"],
-                    "content_size_in_bytes": d["length"],
-                },
-            })
-        dman_path = os.path.join(meta_dir, f"{commit_uuid}-m1.avro")
-        dmb = write_ocf_bytes(
-            _manifest_entry_schema(part_avro_fields, dv_fields=True),
-            dentries,
-            extra_meta={
-                "schema": json.dumps(write_schema),
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": "0",
-                "format-version": "3",
-                "content": "deletes",
-            },
-        )
-        with open(dman_path, "wb") as fh:
-            fh.write(dmb)
-        manifest_files.append({
-            "manifest_path": dman_path,
-            "manifest_length": len(dmb),
-            "partition_spec_id": 0,
-            "content": 1,
-            "sequence_number": 1,
-            "min_sequence_number": 1,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(dentries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": 0,
-            "deleted_rows_count": deleted_rows,
-        })
+            e = _added_entry(snapshot_id, seq, puffin_path, typed_partition(a),
+                             d["cardinality"], psize, content=1)
+            e["data_file"].update(
+                file_format="PUFFIN", referenced_data_file=d["referenced"],
+                content_offset=d["offset"], content_size_in_bytes=d["length"],
+            )
+            dentries.append(e)
+        manifests.append(write_manifest(
+            os.path.join(meta_dir, f"{commit_uuid}-m1.avro"), dentries,
+            seq=seq, snapshot_id=snapshot_id, spec=spec, schema=write_schema,
+            fv=fmt, content=1,
+        ))
 
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
-    )
-    lb = write_ocf_bytes(
-        _MANIFEST_FILE_SCHEMA, manifest_files,
-        extra_meta={"format-version": str(fmt), "snapshot-id": str(snapshot_id)},
-    )
-    with open(list_path, "wb") as fh:
-        fh.write(lb)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": 1,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": 0,
-        "summary": {
+    commit_snapshot(
+        handle, base, manifests, {
             "operation": "append",
-            "added-data-files": str(len(entries)),
-            "added-records": str(total_rows),
+            "added-data-files": len(entries),
+            "added-records": total_rows,
             "converted-from": "delta",
-            **({"added-delete-files": str(len(dv_adds)),
-                "added-position-deletes": str(deleted_rows)}
+            **({"added-delete-files": len(dv_adds),
+                "added-position-deletes": deleted_rows}
                if dv_adds else {}),
         },
-    }
-    if fmt >= 3:
-        snapshot["first-row-id"] = 0
-    # name-mapping resolves files written without parquet field ids:
-    # list the physical name first (what files carry), the logical name
-    # as an alias when mapped
-    nm = []
-    for fl in ice_fields:
-        phys = phys_of.get(fl["name"], fl["name"])
-        names = [phys] if phys == fl["name"] else [phys, fl["name"]]
-        nm.append({"field-id": fl["id"], "names": names})
-    meta = {
-        "format-version": fmt,
-        "table-uuid": commit_uuid,
-        "location": table,
-        "last-sequence-number": 1,
-        "last-updated-ms": now_ms,
-        "last-column-id": max(f["id"] for f in ice_fields),
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "last-partition-id": 999 + len(spec_fields),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
-            "write.format.default": "parquet",
-            "schema.name-mapping.default": json.dumps(nm),
-        },
-        "current-snapshot-id": snapshot_id,
-        "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
-        "snapshots": [snapshot],
-        "snapshot-log": [
-            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-        ],
-        "metadata-log": [],
-        "__version": version,
-    }
-    if fmt >= 3:
-        meta["next-row-id"] = total_rows
-    if stats_source == "log":
-        # UniForm sync: mark the metadata as delta-owned so the commit
-        # hook can gate cheaply without replaying the delta log, and
-        # stamp WHICH delta version this mirror reflects — the
-        # incremental append path refuses to chain onto a stale mirror
-        meta["properties"]["delta.universalFormat"] = "true"
-        meta["properties"]["delta.uniform.deltaVersion"] = str(_version)
-    _publish_metadata_exclusive(meta_dir, version, meta)
+        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+        updates=[{"action": "upgrade-format-version", "format-version": 3}]
+        if fmt >= 3 else [],
+    )
     return {
         "converted_files": len(entries),
         "rows": total_rows,
@@ -888,9 +698,8 @@ def convert_iceberg_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
         plan_files,
     )
 
-    table = re.sub(
-        r"^file:/{0,2}(/)", r"\1",
-        str(p.get("path") or p.get("table") or p.get("source") or ""),
+    table = _strip_scheme(
+        str(p.get("path") or p.get("table") or p.get("source") or "")
     )
     if not table:
         raise ValueError("convert: 'path' of the iceberg table is required")

@@ -1230,7 +1230,10 @@ def test_rest_catalog_table_validation():
 def _serve_stateful_catalog():
     """Fake REST catalog that OWNS table metadata: applies create/commit
     (validating assert-ref-snapshot-id, 409 on mismatch) like a real
-    server, so writer round-trips and conflict detection are e2e."""
+    server, so writer round-trips and conflict detection are e2e.  Like
+    a real catalog it honours the create request's format-version and
+    write order, and keeps last-updated-ms, snapshot-log and
+    metadata-log (``mem://<table>/vN.metadata.json``) itself."""
     import http.server
     import threading
 
@@ -1270,11 +1273,16 @@ def _serve_stateful_catalog():
             body = self._body()
             if path == "/v1/main/namespaces/ns/tables":
                 name = body["name"]
+                props = body.get("properties") or {}
+                spec = (body.get("partition-spec")
+                        or {"spec-id": 0, "fields": []})
+                order = body.get("write-order")
                 state[name] = {
-                    "format-version": 2,
+                    "format-version": int(props.get("format-version", 2)),
                     "table-uuid": f"uuid-{name}",
                     "location": body["location"],
                     "last-sequence-number": 0,
+                    "last-updated-ms": int(time.time() * 1000),
                     "last-column-id": max(
                         (f["id"] for f in body["schema"]["fields"]), default=0
                     ),
@@ -1284,13 +1292,25 @@ def _serve_stateful_catalog():
                          if k != "identifier-field-ids"}
                     ],
                     "default-spec-id": 0,
-                    "partition-specs": [body.get("partition-spec")
-                                        or {"spec-id": 0, "fields": []}],
-                    "properties": body.get("properties") or {},
+                    "partition-specs": [spec],
+                    "last-partition-id": max(
+                        [999] + [f["field-id"] for f in spec["fields"]]
+                    ),
+                    "default-sort-order-id": (
+                        order["order-id"] if order else 0
+                    ),
+                    "sort-orders": [{"order-id": 0, "fields": []}]
+                    + ([order] if order else []),
+                    "properties": props,
                     "current-snapshot-id": None,
+                    "refs": {},
                     "snapshots": [],
                     "snapshot-log": [],
+                    "metadata-log": [],
+                    "_version": 0,
                 }
+                if state[name]["format-version"] >= 3:
+                    state[name]["next-row-id"] = 0
                 return self._json(
                     {"metadata-location": f"mem://{name}", "metadata": state[name]}
                 )
@@ -1320,6 +1340,7 @@ def _serve_stateful_catalog():
                         ):
                             return self._json({"error": "requirement failed"}, 409)
                 last_added_schema_id = None
+                before = meta.get("current-snapshot-id")
                 for upd in body.get("updates", []):
                     if upd["action"] == "add-snapshot":
                         snap = upd["snapshot"]
@@ -1375,6 +1396,10 @@ def _serve_stateful_catalog():
                             meta.get("partition-specs") or []
                         ) + [sp]
                         meta["_last_added_spec"] = sp.get("spec-id")
+                        meta["last-partition-id"] = max(
+                            [meta.get("last-partition-id", 999)]
+                            + [f["field-id"] for f in sp["fields"]]
+                        )
                     elif upd["action"] == "set-default-spec":
                         sid = upd["spec-id"]
                         meta["default-spec-id"] = (
@@ -1400,12 +1425,33 @@ def _serve_stateful_catalog():
                                 {"error": "cannot downgrade"}, 400
                             )
                         meta["format-version"] = fv
+                        if fv >= 3:
+                            meta.setdefault("next-row-id", 0)
                     elif upd["action"] == "remove-snapshots":
                         gone = set(upd.get("snapshot-ids") or [])
                         meta["snapshots"] = [
                             s for s in meta["snapshots"]
                             if s.get("snapshot-id") not in gone
                         ]
+                        meta["snapshot-log"] = [
+                            e for e in meta.get("snapshot-log") or []
+                            if e.get("snapshot-id") not in gone
+                        ]
+                now = int(time.time() * 1000)
+                meta["last-updated-ms"] = now
+                cur = meta.get("current-snapshot-id")
+                if cur is not None and cur != before:
+                    meta["snapshot-log"] = (meta.get("snapshot-log") or []) + [
+                        {"timestamp-ms": now, "snapshot-id": cur}
+                    ]
+                meta["_version"] = meta.get("_version", 0) + 1
+                if meta["_version"] > 1:
+                    meta["metadata-log"] = (meta.get("metadata-log") or []) + [
+                        {"timestamp-ms": now, "metadata-file":
+                         f"mem://{name}/v{meta['_version'] - 1}.metadata.json"}
+                    ]
+                meta["snapshot-log"] = meta["snapshot-log"][-10:]
+                meta["metadata-log"] = meta.get("metadata-log", [])[-10:]
                 return self._json(
                     {"metadata-location": f"mem://{name}", "metadata": meta}
                 )
@@ -1414,6 +1460,122 @@ def _serve_stateful_catalog():
     srv = http.server.HTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv, state
+
+
+def _normalized_meta(meta: dict, location: str) -> dict:
+    """Table metadata with what legitimately differs between two tables
+    blanked: uuids, timestamps, locations, manifest-list names and
+    snapshot ids (renumbered in history order)."""
+    ids = {s["snapshot-id"]: i for i, s in enumerate(meta.get("snapshots") or [])}
+    ids.update({
+        e["snapshot-id"]: len(ids) + i
+        for i, e in enumerate(meta.get("snapshot-log") or [])
+        if e["snapshot-id"] not in ids
+    })
+
+    def walk(x, key=None):
+        if isinstance(x, dict):
+            return {k: walk(v, k) for k, v in x.items()
+                    if not k.startswith("_")
+                    and k not in ("table-uuid", "location")}
+        if isinstance(x, list):
+            return [walk(v, key) for v in x]
+        if key in ("snapshot-id", "current-snapshot-id", "snapshot-ids"):
+            return ids.get(x, x)
+        if key in ("timestamp-ms", "last-updated-ms"):
+            return 0
+        if key == "manifest-list":
+            return os.path.dirname(x).replace(location, "<table>")
+        if key == "metadata-file":
+            return os.path.basename(x)
+        return x
+
+    return walk(meta)
+
+
+def test_local_and_rest_commits_give_the_same_metadata(spark, tmp_path):
+    """One op sequence on a filesystem table and on a catalog table: the
+    one commit path sends the same update list to the catalog that it
+    applies locally, so after every op the two tables' metadata agree
+    (ids, paths and timestamps aside) — and every local commit names
+    its predecessor in metadata-log."""
+    from pipeline_spark.sinks.iceberg_native import (
+        alter_iceberg_native,
+        compact_iceberg_native,
+        delete_iceberg_native,
+        expire_iceberg_native,
+        rewrite_manifests_iceberg_native,
+        rollback_iceberg_native,
+        tag_iceberg_native,
+        update_iceberg_native,
+        upsert_iceberg_native,
+    )
+    from pipeline_spark.sources.iceberg_native import load_table_metadata
+
+    srv, state = _serve_stateful_catalog()
+    try:
+        uri = f"http://127.0.0.1:{srv.server_address[1]}"
+        local_loc = str(tmp_path / "local")
+        rest_loc = str(tmp_path / "rest")
+        tables = [
+            ({"path": local_loc}, local_loc, lambda: load_table_metadata(local_loc)),
+            ({"catalog": {"uri": uri}, "table": "ns.eq", "location": rest_loc},
+             rest_loc, lambda: state["eq"]),
+        ]
+
+        def df(lo, hi):
+            return spark.createDataFrame(
+                [(i, i % 3, f"s{i}") for i in range(lo, hi)],
+                "id long, g long, s string",
+            ).coalesce(1)
+
+        def snap(meta, i):
+            return meta["snapshots"][i]["snapshot-id"]
+
+        ops = [
+            ("create", lambda t, m: write_iceberg_native(df(0, 6), {
+                **t, "mode": "create", "properties": {"format-version": "3"}})),
+            ("append", lambda t, m: write_iceberg_native(
+                df(6, 9), {**t, "mode": "append"})),
+            ("rename", lambda t, m: alter_iceberg_native(
+                spark, {**t, "renameColumn": {"s": "label"}})),
+            ("sortBy", lambda t, m: alter_iceberg_native(
+                spark, {**t, "sortBy": ["id"]})),
+            ("tag", lambda t, m: tag_iceberg_native(
+                spark, {**t, "tagName": "v1"})),
+            ("compact", lambda t, m: compact_iceberg_native(spark, t)),
+            ("delete", lambda t, m: delete_iceberg_native(spark, {
+                **t, "where": [{"key": "id", "op": "=", "value": 4}]})),
+            ("update", lambda t, m: update_iceberg_native(spark, {
+                **t, "where": [{"key": "id", "op": "=", "value": 7}],
+                "set": {"g": "g + 100"}})),
+            ("upsert", lambda t, m: upsert_iceberg_native(
+                spark,
+                spark.createDataFrame([(1, 50, "up")],
+                                      "id long, g long, label string"),
+                {**t, "primaryKeys": ["id"]})),
+            ("rewriteManifests", lambda t, m: rewrite_manifests_iceberg_native(
+                spark, t)),
+            ("rollback", lambda t, m: rollback_iceberg_native(
+                spark, {**t, "snapshotId": snap(m, 3)})),
+            ("expire", lambda t, m: expire_iceberg_native(
+                spark, {**t, "retainLast": 2})),
+        ]
+        for name, op in ops:
+            metas = []
+            for params, loc, load in tables:
+                prev = None if name == "create" else load()
+                op(params, prev)
+                metas.append(_normalized_meta(json.loads(json.dumps(load())), loc))
+            assert metas[0] == metas[1], name
+            if name in ("compact", "delete", "rewriteManifests"):
+                local = load_table_metadata(local_loc)
+                assert local["metadata-log"][-1]["metadata-file"] == (
+                    os.path.join(local_loc, "metadata",
+                                 f"v{local['__version'] - 1}.metadata.json")
+                ), name
+    finally:
+        srv.shutdown()
 
 
 def test_rest_catalog_write_create_append_read(spark, tmp_path):
@@ -1477,6 +1639,21 @@ def test_rest_catalog_write_conflict_is_loud(spark, tmp_path, monkeypatch):
             write_iceberg_native(
                 spark.range(5, 10).coalesce(1), {**cat_p, "mode": "append"}
             )
+    finally:
+        srv.shutdown()
+
+
+def test_rest_catalog_streaming_high_water_of_missing_table():
+    """A stream's first micro-batch into a catalog table that does not
+    exist yet reads high-water -1 (nothing committed), not a 404."""
+    from pipeline_spark.sinks.iceberg_native import last_streaming_batch
+
+    srv, _state = _serve_stateful_catalog()
+    try:
+        uri = f"http://127.0.0.1:{srv.server_address[1]}"
+        assert last_streaming_batch(
+            {"catalog": {"uri": uri}, "table": "ns.missing"}, "app"
+        ) == -1
     finally:
         srv.shutdown()
 

@@ -48,6 +48,25 @@ def test_v3_appends_assign_contiguous_ids(spark, tmp_path):
     assert got == [(i, i) for i in range(8)]
 
 
+def test_add_files_into_v3_table_assigns_row_ids(spark, tmp_path):
+    """add_files commits through the shared snapshot commit, so imported
+    files take row ids off the table's next-row-id like any append."""
+    from pipeline_spark.sinks.iceberg_addfiles import add_files_iceberg_native
+    from pipeline_spark.sources.iceberg_native import load_table_metadata
+
+    tbl = _mk_v3(spark, tmp_path, "il_add", [(i, f"v{i}") for i in range(3)])
+    src = str(tmp_path / "import")
+    spark.createDataFrame([(3, "x"), (4, "y")], "id long, v string") \
+        .coalesce(1).write.parquet(src)
+    add_files_iceberg_native(spark, {"path": tbl, "sourceDir": src})
+    assert _ids(spark, tbl) == [(i, i) for i in range(5)]
+    meta = load_table_metadata(tbl)
+    cur = next(s for s in meta["snapshots"]
+               if s["snapshot-id"] == meta["current-snapshot-id"])
+    assert cur["first-row-id"] == 3
+    assert meta["next-row-id"] == 5
+
+
 def test_v2_withrowids_refuses(spark, tmp_path):
     tbl = str(tmp_path / "il2")
     write_iceberg_native(
@@ -105,6 +124,27 @@ def test_update_keeps_row_ids(spark, tmp_path):
     )
     # the updated ROW keeps its id (iceberg semantics: _row_id survives
     # updates; only _last_updated_sequence_number would move)
+    assert got == [
+        (i, "UPDATED" if i == 2 else f"v{i}", i) for i in range(5)
+    ]
+
+
+def test_mor_update_keeps_row_ids(spark, tmp_path):
+    """A merge-on-read update deletes the old row by deletion vector and
+    appends its updated copy with the row's id materialized."""
+    tbl = _mk_v3(spark, tmp_path, "il5m", [(i, f"v{i}") for i in range(5)])
+    out = update_iceberg_native(spark, {
+        "path": tbl, "method": "mor",
+        "where": [{"key": "id", "op": "=", "value": 2}],
+        "set": {"v": "'UPDATED'"},
+    })
+    assert out["updated_rows"] == 1 and "rewritten_files" not in out
+    got = sorted(
+        (r["id"], r["v"], r["_row_id"])
+        for r in read_iceberg_native(
+            spark, {"path": tbl, "withRowIds": True}
+        ).collect()
+    )
     assert got == [
         (i, "UPDATED" if i == 2 else f"v{i}", i) for i in range(5)
     ]

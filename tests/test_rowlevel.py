@@ -22,7 +22,10 @@ from pipeline_spark.sinks.iceberg_native import (
     write_iceberg_native,
 )
 from pipeline_spark.sources.delta_native import read_delta_native
-from pipeline_spark.sources.iceberg_native import read_iceberg_native
+from pipeline_spark.sources.iceberg_native import (
+    load_table_metadata,
+    read_iceberg_native,
+)
 
 
 def _v(i):
@@ -91,10 +94,19 @@ def test_same_rows_and_counts_on_both_formats(spark, tmp_path, fmt, method):
     alive = {r for r in alive if r[0] not in (0, 9)}
     assert set(_rows(read)) == alive
 
-    # Iceberg UPDATE is copy-on-write only; Delta's runs both methods
     out = update(spark, {"path": path, "where": UPDATE, "set": SET,
                          "method": method})
     assert out["updated_rows"] == 5
+    if method == "mor":
+        # merge-on-read rewrites no file: the old rows are deleted by
+        # position and the updated rows land beside them
+        assert "rewritten_files" not in out
+        if fmt == "iceberg":
+            meta = load_table_metadata(path)
+            cur = next(s for s in meta["snapshots"]
+                       if s["snapshot-id"] == meta["current-snapshot-id"])
+            assert int(cur["summary"]["added-delete-files"]) >= 1
+            assert int(cur["summary"]["added-data-files"]) >= 1
     bumped = {16, 19, 22, 25, 28}
     want = {(i, g, v + 1000 if i in bumped else v) for i, g, v in alive}
     assert set(_rows(read)) == want
