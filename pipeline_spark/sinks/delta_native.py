@@ -18,12 +18,15 @@ per-commit directory keeps staging atomic and vacuum-friendly).
 Partitioned writes keep Spark's hive layout inside that directory, so
 the native reader's basePath fast path prunes by directory.
 
-Concurrency: single-writer (os.rename commit); concurrent committers
-race on the version file exactly like Delta on filesystems without
-atomic-put semantics — the loser gets an actionable error, not silent
-corruption.  Checkpoints: ``checkpointInterval`` (default 10) writes a
-single-part checkpoint parquet + ``_last_checkpoint`` so log replay
-stays O(live files), not O(commits).
+Every version — write, compaction, DML, merge, clone, restore, alter
+and the ``tableconvert`` creates — is published by one :func:`commit`:
+it stamps the In-Commit Timestamp and row-tracking ids, claims the
+version file create-exclusively (a racing writer always loses loudly),
+rebases a loser over the commits that beat it when they do not touch
+what the operation read (delta-spark's optimistic-concurrency rules),
+and then writes a checkpoint every ``checkpointInterval`` versions
+(default 10; parquet + ``_last_checkpoint``, so log replay stays
+O(live files), not O(commits)) and syncs the UniForm mirror.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ from pipeline_spark.sinks.drive import write_batches
 from pipeline_spark.sources.delta_native import (
     _log_dir,
     latest_version,
+    replay_domains,
     replay_log,
     replay_state,
 )
@@ -318,8 +322,10 @@ def write_delta_native(
         create_schema_json = json.dumps(_sj)
     else:
         create_schema_json = df.schema.json()
+    snapshot = None
     if exists:
-        prev_adds, prev_meta, _proto, _v, prev_txns = replay_state(table)
+        snapshot = replay_state(table, prev_version)
+        prev_adds, prev_meta, _proto, _v, prev_txns = snapshot
         # idempotence FIRST: a replayed streaming micro-batch must no-op
         # even under mode create/errorifexists, not crash-loop the stream
         if txn is not None and int(txn[1]) <= prev_txns.get(txn[0], -1):
@@ -417,8 +423,6 @@ def write_delta_native(
     # shuffle) and OPTIMIZE re-clusters on these columns by default
     cluster_by = [str(c) for c in (p.get("clusterBy") or [])]
     if exists:
-        from pipeline_spark.sources.delta_native import replay_domains
-
         # protocol-gated: only clustered tables list the domainMetadata
         # writer feature, so plain tables skip the domain replay walk
         dm = (
@@ -542,46 +546,12 @@ def write_delta_native(
                 "committed"
             )
 
-    adds = []
     now_ms = int(time.time() * 1000)
-    for root, _dirs, files in os.walk(staging):
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            rel = os.path.relpath(full, table)
-            pv: dict[str, str] = {}
-            for seg in os.path.relpath(root, staging).split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    pv[k] = (
-                        None
-                        if v == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(v)
-                    )
-            adds.append({
-                # PROTOCOL.md: add.path is the URL-encoded relative path —
-                # '%' in an on-disk (hive-escaped) segment must itself
-                # escape so the reader's unquote restores the real name
-                "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                "partitionValues": pv,
-                "size": os.path.getsize(full),
-                "modificationTime": now_ms,
-                "dataChange": True,
-                "__full_path__": full,
-            })
-
+    adds = _staged_adds(table, staging, now_ms)
     # per-file column statistics (protocol `add.stats` JSON) so readers can
     # skip whole files against pushed predicates — the 100 TB scan-
-    # reduction path.  Footer-only reads, distributed across executors;
-    # the driver collects one small dict per file.
-    stats_map = _collect_file_stats(
-        df.sparkSession, [a["__full_path__"] for a in adds]
-    )
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
+    # reduction path (footer-only reads)
+    _stamp_stats(df.sparkSession, adds)
 
     actions: list[dict] = []
     ict_on_create = (
@@ -605,11 +575,6 @@ def write_delta_native(
             "delta.rowTracking.materializedRowCommitVersionColumnName",
             f"_row_commit_version_col_{uuid.uuid4().hex[:12]}",
         )
-    rowtrack_active = (
-        rowtrack_on_create
-        if not exists
-        else "rowTracking" in (_proto.get("writerFeatures") or [])
-    )
     if not exists:
         if (ict_on_create or v2ckpt_on_create or cluster_by
                 or rowtrack_on_create):
@@ -689,7 +654,7 @@ def write_delta_native(
             # rows into fresh files, DV/column-mapping aware); untouched
             # files never move — all in THIS one commit
             rw_removes, rw_adds = _replace_where_rewrites(
-                spark, table, (prev_adds, prev_meta, _proto, _v),
+                spark, table, snapshot[:4],
                 replace_where, commit_id, now_ms,
             )
             actions.extend({"remove": r} for r in rw_removes)
@@ -703,17 +668,6 @@ def write_delta_native(
                         "dataChange": True,
                     }
                 })
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": str(txn[0]), "version": int(txn[1])}}
-        )
-    if rowtrack_active and adds:
-        _stamp_row_tracking(
-            table, adds,
-            (prev_version + 1) if exists else 0,
-            exists=exists,
-        )
-        actions.append(_row_tracking_domain_action(adds))
     actions.extend({"add": a} for a in adds)
     op_params = {"mode": mode, "partitionBy": json.dumps(part_cols)}
     if replace_where:
@@ -725,253 +679,27 @@ def write_delta_native(
             "operationParameters": op_params,
         }
     })
-
-    os.makedirs(log_dir, exist_ok=True)
-    version = (prev_version + 1) if exists else 0
-    # multi-writer safety (r7, VERDICT r6 ask #8): the commit file is
-    # create-exclusive (link(2) / O_EXCL — a filesystem conditional put),
-    # so a racing writer ALWAYS loses loudly.  A lost BLIND APPEND then
-    # retries at the next version after re-validating that the
-    # interleaved commits didn't change what this write depends on
-    # (schema, partitioning, CHECK constraints, txn idempotence) — the
-    # same optimistic-concurrency rule delta-spark applies.  DML writers
-    # (delete/update/merge/optimize) get their own conflict checker in
-    # _commit_actions_retry (r8); overwrite/replaceWhere raise for the
-    # caller to re-plan — their removed-file set IS the state replaced.
-    # appends retry after re-validation (r7); replaceWhere retries too
-    # (r8) when every interleaved commit is provably OUTSIDE its domain
-    # — delta-spark lets disjoint replaceWhere/append races both commit.
-    # A full overwrite never retries: its removed-file set IS the table.
-    can_retry = (
-        exists and evolved_schema is None
-        and (mode == "append" or bool(replace_where))
-    )
-    retries = int(p.get("commitRetries", 20))
-    # In-Commit Timestamps (r7, PROTOCOL.md): active when enabled at
-    # create, recorded in the table config, or visible on the previous
-    # commit's first line — commitInfo moves FIRST and carries a
-    # strictly-increasing timestamp that time travel prefers over mtime.
-    ict_val = None
-    if not exists:
-        if ict_on_create:
-            ict_val = now_ms
+    # a blind append rebases over commits that keep the schema,
+    # partitioning and constraints its rows were checked against, a
+    # replaceWhere over commits outside its domain; a create, a full
+    # overwrite or a schema evolution never — what they replace IS the
+    # snapshot
+    if not exists or evolved_schema is not None:
+        reads: str | list[dict] = "table"
+    elif replace_where:
+        reads = replace_where
     else:
-        prev_ict_v = _prev_ict(log_dir, version)
-        if prev_ict_v is None and str(
-            (prev_meta.get("configuration") or {}).get(
-                "delta.enableInCommitTimestamps", ""
-            )
-        ).lower() == "true":
-            prev_ict_v = -1  # enabled mid-life: start the chain here
-        if prev_ict_v is not None:
-            ict_val = max(now_ms, int(prev_ict_v) + 1)
-    if ict_val is not None:
-        actions = _with_ict(actions, ict_val)
-    tmp = os.path.join(log_dir, f"commit.{commit_id}.tmp")
-    with open(tmp, "w") as fh:
-        for action in actions:
-            fh.write(json.dumps(action) + "\n")
-    while True:
-        commit_path = os.path.join(log_dir, f"{version:020d}.json")
-        try:
-            # atomic create-exclusive: link(2) fails with EEXIST instead
-            # of replacing like rename(2) would
-            os.link(tmp, commit_path)
-            break
-        except FileExistsError:
-            pass
-        except OSError:
-            # filesystem without hardlinks: O_EXCL create, then copy bytes
-            try:
-                with open(tmp, "rb") as src, open(commit_path, "xb") as dst:
-                    dst.write(src.read())
-                break
-            except FileExistsError:
-                pass
-        if not can_retry or retries <= 0:
-            os.unlink(tmp)
-            raise FileExistsError(
-                f"delta sink: concurrent commit raced on version {version} "
-                f"at {commit_path} — retry the write"
-            ) from None
-        retries -= 1
-        new_adds, new_meta, _np, new_version, new_txns = replay_state(table)
-        del new_adds
-        if txn is not None and int(txn[1]) <= new_txns.get(txn[0], -1):
-            # the racing commit WAS this transaction (replayed batch):
-            # drop our staged duplicate, the data is already in
-            os.unlink(tmp)
-            import shutil as _shutil
-
-            _shutil.rmtree(staging, ignore_errors=True)
-            return
-        if _schema_fingerprint(new_meta["schemaString"]) != _schema_fingerprint(
-            prev_meta["schemaString"]
-        ):
-            os.unlink(tmp)
-            raise FileExistsError(
-                "delta sink: concurrent commit changed the table schema "
-                "mid-append — re-run the write against the new schema"
-            )
-        if list(new_meta.get("partitionColumns") or []) != part_cols:
-            os.unlink(tmp)
-            raise FileExistsError(
-                "delta sink: concurrent commit changed the table "
-                "partitioning mid-append — re-run the write"
-            )
-        new_constraints = {
-            k: v
-            for k, v in (new_meta.get("configuration") or {}).items()
-            if k.startswith("delta.constraints.")
-            or k == "delta.appendOnly"
-        }
-        old_constraints = {
-            k: v
-            for k, v in (prev_meta.get("configuration") or {}).items()
-            if k.startswith("delta.constraints.")
-            or k == "delta.appendOnly"
-        }
-        if new_constraints != old_constraints:
-            os.unlink(tmp)
-            raise FileExistsError(
-                "delta sink: concurrent commit changed table constraints "
-                "mid-append — rows were validated against the old ones; "
-                "re-run the write"
-            )
-        if replace_where:
-            # domain-disjointness check: an interleaved remove of a file
-            # this replaceWhere also removes, or an interleaved add whose
-            # stats ADMIT the predicate, invalidates the planned rewrite
-            from pipeline_spark.sources.delta_native import (
-                _stats_may_match,
-                stats_to_logical,
-            )
-
-            my_removes = {
-                a["remove"].get("path") for a in actions if "remove" in a
-            }
-            for v2 in range(version, new_version + 1):
-                with open(
-                    os.path.join(log_dir, f"{v2:020d}.json")
-                ) as fh2:
-                    for line in fh2:
-                        if not line.strip():
-                            continue
-                        act = json.loads(line)
-                        if "remove" in act and act["remove"].get(
-                            "path"
-                        ) in my_removes:
-                            os.unlink(tmp)
-                            raise FileExistsError(
-                                f"delta sink: concurrent commit {v2} "
-                                "removed a file this replaceWhere also "
-                                "rewrites — re-plan against the new "
-                                "snapshot"
-                            )
-                        if "add" in act and act["add"].get(
-                            "dataChange", True
-                        ):
-                            chk = dict(act["add"])
-                            stats_to_logical([chk], cm)
-                            if _stats_may_match(
-                                chk, replace_where, None
-                            ) and not _pv_disproves(
-                                act["add"], replace_where, set(part_cols),
-                                (cm or {}).get("phys_of") or {},
-                            ):
-                                os.unlink(tmp)
-                                raise FileExistsError(
-                                    f"delta sink: concurrent commit {v2} "
-                                    "added data inside the replaceWhere "
-                                    "domain — re-plan against the new "
-                                    "snapshot"
-                                )
-        version = new_version + 1
-        if rowtrack_active and adds:
-            # a racing commit may have advanced the row-id high
-            # watermark: restamp baseRowId from the FRESH domain and the
-            # default commit version to the new slot, then rewrite the
-            # staged commit (overlapping row ids would break identity)
-            _stamp_row_tracking(table, adds, version, exists=True)
-            dom = _row_tracking_domain_action(adds)
-            for act in actions:
-                if act.get("domainMetadata", {}).get("domain") \
-                        == "delta.rowTracking":
-                    act["domainMetadata"] = dom["domainMetadata"]
-            with open(tmp, "w") as fh:
-                for action in actions:
-                    fh.write(json.dumps(action) + "\n")
-        if ict_val is not None:
-            # the interleaved commit advanced the ICT chain: re-stamp
-            # strictly past ITS timestamp and rewrite the staged commit
-            chain = _prev_ict(log_dir, version)
-            ict_val = max(
-                int(time.time() * 1000),
-                (int(chain) + 1) if chain is not None else ict_val,
-            )
-            actions = _with_ict(actions, ict_val)
-            with open(tmp, "w") as fh:
-                for action in actions:
-                    fh.write(json.dumps(action) + "\n")
-    os.unlink(tmp)
-
-    interval = int(p.get("checkpointInterval", 10))
-    if interval > 0 and version > 0 and version % interval == 0:
-        write_checkpoint(table, version)
-    _maybe_uniform_sync(table, actions, version)
-
-
-def _stamp_row_tracking(
-    table: str, adds: list[dict], version: int, *, exists: bool
-) -> None:
-    """baseRowId + defaultRowCommitVersion on every add (PROTOCOL.md Row
-    Tracking): contiguous id ranges from the ``delta.rowTracking``
-    domain's high watermark, sized by each file's numRecords.  Rewritten
-    files that carry MATERIALIZED row ids still get a (never-read) fresh
-    base, as the protocol requires every add on a row-tracking table to
-    declare one."""
-    hwm = -1
-    if exists:
-        from pipeline_spark.sources.delta_native import replay_domains
-
-        dm = replay_domains(table).get("delta.rowTracking")
-        if dm:
-            try:
-                hwm = int(json.loads(dm.get("configuration") or "{}")
-                          .get("rowIdHighWaterMark", -1))
-            except (ValueError, TypeError):
-                hwm = -1
-    base = hwm + 1
-    for a in adds:
-        n = None
-        if a.get("stats"):
-            try:
-                n = json.loads(a["stats"]).get("numRecords")
-            except (ValueError, TypeError):
-                n = None
-        if n is None:
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(
-                os.path.join(table, urllib.parse.unquote(a["path"]))
-            ).metadata.num_rows
-        a["baseRowId"] = base
-        a["defaultRowCommitVersion"] = int(version)
-        a["__rt_rows__"] = int(n)
-        base += int(n)
-
-
-def _row_tracking_domain_action(adds: list[dict]) -> dict:
-    top = max(
-        a["baseRowId"] + a.pop("__rt_rows__", 1) - 1
-        for a in adds
-        if a.get("baseRowId") is not None
+        reads = "append" if mode == "append" else "table"
+    version, _retries = commit(
+        table, snapshot, actions, reads=reads, txn=txn,
+        checkpoint_interval=p.get("checkpointInterval"),
     )
-    return {"domainMetadata": {
-        "domain": "delta.rowTracking",
-        "configuration": json.dumps({"rowIdHighWaterMark": int(top)}),
-        "removed": False,
-    }}
+    if version is None:
+        # the racing commit WAS this transaction (replayed batch): drop
+        # our staged duplicate, the data is already in
+        import shutil as _shutil
+
+        _shutil.rmtree(staging, ignore_errors=True)
 
 
 def _pv_disproves(
@@ -1045,7 +773,8 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
     min_group = max(2, int(p.get("minFilesPerGroup", 2)))
     from pipeline_spark.sources.delta_native import _column_mapping
 
-    prev_adds, meta, _proto, prev_version, _txns = replay_state(table)
+    snapshot = replay_state(table)
+    prev_adds, meta, _proto, _v, _txns = snapshot
     cm = _column_mapping(meta)
     part_cols = list(meta.get("partitionColumns") or [])
     if cm:
@@ -1057,8 +786,6 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
         # clustered table (r7): OPTIMIZE re-clusters on the table's own
         # delta.clustering columns by default, delta-spark's contract
         # (protocol-gated so plain tables skip the domain replay walk)
-        from pipeline_spark.sources.delta_native import replay_domains
-
         dm = (
             replay_domains(table).get("delta.clustering")
             if "domainMetadata" in (_proto.get("writerFeatures") or [])
@@ -1076,10 +803,7 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
             if cluster_cols:
                 p = {**p, "zOrderBy": cluster_cols}
     if p.get("zOrderBy"):
-        return _zorder_compact(
-            spark, table, p, target, prev_adds, meta, cm, part_cols,
-            prev_version,
-        )
+        return _zorder_compact(spark, table, p, target, snapshot, cm, part_cols)
 
     groups: dict[tuple, list[dict]] = {}
     for a in prev_adds:
@@ -1132,7 +856,6 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
         "rowTracking" in (_proto.get("writerFeatures") or []) and rt_mat_id
     )
     if rowtrack:
-        from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, StructField
 
         fschema = StructType(
@@ -1151,37 +874,8 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
             spark, table, fschema, files, with_meta=rowtrack
         )
         if rowtrack:
-            from pipeline_spark.functions.localframe import local_frame
-
-            rid = local_frame(
-                spark,
-                [
-                    (
-                        os.path.abspath(os.path.join(
-                            table, urllib.parse.unquote(a["path"])
-                        )),
-                        int(a.get("baseRowId") or 0),
-                        int(a.get("defaultRowCommitVersion") or 0),
-                    )
-                    for a in files
-                ],
-                "__rt_fp string, __rt_base long, __rt_dcv long",
-            )
-            bin_df = bin_df.join(
-                F.broadcast(rid), bin_df["__dv_fp"] == rid["__rt_fp"], "left"
-            ).withColumn(
-                rt_mat_id,
-                F.coalesce(
-                    F.col(rt_mat_id), F.col("__rt_base") + F.col("__dv_ri")
-                ),
-            )
-            if rt_mat_cv:
-                bin_df = bin_df.withColumn(
-                    rt_mat_cv,
-                    F.coalesce(F.col(rt_mat_cv), F.col("__rt_dcv")),
-                )
-            bin_df = bin_df.drop(
-                "__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv"
+            bin_df = _keep_row_ids(
+                spark, table, bin_df, files, rt_mat_id, rt_mat_cv
             )
         adds += _write_files(
             table, out_dir, bin_df.coalesce(1), dict(key), now_ms,
@@ -1196,17 +890,9 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
             })
 
     _stamp_stats(spark, adds)
-
-    rt_actions: list[dict] = []
-    if rowtrack and adds:
-        # every add on a row-tracking table declares a fresh base range
-        # (spec rule) even though readers prefer the materialized ids
-        _stamp_row_tracking(table, adds, prev_version + 1, exists=True)
-        rt_actions.append(_row_tracking_domain_action(adds))
     actions: list[dict] = (
         [{"remove": r} for r in removes]
         + [{"add": a} for a in adds]
-        + rt_actions
         + [{
             "commitInfo": {
                 "timestamp": now_ms,
@@ -1217,16 +903,51 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
     )
     # layout-only rewrite: blind appends never conflict (delta-spark's
     # dataChange=false rule), concurrent rewrites of the same file do
-    _commit_actions_retry(
-        table, prev_version + 1, actions, check_adds=False)
+    commit(
+        table, snapshot, actions, reads="files",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return {"compacted_files": len(removes), "new_files": len(adds)}
 
 
 
+def _keep_row_ids(spark, table: str, df, files: list[dict], rt_id, rt_cv):
+    """Row tracking through a rewrite (PROTOCOL.md Row Tracking): each
+    row of ``df`` (read with ``__dv_fp``/``__dv_ri``) keeps its identity
+    MATERIALIZED in the table's configured columns — the value a prior
+    rewrite stamped, else its file's baseRowId + position and
+    defaultRowCommitVersion."""
+    from pyspark.sql import functions as F
+
+    from pipeline_spark.functions.localframe import local_frame
+
+    rid = local_frame(
+        spark,
+        [
+            (
+                os.path.abspath(
+                    os.path.join(table, urllib.parse.unquote(a["path"]))
+                ),
+                int(a.get("baseRowId") or 0),
+                int(a.get("defaultRowCommitVersion") or 0),
+            )
+            for a in files
+        ],
+        "__rt_fp string, __rt_base long, __rt_dcv long",
+    )
+    df = df.join(
+        F.broadcast(rid), df["__dv_fp"] == rid["__rt_fp"], "left"
+    ).withColumn(
+        rt_id, F.coalesce(F.col(rt_id), F.col("__rt_base") + F.col("__dv_ri"))
+    )
+    if rt_cv:
+        df = df.withColumn(rt_cv, F.coalesce(F.col(rt_cv), F.col("__rt_dcv")))
+    return df.drop("__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv")
+
+
 def _zorder_compact(
-    spark, table: str, p: dict[str, Any], target: int,
-    prev_adds: list[dict], meta: dict, cm: dict | None,
-    part_cols: list[str], prev_version: int,
+    spark, table: str, p: dict[str, Any], target: int, snapshot: tuple,
+    cm: dict | None, part_cols: list[str],
 ) -> dict[str, int]:
     """OPTIMIZE ZORDER BY: rewrite EVERY live file (per partition) with
     rows clustered along the Morton curve of ``zOrderBy`` columns, so
@@ -1239,12 +960,12 @@ def _zorder_compact(
     rewrite (OPTIMIZE's contract)."""
     import math
 
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     from pipeline_spark.functions.zorder import zvalue_column
     from pipeline_spark.sources.delta_native import read_files_with_dv
 
+    prev_adds, meta = snapshot[:2]
     zorder = [str(c) for c in (p.get("zOrderBy") or [])]
     phys_z = [cm["phys_of"].get(c, c) for c in zorder] if cm else zorder
     full = (
@@ -1312,8 +1033,10 @@ def _zorder_compact(
             }
         }]
     )
-    _commit_actions_retry(
-        table, prev_version + 1, actions, check_adds=False)
+    commit(
+        table, snapshot, actions, reads="files",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return {"compacted_files": len(removes), "new_files": len(adds)}
 
 
@@ -1374,78 +1097,281 @@ def _with_ict(actions: list[dict], ict_value: int) -> list[dict]:
     return [{"commitInfo": ci}] + [a for a in actions if "commitInfo" not in a]
 
 
-def _commit_actions(
-    table: str, version: int, actions: list[dict],
-    checkpoint_interval: int = 0,
-) -> None:
-    """Write one commit JSON atomically (create-exclusive: a racing
-    writer loses loudly, never silently replaces a version).  On an
-    ICT-enabled table (previous commit leads with an in-commit
-    timestamp) the commit keeps the chain: commitInfo first,
-    strictly-increasing timestamp."""
-    # row tracking backstop (PROTOCOL.md: every add on a row-tracking
-    # table must declare baseRowId/defaultRowCommitVersion): any writer
-    # committing unstamped adds — DML rewrites, replaceWhere, zorder —
-    # stamps fresh ranges here and advances the domain.  Appends and
-    # compaction stamp at their call sites, so this replay only runs on
-    # the DML paths (which already replayed the log to plan).
-    if any(
-        "add" in a and a["add"].get("baseRowId") is None for a in actions
-    ):
-        try:
-            _rt_proto = replay_state(table)[2]
-        except (FileNotFoundError, ValueError):
-            _rt_proto = {}
-        if "rowTracking" in (_rt_proto.get("writerFeatures") or []):
-            # stamp COPIES: a retried commit (version moved, domain may
-            # have advanced) must restamp freshly — mutating the
-            # caller's dicts would skip that and reuse id ranges
-            new_actions: list[dict] = []
-            stamped: list[dict] = []
-            for a in actions:
-                if "add" in a and a["add"].get("baseRowId") is None:
-                    c = dict(a["add"])
-                    new_actions.append({"add": c})
-                    stamped.append(c)
-                else:
-                    new_actions.append(a)
-            _stamp_row_tracking(table, stamped, version, exists=True)
-            actions = new_actions + [_row_tracking_domain_action(stamped)]
-    prev_ict = _prev_ict(_log_dir(table), version)
-    if prev_ict is not None:
-        actions = _with_ict(
-            actions, max(int(time.time() * 1000), int(prev_ict) + 1)
-        )
-    commit_path = os.path.join(_log_dir(table), f"{version:020d}.json")
-    tmp = commit_path + f".{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        for action in actions:
-            fh.write(json.dumps(action) + "\n")
+#: how many lost races a commit rebases over before it gives up
+_COMMIT_RETRIES = 20
+#: the default ``checkpointInterval`` of every Delta commit
+CHECKPOINT_INTERVAL = 10
+
+
+def commit(
+    table: str, snapshot: tuple | None, actions: list[dict], *,
+    reads: str | list[dict], txn: tuple[str, int] | None = None,
+    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
+) -> tuple[int | None, int]:
+    """Publish ``actions`` as the next version of ``table``: the one
+    place a ``_delta_log`` version is written.
+
+    ``snapshot`` is the ``(adds, metaData, protocol, version, ...)`` state
+    the operation planned against; ``None`` creates the table at version
+    0.  Per attempt, ``commit`` stamps what depends on the version it
+    lands at: row-tracking ids for adds without a ``baseRowId`` plus the
+    ``delta.rowTracking`` watermark (when the protocol lists
+    rowTracking), the ``txn`` marker, and the In-Commit Timestamp chain
+    (commitInfo first).  It spools the commit into the log directory
+    and claims the version file create-exclusively (``os.link``, or an
+    ``O_EXCL`` copy where hard links are missing), so a racing writer
+    always loses loudly.  The loser reads the commits that beat it and
+    rebases onto the next version unless one of them touched what the
+    operation declares in ``reads`` (delta-spark's ConflictChecker):
+
+    ``"append"``    a blind append: the schema, partitioning, CHECK
+                    constraints or appendOnly changed;
+    ``[...]``       a ``where`` domain (replaceWhere, DML, merge): any
+                    metaData, a remove of a file this commit removes, or
+                    a data-changing add whose partition values and stats
+                    admit the predicate (``[]`` admits every add);
+    ``"files"``     a layout rewrite (compaction, z-order): as a domain,
+                    but adds never conflict;
+    ``"metadata"``  alter: any metaData or protocol;
+    ``"table"``     a create (write, clone, convert), a full overwrite or
+                    a restore: anything.
+
+    A protocol this engine cannot read conflicts with every operation.
+    After the claim, a checkpoint every ``checkpoint_interval`` versions
+    (None = the default) and the UniForm mirror sync.  Returns
+    ``(version, retries)``; ``version`` is None when a commit that beat
+    this one carries its ``txn`` (a replayed batch: nothing written).
+    """
+    log_dir = os.path.join(table, "_delta_log")
+    os.makedirs(log_dir, exist_ok=True)
+    meta, proto, version = (
+        (snapshot[1] or {}, snapshot[2] or {}, snapshot[3] + 1)
+        if snapshot else ({}, {}, 0)
+    )
+    # the table config and protocol in force once this commit lands
+    conf = next(
+        (a["metaData"] for a in actions if "metaData" in a), meta
+    ).get("configuration") or {}
+    features = next(
+        (a["protocol"] for a in actions if "protocol" in a), proto
+    ).get("writerFeatures") or []
+    ict = str(conf.get("delta.enableInCommitTimestamps", "")).lower() == "true"
+    op = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+    who = "delta sink" if op.get("operation") == "WRITE" else "delta"
+    if txn is not None:
+        actions = actions + [
+            {"txn": {"appId": str(txn[0]), "version": int(txn[1])}}
+        ]
+    spool = os.path.join(log_dir, f"commit.{uuid.uuid4().hex}.tmp")
+    retries = 0
     try:
-        os.link(tmp, commit_path)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise FileExistsError(
-            f"delta: concurrent commit raced on version {version} at "
-            f"{commit_path} — retry the write"
-        ) from None
-    except OSError:
-        # filesystem without hardlinks: O_EXCL create, then copy bytes
-        try:
-            with open(tmp, "rb") as srcf, open(commit_path, "xb") as dst:
-                dst.write(srcf.read())
-        except FileExistsError:
-            os.unlink(tmp)
-            raise FileExistsError(
-                f"delta: concurrent commit raced on version {version} at "
-                f"{commit_path} — retry the write"
-            ) from None
-    os.unlink(tmp)
-    if checkpoint_interval > 0 and version > 0 and (
-        version % checkpoint_interval == 0
-    ):
+        while True:
+            body = actions
+            if "rowTracking" in features:
+                body = _with_row_ids(table, body, version, snapshot is None)
+            chain = _prev_ict(log_dir, version)
+            if chain is None and ict:
+                chain = -1  # enabled at create or mid-life: start the chain
+            if chain is not None:
+                body = _with_ict(
+                    body, max(int(time.time() * 1000), int(chain) + 1)
+                )
+            with open(spool, "w") as fh:
+                fh.writelines(json.dumps(a) + "\n" for a in body)
+            target = os.path.join(log_dir, f"{version:020d}.json")
+            try:
+                # link(2) fails with EEXIST instead of replacing like
+                # rename(2) would
+                os.link(spool, target)
+                break
+            except FileExistsError:
+                pass
+            except OSError:
+                # filesystem without hardlinks: O_EXCL create, then copy
+                try:
+                    with open(spool, "rb") as src, open(target, "xb") as dst:
+                        dst.write(src.read())
+                    break
+                except FileExistsError:
+                    pass
+            if reads == "table" or retries == _COMMIT_RETRIES:
+                raise FileExistsError(
+                    f"{who}: concurrent commit raced on version {version} "
+                    f"at {target} — retry the write"
+                )
+            won = []
+            while os.path.exists(target):
+                won.append((version, _read_commit(target)))
+                version += 1
+                target = os.path.join(log_dir, f"{version:020d}.json")
+            if txn is not None and any(
+                str(a["txn"].get("appId")) == str(txn[0])
+                and int(a["txn"].get("version", -1)) >= int(txn[1])
+                for _v, acts in won for a in acts if "txn" in a
+            ):
+                return None, retries
+            _check_conflicts(won, reads, meta, actions, who)
+            retries += 1
+    finally:
+        _remove_quiet(spool)
+    interval = (
+        CHECKPOINT_INTERVAL if checkpoint_interval is None
+        else int(checkpoint_interval)
+    )
+    if interval > 0 and version > 0 and version % interval == 0:
         write_checkpoint(table, version)
-    _maybe_uniform_sync(table, actions, version)
+    _maybe_uniform_sync(table, body, version)
+    return version, retries
+
+
+def _read_commit(path: str) -> list[dict]:
+    with open(path) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _with_row_ids(
+    table: str, actions: list[dict], version: int, new_table: bool
+) -> list[dict]:
+    """Row tracking (PROTOCOL.md): every add on a row-tracking table
+    declares ``baseRowId`` + ``defaultRowCommitVersion``.  Adds without
+    one (fresh rows, rewrites whose ids are materialized, an upsert
+    batch) take contiguous ranges past the ``delta.rowTracking`` high
+    watermark, sized by their numRecords, and the commit advances the
+    watermark.  Stamps copies, so a rebased commit restamps from the
+    fresh watermark."""
+    hwm = -1
+    dm = None if new_table else replay_domains(table).get("delta.rowTracking")
+    if dm:
+        try:
+            hwm = int(json.loads(dm.get("configuration") or "{}")
+                      .get("rowIdHighWaterMark", -1))
+        except (ValueError, TypeError):
+            hwm = -1
+    base = hwm + 1
+    out: list[dict] = []
+    stamped = False
+    for a in actions:
+        add = a.get("add")
+        if add is None or add.get("baseRowId") is not None:
+            out.append(a)
+            continue
+        stamped = True
+        try:
+            n = json.loads(add.get("stats") or "{}").get("numRecords")
+        except (ValueError, TypeError):
+            n = None
+        if n is None:
+            import pyarrow.parquet as pq
+
+            n = pq.ParquetFile(
+                os.path.join(table, urllib.parse.unquote(add["path"]))
+            ).metadata.num_rows
+        out.append({"add": {
+            **add, "baseRowId": base, "defaultRowCommitVersion": version,
+        }})
+        base += int(n)
+    if stamped:
+        out.append({"domainMetadata": {
+            "domain": "delta.rowTracking",
+            "configuration": json.dumps({"rowIdHighWaterMark": base - 1}),
+            "removed": False,
+        }})
+    return out
+
+
+def _check_conflicts(
+    won: list[tuple[int, list[dict]]], reads: str | list[dict], meta: dict,
+    actions: list[dict], who: str,
+) -> None:
+    """Raise ``FileExistsError`` when a commit in ``won`` (version,
+    actions) touched what ``reads`` declares (see :func:`commit`)."""
+    from pipeline_spark.sources.delta_native import (
+        _OK_READER_FEATURES,
+        _column_mapping,
+        _stats_may_match,
+        stats_to_logical,
+    )
+
+    where = reads if isinstance(reads, list) else None
+    cm = _column_mapping(meta) if where is not None else None
+    part_set = set(meta.get("partitionColumns") or [])
+    removes = {a["remove"].get("path") for a in actions if "remove" in a}
+    what, inside = (
+        ("replaceWhere", "inside the replaceWhere domain")
+        if who == "delta sink"
+        else ("operation", "matching this operation's read predicate")
+    )
+    for v, acts in won:
+        for act in acts:
+            if "metaData" in act and reads == "append":
+                _check_append_meta(meta, act["metaData"])
+            elif "metaData" in act or ("protocol" in act and reads == "metadata"):
+                raise FileExistsError(
+                    f"{who}: concurrent commit {v} changed the table "
+                    "metadata mid-operation — re-plan against the new "
+                    "snapshot"
+                )
+            elif "protocol" in act and set(
+                act["protocol"].get("readerFeatures") or []
+            ) - _OK_READER_FEATURES:
+                # an upgrade this engine fully supports is benign (the
+                # first DV write raising the table to deletionVectors)
+                raise FileExistsError(
+                    f"{who}: concurrent commit {v} upgraded the table "
+                    "protocol past this writer's feature support — re-plan"
+                )
+            if "remove" in act and act["remove"].get("path") in removes:
+                # retrying would resurrect the other writer's tombstone
+                # or clobber its deletion vector
+                raise FileExistsError(
+                    f"{who}: concurrent commit {v} removed a file this "
+                    f"{what} also rewrites — re-plan against the new "
+                    "snapshot"
+                )
+            if where is not None and "add" in act and act["add"].get(
+                "dataChange", True
+            ):
+                chk = dict(act["add"])
+                stats_to_logical([chk], cm)
+                if _stats_may_match(chk, where, None) and not _pv_disproves(
+                    act["add"], where, part_set,
+                    (cm or {}).get("phys_of") or {},
+                ):
+                    raise FileExistsError(
+                        f"{who}: concurrent commit {v} added data {inside} "
+                        "— re-plan against the new snapshot"
+                    )
+
+
+def _check_append_meta(old: dict, new: dict) -> None:
+    """A blind append's rows were checked against ``old``'s schema,
+    partitioning and constraints: an interleaved metaData that changed
+    any of them fails the append."""
+    if _schema_fingerprint(new["schemaString"]) != _schema_fingerprint(
+        old["schemaString"]
+    ):
+        raise FileExistsError(
+            "delta sink: concurrent commit changed the table schema "
+            "mid-append — re-run the write against the new schema"
+        )
+    if (new.get("partitionColumns") or []) != (old.get("partitionColumns") or []):
+        raise FileExistsError(
+            "delta sink: concurrent commit changed the table partitioning "
+            "mid-append — re-run the write"
+        )
+
+    def guards(m: dict) -> dict:
+        return {
+            k: v for k, v in (m.get("configuration") or {}).items()
+            if k.startswith("delta.constraints.") or k == "delta.appendOnly"
+        }
+
+    if guards(new) != guards(old):
+        raise FileExistsError(
+            "delta sink: concurrent commit changed table constraints "
+            "mid-append — rows were validated against the old ones; "
+            "re-run the write"
+        )
 
 
 def _maybe_uniform_sync(
@@ -1467,13 +1393,12 @@ def _maybe_uniform_sync(
     try:
         _uniform_sync_inner(table, actions, version)
     except Exception as exc:  # noqa: BLE001 — never poison the commit
-        import sys
+        import logging
 
-        print(
-            f"pipeline_spark: uniform iceberg sync failed on {table} "
-            f"({type(exc).__name__}: {exc}) — the mirror is stale until "
-            "the next commit's sync regenerates it",
-            file=sys.stderr,
+        logging.getLogger("pipeline_spark.delta").warning(
+            "uniform iceberg sync failed on %s (%s: %s) — the mirror is "
+            "stale until the next commit's sync regenerates it",
+            table, type(exc).__name__, exc,
         )
 
 
@@ -1521,129 +1446,6 @@ def _uniform_sync_inner(
             except FileExistsError:
                 pass  # racing sync: fall through to the full regen
         sync_uniform_iceberg(table)
-
-
-def _commit_actions_retry(
-    table: str, version: int, actions: list[dict], *,
-    read_where: list[dict] | None = None, check_adds: bool = True,
-    cm: dict | None = None, part_cols: list[str] | None = None,
-    txn: tuple | None = None,
-    retries: int = 20, checkpoint_interval: int = 0,
-) -> dict:
-    """Optimistic concurrency for NON-APPEND writers (r8, VERDICT r7 ask
-    #3 — delta-spark's ConflictChecker shape).  The create-exclusive
-    commit still makes a racing writer lose loudly; this wrapper then
-    examines every interleaved commit and RETRIES at the next version
-    iff the loser's read/write set is provably untouched:
-
-    - an interleaved ``metaData`` / ``protocol`` action → fail (the
-      operation was planned under the old schema/config);
-    - an interleaved ``remove`` naming a file THIS operation removes →
-      fail (concurrent delete/rewrite of the same file — retrying would
-      resurrect the other writer's tombstone or clobber its DV);
-    - an interleaved data-changing ``add`` whose stats ADMIT this
-      operation's read predicate (``read_where``, the dataFilter shape;
-      column-mapped stats translated via ``cm``) → fail — the rows this
-      operation planned against have changed.  ``read_where=None`` with
-      ``check_adds=True`` treats EVERY add as conflicting (full-scan
-      operations); ``check_adds=False`` ignores adds entirely (pure
-      layout rewrites — compaction reads no rows a blind append could
-      change, delta-spark's dataChange=false rule);
-    - an interleaved ``txn`` at/above this operation's own (appId,
-      version) → the race WAS this transaction replayed: no-op, return
-      ``{"replayed": True}``.
-
-    Disjoint-file operations therefore both commit — an append and a
-    delete in different partitions, two DMLs touching different key
-    ranges — while true conflicts keep failing with the same re-plan
-    message as before.  Returns ``{"version": committed}``.
-    """
-    from pipeline_spark.sources.delta_native import (
-        _stats_may_match,
-        stats_to_logical,
-    )
-
-    my_removes = {
-        a["remove"].get("path") for a in actions if "remove" in a
-    }
-    log_dir = _log_dir(table)
-    while True:
-        try:
-            _commit_actions(table, version, actions, checkpoint_interval)
-            return {"version": version}
-        except FileExistsError:
-            if retries <= 0:
-                raise
-            retries -= 1
-        latest = latest_version(log_dir)
-        for v in range(version, int(latest) + 1):
-            with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    act = json.loads(line)
-                    if (
-                        txn is not None and "txn" in act
-                        and str(act["txn"].get("appId")) == str(txn[0])
-                        and int(act["txn"].get("version", -1)) >= int(txn[1])
-                    ):
-                        return {"version": None, "replayed": True}
-                    if "metaData" in act:
-                        raise FileExistsError(
-                            f"delta: concurrent commit {v} changed the "
-                            "table metadata mid-operation — re-plan "
-                            "against the new snapshot"
-                        ) from None
-                    if "protocol" in act:
-                        # a feature upgrade THIS engine fully supports is
-                        # benign (e.g. the first DV write raising the
-                        # table to deletionVectors) — behavioral changes
-                        # (appendOnly, constraints) always travel with a
-                        # metaData action, caught above.  Anything we
-                        # could no longer read conflicts.
-                        from pipeline_spark.sources.delta_native import (
-                            _OK_READER_FEATURES,
-                        )
-
-                        rfeats = set(
-                            act["protocol"].get("readerFeatures") or []
-                        )
-                        if rfeats - _OK_READER_FEATURES:
-                            raise FileExistsError(
-                                f"delta: concurrent commit {v} upgraded "
-                                "the table protocol past this writer's "
-                                "feature support — re-plan"
-                            ) from None
-                    if "remove" in act and act["remove"].get(
-                        "path"
-                    ) in my_removes:
-                        raise FileExistsError(
-                            f"delta: concurrent commit {v} removed a file "
-                            "this operation also rewrites — re-plan "
-                            "against the new snapshot"
-                        ) from None
-                    if "add" in act and check_adds and act["add"].get(
-                        "dataChange", True
-                    ):
-                        chk = dict(act["add"])
-                        if read_where:
-                            stats_to_logical([chk], cm)
-                            conflicted = _stats_may_match(
-                                chk, read_where, None
-                            ) and not _pv_disproves(
-                                act["add"], read_where,
-                                set(part_cols or []),
-                                (cm or {}).get("phys_of") or {},
-                            )
-                        else:
-                            conflicted = True  # no predicate to exclude it
-                        if conflicted:
-                            raise FileExistsError(
-                                f"delta: concurrent commit {v} added data "
-                                "matching this operation's read predicate "
-                                "— re-plan against the new snapshot"
-                            ) from None
-        version = int(latest) + 1
 
 
 def _mutate_where(
@@ -1817,16 +1619,15 @@ def _mutate_where(
             files[0].get("partitionValues") or {}, now_ms,
         ))
 
-    def commit(actions: list[dict], params: dict) -> None:
+    def publish(actions: list[dict], params: dict) -> None:
         actions.extend(cdc_actions)
         actions.append({"commitInfo": {
             "timestamp": now_ms, "operation": op.upper(),
             "operationParameters": {"predicate": json.dumps(where), **params},
         }})
-        _commit_actions_retry(
-            table, (prev_version or 0) + 1, actions,
-            read_where=where, cm=cm, part_cols=part_cols,
-            checkpoint_interval=int(p.get("checkpointInterval", 0) or 0),
+        commit(
+            table, state, actions, reads=where,
+            checkpoint_interval=p.get("checkpointInterval"),
         )
 
     def removed(a: dict) -> dict:
@@ -1838,15 +1639,17 @@ def _mutate_where(
 
     def commit_rewrite(plan) -> dict:
         _stamp_stats(spark, plan.staged)
-        commit(
+        publish(
             [removed(a) for a in plan.files]
             + [{"add": a} for a in plan.staged], {},
         )
         return {f"{op}d_rows": plan.rows, "rewritten_files": len(plan.files)}
 
     def commit_dvs(plan) -> dict:
-        built = _build_dvs(table, plan)
-        if not built:
+        actions, n, n_dvs = _dv_actions(
+            table, plan.files, plan.positions, proto or {}, cm, now_ms
+        )
+        if not n_dvs:
             # the stats over-admitted and nothing matched: drop the
             # staged update and change files, commit nothing
             for a in plan.staged:
@@ -1857,37 +1660,9 @@ def _mutate_where(
                 ))
             return None
         _stamp_stats(spark, plan.staged)
-        actions = []
-        # DV tables need the reader/writer table feature; a column-mapped
-        # table upgrading to features-protocol must also LIST
-        # columnMapping or feature-aware readers would refuse it
-        need = {"deletionVectors"} | ({"columnMapping"} if cm else set())
-        rfeats = set((proto or {}).get("readerFeatures") or [])
-        wfeats = set((proto or {}).get("writerFeatures") or [])
-        if not need <= rfeats:
-            rfeats |= need
-            actions.append({"protocol": {
-                "minReaderVersion": 3, "minWriterVersion": 7,
-                "readerFeatures": sorted(rfeats),
-                "writerFeatures": sorted(wfeats | rfeats),
-            }})
-        by_path = {path_of(a): a for a in plan.files}
-        n = 0
-        for row in built:
-            # __fp__ derives from _metadata.file_path, which URI-encodes
-            # special chars — fall back to the unquoted form
-            a = by_path.get(row["fp"]) or by_path[
-                urllib.parse.unquote(row["fp"])
-            ]
-            n += int(row["n_new"])
-            new_add = {k: v for k, v in a.items() if k != "deletionVector"}
-            new_add["deletionVector"] = json.loads(row["desc"])
-            new_add["dataChange"] = True
-            new_add["modificationTime"] = a.get("modificationTime", now_ms)
-            actions += [removed(a), {"add": new_add}]
         actions += [{"add": a} for a in plan.staged]
-        commit(actions, {"method": "merge-on-read"})
-        result = {f"{op}d_rows": n, "dv_files": len(built)}
+        publish(actions, {"method": "merge-on-read"})
+        result = {f"{op}d_rows": n, "dv_files": n_dvs}
         if set_exprs:
             result["new_files"] = len(plan.staged)
         return result
@@ -1928,19 +1703,40 @@ def _write_files(
     table: str, out_dir: str, df, pv: dict, now_ms: int,
     data_change: bool = True,
 ) -> list[dict]:
-    """Write ``df`` as parquet under ``out_dir``; one add action body per
-    file, carrying ``__full_path__`` for the stats pass (_stamp_stats)."""
+    """Write ``df`` as parquet under ``out_dir``: its add action bodies."""
     df.write.parquet(out_dir)
+    return _staged_adds(table, out_dir, now_ms, pv, data_change)
+
+
+def _staged_adds(
+    table: str, out_dir: str, now_ms: int, pv: dict | None = None,
+    data_change: bool = True,
+) -> list[dict]:
+    """One add action body per parquet file under ``out_dir``, carrying
+    ``__full_path__`` for the stats pass (_stamp_stats).  Partition
+    values are ``pv`` plus the hive ``col=value`` directories a
+    partitioned write leaves."""
     adds = []
     for root, _dirs, names in os.walk(out_dir):
+        file_pv = dict(pv or {})
+        for seg in os.path.relpath(root, out_dir).split(os.sep):
+            if "=" in seg:
+                k, v = seg.split("=", 1)
+                file_pv[k] = (
+                    None if v == "__HIVE_DEFAULT_PARTITION__"
+                    else urllib.parse.unquote(v)
+                )
         for name in sorted(names):
             if not name.endswith(".parquet"):
                 continue
             fullp = os.path.join(root, name)
             rel = os.path.relpath(fullp, table)
             adds.append({
+                # PROTOCOL.md: add.path is the URL-encoded relative path —
+                # '%' in an on-disk (hive-escaped) segment must itself
+                # escape so the reader's unquote restores the real name
                 "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                "partitionValues": pv,
+                "partitionValues": file_pv,
                 "size": os.path.getsize(fullp),
                 "modificationTime": now_ms,
                 "dataChange": data_change,
@@ -1965,9 +1761,15 @@ def _remove_quiet(path: str) -> None:
         pass
 
 
-def _build_dvs(table: str, plan) -> list[dict]:
-    """One DV per touched file from the plan's matched positions, merged
-    with the file's prior DV: ``[{fp, desc (json), n_new}]``.
+def _dv_actions(
+    table: str, files: list[dict], positions, proto: dict, cm, now_ms: int,
+) -> tuple[list[dict], int, int]:
+    """Deletion vectors for the matched ``positions`` (``__fp__``,
+    ``__pos__``) of ``files``: one DV per touched file, merged with its
+    prior DV, and the actions that publish them — the deletionVectors
+    table feature when the protocol lacks it, then per file a remove and
+    a re-add carrying the new descriptor.  Returns (actions, rows newly
+    deleted, DV files).
 
     Strategy gate (guide §3/§5): the stats already bound the matched-row
     count (sum of candidate numRecords).  Small mutations collect the
@@ -1977,10 +1779,14 @@ def _build_dvs(table: str, plan) -> list[dict]:
     from pipeline_spark.functions.dvframe import _driver_max
 
     tbl_abs = os.path.abspath(table)
-    old_dvs = {
+    by_path = {
         os.path.abspath(os.path.join(table, urllib.parse.unquote(a["path"]))):
-            json.dumps(a["deletionVector"])
-        for a in plan.files if a.get("deletionVector")
+            a
+        for a in files
+    }
+    old_dvs = {
+        fp: json.dumps(a["deletionVector"])
+        for fp, a in by_path.items() if a.get("deletionVector")
     }
 
     def merge_write(fp, new_positions):
@@ -2017,9 +1823,9 @@ def _build_dvs(table: str, plan) -> list[dict]:
         desc, n_new = merge_write(fp, pdf["ri"])
         return _pd.DataFrame({"fp": [fp], "desc": [desc], "n_new": [n_new]})
 
-    matches = plan.positions.selectExpr("__fp__ AS fp", "__pos__ AS ri")
+    matches = positions.selectExpr("__fp__ AS fp", "__pos__ AS ri")
     bound: int | None = 0
-    for a in plan.files:
+    for a in files:
         try:
             bound += int(json.loads(a.get("stats") or "null")["numRecords"])
         except (TypeError, KeyError, ValueError):
@@ -2033,10 +1839,47 @@ def _build_dvs(table: str, plan) -> list[dict]:
         for fp, ris in by_fp.items():
             desc, n_new = merge_write(fp, ris)
             built.append({"fp": fp, "desc": desc, "n_new": n_new})
-        return built
-    return matches.groupBy("fp").applyInPandas(
-        build_dv, schema="fp string, desc string, n_new long"
-    ).collect()  # one row PER TOUCHED FILE — metadata scale
+    else:
+        built = matches.groupBy("fp").applyInPandas(
+            build_dv, schema="fp string, desc string, n_new long"
+        ).collect()  # one row PER TOUCHED FILE — metadata scale
+    if not built:
+        return [], 0, 0
+    actions = []
+    # DV tables need the reader/writer table feature; a column-mapped
+    # table upgrading to features-protocol must also LIST columnMapping
+    # or feature-aware readers would refuse it
+    need = {"deletionVectors"} | ({"columnMapping"} if cm else set())
+    rfeats = set(proto.get("readerFeatures") or [])
+    if not need <= rfeats:
+        rfeats |= need
+        actions.append({"protocol": {
+            "minReaderVersion": 3, "minWriterVersion": 7,
+            "readerFeatures": sorted(rfeats),
+            "writerFeatures": sorted(
+                set(proto.get("writerFeatures") or []) | rfeats
+            ),
+        }})
+    n = 0
+    for row in built:
+        # __fp__ derives from _metadata.file_path, which URI-encodes
+        # special chars (a space in a hive partition value) — fall back
+        # to the unquoted form
+        a = by_path.get(row["fp"]) or by_path[urllib.parse.unquote(row["fp"])]
+        n += int(row["n_new"])
+        new_add = {k: v for k, v in a.items() if k != "deletionVector"}
+        new_add["deletionVector"] = json.loads(row["desc"])
+        new_add["dataChange"] = True
+        new_add["modificationTime"] = a.get("modificationTime", now_ms)
+        actions += [
+            {"remove": {
+                "path": a["path"], "deletionTimestamp": now_ms,
+                "dataChange": True,
+                "partitionValues": a.get("partitionValues") or {},
+            }},
+            {"add": new_add},
+        ]
+    return actions, n, len(built)
 
 
 def update_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
@@ -2050,14 +1893,14 @@ def update_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
 
 def _dv_merge(
-    spark, p, table, keys, touched, upserts, candidates, prev_version,
-    meta, proto, cm, phys_part_cols, fschema, log_fschema, txn=None,
-    read_where=None, log_part_cols=None, cdf=False,
+    spark, p, table, keys, touched, upserts, candidates, snapshot, cm,
+    phys_part_cols, fschema, log_fschema, txn=None, read_where=None,
+    cdf=False,
 ) -> dict[str, int]:
     """The merge-on-read half of MERGE: matched keys tombstone into
-    roaring-bitmap deletion vectors (built executor-side, one
-    applyInPandas group per touched file), the re-added paths carry the
-    descriptors, and the upsert batch appends — all in ONE commit.  The
+    roaring-bitmap deletion vectors (:func:`_dv_actions`), the re-added
+    paths carry the descriptors, and the upsert batch appends — all in
+    ONE commit.  The
     delete side moves ZERO data bytes: a million-key CDC batch writes
     KB-scale bitmaps plus its own rows."""
     from pyspark.sql import functions as F
@@ -2070,12 +1913,8 @@ def _dv_merge(
 
     commit_id = uuid.uuid4().hex
     now_ms = int(time.time() * 1000)
-    tbl_abs = os.path.abspath(table)
-    by_path = {
-        os.path.abspath(os.path.join(table, urllib.parse.unquote(a["path"]))): a
-        for a in candidates
-    }
-    matches = None
+    actions: list[dict] = []
+    deleted = n_dvs = 0
     cdc_actions: list[dict] = []
     base_cols = [f.name for f in log_fschema]
     if candidates:
@@ -2086,9 +1925,6 @@ def _dv_merge(
             probe, cm, log_fschema, keep=("__dv_fp", "__dv_ri")
         )
         matched = probe.join(touched, on=list(keys), how="left_semi")
-        matches = matched.select(
-            F.col("__dv_fp").alias("fp"), F.col("__dv_ri").alias("ri")
-        )
         if cdf:
             # unpartitioned CDF table (r8): the tombstoned rows surface
             # as delete change rows, the upsert batch as inserts — same
@@ -2103,6 +1939,11 @@ def _dv_merge(
                 table, commit_id, 0,
                 to_physical_df(pre.unionByName(post), cm), {}, now_ms,
             )
+        actions, deleted, n_dvs = _dv_actions(
+            table, candidates,
+            matched.selectExpr("__dv_fp AS __fp__", "__dv_ri AS __pos__"),
+            snapshot[2] or {}, cm, now_ms,
+        )
     elif cdf:
         cdc_actions = _stage_cdc(
             table, commit_id, 0,
@@ -2113,121 +1954,16 @@ def _dv_merge(
             ), {}, now_ms,
         )
 
-    old_dvs = {
-        ap: json.dumps(a["deletionVector"])
-        for ap, a in by_path.items()
-        if a.get("deletionVector")
-    }
-
-    def build_dv(pdf):
-        import json as _j
-        import os as _os
-
-        import pandas as _pd
-
-        from pipeline_spark.functions.deltadv import (
-            load_dv_positions,
-            make_dv_descriptor_relative,
-        )
-
-        fp = pdf["fp"].iloc[0]
-        positions = set(int(x) for x in pdf["ri"])
-        prior = old_dvs.get(fp)
-        if prior:
-            positions |= {
-                int(x)
-                for x in load_dv_positions(tbl_abs, _j.loads(prior))
-            }
-        desc, target, blob = make_dv_descriptor_relative(
-            tbl_abs, sorted(positions)
-        )
-        _os.makedirs(_os.path.dirname(target) or tbl_abs, exist_ok=True)
-        tmp = target + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        _os.rename(tmp, target)
-        return _pd.DataFrame(
-            {"fp": [fp], "desc": [_j.dumps(desc)], "n_new": [len(pdf)]}
-        )
-
-    built = (
-        matches.groupBy("fp").applyInPandas(
-            build_dv, schema="fp string, desc string, n_new long"
-        ).collect()  # one row PER TOUCHED FILE — metadata scale
-        if matches is not None else []
-    )
-
     # upsert batch: normal partitioned data files
     up_dir = os.path.join(table, f"data-merge-{commit_id}", "upserts")
     w = to_physical_df(upserts, cm).write
     if phys_part_cols:
         w = w.partitionBy(*phys_part_cols)
     w.parquet(up_dir)
-    adds: list[dict] = []
-    for root, _dirs, fnames in os.walk(up_dir):
-        for name in sorted(fnames):
-            if not name.endswith(".parquet"):
-                continue
-            fullp = os.path.join(root, name)
-            rel = os.path.relpath(fullp, table)
-            pv = {}
-            for seg in os.path.relpath(root, up_dir).split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    pv[k] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(v)
-                    )
-            adds.append({
-                "path": urllib.parse.quote(
-                    rel.replace(os.sep, "/"), safe="/="),
-                "partitionValues": pv,
-                "size": os.path.getsize(fullp),
-                "modificationTime": now_ms,
-                "dataChange": True,
-                "__full_path__": fullp,
-            })
-    stats_map = _collect_file_stats(spark, [a["__full_path__"] for a in adds])
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
-
-    actions: list[dict] = []
-    need = {"deletionVectors"} | ({"columnMapping"} if cm else set())
-    rfeats = set((proto or {}).get("readerFeatures") or [])
-    wfeats = set((proto or {}).get("writerFeatures") or [])
-    if built and not need <= rfeats:
-        rfeats |= need
-        actions.append({"protocol": {
-            "minReaderVersion": 3, "minWriterVersion": 7,
-            "readerFeatures": sorted(rfeats),
-            "writerFeatures": sorted(wfeats | rfeats),
-        }})
-    deleted = 0
-    for row in built:
-        # __dv_fp derives from _metadata.file_path, which URI-encodes
-        # special chars (a space in a hive partition value) — fall back
-        # to the unquoted form against the raw-path index
-        a = by_path.get(row["fp"]) or by_path[
-            urllib.parse.unquote(row["fp"])
-        ]
-        deleted += int(row["n_new"])
-        actions.append({"remove": {
-            "path": a["path"], "deletionTimestamp": now_ms,
-            "dataChange": True,
-            "partitionValues": a.get("partitionValues") or {},
-        }})
-        new_add = {k: v for k, v in a.items() if k != "deletionVector"}
-        new_add["deletionVector"] = json.loads(row["desc"])
-        new_add["dataChange"] = True
-        new_add["modificationTime"] = a.get("modificationTime", now_ms)
-        actions.append({"add": new_add})
+    adds = _staged_adds(table, up_dir, now_ms)
+    _stamp_stats(spark, adds)
     actions.extend({"add": a} for a in adds)
     actions.extend(cdc_actions)
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": str(txn[0]), "version": int(txn[1])}})
     actions.append({"commitInfo": {
         "timestamp": now_ms,
         "operation": "MERGE",
@@ -2236,14 +1972,14 @@ def _dv_merge(
             "method": "merge-on-read",
         },
     }})
-    out = _commit_actions_retry(
-        table, prev_version + 1, actions,
-        read_where=read_where, cm=cm, part_cols=log_part_cols, txn=txn,
+    version, _retries = commit(
+        table, snapshot, actions, reads=read_where, txn=txn,
+        checkpoint_interval=p.get("checkpointInterval"),
     )
-    if out.get("replayed"):
+    if version is None:
         return {"merged_rows": 0, "dv_files": 0, "upsert_files": 0,
                 "replayed": True}
-    return {"merged_rows": deleted, "dv_files": len(built),
+    return {"merged_rows": deleted, "dv_files": n_dvs,
             "upsert_files": len(adds)}
 
 
@@ -2299,7 +2035,8 @@ def merge_delta_native(
         write_delta_native(spark, upserts, {**p, "mode": "create"}, txn=txn)
         return {"merged_rows": -1, "rewritten_files": 0}
 
-    prev_adds, meta, _proto, prev_version, _txns = replay_state(table)
+    snapshot = replay_state(table)
+    prev_adds, meta, _proto, _v, _txns = snapshot
     if txn is not None and int(txn[1]) <= _txns.get(str(txn[0]), -1):
         # replayed streaming micro-batch: this merge already committed
         return {"merged_rows": 0, "rewritten_files": 0, "replayed": True}
@@ -2392,10 +2129,9 @@ def merge_delta_native(
                 "cdc rows per partition group)"
             )
         return _dv_merge(
-            spark, p, table, keys, touched, upserts, candidates,
-            prev_version, meta, _proto, cm, phys_part_cols, fschema,
-            log_fschema, txn=txn, read_where=where,
-            log_part_cols=part_cols, cdf=cdf,
+            spark, p, table, keys, touched, upserts, candidates, snapshot,
+            cm, phys_part_cols, fschema, log_fschema, txn=txn,
+            read_where=where, cdf=cdf,
         )
 
     # exact touched-file probe (delta-spark's findTouchedFiles): one
@@ -2441,33 +2177,7 @@ def merge_delta_native(
         )
         grp = to_logical_df(grp, cm, log_fschema, keep=rt_keep)
         if rowtrack:
-            from pipeline_spark.functions.localframe import local_frame
-
-            rid = local_frame(
-                spark,
-                [
-                    (
-                        os.path.abspath(os.path.join(
-                            table, urllib.parse.unquote(a["path"])
-                        )),
-                        int(a.get("baseRowId") or 0),
-                        int(a.get("defaultRowCommitVersion") or 0),
-                    )
-                    for a in files
-                ],
-                "__rt_fp string, __rt_base long, __rt_dcv long",
-            )
-            grp = grp.join(
-                F.broadcast(rid), grp["__dv_fp"] == rid["__rt_fp"], "left"
-            ).withColumn(
-                rt_mat_id,
-                F.coalesce(
-                    F.col(rt_mat_id), F.col("__rt_base") + F.col("__dv_ri")
-                ),
-            ).withColumn(
-                rt_mat_cv,
-                F.coalesce(F.col(rt_mat_cv), F.col("__rt_dcv")),
-            ).drop("__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv")
+            grp = _keep_row_ids(spark, table, grp, files, rt_mat_id, rt_mat_cv)
         pv = dict(key)
         for c, v in pv.items():
             lc = log_of.get(c, c)
@@ -2493,24 +2203,10 @@ def merge_delta_native(
         out_cols = base_cols + (
             [rt_mat_id, rt_mat_cv] if rowtrack else []
         )
-        keep = to_physical_df(out.select(*out_cols), cm)
-        out_dir = os.path.join(table, data_dir, f"grp-{i:05d}")
-        keep.write.parquet(out_dir)
-        for root, _dirs, fnames in os.walk(out_dir):
-            for name in sorted(fnames):
-                if not name.endswith(".parquet"):
-                    continue
-                fullp = os.path.join(root, name)
-                rel = os.path.relpath(fullp, table)
-                adds.append({
-                    "path": urllib.parse.quote(
-                        rel.replace(os.sep, "/"), safe="/="),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(fullp),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "__full_path__": fullp,
-                })
+        adds += _write_files(
+            table, os.path.join(table, data_dir, f"grp-{i:05d}"),
+            to_physical_df(out.select(*out_cols), cm), pv, now_ms,
+        )
         for a in files:
             removes.append({
                 "path": a["path"],
@@ -2525,31 +2221,8 @@ def merge_delta_native(
     if phys_part_cols:
         w = w.partitionBy(*phys_part_cols)
     w.parquet(up_dir)
-    n_upserts = 0
-    for root, _dirs, fnames in os.walk(up_dir):
-        for name in sorted(fnames):
-            if not name.endswith(".parquet"):
-                continue
-            fullp = os.path.join(root, name)
-            rel = os.path.relpath(fullp, table)
-            pv = {}
-            for seg in os.path.relpath(root, up_dir).split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    pv[k] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(v)
-                    )
-            n_upserts += 1
-            adds.append({
-                "path": urllib.parse.quote(
-                    rel.replace(os.sep, "/"), safe="/="),
-                "partitionValues": pv,
-                "size": os.path.getsize(fullp),
-                "modificationTime": now_ms,
-                "dataChange": True,
-                "__full_path__": fullp,
-            })
+    upsert_adds = _staged_adds(table, up_dir, now_ms)
+    adds += upsert_adds
     if cdf:
         # explicit insert rows: a commit carrying ANY cdc actions is
         # read from cdc alone, so the upserts must be in it too
@@ -2575,34 +2248,26 @@ def merge_delta_native(
                 now_ms,
             ))
 
-    stats_map = _collect_file_stats(
-        spark, [a["__full_path__"] for a in adds]
-    )
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
+    _stamp_stats(spark, adds)
     actions = (
         [{"remove": r} for r in removes]
         + [{"add": a} for a in adds]
         + cdc_actions
-        + ([{"txn": {"appId": str(txn[0]), "version": int(txn[1])}}]
-           if txn is not None else [])
         + [{"commitInfo": {
             "timestamp": now_ms,
             "operation": "MERGE",
             "operationParameters": {"predicate": json.dumps(keys)},
         }}]
     )
-    out = _commit_actions_retry(
-        table, prev_version + 1, actions,
-        read_where=where, cm=cm, part_cols=part_cols, txn=txn,
+    version, _retries = commit(
+        table, snapshot, actions, reads=where, txn=txn,
+        checkpoint_interval=p.get("checkpointInterval"),
     )
-    if out.get("replayed"):
+    if version is None:
         return {"merged_rows": 0, "rewritten_files": 0,
                 "upsert_files": 0, "replayed": True}
     return {"merged_rows": replaced, "rewritten_files": len(removes),
-            "upsert_files": n_upserts}
+            "upsert_files": len(upsert_adds)}
 
 
 def clone_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
@@ -2635,7 +2300,6 @@ def clone_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     log_dir = os.path.join(target, "_delta_log")
     if os.path.isdir(log_dir) and latest_version(log_dir) is not None:
         raise FileExistsError(f"delta clone: table already exists at {target}")
-    os.makedirs(log_dir, exist_ok=True)
     src_abs = os.path.abspath(source)
     now_ms = int(time.time() * 1000)
     actions: list[dict] = [
@@ -2677,7 +2341,10 @@ def clone_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             "source": src_abs, "sourceVersion": src_version,
         },
     }})
-    _commit_actions(target, 0, actions)
+    commit(
+        target, None, actions, reads="table",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return {"cloned_files": len(adds), "source_version": src_version}
 
 
@@ -2706,7 +2373,8 @@ def restore_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     if ts is not None:
         version = _version_at_timestamp(_log_dir(table), ts)
     version = int(version)
-    cur_adds, cur_meta, _proto, cur_version, _txns = replay_state(table)
+    snapshot = replay_state(table)
+    cur_adds, cur_meta, _proto, cur_version, _txns = snapshot
     _refuse_append_only(cur_meta, "restore")
     if version > cur_version:
         raise ValueError(
@@ -2759,7 +2427,10 @@ def restore_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         "operation": "RESTORE",
         "operationParameters": {"version": str(version)},
     }})
-    _commit_actions(table, cur_version + 1, actions)
+    commit(
+        table, snapshot, actions, reads="table",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return {
         "restored_version": version,
         "files_added": len(re_adds),
@@ -2793,7 +2464,8 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     table = p.get("path") or p.get("table")
     if not table:
         raise ValueError("delta alter: 'path' is required")
-    _adds, meta, proto, prev_version, _txns = replay_state(table)
+    snapshot = replay_state(table)
+    _adds, meta, proto, prev_version, _txns = snapshot
     conf = dict(meta.get("configuration") or {})
     sj = json.loads(meta["schemaString"])
     actions: list[dict] = []
@@ -2999,7 +2671,12 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             "enableColumnMapping": bool(result.get("column_mapping_enabled")),
         },
     }})
-    _commit_actions(table, prev_version + 1, actions)
+    # metadata-only: it rebases over data commits.  A widening records
+    # the version it lands at, so it declares the whole table instead.
+    commit(
+        table, snapshot, actions, reads="table" if widens else "metadata",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return result
 
 
@@ -3019,21 +2696,13 @@ def _stage_cdc(
     out_dir = os.path.join(
         table, "_change_data", f"{commit_id}-grp-{idx:05d}"
     )
-    changes_df.write.parquet(out_dir)
-    actions = []
-    for root, _dirs, names in os.walk(out_dir):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            fullp = os.path.join(root, name)
-            rel = os.path.relpath(fullp, table)
-            actions.append({"cdc": {
-                "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                "partitionValues": pv,
-                "size": os.path.getsize(fullp),
-                "dataChange": False,
-            }})
-    return actions
+    return [
+        {"cdc": {
+            "path": a["path"], "partitionValues": a["partitionValues"],
+            "size": a["size"], "dataChange": False,
+        }}
+        for a in _write_files(table, out_dir, changes_df, pv, now_ms)
+    ]
 
 
 def vacuum_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
@@ -3225,8 +2894,6 @@ def write_checkpoint(table: str, version: int) -> None:
             "metaData": None,
             "protocol": None,
         })
-    from pipeline_spark.sources.delta_native import replay_domains
-
     for dom in sorted(replay_domains(table, version).values(),
                       key=lambda d: d["domain"]):
         rows.append({

@@ -154,10 +154,7 @@ def convert_parquet_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
     migration entry point: one delta log over the files IN PLACE,
     partition columns from the ``col=value`` directory names, footer
     stats in every ``add.stats`` so skipping works from commit zero."""
-    from pipeline_spark.sinks.delta_native import (
-        _commit_actions,
-        _footer_stats,
-    )
+    from pipeline_spark.sinks.delta_native import _footer_stats, commit
     from pipeline_spark.sinks.iceberg_addfiles import _walk_hive_files
 
     table = _strip_scheme(
@@ -230,8 +227,10 @@ def convert_parquet_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
             "dataChange": True,
             **({"stats": st} if st else {}),
         }})
-    os.makedirs(log_dir, exist_ok=True)
-    _commit_actions(table, 0, actions)
+    commit(
+        table, None, actions, reads="table",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return {"converted_files": len(files), "rows": total_rows,
             "partition_columns": part_cols}
 
@@ -688,10 +687,7 @@ def convert_iceberg_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
     )
 
     _plgd(p)  # fail typos at parameter-parse time
-    from pipeline_spark.sinks.delta_native import (
-        _commit_actions,
-        _footer_stats,
-    )
+    from pipeline_spark.sinks.delta_native import _footer_stats, commit
     from pipeline_spark.sources.iceberg_native import (
         identity_fill_plan,
         norm_path,
@@ -953,8 +949,10 @@ def convert_iceberg_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
             "convert: delete files reference data files not in the "
             f"current snapshot: {sorted(pos_of)[:3]}"
         )
-    os.makedirs(log_dir, exist_ok=True)
-    _commit_actions(table, 0, actions)
+    commit(
+        table, None, actions, reads="table",
+        checkpoint_interval=p.get("checkpointInterval"),
+    )
     return {
         "converted_files": len(data),
         "rows": total_rows,

@@ -2,7 +2,7 @@
 r13 ask #6): a writer that DIES between staging and commit must be
 invisible to readers and reclaimable.
 
-Both formats commit through a single seam — delta's ``_commit_actions``
+Both formats commit through a single seam — delta's ``commit``
 (create-exclusive hardlink of the version JSON) and iceberg's
 ``_publish_metadata_exclusive`` (create-exclusive metadata swap).  Each
 case injects a kill at that seam (``before``: files staged, commit
@@ -114,8 +114,8 @@ def test_delta_writer_dies_before_commit(spark, tmp_path, monkeypatch, op, kill)
         [(3, 999.0, "a"), (77, 7.0, "b")], SCHEMA
     )
 
-    # _prev_ict runs in EVERY delta commit (inline append loop and
-    # _commit_actions) after the parquet is staged and before the log
+    # _prev_ict runs in EVERY delta commit (the one ``commit``) after
+    # the parquet is staged and before the log
     # JSON exists — the exact between-staging-and-commit instant
     orig = dn._prev_ict
 

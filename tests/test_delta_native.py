@@ -112,6 +112,23 @@ def test_checkpoint_interval_auto(spark, tmp_path):
     assert os.path.exists(os.path.join(log_dir, "_last_checkpoint"))
     assert json.load(open(os.path.join(log_dir, "_last_checkpoint")))["version"] == 2
 
+    # every Delta commit follows the option, merge and compaction too
+    from pipeline_spark.sinks.delta_native import (
+        compact_delta_native,
+        merge_delta_native,
+    )
+
+    merge_delta_native(
+        spark, spark.createDataFrame([(10,), (99,)], "id long"),
+        {"path": tbl, "primaryKeys": ["id"], "checkpointInterval": 3},
+    )
+    assert json.load(open(os.path.join(log_dir, "_last_checkpoint")))["version"] == 3
+    compact_delta_native(spark, {"path": tbl, "checkpointInterval": 4})
+    assert json.load(open(os.path.join(log_dir, "_last_checkpoint")))["version"] == 4
+    assert sorted(
+        r["id"] for r in read_delta_native(spark, {"path": tbl}).collect()
+    ) == [0, 1, 10, 11, 20, 21, 99]
+
 
 def test_reader_external_hand_built_log(spark, tmp_path):
     """A log laid out like delta-spark's own writer (files at partition
@@ -2161,7 +2178,7 @@ def test_in_commit_timestamps(spark, tmp_path):
     delta.enableInCommitTimestamps leads every commit with a commitInfo
     carrying a strictly-increasing inCommitTimestamp; the protocol is a
     features protocol listing the writer feature; maintenance commits
-    (_commit_actions path) keep the chain; and timestampAsOf resolves
+    (the same ``commit``) keep the chain; and timestampAsOf resolves
     through ICT, robust to commit-file mtime changes (copies/restores)."""
     from pipeline_spark.sinks.delta_native import delete_delta_native
 

@@ -315,7 +315,9 @@ def test_streaming_appends_sync_incrementally(spark, tmp_path):
     )
 
 
-def test_sync_failure_never_poisons_the_commit(spark, tmp_path, monkeypatch):
+def test_sync_failure_never_poisons_the_commit(
+    spark, tmp_path, monkeypatch, caplog
+):
     """The delta commit has already landed when the sync runs — a sync
     failure must not surface as a commit failure (the DML retry wrapper
     would chase a phantom race).  The mirror self-heals: the next
@@ -334,11 +336,18 @@ def test_sync_failure_never_poisons_the_commit(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(tc, "sync_uniform_iceberg", boom)
     monkeypatch.setattr(tc, "sync_uniform_append", boom)
-    # the commit itself must SUCCEED despite the broken sync
-    write_delta_native(
-        spark, spark.createDataFrame([(1, "b")], "id long, v string"),
-        {"path": tbl, "mode": "append"},
-    )
+    # the commit itself must SUCCEED despite the broken sync, and the
+    # failure is logged once, naming the table
+    with caplog.at_level("WARNING", logger="pipeline_spark.delta"):
+        write_delta_native(
+            spark, spark.createDataFrame([(1, "b")], "id long, v string"),
+            {"path": tbl, "mode": "append"},
+        )
+    warned = [
+        r for r in caplog.records
+        if r.name == "pipeline_spark.delta" and r.levelname == "WARNING"
+    ]
+    assert len(warned) == 1 and tbl in warned[0].getMessage()
     assert sorted(
         r["id"] for r in read_delta_native(spark, {"path": tbl}).collect()
     ) == [0, 1]
