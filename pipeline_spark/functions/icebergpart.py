@@ -320,14 +320,10 @@ def transform_column(field: dict[str, Any], dtype) -> tuple[Column, str]:
     raise ValueError(f"iceberg: unsupported transform '{tr}'")
 
 
-def parse_dir_value(raw: str, kind: str):
-    """Invert a hive-style ``name=value`` dir component."""
-    from urllib.parse import unquote
-
-    if raw == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    raw = unquote(raw)
-    if kind in ("int", "long"):
+def parse_dir_value(raw: str | None, kind: str):
+    """Type a hive-style ``name=value`` dir value, already unquoted
+    (``sinks/lakefiles.walk``; None for ``__HIVE_DEFAULT_PARTITION__``)."""
+    if raw is not None and kind in ("int", "long"):
         return int(raw)
     return raw
 

@@ -31,13 +31,3 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

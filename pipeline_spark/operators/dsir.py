@@ -83,11 +83,6 @@ def _bucketed(df: DataFrame, field: str, n: int, tag: int) -> DataFrame:
     )
 
 
-def _bucket_counts(df: DataFrame, field: str, n: int) -> dict[int, int]:
-    rows = _bucketed(df, field, n, 0).collect()
-    return {r["b"]: r["count"] for r in rows}
-
-
 def _bucket_counts_pair(
     corpus: DataFrame, cfield: str, target: DataFrame, tfield: str, n: int
 ) -> tuple[dict[int, int], dict[int, int]]:

@@ -25,39 +25,13 @@ first-class relational op instead.
 
 from __future__ import annotations
 
-import random
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pipeline_spark.functions.vector import cosine
 from pipeline_spark.registry import KIND_TRANSFORM, ModuleContext, module
-
-
-def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
-
-
-def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection signature as a long (≤64 planes)."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(w)) for w in plane]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(dot > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
 
 
 def brute_force_topk(

@@ -16,7 +16,9 @@ Data files land under ``<table>/data-<uuid>/`` (paths in the log are
 table-relative, so readers — ours and delta-spark — resolve them; the
 per-commit directory keeps staging atomic and vacuum-friendly).
 Partitioned writes keep Spark's hive layout inside that directory, so
-the native reader's basePath fast path prunes by directory.
+the native reader's basePath fast path prunes by directory.  Staged
+files are scanned, and their ``add.stats`` encoded, by
+``sinks/lakefiles.py`` (one footer read per file).
 
 Every version — write, compaction, DML, merge, clone, restore, alter
 and the ``tableconvert`` creates — is published by one :func:`commit`:
@@ -39,6 +41,7 @@ import uuid
 from typing import Any
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks import lakefiles
 from pipeline_spark.sinks.drive import write_batches
 from pipeline_spark.sources.delta_native import (
     _log_dir,
@@ -47,120 +50,6 @@ from pipeline_spark.sources.delta_native import (
     replay_log,
     replay_state,
 )
-
-
-def _footer_stats(path: str) -> str | None:
-    """Protocol-shaped stats JSON from a parquet footer (no data read).
-
-    min/max are recorded for numeric/boolean/date/timestamp columns, and
-    (r8) for SHORT strings: the parquet writers in play (parquet-mr via
-    Spark, arrow C++) emit binary statistics exact-or-absent — oversized
-    values drop the statistic rather than truncating it — so a present
-    string min/max under 256 chars is exact and safe to skip on (a
-    truncated max would under-cover the file, which is why long values
-    stay excluded).  Raw ``bytes`` stats stay excluded (no JSON shape).
-    nullCount and numRecords cover every top-level column.  Nested
-    columns (dotted path) are skipped entirely.
-    """
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    per_col: dict[str, list] = {}
-    for i in range(md.num_row_groups):
-        rg = md.row_group(i)
-        for j in range(rg.num_columns):
-            col = rg.column(j)
-            if "." in col.path_in_schema:
-                continue
-            per_col.setdefault(col.path_in_schema, []).append(col.statistics)
-    mins: dict[str, Any] = {}
-    maxs: dict[str, Any] = {}
-    nulls: dict[str, int] = {}
-
-    def _ok(v) -> bool:
-        if isinstance(v, bytes):
-            return False
-        if isinstance(v, str):
-            return len(v) < 256
-        return True
-
-    for name, stats in per_col.items():
-        # a statistic is usable only when EVERY row group carries it —
-        # partial coverage would under-state the file
-        if all(st is not None and st.null_count is not None for st in stats):
-            nulls[name] = sum(st.null_count for st in stats)
-        if all(
-            st is not None
-            and st.has_min_max
-            and _ok(st.min)
-            and _ok(st.max)
-            for st in stats
-        ):
-            mins[name] = min(st.min for st in stats)
-            maxs[name] = max(st.max for st in stats)
-
-    def enc(v):
-        if isinstance(v, datetime.datetime):
-            # normalize tz-aware stats (TIMESTAMP_MICROS footers surface
-            # as UTC-aware datetimes) to naive UTC before isoformat: a
-            # trailing '+00:00' would lexicographically sort AFTER every
-            # suffix-free filter literal and silently prune live files
-            if v.tzinfo is not None:
-                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-            return v.isoformat()
-        if isinstance(v, datetime.date):
-            return v.isoformat()
-        return v
-
-    return json.dumps(
-        {
-            "numRecords": md.num_rows,
-            "minValues": {k: enc(v) for k, v in mins.items()},
-            "maxValues": {k: enc(v) for k, v in maxs.items()},
-            "nullCount": nulls,
-        }
-    )
-
-
-def _collect_file_stats(spark, paths: list[str]) -> dict[str, str]:
-    if not paths:
-        return {}
-    # r15 optimization: footer stats are metadata-scale work (KB-sized
-    # reads per file).  For small commits the fixed cost of an RDD job
-    # (submit + Python worker round-trip, ~0.1-0.3 s) dwarfs the footer
-    # reads themselves, so read them on the driver in a small thread
-    # pool (pyarrow releases the GIL during I/O) — the same shape the
-    # iceberg sink has always used.  Large commits (many files, e.g. a
-    # 100 TB write) keep the distributed path.
-    driver_max = int(os.environ.get("SPARK_GRAFT_STATS_DRIVER_MAX", "64"))
-    if len(paths) <= driver_max:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def one(pth):
-            try:
-                return pth, _footer_stats(pth)
-            except Exception:
-                return pth, None  # stats are an optimization, never a failure
-
-        if len(paths) == 1:
-            pairs = [one(paths[0])]
-        else:
-            with ThreadPoolExecutor(max_workers=min(8, len(paths))) as ex:
-                pairs = list(ex.map(one, paths))
-        return {pth: st for pth, st in pairs if st}
-
-    def per_path(it):
-        for pth in it:
-            try:
-                yield pth, _footer_stats(pth)
-            except Exception:
-                yield pth, None  # stats are an optimization, never a failure
-
-    n = max(1, min(len(paths), 64))
-    pairs = spark.sparkContext.parallelize(paths, n).mapPartitions(per_path).collect()
-    return {pth: st for pth, st in pairs if st}
 
 
 def _merge_schemas(prev_json: str, new_json: str) -> str:
@@ -547,11 +436,10 @@ def write_delta_native(
             )
 
     now_ms = int(time.time() * 1000)
-    adds = _staged_adds(table, staging, now_ms)
     # per-file column statistics (protocol `add.stats` JSON) so readers can
     # skip whole files against pushed predicates — the 100 TB scan-
     # reduction path (footer-only reads)
-    _stamp_stats(df.sparkSession, adds)
+    adds = _adds(df.sparkSession, table, _staged(staging), now_ms)
 
     actions: list[dict] = []
     ict_on_create = (
@@ -840,7 +728,7 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
     commit_id = uuid.uuid4().hex
     data_dir = f"data-compact-{commit_id}"
     now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
+    staged: list[tuple] = []
     removes: list[dict] = []
     # row tracking (PROTOCOL.md Row Tracking): OPTIMIZE must PRESERVE
     # row identity across the rewrite — each output row lands with its
@@ -877,19 +765,10 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
             bin_df = _keep_row_ids(
                 spark, table, bin_df, files, rt_mat_id, rt_mat_cv
             )
-        adds += _write_files(
-            table, out_dir, bin_df.coalesce(1), dict(key), now_ms,
-            data_change=False,
-        )
-        for a in files:
-            removes.append({
-                "path": a["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-                "partitionValues": a.get("partitionValues") or {},
-            })
+        staged += _write_files(out_dir, bin_df.coalesce(1), dict(key))
+        removes += [_removal(a, now_ms, data_change=False) for a in files]
 
-    _stamp_stats(spark, adds)
+    adds = _adds(spark, table, staged, now_ms, data_change=False)
     actions: list[dict] = (
         [{"remove": r} for r in removes]
         + [{"add": a} for a in adds]
@@ -992,7 +871,7 @@ def _zorder_compact(
     commit_id = uuid.uuid4().hex
     data_dir = f"data-zorder-{commit_id}"
     now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
+    staged: list[tuple] = []
     removes: list[dict] = []
     for i, (key, files) in enumerate(sorted(groups.items())):
         df = read_files_with_dv(spark, table, fschema, files)
@@ -1002,23 +881,17 @@ def _zorder_compact(
             math.ceil(sum(int(a.get("size", 0)) for a in files) / target),
         )
         out_dir = os.path.join(table, data_dir, f"grp-{i:05d}")
-        adds += _write_files(
-            table, out_dir,
+        staged += _write_files(
+            out_dir,
             df.withColumn("__z__", z)
             .repartitionByRange(nfiles, "__z__")
             .sortWithinPartitions("__z__")
             .drop("__z__", *tmp_cols),
-            dict(key), now_ms, data_change=False,
+            dict(key),
         )
-        for a in files:
-            removes.append({
-                "path": a["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-                "partitionValues": a.get("partitionValues") or {},
-            })
+        removes += [_removal(a, now_ms, data_change=False) for a in files]
 
-    _stamp_stats(spark, adds)
+    adds = _adds(spark, table, staged, now_ms, data_change=False)
     actions: list[dict] = (
         [{"remove": r} for r in removes]
         + [{"add": a} for a in adds]
@@ -1261,11 +1134,8 @@ def _with_row_ids(
         except (ValueError, TypeError):
             n = None
         if n is None:
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(
-                os.path.join(table, urllib.parse.unquote(add["path"]))
-            ).metadata.num_rows
+            n = lakefiles.read([(os.path.join(
+                table, urllib.parse.unquote(add["path"])), {})])[0].rows
         out.append({"add": {
             **add, "baseRowId": base, "defaultRowCommitVersion": version,
         }})
@@ -1597,11 +1467,10 @@ def _mutate_where(
             out = out.unionByName(x)
         return out
 
-    def stage(i: int, files: list[dict], df) -> list[dict]:
+    def stage(i: int, files: list[dict], df) -> list[tuple]:
         return _write_files(
-            table, os.path.join(table, data_dir, f"grp-{i:05d}"),
-            to_physical_df(df, cm),
-            files[0].get("partitionValues") or {}, now_ms,
+            os.path.join(table, data_dir, f"grp-{i:05d}"),
+            to_physical_df(df, cm), files[0].get("partitionValues") or {},
         )
 
     def changes(i: int, files: list[dict], pre, post) -> None:
@@ -1616,7 +1485,7 @@ def _mutate_where(
             ))
         cdc_actions.extend(_stage_cdc(
             table, commit_id, i, to_physical_df(rows, cm),
-            files[0].get("partitionValues") or {}, now_ms,
+            files[0].get("partitionValues") or {},
         ))
 
     def publish(actions: list[dict], params: dict) -> None:
@@ -1631,17 +1500,13 @@ def _mutate_where(
         )
 
     def removed(a: dict) -> dict:
-        return {"remove": {
-            "path": a["path"], "deletionTimestamp": now_ms,
-            "dataChange": True,
-            "partitionValues": a.get("partitionValues") or {},
-        }}
+        return {"remove": _removal(a, now_ms)}
 
     def commit_rewrite(plan) -> dict:
-        _stamp_stats(spark, plan.staged)
         publish(
             [removed(a) for a in plan.files]
-            + [{"add": a} for a in plan.staged], {},
+            + [{"add": a} for a in _adds(spark, table, plan.staged, now_ms)],
+            {},
         )
         return {f"{op}d_rows": plan.rows, "rewritten_files": len(plan.files)}
 
@@ -1652,15 +1517,16 @@ def _mutate_where(
         if not n_dvs:
             # the stats over-admitted and nothing matched: drop the
             # staged update and change files, commit nothing
-            for a in plan.staged:
-                _remove_quiet(a["__full_path__"])
+            for fp, _pv in plan.staged:
+                _remove_quiet(fp)
             for act in cdc_actions:
                 _remove_quiet(os.path.join(
                     table, urllib.parse.unquote(act["cdc"]["path"])
                 ))
             return None
-        _stamp_stats(spark, plan.staged)
-        actions += [{"add": a} for a in plan.staged]
+        actions += [
+            {"add": a} for a in _adds(spark, table, plan.staged, now_ms)
+        ]
         publish(actions, {"method": "merge-on-read"})
         result = {f"{op}d_rows": n, "dv_files": n_dvs}
         if set_exprs:
@@ -1670,13 +1536,12 @@ def _mutate_where(
     def stage_rewrite(plan) -> tuple[list[dict], list[dict]]:
         # a fully-replaced file leaves a 0-row survivor rewrite — drop it
         # rather than commit an empty data file
-        _stamp_stats(spark, plan.staged)
         adds = []
-        for a in plan.staged:
-            if json.loads(a.get("stats") or "{}").get("numRecords") == 0:
-                _remove_quiet(path_of(a))
+        for f in lakefiles.read(plan.staged, spark):
+            if f.rows == 0:
+                _remove_quiet(f.path)
             else:
-                adds.append(a)
+                adds.append(lakefiles.to_delta_add(f, table, now_ms))
         return [removed(a)["remove"] for a in plan.files], adds
 
     t = rowlevel.Table(
@@ -1699,59 +1564,36 @@ def _mutate_where(
     return out
 
 
-def _write_files(
-    table: str, out_dir: str, df, pv: dict, now_ms: int,
-    data_change: bool = True,
-) -> list[dict]:
-    """Write ``df`` as parquet under ``out_dir``: its add action bodies."""
+def _write_files(out_dir: str, df, pv: dict | None = None) -> list[tuple]:
+    """Write ``df`` as parquet under ``out_dir``: its staged files."""
     df.write.parquet(out_dir)
-    return _staged_adds(table, out_dir, now_ms, pv, data_change)
+    return _staged(out_dir, pv)
 
 
-def _staged_adds(
-    table: str, out_dir: str, now_ms: int, pv: dict | None = None,
+def _staged(out_dir: str, pv: dict | None = None) -> list[tuple]:
+    """``(path, partition values)`` per parquet file under ``out_dir``:
+    ``pv`` plus the hive directories a partitioned write leaves."""
+    return [(fp, {**(pv or {}), **part}) for fp, part in lakefiles.walk(out_dir)]
+
+
+def _adds(
+    spark, table: str, staged: list[tuple], now_ms: int,
     data_change: bool = True,
 ) -> list[dict]:
-    """One add action body per parquet file under ``out_dir``, carrying
-    ``__full_path__`` for the stats pass (_stamp_stats).  Partition
-    values are ``pv`` plus the hive ``col=value`` directories a
-    partitioned write leaves."""
-    adds = []
-    for root, _dirs, names in os.walk(out_dir):
-        file_pv = dict(pv or {})
-        for seg in os.path.relpath(root, out_dir).split(os.sep):
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                file_pv[k] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v)
-                )
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            fullp = os.path.join(root, name)
-            rel = os.path.relpath(fullp, table)
-            adds.append({
-                # PROTOCOL.md: add.path is the URL-encoded relative path —
-                # '%' in an on-disk (hive-escaped) segment must itself
-                # escape so the reader's unquote restores the real name
-                "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-                "partitionValues": file_pv,
-                "size": os.path.getsize(fullp),
-                "modificationTime": now_ms,
-                "dataChange": data_change,
-                "__full_path__": fullp,
-            })
-    return adds
+    """The add action bodies of staged files, every footer read once."""
+    return [
+        lakefiles.to_delta_add(f, table, now_ms, data_change=data_change)
+        for f in lakefiles.read(staged, spark)
+    ]
 
 
-def _stamp_stats(spark, adds: list[dict]) -> None:
-    """Footer stats onto staged adds (popping their ``__full_path__``)."""
-    stats_map = _collect_file_stats(spark, [a["__full_path__"] for a in adds])
-    for a in adds:
-        st = stats_map.get(a.pop("__full_path__"))
-        if st:
-            a["stats"] = st
+def _removal(a: dict, now_ms: int, data_change: bool = True) -> dict:
+    """The remove action body retiring add ``a``."""
+    return {
+        "path": a["path"], "deletionTimestamp": now_ms,
+        "dataChange": data_change,
+        "partitionValues": a.get("partitionValues") or {},
+    }
 
 
 def _remove_quiet(path: str) -> None:
@@ -1871,14 +1713,7 @@ def _dv_actions(
         new_add["deletionVector"] = json.loads(row["desc"])
         new_add["dataChange"] = True
         new_add["modificationTime"] = a.get("modificationTime", now_ms)
-        actions += [
-            {"remove": {
-                "path": a["path"], "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": a.get("partitionValues") or {},
-            }},
-            {"add": new_add},
-        ]
+        actions += [{"remove": _removal(a, now_ms)}, {"add": new_add}]
     return actions, n, len(built)
 
 
@@ -1937,7 +1772,7 @@ def _dv_merge(
             )
             cdc_actions = _stage_cdc(
                 table, commit_id, 0,
-                to_physical_df(pre.unionByName(post), cm), {}, now_ms,
+                to_physical_df(pre.unionByName(post), cm), {},
             )
         actions, deleted, n_dvs = _dv_actions(
             table, candidates,
@@ -1951,7 +1786,7 @@ def _dv_merge(
                 upserts.select(*base_cols).withColumn(
                     "_change_type", F.lit("insert")
                 ), cm,
-            ), {}, now_ms,
+            ), {},
         )
 
     # upsert batch: normal partitioned data files
@@ -1960,8 +1795,7 @@ def _dv_merge(
     if phys_part_cols:
         w = w.partitionBy(*phys_part_cols)
     w.parquet(up_dir)
-    adds = _staged_adds(table, up_dir, now_ms)
-    _stamp_stats(spark, adds)
+    adds = _adds(spark, table, _staged(up_dir), now_ms)
     actions.extend({"add": a} for a in adds)
     actions.extend(cdc_actions)
     actions.append({"commitInfo": {
@@ -2164,7 +1998,7 @@ def merge_delta_native(
     commit_id = uuid.uuid4().hex
     data_dir = f"data-merge-{commit_id}"
     now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
+    staged: list[tuple] = []
     removes: list[dict] = []
     cdc_actions: list[dict] = []
     replaced = 0
@@ -2197,23 +2031,17 @@ def merge_delta_native(
                 .withColumn("_change_type", F.lit("delete"))
             )
             cdc_actions.extend(_stage_cdc(
-                table, commit_id, i, to_physical_df(pre, cm), pv, now_ms,
+                table, commit_id, i, to_physical_df(pre, cm), pv,
             ))
         out = grp.join(touched, on=list(keys), how="left_anti")
         out_cols = base_cols + (
             [rt_mat_id, rt_mat_cv] if rowtrack else []
         )
-        adds += _write_files(
-            table, os.path.join(table, data_dir, f"grp-{i:05d}"),
-            to_physical_df(out.select(*out_cols), cm), pv, now_ms,
+        staged += _write_files(
+            os.path.join(table, data_dir, f"grp-{i:05d}"),
+            to_physical_df(out.select(*out_cols), cm), pv,
         )
-        for a in files:
-            removes.append({
-                "path": a["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": a.get("partitionValues") or {},
-            })
+        removes += [_removal(a, now_ms) for a in files]
 
     # the upsert batch lands as normal partitioned data files
     up_dir = os.path.join(table, data_dir, "upserts")
@@ -2221,8 +2049,8 @@ def merge_delta_native(
     if phys_part_cols:
         w = w.partitionBy(*phys_part_cols)
     w.parquet(up_dir)
-    upsert_adds = _staged_adds(table, up_dir, now_ms)
-    adds += upsert_adds
+    upsert_files = _staged(up_dir)
+    staged += upsert_files
     if cdf:
         # explicit insert rows: a commit carrying ANY cdc actions is
         # read from cdc alone, so the upserts must be in it too
@@ -2245,13 +2073,11 @@ def merge_delta_native(
                 table, commit_id, 10_000 + j, to_physical_df(changes, cm),
                 {cm["phys_of"].get(c, c) if cm else c: (
                     None if v is None else str(v)) for c, v in pv.items()},
-                now_ms,
             ))
 
-    _stamp_stats(spark, adds)
     actions = (
         [{"remove": r} for r in removes]
-        + [{"add": a} for a in adds]
+        + [{"add": a} for a in _adds(spark, table, staged, now_ms)]
         + cdc_actions
         + [{"commitInfo": {
             "timestamp": now_ms,
@@ -2267,7 +2093,7 @@ def merge_delta_native(
         return {"merged_rows": 0, "rewritten_files": 0,
                 "upsert_files": 0, "replayed": True}
     return {"merged_rows": replaced, "rewritten_files": len(removes),
-            "upsert_files": len(upsert_adds)}
+            "upsert_files": len(upsert_files)}
 
 
 def clone_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
@@ -2334,6 +2160,13 @@ def clone_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         c["modificationTime"] = a.get("modificationTime", now_ms)
         c["dataChange"] = True
         actions.append({"add": c})
+    # the source's live domains (the row-tracking watermark, clustering
+    # columns) are table state too: without them the clone's next append
+    # would restart baseRowId over the cloned files' ids
+    actions += [
+        {"domainMetadata": dm}
+        for dm in replay_domains(source, src_version).values()
+    ]
     actions.append({"commitInfo": {
         "timestamp": now_ms,
         "operation": "CLONE",
@@ -2416,11 +2249,7 @@ def restore_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         a for rel, a in tgt_by.items()
         if rel not in cur_by or not _same(a, cur_by[rel])
     ]
-    for rel in removes:
-        actions.append({"remove": {
-            "path": rel, "deletionTimestamp": now_ms, "dataChange": True,
-            "partitionValues": cur_by[rel].get("partitionValues") or {},
-        }})
+    actions += [{"remove": _removal(cur_by[rel], now_ms)} for rel in removes]
     actions.extend({"add": {**a, "dataChange": True}} for a in re_adds)
     actions.append({"commitInfo": {
         "timestamp": now_ms,
@@ -2687,7 +2516,7 @@ def _cdf_enabled(meta: dict) -> bool:
 
 
 def _stage_cdc(
-    table: str, commit_id: str, idx: int, changes_df, pv: dict, now_ms: int
+    table: str, commit_id: str, idx: int, changes_df, pv: dict
 ) -> list[dict]:
     """Write one partition group's change rows (non-partition columns +
     ``_change_type``) under ``_change_data/`` and return the commit's
@@ -2698,10 +2527,11 @@ def _stage_cdc(
     )
     return [
         {"cdc": {
-            "path": a["path"], "partitionValues": a["partitionValues"],
-            "size": a["size"], "dataChange": False,
+            "path": lakefiles.delta_path(fp, table),
+            "partitionValues": file_pv, "size": os.path.getsize(fp),
+            "dataChange": False,
         }}
-        for a in _write_files(table, out_dir, changes_df, pv, now_ms)
+        for fp, file_pv in _write_files(out_dir, changes_df, pv)
     ]
 
 

@@ -20,28 +20,7 @@ from __future__ import annotations
 
 import json
 import os
-import urllib.parse
 from typing import Any
-
-
-def _walk_hive_files(src_dir: str) -> list[tuple[str, dict[str, str]]]:
-    """[(absolute parquet path, {partition col: raw string value})] from
-    a hive-layout directory; value ``__HIVE_DEFAULT_PARTITION__`` → None."""
-    out = []
-    for root, _dirs, names in os.walk(src_dir):
-        pv: dict[str, str | None] = {}
-        rel = os.path.relpath(root, src_dir)
-        for seg in [] if rel == "." else rel.split(os.sep):
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                pv[k] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v)
-                )
-        for name in sorted(names):
-            if name.endswith(".parquet"):
-                out.append((os.path.join(root, name), dict(pv)))
-    return out
 
 
 def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
@@ -53,16 +32,17 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     inference over the directory (the same types a hive reader would
     assign); data column types come from one footer.  Appends require
     the import's schema to match the table's (by name and type)."""
+    from pipeline_spark.functions.icebergpart import parse_dir_value
+    from pipeline_spark.sinks import lakefiles
     from pipeline_spark.sinks.iceberg_native import (
         IcebergTable,
-        _added_entry,
         _manifest_list_of,
         _name_mapping,
         _new_snapshot,
-        _parquet_stats,
-        _stamp_data_entries,
         commit_snapshot,
         create_table,
+        current_schema,
+        default_spec,
         iceberg_schema,
         write_manifest,
     )
@@ -72,10 +52,10 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     src_dir = _strip_scheme(str(p.get("sourceDir") or ""))
     if not table or not src_dir:
         raise ValueError("iceberg addFiles: 'path' and 'sourceDir' required")
-    files = _walk_hive_files(src_dir)
+    files = lakefiles.walk(src_dir)
     if not files:
         raise ValueError(f"iceberg addFiles: no parquet under {src_dir}")
-    part_cols = sorted({k for _p, pv in files.__iter__() for k in pv})
+    part_cols = sorted({k for _p, pv in files for k in pv})
     ragged = [fp for fp, pv in files if sorted(pv) != part_cols]
     if ragged:
         raise ValueError(
@@ -100,10 +80,7 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     handle = IcebergTable({"path": table}, must_exist=False)
     prev_meta = handle.meta
     if prev_meta is not None:
-        schema = next(
-            s for s in prev_meta["schemas"]
-            if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
-        )
+        schema = current_schema(prev_meta)
         want = {(f["name"], f["type"]) for f in schema["fields"]}
         have = {(f["name"], f["type"]) for f in full_schema["fields"]}
         if want != have:
@@ -111,11 +88,7 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
                 "iceberg addFiles: import schema "
                 f"{sorted(have)} != table schema {sorted(want)}"
             )
-        spec = next(
-            (sp for sp in prev_meta.get("partition-specs", [])
-             if sp.get("spec-id", 0) == prev_meta.get("default-spec-id", 0)),
-            {"fields": []},
-        )
+        spec = default_spec(prev_meta)
         spec_names = [sf["name"] for sf in spec.get("fields", [])]
         # SET comparison: the spec preserves creation order (e.g. a
         # delta-converted table's partitionBy order) while part_cols is
@@ -149,26 +122,20 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
             },
         })
 
-    long_cols = {f["name"] for f in schema["fields"]
-                 if f["type"] in ("int", "long")}
+    kinds = {f["name"]: "long" if f["type"] in ("int", "long") else "string"
+             for f in schema["fields"]}
     snapshot_id, seq, commit_uuid = _new_snapshot(base)
-    entries = []
-    for fp, pv in files:
-        rows, size = _parquet_stats(fp)
-        if rows == 0:
-            continue
-        part = {
-            c: (None if pv.get(c) is None
-                else (int(pv[c]) if c in long_cols else str(pv[c])))
-            for c in part_cols
-        }
-        entries.append(_added_entry(snapshot_id, seq, fp, part, rows, size))
-    if not entries:
+    live = [f for f in lakefiles.read(files, spark) if f.rows != 0]
+    if not live:
         raise ValueError(f"iceberg addFiles: only empty parquet in {src_dir}")
     # the files never hold the partition columns, so their footer stats
     # cover the data columns only; a v3 table gives them row ids
     fv = int(base.get("format-version", 2))
-    _stamp_data_entries(entries, schema, base if fv >= 3 else None)
+    entries = lakefiles.to_iceberg_entries(
+        [(f, {c: parse_dir_value(f.partition.get(c), kinds[c])
+              for c in part_cols}) for f in live],
+        snapshot_id, seq, schema, base if fv >= 3 else None,
+    )
     manifests = _manifest_list_of(base, base.get("current-snapshot-id"))
     manifests.append(write_manifest(
         os.path.join(handle.meta_dir, f"{commit_uuid}-m0.avro"), entries,

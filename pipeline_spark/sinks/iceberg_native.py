@@ -24,7 +24,9 @@ the spec's murmur3 inside a vectorized pandas UDF), the data write is
 ``partitionBy`` on the transform values (hive-style dirs; transform
 temp columns stay out of the files, identity source columns stay in),
 and manifests carry the typed partition record with spec field-ids so
-readers can prune.
+readers can prune.  Staged files are scanned, and their manifest
+entries' counts and bounds encoded, by ``sinks/lakefiles.py`` (one
+footer read per file, before any commit attempt).
 
 Scale posture: the data path is a plain distributed parquet write; only
 KB-sized metadata is built driver-side, mirroring Iceberg's own commit
@@ -46,13 +48,28 @@ from typing import Any
 
 from pipeline_spark.functions.avroocf import write_ocf_bytes
 from pipeline_spark.functions.parquetschema import read_parquet
+from pipeline_spark.sinks import lakefiles
 from pipeline_spark.sources.iceberg_native import (
     _strip_scheme,
     load_table_metadata,
     parse_legacy_global_deletes,
 )
 
-_STATUS_ADDED = 1
+def current_schema(meta: dict) -> dict:
+    """The table's current schema."""
+    return next(
+        s for s in meta["schemas"]
+        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
+    )
+
+
+def default_spec(meta: dict) -> dict:
+    """The table's default partition spec (unpartitioned when absent)."""
+    return next(
+        (sp for sp in meta.get("partition-specs", [])
+         if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
+        {"fields": []},
+    )
 
 # -- Iceberg schema (JSON) from a Spark schema, assigning field ids ----------
 
@@ -261,80 +278,6 @@ _MANIFEST_FILE_SCHEMA = {
         {"name": "deleted_rows_count", "type": "long", "field-id": 514},
     ],
 }
-
-
-def _parquet_stats(path: str) -> tuple[int, int]:
-    """(record_count, file_size) from the parquet footer — KB-sized reads."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows, os.path.getsize(path)
-
-
-def encode_bound(v, ice_type: str) -> bytes | None:
-    """Spec Appendix-D single-value serialization for bound maps."""
-    import datetime as dt
-    import struct
-
-    if ice_type == "boolean":
-        return b"\x01" if v else b"\x00"
-    if ice_type == "int":
-        return struct.pack("<i", int(v))
-    if ice_type == "long":
-        return struct.pack("<q", int(v))
-    if ice_type == "float":
-        return struct.pack("<f", float(v))
-    if ice_type == "double":
-        return struct.pack("<d", float(v))
-    if ice_type == "date":
-        days = (v - dt.date(1970, 1, 1)).days if isinstance(v, dt.date) else int(v)
-        return struct.pack("<i", days)
-    if ice_type in ("timestamp", "timestamptz"):
-        if isinstance(v, dt.datetime):
-            # exact integer micros: float total_seconds() loses
-            # microsecond precision past ~±2^53 µs from the epoch
-            delta = v - dt.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-            micros = (
-                (delta.days * 86_400 + delta.seconds) * 1_000_000
-                + delta.microseconds
-            )
-        else:
-            micros = int(v)
-        return struct.pack("<q", micros)
-    return None  # string/binary/decimal bounds intentionally unwritten
-
-
-def _footer_column_stats(path: str, colmap: dict[str, tuple[int, str]]):
-    """(null_value_counts, lower_bounds, upper_bounds) as field-id-keyed
-    [{key, value}] lists from the parquet footer.
-
-    Same soundness rule as the Delta writer: bounds only for types whose
-    parquet statistics cannot be truncated (numeric/boolean/date/
-    timestamp); null counts for every mapped column, and only when every
-    row group carries the statistic.
-    """
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    per_col: dict[str, list] = {}
-    for i in range(md.num_row_groups):
-        rg = md.row_group(i)
-        for j in range(rg.num_columns):
-            col = rg.column(j)
-            if col.path_in_schema in colmap:
-                per_col.setdefault(col.path_in_schema, []).append(col.statistics)
-    nulls, lows, highs = [], [], []
-    for name, stats in per_col.items():
-        fid, ice_type = colmap[name]
-        if all(st is not None and st.null_count is not None for st in stats):
-            nulls.append({"key": fid, "value": sum(st.null_count for st in stats)})
-        if all(st is not None and st.has_min_max for st in stats):
-            lo = min(st.min for st in stats)
-            hi = max(st.max for st in stats)
-            lo_b, hi_b = encode_bound(lo, ice_type), encode_bound(hi, ice_type)
-            if lo_b is not None and hi_b is not None:
-                lows.append({"key": fid, "value": lo_b})
-                highs.append({"key": fid, "value": hi_b})
-    return nulls or None, lows or None, highs or None
 
 
 class IcebergTable:
@@ -836,7 +779,6 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     # — spec-shaped native commits; see functions/icebergpart.py
     from pipeline_spark.functions.icebergpart import (
         avro_partition_type,
-        parse_dir_value,
         parse_partition_spec,
         spec_transform_str,
         transform_column,
@@ -936,10 +878,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     reuse_schema: dict | None = None
     evolved_last_column_id: int | None = None
     if prev_meta is not None:
-        prev_schema = next(
-            s for s in prev_meta["schemas"]
-            if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
-        )
+        prev_schema = current_schema(prev_meta)
         # v3 write-default (spec Default values): an append omitting a
         # defaulted column gets it filled writer-side — the batch's
         # files always materialize the column
@@ -1123,27 +1062,10 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         dw.partitionBy([t for t, _, _ in part_info]).parquet(data_dir)
     else:
         dw.parquet(data_dir)
+    # every footer is read once, here: a lost race below re-encodes only
     data_files = sorted(
-        os.path.join(root, n)
-        for root, _dirs, names in os.walk(data_dir)
-        for n in names
-        if n.endswith(".parquet")
+        _scan_nonempty(data_dir, df.sparkSession), key=lambda f: f.path
     )
-
-    def _partition_values(path: str) -> dict:
-        if not part_info:
-            return {}
-        rel = os.path.relpath(os.path.dirname(path), data_dir)
-        comps = [c for c in rel.split(os.sep) if c not in (".", "")]
-        vals: dict[str, Any] = {}
-        for (tmp, fld, kind), comp in zip(part_info, comps):
-            key, _, raw = comp.partition("=")
-            if key != tmp:
-                raise ValueError(
-                    f"iceberg: unexpected partition dir '{comp}' (wanted {tmp}=…)"
-                )
-            vals[fld["name"]] = parse_dir_value(raw, kind)
-        return vals
 
     # 2-4. manifest / manifest list / snapshot / metadata — built from
     # prev_meta inside a closure so a lost optimistic race can rebase the
@@ -1206,24 +1128,14 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
             )
         lineage = int(apply_updates(base, updates).get("format-version", 2)) >= 3
 
-        # 2. manifest (one per commit; entries = the new files)
-        entries = []
-        for path in data_files:
-            if not os.path.exists(path):
-                continue  # empty part removed by a prior commit attempt
-            rows, size = _parquet_stats(path)
-            if rows == 0:
-                # empty shuffle partitions produce empty part files; keep the
-                # manifest (and later scans) to live data only
-                os.remove(path)
-                continue
-            entries.append(_added_entry(
-                snapshot_id, seq, path, _partition_values(path), rows, size,
-            ))
+        # 2. manifest (one per commit; entries = the new files) with
         # per-file column stats (field-id-keyed null counts + Appendix-D
         # serialized bounds) so readers can skip files at the MANIFEST
         # level; v3 row lineage stamps each file's explicit first_row_id
-        _stamp_data_entries(entries, schema, base if lineage else None)
+        entries = lakefiles.to_iceberg_entries(
+            [(f, _typed_partition(f, part_info)) for f in data_files],
+            snapshot_id, seq, schema, base if lineage else None,
+        )
 
         # 3. manifest list: prior snapshot's manifests (append) + the new one.
         # A branch append chains from the BRANCH head (forking from main's
@@ -1379,46 +1291,32 @@ def _name_mapping_names(meta: dict) -> dict[int, list[str]]:
     return prior
 
 
-def _added_entry(snapshot_id: int, seq: int, path: str, partition: dict,
-                 rows: int, size: int, content: int = 0) -> dict:
-    """An ADDED manifest entry for one data or delete file."""
-    return {
-        "status": _STATUS_ADDED,
-        "snapshot_id": snapshot_id,
-        "sequence_number": seq,
-        "file_sequence_number": seq,
-        "data_file": {
-            "content": content,
-            "file_path": path,
-            "file_format": "PARQUET",
-            "partition": partition,
-            "record_count": rows,
-            "file_size_in_bytes": size,
-            "equality_ids": None,
-        },
-    }
+def _scan_nonempty(out_dir: str, spark=None) -> list:
+    """The staged files under ``out_dir``, footers read: empty shuffle
+    partitions' 0-row files are deleted, not committed, so manifests
+    (and later scans) list live data only."""
+    files = []
+    for f in lakefiles.scan(out_dir, spark):
+        if f.rows == 0:
+            os.remove(f.path)
+        else:
+            files.append(f)
+    return files
 
 
-def _stamp_data_entries(entries: list[dict], schema: dict,
-                        lineage_meta: dict | None) -> None:
-    """Footer column stats for ADDED data entries under ``schema``'s
-    field ids; with ``lineage_meta`` (a v3 table) each file also takes
-    an explicit first_row_id range off the table's next-row-id — the
-    same base the snapshot's first-row-id takes."""
-    colmap = {
-        f["name"]: (f["id"], f["type"])
-        for f in schema["fields"]
-        if isinstance(f["type"], str)
-    }
-    frid = int((lineage_meta or {}).get("next-row-id") or 0)
-    for e in entries:
-        d = e["data_file"]
-        if colmap:
-            (d["null_value_counts"], d["lower_bounds"],
-             d["upper_bounds"]) = _footer_column_stats(d["file_path"], colmap)
-        if lineage_meta is not None:
-            d["first_row_id"] = frid
-            frid += int(d["record_count"])
+def _typed_partition(f, part_info: list[tuple[str, dict, str]]) -> dict:
+    """A staged file's typed partition record from its hive dirs, one
+    per ``(temp column, spec field, kind)`` of a ``partitionBy`` write."""
+    from pipeline_spark.functions.icebergpart import parse_dir_value
+
+    vals: dict[str, Any] = {}
+    for (tmp, fld, kind), (key, raw) in zip(part_info, f.partition.items()):
+        if key != tmp:
+            raise ValueError(
+                f"iceberg: unexpected partition dir '{key}={raw}' (wanted {tmp}=…)"
+            )
+        vals[fld["name"]] = parse_dir_value(raw, kind)
+    return vals
 
 
 def _manifest_list_of(meta: dict, snapshot_id) -> list[dict]:
@@ -1664,10 +1562,7 @@ def _alter_sort_order(table: IcebergTable, meta: dict,
     re-cluster on the new columns.  ``sortBy: []`` resets the default to
     order-id 0 (unsorted): add-sort-order + set-default-sort-order (-1 =
     the just-added) in one commit."""
-    cur = next(
-        s for s in meta["schemas"]
-        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-    )
+    cur = current_schema(meta)
     by_name = {f["name"]: f["id"] for f in cur["fields"]}
     bad = [c for c in sort_by if c not in by_name]
     if bad:
@@ -1917,10 +1812,7 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
             "spec_json": (mmeta.get("partition-spec") or b"[]").decode(),
         }
 
-    cur_schema = next(
-        s for s in prev_meta["schemas"]
-        if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
-    )
+    cur_schema = current_schema(prev_meta)
     # the table's default sort order (r7): rewritten bins re-cluster on
     # its identity columns so compaction preserves the write contract
     sort_cols = _default_sort_cols(prev_meta, cur_schema)
@@ -2021,20 +1913,13 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
                 # rewritten file's bounds
                 w = w.sortWithinPartitions(*sort_cols)
             w.write.parquet(out_dir)
-        pv = dict(pkey)
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fullp = os.path.join(root, name)
-                rows, fsize = _parquet_stats(fullp)
-                added_rows += rows
-                new_by_spec.setdefault(bin_spec, []).append(_added_entry(
-                    snapshot_id, seq, fullp, pv, rows, fsize,
-                ))
-    for entries in new_by_spec.values():
         # rewritten files carry MATERIALIZED _row_id: no fresh range
-        _stamp_data_entries(entries, cur_schema, None)
+        entries = lakefiles.to_iceberg_entries(
+            [(f, dict(pkey)) for f in lakefiles.scan(out_dir, spark)],
+            snapshot_id, seq, cur_schema,
+        )
+        added_rows += sum(e["data_file"]["record_count"] for e in entries)
+        new_by_spec.setdefault(bin_spec, []).extend(entries)
     # 2. consolidated EXISTING manifests for untouched files, original
     # seqs, one per (spec generation, SCHEMA generation) — files from
     # different schema generations must never share a manifest, or its
@@ -2052,7 +1937,8 @@ def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
         gkey = (d.get("spec_id", 0), sig)
         if d.get("manifest"):
             gen_manifest.setdefault(gkey, d["manifest"])
-        rows = int(d.get("record_count") or _parquet_stats(d["path"])[0])
+        rows = int(d.get("record_count")
+                   or lakefiles.read([(d["path"], {})])[0].rows)
         existing_rows += rows
         existing_by_spec.setdefault(gkey, []).append({
             "status": 0,  # EXISTING
@@ -2229,17 +2115,10 @@ def _mutate_where(
         return df
 
     data_dir = os.path.join(table_path, "data", f"{op}-{uuid.uuid4().hex}")
-    cur_schema = next(
-        s for s in meta["schemas"]
-        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-    )
-    spec0 = next(
-        (sp for sp in meta.get("partition-specs", [])
-         if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
-        {"fields": []},
-    )
+    cur_schema = current_schema(meta)
+    spec0 = default_spec(meta)
 
-    def stage(_i: int, _files: list[dict], df) -> list[dict]:
+    def stage(_i: int, _files: list[dict], df) -> list[tuple]:
         return _stage_default_spec_files(
             df, data_dir, spec0, cur_schema,
             sort_cols=_default_sort_cols(meta, cur_schema),
@@ -2470,10 +2349,7 @@ def equality_delete_iceberg_native(
         )
     table = IcebergTable(p)
     table_path, meta = table.path, table.meta
-    cur_schema = next(
-        s for s in meta["schemas"]
-        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-    )
+    cur_schema = current_schema(meta)
     by_name = {f["name"]: f for f in cur_schema["fields"]}
     if keys_df is None:
         if isinstance(values, dict):
@@ -2514,16 +2390,7 @@ def equality_delete_iceberg_native(
     ]).distinct()
     out_dir = os.path.join(table_path, "data", f"eqdel-{uuid.uuid4().hex}")
     proj.write.parquet(out_dir)
-    files = []
-    for root, _dirs, names in os.walk(out_dir):
-        for n in sorted(names):
-            if not n.endswith(".parquet"):
-                continue
-            full = os.path.join(root, n)
-            if _parquet_stats(full)[0] == 0:
-                os.remove(full)  # empty shuffle partitions
-            else:
-                files.append(full)
+    files = _scan_nonempty(out_dir, spark)
     if not files:
         import shutil as _shutil
 
@@ -2531,7 +2398,8 @@ def equality_delete_iceberg_native(
         return {"delete_files": 0}
     append_delete_files(
         table_path,
-        [{"path": f, "content": 2, "equality_ids": ids} for f in files],
+        [{"path": f.path, "file": f, "content": 2, "equality_ids": ids}
+         for f in files],
         table=table,
     )
     return {"delete_files": len(files)}
@@ -2561,12 +2429,12 @@ def _default_sort_cols(prev_meta: dict, cur_schema: dict) -> list[str]:
 def _stage_default_spec_files(
     df_out, data_dir: str, spec0: dict, cur_schema: dict,
     sort_cols: list[str] | None = None,
-) -> list[dict]:
+) -> list[tuple]:
     """Write a batch under the table's DEFAULT spec layout (transforms
     recomputed from the spec's own metadata fields, hive dirs carry the
-    values) and return ``[{"path", "partition"}]`` with empty shuffle
-    partitions removed — the shared staging step of ``upsert`` and the
-    file-scoped ``merge``.  Identity source columns stay IN the data
+    values) and return ``[(DataFile, typed partition)]`` with empty
+    shuffle partitions removed — the shared staging step of ``upsert``
+    and the file-scoped ``merge``.  Identity source columns stay IN the data
     files (only the temp transform columns are consumed by partitionBy),
     so rewritten rows keep every schema column.  ``sort_cols``
     re-clusters each task's output on the table's default sort order."""
@@ -2595,30 +2463,10 @@ def _stage_default_spec_files(
             [t for t, _f, _k in part_info]).parquet(data_dir)
     else:
         df_out.write.parquet(data_dir)
-
-    def _pvals(path):
-        if not part_info:
-            return {}
-        from pipeline_spark.functions.icebergpart import parse_dir_value
-
-        rel = os.path.relpath(os.path.dirname(path), data_dir)
-        comps = [c for c in rel.split(os.sep) if c not in (".", "")]
-        vals = {}
-        for (_tmp, fld, kind), comp in zip(part_info, comps):
-            _k, _, raw = comp.partition("=")
-            vals[fld["name"]] = parse_dir_value(raw, kind)
-        return vals
-
-    out = []
-    for root, _dirs, names in os.walk(data_dir):
-        for n in sorted(names):
-            if n.endswith(".parquet"):
-                full = os.path.join(root, n)
-                if _parquet_stats(full)[0] == 0:
-                    os.remove(full)
-                else:
-                    out.append({"path": full, "partition": _pvals(full)})
-    return out
+    return [
+        (f, _typed_partition(f, part_info))
+        for f in _scan_nonempty(data_dir, df_out.sparkSession)
+    ]
 
 
 def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
@@ -2661,15 +2509,8 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     if meta is None:
         write_iceberg_native(upserts, {**p, "mode": "create"})
         return {"delete_files": 0, "data_files": -1}
-    spec0 = next(
-        (sp for sp in meta.get("partition-specs", [])
-         if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
-        {"fields": []},
-    )
-    cur_schema = next(
-        s for s in meta["schemas"]
-        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-    )
+    spec0 = default_spec(meta)
+    cur_schema = current_schema(meta)
     by_name = {f["name"]: f for f in cur_schema["fields"]}
     if sorted(upserts.columns) != sorted(by_name):
         raise ValueError(
@@ -2702,20 +2543,13 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
         sort_cols=_default_sort_cols(meta, cur_schema),
     )
 
-    del_files = []
-    for root, _dirs, names in os.walk(del_dir):
-        for n in sorted(names):
-            if n.endswith(".parquet"):
-                full = os.path.join(root, n)
-                if _parquet_stats(full)[0] == 0:
-                    os.remove(full)
-                else:
-                    del_files.append(full)
+    del_files = _scan_nonempty(del_dir, spark)
     if not del_files:
         raise ValueError("iceberg upsert: empty mutation batch")
     append_delete_files(
         table_path,
-        [{"path": f, "content": 2, "equality_ids": ids} for f in del_files],
+        [{"path": f.path, "file": f, "content": 2, "equality_ids": ids}
+         for f in del_files],
         table=table,
         data_files=data_files,
         summary_properties=p.get("summaryProperties"),
@@ -2743,7 +2577,7 @@ def update_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
 def _commit_file_replacement(
     table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
-    hit: list[dict], staged: list[dict], operation: str = "overwrite",
+    hit: list[dict], staged: list[tuple], operation: str = "overwrite",
     *, read_where: list[dict] | None = None, check_adds: bool = True,
     retries: int = 3,
 ) -> int:
@@ -2781,7 +2615,7 @@ def _commit_file_replacement(
 
 def _commit_file_replacement_once(
     table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
-    hit: list[dict], staged: list[dict], operation: str = "overwrite",
+    hit: list[dict], staged: list[tuple], operation: str = "overwrite",
 ) -> int:
     """ONE replace snapshot for a file-scoped rewrite (shared by MERGE /
     UPDATE / COW DELETE): untouched data manifests carry forward
@@ -2857,12 +2691,10 @@ def _commit_file_replacement_once(
         # spec, current schema, footer stats for future pruning; v3 row
         # lineage: survivors' MATERIALIZED ids win per row, fresh rows
         # derive first_row_id + position)
-        added = [
-            _added_entry(snapshot_id, seq, rec["path"], rec["partition"],
-                         *_parquet_stats(rec["path"]))
-            for rec in staged
-        ]
-        _stamp_data_entries(added, cur_schema, prev_meta if fv >= 3 else None)
+        added = lakefiles.to_iceberg_entries(
+            staged, snapshot_id, seq, cur_schema,
+            prev_meta if fv >= 3 else None,
+        )
         out_manifests.insert(0, write_manifest(
             os.path.join(table.meta_dir, f"{commit_uuid}-m{len(out_manifests)}.avro"),
             added, seq=seq, snapshot_id=snapshot_id, spec=spec0,
@@ -2966,10 +2798,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     # (rewritten files then materialize the columns)
     fills, ftypes = identity_fill_plan(data, prev_meta)
     lineage = int(prev_meta.get("format-version", 2)) >= 3
-    cur_schema = next(
-        s for s in prev_meta["schemas"]
-        if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
-    )
+    cur_schema = current_schema(prev_meta)
     by_name = {f["name"]: f for f in cur_schema["fields"]}
     if sorted(upserts.columns) != sorted(by_name):
         raise ValueError(
@@ -3113,11 +2942,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
             return {"merged_rows": 0, "rewritten_files": 0, "added_files": 0}
         new_rows = upserts.select(*keep_cols)
 
-    spec0 = next(
-        (sp for sp in prev_meta.get("partition-specs", [])
-         if sp.get("spec-id", 0) == prev_meta.get("default-spec-id", 0)),
-        {"fields": []},
-    )
+    spec0 = default_spec(prev_meta)
     commit_uuid = str(uuid.uuid4())
     data_dir = os.path.join(table_path, "data", f"merge-{commit_uuid}")
     staged = _stage_default_spec_files(
@@ -3690,10 +3515,7 @@ def check_commit_conflicts(
     base_live = {_norm(d["path"]) for d in base_data}
     new_adds = [d for d in fresh_data if _norm(d["path"]) not in base_live]
     if check_adds and new_adds:
-        cur_schema = next(
-            s for s in fresh_meta["schemas"]
-            if s.get("schema-id", 0) == fresh_meta.get("current-schema-id", 0)
-        )
+        cur_schema = current_schema(fresh_meta)
         id2field = {f["id"]: f for f in cur_schema["fields"]}
         for d in new_adds:
             if read_where is None or _bounds_may_match(
@@ -3848,6 +3670,27 @@ def append_delete_files(
 
     if table is None:
         table = IcebergTable({"path": table_path})
+    for d in delete_files:
+        content = int(d["content"])
+        if content not in (1, 2):
+            raise ValueError("delete file content must be 1 (position) or 2 (equality)")
+        if content == 2 and not d.get("equality_ids"):
+            raise ValueError("equality delete files need equality_ids")
+        if str(d.get("format", "")).upper() == "PUFFIN" and (
+            content != 1 or d.get("content_offset") is None
+            or not d.get("referenced_data_file")
+        ):
+            raise ValueError(
+                "puffin delete entries need content=1, "
+                "referenced_data_file, content_offset and "
+                "content_size_in_bytes"
+            )
+    # every parquet delete footer is read once, before any commit attempt
+    delete_files = [
+        d if "file" in d or str(d.get("format", "")).upper() == "PUFFIN"
+        else {**d, "file": lakefiles.read([(d["path"], {})])[0]}
+        for d in delete_files
+    ]
 
     def _conflict_sets() -> tuple[set[str], set[str]]:
         # computed lazily on FIRST conflict only — reading the delete
@@ -3905,8 +3748,10 @@ def _append_delete_files_once(
     Each entry: ``{"path": <parquet delete file>, "content": 1|2,
     "equality_ids": [field-ids]}`` — content 1 = position deletes
     (columns ``file_path``, ``pos``), content 2 = equality deletes
-    (the identifier columns named by ``equality_ids``).  ``data_files``
-    (``{"path", "partition"}`` or bare paths) land in the same snapshot.
+    (the identifier columns named by ``equality_ids``); ``file`` is its
+    read :class:`~pipeline_spark.sinks.lakefiles.DataFile`.
+    ``data_files`` (``(DataFile, typed partition)`` pairs) land in the
+    same snapshot.
     """
     meta_dir = table.meta_dir
     snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
@@ -3916,30 +3761,17 @@ def _append_delete_files_once(
         str(d.get("format", "")).upper() == "PUFFIN" for d in delete_files
     )
     for d in delete_files:
-        content = int(d["content"])
-        if content not in (1, 2):
-            raise ValueError("delete file content must be 1 (position) or 2 (equality)")
-        if content == 2 and not d.get("equality_ids"):
-            raise ValueError("equality delete files need equality_ids")
-        puffin = str(d.get("format", "")).upper() == "PUFFIN"
-        if puffin:
-            # v3 deletion vector: one entry per blob, addressed inside
-            # the shared puffin file; record_count = DV cardinality
-            if content != 1 or d.get("content_offset") is None or not d.get(
-                "referenced_data_file"
-            ):
-                raise ValueError(
-                    "puffin delete entries need content=1, "
-                    "referenced_data_file, content_offset and "
-                    "content_size_in_bytes"
-                )
-            rows = int(d.get("record_count") or 0)
-            size = os.path.getsize(d["path"])
-        else:
-            rows, size = _parquet_stats(d["path"])
-        e = _added_entry(snapshot_id, seq, d["path"], {}, rows, size, content)
-        e["data_file"]["equality_ids"] = list(d.get("equality_ids") or []) or None
-        if puffin:
+        # a puffin DV has one entry per blob, addressed inside the shared
+        # puffin file; record_count = DV cardinality
+        e = lakefiles.to_iceberg_entry(
+            d.get("file") or lakefiles.DataFile(
+                d["path"], os.path.getsize(d["path"]),
+                int(d.get("record_count") or 0),
+            ),
+            snapshot_id, seq, {}, content=int(d["content"]),
+            equality_ids=d.get("equality_ids"),
+        )
+        if str(d.get("format", "")).upper() == "PUFFIN":
             e["data_file"].update(
                 file_format="PUFFIN",
                 referenced_data_file=d.get("referenced_data_file"),
@@ -3948,19 +3780,8 @@ def _append_delete_files_once(
             )
         entries.append(e)
 
-    cur_schema = next(
-        s
-        for s in prev_meta["schemas"]
-        if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)
-    )
-    spec0 = next(
-        (
-            sp
-            for sp in prev_meta.get("partition-specs", [])
-            if sp.get("spec-id", 0) == prev_meta.get("default-spec-id", 0)
-        ),
-        {"fields": []},
-    )
+    cur_schema = current_schema(prev_meta)
+    spec0 = default_spec(prev_meta)
     updates: list[dict] = []
     if any_dv and int(prev_meta.get("format-version", 2)) < 3:
         # puffin DVs are a v3 construct: a spec-strict reader must see
@@ -4013,21 +3834,12 @@ def _append_delete_files_once(
     # deletes — the strict below-sequence rule means the deletes apply
     # to every EARLIER file but never to these, so delete-old-then-
     # insert-new is one atomic commit
-    data_entries: list[dict] = []
-    for d in data_files or []:
-        path, pv = (
-            (d["path"], d.get("partition") or {})
-            if isinstance(d, dict) else (d, {})
-        )
-        rows, size = _parquet_stats(path)
-        if rows == 0:
-            os.remove(path)
-            continue
-        data_entries.append(_added_entry(snapshot_id, seq, path, pv, rows, size))
     # v3 row lineage: the batch's files take explicit first_row_id off
     # the table's next-row-id (fresh rows of this snapshot)
-    _stamp_data_entries(data_entries, cur_schema,
-                        prev_meta if fv >= 3 else None)
+    data_entries = lakefiles.to_iceberg_entries(
+        data_files or [], snapshot_id, seq, cur_schema,
+        prev_meta if fv >= 3 else None,
+    )
 
     manifests = [dict(mf) for mf in _manifest_list_of(
         prev_meta, prev_meta.get("current-snapshot-id"))]

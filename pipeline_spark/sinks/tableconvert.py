@@ -55,6 +55,7 @@ import uuid
 from typing import Any
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
+from pipeline_spark.sinks import lakefiles
 from pipeline_spark.sources.iceberg_native import _strip_scheme
 
 _DELTA_TO_ICE = {
@@ -109,7 +110,7 @@ def convert_delta_to_iceberg(spark, p: dict[str, Any]) -> dict[str, Any]:
             f"convert: {table} already carries iceberg metadata"
         )
     return _iceberg_metadata_over_delta(table, version=1,
-                                        stats_source="footer")
+                                        stats_source="footer", spark=spark)
 
 
 def sync_uniform_iceberg(table: str) -> dict[str, Any]:
@@ -154,8 +155,7 @@ def convert_parquet_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
     migration entry point: one delta log over the files IN PLACE,
     partition columns from the ``col=value`` directory names, footer
     stats in every ``add.stats`` so skipping works from commit zero."""
-    from pipeline_spark.sinks.delta_native import _footer_stats, commit
-    from pipeline_spark.sinks.iceberg_addfiles import _walk_hive_files
+    from pipeline_spark.sinks.delta_native import commit
 
     table = _strip_scheme(
         str(p.get("path") or p.get("table") or p.get("source") or "")
@@ -165,7 +165,7 @@ def convert_parquet_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
     log_dir = os.path.join(table, "_delta_log")
     if os.path.isdir(log_dir) and os.listdir(log_dir):
         raise FileExistsError(f"convert: {table} already carries a delta log")
-    files = _walk_hive_files(table)
+    files = lakefiles.walk(table)
     if not files:
         raise ValueError(f"convert: no parquet files under {table}")
     part_cols = sorted({k for _fp, pv in files for k in pv})
@@ -214,19 +214,10 @@ def convert_parquet_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
         }},
     ]
     total_rows = 0
-    for fp, pv in files:
-        rel = os.path.relpath(fp, table)
-        st = _footer_stats(fp)
-        if st:
-            total_rows += json.loads(st).get("numRecords") or 0
-        actions.append({"add": {
-            "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-            "partitionValues": {c: pv.get(c) for c in part_cols},
-            "size": os.path.getsize(fp),
-            "modificationTime": now_ms,
-            "dataChange": True,
-            **({"stats": st} if st else {}),
-        }})
+    staged = [(fp, {c: pv.get(c) for c in part_cols}) for fp, pv in files]
+    for f in lakefiles.read(staged, spark):
+        total_rows += f.rows or 0
+        actions.append({"add": lakefiles.to_delta_add(f, table, now_ms)})
     commit(
         table, None, actions, reads="table",
         checkpoint_interval=p.get("checkpointInterval"),
@@ -245,12 +236,13 @@ def sync_uniform_append(
     Returns False when the shape doesn't fit (caller full-regens):
     no iceberg metadata yet, a v3/DV table (full regen keeps the DV
     manifests and row-id space coherent), or a schema drift."""
+    from pipeline_spark.functions.icebergpart import parse_dir_value
     from pipeline_spark.sinks.iceberg_native import (
         IcebergTable,
-        _added_entry,
         _manifest_list_of,
         _new_snapshot,
         commit_snapshot,
+        default_spec,
         write_manifest,
     )
 
@@ -292,11 +284,7 @@ def sync_uniform_append(
                 phys_by_id[int(e["field-id"])] = e["names"][0]
     except (ValueError, TypeError):
         pass
-    spec = next(
-        (sp for sp in meta.get("partition-specs", [])
-         if sp.get("spec-id", 0) == meta.get("default-spec-id", 0)),
-        {"fields": []},
-    )
+    spec = default_spec(meta)
     by_id = {f["id"]: f for f in cur_schema["fields"]}
     if any(sf.get("transform") != "identity" for sf in spec.get("fields", [])):
         return False
@@ -322,24 +310,13 @@ def sync_uniform_append(
     snapshot_id, seq, commit_uuid = _new_snapshot(meta)
     entries = []
     for a in add_actions:
-        full = os.path.join(table, urllib.parse.unquote(a["path"]))
-        rc, nulls, lows, highs = _bounds_from_delta_stats(
-            a.get("stats"), colmap
-        )
-        if rc is None:
+        f = lakefiles.DataFile.from_delta_stats(table, a)
+        if f.rows is None:
             return False  # no numRecords: let the full regen footer-read
-        pv_raw = a.get("partitionValues") or {}
-        part = {}
-        for pname, phys, kind in part_kinds:
-            v = pv_raw.get(phys)
-            part[pname] = None if v is None else (
-                int(v) if kind == "long" else str(v)
-            )
-        e = _added_entry(snapshot_id, seq, full, part, int(rc),
-                         int(a.get("size") or 0))
-        e["data_file"].update(null_value_counts=nulls, lower_bounds=lows,
-                              upper_bounds=highs)
-        entries.append(e)
+        entries.append(lakefiles.to_iceberg_entry(f, snapshot_id, seq, {
+            pname: parse_dir_value(f.partition.get(phys), kind)
+            for pname, phys, kind in part_kinds
+        }, colmap=colmap))
     if not entries:
         return False
     manifests = _manifest_list_of(meta, snap_id_prev)
@@ -370,61 +347,8 @@ def sync_uniform_append(
     return True
 
 
-def _bounds_from_delta_stats(
-    st: str | None, colmap: dict[str, tuple[int, str]]
-):
-    """(record_count, nulls, lows, highs) from an add's ``stats`` JSON —
-    the log-sourced twin of ``_footer_column_stats`` (spec Appendix-D
-    serialized bounds, field-id keyed).  Same soundness rule: bounds
-    only for types whose statistics cannot be truncated."""
-    import datetime as _dt
-
-    from pipeline_spark.sinks.iceberg_native import encode_bound
-
-    if not st:
-        return None, None, None, None
-    try:
-        j = json.loads(st)
-    except (ValueError, TypeError):
-        return None, None, None, None
-
-    def topy(v, ice_type):
-        if v is None:
-            return None
-        if ice_type == "date" and isinstance(v, str):
-            return _dt.date.fromisoformat(v[:10])
-        if ice_type in ("timestamp", "timestamptz") and isinstance(v, str):
-            ts = _dt.datetime.fromisoformat(
-                v.replace("Z", "+00:00").replace(" ", "T")
-            )
-            if ts.tzinfo is not None:
-                # normalize to UTC FIRST — dropping a non-UTC offset
-                # verbatim would shift the bound and mis-prune
-                ts = ts.astimezone(_dt.timezone.utc)
-            return ts.replace(tzinfo=None)
-        return v
-
-    nulls, lows, highs = [], [], []
-    mins = j.get("minValues") or {}
-    maxs = j.get("maxValues") or {}
-    ncs = j.get("nullCount") or {}
-    for name, (fid, ice_type) in colmap.items():
-        if name in ncs and isinstance(ncs[name], (int, float)):
-            nulls.append({"key": fid, "value": int(ncs[name])})
-        lo, hi = topy(mins.get(name), ice_type), topy(maxs.get(name), ice_type)
-        if lo is not None and hi is not None:
-            try:
-                lo_b, hi_b = encode_bound(lo, ice_type), encode_bound(hi, ice_type)
-            except (ValueError, TypeError):
-                lo_b = hi_b = None
-            if lo_b is not None and hi_b is not None:
-                lows.append({"key": fid, "value": lo_b})
-                highs.append({"key": fid, "value": hi_b})
-    return j.get("numRecords"), nulls or None, lows or None, highs or None
-
-
 def _iceberg_metadata_over_delta(
-    table: str, *, version: int, stats_source: str
+    table: str, *, version: int, stats_source: str, spark=None
 ) -> dict[str, Any]:
     """Write iceberg metadata over a delta table's current data files.
     ``stats_source="footer"`` reads parquet footers for exact bounds
@@ -447,12 +371,10 @@ def _iceberg_metadata_over_delta(
       shared container, manifest field-ids 143/144/145, format-version
       3 with row-lineage fields.
     """
+    from pipeline_spark.functions.icebergpart import parse_dir_value
     from pipeline_spark.sinks.iceberg_native import (
         IcebergTable,
-        _added_entry,
-        _footer_column_stats,
         _new_snapshot,
-        _parquet_stats,
         commit_snapshot,
         create_table,
         write_manifest,
@@ -524,13 +446,10 @@ def _iceberg_metadata_over_delta(
 
     def typed_partition(a: dict) -> dict:
         pv = a.get("partitionValues") or {}
-        out = {}
-        for c, kind in part_kinds:
-            v = pv.get(phys_of.get(c, c), pv.get(c))
-            out[c] = None if v is None else (
-                int(v) if kind == "long" else str(v)
-            )
-        return out
+        return {
+            c: parse_dir_value(pv.get(phys_of.get(c, c), pv.get(c)), kind)
+            for c, kind in part_kinds
+        }
 
     # footer stats keyed by the names files physically carry; partition
     # columns never appear in delta parquet, so they stay out of the map
@@ -570,33 +489,29 @@ def _iceberg_metadata_over_delta(
     fmt = 3 if dv_adds else 2
     snapshot_id, seq, commit_uuid = _new_snapshot(base)
     os.makedirs(meta_dir, exist_ok=True)
+    if stats_source == "log":
+        # UniForm sync path: bounds from the add's stats JSON (the
+        # delta writer already computed them) — zero footer reads
+        files = [lakefiles.DataFile.from_delta_stats(table, a) for a in adds]
+        for f in files:
+            if f.rows is None:
+                f.rows = lakefiles.read([(f.path, {})])[0].rows
+    else:
+        files = lakefiles.read([
+            (os.path.join(table, urllib.parse.unquote(a["path"])), {})
+            for a in adds
+        ], spark)
+    # v3 row lineage: converted files take explicit first_row_id so
+    # withRowIds works from the first read (next-row-id advances by the
+    # same running total)
+    frid = 0
     entries = []
-    for a in adds:
-        full = os.path.join(table, urllib.parse.unquote(a["path"]))
-        if stats_source == "log":
-            # UniForm sync path: bounds from the add's stats JSON (the
-            # delta writer already computed them) — zero footer reads
-            rc, nulls, lows, highs = _bounds_from_delta_stats(
-                a.get("stats"), colmap
-            )
-            rows = int(rc) if rc is not None else _parquet_stats(full)[0]
-            size = int(a.get("size") or os.path.getsize(full))
-        else:
-            rows, size = _parquet_stats(full)
-            nulls, lows, highs = _footer_column_stats(full, colmap)
-        e = _added_entry(snapshot_id, seq, full, typed_partition(a),
-                         rows, size)
-        e["data_file"].update(null_value_counts=nulls, lower_bounds=lows,
-                              upper_bounds=highs)
-        entries.append(e)
-    if fmt >= 3:
-        # v3 row lineage: converted files take explicit first_row_id so
-        # withRowIds works from the first read (next-row-id advances by
-        # the same running total)
-        _frid = 0
-        for e in entries:
-            e["data_file"]["first_row_id"] = _frid
-            _frid += int(e["data_file"]["record_count"])
+    for f, a in zip(files, adds):
+        entries.append(lakefiles.to_iceberg_entry(
+            f, snapshot_id, seq, typed_partition(a), colmap=colmap,
+            first_row_id=frid if fmt >= 3 else None,
+        ))
+        frid += f.rows
     manifests = [write_manifest(
         os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
         seq=seq, snapshot_id=snapshot_id, spec=spec, schema=write_schema,
@@ -623,8 +538,10 @@ def _iceberg_metadata_over_delta(
         dentries = []
         for a, d in zip(dv_adds, descs):
             deleted_rows += d["cardinality"]
-            e = _added_entry(snapshot_id, seq, puffin_path, typed_partition(a),
-                             d["cardinality"], psize, content=1)
+            e = lakefiles.to_iceberg_entry(
+                lakefiles.DataFile(puffin_path, psize, d["cardinality"]),
+                snapshot_id, seq, typed_partition(a), content=1,
+            )
             e["data_file"].update(
                 file_format="PUFFIN", referenced_data_file=d["referenced"],
                 content_offset=d["offset"], content_size_in_bytes=d["length"],
@@ -687,7 +604,8 @@ def convert_iceberg_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
     )
 
     _plgd(p)  # fail typos at parameter-parse time
-    from pipeline_spark.sinks.delta_native import _footer_stats, commit
+    from pipeline_spark.sinks.delta_native import commit
+    from pipeline_spark.sinks.iceberg_native import current_schema
     from pipeline_spark.sources.iceberg_native import (
         identity_fill_plan,
         norm_path,
@@ -705,10 +623,7 @@ def convert_iceberg_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
             f"convert: {table} already carries a delta log"
         )
     data, deletes, imeta = plan_files(table)
-    cur_schema = next(
-        s for s in imeta["schemas"]
-        if s.get("schema-id", 0) == imeta.get("current-schema-id", 0)
-    )
+    cur_schema = current_schema(imeta)
     # v3 initial-defaults have no delta equivalent: a file written
     # BEFORE a defaulted column existed reads the default on the
     # iceberg side but NULL through delta's schema-first null-pad —
@@ -903,33 +818,24 @@ def convert_iceberg_to_delta(spark, p: dict[str, Any]) -> dict[str, Any]:
             "createdTime": now_ms,
         }},
     ]
+    for d in data:
+        if os.path.relpath(d["path"], table).startswith(".."):
+            raise ValueError(
+                f"convert: data file {d['path']} lives outside the table "
+                "root — delta add paths must be table-relative"
+            )
     total_rows = 0
     n_dvs = 0
-    for d in data:
-        full = d["path"]
-        rel = os.path.relpath(full, table)
-        if rel.startswith(".."):
-            raise ValueError(
-                f"convert: data file {full} lives outside the table root "
-                "— delta add paths must be table-relative"
-            )
-        st = _footer_stats(full)
-        if st:
-            total_rows += json.loads(st).get("numRecords") or 0
-        add: dict[str, Any] = {
-            "path": urllib.parse.quote(rel.replace(os.sep, "/"), safe="/="),
-            "partitionValues": {},
-            "size": os.path.getsize(full),
-            "modificationTime": now_ms,
-            "dataChange": True,
-            **({"stats": st} if st else {}),
-        }
-        if part_cols:
-            fv = fills.get(full) or {}
-            add["partitionValues"] = {
-                c: (None if fv.get(c) is None else str(fv[c]))
-                for c in part_cols
-            }
+    staged = [
+        (d["path"], {
+            c: (None if fv.get(c) is None else str(fv[c])) for c in part_cols
+        })
+        for d in data for fv in [fills.get(d["path"]) or {}]
+    ]
+    for f in lakefiles.read(staged, spark):
+        full = f.path
+        total_rows += f.rows or 0
+        add = lakefiles.to_delta_add(f, table, now_ms)
         positions = pos_of.pop(norm_path(full), None)
         if positions:
             from pipeline_spark.functions.deltadv import (

@@ -3270,3 +3270,34 @@ def test_delta_shallow_clone(spark, tmp_path):
     assert read_delta_native(spark, {"path": tgt}).count() == 21
     with pytest.raises(FileExistsError):
         clone_delta_native(spark, {"path": tgt, "source": src})
+
+
+def test_clone_keeps_the_row_tracking_watermark(spark, tmp_path):
+    """A clone's v0 carries its source's live domains: the next append
+    to the clone takes row ids past the cloned files', and the
+    ``delta.rowTracking`` watermark is present."""
+    import json
+
+    from pipeline_spark.sinks.delta_native import (
+        clone_delta_native,
+        write_delta_native,
+    )
+    from pipeline_spark.sources.delta_native import replay_domains, replay_log
+
+    src = str(tmp_path / "rt_src")
+    write_delta_native(
+        spark, spark.range(5).coalesce(1),
+        {"path": src, "properties": {"delta.enableRowTracking": "true"}},
+    )
+    tgt = str(tmp_path / "rt_clone")
+    clone_delta_native(spark, {"path": tgt, "source": src})
+    write_delta_native(
+        spark, spark.range(5, 8).coalesce(1), {"path": tgt, "mode": "append"}
+    )
+    adds = replay_log(tgt)[0]
+    # cloned adds reference the source's files by absolute path
+    new = [a for a in adds if not a["path"].startswith("/")]
+    assert [a["baseRowId"] for a in new] == [5]
+    dm = replay_domains(tgt).get("delta.rowTracking")
+    assert dm is not None
+    assert json.loads(dm["configuration"])["rowIdHighWaterMark"] == 7

@@ -171,10 +171,10 @@ def test_dv_read_join_strategy_across_threshold(
 
 
 def test_footer_stats_distributed_path_engages(spark, tmp_path, monkeypatch):
-    """Commits above SPARK_GRAFT_STATS_DRIVER_MAX must collect footer
-    stats through the distributed path — and produce the same stats the
-    driver pool does."""
-    from pipeline_spark.sinks.delta_native import _collect_file_stats
+    """Scans above lakefiles.DRIVER_MAX must read footer stats through
+    the distributed path — and produce the same stats the driver pool
+    does."""
+    from pipeline_spark.sinks import lakefiles
 
     src = spark.range(90).select(
         F.col("id"), (F.col("id") % 9).alias("part"))
@@ -194,13 +194,14 @@ def test_footer_stats_distributed_path_engages(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(spark.sparkContext, "parallelize", spy)
 
-    monkeypatch.setenv("SPARK_GRAFT_STATS_DRIVER_MAX", "2")
-    dist = _collect_file_stats(spark, paths)
+    monkeypatch.setattr(lakefiles, "DRIVER_MAX", 2)
+    dist = lakefiles.scan(d, spark)
     assert calls["parallelize"] == 1  # the RDD job ran
 
-    monkeypatch.setenv("SPARK_GRAFT_STATS_DRIVER_MAX", str(len(paths)))
+    monkeypatch.setattr(lakefiles, "DRIVER_MAX", len(paths))
     calls["parallelize"] = 0
-    drv = _collect_file_stats(spark, paths)
+    drv = lakefiles.scan(d, spark)
     assert calls["parallelize"] == 0  # driver pool, no job
 
     assert dist == drv and len(dist) == len(paths)
+    assert all(f.rows is not None for f in dist)  # every footer read

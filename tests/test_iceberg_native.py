@@ -675,7 +675,7 @@ def test_swapped_renames_resolve_atomically(spark, tmp_path):
 def test_bound_encoding_appendix_d():
     import datetime as dt
 
-    from pipeline_spark.sinks.iceberg_native import encode_bound
+    from pipeline_spark.sinks.lakefiles import encode_bound
     from pipeline_spark.sources.iceberg_native import decode_bound
 
     # Appendix D: little-endian fixed widths

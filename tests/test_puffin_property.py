@@ -44,7 +44,7 @@ import datetime as dt
 
 from hypothesis import given as _given
 
-from pipeline_spark.sinks.iceberg_native import encode_bound
+from pipeline_spark.sinks.lakefiles import encode_bound
 from pipeline_spark.sources.iceberg_native import decode_bound
 
 

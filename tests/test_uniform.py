@@ -149,12 +149,15 @@ def test_alter_rename_syncs_logical_names(spark, tmp_path):
 
 def test_log_bounds_match_footer_bounds(spark, tmp_path):
     """Differential: the sync's log-sourced Appendix-D bounds must equal
-    the footer-sourced ones for every boundable type (the one-shot
+    the footer-sourced ones (both through the one Iceberg encoder) for every boundable type (the one-shot
     convert and the per-commit sync may never disagree on pruning)."""
     import datetime
 
-    from pipeline_spark.sinks.iceberg_native import _footer_column_stats
-    from pipeline_spark.sinks.tableconvert import _bounds_from_delta_stats
+    from pipeline_spark.sinks.lakefiles import (
+        DataFile,
+        read,
+        to_iceberg_entry,
+    )
     from pipeline_spark.sources.delta_native import replay_state
 
     tbl = str(tmp_path / "ufdiff")
@@ -178,10 +181,15 @@ def test_log_bounds_match_footer_bounds(spark, tmp_path):
         "d": (4, "timestamp"), "e": (5, "boolean"), "f": (6, "string"),
     }
     full = os.path.join(tbl, adds[0]["path"])
-    f_nulls, f_lows, f_highs = _footer_column_stats(full, colmap)
-    rc, l_nulls, l_lows, l_highs = _bounds_from_delta_stats(
-        adds[0].get("stats"), colmap
-    )
+
+    def encoded(f):
+        d = to_iceberg_entry(f, 1, 1, {}, colmap=colmap)["data_file"]
+        return (d["record_count"], d["null_value_counts"],
+                d["lower_bounds"], d["upper_bounds"])
+
+    _rc, f_nulls, f_lows, f_highs = encoded(read([(full, {})])[0])
+    rc, l_nulls, l_lows, l_highs = encoded(
+        DataFile.from_delta_stats(tbl, adds[0]))
     assert rc == 50
 
     def by_key(entries):
