@@ -764,7 +764,7 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
         if rowtrack:
             bin_df = _keep_row_ids(
                 spark, table, bin_df, files, rt_mat_id, rt_mat_cv
-            )
+            ).drop("__dv_fp", "__dv_ri")
         staged += _write_files(out_dir, bin_df.coalesce(1), dict(key))
         removes += [_removal(a, now_ms, data_change=False) for a in files]
 
@@ -792,10 +792,10 @@ def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
 def _keep_row_ids(spark, table: str, df, files: list[dict], rt_id, rt_cv):
     """Row tracking through a rewrite (PROTOCOL.md Row Tracking): each
-    row of ``df`` (read with ``__dv_fp``/``__dv_ri``) keeps its identity
-    MATERIALIZED in the table's configured columns — the value a prior
-    rewrite stamped, else its file's baseRowId + position and
-    defaultRowCommitVersion."""
+    row of ``df`` (read with ``__dv_fp``/``__dv_ri``, which stay) keeps
+    its identity MATERIALIZED in the table's configured columns — the
+    value a prior rewrite stamped, else its file's baseRowId + position
+    and defaultRowCommitVersion."""
     from pyspark.sql import functions as F
 
     from pipeline_spark.functions.localframe import local_frame
@@ -821,7 +821,7 @@ def _keep_row_ids(spark, table: str, df, files: list[dict], rt_id, rt_cv):
     )
     if rt_cv:
         df = df.withColumn(rt_cv, F.coalesce(F.col(rt_cv), F.col("__rt_dcv")))
-    return df.drop("__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv")
+    return df.drop("__rt_fp", "__rt_base", "__rt_dcv")
 
 
 def _zorder_compact(
@@ -1318,13 +1318,204 @@ def _uniform_sync_inner(
         sync_uniform_iceberg(table)
 
 
+def _mor(p: dict[str, Any]) -> bool:
+    """``method: mor`` (or ``deletionVectors: true``): deletion vectors
+    instead of rewrites."""
+    return bool(p.get("deletionVectors")) or str(
+        p.get("method", "")
+    ).lower() in ("mor", "dv", "deletion-vectors")
+
+
+class _Rowlevel:
+    """The Delta adapter of the row-level planner (sinks/rowlevel.py) over
+    one snapshot, shared by DELETE, UPDATE and MERGE: ``t`` describes the
+    table — a DV-aware live-row reader with partition literals (and, on
+    a row-tracking table, each row's id and commit version), per-partition
+    staging under ``data-<op>-<id>/`` and change-data staging — and the
+    methods build both commits' actions and publish them.
+
+    ``where`` and ``set`` are logical names; files, stats and
+    partitionValues physical — translated at the boundaries.
+    ``staged_by=(commit_id, now_ms)`` stages into another operation's
+    commit (a replaceWhere overwrite)."""
+
+    def __init__(self, spark, table: str, state: tuple, op: str, *,
+                 cdf: bool, staged_by: tuple[str, int] | None = None):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from pipeline_spark.functions.sqltext import qi
+        from pipeline_spark.sinks import rowlevel
+        from pipeline_spark.sources.delta_native import (
+            _column_mapping,
+            _stats_may_match,
+            partition_literal_sql,
+            read_files_with_dv,
+            stats_to_logical,
+            to_logical_df,
+            to_physical_df,
+        )
+
+        prev_adds, meta, proto, prev_version = state[:4]
+        self.spark, self.table, self.state, self.op = spark, table, state, op
+        self.proto = proto or {}
+        self.cm = cm = _column_mapping(meta)
+        log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
+        part_cols = list(meta.get("partitionColumns") or [])
+        part_set = set(part_cols)
+        self.phys_part_cols = (
+            [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
+        )
+        full = StructType.fromJson(json.loads(meta["schemaString"]))
+        read_fields = cm["phys_schema"].fields if cm else full.fields
+        fschema = StructType(
+            [f for f in read_fields if f.name not in self.phys_part_cols]
+        )
+        self.log_fschema = log_fschema = [
+            f for f in full.fields if f.name not in part_cols
+        ]
+        types = {f.name: f.dataType for f in full.fields}
+        # row tracking (PROTOCOL.md): a staged row (a rewrite, or a DV
+        # update's re-appended row) PRESERVES its identity by
+        # materializing it into the table's configured columns
+        conf = meta.get("configuration") or {}
+        rt_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
+        rt_cv = conf.get(
+            "delta.rowTracking.materializedRowCommitVersionColumnName"
+        )
+        rowtrack = (
+            "rowTracking" in (self.proto.get("writerFeatures") or [])
+            and rt_id and rt_cv
+        )
+        self.commit_id, self.now_ms = staged_by or (
+            uuid.uuid4().hex, int(time.time() * 1000)
+        )
+        self.data_dir = f"data-{'rw' if staged_by else op}-{self.commit_id}"
+        self.cdc: list[dict] = []
+
+        def path_of(a: dict) -> str:
+            return os.path.abspath(
+                os.path.join(table, urllib.parse.unquote(a["path"]))
+            )
+
+        def may_match(a: dict, where: list[dict]) -> bool:
+            # partition values are exact (footer stats never carry
+            # them); stats keys are physical, `where` is logical
+            if _pv_disproves(a, where, part_set,
+                             cm["phys_of"] if cm else {}):
+                return False
+            if cm:
+                a = dict(a)
+                stats_to_logical([a], cm)
+            return _stats_may_match(a, where, None)
+
+        def groups(files: list[dict]) -> list[list[dict]]:
+            by_pv: dict[tuple, list[dict]] = {}
+            for a in files:
+                key = tuple(sorted((a.get("partitionValues") or {}).items()))
+                by_pv.setdefault(key, []).append(a)
+            return list(by_pv.values())
+
+        def read(files: list[dict], lineage: bool):
+            lineage = bool(lineage and rowtrack)
+            rt_cols = [rt_id, rt_cv] if lineage else []
+            sch = StructType(
+                list(fschema.fields)
+                + [StructField(c, LongType(), True) for c in rt_cols]
+            )
+            parts = []
+            for gfiles in groups(files):
+                # DV-aware: rows a file's deletion vector already
+                # removed neither match nor come back in a rewrite
+                df = read_files_with_dv(
+                    spark, table, sch, gfiles, with_meta=True
+                )
+                df = to_logical_df(
+                    df, cm, log_fschema, keep=(*rt_cols, "__dv_fp", "__dv_ri")
+                )
+                if lineage:
+                    df = _keep_row_ids(spark, table, df, gfiles, rt_id, rt_cv)
+                pv = gfiles[0].get("partitionValues") or {}
+                parts.append(df.selectExpr(
+                    *[qi(f.name) for f in log_fschema], *map(qi, rt_cols),
+                    "__dv_fp AS __fp__", "__dv_ri AS __pos__",
+                    *partition_literal_sql(pv.items(), types, log_of),
+                ))
+            out = parts[0]
+            for x in parts[1:]:
+                out = out.unionByName(x)
+            return out
+
+        def stage(i: int, files: list[dict], df) -> list[tuple]:
+            return _write_files(
+                os.path.join(table, self.data_dir, f"grp-{i:05d}"),
+                to_physical_df(df, cm), files[0].get("partitionValues") or {},
+            )
+
+        def changes(i: int, files: list[dict], pre, post) -> None:
+            base = [qi(f.name) for f in log_fschema]
+            if post is None:
+                rows = pre.selectExpr(*base, "'delete' AS _change_type")
+            else:
+                rows = pre.selectExpr(
+                    *base, "'update_preimage' AS _change_type"
+                ).unionByName(post.selectExpr(
+                    *base, "'update_postimage' AS _change_type"
+                ))
+            self.cdc.extend(_stage_cdc(
+                table, self.commit_id, i, to_physical_df(rows, cm),
+                files[0].get("partitionValues") or {},
+            ))
+
+        self.t = rowlevel.Table(
+            fmt="delta", files=prev_adds,
+            columns=[f.name for f in log_fschema],
+            may_match=may_match, path_of=path_of, read=read, stage=stage,
+            groups=groups, part_cols=part_cols, types=types,
+            lineage=(
+                (rt_id, rt_cv, (prev_version or 0) + 1) if rowtrack else None
+            ),
+            changes=changes if cdf else None,
+        )
+
+    def removes(self, files: list[dict]) -> list[dict]:
+        return [{"remove": _removal(a, self.now_ms)} for a in files]
+
+    def adds(self, staged: list[tuple]) -> list[dict]:
+        return [
+            {"add": a}
+            for a in _adds(self.spark, self.table, staged, self.now_ms)
+        ]
+
+    def dvs(self, plan) -> tuple[list[dict], int, int]:
+        """The deletion-vector actions of a merge-on-read plan (see
+        :func:`_dv_actions`); nothing when no file was a candidate."""
+        if plan.positions is None:
+            return [], 0, 0
+        return _dv_actions(
+            self.table, plan.files, plan.positions, self.proto, self.now_ms,
+        )
+
+    def publish(self, actions: list[dict], params: dict, *,
+                reads: list[dict], txn: tuple | None = None,
+                checkpoint_interval: int | None = None) -> int | None:
+        """Commit ``actions`` plus the staged change files and the
+        commitInfo; the version, or None for a replayed ``txn``."""
+        actions = actions + self.cdc + [{"commitInfo": {
+            "timestamp": self.now_ms, "operation": self.op.upper(),
+            "operationParameters": params,
+        }}]
+        return commit(
+            self.table, self.state, actions, reads=reads, txn=txn,
+            checkpoint_interval=checkpoint_interval,
+        )[0]
+
+
 def _mutate_where(
     spark, p: dict[str, Any], set_exprs: dict[str, str] | None, *,
     state: tuple | None = None, staged_by: tuple[str, int] | None = None,
 ):
-    """The Delta adapter of the row-level planner (sinks/rowlevel.py):
-    the table state, a DV-aware live-row reader with partition literals,
-    per-partition staging, change-data staging and the two commits.
+    """DELETE / UPDATE through the row-level planner over the Delta
+    adapter (:class:`_Rowlevel`).
 
     Copy-on-write (the default) rewrites only the files holding a match
     in one remove+add commit.  ``method: mor`` (or ``deletionVectors:
@@ -1338,34 +1529,15 @@ def _mutate_where(
     also appends the matched rows, updated, as new files (delta-spark's
     own DV-update shape).
 
-    ``where`` and ``set`` are logical names; files, stats and
-    partitionValues physical — translated at the boundaries.
-
     ``staged_by=(commit_id, now_ms)`` plans a copy-on-write DELETE over
     the snapshot ``state=(adds, meta, protocol, version)`` without
     committing it and returns ``(remove bodies, survivor adds)``: the
     delete side of a replaceWhere overwrite, which lands in the write's
     own commit.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from pipeline_spark.functions.localframe import local_frame
-    from pipeline_spark.functions.sqltext import qi
     from pipeline_spark.sinks import rowlevel
-    from pipeline_spark.sources.delta_native import (
-        _column_mapping,
-        _stats_may_match,
-        partition_literal_sql,
-        read_files_with_dv,
-        stats_to_logical,
-        to_logical_df,
-        to_physical_df,
-    )
 
-    mor = bool(p.get("deletionVectors")) or str(p.get("method", "")).lower() in (
-        "mor", "dv", "deletion-vectors",
-    )
+    mor = _mor(p)
     op = "update" if set_exprs else "delete"
     table = p.get("path") or p.get("table")
     if not table:
@@ -1374,160 +1546,34 @@ def _mutate_where(
     if state is None:
         state = replay_state(table)[:4]
         _refuse_append_only(state[1], op)
-    prev_adds, meta, proto, prev_version = state
-    cm = _column_mapping(meta)
-    log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
-    part_cols = list(meta.get("partitionColumns") or [])
-    part_set = set(part_cols)
-    phys_part = {cm["phys_of"].get(c, c) for c in part_cols} if cm else part_set
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    read_fields = cm["phys_schema"].fields if cm else full.fields
-    fschema = StructType([f for f in read_fields if f.name not in phys_part])
-    log_fschema = [f for f in full.fields if f.name not in part_cols]
-    types = {f.name: f.dataType for f in full.fields}
-    # row tracking (PROTOCOL.md): a staged row (a rewrite, or a DV
-    # update's re-appended row) PRESERVES its identity by materializing
-    # it into the table's configured columns
-    conf = meta.get("configuration") or {}
-    rt_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
-    rt_cv = conf.get("delta.rowTracking.materializedRowCommitVersionColumnName")
-    rowtrack = (
-        "rowTracking" in ((proto or {}).get("writerFeatures") or [])
-        and rt_id and rt_cv
+    rl = _Rowlevel(
+        spark, table, state, op,
+        cdf=_cdf_enabled(state[1]) and staged_by is None, staged_by=staged_by,
     )
-    cdf = _cdf_enabled(meta) and staged_by is None
-    commit_id, now_ms = staged_by or (
-        uuid.uuid4().hex, int(time.time() * 1000)
-    )
-    data_dir = f"data-{'rw' if staged_by else op}-{commit_id}"
-    cdc_actions: list[dict] = []
-
-    def path_of(a: dict) -> str:
-        return os.path.abspath(
-            os.path.join(table, urllib.parse.unquote(a["path"]))
-        )
-
-    def may_match(a: dict) -> bool:
-        # partition values are exact (footer stats never carry them);
-        # stats keys are physical, `where` is logical
-        if _pv_disproves(a, where, part_set, cm["phys_of"] if cm else {}):
-            return False
-        if cm:
-            a = dict(a)
-            stats_to_logical([a], cm)
-        return _stats_may_match(a, where, None)
-
-    def groups(files: list[dict]) -> list[list[dict]]:
-        by_pv: dict[tuple, list[dict]] = {}
-        for a in files:
-            key = tuple(sorted((a.get("partitionValues") or {}).items()))
-            by_pv.setdefault(key, []).append(a)
-        return list(by_pv.values())
-
-    def read(files: list[dict], lineage: bool):
-        lineage = bool(lineage and rowtrack)
-        rt_cols = [rt_id, rt_cv] if lineage else []
-        sch = StructType(
-            list(fschema.fields)
-            + [StructField(c, LongType(), True) for c in rt_cols]
-        )
-        parts = []
-        for gfiles in groups(files):
-            # DV-aware: rows a file's deletion vector already removed
-            # neither match nor come back in a rewrite
-            df = read_files_with_dv(spark, table, sch, gfiles, with_meta=True)
-            df = to_logical_df(
-                df, cm, log_fschema, keep=(*rt_cols, "__dv_fp", "__dv_ri")
-            )
-            cols = [qi(f.name) for f in log_fschema]
-            if lineage:
-                rid = local_frame(
-                    spark,
-                    [
-                        (path_of(a), int(a.get("baseRowId") or 0),
-                         int(a.get("defaultRowCommitVersion") or 0))
-                        for a in gfiles
-                    ],
-                    "__rt_fp string, __rt_base long, __rt_dcv long",
-                )
-                df = df.join(
-                    F.broadcast(rid), df["__dv_fp"] == rid["__rt_fp"], "left"
-                )
-                cols += [
-                    f"coalesce({qi(rt_id)}, (__rt_base + __dv_ri)) AS {qi(rt_id)}",
-                    f"coalesce({qi(rt_cv)}, __rt_dcv) AS {qi(rt_cv)}",
-                ]
-            pv = gfiles[0].get("partitionValues") or {}
-            parts.append(df.selectExpr(
-                *cols, "__dv_fp AS __fp__", "__dv_ri AS __pos__",
-                *partition_literal_sql(pv.items(), types, log_of),
-            ))
-        out = parts[0]
-        for x in parts[1:]:
-            out = out.unionByName(x)
-        return out
-
-    def stage(i: int, files: list[dict], df) -> list[tuple]:
-        return _write_files(
-            os.path.join(table, data_dir, f"grp-{i:05d}"),
-            to_physical_df(df, cm), files[0].get("partitionValues") or {},
-        )
-
-    def changes(i: int, files: list[dict], pre, post) -> None:
-        base = [qi(f.name) for f in log_fschema]
-        if post is None:
-            rows = pre.selectExpr(*base, "'delete' AS _change_type")
-        else:
-            rows = pre.selectExpr(
-                *base, "'update_preimage' AS _change_type"
-            ).unionByName(post.selectExpr(
-                *base, "'update_postimage' AS _change_type"
-            ))
-        cdc_actions.extend(_stage_cdc(
-            table, commit_id, i, to_physical_df(rows, cm),
-            files[0].get("partitionValues") or {},
-        ))
 
     def publish(actions: list[dict], params: dict) -> None:
-        actions.extend(cdc_actions)
-        actions.append({"commitInfo": {
-            "timestamp": now_ms, "operation": op.upper(),
-            "operationParameters": {"predicate": json.dumps(where), **params},
-        }})
-        commit(
-            table, state, actions, reads=where,
+        rl.publish(
+            actions, {"predicate": json.dumps(where), **params}, reads=where,
             checkpoint_interval=p.get("checkpointInterval"),
         )
 
-    def removed(a: dict) -> dict:
-        return {"remove": _removal(a, now_ms)}
-
     def commit_rewrite(plan) -> dict:
-        publish(
-            [removed(a) for a in plan.files]
-            + [{"add": a} for a in _adds(spark, table, plan.staged, now_ms)],
-            {},
-        )
+        publish(rl.removes(plan.files) + rl.adds(plan.staged), {})
         return {f"{op}d_rows": plan.rows, "rewritten_files": len(plan.files)}
 
-    def commit_dvs(plan) -> dict:
-        actions, n, n_dvs = _dv_actions(
-            table, plan.files, plan.positions, proto or {}, cm, now_ms
-        )
+    def commit_dvs(plan) -> dict | None:
+        actions, n, n_dvs = rl.dvs(plan)
         if not n_dvs:
             # the stats over-admitted and nothing matched: drop the
             # staged update and change files, commit nothing
             for fp, _pv in plan.staged:
                 _remove_quiet(fp)
-            for act in cdc_actions:
+            for act in rl.cdc:
                 _remove_quiet(os.path.join(
                     table, urllib.parse.unquote(act["cdc"]["path"])
                 ))
             return None
-        actions += [
-            {"add": a} for a in _adds(spark, table, plan.staged, now_ms)
-        ]
-        publish(actions, {"method": "merge-on-read"})
+        publish(actions + rl.adds(plan.staged), {"method": "merge-on-read"})
         result = {f"{op}d_rows": n, "dv_files": n_dvs}
         if set_exprs:
             result["new_files"] = len(plan.staged)
@@ -1541,22 +1587,15 @@ def _mutate_where(
             if f.rows == 0:
                 _remove_quiet(f.path)
             else:
-                adds.append(lakefiles.to_delta_add(f, table, now_ms))
-        return [removed(a)["remove"] for a in plan.files], adds
+                adds.append(lakefiles.to_delta_add(f, table, rl.now_ms))
+        return [r["remove"] for r in rl.removes(plan.files)], adds
 
-    t = rowlevel.Table(
-        fmt="delta", files=prev_adds, columns=[f.name for f in log_fschema],
-        may_match=may_match, path_of=path_of, read=read, stage=stage,
-        groups=groups, part_cols=part_cols, types=types,
-        lineage=(rt_id, rt_cv, (prev_version or 0) + 1) if rowtrack else None,
-        changes=changes if cdf else None,
-    )
     if staged_by:
         return rowlevel.mutate(
-            t, where, None, mor=False, commit=stage_rewrite,
+            rl.t, where, None, mor=False, commit=stage_rewrite,
         ) or ([], [])
     out = rowlevel.mutate(
-        t, where, set_exprs, mor=mor,
+        rl.t, where, set_exprs, mor=mor,
         commit=commit_dvs if mor else commit_rewrite,
     )
     if out is None:
@@ -1603,8 +1642,43 @@ def _remove_quiet(path: str) -> None:
         pass
 
 
+def _with_features(
+    proto: dict, reader: set[str] = frozenset(), writer: set[str] = frozenset(),
+) -> dict | None:
+    """``proto`` with the table features ``reader`` (reader and writer
+    features) and ``writer`` (writer-only) added, or None when it already
+    has them (PROTOCOL.md Table Features).  A legacy protocol asking only
+    for column mapping takes the legacy reader 2 / writer 5; any other
+    feature moves it to table features, listing column mapping when its
+    legacy versions carried it.  A protocol already on table features
+    keeps every feature it lists."""
+    r = int(proto.get("minReaderVersion", 1))
+    w = int(proto.get("minWriterVersion", 2))
+    if w < 7 and set(reader) | set(writer) <= {"columnMapping"}:
+        if r >= 2 and w >= 5:
+            return None
+        return {"minReaderVersion": max(r, 2), "minWriterVersion": max(w, 5)}
+    # legacy reader 2 and writer 5-6 carry column mapping
+    old_rf = set(proto.get("readerFeatures") or [])
+    old_wf = set(proto.get("writerFeatures") or [])
+    rf = old_rf | set(reader) | ({"columnMapping"} if r == 2 else set())
+    wf = old_wf | set(writer) | ({"columnMapping"} if 5 <= w < 7 else set())
+    on_r3 = bool(reader) or r >= 3
+    out: dict[str, Any] = {
+        "minReaderVersion": 3 if on_r3 else r, "minWriterVersion": 7,
+    }
+    if on_r3:
+        out["readerFeatures"] = sorted(rf)
+        wf |= rf
+    out["writerFeatures"] = sorted(wf)
+    if (w >= 7 and out["minReaderVersion"] == r and wf == old_wf
+            and (not on_r3 or rf == old_rf)):
+        return None
+    return out
+
+
 def _dv_actions(
-    table: str, files: list[dict], positions, proto: dict, cm, now_ms: int,
+    table: str, files: list[dict], positions, proto: dict, now_ms: int,
 ) -> tuple[list[dict], int, int]:
     """Deletion vectors for the matched ``positions`` (``__fp__``,
     ``__pos__``) of ``files``: one DV per touched file, merged with its
@@ -1687,21 +1761,9 @@ def _dv_actions(
         ).collect()  # one row PER TOUCHED FILE — metadata scale
     if not built:
         return [], 0, 0
-    actions = []
-    # DV tables need the reader/writer table feature; a column-mapped
-    # table upgrading to features-protocol must also LIST columnMapping
-    # or feature-aware readers would refuse it
-    need = {"deletionVectors"} | ({"columnMapping"} if cm else set())
-    rfeats = set(proto.get("readerFeatures") or [])
-    if not need <= rfeats:
-        rfeats |= need
-        actions.append({"protocol": {
-            "minReaderVersion": 3, "minWriterVersion": 7,
-            "readerFeatures": sorted(rfeats),
-            "writerFeatures": sorted(
-                set(proto.get("writerFeatures") or []) | rfeats
-            ),
-        }})
+    # DV tables need the reader/writer table feature
+    upgrade = _with_features(proto, reader={"deletionVectors"})
+    actions = [{"protocol": upgrade}] if upgrade else []
     n = 0
     for row in built:
         # __fp__ derives from _metadata.file_path, which URI-encodes
@@ -1727,126 +1789,31 @@ def update_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
     return _mutate_where(spark, p, rowlevel.set_of("delta", p))
 
 
-def _dv_merge(
-    spark, p, table, keys, touched, upserts, candidates, snapshot, cm,
-    phys_part_cols, fschema, log_fschema, txn=None, read_where=None,
-    cdf=False,
-) -> dict[str, int]:
-    """The merge-on-read half of MERGE: matched keys tombstone into
-    roaring-bitmap deletion vectors (:func:`_dv_actions`), the re-added
-    paths carry the descriptors, and the upsert batch appends — all in
-    ONE commit.  The
-    delete side moves ZERO data bytes: a million-key CDC batch writes
-    KB-scale bitmaps plus its own rows."""
-    from pyspark.sql import functions as F
-
-    from pipeline_spark.sources.delta_native import (
-        read_files_with_dv,
-        to_logical_df,
-        to_physical_df,
-    )
-
-    commit_id = uuid.uuid4().hex
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = []
-    deleted = n_dvs = 0
-    cdc_actions: list[dict] = []
-    base_cols = [f.name for f in log_fschema]
-    if candidates:
-        probe = read_files_with_dv(
-            spark, table, fschema, candidates, with_meta=True
-        )
-        probe = to_logical_df(
-            probe, cm, log_fschema, keep=("__dv_fp", "__dv_ri")
-        )
-        matched = probe.join(touched, on=list(keys), how="left_semi")
-        if cdf:
-            # unpartitioned CDF table (r8): the tombstoned rows surface
-            # as delete change rows, the upsert batch as inserts — same
-            # delete+insert pairing the COW merge stages
-            pre = matched.select(*base_cols).withColumn(
-                "_change_type", F.lit("delete")
-            )
-            post = upserts.select(*base_cols).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            cdc_actions = _stage_cdc(
-                table, commit_id, 0,
-                to_physical_df(pre.unionByName(post), cm), {},
-            )
-        actions, deleted, n_dvs = _dv_actions(
-            table, candidates,
-            matched.selectExpr("__dv_fp AS __fp__", "__dv_ri AS __pos__"),
-            snapshot[2] or {}, cm, now_ms,
-        )
-    elif cdf:
-        cdc_actions = _stage_cdc(
-            table, commit_id, 0,
-            to_physical_df(
-                upserts.select(*base_cols).withColumn(
-                    "_change_type", F.lit("insert")
-                ), cm,
-            ), {},
-        )
-
-    # upsert batch: normal partitioned data files
-    up_dir = os.path.join(table, f"data-merge-{commit_id}", "upserts")
-    w = to_physical_df(upserts, cm).write
-    if phys_part_cols:
-        w = w.partitionBy(*phys_part_cols)
-    w.parquet(up_dir)
-    adds = _adds(spark, table, _staged(up_dir), now_ms)
-    actions.extend({"add": a} for a in adds)
-    actions.extend(cdc_actions)
-    actions.append({"commitInfo": {
-        "timestamp": now_ms,
-        "operation": "MERGE",
-        "operationParameters": {
-            "predicate": json.dumps(list(keys)),
-            "method": "merge-on-read",
-        },
-    }})
-    version, _retries = commit(
-        table, snapshot, actions, reads=read_where, txn=txn,
-        checkpoint_interval=p.get("checkpointInterval"),
-    )
-    if version is None:
-        return {"merged_rows": 0, "dv_files": 0, "upsert_files": 0,
-                "replayed": True}
-    return {"merged_rows": deleted, "dv_files": n_dvs,
-            "upsert_files": len(adds)}
-
-
 def merge_delta_native(
     spark, df, p: dict[str, Any], txn: tuple | None = None
 ) -> dict[str, int]:
-    """Copy-on-write MERGE (UnifiedMutation semantics — the Delta twin of
-    the iceberg sink's ``mode: merge``, but FILE-SCOPED): keyed by
-    ``primaryKeys``, rows with ``__op__ = DELETE`` remove their keys,
-    everything else upserts whole rows.  Unlike the Iceberg COW merge
-    (which rewrites the table), only files whose ``add.stats`` key
-    bounds admit an incoming key — and whose data actually contains a
-    match — rewrite; at 100 TB a million-row CDC batch touches the few
-    files its keys live in, not the table.  One atomic commit: removes
-    for matched files, adds for survivor rewrites, adds for the upsert
-    batch.  DV-carrying files re-read with vectors applied.  CDF
-    tables get change rows — replaced keys surface as delete+insert
-    (whole-row upserts carry no matched/not-matched distinction, so no
-    update_preimage pair; a state-reconstructing consumer sees
-    identical results).  Reference: UnifiedMutation §2.10; the iceberg
-    twin is sinks/iceberg_native.py mode=merge.
+    """Keyed MERGE (UnifiedMutation semantics — the Delta twin of the
+    iceberg sink's ``mode: merge``), planned by sinks/rowlevel.py like
+    DELETE: keyed by ``primaryKeys``, rows with ``__op__ = DELETE``
+    remove their keys, everything else upserts whole rows.  Only files
+    whose ``add.stats`` key bounds admit an incoming key — and whose data
+    actually contains a match — take part; at 100 TB a million-row CDC
+    batch touches the few files its keys live in, not the table.
+
+    Copy-on-write (the default) rewrites those files without the matched
+    rows; ``method: mor`` (or ``deletionVectors: true``) tombstones the
+    matched rows in deletion vectors instead (zero data bytes move on the
+    delete side).  Either way the upsert batch appends as normal
+    partitioned data files in the same, one atomic commit.  DV-carrying
+    files re-read with vectors applied.  CDF tables get change rows —
+    replaced keys surface as delete+insert (whole-row upserts carry no
+    matched/not-matched distinction, so no update_preimage pair; a
+    state-reconstructing consumer sees identical results).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    from pipeline_spark.sources.delta_native import (
-        _column_mapping,
-        _stats_may_match,
-        read_files_with_dv,
-        stats_to_logical,
-        to_logical_df,
-        to_physical_df,
-    )
+    from pipeline_spark.sinks import rowlevel
+    from pipeline_spark.sources.delta_native import to_physical_df
 
     table = p.get("path") or p.get("table")
     if not table:
@@ -1855,13 +1822,7 @@ def merge_delta_native(
     if not keys:
         raise ValueError("delta merge needs primaryKeys")
     op_field = p.get("mutationOpField", "__op__")
-    if op_field in df.columns:
-        upserts = df.filter(
-            F.upper(F.coalesce(F.col(op_field), F.lit("UPSERT"))) != "DELETE"
-        ).drop(op_field)
-    else:
-        upserts = df
-    touched = df.select(*keys).distinct()
+    upserts, _touched = rowlevel.split(df, keys, op_field)
 
     log_dir = os.path.join(table, "_delta_log")
     if not (os.path.isdir(log_dir) and latest_version(log_dir) is not None):
@@ -1870,8 +1831,8 @@ def merge_delta_native(
         return {"merged_rows": -1, "rewritten_files": 0}
 
     snapshot = replay_state(table)
-    prev_adds, meta, _proto, _v, _txns = snapshot
-    if txn is not None and int(txn[1]) <= _txns.get(str(txn[0]), -1):
+    meta, txns = snapshot[1], snapshot[4]
+    if txn is not None and int(txn[1]) <= txns.get(str(txn[0]), -1):
         # replayed streaming micro-batch: this merge already committed
         return {"merged_rows": 0, "rewritten_files": 0, "replayed": True}
     _refuse_append_only(meta, "merge")
@@ -1881,71 +1842,13 @@ def merge_delta_native(
         raise ValueError(
             "delta merge: upsert schema must match the table schema"
         )
-    cm = _column_mapping(meta)
-    log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
-    part_cols = list(meta.get("partitionColumns") or [])
-    phys_part_cols = (
-        [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
-    )
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    names = [f.name for f in full.fields]
+    names = [f["name"] for f in json.loads(meta["schemaString"])["fields"]]
     bad = [k for k in keys if k not in names]
     if bad:
         raise ValueError(f"delta merge: primaryKeys {bad} not in the schema")
-    read_fields = cm["phys_schema"].fields if cm else full.fields
-    fschema = StructType(
-        [f for f in read_fields if f.name not in phys_part_cols]
-    )
-    # row tracking: survivors of touched files keep their identity
-    # MATERIALIZED through the rewrite (the upsert batch takes fresh
-    # ids from the commit backstop — merge = delete+insert identity)
-    conf_rt = meta.get("configuration") or {}
-    rt_mat_id = conf_rt.get("delta.rowTracking.materializedRowIdColumnName")
-    rt_mat_cv = conf_rt.get(
-        "delta.rowTracking.materializedRowCommitVersionColumnName"
-    )
-    rowtrack = (
-        "rowTracking" in (_proto.get("writerFeatures") or [])
-        and rt_mat_id and rt_mat_cv
-    )
-    if rowtrack:
-        from pyspark.sql.types import LongType, StructField
-
-        fschema = StructType(
-            list(fschema.fields)
-            + [StructField(c, LongType(), True)
-               for c in (rt_mat_id, rt_mat_cv)]
-        )
-    log_fschema = [f for f in full.fields if f.name not in part_cols]
-    base_cols = [f.name for f in log_fschema]
-    types = {f.name: f.dataType for f in full.fields}
+    mor = _mor(p)
     cdf = _cdf_enabled(meta)
-
-    # key-RANGE pruning off add.stats (sound: a file wholly outside the
-    # incoming batch's [min,max] on ANY key column cannot match; one
-    # tiny driver row).  Non-orderable-literal keys skip the prune.
-    brow = touched.agg(
-        *[F.min(k).alias(f"mn{i}") for i, k in enumerate(keys)],
-        *[F.max(k).alias(f"mx{i}") for i, k in enumerate(keys)],
-    ).collect()[0]
-    where = []
-    for i, k in enumerate(keys):
-        mn, mx = brow[f"mn{i}"], brow[f"mx{i}"]
-        if isinstance(mn, (int, float, str)) and not isinstance(mn, bool):
-            where.append({"key": k, "op": ">=", "value": mn})
-            where.append({"key": k, "op": "<=", "value": mx})
-    if cm:
-        check_adds = [dict(a) for a in prev_adds]
-        stats_to_logical(check_adds, cm)
-    else:
-        check_adds = prev_adds
-    candidates = [
-        a for a, ca in zip(prev_adds, check_adds)
-        if not where or _stats_may_match(ca, where, None)
-    ]
-    mor = bool(p.get("deletionVectors")) or str(
-        p.get("method", "")
-    ).lower() in ("mor", "dv", "deletion-vectors")
+    part_cols = list(meta.get("partitionColumns") or [])
     if mor:
         # merge-on-read merge: matched keys tombstone via deletion
         # vectors (ZERO data bytes move on the delete side), upserts
@@ -1962,138 +1865,51 @@ def merge_delta_native(
                 "default copy-on-write merge (it stages delete+insert "
                 "cdc rows per partition group)"
             )
-        return _dv_merge(
-            spark, p, table, keys, touched, upserts, candidates, snapshot,
-            cm, phys_part_cols, fschema, log_fschema, txn=txn,
-            read_where=where, cdf=cdf,
-        )
+    rl = _Rowlevel(spark, table, snapshot, "merge", cdf=cdf)
+    base_cols = [f.name for f in rl.log_fschema]
 
-    # exact touched-file probe (delta-spark's findTouchedFiles): one
-    # column-pruned scan of the candidates' key columns, semi-joined to
-    # the incoming keys — only files that actually CONTAIN a match
-    # rewrite.  Keys that are partition columns fall back to the
-    # bounds+group granularity (they're not in the data files).
-    if candidates and all(k not in part_cols for k in keys):
-        probe = read_files_with_dv(
-            spark, table, fschema, candidates, with_meta=True
-        )
-        probe = to_logical_df(probe, cm, log_fschema, keep=("__dv_fp",))
-        hit = {
-            r["__dv_fp"]
-            for r in probe.join(touched, on=list(keys), how="left_semi")
-            .select("__dv_fp").distinct().collect()
-        }
-        candidates = [
-            a for a in candidates
-            if os.path.abspath(
-                os.path.join(table, urllib.parse.unquote(a["path"]))
-            ) in hit
-        ]
-
-    groups: dict[tuple, list[dict]] = {}
-    for a in candidates:
-        key = tuple(sorted((a.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(a)
-
-    commit_id = uuid.uuid4().hex
-    data_dir = f"data-merge-{commit_id}"
-    now_ms = int(time.time() * 1000)
-    staged: list[tuple] = []
-    removes: list[dict] = []
-    cdc_actions: list[dict] = []
-    replaced = 0
-    for i, (key, files) in enumerate(sorted(groups.items())):
-        grp = read_files_with_dv(
-            spark, table, fschema, files, with_meta=bool(rowtrack)
-        )
-        rt_keep = (
-            (rt_mat_id, rt_mat_cv, "__dv_fp", "__dv_ri") if rowtrack else ()
-        )
-        grp = to_logical_df(grp, cm, log_fschema, keep=rt_keep)
-        if rowtrack:
-            grp = _keep_row_ids(spark, table, grp, files, rt_mat_id, rt_mat_cv)
-        pv = dict(key)
-        for c, v in pv.items():
-            lc = log_of.get(c, c)
-            grp = grp.withColumn(
-                lc,
-                F.lit(v).cast(types[lc]) if v is not None
-                else F.lit(None).cast(types[lc]),
-            )
-        n_match = grp.join(touched, on=list(keys), how="left_semi").count()
-        if n_match == 0:
-            continue  # bounds admitted a match the data doesn't contain
-        replaced += n_match
+    def append(rows) -> list[tuple]:
+        # the upsert batch lands as normal partitioned data files
+        up_dir = os.path.join(table, rl.data_dir, "upserts")
+        w = to_physical_df(rows, rl.cm).write
+        if rl.phys_part_cols:
+            w = w.partitionBy(*rl.phys_part_cols)
+        w.parquet(up_dir)
         if cdf:
-            pre = (
-                grp.join(touched, on=list(keys), how="left_semi")
-                .select(*base_cols)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            cdc_actions.extend(_stage_cdc(
-                table, commit_id, i, to_physical_df(pre, cm), pv,
+            # explicit insert rows: a commit carrying ANY cdc actions is
+            # read from cdc alone, so the upserts must be in it too
+            rl.cdc.extend(_stage_cdc(
+                table, rl.commit_id, 10_000, to_physical_df(rows.select(
+                    *base_cols, *part_cols,
+                    F.lit("insert").alias("_change_type"),
+                ), rl.cm), {}, rl.phys_part_cols,
             ))
-        out = grp.join(touched, on=list(keys), how="left_anti")
-        out_cols = base_cols + (
-            [rt_mat_id, rt_mat_cv] if rowtrack else []
-        )
-        staged += _write_files(
-            os.path.join(table, data_dir, f"grp-{i:05d}"),
-            to_physical_df(out.select(*out_cols), cm), pv,
-        )
-        removes += [_removal(a, now_ms) for a in files]
+        return _staged(up_dir)
 
-    # the upsert batch lands as normal partitioned data files
-    up_dir = os.path.join(table, data_dir, "upserts")
-    w = to_physical_df(upserts, cm).write
-    if phys_part_cols:
-        w = w.partitionBy(*phys_part_cols)
-    w.parquet(up_dir)
-    upsert_files = _staged(up_dir)
-    staged += upsert_files
-    if cdf:
-        # explicit insert rows: a commit carrying ANY cdc actions is
-        # read from cdc alone, so the upserts must be in it too
-        if part_cols:
-            pvs = [
-                {c: r[c] for c in part_cols}
-                for r in upserts.select(*part_cols).distinct().collect()
-            ]
+    def commit_merge(plan) -> dict:
+        upsert_files = append(plan.upserts)
+        params = {"predicate": json.dumps(keys)}
+        if mor:
+            actions, n, n_dvs = rl.dvs(plan)
+            result = {"merged_rows": n, "dv_files": n_dvs}
+            params["method"] = "merge-on-read"
         else:
-            pvs = [{}]
-        for j, pv in enumerate(pvs):
-            sel = upserts
-            for c, v in pv.items():
-                sel = sel.filter(
-                    F.col(c).isNull() if v is None else (F.col(c) == v)
-                )
-            changes = sel.select(*base_cols).withColumn(
-                "_change_type", F.lit("insert"))
-            cdc_actions.extend(_stage_cdc(
-                table, commit_id, 10_000 + j, to_physical_df(changes, cm),
-                {cm["phys_of"].get(c, c) if cm else c: (
-                    None if v is None else str(v)) for c, v in pv.items()},
-            ))
+            actions = rl.removes(plan.files)
+            result = {"merged_rows": plan.rows,
+                      "rewritten_files": len(plan.files)}
+        version = rl.publish(
+            actions + rl.adds(plan.staged + upsert_files), params,
+            reads=plan.where, txn=txn,
+            checkpoint_interval=p.get("checkpointInterval"),
+        )
+        if version is None:
+            return {**dict.fromkeys(result, 0), "upsert_files": 0,
+                    "replayed": True}
+        return {**result, "upsert_files": len(upsert_files)}
 
-    actions = (
-        [{"remove": r} for r in removes]
-        + [{"add": a} for a in _adds(spark, table, staged, now_ms)]
-        + cdc_actions
-        + [{"commitInfo": {
-            "timestamp": now_ms,
-            "operation": "MERGE",
-            "operationParameters": {"predicate": json.dumps(keys)},
-        }}]
+    return rowlevel.merge(
+        rl.t, df, keys, mor=mor, commit=commit_merge, op_field=op_field,
     )
-    version, _retries = commit(
-        table, snapshot, actions, reads=where, txn=txn,
-        checkpoint_interval=p.get("checkpointInterval"),
-    )
-    if version is None:
-        return {"merged_rows": 0, "rewritten_files": 0,
-                "upsert_files": 0, "replayed": True}
-    return {"merged_rows": replaced, "rewritten_files": len(removes),
-            "upsert_files": len(upsert_files)}
 
 
 def clone_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
@@ -2299,6 +2115,7 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     sj = json.loads(meta["schemaString"])
     actions: list[dict] = []
     result: dict[str, Any] = {}
+    new_proto = proto  # with every feature this alter needs
 
     if p.get("enableColumnMapping") and conf.get(
         "delta.columnMapping.mode"
@@ -2335,19 +2152,9 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
         sj = _annotate(sj)
         conf["delta.columnMapping.mode"] = "name"
         conf["delta.columnMapping.maxColumnId"] = str(next_id)
-        r = int(proto.get("minReaderVersion", 1))
-        w = int(proto.get("minWriterVersion", 2))
-        if r >= 3 or proto.get("readerFeatures") is not None:
-            rf = sorted(set(proto.get("readerFeatures") or []) | {"columnMapping"})
-            wf = sorted(set(proto.get("writerFeatures") or []) | {"columnMapping"})
-            actions.append({"protocol": {
-                "minReaderVersion": max(r, 3), "minWriterVersion": max(w, 7),
-                "readerFeatures": rf, "writerFeatures": wf,
-            }})
-        elif r < 2 or w < 5:
-            actions.append({"protocol": {
-                "minReaderVersion": 2, "minWriterVersion": 5,
-            }})
+        new_proto = _with_features(new_proto, reader={"columnMapping"}) or (
+            new_proto
+        )
         result["column_mapping_enabled"] = True
 
     renames = dict(p.get("renameColumn") or {})
@@ -2435,18 +2242,9 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             else:
                 new_fields_tw.append(f)
         sj["fields"] = new_fields_tw
-        r = int(proto.get("minReaderVersion", 1))
-        w = int(proto.get("minWriterVersion", 2))
-        rf = set(proto.get("readerFeatures") or [])
-        if "typeWidening" not in rf:
-            actions.append({"protocol": {
-                "minReaderVersion": max(r, 3),
-                "minWriterVersion": max(w, 7),
-                "readerFeatures": sorted(rf | {"typeWidening"}),
-                "writerFeatures": sorted(
-                    set(proto.get("writerFeatures") or []) | {"typeWidening"}
-                ),
-            }})
+        new_proto = _with_features(new_proto, reader={"typeWidening"}) or (
+            new_proto
+        )
         result["widened"] = dict(widens)
     if p.get("clusterBy") is not None:
         # ALTER TABLE ... CLUSTER BY (delta-spark): one domainMetadata
@@ -2462,16 +2260,10 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             raise ValueError(
                 f"delta alter: clusterBy columns {bad} not in the schema"
             )
-        wf = set(proto.get("writerFeatures") or [])
-        if new_cluster and "domainMetadata" not in wf:
-            actions.append({"protocol": {
-                **proto,
-                "minReaderVersion": int(proto.get("minReaderVersion", 1)),
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    wf | {"clustering", "domainMetadata"}
-                ),
-            }})
+        if new_cluster:
+            new_proto = _with_features(
+                new_proto, writer={"clustering", "domainMetadata"}
+            ) or new_proto
         actions.append({"domainMetadata": {
             "domain": "delta.clustering",
             "configuration": json.dumps(
@@ -2480,6 +2272,8 @@ def alter_delta_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             "removed": not new_cluster,
         }})
         result["cluster_by"] = new_cluster
+    if new_proto is not proto:
+        actions.append({"protocol": new_proto})
     if not actions and not renames and not drops and not result:
         if p.get("enableColumnMapping"):
             # already mapped: idempotent no-op, not an error
@@ -2516,22 +2310,29 @@ def _cdf_enabled(meta: dict) -> bool:
 
 
 def _stage_cdc(
-    table: str, commit_id: str, idx: int, changes_df, pv: dict
+    table: str, commit_id: str, idx: int, changes_df, pv: dict,
+    partition_by: list[str] | None = None,
 ) -> list[dict]:
     """Write one partition group's change rows (non-partition columns +
-    ``_change_type``) under ``_change_data/`` and return the commit's
-    ``cdc`` actions (PROTOCOL.md: Add CDC File) — ``dataChange: false``
-    so log consumers don't double-count the rows as table data."""
+    ``_change_type``; with ``partition_by``, rows of any partition, the
+    hive directories giving their values) under ``_change_data/`` and
+    return the commit's ``cdc`` actions (PROTOCOL.md: Add CDC File) —
+    ``dataChange: false`` so log consumers don't double-count the rows
+    as table data."""
     out_dir = os.path.join(
         table, "_change_data", f"{commit_id}-grp-{idx:05d}"
     )
+    w = changes_df.write
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(out_dir)
     return [
         {"cdc": {
             "path": lakefiles.delta_path(fp, table),
             "partitionValues": file_pv, "size": os.path.getsize(fp),
             "dataChange": False,
         }}
-        for fp, file_pv in _write_files(out_dir, changes_df, pv)
+        for fp, file_pv in _staged(out_dir, pv)
     ]
 
 

@@ -721,19 +721,12 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         # state overwrites the BRANCH ref only.  Branch heads are
         # short-lived WAP staging areas, not 100 TB mainlines, so the
         # read-rewrite blast radius is bounded by the workflow itself.
-        op_field = p.get("mutationOpField", "__op__")
+        from pipeline_spark.sinks import rowlevel
         from pipeline_spark.sources.iceberg_native import read_iceberg_native
 
-        if op_field in df.columns:
-            import pyspark.sql.functions as F
-
-            upserts = df.filter(
-                F.upper(F.coalesce(F.col(op_field), F.lit("UPSERT"))) != "DELETE"
-            ).drop(op_field)
-            touched = df.select(*keys).distinct()
-        else:
-            upserts = df
-            touched = df.select(*keys).distinct()
+        upserts, touched = rowlevel.split(
+            df, keys, p.get("mutationOpField", "__op__")
+        )
         if table.catalog is not None:
             # REST merge: plan the existing rows through the catalog's
             # delete-aware metadata (r5's read path), commit below via
@@ -2044,26 +2037,114 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     return _mutate_where(spark, p, None)
 
 
+class _Rowlevel:
+    """The Iceberg adapter of the row-level planner (sinks/rowlevel.py)
+    over one snapshot, shared by DELETE, UPDATE and MERGE: ``t``
+    describes the table — the snapshot's live files, a live-row reader
+    (schema-evolved, identity-fill and row-delete aware, v3 lineage
+    derived) and default-spec staging under ``data/<op>-<id>/`` — and
+    :meth:`replace` is the copy-on-write commit."""
+
+    def __init__(self, spark, p: dict[str, Any], table: "IcebergTable",
+                 op: str):
+        from pipeline_spark.sinks import rowlevel
+        from pipeline_spark.sources.iceberg_native import (
+            _apply_row_deletes,
+            _bounds_may_match,
+            _schema_fields,
+            apply_identity_fill,
+            derive_row_ids,
+            evolved_scan,
+            identity_fill_plan,
+            plan_files,
+            stamp_lineage,
+        )
+
+        legacy = parse_legacy_global_deletes(p)
+        self.table = table
+        data, deletes, meta = plan_files(table.path, meta=table.meta)
+        self.meta = meta
+        fields = _schema_fields(meta)
+        id2field = {f["id"]: f for f in fields}
+        # v3 row lineage: a rewrite PRESERVES each surviving row's
+        # _row_id by materializing it into the staged files (spec §Row
+        # Lineage)
+        v3 = int(meta.get("format-version", 2)) >= 3
+        self.cur_schema = current_schema(meta)
+        self.spec0 = default_spec(meta)
+        self.data_dir = os.path.join(
+            table.path, "data", f"{op}-{uuid.uuid4().hex}"
+        )
+
+        def read(files: list[dict], lineage: bool):
+            lineage = lineage and v3
+            # identity-fill files (delta-converted / add_files imports
+            # whose parquet never materialized the identity partition
+            # columns) read under the TABLE schema and fill from the
+            # manifest partition records, so predicates on partition
+            # columns match and a rewrite materializes the columns
+            fills, ftypes = identity_fill_plan(files, meta)
+            if any(d.get("renames") or d.get("absent") or d.get("dropped")
+                   for d in files):
+                df = evolved_scan(
+                    spark, spark.read, files, fields, with_lineage=True,
+                    keep_extra=LINEAGE_COLS if lineage else None,
+                )
+            elif fills or lineage:
+                df = _fill_schema_read(
+                    spark, meta, files, extra_row_id=lineage
+                )
+            else:
+                df = read_parquet(spark, *[d["path"] for d in files])
+            df = stamp_lineage(df)
+            if fills:
+                df = apply_identity_fill(spark, df, fills, ftypes)
+            if lineage:
+                df = derive_row_ids(spark, df, files, with_seq=True)
+            if deletes:
+                # LIVE rows only: a row a DV / position / equality
+                # delete already removed neither matches nor comes back
+                df = _apply_row_deletes(
+                    spark, df, files, deletes, meta, keep_lineage=True,
+                    legacy_global_deletes=legacy, all_data=data,
+                )
+            return df
+
+        self.deletes = deletes
+        self.t = rowlevel.Table(
+            fmt="iceberg", files=data, columns=[f["name"] for f in fields],
+            may_match=lambda d, where: _bounds_may_match(d, where, id2field),
+            path_of=lambda d: d["path"], read=read,
+            stage=lambda _i, _files, df: self.stage(df),
+            lineage=(
+                "_row_id", "_last_updated_sequence_number",
+                int(meta.get("last-sequence-number", 0)) + 1,
+            ) if v3 else None,
+        )
+
+    def stage(self, df) -> list[tuple]:
+        return _stage_default_spec_files(
+            df, self.data_dir, self.spec0, self.cur_schema,
+            sort_cols=_default_sort_cols(self.meta, self.cur_schema),
+        )
+
+    def replace(self, files: list[dict], staged: list[tuple], *,
+                operation: str, read_where: list[dict] | None) -> int:
+        """One replace snapshot: ``files`` out, ``staged`` in; the
+        removed-file count."""
+        return _commit_file_replacement(
+            self.table, self.meta, self.cur_schema, self.spec0, files,
+            staged, operation=operation, read_where=read_where,
+        )
+
+
 def _mutate_where(
     spark, p: dict[str, Any], set_exprs: dict[str, str] | None
 ) -> dict[str, int]:
-    """The Iceberg adapter of the row-level planner (sinks/rowlevel.py):
-    the snapshot's live files, a live-row reader (schema-evolved,
-    identity-fill and row-delete aware, v3 lineage derived), default-spec
-    staging, and the two commits — a file replacement, or position
-    deletes / deletion vectors."""
+    """DELETE / UPDATE through the row-level planner over the Iceberg
+    adapter (:class:`_Rowlevel`): a file replacement, or position deletes
+    / deletion vectors."""
     from pipeline_spark.sinks import rowlevel
-    from pipeline_spark.sources.iceberg_native import (
-        _apply_row_deletes,
-        _bounds_may_match,
-        _schema_fields,
-        apply_identity_fill,
-        derive_row_ids,
-        evolved_scan,
-        identity_fill_plan,
-        plan_files,
-        stamp_lineage,
-    )
 
     op = "update" if set_exprs else "delete"
     # merge-on-read is a delete's default and an update's opt-in (the
@@ -2072,62 +2153,13 @@ def _mutate_where(
     mor = (method in ("mor", "dv", "merge-on-read") if set_exprs
            else method != "cow")
     where = rowlevel.where_of("iceberg", op, p)
-    legacy = parse_legacy_global_deletes(p)
     table = IcebergTable(p, stage=True)
-    table_path = table.path
-    data, deletes, meta = plan_files(table_path, meta=table.meta)
-    fields = _schema_fields(meta)
-    id2field = {f["id"]: f for f in fields}
-    # v3 row lineage: a rewrite PRESERVES each surviving row's _row_id by
-    # materializing it into the staged files (spec §Row Lineage)
-    v3 = int(meta.get("format-version", 2)) >= 3
-
-    def read(files: list[dict], lineage: bool):
-        lineage = lineage and v3
-        # identity-fill files (delta-converted / add_files imports whose
-        # parquet never materialized the identity partition columns) read
-        # under the TABLE schema and fill from the manifest partition
-        # records, so predicates on partition columns match and a
-        # rewrite materializes the columns
-        fills, ftypes = identity_fill_plan(files, meta)
-        if any(d.get("renames") or d.get("absent") or d.get("dropped")
-               for d in files):
-            df = evolved_scan(
-                spark, spark.read, files, fields, with_lineage=True,
-                keep_extra=LINEAGE_COLS if lineage else None,
-            )
-        elif fills or lineage:
-            df = _fill_schema_read(spark, meta, files, extra_row_id=lineage)
-        else:
-            df = read_parquet(spark, *[d["path"] for d in files])
-        df = stamp_lineage(df)
-        if fills:
-            df = apply_identity_fill(spark, df, fills, ftypes)
-        if lineage:
-            df = derive_row_ids(spark, df, files, with_seq=True)
-        if deletes:
-            # LIVE rows only: a row a DV / position / equality delete
-            # already removed neither matches nor comes back
-            df = _apply_row_deletes(
-                spark, df, files, deletes, meta, keep_lineage=True,
-                legacy_global_deletes=legacy, all_data=data,
-            )
-        return df
-
-    data_dir = os.path.join(table_path, "data", f"{op}-{uuid.uuid4().hex}")
-    cur_schema = current_schema(meta)
-    spec0 = default_spec(meta)
-
-    def stage(_i: int, _files: list[dict], df) -> list[tuple]:
-        return _stage_default_spec_files(
-            df, data_dir, spec0, cur_schema,
-            sort_cols=_default_sort_cols(meta, cur_schema),
-        )
+    rl = _Rowlevel(spark, p, table, op)
 
     def commit_rewrite(plan) -> dict:
-        removed = _commit_file_replacement(
-            table, meta, cur_schema, spec0, plan.files,
-            plan.staged, operation="overwrite" if set_exprs else "delete",
+        removed = rl.replace(
+            plan.files, plan.staged,
+            operation="overwrite" if set_exprs else "delete",
             read_where=where,
         )
         return {
@@ -2153,24 +2185,15 @@ def _mutate_where(
         if not rows:
             return None
         out = _write_position_deletes(
-            p, table, meta, deletes, rows, plan.staged
+            p, table, rl.meta, rl.deletes, rows, plan.staged
         )
         if set_exprs:
             out["updated_rows"] = out.pop("deleted_rows")
             out["added_files"] = len(plan.staged)
         return out
 
-    t = rowlevel.Table(
-        fmt="iceberg", files=data, columns=[f["name"] for f in fields],
-        may_match=lambda d: _bounds_may_match(d, where, id2field),
-        path_of=lambda d: d["path"], read=read, stage=stage,
-        lineage=(
-            "_row_id", "_last_updated_sequence_number",
-            int(meta.get("last-sequence-number", 0)) + 1,
-        ) if v3 else None,
-    )
     out = rowlevel.mutate(
-        t, where, set_exprs, mor=mor,
+        rl.t, where, set_exprs, mor=mor,
         commit=commit_positions if mor else commit_rewrite,
     )
     if out is not None:
@@ -2489,20 +2512,15 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     from pyspark.sql import functions as F
 
+    from pipeline_spark.sinks import rowlevel
     from pipeline_spark.sources.iceberg_native import _iceberg_type_to_spark
 
     keys = list(p.get("primaryKeys") or p.get("keyFields") or [])
     if not keys:
         raise ValueError("iceberg upsert needs primaryKeys")
-    op_field = p.get("mutationOpField", "__op__")
-    if op_field in df.columns:
-        upserts = df.filter(
-            F.upper(F.coalesce(F.col(op_field), F.lit("UPSERT"))) != "DELETE"
-        ).drop(op_field)
-        touched = df.drop(op_field).select(*keys).distinct()
-    else:
-        upserts = df
-        touched = df.select(*keys).distinct()
+    upserts, touched = rowlevel.split(
+        df, keys, p.get("mutationOpField", "__op__")
+    )
 
     table = IcebergTable(p, must_exist=False)
     table_path, meta = table.path, table.meta
@@ -2725,31 +2743,20 @@ def _commit_file_replacement_once(
 
 def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     """FILE-SCOPED copy-on-write MERGE — the Iceberg twin of
-    ``merge_delta_native`` (sinks/delta_native.py) and how Iceberg's own
-    ``write.merge.mode=copy-on-write`` behaves.  Keyed by
-    ``primaryKeys``; rows with ``__op__ = DELETE`` remove their keys,
-    everything else upserts whole rows.
+    ``merge_delta_native`` and how Iceberg's own
+    ``write.merge.mode=copy-on-write`` behaves, planned by
+    sinks/rowlevel.py like DELETE.  Keyed by ``primaryKeys``; rows with
+    ``__op__ = DELETE`` remove their keys, everything else upserts whole
+    rows.
 
-    Unlike the r4-r7 whole-table COW (read → anti-join → overwrite the
-    table), only data files whose manifest key-range bounds admit an
-    incoming key — and whose data actually CONTAINS a match (one
-    column-pruned probe semi-join) — are rewritten.  At 100 TB a
-    million-row CDC batch touches the few files its keys live in, not
-    the table.  ONE atomic snapshot (operation=overwrite):
-
-    - data manifests with no touched file carry forward VERBATIM
-      (zero metadata rewritten for the untouched bulk of the table);
-    - manifests that lost files rewrite in place — survivors keep
-      EXISTING status with their ORIGINAL sequence numbers, removed
-      entries are marked DELETED under the new snapshot;
-    - survivor-rewrites + the upsert batch land as ADDED files under
-      the default spec (new sequence number, footer stats recorded);
-    - row-level DELETE manifests carry forward untouched: position
-      deletes naming removed files dangle harmlessly (the path no
-      longer resolves), equality deletes keep applying to old-sequence
-      files but never to the rewrites (strictly-below-sequence rule),
-      and every rewritten file MATERIALIZES its deletes during the
-      rewrite read so no deleted row can resurrect.
+    Only data files whose manifest key-range bounds admit an incoming key
+    — and whose data actually CONTAINS a match (one probe semi-join) —
+    are rewritten.  At 100 TB a million-row CDC batch touches the few
+    files its keys live in, not the table.  ONE atomic snapshot
+    (operation=overwrite, :func:`_commit_file_replacement`): untouched
+    manifests carry forward verbatim, survivor rewrites (row-level
+    deletes MATERIALIZED, v3 row ids kept) and the upsert batch (fresh
+    rows: null lineage) are staged in one write under the default spec.
 
     REST-catalog tables stage files identically and commit via one
     optimistic CommitTableRequest.  A missing table degenerates to
@@ -2757,49 +2764,25 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     UnifiedMutation §2.10 (semantics only; the mechanics are the
     Iceberg spec's row-delta COW commit).
     """
-    parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    from pipeline_spark.sources.iceberg_native import (
-        _apply_row_deletes,
-        _bounds_may_match,
-        plan_files,
-    )
+    from pipeline_spark.sinks import rowlevel
 
+    parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     keys = list(p.get("primaryKeys") or p.get("keyFields") or [])
     if not keys:
         raise ValueError("iceberg merge needs primaryKeys")
     op_field = p.get("mutationOpField", "__op__")
-    if op_field in df.columns:
-        upserts = df.filter(
-            F.upper(F.coalesce(F.col(op_field), F.lit("UPSERT"))) != "DELETE"
-        ).drop(op_field)
-        touched = df.drop(op_field).select(*keys).distinct()
-    else:
-        upserts = df
-        touched = df.select(*keys).distinct()
+    upserts, _touched = rowlevel.split(df, keys, op_field)
 
     table = IcebergTable(p, must_exist=False, stage=True)
-    table_path, prev_meta = table.path, table.meta
-    if prev_meta is None:
+    if table.meta is None:
         # no table yet: merge degenerates to create (the delta rule)
         write_iceberg_native(upserts, {**p, "mode": "create"})
         return {"merged_rows": -1, "rewritten_files": 0, "added_files": -1}
-
-    data, deletes, prev_meta = plan_files(table_path, meta=prev_meta)
-    from pipeline_spark.sources.iceberg_native import (
-        apply_identity_fill,
-        identity_fill_plan,
-        stamp_lineage,
-    )
-
-    # identity-fill files (converted / add_files imports) fill on the
-    # probe (keys may BE partition columns) and on the rewrite read
-    # (rewritten files then materialize the columns)
-    fills, ftypes = identity_fill_plan(data, prev_meta)
-    lineage = int(prev_meta.get("format-version", 2)) >= 3
-    cur_schema = current_schema(prev_meta)
-    by_name = {f["name"]: f for f in cur_schema["fields"]}
+    by_name = {f["name"] for f in current_schema(table.meta)["fields"]}
     if sorted(upserts.columns) != sorted(by_name):
         raise ValueError(
             f"iceberg merge: batch columns {sorted(upserts.columns)} != "
@@ -2808,157 +2791,33 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     bad = [k for k in keys if k not in by_name]
     if bad:
         raise ValueError(f"iceberg merge: primaryKeys {bad} not in schema")
-    keep_cols = [f["name"] for f in cur_schema["fields"]]
+    rl = _Rowlevel(spark, p, table, "merge")
+    # survivors are staged with the upserts, in one write at the commit
+    rl.t.stage = lambda _i, _files, rows: [rows]
 
-    # 1. manifest-stats key-range pruning (sound: a file wholly outside
-    # the batch's [min,max] on ANY key column cannot match; ONE tiny
-    # aggregated driver row).  Non-orderable key types skip the prune.
-    hit: list[dict] = []
-    matched_rows = 0
-    key_where: list[dict] | None = None
-    if data:
-        brow = touched.agg(
-            *[F.min(k).alias(f"mn{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"mx{i}") for i, k in enumerate(keys)],
-        ).collect()[0]
-        where = []
-        for i, k in enumerate(keys):
-            mn, mx = brow[f"mn{i}"], brow[f"mx{i}"]
-            if isinstance(mn, (int, float, str)) and not isinstance(mn, bool):
-                where.append({"key": k, "op": ">=", "value": mn})
-                where.append({"key": k, "op": "<=", "value": mx})
-        # the merge's read set for optimistic-retry disjointness: an
-        # interleaved add inside the batch's key envelope conflicts;
-        # non-orderable keys leave it None (every add conflicts)
-        key_where = where or None
-        id2field = {f["id"]: f for f in cur_schema["fields"]}
-        candidates = [
-            d for d in data
-            if not where or _bounds_may_match(d, where, id2field)
-        ]
-        # 2. exact touched-file probe (delta's findTouchedFiles): one
-        # column-pruned scan of the candidates' key columns, semi-joined
-        # to the incoming keys — only files that actually contain a
-        # match rewrite.  Collect is one row per TOUCHED file.
-        if candidates:
-            evolved = any(
-                d.get("renames") or d.get("absent") or d.get("dropped")
-                for d in candidates
-            )
-            if evolved:
-                probe = _read_evolved_group(
-                    spark, candidates, cur_schema, with_lineage=True
-                )
-            elif fills:
-                probe = _fill_schema_read(spark, prev_meta, candidates)
-            else:
-                probe = read_parquet(spark, *[d["path"] for d in candidates])
-            if fills:
-                probe = stamp_lineage(probe)
-                probe = apply_identity_fill(spark, probe, fills, ftypes)
-            if deletes:
-                # probe LIVE rows only (r9): a key whose only occurrence
-                # is an already-deleted row must not force a rewrite
-                probe = _apply_row_deletes(
-                    spark, probe, candidates, deletes, prev_meta,
-                    keep_lineage=True,
-                    legacy_global_deletes=parse_legacy_global_deletes(p),
-                    all_data=data,
-                )
-            if "__fp__" not in probe.columns:
-                probe = probe.select(
-                    "*",
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:/+", "/"
-                    ).alias("__fp__"),
-                )
-            probe = probe.select(*keys, "__fp__")
-            hits = (
-                probe.join(touched, on=list(keys), how="left_semi")
-                .groupBy("__fp__").agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            hitset: set[str] = set()
-            for r in hits:
-                hitset.add(r["__fp__"])
-                hitset.add(urllib.parse.unquote(r["__fp__"]))
-                matched_rows += int(r["n"])
-            hit = [
-                d for d in candidates
-                if d["path"] in hitset
-                or urllib.parse.unquote(d["path"]) in hitset
-            ]
-
-    # 3. build the replacement rows: survivors of touched files (with
-    # row-level deletes MATERIALIZED — a rewrite takes a new sequence
-    # number and path, so carrying its rows without applying its deletes
-    # would resurrect them) + the upsert batch, staged in one
-    # distributed write under the default spec's layout
-    if hit:
-        ev_hit = any(
-            d.get("renames") or d.get("absent") or d.get("dropped")
-            for d in hit
-        )
-        if ev_hit:
-            grp = _read_evolved_group(
-                spark, hit, cur_schema,
-                with_lineage=bool(deletes) or bool(fills) or lineage,
-                keep_extra=(LINEAGE_COLS if lineage else None),
-            )
-        elif fills or lineage:
-            grp = _fill_schema_read(
-                spark, prev_meta, hit, extra_row_id=lineage
-            )
-        else:
-            grp = read_parquet(spark, *[d["path"] for d in hit])
-        if fills or lineage:
-            from pipeline_spark.sources.iceberg_native import derive_row_ids
-
-            grp = stamp_lineage(grp)
-            if fills:
-                grp = apply_identity_fill(spark, grp, fills, ftypes)
-            if lineage:
-                # survivors keep their row ids MATERIALIZED through the
-                # rewrite; upsert rows get null (fresh rows of this
-                # snapshot — matched-key updates land as new rows per
-                # the merge's delete+insert identity)
-                grp = derive_row_ids(spark, grp, hit, with_seq=True)
-        if deletes:
-            grp = _apply_row_deletes(
-                spark, grp, hit, deletes, prev_meta,
-                legacy_global_deletes=parse_legacy_global_deletes(p),
-                all_data=data,
-            )
-        survivors = grp.join(
-            touched, on=list(keys), how="left_anti"
-        ).select(*(keep_cols + (LINEAGE_COLS if lineage else [])))
-        up_sel = upserts.select(*keep_cols)
-        if lineage:
-            for _lc in LINEAGE_COLS:
-                up_sel = up_sel.withColumn(_lc, F.lit(None).cast("bigint"))
-        new_rows = survivors.unionByName(up_sel)
-    else:
-        if upserts.isEmpty():
+    def commit_merge(plan) -> dict:
+        rows = plan.upserts.select(*rl.t.columns)
+        if plan.staged:
+            if rl.t.lineage:
+                # upsert rows are fresh rows of this snapshot
+                rows = rows.select("*", *[
+                    F.lit(None).cast("bigint").alias(c) for c in LINEAGE_COLS
+                ])
+            rows = reduce(lambda a, b: a.unionByName(b), plan.staged + [rows])
+        elif plan.upserts.isEmpty():
             return {"merged_rows": 0, "rewritten_files": 0, "added_files": 0}
-        new_rows = upserts.select(*keep_cols)
+        staged = rl.stage(rows)
+        removed = rl.replace(
+            plan.files, staged, operation="overwrite",
+            read_where=plan.where or None,
+        )
+        return {"merged_rows": plan.rows, "rewritten_files": removed,
+                "added_files": len(staged)}
 
-    spec0 = default_spec(prev_meta)
-    commit_uuid = str(uuid.uuid4())
-    data_dir = os.path.join(table_path, "data", f"merge-{commit_uuid}")
-    staged = _stage_default_spec_files(
-        new_rows, data_dir, spec0, cur_schema,
-        sort_cols=_default_sort_cols(prev_meta, cur_schema),
+    return rowlevel.merge(
+        rl.t, df, keys, mor=False, commit=commit_merge, op_field=op_field,
     )
 
-    removed = _commit_file_replacement(
-        table, prev_meta, cur_schema, spec0, hit, staged,
-        read_where=key_where,
-    )
-    return {
-        "merged_rows": matched_rows,
-        "rewritten_files": removed,
-        "added_files": len(staged),
-    }
 
 def clone_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     """Metadata-only table clone (the Delta shallow-clone twin): the

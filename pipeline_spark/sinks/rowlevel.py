@@ -1,11 +1,11 @@
-"""Row-level DELETE / UPDATE ... WHERE, planned once for both lakehouse
-formats.
+"""Row-level DELETE / UPDATE ... WHERE and keyed MERGE, planned once for
+both lakehouse formats.
 
-The Delta and Iceberg sinks share one ``where`` / ``set`` surface; this
-module is the only place that plans it.  A format adapter opens the
-table and describes it as a :class:`Table`: its live data files, the
-stats test, a live-row reader, the stage step and (Delta) change-data
-staging.  :func:`mutate` then
+The Delta and Iceberg sinks share one ``where`` / ``set`` surface and
+one keyed-merge surface; this module is the only place that plans them.
+A format adapter opens the table and describes it as a :class:`Table`:
+its live data files, the stats test, a live-row reader, the stage step
+and (Delta) change-data staging.  :func:`mutate` then
 
 1. checks ``set`` against the table's columns;
 2. keeps the files whose stats admit ``where``;
@@ -21,6 +21,13 @@ staging.  :func:`mutate` then
    rows with ``set`` applied and their lineage kept and bumped as above;
 
 and hands the :class:`Plan` to the adapter's commit.
+
+:func:`merge` is the same plan with a key match: a CDC batch splits on
+its op column into upsert rows and touched keys, the ``where`` is the
+touched keys' range, and a row matches when its key is touched (a
+semi-join; survivors are the anti-join).  The adapter's commit appends
+the upsert rows beside the deletes: a keyed merge is a delete plus an
+append.
 """
 
 from __future__ import annotations
@@ -45,7 +52,7 @@ class Table:
     fmt: str  # "delta" / "iceberg": the error-message prefix
     files: list[dict]  # live data-file entries
     columns: list[str]  # the data columns a staged file holds, in order
-    may_match: Callable[[dict], bool]  # the entry's stats admit `where`
+    may_match: Callable[[dict, list[dict]], bool]  # the stats admit `where`
     path_of: Callable[[dict], str]  # entry -> the raw path __fp__ holds
     # live rows of some entries: `columns` (partition values filled in)
     # plus __fp__/__pos__; with lineage=True also the lineage columns
@@ -65,12 +72,29 @@ class Plan:
     """What a commit gets: the entries it replaces (copy-on-write: the
     files holding a match; merge-on-read: every candidate), the matched
     row count from the probe (copy-on-write), the staged files, and the
-    matched ``(__fp__, __pos__)`` frame (merge-on-read)."""
+    matched ``(__fp__, __pos__)`` frame (merge-on-read, None when no
+    file was a candidate).  A merge's plan also carries the upsert rows
+    to append and the key-range ``where`` its commit declares as read."""
 
     files: list[dict]
     rows: int = 0
     staged: list = field(default_factory=list)
     positions: Any = None
+    upserts: Any = None
+    where: list[dict] = field(default_factory=list)
+
+
+@dataclass
+class _Match:
+    """How a plan tells matched rows: ``rows(df)`` keeps them, ``rest(df)``
+    keeps the others; a predicate also gives ``sql``, the CASE WHEN test
+    of an update, and ``probe``, the same rows as a filter the scan can
+    push down."""
+
+    rows: Callable[[Any], Any]
+    rest: Callable[[Any], Any]
+    sql: str | None = None
+    probe: Callable[[Any], Any] | None = None
 
 
 def where_of(fmt: str, op: str, p: dict) -> list[dict]:
@@ -106,26 +130,85 @@ def mutate(t: Table, where: list[dict], set_exprs: dict | None, *,
                 f"{parts} — rows would stay under their old "
                 "partitionValues; rewrite via overwrite instead"
             )
-    candidates = [f for f in t.files if t.may_match(f)]
+    candidates = [f for f in t.files if t.may_match(f, where)]
     if not candidates:
         return None
     cond = data_filter_sql(where)
     match = f"coalesce(({cond}), false)"
+    m = _Match(lambda df: df.where(match),
+               lambda df: df.where(f"NOT {match}"), match,
+               lambda df: df.where(cond))
     if not mor:
-        plan = _rewrite(t, candidates, cond, match, set_exprs)
+        plan = _rewrite(t, candidates, m, set_exprs)
         return None if plan is None else commit(plan)
     cached: list = []
     try:
-        return commit(_positions(t, candidates, match, set_exprs, cached))
+        return commit(_positions(t, candidates, m, set_exprs, cached))
     finally:
         for df in cached:
             df.unpersist()
 
 
-def _rewrite(t, candidates, cond, match, set_exprs) -> Plan | None:
+def split(df, keys: list[str], op_field: str = "__op__"):
+    """``(upsert rows, touched keys)`` of a CDC batch: a row whose
+    ``op_field`` is DELETE only removes its key, every other row (a
+    missing or NULL op included) replaces its key's row."""
+    from pyspark.sql import functions as F
+
+    touched = df.select(*keys).distinct()
+    if op_field not in df.columns:
+        return df, touched
+    upserts = df.filter(
+        F.upper(F.coalesce(F.col(op_field), F.lit("UPSERT"))) != "DELETE"
+    ).drop(op_field)
+    return upserts, touched
+
+
+def merge(t: Table, df, keys: list[str], *, mor: bool,
+          commit: Callable[[Plan], dict], op_field: str = "__op__") -> dict:
+    """Plan a keyed MERGE of the CDC batch ``df`` into ``t`` and return
+    ``commit(plan)``; the plan always reaches the commit, which appends
+    ``plan.upserts`` whether or not a live row matched.
+
+    ``where`` is the touched keys' ``[min, max]`` per orderable key
+    column, from one aggregate row (a file wholly outside it on any key
+    cannot match); a file the stats admit is probed by a semi-join
+    against the touched keys."""
+    from pyspark.sql import functions as F
+
+    upserts, touched = split(df, keys, op_field)
+    where: list[dict] = []
+    if t.files:
+        row = df.agg(
+            *[F.min(k).alias(f"mn{i}") for i, k in enumerate(keys)],
+            *[F.max(k).alias(f"mx{i}") for i, k in enumerate(keys)],
+        ).collect()[0]
+        for i, k in enumerate(keys):
+            mn, mx = row[f"mn{i}"], row[f"mx{i}"]
+            if isinstance(mn, (int, float, str)) and not isinstance(mn, bool):
+                where += [{"key": k, "op": ">=", "value": mn},
+                          {"key": k, "op": "<=", "value": mx}]
+    candidates = [f for f in t.files if not where or t.may_match(f, where)]
+    m = _Match(lambda d: d.join(touched, keys, "left_semi"),
+               lambda d: d.join(touched, keys, "left_anti"))
+    cached: list = []
+    try:
+        plan = None
+        if candidates:
+            plan = (_positions(t, candidates, m, None, cached) if mor
+                    else _rewrite(t, candidates, m, None))
+        plan = plan or Plan([])
+        plan.upserts, plan.where = upserts, where
+        return commit(plan)
+    finally:
+        for d in cached:
+            d.unpersist()
+
+
+def _rewrite(t, candidates, m: _Match, set_exprs) -> Plan | None:
     counts = (
-        t.read(candidates, False).where(cond).groupBy("__fp__").count()
-        .collect()
+        (m.probe or m.rows)(t.read(candidates, False))
+        .groupBy("__fp__").count().collect()
     )
     hits: set[str] = set()
     for r in counts:
@@ -141,25 +224,25 @@ def _rewrite(t, candidates, cond, match, set_exprs) -> Plan | None:
     for i, files in enumerate(t.groups(hit)):
         df = t.read(files, True)
         if t.changes:
-            pre = df.where(match)
+            pre = m.rows(df)
             t.changes(
                 i, files, pre,
                 pre.selectExpr(*_updated(t, set_exprs, None)) if set_exprs
                 else None,
             )
         if set_exprs:
-            out = df.selectExpr(*_updated(t, set_exprs, match))
+            out = df.selectExpr(*_updated(t, set_exprs, m.sql))
         else:
-            out = df.where(f"NOT {match}").selectExpr(*map(qi, _out_cols(t)))
+            out = m.rest(df).selectExpr(*map(qi, _out_cols(t)))
         staged += t.stage(i, files, out)
     return Plan(hit, sum(int(r[1]) for r in counts), staged)
 
 
-def _positions(t, candidates, match, set_exprs, cached) -> Plan:
+def _positions(t, candidates, m: _Match, set_exprs, cached) -> Plan:
     frames, staged = [], []
     for i, files in enumerate(t.groups(candidates)):
         # an update stages the matched rows again: with their lineage
-        matched = t.read(files, bool(set_exprs)).where(match)
+        matched = m.rows(t.read(files, bool(set_exprs)))
         if set_exprs or t.changes:
             # up to three consumers (change rows, the updated rows, the
             # positions): scan the candidates once

@@ -182,6 +182,103 @@ def test_restore_vs_append_fails(spark, tmp_path, monkeypatch):
     ]
 
 
+# ------------------------------------------------------ protocol features
+
+
+def _protocol(tbl: str) -> dict:
+    from pipeline_spark.sources.delta_native import replay_state
+
+    proto = replay_state(tbl)[2]
+    return {k: sorted(v) if isinstance(v, list) else v
+            for k, v in proto.items()}
+
+
+def test_column_mapping_keeps_row_tracking(spark, tmp_path):
+    """Enabling column mapping on a table-features protocol adds the
+    feature beside the others: row tracking still stamps appends."""
+    from pipeline_spark.sinks.delta_native import (
+        alter_delta_native,
+        write_delta_native,
+    )
+    from pipeline_spark.sources.delta_native import _log_dir
+
+    tbl = str(tmp_path / "rt")
+    write_delta_native(spark, spark.range(0, 3).coalesce(1), {
+        "path": tbl, "properties": {"delta.enableRowTracking": "true"},
+    })
+    alter_delta_native(spark, {"path": tbl, "enableColumnMapping": True})
+    assert _protocol(tbl) == {
+        "minReaderVersion": 3, "minWriterVersion": 7,
+        "readerFeatures": ["columnMapping"],
+        "writerFeatures": ["columnMapping", "domainMetadata", "rowTracking"],
+    }
+    write_delta_native(spark, spark.range(3, 5).coalesce(1),
+                       {"path": tbl, "mode": "append"})
+    with open(os.path.join(_log_dir(tbl), f"{2:020d}.json")) as fh:
+        adds = [json.loads(x)["add"] for x in fh if '"add"' in x]
+    assert [a["baseRowId"] for a in adds] == [3]
+
+
+def test_cluster_by_keeps_column_mapping(spark, tmp_path):
+    """An In-Commit Timestamp table keeps columnMapping and
+    inCommitTimestamp listed through a later clusterBy, and reads."""
+    from pipeline_spark.sinks.delta_native import (
+        alter_delta_native,
+        write_delta_native,
+    )
+    from pipeline_spark.sources.delta_native import read_delta_native
+
+    tbl = str(tmp_path / "ict")
+    write_delta_native(spark, spark.range(0, 3).coalesce(1), {
+        "path": tbl, "properties": {"delta.enableInCommitTimestamps": "true"},
+    })
+    alter_delta_native(spark, {"path": tbl, "enableColumnMapping": True,
+                               "renameColumn": {"id": "key"}})
+    alter_delta_native(spark, {"path": tbl, "clusterBy": ["key"]})
+    assert _protocol(tbl) == {
+        "minReaderVersion": 3, "minWriterVersion": 7,
+        "readerFeatures": ["columnMapping"],
+        "writerFeatures": ["clustering", "columnMapping", "domainMetadata",
+                           "inCommitTimestamp"],
+    }
+    got = sorted(r["key"] for r in read_delta_native(
+        spark, {"path": tbl}).collect())
+    assert got == [0, 1, 2]
+
+
+@pytest.mark.parametrize("proto,reader,writer,want", [
+    # legacy column mapping stays legacy
+    ({"minReaderVersion": 1, "minWriterVersion": 2}, {"columnMapping"},
+     set(), {"minReaderVersion": 2, "minWriterVersion": 5}),
+    ({"minReaderVersion": 2, "minWriterVersion": 5}, {"columnMapping"},
+     set(), None),
+    # a legacy column-mapped table moving to features lists it
+    ({"minReaderVersion": 2, "minWriterVersion": 5}, set(),
+     {"clustering", "domainMetadata"},
+     {"minReaderVersion": 2, "minWriterVersion": 7,
+      "writerFeatures": ["clustering", "columnMapping", "domainMetadata"]}),
+    ({"minReaderVersion": 2, "minWriterVersion": 5}, {"deletionVectors"},
+     set(),
+     {"minReaderVersion": 3, "minWriterVersion": 7,
+      "readerFeatures": ["columnMapping", "deletionVectors"],
+      "writerFeatures": ["columnMapping", "deletionVectors"]}),
+    # features protocols union
+    ({"minReaderVersion": 1, "minWriterVersion": 7,
+      "writerFeatures": ["inCommitTimestamp"]}, {"columnMapping"}, set(),
+     {"minReaderVersion": 3, "minWriterVersion": 7,
+      "readerFeatures": ["columnMapping"],
+      "writerFeatures": ["columnMapping", "inCommitTimestamp"]}),
+    ({"minReaderVersion": 3, "minWriterVersion": 7,
+      "readerFeatures": ["deletionVectors"],
+      "writerFeatures": ["deletionVectors"]}, {"deletionVectors"}, set(),
+     None),
+])
+def test_with_features(proto, reader, writer, want):
+    from pipeline_spark.sinks.delta_native import _with_features
+
+    assert _with_features(proto, reader=reader, writer=writer) == want
+
+
 # ---------------------------------------------------------------- goldens
 
 _TIMES = {

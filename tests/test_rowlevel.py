@@ -3,21 +3,26 @@ and counts on both formats and both methods: one logical table written
 as a column-mapped, partitioned Delta table and as a schema-evolved
 Iceberg table, each with a row already removed by a prior merge-on-read
 delete, then the same DELETE and UPDATE through copy-on-write and
-merge-on-read."""
+merge-on-read, and the same keyed MERGE.  An AST scan keeps merge
+planning in the planner."""
 
+import ast
 import json
 import os
+import pathlib
 
 import pytest
 
 from pipeline_spark.sinks.delta_native import (
     delete_delta_native,
+    merge_delta_native,
     update_delta_native,
     write_delta_native,
 )
 from pipeline_spark.sinks.iceberg_native import (
     alter_iceberg_native,
     delete_iceberg_native,
+    merge_iceberg_native,
     update_iceberg_native,
     write_iceberg_native,
 )
@@ -209,3 +214,165 @@ def test_delta_update_keeps_row_ids(spark, tmp_path, method):
     )
     assert got == [(0, 0, 0, 0), (1, 1, 1, 0), (2, 102, 2, 1),
                    (3, 3, 3, 0), (4, 4, 4, 0)]
+
+
+# ------------------------------------------------------------------ merge
+
+# 0 and 1 are live, 6 was deleted before (its key matches no live row),
+# 100 is new; 1 is deleted, the others upsert
+MERGE = [(0, "a", 999, "UPSERT"), (1, None, None, "DELETE"),
+         (6, "a", 60, "UPSERT"), (100, "b", 5, "UPSERT")]
+
+
+@pytest.mark.parametrize("fmt,method", [
+    ("delta", "cow"), ("delta", "mor"), ("iceberg", "cow"),
+])
+def test_same_merge_on_both_formats(spark, tmp_path, fmt, method):
+    path = str(tmp_path / fmt)
+    batch = spark.createDataFrame(
+        MERGE, "id long, grp string, v long, __op__ string"
+    )
+    p = {"path": path, "primaryKeys": ["id"], "method": method}
+    if fmt == "delta":
+        read = _delta(spark, path)
+        out = merge_delta_native(spark, batch, p)
+    else:
+        read = _iceberg(spark, path)
+        out = merge_iceberg_native(spark, batch, p)
+    assert out["merged_rows"] == 2
+    alive = {r for r in ROWS if r[0] not in (0, 1, 6, 13)}
+    want = alive | {(0, "a", 999), (6, "a", 60), (100, "b", 5)}
+    assert set(_rows(read)) == want
+
+
+def test_delta_merge_on_a_partition_key_rewrites_only_hit_files(
+    spark, tmp_path,
+):
+    """Keys that include the partition column are probed by rows like
+    any other key: group b's two files both admit id 5 by their stats,
+    and only the one holding it rewrites."""
+    path = str(tmp_path / "t")
+    for ids, grp in (([1, 5, 9], "b"), ([3, 7, 11], "b"), ([2, 6], "a")):
+        write_delta_native(spark, spark.createDataFrame(
+            [(i, grp, i * 10) for i in ids], "id long, grp string, v long",
+        ).coalesce(1), {"path": path, "mode": "append",
+                        "partitionBy": ["grp"]})
+    out = merge_delta_native(spark, spark.createDataFrame(
+        [(5, "b", 7, "UPSERT")], "id long, grp string, v long, __op__ string",
+    ), {"path": path, "primaryKeys": ["grp", "id"]})
+    assert out == {"merged_rows": 1, "rewritten_files": 1, "upsert_files": 1}
+    got = sorted(tuple(r) for r in read_delta_native(spark, {"path": path})
+                 .select("id", "grp", "v").collect())
+    assert got == [(1, "b", 10), (2, "a", 20), (3, "b", 30), (5, "b", 7),
+                   (6, "a", 60), (7, "b", 70), (9, "b", 90), (11, "b", 110)]
+
+
+def _jobs(spark, name, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_merge_job_counts(spark, tmp_path):
+    """A 4k-row CDC batch (10% DELETE) merged into a 20k-row table,
+    unpartitioned and in 3 partition groups: Spark jobs in the merge's
+    job group.  The Delta copy-on-write merge took 10 and 20 jobs when
+    it counted each partition group's matches separately; one probe
+    collect now counts them all."""
+    from pyspark.sql import functions as F
+
+    def base():
+        return spark.range(20000).select(
+            "id", (F.col("id") % 3).cast("int").alias("g"),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+        )
+
+    def batch():
+        return spark.range(18000, 22000).select(
+            "id", (F.col("id") % 3).cast("int").alias("g"),
+            F.lit("new").alias("v"),
+            F.when(F.col("id") % 10 == 0, "DELETE").otherwise("UPSERT")
+            .alias("__op__"),
+        ).coalesce(1)
+
+    got = {}
+    for part in (False, True):
+        kw = {"partitionBy": ["g"]} if part else {}
+        for method in ("cow", "mor"):
+            tbl = str(tmp_path / f"delta_{part}_{method}")
+            write_delta_native(spark, base(), {"path": tbl, **kw})
+            got["delta", method, part] = _jobs(
+                spark, f"merge-delta-{method}-{part}",
+                lambda: merge_delta_native(spark, batch(), {
+                    "path": tbl, "primaryKeys": ["id"], "method": method,
+                }),
+            )
+        tbl = str(tmp_path / f"iceberg_{part}")
+        write_iceberg_native(base(), {"path": tbl, "mode": "create", **kw})
+        got["iceberg", "cow", part] = _jobs(
+            spark, f"merge-iceberg-{part}",
+            lambda: merge_iceberg_native(
+                spark, batch(), {"path": tbl, "primaryKeys": ["id"]}),
+        )
+    assert got["delta", "cow", False] == 7
+    assert got["delta", "cow", True] == 11
+    for part in (False, True):
+        assert got["delta", "mor", part] <= 4
+        assert got["iceberg", "cow", part] <= 6
+
+
+# ------------------------------------------------------------ AST guard
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "pipeline_spark"
+
+
+def _functions(rel: str) -> dict[str, ast.FunctionDef]:
+    tree = ast.parse((PKG / rel).read_text())
+    return {
+        n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
+    }
+
+
+def _semi_anti(node: ast.AST) -> list[int]:
+    """Lines naming a left-semi or left-anti join under ``node``."""
+    return [
+        n.lineno for n in ast.walk(node)
+        if isinstance(n, ast.Constant)
+        and n.value in ("left_semi", "left_anti", "leftsemi", "leftanti")
+    ]
+
+
+def _calls(fn: ast.FunctionDef, module: str, name: str) -> bool:
+    return any(
+        isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == name and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == module
+        for n in ast.walk(fn)
+    )
+
+
+def test_merge_is_planned_in_rowlevel():
+    defined = set()
+    for path in PKG.rglob("*.py"):
+        defined |= set(_functions(path.relative_to(PKG).as_posix()))
+    assert "_dv_merge" not in defined
+    delta = _functions("sinks/delta_native.py")
+    iceberg = _functions("sinks/iceberg_native.py")
+    for fn in (delta["merge_delta_native"], iceberg["merge_iceberg_native"]):
+        assert _calls(fn, "rowlevel", "merge"), fn.name
+    tree = ast.parse((PKG / "sinks/delta_native.py").read_text())
+    assert _semi_anti(tree) == []
+    assert _semi_anti(iceberg["merge_iceberg_native"]) == []
+
+
+def test_the_merge_scan_sees_the_planner():
+    # a scan that finds nothing proves nothing
+    tree = ast.parse((PKG / "sinks/rowlevel.py").read_text())
+    assert len(_semi_anti(tree)) == 2
+    delta = _functions("sinks/delta_native.py")
+    assert _calls(delta["_mutate_where"], "rowlevel", "mutate")
+    assert not _calls(delta["_mutate_where"], "rowlevel", "merge")
