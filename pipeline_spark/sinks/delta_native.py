@@ -312,23 +312,7 @@ def write_delta_native(
     # shuffle) and OPTIMIZE re-clusters on these columns by default
     cluster_by = [str(c) for c in (p.get("clusterBy") or [])]
     if exists:
-        # protocol-gated: only clustered tables list the domainMetadata
-        # writer feature, so plain tables skip the domain replay walk
-        dm = (
-            replay_domains(table).get("delta.clustering")
-            if "domainMetadata" in (_proto.get("writerFeatures") or [])
-            else None
-        )
-        existing_cluster: list[str] = []
-        if dm:
-            try:
-                existing_cluster = [
-                    c[-1] if isinstance(c, list) else str(c)
-                    for c in json.loads(dm.get("configuration") or "{}")
-                    .get("clusteringColumns") or []
-                ]
-            except (ValueError, TypeError):
-                existing_cluster = []
+        existing_cluster = _clustering_columns(table, _proto)
         if cluster_by and existing_cluster and cluster_by != existing_cluster:
             raise ValueError(
                 f"delta sink: clusterBy {cluster_by} differs from the "
@@ -439,7 +423,10 @@ def write_delta_native(
     # per-file column statistics (protocol `add.stats` JSON) so readers can
     # skip whole files against pushed predicates — the 100 TB scan-
     # reduction path (footer-only reads)
-    adds = _adds(df.sparkSession, table, _staged(staging), now_ms)
+    adds = [
+        lakefiles.to_delta_add(f, table, now_ms)
+        for f in lakefiles.read(_staged(staging), df.sparkSession)
+    ]
 
     actions: list[dict] = []
     ict_on_create = (
@@ -638,156 +625,79 @@ def _replace_where_rewrites(
 
 
 def compact_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
-    """OPTIMIZE-style bin-packing compaction (protocol-native).
+    """OPTIMIZE: bin-packing compaction, or ``zOrderBy`` clustering,
+    planned by :func:`sinks.rowlevel.compact` over the Delta adapter.
 
     Streaming ingest leaves a long tail of small files; at scale the
-    scheduler cost and open-per-file overhead dominate the scan.  This
-    groups live files under ``targetFileBytes`` by partition value,
-    bin-packs each group to ~target, rewrites every bin as one file
-    (distributed — each bin is a plain parquet read+write), and commits
-    ONE version of paired remove+add actions with ``dataChange: false``,
-    the protocol's marker that the table's CONTENT is unchanged (readers
-    streaming the log as a CDC feed skip it).  Rewritten files carry
-    fresh add.stats, so data skipping keeps working after compaction.
+    scheduler cost and open-per-file overhead dominate the scan.  Files
+    under ``targetFileBytes`` bin-pack per partition value into one file
+    per bin (at least ``minFilesPerGroup`` files, default 2).  ZORDER BY
+    rewrites every live file of a partition clustered along the Morton
+    curve of its columns, so min/max bounds become tight on all of them;
+    a clustered table re-clusters on its own ``delta.clustering``
+    columns by default.  The rewrite reads live rows only (deletion
+    vectors are materialized) and keeps each row's row-tracking identity
+    materialized.  ONE version of paired remove+add actions with
+    ``dataChange: false``, the protocol's marker that the table's
+    CONTENT is unchanged; rewritten files carry fresh stats.  A lost
+    race rebases unless a concurrent commit removed a compacted file;
+    then the compaction re-plans.
 
     Returns {"compacted_files": n_removed, "new_files": n_added}.
     """
-    from pyspark.sql.types import StructType
+    from pipeline_spark.sinks import rowlevel
 
     table = p.get("path") or p.get("table")
     if not table:
         raise ValueError("delta compact: 'path' is required")
     target = int(p.get("targetFileBytes", 128 * 1024 * 1024))
-    min_group = max(2, int(p.get("minFilesPerGroup", 2)))
-    from pipeline_spark.sources.delta_native import _column_mapping
 
-    snapshot = replay_state(table)
-    prev_adds, meta, _proto, _v, _txns = snapshot
-    cm = _column_mapping(meta)
-    part_cols = list(meta.get("partitionColumns") or [])
-    if cm:
-        # compaction is physical-to-physical: data files read AND rewrite
-        # under physical names, so the logical mapping never enters
-        part_cols = [cm["phys_of"].get(c, c) for c in part_cols]
-
-    if not p.get("zOrderBy"):
-        # clustered table (r7): OPTIMIZE re-clusters on the table's own
-        # delta.clustering columns by default, delta-spark's contract
-        # (protocol-gated so plain tables skip the domain replay walk)
-        dm = (
-            replay_domains(table).get("delta.clustering")
-            if "domainMetadata" in (_proto.get("writerFeatures") or [])
-            else None
+    def once() -> dict[str, int]:
+        snapshot = replay_state(table)
+        zorder = [str(c) for c in (p.get("zOrderBy") or [])] or (
+            _clustering_columns(table, snapshot[2])
         )
-        if dm:
-            try:
-                cluster_cols = [
-                    c[-1] if isinstance(c, list) else str(c)
-                    for c in json.loads(dm.get("configuration") or "{}")
-                    .get("clusteringColumns") or []
-                ]
-            except (ValueError, TypeError):
-                cluster_cols = []
-            if cluster_cols:
-                p = {**p, "zOrderBy": cluster_cols}
-    if p.get("zOrderBy"):
-        return _zorder_compact(spark, table, p, target, snapshot, cm, part_cols)
+        rl = _Rowlevel(spark, table, snapshot, "optimize", cdf=False)
+        params = {"targetFileBytes": str(target)}
+        if zorder:
+            params["zOrderBy"] = json.dumps(zorder)
 
-    groups: dict[tuple, list[dict]] = {}
-    for a in prev_adds:
-        if int(a.get("size", 0)) < target:
-            key = tuple(sorted((a.get("partitionValues") or {}).items()))
-            groups.setdefault(key, []).append(a)
-    bins: list[tuple[tuple, list[dict]]] = []
-    for key, files in groups.items():
-        files.sort(key=lambda a: int(a.get("size", 0)))
-        cur: list[dict] = []
-        size = 0
-        for a in files:
-            cur.append(a)
-            size += int(a.get("size", 0))
-            if size >= target:
-                if len(cur) >= min_group:
-                    bins.append((key, cur))
-                cur, size = [], 0
-        if len(cur) >= min_group:
-            bins.append((key, cur))
-    if not bins:
-        return {"compacted_files": 0, "new_files": 0}
+        def commit_optimize(plan) -> dict[str, int]:
+            adds = rl.adds(plan.staged, data_change=False)
+            # layout-only rewrite: blind appends never conflict
+            # (delta-spark's dataChange=false rule), concurrent rewrites
+            # of the same file do
+            rl.publish(
+                rl.removes(plan.files, data_change=False) + adds, params,
+                reads="files", checkpoint_interval=p.get("checkpointInterval"),
+            )
+            return {"compacted_files": len(plan.files), "new_files": len(adds)}
 
-    # data files contain only non-partition columns (hive layout strips
-    # them); rewrite with that exact (PHYSICAL, on mapped tables) schema
-    # so old and new files agree
-    full = (
-        cm["phys_schema"]
-        if cm
-        else StructType.fromJson(json.loads(meta["schemaString"]))
-    )
-    fschema = StructType([f for f in full.fields if f.name not in part_cols])
+        return rowlevel.compact(
+            rl.t, target=target,
+            min_files=max(2, int(p.get("minFilesPerGroup", 2))),
+            zorder=zorder, commit=commit_optimize,
+        ) or {"compacted_files": 0, "new_files": 0}
 
-    commit_id = uuid.uuid4().hex
-    data_dir = f"data-compact-{commit_id}"
-    now_ms = int(time.time() * 1000)
-    staged: list[tuple] = []
-    removes: list[dict] = []
-    # row tracking (PROTOCOL.md Row Tracking): OPTIMIZE must PRESERVE
-    # row identity across the rewrite — each output row lands with its
-    # id/commit-version MATERIALIZED into the table's configured column
-    # names (the id is the input file's materialized value when a prior
-    # rewrite stamped one, else baseRowId + physical position)
-    conf_rt = meta.get("configuration") or {}
-    rt_mat_id = conf_rt.get("delta.rowTracking.materializedRowIdColumnName")
-    rt_mat_cv = conf_rt.get(
-        "delta.rowTracking.materializedRowCommitVersionColumnName"
-    )
-    rowtrack = (
-        "rowTracking" in (_proto.get("writerFeatures") or []) and rt_mat_id
-    )
-    if rowtrack:
-        from pyspark.sql.types import LongType, StructField
+    return rowlevel.replan(once, (FileExistsError,))
 
-        fschema = StructType(
-            list(fschema.fields)
-            + [StructField(c, LongType(), True)
-               for c in (rt_mat_id, rt_mat_cv) if c]
-        )
-    for i, (key, files) in enumerate(bins):
-        # DV-aware rewrite: compacting a deletion-vector file MATERIALIZES
-        # its deletes (delta's own OPTIMIZE contract) — reading the raw
-        # parquet would resurrect the vectored rows
-        from pipeline_spark.sources.delta_native import read_files_with_dv
 
-        out_dir = os.path.join(table, data_dir, f"bin-{i:05d}")
-        bin_df = read_files_with_dv(
-            spark, table, fschema, files, with_meta=rowtrack
-        )
-        if rowtrack:
-            bin_df = _keep_row_ids(
-                spark, table, bin_df, files, rt_mat_id, rt_mat_cv
-            ).drop("__dv_fp", "__dv_ri")
-        staged += _write_files(out_dir, bin_df.coalesce(1), dict(key))
-        removes += [_removal(a, now_ms, data_change=False) for a in files]
-
-    adds = _adds(spark, table, staged, now_ms, data_change=False)
-    actions: list[dict] = (
-        [{"remove": r} for r in removes]
-        + [{"add": a} for a in adds]
-        + [{
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {"targetFileBytes": str(target)},
-            }
-        }]
-    )
-    # layout-only rewrite: blind appends never conflict (delta-spark's
-    # dataChange=false rule), concurrent rewrites of the same file do
-    commit(
-        table, snapshot, actions, reads="files",
-        checkpoint_interval=p.get("checkpointInterval"),
-    )
-    return {"compacted_files": len(removes), "new_files": len(adds)}
-
+def _clustering_columns(table: str, proto: dict) -> list[str]:
+    """The ``delta.clustering`` domain's columns (PROTOCOL.md Clustered
+    Table), [] on a table without one.  Only a clustered table's
+    protocol lists the domainMetadata writer feature, so a plain table
+    skips the domain replay walk."""
+    if "domainMetadata" not in (proto.get("writerFeatures") or []):
+        return []
+    dm = replay_domains(table).get("delta.clustering")
+    try:
+        return [
+            c[-1] if isinstance(c, list) else str(c)
+            for c in json.loads((dm or {}).get("configuration") or "{}")
+            .get("clusteringColumns") or []
+        ]
+    except (ValueError, TypeError):
+        return []
 
 
 def _keep_row_ids(spark, table: str, df, files: list[dict], rt_id, rt_cv):
@@ -822,95 +732,6 @@ def _keep_row_ids(spark, table: str, df, files: list[dict], rt_id, rt_cv):
     if rt_cv:
         df = df.withColumn(rt_cv, F.coalesce(F.col(rt_cv), F.col("__rt_dcv")))
     return df.drop("__rt_fp", "__rt_base", "__rt_dcv")
-
-
-def _zorder_compact(
-    spark, table: str, p: dict[str, Any], target: int, snapshot: tuple,
-    cm: dict | None, part_cols: list[str],
-) -> dict[str, int]:
-    """OPTIMIZE ZORDER BY: rewrite EVERY live file (per partition) with
-    rows clustered along the Morton curve of ``zOrderBy`` columns, so
-    min/max file bounds become tight on ALL of them and multi-column
-    dataFilter skipping prunes like a single-column sort would for one.
-    Output file count per partition = ceil(bytes / targetFileBytes) via
-    repartitionByRange on the z-value + an in-partition sort — fully
-    distributed, the same dataChange-false remove+add commit as
-    bin-packing compaction.  Deletion vectors are materialized by the
-    rewrite (OPTIMIZE's contract)."""
-    import math
-
-    from pyspark.sql.types import StructType
-
-    from pipeline_spark.functions.zorder import zvalue_column
-    from pipeline_spark.sources.delta_native import read_files_with_dv
-
-    prev_adds, meta = snapshot[:2]
-    zorder = [str(c) for c in (p.get("zOrderBy") or [])]
-    phys_z = [cm["phys_of"].get(c, c) for c in zorder] if cm else zorder
-    full = (
-        cm["phys_schema"]
-        if cm
-        else StructType.fromJson(json.loads(meta["schemaString"]))
-    )
-    fschema = StructType([f for f in full.fields if f.name not in part_cols])
-    fnames = {f.name for f in fschema.fields}
-    missing = [c for c, pc in zip(zorder, phys_z) if pc not in fnames]
-    if missing:
-        raise ValueError(
-            f"delta compact: zOrderBy columns {missing} are not "
-            "non-partition table columns"
-        )
-
-    groups: dict[tuple, list[dict]] = {}
-    for a in prev_adds:
-        key = tuple(sorted((a.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(a)
-    if not groups:
-        return {"compacted_files": 0, "new_files": 0}
-
-    commit_id = uuid.uuid4().hex
-    data_dir = f"data-zorder-{commit_id}"
-    now_ms = int(time.time() * 1000)
-    staged: list[tuple] = []
-    removes: list[dict] = []
-    for i, (key, files) in enumerate(sorted(groups.items())):
-        df = read_files_with_dv(spark, table, fschema, files)
-        df, z, tmp_cols = zvalue_column(spark, df, phys_z)
-        nfiles = max(
-            1,
-            math.ceil(sum(int(a.get("size", 0)) for a in files) / target),
-        )
-        out_dir = os.path.join(table, data_dir, f"grp-{i:05d}")
-        staged += _write_files(
-            out_dir,
-            df.withColumn("__z__", z)
-            .repartitionByRange(nfiles, "__z__")
-            .sortWithinPartitions("__z__")
-            .drop("__z__", *tmp_cols),
-            dict(key),
-        )
-        removes += [_removal(a, now_ms, data_change=False) for a in files]
-
-    adds = _adds(spark, table, staged, now_ms, data_change=False)
-    actions: list[dict] = (
-        [{"remove": r} for r in removes]
-        + [{"add": a} for a in adds]
-        + [{
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetFileBytes": str(target),
-                    "zOrderBy": json.dumps(zorder),
-                },
-            }
-        }]
-    )
-    commit(
-        table, snapshot, actions, reads="files",
-        checkpoint_interval=p.get("checkpointInterval"),
-    )
-    return {"compacted_files": len(removes), "new_files": len(adds)}
 
 
 def delete_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
@@ -1328,11 +1149,12 @@ def _mor(p: dict[str, Any]) -> bool:
 
 class _Rowlevel:
     """The Delta adapter of the row-level planner (sinks/rowlevel.py) over
-    one snapshot, shared by DELETE, UPDATE and MERGE: ``t`` describes the
-    table — a DV-aware live-row reader with partition literals (and, on
-    a row-tracking table, each row's id and commit version), per-partition
-    staging under ``data-<op>-<id>/`` and change-data staging — and the
-    methods build both commits' actions and publish them.
+    one snapshot, shared by DELETE, UPDATE, MERGE and OPTIMIZE: ``t``
+    describes the table — a DV-aware live-row reader with partition
+    literals (and, on a row-tracking table, each row's id and commit
+    version), per-partition staging under ``data-<op>-<id>/`` and
+    change-data staging — and the methods build the commits' actions
+    and publish them.
 
     ``where`` and ``set`` are logical names; files, stats and
     partitionValues physical — translated at the boundaries.
@@ -1408,11 +1230,13 @@ class _Rowlevel:
                 stats_to_logical([a], cm)
             return _stats_may_match(a, where, None)
 
+        def pv_key(a: dict) -> tuple:
+            return tuple(sorted((a.get("partitionValues") or {}).items()))
+
         def groups(files: list[dict]) -> list[list[dict]]:
             by_pv: dict[tuple, list[dict]] = {}
             for a in files:
-                key = tuple(sorted((a.get("partitionValues") or {}).items()))
-                by_pv.setdefault(key, []).append(a)
+                by_pv.setdefault(pv_key(a), []).append(a)
             return list(by_pv.values())
 
         def read(files: list[dict], lineage: bool):
@@ -1474,17 +1298,27 @@ class _Rowlevel:
             lineage=(
                 (rt_id, rt_cv, (prev_version or 0) + 1) if rowtrack else None
             ),
-            changes=changes if cdf else None,
+            changes=changes if cdf else None, bin_key=pv_key,
         )
 
-    def removes(self, files: list[dict]) -> list[dict]:
-        return [{"remove": _removal(a, self.now_ms)} for a in files]
-
-    def adds(self, staged: list[tuple]) -> list[dict]:
+    def removes(self, files: list[dict], data_change=True) -> list[dict]:
         return [
-            {"add": a}
-            for a in _adds(self.spark, self.table, staged, self.now_ms)
+            {"remove": _removal(a, self.now_ms, data_change)} for a in files
         ]
+
+    def adds(self, staged: list[tuple], data_change=True) -> list[dict]:
+        """The add actions of staged files, every footer read once; a
+        file whose footer reads 0 rows (a rewrite that kept no row, an
+        empty batch) is deleted instead of committed."""
+        out = []
+        for f in lakefiles.read(staged, self.spark):
+            if f.rows == 0:
+                _remove_quiet(f.path)
+            else:
+                out.append({"add": lakefiles.to_delta_add(
+                    f, self.table, self.now_ms, data_change=data_change
+                )})
+        return out
 
     def dvs(self, plan) -> tuple[list[dict], int, int]:
         """The deletion-vector actions of a merge-on-read plan (see
@@ -1495,8 +1329,18 @@ class _Rowlevel:
             self.table, plan.files, plan.positions, self.proto, self.now_ms,
         )
 
+    def discard(self, staged: list[tuple]) -> None:
+        """Delete the staged data files and change files of a plan that
+        commits nothing."""
+        for fp, _pv in staged:
+            _remove_quiet(fp)
+        for act in self.cdc:
+            _remove_quiet(os.path.join(
+                self.table, urllib.parse.unquote(act["cdc"]["path"])
+            ))
+
     def publish(self, actions: list[dict], params: dict, *,
-                reads: list[dict], txn: tuple | None = None,
+                reads: str | list[dict], txn: tuple | None = None,
                 checkpoint_interval: int | None = None) -> int | None:
         """Commit ``actions`` plus the staged change files and the
         commitInfo; the version, or None for a replayed ``txn``."""
@@ -1564,14 +1408,8 @@ def _mutate_where(
     def commit_dvs(plan) -> dict | None:
         actions, n, n_dvs = rl.dvs(plan)
         if not n_dvs:
-            # the stats over-admitted and nothing matched: drop the
-            # staged update and change files, commit nothing
-            for fp, _pv in plan.staged:
-                _remove_quiet(fp)
-            for act in rl.cdc:
-                _remove_quiet(os.path.join(
-                    table, urllib.parse.unquote(act["cdc"]["path"])
-                ))
+            # the stats over-admitted and nothing matched: commit nothing
+            rl.discard(plan.staged)
             return None
         publish(actions + rl.adds(plan.staged), {"method": "merge-on-read"})
         result = {f"{op}d_rows": n, "dv_files": n_dvs}
@@ -1580,15 +1418,8 @@ def _mutate_where(
         return result
 
     def stage_rewrite(plan) -> tuple[list[dict], list[dict]]:
-        # a fully-replaced file leaves a 0-row survivor rewrite — drop it
-        # rather than commit an empty data file
-        adds = []
-        for f in lakefiles.read(plan.staged, spark):
-            if f.rows == 0:
-                _remove_quiet(f.path)
-            else:
-                adds.append(lakefiles.to_delta_add(f, table, rl.now_ms))
-        return [r["remove"] for r in rl.removes(plan.files)], adds
+        return ([r["remove"] for r in rl.removes(plan.files)],
+                [a["add"] for a in rl.adds(plan.staged)])
 
     if staged_by:
         return rowlevel.mutate(
@@ -1615,17 +1446,6 @@ def _staged(out_dir: str, pv: dict | None = None) -> list[tuple]:
     return [(fp, {**(pv or {}), **part}) for fp, part in lakefiles.walk(out_dir)]
 
 
-def _adds(
-    spark, table: str, staged: list[tuple], now_ms: int,
-    data_change: bool = True,
-) -> list[dict]:
-    """The add action bodies of staged files, every footer read once."""
-    return [
-        lakefiles.to_delta_add(f, table, now_ms, data_change=data_change)
-        for f in lakefiles.read(staged, spark)
-    ]
-
-
 def _removal(a: dict, now_ms: int, data_change: bool = True) -> dict:
     """The remove action body retiring add ``a``."""
     return {
@@ -1642,6 +1462,15 @@ def _remove_quiet(path: str) -> None:
         pass
 
 
+#: the features each legacy writer version implies (PROTOCOL.md Table
+#: Features)
+_LEGACY_WRITER = (
+    (2, "appendOnly"), (2, "invariants"), (3, "checkConstraints"),
+    (4, "changeDataFeed"), (4, "generatedColumns"), (5, "columnMapping"),
+    (6, "identityColumns"),
+)
+
+
 def _with_features(
     proto: dict, reader: set[str] = frozenset(), writer: set[str] = frozenset(),
 ) -> dict | None:
@@ -1649,20 +1478,22 @@ def _with_features(
     features) and ``writer`` (writer-only) added, or None when it already
     has them (PROTOCOL.md Table Features).  A legacy protocol asking only
     for column mapping takes the legacy reader 2 / writer 5; any other
-    feature moves it to table features, listing column mapping when its
-    legacy versions carried it.  A protocol already on table features
-    keeps every feature it lists."""
+    feature moves it to table features, listing every feature its legacy
+    versions implied.  A protocol already on table features keeps every
+    feature it lists."""
     r = int(proto.get("minReaderVersion", 1))
     w = int(proto.get("minWriterVersion", 2))
     if w < 7 and set(reader) | set(writer) <= {"columnMapping"}:
         if r >= 2 and w >= 5:
             return None
         return {"minReaderVersion": max(r, 2), "minWriterVersion": max(w, 5)}
-    # legacy reader 2 and writer 5-6 carry column mapping
     old_rf = set(proto.get("readerFeatures") or [])
     old_wf = set(proto.get("writerFeatures") or [])
+    # legacy reader 2 carries column mapping
     rf = old_rf | set(reader) | ({"columnMapping"} if r == 2 else set())
-    wf = old_wf | set(writer) | ({"columnMapping"} if 5 <= w < 7 else set())
+    wf = old_wf | set(writer) | (
+        {f for v, f in _LEGACY_WRITER if w >= v} if w < 7 else set()
+    )
     on_r3 = bool(reader) or r >= 3
     out: dict[str, Any] = {
         "minReaderVersion": 3 if on_r3 else r, "minWriterVersion": 7,
@@ -1897,15 +1728,19 @@ def merge_delta_native(
             actions = rl.removes(plan.files)
             result = {"merged_rows": plan.rows,
                       "rewritten_files": len(plan.files)}
+        upsert_adds = rl.adds(upsert_files)
+        actions += rl.adds(plan.staged) + upsert_adds
+        if not actions and txn is None:
+            rl.discard([])  # nothing merged: no version
+            return {**result, "upsert_files": 0}
         version = rl.publish(
-            actions + rl.adds(plan.staged + upsert_files), params,
-            reads=plan.where, txn=txn,
+            actions, params, reads=plan.where, txn=txn,
             checkpoint_interval=p.get("checkpointInterval"),
         )
         if version is None:
             return {**dict.fromkeys(result, 0), "upsert_files": 0,
                     "replayed": True}
-        return {**result, "upsert_files": len(upsert_files)}
+        return {**result, "upsert_files": len(upsert_adds)}
 
     return rowlevel.merge(
         rl.t, df, keys, mor=mor, commit=commit_merge, op_field=op_field,

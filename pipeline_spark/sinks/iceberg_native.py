@@ -754,14 +754,6 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
             )
         except FileNotFoundError:
             existing = None  # no table yet: merge degenerates to create
-        except ValueError as exc:
-            # ONLY the empty-table case may fall through to create —
-            # swallowing MOR validation errors (bad equality_ids, missing
-            # snapshot) here would overwrite a populated table with just
-            # the upserts
-            if "no data files" not in str(exc):
-                raise
-            existing = None
         if existing is not None:
             kept = existing.join(touched, on=list(keys), how="left_anti")
             merged = kept.unionByName(upserts)
@@ -1596,422 +1588,95 @@ def _fill_schema_read(spark, meta: dict, files: list[dict],
     return spark.read.schema(sch).parquet(*[d["path"] for d in files])
 
 
-def _read_evolved_group(spark, files: list[dict], cur_schema: dict,
-                        with_lineage: bool = False,
-                        keep_extra: list[str] | None = None):
-    """One frame over mixed-generation data files, upgraded to the
-    CURRENT schema — delegates to the reader's own migrating scan so the
-    write side can never drift from read semantics.  ``with_lineage``
-    stamps ``__fp__``/``__pos__`` per-file so merge-on-read delete
-    subtraction works on the evolved frame (r7); ``keep_extra`` passes
-    physical-only columns (a rewrite's materialized ``_row_id``)
-    through."""
-    from pipeline_spark.sources.iceberg_native import evolved_scan
-
-    return evolved_scan(
-        spark, spark.read, files, cur_schema["fields"],
-        with_lineage=with_lineage, keep_extra=keep_extra,
-    )
-
-
 def compact_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
-    """Conflict-tolerant compaction entry point (r9, VERDICT r8 ask #3):
-    a lost optimistic race (create-exclusive version claim locally, 409
-    on REST) RE-PLANS the whole compaction from fresh metadata —
-    compaction is a pure layout rewrite of whatever is live, so a
-    re-plan after ANY interleaved commit (append, disjoint DML, even a
-    conflicting one) is always correct; no disjointness proof needed,
-    just bounded retries.  First-attempt rewrite files orphan until
-    ``removeOrphans``."""
-    parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
+    """Rewrite-data-files compaction, planned by
+    :func:`sinks.rowlevel.compact` over the Iceberg adapter: small files
+    bin-pack per (spec id, partition) into ~``targetFileBytes``, each bin
+    rewritten under its own spec's layout in the table's default sort
+    order; ``zOrderBy`` rewrites every live file per partition clustered
+    on the Morton curve, and ``migrateSchema`` rewrites every file of a
+    schema-evolved table under the current schema.  Identity-fill files
+    always rewrite, materializing their partition columns.
+
+    Row-level deletes are MATERIALIZED: every data file a delete can
+    apply to (position deletes and DVs by the files they name, equality
+    deletes by the strict seq-below-delete rule) is forced into the
+    rewrite and read through the live-row reader, so the ``replace``
+    snapshot drops exactly the delete files it planned against; v3 row
+    ids are kept materialized.  Untouched manifests carry forward.  A
+    disjoint concurrent commit rebases the snapshot; a conflicting one
+    re-plans the compaction."""
+    from pipeline_spark.sinks import rowlevel
+    from pipeline_spark.sources.iceberg_native import identity_fill_plan
     from pipeline_spark.sources.iceberg_rest import CommitConflictError
 
-    retries = int(p.get("conflictRetries", 2))
-    while True:
-        try:
-            return _compact_iceberg_once(spark, p)
-        except (FileExistsError, CommitConflictError):
-            if retries <= 0:
-                raise
-            retries -= 1
-
-
-def _compact_iceberg_once(spark, p: dict[str, Any]) -> dict[str, int]:
-    """Rewrite-data-files compaction: bin-pack small files per partition
-    into ~``targetFileBytes``, commit one ``replace`` snapshot.
-
-    The new manifest list = one consolidated EXISTING-status manifest for
-    surviving files (each keeping its ORIGINAL sequence number) plus one
-    ADDED manifest for the rewrites — the same shape Iceberg's own
-    rewrite action produces.
-
-    Row-level delete files (merge-on-read) are MATERIALIZED (r6, VERDICT
-    r5 ask #5): every data file a delete can apply to — position deletes
-    by the file paths they name, equality deletes by the strict
-    seq-below-delete rule — is forced into the rewrite regardless of
-    size, its deleted rows subtracted via the reader's own
-    ``_apply_row_deletes`` during the bin read.  Surviving files all sit
-    at or above every delete's sequence number and rewrites get a new
-    one, so NO delete can apply post-compaction: the new snapshot drops
-    every delete manifest (Iceberg's own rewrite+remove-dangling-deletes
-    contract) and deleted rows stay deleted.
-    """
-    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
-    from pipeline_spark.sources.iceberg_native import (
-        _apply_row_deletes,
-        plan_files,
-    )
-
-    table = IcebergTable(p)
-    table_path = table.path
+    parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     target = int(p.get("targetFileBytes", 128 * 1024 * 1024))
-    min_group = max(2, int(p.get("minFilesPerGroup", 2)))
-    data, deletes, prev_meta = plan_files(table_path, meta=table.meta)
-    from pipeline_spark.sources.iceberg_native import identity_fill_plan
 
-    fills, ftypes = identity_fill_plan(data, prev_meta)
-    # v3 row lineage: rewritten rows carry their ids MATERIALIZED as a
-    # physical _row_id column (spec §Row Lineage)
-    lineage = int(prev_meta.get("format-version", 2)) >= 3
-    evolved = any(
-        d.get("renames") or d.get("absent") or d.get("dropped") for d in data
-    )
-    migrate = bool(p.get("migrateSchema"))
-    # schema-evolved tables compact WITHOUT migration (r8, VERDICT r7 ask
-    # #4): rewritten bins upgrade to the current schema (the reader's own
-    # migrating scan — Iceberg's own rewrite behavior), while SURVIVING
-    # files stay in their generations, each consolidated EXISTING
-    # manifest re-embedding its generation's write-time schema so rename
-    # inference is preserved byte-for-byte.  ``migrateSchema: true``
-    # remains the opt-in full rewrite of every live file.
+    def once() -> dict[str, int]:
+        rl = _Rowlevel(spark, p, IcebergTable(p), "compact")
+        data = rl.t.files
+        forced = _delete_targets(spark, data, rl.deletes)
+        forced |= set(identity_fill_plan(data, rl.meta)[0])
 
-    _norm = _strip_scheme
+        def stage(i: int, files: list[dict], df) -> list[tuple]:
+            # a bin stays in its own spec and partition
+            out_dir = os.path.join(rl.data_dir, f"grp-{i:05d}")
+            df.write.parquet(out_dir)
+            f0 = files[0]
+            return [(f, f0.get("partition") or {}, f0.get("spec_id", 0))
+                    for f in _scan_nonempty(out_dir, spark)]
 
-    # delete-aware: the set of data files any delete file can apply to
-    pos_all = [d for d in deletes if d["content"] == 1]
-    # v3 puffin DVs name their target directly — no file read needed
-    pdv = [d for d in pos_all if d.get("content_offset") is not None]
-    pos = [d for d in pos_all if d.get("content_offset") is None]
-    eq = [d for d in deletes if d["content"] == 2]
-    affected: set[str] = set()
-    for d in pdv:
-        ref = _norm(d["referenced_data_file"])
-        affected |= {
-            x["path"] for x in data
-            if _norm(x["path"]) in (ref, urllib.parse.unquote(ref))
-        }
+        def commit_replace(plan) -> dict[str, int]:
+            rl.replace(
+                plan.files, plan.staged, operation="replace",
+                read_where=None, check_adds=False,
+                drop_deletes={(d["path"], d.get("content_offset"))
+                              for d in rl.deletes},
+            )
+            return {"compacted_files": len(plan.files),
+                    "new_files": len(plan.staged),
+                    "materialized_delete_files": len(rl.deletes)}
+
+        rl.t.stage = stage
+        return rowlevel.compact(
+            rl.t, target=target,
+            min_files=max(2, int(p.get("minFilesPerGroup", 2))),
+            zorder=[str(c) for c in (p.get("zOrderBy") or [])],
+            rewrite_all=bool(p.get("migrateSchema")) and any(
+                d.get("renames") or d.get("absent") or d.get("dropped")
+                for d in data
+            ),
+            forced=forced, commit=commit_replace,
+        ) or {"compacted_files": 0, "new_files": 0}
+
+    return rowlevel.replan(once, (FileExistsError, CommitConflictError))
+
+
+def _delete_targets(spark, data: list[dict], deletes: list[dict]) -> set[str]:
+    """The paths of the live data files some delete applies to: the file
+    a DV names, the files a position-delete parquet names (a distinct
+    collect, metadata scale; stored paths may be percent-encoded), every
+    file below the newest equality delete's sequence number."""
+    named: set[str] = set()
+    for d in deletes:
+        if d.get("content_offset") is not None:
+            named.add(_strip_scheme(d["referenced_data_file"]))
+    pos = [d["path"] for d in deletes
+           if d["content"] == 1 and d.get("content_offset") is None]
     if pos:
-        # distinct named paths — delete files are position-list-sized,
-        # the collect is metadata scale (bounded by live-file count).
-        # Stored file_path values may be URI-percent-encoded (they were
-        # captured from _metadata.file_path), so compare the unquoted
-        # form too — a partition value with a space must still force its
-        # file into the rewrite or its deleted rows would resurrect when
-        # the replace snapshot drops the delete manifests.
-        named = set()
-        for r in (
-            read_parquet(spark, *[d["path"] for d in pos])
+        named |= {
+            _strip_scheme(r["file_path"]) for r in read_parquet(spark, *pos)
             .select("file_path").distinct().collect()
-        ):
-            named.add(_norm(r["file_path"]))
-            named.add(urllib.parse.unquote(_norm(r["file_path"])))
-        affected |= {d["path"] for d in data if _norm(d["path"]) in named}
-    if eq:
-        max_eq = max(d["seq"] for d in eq)
-        affected |= {d["path"] for d in data if d["seq"] < max_eq}
-    # identity-fill files always rewrite (same rule as delete-affected):
-    # compaction is the migration that MATERIALIZES the partition
-    # columns a converted/add_files import never wrote
-    affected |= set(fills)
-
-    sized = []
-    for d in data:
-        size = os.path.getsize(d["path"])
-        sized.append({**d, "size": size})
-    zorder = [str(c) for c in (p.get("zOrderBy") or [])]
-    full_rewrite = bool(zorder) or (migrate and evolved)
-    # bins key on (spec-id, partition values): a table with an EVOLVED
-    # partition spec (r7) compacts per generation — each file rewrites
-    # under its OWN spec's layout, never crossing generations, the same
-    # contract Iceberg's bin-pack rewrite keeps on multi-spec tables
-    bins: list[tuple[tuple, list[dict]]] = []
-    if full_rewrite:
-        # OPTIMIZE ZORDER and schema-migrating compaction both rewrite
-        # every live file, one group per partition (zorder additionally
-        # clusters each rewrite on the Morton curve)
-        groups_all: dict[tuple, list[dict]] = {}
-        for d in sized:
-            key = (d.get("spec_id", 0),
-                   tuple(sorted((d.get("partition") or {}).items())))
-            groups_all.setdefault(key, []).append(d)
-        bins = sorted(groups_all.items())
-    else:
-        groups: dict[tuple, list[dict]] = {}
-        for d in sized:
-            if d["size"] < target or d["path"] in affected:
-                key = (d.get("spec_id", 0),
-                       tuple(sorted((d.get("partition") or {}).items())))
-                groups.setdefault(key, []).append(d)
-        for key, files in groups.items():
-            files.sort(key=lambda d: d["size"])
-            cur, size, has_aff = [], 0, False
-            for d in files:
-                cur.append(d)
-                size += d["size"]
-                has_aff = has_aff or d["path"] in affected
-                if size >= target:
-                    # a bin carrying delete-affected files ALWAYS rewrites —
-                    # materializing its deletes is the point, not bin-packing
-                    if len(cur) >= min_group or has_aff:
-                        bins.append((key, cur))
-                    cur, size, has_aff = [], 0, False
-            if cur and (len(cur) >= min_group or has_aff):
-                bins.append((key, cur))
-    if not bins:
-        # deletes with an empty affected set are dangling (they name no
-        # live file): nothing to materialize, the no-op is sound
-        return {"compacted_files": 0, "new_files": 0}
-
-    meta_dir = table.meta_dir
-    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
-
-    # partition avro fields + write schema come from a prior manifest's
-    # embedded writer schema — the spec-shaped source of truth for how
-    # THIS table encodes its partition record
-    prev_manifests = _manifest_list_of(
-        prev_meta, prev_meta.get("current-snapshot-id"))
-    # one writer-schema triple PER SPEC GENERATION: an evolved table's
-    # manifests embed different partition records, and a rewrite must
-    # reproduce its generation's encoding byte-for-byte
-    spec_info: dict[int, dict] = {}
-    for mf in prev_manifests:
-        if mf.get("content", 0) != 0:
-            continue  # delete manifests don't define a data layout
-        sid = int(mf.get("partition_spec_id", 0) or 0)
-        if sid in spec_info:
-            continue
-        wschema, mmeta, _entries = read_ocf_file_with_meta(
-            _strip_scheme(mf["manifest_path"])
-        )
-        df_rec = next(
-            f for f in wschema["fields"] if f["name"] == "data_file"
-        )
-        spec_info[sid] = {
-            "part_avro_fields": next(
-                f for f in df_rec["type"]["fields"]
-                if f["name"] == "partition"
-            )["type"]["fields"],
-            "schema_json": (mmeta.get("schema") or b"{}").decode(),
-            "spec_json": (mmeta.get("partition-spec") or b"[]").decode(),
         }
-
-    cur_schema = current_schema(prev_meta)
-    # the table's default sort order (r7): rewritten bins re-cluster on
-    # its identity columns so compaction preserves the write contract
-    sort_cols = _default_sort_cols(prev_meta, cur_schema)
-    compacted_paths = {d["path"] for _key, files in bins for d in files}
-
-    # 1. rewrite each bin (distributed parquet read+write per bin)
-    new_by_spec: dict[int, list[dict]] = {}
-    added_rows = 0
-    data_dir = os.path.join(table_path, "data", f"compact-{commit_uuid}")
-    for i, ((bin_spec, pkey), files) in enumerate(bins):
-        out_dir = os.path.join(data_dir, f"bin-{i:05d}")
-        bin_has_deletes = deletes and any(d["path"] in affected for d in files)
-        if evolved:
-            bin_df = _read_evolved_group(
-                spark, files, cur_schema,
-                with_lineage=bool(bin_has_deletes) or lineage,
-                keep_extra=(LINEAGE_COLS if lineage else None),
-            )
-        else:
-            bin_fills_pre = any(d["path"] in fills for d in files)
-            if bin_fills_pre or lineage:
-                # a mixed bin must read under the TABLE schema: inference
-                # off a file missing a column (fill file / not-yet-
-                # materialized _row_id) would drop values other files carry
-                bin_df = _fill_schema_read(
-                    spark, prev_meta, files, extra_row_id=lineage
-                )
-            else:
-                bin_df = read_parquet(spark, *[d["path"] for d in files])
-        bin_fills = {d["path"]: fills[d["path"]]
-                     for d in files if d["path"] in fills}
-        if bin_fills or lineage:
-            # identity-fill files fill their partition columns from the
-            # manifest records (compaction is the migration path from
-            # fill layout to normal layout); v3 tables materialize each
-            # surviving row's _row_id through the rewrite
-            from pipeline_spark.sources.iceberg_native import (
-                apply_identity_fill,
-                derive_row_ids,
-                stamp_lineage,
-            )
-
-            bin_df = stamp_lineage(bin_df)
-            if bin_fills:
-                bin_df = apply_identity_fill(spark, bin_df, bin_fills, ftypes)
-            if lineage:
-                bin_df = derive_row_ids(spark, bin_df, files, with_seq=True)
-        if bin_has_deletes:
-            # materialize: subtract this bin's applicable deletes through
-            # the reader's own MOR path (position + equality, seq rule)
-            bin_df = _apply_row_deletes(
-                spark, bin_df, files, deletes, prev_meta,
-                # legacyGlobalDeletes: apply  is the migration path for
-                # pre-r11 tables whose global deletes sit under the
-                # partitioned spec — compact applies them as global,
-                # drops the delete files, and the table reads clean.
-                # all_data: detection judges null-partition placement
-                # against the WHOLE table, not this bin (a per-partition
-                # bin never contains the null partition's files)
-                legacy_global_deletes=parse_legacy_global_deletes(p),
-                all_data=data,
-                # ADVICE r14: compaction bakes the chosen reading in
-                # permanently — when the scope of an all-null-record
-                # delete is metadata-undecidable, demand an EXPLICIT
-                # legacyGlobalDeletes choice instead of a log warning
-                irreversible=True,
-                legacy_explicit="legacyGlobalDeletes" in p,
-            )
-        elif bin_fills or lineage:
-            bin_df = bin_df.drop("__fp__", "__pos__")
-        if zorder:
-            import math
-
-            from pipeline_spark.functions.zorder import zvalue_column
-
-            missing = [c for c in zorder if c not in bin_df.columns]
-            if missing:
-                raise ValueError(
-                    f"iceberg compact: zOrderBy columns {missing} not in "
-                    "the data files"
-                )
-            bin_df, z, tmp_cols = zvalue_column(spark, bin_df, zorder)
-            nfiles = max(
-                1, math.ceil(sum(d["size"] for d in files) / target)
-            )
-            (
-                bin_df.withColumn("__z__", z)
-                .repartitionByRange(nfiles, "__z__")
-                .sortWithinPartitions("__z__")
-                .drop("__z__", *tmp_cols)
-                .write.parquet(out_dir)
-            )
-        else:
-            w = bin_df.coalesce(1)
-            if sort_cols:
-                # re-cluster on the table's default sort order: a rewrite
-                # that dropped the sort would silently un-tighten every
-                # rewritten file's bounds
-                w = w.sortWithinPartitions(*sort_cols)
-            w.write.parquet(out_dir)
-        # rewritten files carry MATERIALIZED _row_id: no fresh range
-        entries = lakefiles.to_iceberg_entries(
-            [(f, dict(pkey)) for f in lakefiles.scan(out_dir, spark)],
-            snapshot_id, seq, cur_schema,
-        )
-        added_rows += sum(e["data_file"]["record_count"] for e in entries)
-        new_by_spec.setdefault(bin_spec, []).extend(entries)
-    # 2. consolidated EXISTING manifests for untouched files, original
-    # seqs, one per (spec generation, SCHEMA generation) — files from
-    # different schema generations must never share a manifest, or its
-    # single embedded write-time schema would corrupt rename inference
-    # for the other generation's files (r8)
-    surviving = [d for d in sized if d["path"] not in compacted_paths]
-    existing_by_spec: dict[tuple, list[dict]] = {}
-    gen_manifest: dict[tuple, str] = {}  # representative source manifest
-    existing_rows = 0
-    for d in surviving:
-        sig = (
-            d.get("renames") or (), d.get("absent") or (),
-            d.get("dropped") or (),
-        )
-        gkey = (d.get("spec_id", 0), sig)
-        if d.get("manifest"):
-            gen_manifest.setdefault(gkey, d["manifest"])
-        rows = int(d.get("record_count")
-                   or lakefiles.read([(d["path"], {})])[0].rows)
-        existing_rows += rows
-        existing_by_spec.setdefault(gkey, []).append({
-            "status": 0,  # EXISTING
-            "snapshot_id": None,
-            "sequence_number": d["seq"],
-            "file_sequence_number": d["seq"],
-            "data_file": {
-                "content": 0,
-                "file_path": d["path"],
-                "file_format": "PARQUET",
-                "partition": d.get("partition") or {},
-                "record_count": rows,
-                "file_size_in_bytes": d["size"],
-                "null_value_counts": d.get("null_value_counts"),
-                "lower_bounds": d.get("lower_bounds"),
-                "upper_bounds": d.get("upper_bounds"),
-                "equality_ids": None,
-                # v3 row lineage: a surviving file KEEPS its explicit
-                # first_row_id — dropping it here would orphan the ids
-                # of every non-rewritten row
-                "first_row_id": d.get("first_row_id"),
-            },
-        })
-
-    manifests: list[dict] = []
-    n_new = sum(len(v) for v in new_by_spec.values())
-    n_existing = sum(len(v) for v in existing_by_spec.values())
-    cur_schema_json = json.dumps(cur_schema)
-
-    def _emit(sid: int, entries: list[dict], schema_json: str):
-        info = spec_info[sid]
-        manifests.append(write_manifest(
-            os.path.join(meta_dir, f"{commit_uuid}-m{len(manifests)}.avro"),
-            entries, seq=seq, snapshot_id=snapshot_id,
-            spec={"spec-id": sid, "fields": json.loads(info["spec_json"])},
-            schema=schema_json, fv=3 if lineage else 2,
-            part_fields=info["part_avro_fields"],
-        ))
-
-    # rewrites land under the CURRENT schema (the evolved read upgraded
-    # them), so their manifests embed it; an unevolved table's write-time
-    # schema is name-identical either way
-    for sid in sorted(new_by_spec):
-        _emit(
-            sid, new_by_spec[sid],
-            cur_schema_json if evolved else spec_info[sid]["schema_json"],
-        )
-    # surviving files: one EXISTING manifest per (spec, schema generation),
-    # re-embedding the generation's own write-time schema
-    _gen_schema_cache: dict[str, str] = {}
-    for gkey in sorted(existing_by_spec):
-        sid, sig = gkey
-        if sig == ((), (), ()):
-            sjson = cur_schema_json
-        else:
-            src = gen_manifest[gkey]
-            if src not in _gen_schema_cache:
-                _w, _mm, _e = read_ocf_file_with_meta(src)
-                _gen_schema_cache[src] = (
-                    _mm.get("schema") or b"{}"
-                ).decode()
-            sjson = _gen_schema_cache[src]
-        _emit(sid, existing_by_spec[gkey], sjson)
-
-    commit_snapshot(
-        table, prev_meta, manifests, {
-            "operation": "replace",
-            "added-data-files": n_new,
-            "deleted-data-files": len(compacted_paths),
-            "removed-delete-files": len(deletes),
-            "added-records": added_rows,
-            "total-records": added_rows + existing_rows,
-            "total-data-files": n_new + n_existing,
-        },
-        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
+    named |= {urllib.parse.unquote(x) for x in named}
+    eq_seq = max(
+        (d["seq"] for d in deletes if d["content"] == 2), default=None
     )
     return {
-        "compacted_files": len(compacted_paths),
-        "new_files": n_new,
-        "materialized_delete_files": len(deletes),
+        d["path"] for d in data
+        if _strip_scheme(d["path"]) in named
+        or (eq_seq is not None and d["seq"] < eq_seq)
     }
 
 
@@ -2039,11 +1704,13 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
 class _Rowlevel:
     """The Iceberg adapter of the row-level planner (sinks/rowlevel.py)
-    over one snapshot, shared by DELETE, UPDATE and MERGE: ``t``
-    describes the table — the snapshot's live files, a live-row reader
-    (schema-evolved, identity-fill and row-delete aware, v3 lineage
-    derived) and default-spec staging under ``data/<op>-<id>/`` — and
-    :meth:`replace` is the copy-on-write commit."""
+    over one snapshot, shared by DELETE, UPDATE, MERGE and compaction:
+    ``t`` describes the table — the snapshot's live files, a live-row
+    reader (schema-evolved, identity-fill and row-delete aware, v3
+    lineage derived) and default-spec staging under ``data/<op>-<id>/``
+    — and :meth:`replace` is the copy-on-write commit.  A compaction's
+    read applies deletes irreversibly: an ambiguous legacy delete needs
+    an explicit ``legacyGlobalDeletes``."""
 
     def __init__(self, spark, p: dict[str, Any], table: "IcebergTable",
                  op: str):
@@ -2107,6 +1774,8 @@ class _Rowlevel:
                 df = _apply_row_deletes(
                     spark, df, files, deletes, meta, keep_lineage=True,
                     legacy_global_deletes=legacy, all_data=data,
+                    irreversible=op == "compact",
+                    legacy_explicit="legacyGlobalDeletes" in p,
                 )
             return df
 
@@ -2120,21 +1789,27 @@ class _Rowlevel:
                 "_row_id", "_last_updated_sequence_number",
                 int(meta.get("last-sequence-number", 0)) + 1,
             ) if v3 else None,
+            size=lambda d: int(d["file_size_in_bytes"]),
+            bin_key=lambda d: (d.get("spec_id", 0), tuple(sorted(
+                (d.get("partition") or {}).items()
+            ))),
+            sort_cols=_default_sort_cols(meta, self.cur_schema),
         )
 
     def stage(self, df) -> list[tuple]:
         return _stage_default_spec_files(
             df, self.data_dir, self.spec0, self.cur_schema,
-            sort_cols=_default_sort_cols(self.meta, self.cur_schema),
+            sort_cols=self.t.sort_cols,
         )
 
     def replace(self, files: list[dict], staged: list[tuple], *,
-                operation: str, read_where: list[dict] | None) -> int:
+                operation: str, read_where: list[dict] | None,
+                **kw) -> int:
         """One replace snapshot: ``files`` out, ``staged`` in; the
         removed-file count."""
         return _commit_file_replacement(
             self.table, self.meta, self.cur_schema, self.spec0, files,
-            staged, operation=operation, read_where=read_where,
+            staged, operation=operation, read_where=read_where, **kw,
         )
 
 
@@ -2597,6 +2272,7 @@ def _commit_file_replacement(
     table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
     hit: list[dict], staged: list[tuple], operation: str = "overwrite",
     *, read_where: list[dict] | None = None, check_adds: bool = True,
+    drop_deletes: set[tuple[str, int | None]] = frozenset(),
     retries: int = 3,
 ) -> int:
     """Conflict-checked optimistic commit wrapper (r9, VERDICT r8 ask
@@ -2617,6 +2293,7 @@ def _commit_file_replacement(
         try:
             return _commit_file_replacement_once(
                 table, prev_meta, cur_schema, spec0, hit, staged, operation,
+                drop_deletes,
             )
         except (FileExistsError, CommitConflictError):
             if retries <= 0:
@@ -2634,14 +2311,18 @@ def _commit_file_replacement(
 def _commit_file_replacement_once(
     table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
     hit: list[dict], staged: list[tuple], operation: str = "overwrite",
+    drop_deletes: set[tuple[str, int | None]] = frozenset(),
 ) -> int:
     """ONE replace snapshot for a file-scoped rewrite (shared by MERGE /
-    UPDATE / COW DELETE): untouched data manifests carry forward
-    VERBATIM, manifests that lost files rewrite in place (survivors
-    EXISTING at original sequence numbers, removed entries DELETED),
-    ``staged`` files land as ADDED under the default spec with footer
-    stats, and row-level delete manifests ride along (rewrites must
-    have MATERIALIZED their deletes).  Returns the removed-file count."""
+    UPDATE / COW DELETE / compaction): untouched data manifests carry
+    forward VERBATIM, manifests that lost files rewrite in place
+    (survivors EXISTING at original sequence numbers, removed entries
+    DELETED), ``staged`` ``(file, partition[, spec id])`` tuples land as
+    ADDED with footer stats, one manifest per spec (the default spec
+    when none is given), and row-level delete manifests ride along
+    (rewrites must have MATERIALIZED their deletes) but for the
+    ``(path, content_offset)`` entries of ``drop_deletes``, which are
+    marked DELETED.  Returns the removed-file count."""
     from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
 
     snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
@@ -2649,8 +2330,14 @@ def _commit_file_replacement_once(
     hit_paths = {d["path"] for d in hit}
     hit_paths |= {urllib.parse.unquote(x) for x in set(hit_paths)}
 
+    prev = _manifest_list_of(prev_meta, prev_meta.get("current-snapshot-id"))
+    if drop_deletes:
+        prev, _n = _supersede_prior_deletes(
+            prev, drop_deletes, table.meta_dir, f"{commit_uuid}-d",
+            snapshot_id,
+        )
     out_manifests: list[dict] = []
-    for m in _manifest_list_of(prev_meta, prev_meta.get("current-snapshot-id")):
+    for m in prev:
         if m.get("content", 0) != 0:
             out_manifests.append(m)  # delete manifests ride along
             continue
@@ -2704,19 +2391,25 @@ def _commit_file_replacement_once(
             )["type"]["fields"],
         ))
 
-    if staged:
-        # ADDED manifest for the staged rewrite+upsert files (default
-        # spec, current schema, footer stats for future pruning; v3 row
-        # lineage: survivors' MATERIALIZED ids win per row, fresh rows
-        # derive first_row_id + position)
-        added = lakefiles.to_iceberg_entries(
-            staged, snapshot_id, seq, cur_schema,
-            prev_meta if fv >= 3 else None,
-        )
+    # ADDED manifests for the staged rewrite+upsert files (current
+    # schema, footer stats for future pruning; v3 row lineage: survivors'
+    # MATERIALIZED ids win per row, fresh rows derive first_row_id +
+    # position)
+    added = lakefiles.to_iceberg_entries(
+        [s[:2] for s in staged], snapshot_id, seq, cur_schema,
+        prev_meta if fv >= 3 else None,
+    )
+    by_spec: dict[int, list[dict]] = {}
+    for st, e in zip(staged, added):
+        sid = int(st[2]) if len(st) > 2 else int(spec0.get("spec-id", 0))
+        by_spec.setdefault(sid, []).append(e)
+    specs = {int(sp.get("spec-id", 0)): sp
+             for sp in prev_meta.get("partition-specs") or []}
+    for sid in sorted(by_spec, reverse=True):
         out_manifests.insert(0, write_manifest(
             os.path.join(table.meta_dir, f"{commit_uuid}-m{len(out_manifests)}.avro"),
-            added, seq=seq, snapshot_id=snapshot_id, spec=spec0,
-            schema=cur_schema, fv=fv,
+            by_spec[sid], seq=seq, snapshot_id=snapshot_id,
+            spec=specs.get(sid, spec0), schema=cur_schema, fv=fv,
         ))
     live_data = [m for m in out_manifests if m.get("content", 0) == 0]
     new_list = [m for m in live_data if m.get("added_snapshot_id") == snapshot_id]

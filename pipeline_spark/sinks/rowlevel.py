@@ -1,11 +1,12 @@
-"""Row-level DELETE / UPDATE ... WHERE and keyed MERGE, planned once for
-both lakehouse formats.
+"""Row-level DELETE / UPDATE ... WHERE, keyed MERGE and compaction,
+planned once for both lakehouse formats.
 
-The Delta and Iceberg sinks share one ``where`` / ``set`` surface and
-one keyed-merge surface; this module is the only place that plans them.
-A format adapter opens the table and describes it as a :class:`Table`:
-its live data files, the stats test, a live-row reader, the stage step
-and (Delta) change-data staging.  :func:`mutate` then
+The Delta and Iceberg sinks share one ``where`` / ``set`` surface, one
+keyed-merge surface and one compaction surface; this module is the only
+place that plans them.  A format adapter opens the table and describes
+it as a :class:`Table`: its live data files, the stats test, a live-row
+reader, the stage step, (Delta) change-data staging and how files bin
+for compaction.  :func:`mutate` then
 
 1. checks ``set`` against the table's columns;
 2. keeps the files whose stats admit ``where``;
@@ -28,16 +29,29 @@ touched keys' range, and a row matches when its key is touched (a
 semi-join; survivors are the anti-join).  The adapter's commit appends
 the upsert rows beside the deletes: a keyed merge is a delete plus an
 append.
+
+:func:`compact` is the rewrite that keeps every row: it bin-packs the
+live files per ``bin_key`` (partition values; Iceberg adds the spec id)
+into ``targetFileBytes`` bins, reads each bin through the same live-row
+reader (deletes applied, lineage carried) and lays it out as one file in
+the table's sort order, or z-ordered.  The adapter's commit replaces the
+bins' files with the staged ones; a compaction that lost a true
+conflict re-plans (:func:`replan`).
 """
 
 from __future__ import annotations
 
+import math
 import urllib.parse
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
 from pipeline_spark.functions.sqltext import atomic_ddl, qi
 from pipeline_spark.sources.delta_native import data_filter_sql
+
+#: how many times a compaction that lost a true conflict re-plans from
+#: the fresh snapshot (a disjoint race only rebases its commit)
+REPLANS = 2
 
 _UNKNOWN_SET = {
     "delta": "delta update: set targets unknown columns {}",
@@ -65,6 +79,10 @@ class Table:
     lineage: tuple[str, str, int] | None = None  # (id, version, next version)
     # (group index, entries, matched rows, their updated rows or None)
     changes: Callable[[int, list[dict], Any, Any], None] | None = None
+    size: Callable[[dict], int] = lambda f: int(f.get("size") or 0)
+    # the unit a compaction bin never crosses
+    bin_key: Callable[[dict], tuple] = lambda f: ()
+    sort_cols: list[str] = field(default_factory=list)  # a bin's layout
 
 
 @dataclass
@@ -203,6 +221,88 @@ def merge(t: Table, df, keys: list[str], *, mor: bool,
     finally:
         for d in cached:
             d.unpersist()
+
+
+def compact(t: Table, *, target: int, min_files: int,
+            zorder: list[str] = (), rewrite_all: bool = False,
+            forced: set[str] = frozenset(),
+            commit: Callable[[Plan], dict]) -> dict | None:
+    """Plan a compaction of ``t`` and return ``commit(plan)``, or None
+    when no bin forms.  ``plan.files`` are the rewritten entries and
+    ``plan.staged`` their rewrite: every live row, with its lineage.
+
+    Files bin per ``t.bin_key``.  With ``zorder`` or ``rewrite_all``
+    every live file of a key is one bin; otherwise the files under
+    ``target`` bytes, and every file whose path is in ``forced``, pack
+    smallest first into bins of about ``target`` bytes, and a bin is
+    rewritten when it holds ``min_files`` files or a forced one.  A bin
+    is laid out as one file in ``t.sort_cols`` order, or with
+    ``zorder`` as ``ceil(bytes / target)`` files range-partitioned on
+    the Morton value of those columns."""
+    missing = [c for c in zorder if c not in t.columns]
+    if missing:
+        raise ValueError(
+            f"{t.fmt} compact: zOrderBy columns {missing} are not "
+            "data-file columns"
+        )
+    every = bool(zorder) or rewrite_all
+    keyed: dict[tuple, list[dict]] = {}
+    for f in t.files:
+        if every or t.size(f) < target or t.path_of(f) in forced:
+            keyed.setdefault(t.bin_key(f), []).append(f)
+    bins = list(keyed.values()) if every else [
+        b for files in keyed.values()
+        for b in _pack(t, files, target, min_files, forced)
+    ]
+    if not bins:
+        return None
+    staged: list = []
+    for i, files in enumerate(bins):
+        df = t.read(files, True).selectExpr(*map(qi, _out_cols(t)))
+        if zorder:
+            from pipeline_spark.functions.zorder import zvalue_column
+
+            df, z, tmps = zvalue_column(df.sparkSession, df, list(zorder))
+            n = max(1, math.ceil(sum(map(t.size, files)) / target))
+            df = (
+                df.withColumn("__z__", z).repartitionByRange(n, "__z__")
+                .sortWithinPartitions("__z__").drop("__z__", *tmps)
+            )
+        else:
+            df = df.coalesce(1)
+            if t.sort_cols:
+                df = df.sortWithinPartitions(*t.sort_cols)
+        staged += t.stage(i, files, df)
+    return commit(Plan([f for b in bins for f in b], staged=staged))
+
+
+def _pack(t, files, target, min_files, forced) -> list[list[dict]]:
+    bins: list[list[dict]] = []
+    cur: list[dict] = []
+    size, force = 0, False
+    for f in sorted(files, key=t.size):
+        cur.append(f)
+        size += t.size(f)
+        force = force or t.path_of(f) in forced
+        if size >= target:
+            if len(cur) >= min_files or force:
+                bins.append(cur)
+            cur, size, force = [], 0, False
+    if cur and (len(cur) >= min_files or force):
+        bins.append(cur)
+    return bins
+
+
+def replan(attempt: Callable[[], dict], conflicts: tuple) -> dict:
+    """``attempt()`` (plan from a fresh snapshot and commit), again up
+    to :data:`REPLANS` times while it raises one of ``conflicts``; the
+    files a lost attempt staged stay orphaned."""
+    for _ in range(REPLANS):
+        try:
+            return attempt()
+        except conflicts:
+            pass
+    return attempt()
 
 
 def _rewrite(t, candidates, m: _Match, set_exprs) -> Plan | None:

@@ -247,10 +247,7 @@ def plan_files(
                 "path": _strip_scheme(df["file_path"]),
                 "seq": int(seq),
                 "spec_id": int(m.get("partition_spec_id", 0) or 0),
-                # source manifest: lets writers (compaction) regroup files
-                # by schema GENERATION and re-embed each generation's
-                # write-time schema byte-for-byte
-                "manifest": manifest_path,
+                "manifest": manifest_path,  # the manifest listing it
             }
             if renames or absent or dropped:
                 rec["renames"] = renames
@@ -260,8 +257,8 @@ def plan_files(
             if isinstance(part, dict) and part:
                 rec["partition"] = dict(part)
             for stat_key in (
-                "record_count", "null_value_counts", "lower_bounds", "upper_bounds",
-                "first_row_id",
+                "record_count", "file_size_in_bytes", "null_value_counts",
+                "lower_bounds", "upper_bounds", "first_row_id",
             ):
                 if df.get(stat_key) is not None:
                     rec[stat_key] = df[stat_key]
@@ -1406,7 +1403,11 @@ def read_iceberg_native(spark, p: dict[str, Any]):
             meta=meta_in,
         )
     if not data:
-        raise ValueError(f"iceberg: snapshot has no data files at {table_path}")
+        # every row was deleted or compacted away (or none written yet)
+        sch = _spark_schema_of(meta)
+        if p.get("withRowIds"):
+            sch += ", `_row_id` bigint, `_last_updated_sequence_number` bigint"
+        return local_frame(spark, [], sch)
     all_data = data  # full live list BEFORE partition/data-filter pruning
     pfilter = p.get("partitionFilter")
     if pfilter:

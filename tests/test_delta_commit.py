@@ -252,16 +252,21 @@ def test_cluster_by_keeps_column_mapping(spark, tmp_path):
      set(), {"minReaderVersion": 2, "minWriterVersion": 5}),
     ({"minReaderVersion": 2, "minWriterVersion": 5}, {"columnMapping"},
      set(), None),
-    # a legacy column-mapped table moving to features lists it
+    # a legacy table moving to features lists every feature its legacy
+    # versions implied
     ({"minReaderVersion": 2, "minWriterVersion": 5}, set(),
      {"clustering", "domainMetadata"},
      {"minReaderVersion": 2, "minWriterVersion": 7,
-      "writerFeatures": ["clustering", "columnMapping", "domainMetadata"]}),
+      "writerFeatures": ["appendOnly", "changeDataFeed", "checkConstraints",
+                         "clustering", "columnMapping", "domainMetadata",
+                         "generatedColumns", "invariants"]}),
     ({"minReaderVersion": 2, "minWriterVersion": 5}, {"deletionVectors"},
      set(),
      {"minReaderVersion": 3, "minWriterVersion": 7,
       "readerFeatures": ["columnMapping", "deletionVectors"],
-      "writerFeatures": ["columnMapping", "deletionVectors"]}),
+      "writerFeatures": ["appendOnly", "changeDataFeed", "checkConstraints",
+                         "columnMapping", "deletionVectors",
+                         "generatedColumns", "invariants"]}),
     # features protocols union
     ({"minReaderVersion": 1, "minWriterVersion": 7,
       "writerFeatures": ["inCommitTimestamp"]}, {"columnMapping"}, set(),
@@ -272,11 +277,51 @@ def test_cluster_by_keeps_column_mapping(spark, tmp_path):
       "readerFeatures": ["deletionVectors"],
       "writerFeatures": ["deletionVectors"]}, {"deletionVectors"}, set(),
      None),
+    # every legacy writer version's implied features
+    ({"minReaderVersion": 1, "minWriterVersion": 2}, {"deletionVectors"},
+     set(),
+     {"minReaderVersion": 3, "minWriterVersion": 7,
+      "readerFeatures": ["deletionVectors"],
+      "writerFeatures": ["appendOnly", "deletionVectors", "invariants"]}),
+    ({"minReaderVersion": 1, "minWriterVersion": 6}, set(), {"rowTracking"},
+     {"minReaderVersion": 1, "minWriterVersion": 7,
+      "writerFeatures": ["appendOnly", "changeDataFeed", "checkConstraints",
+                         "columnMapping", "generatedColumns",
+                         "identityColumns", "invariants", "rowTracking"]}),
 ])
 def test_with_features(proto, reader, writer, want):
     from pipeline_spark.sinks.delta_native import _with_features
 
     assert _with_features(proto, reader=reader, writer=writer) == want
+
+
+def test_mor_delete_keeps_implied_legacy_features(spark, tmp_path):
+    """A generated column puts a table on the legacy ``{1, 4}`` protocol;
+    the deletion vectors of a ``method: mor`` delete move it to table
+    features, which must still list generatedColumns (and every other
+    feature writer 4 implied), or a feature-aware writer could skip the
+    generation expression."""
+    from pipeline_spark.sinks.delta_native import (
+        delete_delta_native,
+        write_delta_native,
+    )
+
+    tbl = str(tmp_path / "gen")
+    write_delta_native(spark, spark.range(0, 4).coalesce(1), {
+        "path": tbl, "generatedColumns": {"id2": "id * 2"},
+    })
+    assert _protocol(tbl) == {"minReaderVersion": 1, "minWriterVersion": 4}
+    delete_delta_native(spark, {
+        "path": tbl, "method": "mor",
+        "where": [{"key": "id", "op": "=", "value": 1}],
+    })
+    assert _protocol(tbl) == {
+        "minReaderVersion": 3, "minWriterVersion": 7,
+        "readerFeatures": ["deletionVectors"],
+        "writerFeatures": ["appendOnly", "changeDataFeed", "checkConstraints",
+                           "deletionVectors", "generatedColumns",
+                           "invariants"],
+    }
 
 
 # ---------------------------------------------------------------- goldens
@@ -431,6 +476,11 @@ def _ops():
         dn.compact_delta_native(spark, {"path": tbl, "zOrderBy": ["id", "g"]})
         return tbl
 
+    def zorder_row_tracking(spark, root):
+        tbl = base(spark, root, "zorder_rt", RT)
+        dn.compact_delta_native(spark, {"path": tbl, "zOrderBy": ["id", "g"]})
+        return tbl
+
     def dml(name, props=None, **p):
         def run(spark, root):
             tbl = base(spark, root, name, props)
@@ -507,6 +557,7 @@ def _ops():
         "compact": compact,
         "compact_row_tracking": compact_row_tracking,
         "zorder": zorder,
+        "zorder_row_tracking": zorder_row_tracking,
         "delete_cow": dml("delete_cow"),
         "delete_mor": dml("delete_mor", method="mor"),
         "update_cow_row_tracking": dml(

@@ -110,6 +110,27 @@ def test_optimize_materializes_and_preserves(spark, tmp_path):
     assert sorted(t.column(mat).to_pylist()) == [0, 1, 2, 3]
 
 
+def test_zorder_preserves_row_ids(spark, tmp_path):
+    """OPTIMIZE ZORDER BY keeps every row's id and commit version, as a
+    bin-pack does, even though it reorders the rows."""
+    tbl = str(tmp_path / "rt_z")
+    write_delta_native(
+        spark,
+        spark.createDataFrame([(0, 3), (1, 2)], "id long, k long").coalesce(1),
+        {"path": tbl, "properties": dict(RT)},
+    )
+    write_delta_native(
+        spark,
+        spark.createDataFrame([(2, 1), (3, 0)], "id long, k long").coalesce(1),
+        {"path": tbl, "mode": "append"},
+    )
+    before = _ids(spark, tbl)
+    assert before == [(0, 0, 0), (1, 1, 0), (2, 2, 1), (3, 3, 1)]
+    out = compact_delta_native(spark, {"path": tbl, "zOrderBy": ["k"]})
+    assert out["compacted_files"] == 2
+    assert _ids(spark, tbl) == before
+
+
 def test_optimize_then_dv_then_read(spark, tmp_path):
     """Materialized ids keep winning after later DV deletes."""
     tbl = str(tmp_path / "rt4")

@@ -448,6 +448,46 @@ def test_compact_vs_append_both_commit(spark, tmp_path, monkeypatch):
     )
 
 
+def test_compact_keeps_a_concurrent_delete_on_an_untouched_file(
+    spark, tmp_path, monkeypatch
+):
+    """Compaction drops exactly the delete files it planned against: a
+    position delete a racing commit lands on a file the compaction does
+    not rewrite rides along through the rebase (dropping it would bring
+    its row back)."""
+    import os
+
+    from pipeline_spark.sinks.iceberg_native import compact_iceberg_native
+    from pipeline_spark.sources.iceberg_native import plan_files
+
+    tbl = _mk(spark, tmp_path, [(i, "big") for i in range(20000)])
+    for lo in (20000, 20005):
+        write_iceberg_native(
+            spark.createDataFrame(
+                [(i, "small") for i in range(lo, lo + 5)], "id long, v string"
+            ).coalesce(1),
+            {"path": tbl, "mode": "append"},
+        )
+    delete_iceberg_native(spark, {
+        "path": tbl, "where": [{"key": "id", "op": "=", "value": 20007}],
+    })
+    big = max(os.path.getsize(d["path"]) for d in plan_files(tbl)[0])
+
+    def interleave():
+        delete_iceberg_native(spark, {
+            "path": tbl, "where": [{"key": "id", "op": "=", "value": 5}],
+        })
+
+    state = _race_local(monkeypatch, interleave)
+    out = compact_iceberg_native(spark, {"path": tbl, "targetFileBytes": big})
+    assert state["injected"]
+    assert out["compacted_files"] == 2
+    assert out["materialized_delete_files"] == 1
+    assert len(plan_files(tbl)[1]) == 1  # the racing delete
+    got = _ids(spark, {"path": tbl})
+    assert got == [i for i in range(20010) if i not in (5, 20007)]
+
+
 def test_three_way_interleave_all_disjoint_commit(
     spark, tmp_path, monkeypatch
 ):

@@ -325,6 +325,58 @@ def test_merge_job_counts(spark, tmp_path):
         assert got["iceberg", "cow", part] <= 6
 
 
+def test_delta_empty_merge_commits_nothing(spark, tmp_path):
+    """A merge with no remove, deletion vector or add action (an empty
+    batch) and no ``txn`` commits no version and stages no file."""
+    from pipeline_spark.sources.delta_native import replay_state
+
+    path = str(tmp_path / "t")
+    write_delta_native(spark, spark.range(5).coalesce(1), {"path": path})
+    for method in ("cow", "mor"):
+        out = merge_delta_native(spark, spark.createDataFrame(
+            [], "id long, __op__ string",
+        ), {"path": path, "primaryKeys": ["id"], "method": method})
+        assert out["merged_rows"] == 0 and out["upsert_files"] == 0
+    assert replay_state(path)[3] == 0
+    staged = [f for _r, _d, fs in os.walk(path) for f in fs
+              if f.endswith(".parquet")]
+    assert len(staged) == 1
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_compaction_commits_no_empty_file(spark, tmp_path, fmt):
+    """Two files whose every row a prior merge-on-read delete removed:
+    compaction retires both and adds nothing, rather than a 0-row
+    rewrite."""
+    from pipeline_spark.sinks.delta_native import compact_delta_native
+    from pipeline_spark.sinks.iceberg_native import compact_iceberg_native
+    from pipeline_spark.sources.delta_native import replay_state
+    from pipeline_spark.sources.iceberg_native import plan_files
+
+    path = str(tmp_path / fmt)
+    gone = [{"key": "id", "op": ">=", "value": 0}]
+    for lo in (0, 5):
+        df = spark.range(lo, lo + 5).coalesce(1)
+        if fmt == "delta":
+            write_delta_native(spark, df, {"path": path, "mode": "append"})
+        else:
+            write_iceberg_native(df, {"path": path,
+                                      "mode": "append" if lo else "create"})
+    if fmt == "delta":
+        delete_delta_native(spark, {"path": path, "where": gone,
+                                    "method": "mor"})
+        out = compact_delta_native(spark, {"path": path})
+        assert replay_state(path)[0] == []
+        read = read_delta_native
+    else:
+        delete_iceberg_native(spark, {"path": path, "where": gone})
+        out = compact_iceberg_native(spark, {"path": path})
+        assert plan_files(path)[:2] == ([], [])
+        read = read_iceberg_native
+    assert out["compacted_files"] == 2 and out["new_files"] == 0
+    assert read(spark, {"path": path}).count() == 0
+
+
 # ------------------------------------------------------------ AST guard
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "pipeline_spark"
@@ -376,3 +428,45 @@ def test_the_merge_scan_sees_the_planner():
     delta = _functions("sinks/delta_native.py")
     assert _calls(delta["_mutate_where"], "rowlevel", "mutate")
     assert not _calls(delta["_mutate_where"], "rowlevel", "merge")
+
+
+def _called(path: pathlib.Path, names: set[str]) -> list[str]:
+    """``name:line`` of every call to one of ``names`` in ``path``, as
+    a bare name or an attribute."""
+    out = []
+    for n in ast.walk(ast.parse(path.read_text())):
+        if isinstance(n, ast.Call):
+            f = n.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                f, "id", None)
+            if name in names:
+                out.append(f"{name}:{n.lineno}")
+    return out
+
+
+_LAYOUT = {"zvalue_column", "repartitionByRange"}
+
+
+def test_compaction_is_planned_in_rowlevel():
+    for path in (PKG / "sinks").glob("*.py"):
+        if path.name != "rowlevel.py":
+            assert _called(path, _LAYOUT) == [], path.name
+    defined = set()
+    for path in PKG.rglob("*.py"):
+        defined |= set(_functions(path.relative_to(PKG).as_posix()))
+    assert not defined & {
+        "_zorder_compact", "_compact_iceberg_once", "_read_evolved_group",
+    }
+    delta = _functions("sinks/delta_native.py")
+    iceberg = _functions("sinks/iceberg_native.py")
+    for fn in (delta["compact_delta_native"],
+               iceberg["compact_iceberg_native"]):
+        assert _calls(fn, "rowlevel", "compact"), fn.name
+
+
+def test_the_compaction_scan_sees_the_planner():
+    # a scan that finds nothing proves nothing
+    assert sorted(
+        c.split(":")[0]
+        for c in _called(PKG / "sinks/rowlevel.py", _LAYOUT)
+    ) == ["repartitionByRange", "zvalue_column"]
