@@ -328,10 +328,6 @@ def parse_dir_value(raw: str | None, kind: str):
     return raw
 
 
-def avro_partition_type(kind: str) -> Any:
-    return {"int": "int", "long": "long", "string": "string"}[kind]
-
-
 def spec_field_avro_type(transform: str, source_type: str) -> str:
     """Avro value type of a partition field reconstructed from TABLE
     METADATA alone (spec-JSON transform string + current-schema source

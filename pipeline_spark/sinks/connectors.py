@@ -226,12 +226,12 @@ def iceberg_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
     if ctx.input.isStreaming:
         # streaming: one native commit per micro-batch (append/overwrite-
         # first-batch, or mode: upsert = the one-commit keyed CDC shape).
-        # Exactly-once under checkpoint replay: each commit stamps
-        # (appId, batchId) into its snapshot summary and a replayed batch
-        # at or below the recorded high-water no-ops — Flink's own
-        # checkpoint-id-in-summary pattern.
+        # Exactly-once under checkpoint replay: each commit carries txn
+        # (appId, batchId), stamped into its snapshot summary; a replayed
+        # batch at or below the recorded high-water no-ops, before
+        # staging and on every rebase — Flink's checkpoint-id-in-summary
+        # pattern, and Delta's txn rule.
         from pipeline_spark.sinks.iceberg_native import (
-            last_streaming_batch,
             upsert_iceberg_native,
             write_iceberg_native,
         )
@@ -248,22 +248,16 @@ def iceberg_sink(ctx: ModuleContext) -> dict[str, DataFrame]:
         def write_batch(bdf, batch_id: int) -> None:
             if bdf.isEmpty():
                 return
-            if int(batch_id) <= last_streaming_batch(p, app_id):
-                return  # replayed micro-batch: already committed
-            sp = {**p, "summaryProperties": {
-                **(p.get("summaryProperties") or {}),
-                "pipeline-spark.app-id": app_id,
-                "pipeline-spark.batch-id": int(batch_id),
-            }}
+            txn = (app_id, int(batch_id))
             if first_mode in ("upsert", "merge"):
                 # streaming CDC: EVERY micro-batch merges by key — the
                 # one-commit equality-delete shape (O(batch), no scan);
                 # __op__ DELETE rows remove their keys.  `merge` and
                 # `upsert` are the same commit in MOR.
-                upsert_iceberg_native(ctx.spark, bdf, sp)
+                upsert_iceberg_native(ctx.spark, bdf, p, txn=txn)
                 return
             mode_b = first_mode if batch_id == 0 else "append"
-            write_iceberg_native(bdf, {**sp, "mode": mode_b})
+            write_iceberg_native(bdf, {**p, "mode": mode_b}, txn=txn)
 
         write_batches(
             ctx.input,

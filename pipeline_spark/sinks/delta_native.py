@@ -38,10 +38,10 @@ import os
 import time
 import urllib.parse
 import uuid
-from typing import Any
+from typing import Any, Iterator
 
 from pipeline_spark.registry import KIND_SINK, ModuleContext, module
-from pipeline_spark.sinks import lakefiles
+from pipeline_spark.sinks import conflicts, lakefiles
 from pipeline_spark.sinks.drive import write_batches
 from pipeline_spark.sources.delta_native import (
     _log_dir,
@@ -429,19 +429,10 @@ def write_delta_native(
     ]
 
     actions: list[dict] = []
-    ict_on_create = (
-        str(props.get("delta.enableInCommitTimestamps", "")).lower() == "true"
-    )
-    v2ckpt_on_create = (
-        str(props.get("delta.checkpointPolicy", "")).lower() == "v2"
-    )
     # row tracking (PROTOCOL.md Row Tracking): stable row identity —
     # fresh rows take baseRowId + position; rewrites preserve ids via
     # the MATERIALIZED columns named in the table config
-    rowtrack_on_create = (
-        str(props.get("delta.enableRowTracking", "")).lower() == "true"
-    )
-    if rowtrack_on_create:
+    if str(props.get("delta.enableRowTracking", "")).lower() == "true":
         props.setdefault(
             "delta.rowTracking.materializedRowIdColumnName",
             f"_row_id_col_{uuid.uuid4().hex[:12]}",
@@ -451,49 +442,10 @@ def write_delta_native(
             f"_row_commit_version_col_{uuid.uuid4().hex[:12]}",
         )
     if not exists:
-        if (ict_on_create or v2ckpt_on_create or cluster_by
-                or rowtrack_on_create):
-            # table features: features protocol required (minWriterVersion
-            # 7 lists every writer feature in use; reader features bump
-            # minReaderVersion to 3)
-            wfeats = {"inCommitTimestamp"} if ict_on_create else set()
-            rfeats = set()
-            if cm:
-                wfeats.add("columnMapping")
-                rfeats.add("columnMapping")
-            if v2ckpt_on_create:
-                # v2Checkpoint is BOTH a reader and writer feature
-                # (PROTOCOL.md: V2 Checkpoint Table Feature)
-                wfeats.add("v2Checkpoint")
-                rfeats.add("v2Checkpoint")
-            if cluster_by:
-                # clustered tables: writer-only features — readers
-                # ignore clustering entirely (PROTOCOL.md)
-                wfeats |= {"clustering", "domainMetadata"}
-            if generated:
-                wfeats.add("generatedColumns")
-            if rowtrack_on_create:
-                # writer-only: readers may ignore row ids (PROTOCOL.md)
-                wfeats |= {"rowTracking", "domainMetadata"}
-            proto: dict[str, Any] = {
-                "minReaderVersion": 3 if rfeats else 1,
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(wfeats),
-            }
-            if rfeats:
-                proto["readerFeatures"] = sorted(rfeats)
-            actions.append({"protocol": proto})
-        else:
-            # column mapping needs reader 2 / writer 5 (PROTOCOL.md)
-            # legacy versions: columnMapping needs reader2/writer5;
-            # generated columns writer4 (both cumulative)
-            proto_rw = (2, 5) if cm else ((1, 4) if generated else (1, 2))
-            actions.append({
-                "protocol": {
-                    "minReaderVersion": proto_rw[0],
-                    "minWriterVersion": proto_rw[1],
-                }
-            })
+        actions.append({"protocol": _create_protocol(
+            props, cm=bool(cm), generated=bool(generated),
+            clustered=bool(cluster_by),
+        )})
         actions.append({
             "metaData": {
                 "id": str(uuid.uuid4()),
@@ -791,8 +743,6 @@ def _with_ict(actions: list[dict], ict_value: int) -> list[dict]:
     return [{"commitInfo": ci}] + [a for a in actions if "commitInfo" not in a]
 
 
-#: how many lost races a commit rebases over before it gives up
-_COMMIT_RETRIES = 20
 #: the default ``checkpointInterval`` of every Delta commit
 CHECKPOINT_INTERVAL = 10
 
@@ -816,21 +766,10 @@ def commit(
     ``O_EXCL`` copy where hard links are missing), so a racing writer
     always loses loudly.  The loser reads the commits that beat it and
     rebases onto the next version unless one of them touched what the
-    operation declares in ``reads`` (delta-spark's ConflictChecker):
-
-    ``"append"``    a blind append: the schema, partitioning, CHECK
-                    constraints or appendOnly changed;
-    ``[...]``       a ``where`` domain (replaceWhere, DML, merge): any
-                    metaData, a remove of a file this commit removes, or
-                    a data-changing add whose partition values and stats
-                    admit the predicate (``[]`` admits every add);
-    ``"files"``     a layout rewrite (compaction, z-order): as a domain,
-                    but adds never conflict;
-    ``"metadata"``  alter: any metaData or protocol;
-    ``"table"``     a create (write, clone, convert), a full overwrite or
-                    a restore: anything.
-
-    A protocol this engine cannot read conflicts with every operation.
+    operation declares in ``reads`` — ``"append"``, a ``where`` list,
+    ``"files"``, ``"metadata"`` or ``"table"``, the one rule of both
+    formats (:func:`sinks.conflicts.check`) over the events
+    :func:`_events` maps the winning actions to.
     After the claim, a checkpoint every ``checkpoint_interval`` versions
     (None = the default) and the UniForm mirror sync.  Returns
     ``(version, retries)``; ``version`` is None when a commit that beat
@@ -856,6 +795,7 @@ def commit(
         actions = actions + [
             {"txn": {"appId": str(txn[0]), "version": int(txn[1])}}
         ]
+    removes = {a["remove"].get("path") for a in actions if "remove" in a}
     spool = os.path.join(log_dir, f"commit.{uuid.uuid4().hex}.tmp")
     retries = 0
     try:
@@ -888,23 +828,16 @@ def commit(
                     break
                 except FileExistsError:
                     pass
-            if reads == "table" or retries == _COMMIT_RETRIES:
-                raise FileExistsError(
-                    f"{who}: concurrent commit raced on version {version} "
-                    f"at {target} — retry the write"
-                )
             won = []
             while os.path.exists(target):
                 won.append((version, _read_commit(target)))
                 version += 1
                 target = os.path.join(log_dir, f"{version:020d}.json")
-            if txn is not None and any(
-                str(a["txn"].get("appId")) == str(txn[0])
-                and int(a["txn"].get("version", -1)) >= int(txn[1])
-                for _v, acts in won for a in acts if "txn" in a
+            if conflicts.check(
+                _events(won, meta), reads, removes=removes, txn=txn,
+                who=who, retries=retries,
             ):
                 return None, retries
-            _check_conflicts(won, reads, meta, actions, who)
             retries += 1
     finally:
         _remove_quiet(spool)
@@ -970,12 +903,14 @@ def _with_row_ids(
     return out
 
 
-def _check_conflicts(
-    won: list[tuple[int, list[dict]]], reads: str | list[dict], meta: dict,
-    actions: list[dict], who: str,
-) -> None:
-    """Raise ``FileExistsError`` when a commit in ``won`` (version,
-    actions) touched what ``reads`` declares (see :func:`commit`)."""
+def _events(
+    won: list[tuple[int, list[dict]]], meta: dict,
+) -> Iterator[conflicts.Event]:
+    """The format-neutral events of the commits in ``won`` (version,
+    actions) for an operation planned against the metaData ``meta``:
+    every ``txn`` first, then per action a shape or other metadata
+    change, a protocol upgrade, a removed path, or a data-changing add
+    with its partition-values-and-stats test."""
     from pipeline_spark.sources.delta_native import (
         _OK_READER_FEATURES,
         _column_mapping,
@@ -983,73 +918,55 @@ def _check_conflicts(
         stats_to_logical,
     )
 
-    where = reads if isinstance(reads, list) else None
-    cm = _column_mapping(meta) if where is not None else None
-    part_set = set(meta.get("partitionColumns") or [])
-    removes = {a["remove"].get("path") for a in actions if "remove" in a}
-    what, inside = (
-        ("replaceWhere", "inside the replaceWhere domain")
-        if who == "delta sink"
-        else ("operation", "matching this operation's read predicate")
-    )
+    Event = conflicts.Event
     for v, acts in won:
         for act in acts:
-            if "metaData" in act and reads == "append":
-                _check_append_meta(meta, act["metaData"])
-            elif "metaData" in act or ("protocol" in act and reads == "metadata"):
-                raise FileExistsError(
-                    f"{who}: concurrent commit {v} changed the table "
-                    "metadata mid-operation — re-plan against the new "
-                    "snapshot"
-                )
-            elif "protocol" in act and set(
-                act["protocol"].get("readerFeatures") or []
-            ) - _OK_READER_FEATURES:
+            if "txn" in act:
+                yield Event(conflicts.TXN, v, txn=(
+                    str(act["txn"].get("appId")),
+                    int(act["txn"].get("version", -1)),
+                ))
+    cm = _column_mapping(meta) if meta else None
+    part_set = set(meta.get("partitionColumns") or [])
+
+    def may_match(add: dict, where: list[dict]) -> bool:
+        chk = dict(add)
+        stats_to_logical([chk], cm)
+        return _stats_may_match(chk, where, None) and not _pv_disproves(
+            add, where, part_set, (cm or {}).get("phys_of") or {},
+        )
+
+    for v, acts in won:
+        for act in acts:
+            if "metaData" in act:
+                what = _shape_change(meta, act["metaData"])
+                yield Event(conflicts.SHAPE if what else conflicts.METADATA,
+                            v, what=what or "")
+            elif "protocol" in act:
                 # an upgrade this engine fully supports is benign (the
                 # first DV write raising the table to deletionVectors)
-                raise FileExistsError(
-                    f"{who}: concurrent commit {v} upgraded the table "
-                    "protocol past this writer's feature support — re-plan"
-                )
-            if "remove" in act and act["remove"].get("path") in removes:
-                # retrying would resurrect the other writer's tombstone
-                # or clobber its deletion vector
-                raise FileExistsError(
-                    f"{who}: concurrent commit {v} removed a file this "
-                    f"{what} also rewrites — re-plan against the new "
-                    "snapshot"
-                )
-            if where is not None and "add" in act and act["add"].get(
-                "dataChange", True
-            ):
-                chk = dict(act["add"])
-                stats_to_logical([chk], cm)
-                if _stats_may_match(chk, where, None) and not _pv_disproves(
-                    act["add"], where, part_set,
-                    (cm or {}).get("phys_of") or {},
-                ):
-                    raise FileExistsError(
-                        f"{who}: concurrent commit {v} added data {inside} "
-                        "— re-plan against the new snapshot"
-                    )
+                unknown = set(
+                    act["protocol"].get("readerFeatures") or []
+                ) - _OK_READER_FEATURES
+                yield Event(conflicts.SHAPE if unknown else conflicts.UPGRADE,
+                            v, what="protocol")
+            elif "remove" in act:
+                yield Event(conflicts.REMOVE, v, path=act["remove"].get("path"))
+            elif "add" in act and act["add"].get("dataChange", True):
+                yield Event(conflicts.ADD, v, may_match=(
+                    lambda where, add=act["add"]: may_match(add, where)))
 
 
-def _check_append_meta(old: dict, new: dict) -> None:
-    """A blind append's rows were checked against ``old``'s schema,
-    partitioning and constraints: an interleaved metaData that changed
-    any of them fails the append."""
-    if _schema_fingerprint(new["schemaString"]) != _schema_fingerprint(
-        old["schemaString"]
+def _shape_change(old: dict, new: dict) -> str | None:
+    """What of the schema, the partitioning and the constraints (CHECK
+    constraints, appendOnly) a blind append's rows were checked against
+    under ``old`` the metaData ``new`` changes, or None."""
+    if _schema_fingerprint(new.get("schemaString") or "{}") != (
+        _schema_fingerprint(old.get("schemaString") or "{}")
     ):
-        raise FileExistsError(
-            "delta sink: concurrent commit changed the table schema "
-            "mid-append — re-run the write against the new schema"
-        )
+        return "schema"
     if (new.get("partitionColumns") or []) != (old.get("partitionColumns") or []):
-        raise FileExistsError(
-            "delta sink: concurrent commit changed the table partitioning "
-            "mid-append — re-run the write"
-        )
+        return "partitioning"
 
     def guards(m: dict) -> dict:
         return {
@@ -1057,12 +974,7 @@ def _check_append_meta(old: dict, new: dict) -> None:
             if k.startswith("delta.constraints.") or k == "delta.appendOnly"
         }
 
-    if guards(new) != guards(old):
-        raise FileExistsError(
-            "delta sink: concurrent commit changed table constraints "
-            "mid-append — rows were validated against the old ones; "
-            "re-run the write"
-        )
+    return "constraints" if guards(new) != guards(old) else None
 
 
 def _maybe_uniform_sync(
@@ -1477,16 +1389,22 @@ def _with_features(
     """``proto`` with the table features ``reader`` (reader and writer
     features) and ``writer`` (writer-only) added, or None when it already
     has them (PROTOCOL.md Table Features).  A legacy protocol asking only
-    for column mapping takes the legacy reader 2 / writer 5; any other
-    feature moves it to table features, listing every feature its legacy
+    for features a legacy writer version implies takes the lowest such
+    version (column mapping: reader 2 / writer 5); any other feature
+    moves it to table features, listing every feature its legacy
     versions implied.  A protocol already on table features keeps every
     feature it lists."""
     r = int(proto.get("minReaderVersion", 1))
     w = int(proto.get("minWriterVersion", 2))
-    if w < 7 and set(reader) | set(writer) <= {"columnMapping"}:
-        if r >= 2 and w >= 5:
+    legacy = {f: v for v, f in _LEGACY_WRITER}
+    if w < 7 and set(reader) <= {"columnMapping"} and set(writer) <= set(legacy):
+        need = (
+            max(r, 2) if reader else r,
+            max([w] + [legacy[f] for f in set(reader) | set(writer)]),
+        )
+        if need == (r, w):
             return None
-        return {"minReaderVersion": max(r, 2), "minWriterVersion": max(w, 5)}
+        return {"minReaderVersion": need[0], "minWriterVersion": need[1]}
     old_rf = set(proto.get("readerFeatures") or [])
     old_wf = set(proto.get("writerFeatures") or [])
     # legacy reader 2 carries column mapping
@@ -1506,6 +1424,38 @@ def _with_features(
             and (not on_r3 or rf == old_rf)):
         return None
     return out
+
+
+def _create_protocol(
+    conf: dict, *, cm: bool, generated: bool, clustered: bool,
+) -> dict:
+    """The protocol a create needs for its configuration ``conf`` and
+    schema, through :func:`_with_features`: from writer 1, which implies
+    no feature, a table whose features all have a legacy writer version
+    takes the lowest one (writer 2 at least — every plain table's), any
+    other table lists exactly the features it uses."""
+    def on(key: str) -> bool:
+        return str(conf.get(key, "")).lower() == "true"
+
+    writer = {
+        f for f, used in (
+            ("changeDataFeed", on("delta.enableChangeDataFeed")),
+            ("checkConstraints", any(
+                k.startswith("delta.constraints.") for k in conf)),
+            ("generatedColumns", generated),
+            ("inCommitTimestamp", on("delta.enableInCommitTimestamps")),
+        ) if used
+    }
+    if clustered:
+        writer |= {"clustering", "domainMetadata"}
+    if on("delta.enableRowTracking"):
+        writer |= {"rowTracking", "domainMetadata"}
+    reader = {"columnMapping"} if cm else set()
+    if str(conf.get("delta.checkpointPolicy", "")).lower() == "v2":
+        reader.add("v2Checkpoint")
+    return _with_features(
+        {"minReaderVersion": 1, "minWriterVersion": 1}, reader, writer,
+    ) or {"minReaderVersion": 1, "minWriterVersion": 2}
 
 
 def _dv_actions(

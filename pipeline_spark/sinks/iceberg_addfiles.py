@@ -35,16 +35,15 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     from pipeline_spark.functions.icebergpart import parse_dir_value
     from pipeline_spark.sinks import lakefiles
     from pipeline_spark.sinks.iceberg_native import (
+        Added,
+        Change,
         IcebergTable,
-        _manifest_list_of,
         _name_mapping,
-        _new_snapshot,
-        commit_snapshot,
+        commit_changes,
         create_table,
         current_schema,
         default_spec,
         iceberg_schema,
-        write_manifest,
     )
     from pipeline_spark.sources.iceberg_native import _strip_scheme
 
@@ -124,31 +123,16 @@ def add_files_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
     kinds = {f["name"]: "long" if f["type"] in ("int", "long") else "string"
              for f in schema["fields"]}
-    snapshot_id, seq, commit_uuid = _new_snapshot(base)
     live = [f for f in lakefiles.read(files, spark) if f.rows != 0]
     if not live:
         raise ValueError(f"iceberg addFiles: only empty parquet in {src_dir}")
     # the files never hold the partition columns, so their footer stats
-    # cover the data columns only; a v3 table gives them row ids
-    fv = int(base.get("format-version", 2))
-    entries = lakefiles.to_iceberg_entries(
-        [(f, {c: parse_dir_value(f.partition.get(c), kinds[c])
-              for c in part_cols}) for f in live],
-        snapshot_id, seq, schema, base if fv >= 3 else None,
-    )
-    manifests = _manifest_list_of(base, base.get("current-snapshot-id"))
-    manifests.append(write_manifest(
-        os.path.join(handle.meta_dir, f"{commit_uuid}-m0.avro"), entries,
-        seq=seq, snapshot_id=snapshot_id, spec=spec, schema=schema, fv=fv,
-    ))
-    total_rows = manifests[-1]["added_rows_count"]
-    commit_snapshot(
-        handle, base, manifests, {
-            "operation": "append",
-            "added-data-files": len(entries),
-            "added-records": total_rows,
-            "imported-from": src_dir,
-        },
-        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
-    )
-    return {"added_files": len(entries), "rows": total_rows}
+    # cover the data columns only; a v3 table gives them row ids.  An
+    # import into an existing table is a blind append.
+    commit_changes(handle, base, Change(
+        "append",
+        added=[Added(f, {c: parse_dir_value(f.partition.get(c), kinds[c])
+                         for c in part_cols}) for f in live],
+        summary={"imported-from": src_dir},
+    ), reads="append" if prev_meta is not None else "table")
+    return {"added_files": len(live), "rows": sum(f.rows for f in live)}

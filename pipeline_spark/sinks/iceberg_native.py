@@ -44,11 +44,12 @@ import re
 import time
 import urllib.parse
 import uuid
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Iterator
 
 from pipeline_spark.functions.avroocf import write_ocf_bytes
 from pipeline_spark.functions.parquetschema import read_parquet
-from pipeline_spark.sinks import lakefiles
+from pipeline_spark.sinks import conflicts, lakefiles
 from pipeline_spark.sources.iceberg_native import (
     _strip_scheme,
     load_table_metadata,
@@ -546,8 +547,7 @@ def _spec_avro_fields(spec: dict, schema: dict) -> list[dict]:
 def write_manifest(
     path: str, entries: list[dict], *, seq: int, snapshot_id: int,
     spec: dict, schema: dict | str | None = None, fv: int = 2,
-    content: int = 0, part_fields: list[dict] | None = None,
-    writer: tuple[dict, dict] | None = None,
+    content: int = 0, writer: tuple[dict, dict] | None = None,
 ) -> dict:
     """Write one manifest (OCF avro) and return its manifest-list entry:
     the file/row counts and the minimum sequence number come from the
@@ -560,8 +560,7 @@ def write_manifest(
         avro_schema, header = writer
     else:
         avro_schema = _manifest_entry_schema(
-            _spec_avro_fields(spec, schema) if part_fields is None
-            else part_fields,
+            _spec_avro_fields(spec, schema),
             dv_fields=any(e["data_file"].get("file_format") == "PUFFIN"
                           for e in entries),
             lineage_fields=fv >= 3 and content == 0,
@@ -625,6 +624,7 @@ def commit_snapshot(
     list_path = os.path.join(
         table.meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
     )
+    os.makedirs(table.meta_dir, exist_ok=True)
     with open(list_path, "wb") as fh:
         fh.write(write_ocf_bytes(
             _MANIFEST_FILE_SCHEMA, manifests,
@@ -656,14 +656,397 @@ def commit_snapshot(
     )
 
 
-def write_iceberg_native(df, p: dict[str, Any]) -> None:
+@dataclass
+class Added:
+    """A file one snapshot adds: data (``content`` 0), position deletes
+    (1) or equality deletes (2), with its typed ``partition`` record
+    under spec ``spec_id`` (None: the default spec for data, an
+    unpartitioned spec for deletes).  ``dv`` is a deletion vector's
+    puffin addressing (``referenced_data_file``, ``content_offset``,
+    ``content_size_in_bytes``)."""
+
+    file: lakefiles.DataFile
+    partition: dict = field(default_factory=dict)
+    spec_id: int | None = None
+    content: int = 0
+    equality_ids: list[int] | None = None
+    dv: dict | None = None
+
+
+@dataclass
+class Change:
+    """What one snapshot changes, for :func:`commit_changes`: the
+    ``added`` files, the data paths ``removed``, the delete entries
+    ``superseded`` (``(path, content_offset)``, offset None for a whole
+    position-delete parquet), the metadata ``updates`` riding the
+    snapshot, its ``operation`` and extra ``summary`` keys.  ``schema``
+    is the manifests' write-time schema (default: the table's current
+    one); ``replace_all`` starts the snapshot empty instead of from the
+    base's manifests (an overwrite).  A change without an ``operation``
+    commits its updates alone (an alter)."""
+
+    operation: str | None
+    added: list[Added] = field(default_factory=list)
+    removed: set[str] = field(default_factory=set)
+    superseded: set[tuple[str, int | None]] = field(default_factory=set)
+    updates: list[dict] = field(default_factory=list)
+    summary: dict = field(default_factory=dict)
+    schema: dict | None = None
+    replace_all: bool = False
+
+
+#: the table property the first equality delete stamps its sequence
+#: number into (see sources/iceberg_native.py plan_equality_deletes)
+_EQ_STRICT = "pipeline-spark.eq-scope-strict-since-seq"
+
+
+def commit_changes(
+    table: IcebergTable, base: dict, change: Change, *,
+    reads: str | list[dict], txn: tuple[str, int] | None = None,
+    ref: str = "main",
+) -> int | None:
+    """Land ``change`` on ``ref`` as one snapshot of the table whose
+    metadata the operation planned against is ``base``: the one place
+    an Iceberg snapshot is assembled.
+
+    Each attempt encodes the added files at the sequence number,
+    snapshot id and v3 ``first-row-id`` the snapshot lands at, one ADDED
+    manifest per (content, spec); carries untouched manifests forward
+    verbatim; and rewrites in place only the manifests holding a removed
+    or superseded entry (survivors EXISTING at their sequence numbers,
+    the rest DELETED under the new snapshot).  Delete files also bring
+    their metadata: a deletion vector upgrades the table to v3, a global
+    delete on a partitioned table is declared under an unpartitioned
+    spec (registered if missing), and the first equality delete stamps
+    its sequence number.  ``txn=(app id, batch id)`` is stamped into the
+    summary.
+
+    A lost race (``FileExistsError`` from the version claim,
+    ``CommitConflictError`` from a REST catalog) maps the interleaved
+    commits to events for the rule both formats share
+    (:func:`sinks.conflicts.check`) and rebases on the fresh metadata;
+    an interleave that cannot be read keeps the original conflict.
+    Returns the snapshot id, or None when an interleaved snapshot
+    carries ``txn``: a replay that deletes its staged files and writes
+    nothing."""
+    from pipeline_spark.sources.iceberg_native import norm_path
+    from pipeline_spark.sources.iceberg_rest import CommitConflictError
+
+    meta, retries, deletes = base, 0, None
+    while True:
+        try:
+            return _snapshot(table, meta, change, txn, ref)
+        except (FileExistsError, CommitConflictError) as lost:
+            fresh = table.load()
+            try:
+                if deletes is None:
+                    deletes = _deleted_from(change)
+                replay = conflicts.check(
+                    _events(table.path, base, fresh), reads,
+                    removes={norm_path(p) for p in change.removed},
+                    deletes=deletes, txn=txn, who="iceberg", retries=retries,
+                )
+            except FileExistsError:
+                raise
+            except (OSError, ValueError, KeyError):
+                # fresh metadata this engine cannot plan proves nothing
+                raise lost from None
+        if replay:
+            for path in {a.file.path for a in change.added}:
+                try:
+                    os.remove(path)
+                except OSError:
+                    pass
+            return None
+        meta, retries = fresh, retries + 1
+
+
+def _snapshot(
+    table: IcebergTable, meta: dict, change: Change,
+    txn: tuple[str, int] | None, ref: str,
+) -> int | None:
+    """One attempt of :func:`commit_changes` on the metadata ``meta``."""
+    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
+
+    updates = list(change.updates)
+    if change.operation is None:
+        commit(table, meta, updates, [{
+            "type": "assert-current-schema-id",
+            "current-schema-id": meta.get("current-schema-id", 0),
+        }])
+        return None
+    snapshot_id, seq, commit_uuid = _new_snapshot(meta)
+    data = [a for a in change.added if not a.content]
+    deletes = [a for a in change.added if a.content]
+    if any(a.dv for a in deletes) and int(meta.get("format-version", 2)) < 3:
+        # puffin DVs are a v3 construct: a spec-strict reader must see
+        # format-version 3 or it rightly rejects the manifests
+        updates.append({"action": "upgrade-format-version", "format-version": 3})
+    # global deletes (path-addressed positions, table-wide equality
+    # keys) on a PARTITIONED table: an all-null record under the default
+    # spec reads as the NULL partition to strict readers, so they are
+    # declared under an unpartitioned spec, registered if missing
+    specs = {int(sp.get("spec-id", 0)): sp
+             for sp in meta.get("partition-specs") or []}
+    del_spec = default_spec(meta)
+    if del_spec.get("fields") and any(a.spec_id is None for a in deletes):
+        del_spec = next((sp for sp in specs.values() if not sp.get("fields")),
+                        None) or {"spec-id": max(specs, default=0) + 1,
+                                  "fields": []}
+        if int(del_spec["spec-id"]) not in specs:
+            updates.append({"action": "add-spec", "spec": del_spec})
+    if any(a.content == 2 for a in deletes) and _EQ_STRICT not in (
+        meta.get("properties") or {}
+    ):
+        # self-identifying equality deletes: the first one's sequence
+        # number is the cutoff of the reader's legacy-ambiguity check
+        updates.append({"action": "set-properties",
+                        "updates": {_EQ_STRICT: str(seq)}})
+    planned = apply_updates(meta, updates)
+    fv = int(planned.get("format-version", 2))
+    schema = change.schema or current_schema(planned)
+    specs = {int(sp.get("spec-id", 0)): sp
+             for sp in planned.get("partition-specs") or []}
+
+    def path() -> str:
+        return os.path.join(table.meta_dir, f"{commit_uuid}-m{len(out)}.avro")
+
+    head = meta.get("current-snapshot-id")
+    if ref != "main":  # a new branch forks from main
+        head = ((meta.get("refs") or {}).get(ref) or {}).get("snapshot-id", head)
+    removed = set(change.removed) | {
+        urllib.parse.unquote(p) for p in change.removed
+    }
+
+    def gone(e: dict) -> bool:
+        d = e["data_file"]
+        path_ = _strip_scheme(str(d.get("file_path") or ""))
+        if not d.get("content"):
+            return path_ in removed
+        off = d.get("content_offset")
+        return (path_, None if off is None else int(off)) in change.superseded
+
+    out: list[dict] = []
+    for m in [] if change.replace_all else _manifest_list_of(meta, head):
+        if not (change.superseded if m.get("content") else removed):
+            out.append(m)  # untouched: the list entry carries forward
+            continue
+        wschema, mmeta, entries = read_ocf_file_with_meta(
+            _strip_scheme(m["manifest_path"])
+        )
+        live = [e for e in entries if e.get("status") != 2 and e.get("data_file")]
+        if not any(gone(e) for e in live):
+            out.append(m)
+            continue
+        # rewritten in place under the manifest's own writer schema and
+        # header (write-time schema, spec, partition layout): survivors
+        # EXISTING at their materialized sequence numbers, the rest
+        # DELETED under this snapshot
+        inherit = int(m.get("sequence_number") or 0)
+        rows = []
+        for e in live:
+            eseq = e.get("sequence_number")
+            eseq = inherit if eseq is None else int(eseq)
+            fseq = e.get("file_sequence_number")
+            dead = gone(e)
+            rows.append({
+                **e, "status": 2 if dead else 0,
+                "snapshot_id": snapshot_id if dead else e.get("snapshot_id"),
+                "sequence_number": eseq,
+                "file_sequence_number": eseq if fseq is None else int(fseq),
+            })
+        out.append(write_manifest(
+            path(), rows, seq=seq, snapshot_id=snapshot_id,
+            spec={"spec-id": int(m.get("partition_spec_id") or 0)},
+            content=int(m.get("content") or 0),
+            writer=(wschema, {k: v.decode() for k, v in mmeta.items()
+                              if not k.startswith("avro.")}),
+        ))
+
+    # ADDED entries: data files with field-id keyed stats and, on a v3
+    # table, explicit first_row_id ranges off next-row-id in order
+    groups: dict[tuple[int, int], list[dict]] = {}
+    entries = lakefiles.to_iceberg_entries(
+        [(a.file, a.partition) for a in data], snapshot_id, seq, schema,
+        planned if fv >= 3 else None,
+    )
+    for a, e in zip(data, entries):
+        sid = planned.get("default-spec-id", 0) if a.spec_id is None else a.spec_id
+        groups.setdefault((0, int(sid)), []).append(e)
+    for a in deletes:
+        e = lakefiles.to_iceberg_entry(
+            a.file, snapshot_id, seq, a.partition, content=a.content,
+            equality_ids=a.equality_ids,
+        )
+        if a.dv:
+            e["data_file"].update(file_format="PUFFIN", **a.dv)
+        sid = del_spec["spec-id"] if a.spec_id is None else a.spec_id
+        groups.setdefault((1, int(sid)), []).append(e)
+    for (content, sid), group in sorted(groups.items()):
+        out.append(write_manifest(
+            path(), group, seq=seq, snapshot_id=snapshot_id, spec=specs[sid],
+            schema=schema, fv=fv, content=content,
+        ))
+
+    def total(kind: int, key: str, mine: bool = True) -> int:
+        return sum(
+            int(m.get(key) or 0) for m in out
+            if int(m.get("content") or 0) == kind
+            and (not mine or m.get("added_snapshot_id") == snapshot_id)
+        )
+
+    summary: dict[str, Any] = {
+        "operation": change.operation,
+        "added-data-files": len(data),
+        "added-records": sum(a.file.rows for a in data),
+    }
+    for key, n in (
+        ("deleted-data-files", total(0, "deleted_files_count")),
+        ("deleted-records", total(0, "deleted_rows_count")),
+        ("added-delete-files", len(deletes)),
+        ("removed-delete-files", total(1, "deleted_files_count")),
+        ("added-position-deletes",
+         sum(a.file.rows for a in deletes if a.content == 1)),
+        ("added-equality-deletes",
+         sum(a.file.rows for a in deletes if a.content == 2)),
+    ):
+        if n:
+            summary[key] = n
+    summary["total-records"] = sum(
+        total(0, k, mine=False) for k in ("added_rows_count", "existing_rows_count")
+    )
+    summary["total-data-files"] = sum(
+        total(0, k, mine=False) for k in ("added_files_count", "existing_files_count")
+    )
+    summary.update(change.summary)
+    if txn is not None:
+        # the streaming replay guard, Flink's checkpoint-id-in-summary
+        summary["pipeline-spark.app-id"] = str(txn[0])
+        summary["pipeline-spark.batch-id"] = int(txn[1])
+    commit_snapshot(
+        table, meta, out, summary, snapshot_id=snapshot_id, seq=seq,
+        commit_uuid=commit_uuid, ref=ref, updates=updates,
+    )
+    return snapshot_id
+
+
+def _deleted_from(change: Change) -> set[str]:
+    """The data files ``change``'s position deletes and deletion vectors
+    delete rows from (a position-delete parquet's ``file_path`` column
+    is read back: small by design, and only after a lost race)."""
+    import pyarrow.parquet as pq
+
+    from pipeline_spark.sources.iceberg_native import norm_path
+
+    out: set[str] = set()
+    for a in change.added:
+        if a.dv:
+            out.add(norm_path(a.dv["referenced_data_file"]))
+        elif a.content == 1:
+            out |= {norm_path(p) for p in pq.read_table(
+                a.file.path, columns=["file_path"]
+            ).column("file_path").to_pylist()}
+    return out
+
+
+def _events(
+    table_path: str, base: dict, fresh: dict,
+) -> Iterator[conflicts.Event]:
+    """The format-neutral events between the metadata an operation
+    planned against (``base``) and ``fresh`` metadata: the ``txn`` of
+    every interleaved snapshot; a shape change (table identity, schema,
+    partitioning, format version) or another metadata change (table
+    properties, sort order); a rollback; and, from the two snapshots'
+    plans, every removed data file, every added one but a ``replace``
+    snapshot's (a compaction changes no row) and every new row-level
+    delete with the data file it targets."""
+    import pyarrow.parquet as pq
+
+    from pipeline_spark.sources.iceberg_native import (
+        _bounds_may_match,
+        norm_path,
+        plan_files,
+    )
+
+    Event = conflicts.Event
+    at = fresh.get("current-snapshot-id")
+    known = {s.get("snapshot-id") for s in base.get("snapshots") or []}
+    new = [s for s in fresh.get("snapshots") or []
+           if s.get("snapshot-id") not in known]
+    for s in new:
+        summary = s.get("summary") or {}
+        if "pipeline-spark.app-id" in summary:
+            yield Event(conflicts.TXN, s["snapshot-id"], txn=(
+                str(summary["pipeline-spark.app-id"]),
+                int(summary.get("pipeline-spark.batch-id", -1)),
+            ))
+    for key, what in (("table-uuid", "identity"),
+                      ("current-schema-id", "schema"),
+                      ("default-spec-id", "partitioning")):
+        if fresh.get(key) != base.get(key):
+            yield Event(conflicts.SHAPE, at, what=what)
+    fvs = (int(base.get("format-version", 2)), int(fresh.get("format-version", 2)))
+    if fvs[0] != fvs[1]:
+        # every committer carries the format forward and stamps v3 row
+        # lineage on rebase: the 2→3 upgrade (a concurrent deletion
+        # vector) is an upgrade this engine writes
+        yield Event(conflicts.UPGRADE if fvs == (2, 3) else conflicts.SHAPE,
+                    at, what="format-version")
+    if any(fresh.get(k) != base.get(k)
+           for k in ("properties", "default-sort-order-id")):
+        yield Event(conflicts.METADATA, at)
+    base_cur = base.get("current-snapshot-id")
+    if at == base_cur:
+        return
+    if base_cur is not None and base_cur not in {
+        s.get("snapshot-id") for s in fresh.get("snapshots") or []
+    }:
+        yield Event(conflicts.ROLLBACK, at)
+        return
+    base_data, base_dels, _ = plan_files(table_path, meta=base)
+    fresh_data, fresh_dels, _ = plan_files(table_path, meta=fresh)
+    fresh_live = {norm_path(d["path"]) for d in fresh_data}
+    for d in base_data:
+        if norm_path(d["path"]) not in fresh_live:
+            yield Event(conflicts.REMOVE, at, path=norm_path(d["path"]))
+    base_live = {norm_path(d["path"]) for d in base_data}
+    replaced = {int(s.get("sequence-number") or 0) for s in new
+                if (s.get("summary") or {}).get("operation") == "replace"}
+    id2field = {f["id"]: f for f in current_schema(fresh)["fields"]}
+    for d in fresh_data:
+        if norm_path(d["path"]) not in base_live and d["seq"] not in replaced:
+            yield Event(conflicts.ADD, at, may_match=(
+                lambda where, d=d: _bounds_may_match(d, where, id2field)))
+    seen = {(norm_path(d["path"]), d.get("content_offset")) for d in base_dels}
+    for d in fresh_dels:
+        if (norm_path(d["path"]), d.get("content_offset")) in seen:
+            continue
+        if d.get("content") == 2:
+            yield Event(conflicts.DELETE, at)  # every older data file
+        elif d.get("referenced_data_file"):
+            yield Event(conflicts.DELETE, at,
+                        path=norm_path(d["referenced_data_file"]))
+        else:
+            for p in set(pq.read_table(d["path"], columns=["file_path"])
+                         .column("file_path").to_pylist()):
+                yield Event(conflicts.DELETE, at, path=norm_path(p))
+
+
+def write_iceberg_native(
+    df, p: dict[str, Any], txn: tuple[str, int] | None = None,
+) -> None:
     """Commit ``df`` to a filesystem Iceberg v2 table at ``p['path'|'table']``,
     or through a REST catalog (``catalog: {uri}`` + ``table: ns.t`` +
     ``location`` for first creation): data/manifest/manifest-list files
     stage identically, but the metadata commit becomes the spec's
     optimistic CommitTableRequest (assert-ref-snapshot-id requirement +
     add-snapshot / set-snapshot-ref updates) — a concurrent writer's
-    conflict surfaces as a loud retryable error, never a lost update."""
+    conflict surfaces as a loud retryable error, never a lost update.
+
+    ``txn=(appId, batchId)`` makes the write idempotent: a table that
+    already records this stream at or past this batch is left as it is
+    (a replayed micro-batch), checked before staging and again by every
+    rebase of the commit."""
     if not p.get("catalog"):
         loc = str(p.get("path") or p.get("table") or "")
         if not loc or "://" in loc.replace("file://", ""):
@@ -673,6 +1056,8 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 "runtime jar)"
             )
     table = IcebergTable(p, must_exist=False, stage=True)
+    if txn is not None and int(txn[1]) <= _last_batch(table.meta, txn[0]):
+        return  # this batch already committed: a replayed micro-batch
     table_path = table.path
     mode = str(p.get("mode", "append")).lower()
     if mode == "addfiles":
@@ -708,7 +1093,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                     "delete commits target main — merge the branch "
                     "without method, or upsert after a branch write"
                 )
-            upsert_iceberg_native(spark, df, p)
+            upsert_iceberg_native(spark, df, p, txn=txn)
             return
         if branch is None:
             # FILE-SCOPED copy-on-write merge (r8, VERDICT r7 ask #1):
@@ -759,30 +1144,15 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
             merged = kept.unionByName(upserts)
         else:
             merged = upserts
-        return write_iceberg_native(merged, {**p, "mode": "overwrite"})
+        return write_iceberg_native(merged, {**p, "mode": "overwrite"}, txn)
     # partition transforms (identity/bucket/truncate/year/month/day/hour)
     # — spec-shaped native commits; see functions/icebergpart.py
     from pipeline_spark.functions.icebergpart import (
-        avro_partition_type,
         parse_partition_spec,
         spec_transform_str,
-        transform_column,
     )
 
-    pfields = parse_partition_spec(p)
-    part_info: list[tuple[str, dict, str]] = []  # (tmp col, field, kind)
-    df_w = df
-    for i, fld in enumerate(pfields):
-        if fld["source"] not in df.columns:
-            raise ValueError(
-                f"iceberg partition source '{fld['source']}' not in input"
-            )
-        col, kind = transform_column(fld, df.schema[fld["source"]].dataType)
-        tmp = f"_ip_{i}"
-        df_w = df_w.withColumn(tmp, col)
-        part_info.append((tmp, fld, kind))
-
-    meta_dir = table.meta_dir
+    df_w, part_info = _with_transforms(df, parse_partition_spec(p))
     prev_meta = table.meta
     if branch and prev_meta is None:
         # Iceberg refuses branch writes to tables that do not exist: the
@@ -805,21 +1175,13 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         # would corrupt the metadata for every reader.  Checked BEFORE the
         # data write so a rejected append leaves no orphan files.  An
         # overwrite with a new spec adds it the same way an evolution does.
-        from pipeline_spark.functions.icebergpart import spec_transform_str as _sts
-
-        prev_specs = prev_meta.get("partition-specs") or [{}]
-        default_spec = next(
-            (
-                sp for sp in prev_specs
-                if sp.get("spec-id", 0) == prev_meta.get("default-spec-id", 0)
-            ),
-            prev_specs[0],
-        )
+        dspec = default_spec(prev_meta)
         prev_fields = [
-            (f.get("name"), f.get("transform"))
-            for f in default_spec.get("fields", [])
+            (f.get("name"), f.get("transform")) for f in dspec.get("fields", [])
         ]
-        new_fields = [(fld["name"], _sts(fld)) for _t, fld, _k in part_info]
+        new_fields = [
+            (fld["name"], spec_transform_str(fld)) for _t, fld, _k in part_info
+        ]
         if prev_fields != new_fields:
             if p.get("evolvePartitionSpec") or mode != "append":
                 # partition-spec EVOLUTION (r7, spec §Partition Evolution):
@@ -831,10 +1193,10 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
                 # keys, so files that predate a partition field simply
                 # aren't pruned by it (Iceberg's own rule).
                 evolve_spec = True
-                prev_spec_ids = [
-                    sp.get("spec-id", 0) for sp in prev_specs if sp
-                ]
-                this_spec_id = max(prev_spec_ids, default=0) + 1
+                this_spec_id = max((
+                    sp.get("spec-id", 0)
+                    for sp in prev_meta.get("partition-specs") or []
+                ), default=0) + 1
                 base = int(prev_meta.get("last-partition-id", 999)) + 1
                 part_field_ids = [base + i for i in range(len(part_info))]
             else:
@@ -848,7 +1210,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         else:
             # reuse the table's default spec VERBATIM — field-ids included
             this_spec_id = prev_meta.get("default-spec-id", 0)
-            dflds = default_spec.get("fields", [])
+            dflds = dspec.get("fields", [])
             if len(dflds) == len(part_info):
                 part_field_ids = [
                     f.get("field-id", 1000 + i) for i, f in enumerate(dflds)
@@ -996,26 +1358,7 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
     # append with no param inherits the table's default sort order.
     sort_by = [str(c) for c in (p.get("sortBy") or [])]
     if not sort_by and mode == "append" and prev_meta is not None:
-        dsid = prev_meta.get("default-sort-order-id", 0)
-        order = next(
-            (o for o in (prev_meta.get("sort-orders") or [])
-             if o.get("order-id") == dsid),
-            None,
-        ) if dsid else None
-        if order:
-            cur_s = next(
-                (s for s in prev_meta.get("schemas", [])
-                 if s.get("schema-id", 0)
-                 == prev_meta.get("current-schema-id", 0)),
-                {"fields": []},
-            )
-            by_id = {f["id"]: f["name"] for f in cur_s["fields"]}
-            sort_by = [
-                by_id[f["source-id"]]
-                for f in order.get("fields", [])
-                if f.get("transform") == "identity"
-                and f.get("source-id") in by_id
-            ]
+        sort_by = _default_sort_cols(prev_meta, current_schema(prev_meta))
     if sort_by:
         missing_s = [c for c in sort_by if c not in df.columns]
         if missing_s:
@@ -1052,160 +1395,72 @@ def write_iceberg_native(df, p: dict[str, Any]) -> None:
         _scan_nonempty(data_dir, df.sparkSession), key=lambda f: f.path
     )
 
-    # 2-4. manifest / manifest list / snapshot / metadata — built from
-    # prev_meta inside a closure so a lost optimistic race can rebase the
-    # COMMIT on fresh metadata without re-staging the data files (r9: the
-    # append twin of the DML retry wrappers).
+    # 2-4. manifests, manifest list, snapshot, metadata: one change for
+    # the producer, which rebases a plain append on a lost race without
+    # re-staging the data files.  A create, an overwrite, a replace and
+    # a schema- or spec-evolving append read the whole table.
+    if reuse_schema is not None:
+        schema = reuse_schema
+    else:
+        schema = iceberg_schema(df.schema)
+        schema.pop("__last_column_id")
+    source_ids = {f["name"]: f["id"] for f in schema["fields"]}
+    spec = {"spec-id": this_spec_id, "fields": [
+        {
+            "name": fld["name"],
+            "transform": spec_transform_str(fld),
+            "source-id": source_ids[fld["source"]],
+            "field-id": part_field_ids[i],
+        }
+        for i, (_tmp, fld, _kind) in enumerate(part_info)
+    ]}
+    order_fields = [
+        {"transform": "identity", "source-id": source_ids[c],
+         "direction": "asc", "null-order": "nulls-first"}
+        for c in sort_by
+    ]
     user_props = {str(k): str(v) for k, v in (p.get("properties") or {}).items()}
-
-    def _commit(prev_meta):
-        snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
-        if reuse_schema is not None:
-            schema = reuse_schema
-        else:
-            schema = iceberg_schema(df.schema)
-            schema.pop("__last_column_id")
-        source_ids = {f["name"]: f["id"] for f in schema["fields"]}
-        spec = {"spec-id": this_spec_id, "fields": [
-            {
-                "name": fld["name"],
-                "transform": spec_transform_str(fld),
-                "source-id": source_ids[fld["source"]],
-                "field-id": part_field_ids[i],
-            }
-            for i, (_tmp, fld, _kind) in enumerate(part_info)
-        ]}
-        order_fields = [
-            {"transform": "identity", "source-id": source_ids[c],
-             "direction": "asc", "null-order": "nulls-first"}
-            for c in sort_by
-        ]
-        updates: list[dict] = []
-        base = prev_meta
-        if prev_meta is None:
-            base = create_table(table, {
-                "name": table.name,
-                "location": table_path,
-                "schema": {**schema, "schema-id": 0, "identifier-field-ids": []},
-                "partition-spec": spec,
-                "write-order": (
-                    {"order-id": 1, "fields": order_fields}
-                    if sort_by else None
+    updates: list[dict] = []
+    if prev_meta is None:
+        prev_meta = create_table(table, {
+            "name": table.name,
+            "location": table_path,
+            "schema": {**schema, "schema-id": 0, "identifier-field-ids": []},
+            "partition-spec": spec,
+            "write-order": (
+                {"order-id": 1, "fields": order_fields} if sort_by else None
+            ),
+            "stage-create": False,
+            "properties": {
+                # user table properties first (e.g. the spec's
+                # per-column write.parquet.bloom-filter-enabled.column.X),
+                # reserved keys below always win
+                **user_props,
+                "write.format.default": "parquet",
+                "schema.name-mapping.default": json.dumps(
+                    _name_mapping(schema["fields"])
                 ),
-                "stage-create": False,
-                "properties": {
-                    # user table properties first (e.g. the spec's
-                    # per-column write.parquet.bloom-filter-enabled.column.X),
-                    # reserved keys below always win
-                    **user_props,
-                    "write.format.default": "parquet",
-                    "schema.name-mapping.default": json.dumps(
-                        _name_mapping(schema["fields"])
-                    ),
-                },
-            })
-        else:
-            updates = _write_updates(
-                prev_meta, schema, spec, order_fields, user_props,
-                new_schema=reuse_schema is None
-                or evolved_last_column_id is not None,
-                new_spec=evolve_spec, replace=mode != "append",
-            )
-        lineage = int(apply_updates(base, updates).get("format-version", 2)) >= 3
-
-        # 2. manifest (one per commit; entries = the new files) with
-        # per-file column stats (field-id-keyed null counts + Appendix-D
-        # serialized bounds) so readers can skip files at the MANIFEST
-        # level; v3 row lineage stamps each file's explicit first_row_id
-        entries = lakefiles.to_iceberg_entries(
-            [(f, _typed_partition(f, part_info)) for f in data_files],
-            snapshot_id, seq, schema, base if lineage else None,
-        )
-
-        # 3. manifest list: prior snapshot's manifests (append) + the new one.
-        # A branch append chains from the BRANCH head (forking from main's
-        # current state the first time the branch is written).
-        manifests = []
-        if mode == "append" and prev_meta is not None:
-            head_id = prev_meta.get("current-snapshot-id")
-            if branch:
-                head_id = (
-                    (prev_meta.get("refs") or {}).get(branch) or {}
-                ).get("snapshot-id", head_id)
-            manifests = _manifest_list_of(prev_meta, head_id)
-        manifests.append(write_manifest(
-            os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
-            seq=seq, snapshot_id=snapshot_id, spec=spec, schema=schema,
-            fv=3 if lineage else 2,
-            part_fields=[
-                {
-                    "name": fld["name"],
-                    "type": ["null", avro_partition_type(kind)],
-                    "default": None,
-                    "field-id": part_field_ids[i],
-                }
-                for i, (_tmp, fld, kind) in enumerate(part_info)
-            ],
-        ))
-        added_rows = manifests[-1]["added_rows_count"]
-        commit_snapshot(
-            table, base, manifests, {
-                "operation": "append" if mode == "append" else "overwrite",
-                "added-data-files": len(entries),
-                "added-records": added_rows,
-                "total-records": sum(
-                    m["added_rows_count"] + m["existing_rows_count"]
-                    for m in manifests
-                ),
-                "total-data-files": sum(
-                    m["added_files_count"] + m["existing_files_count"]
-                    for m in manifests
-                ),
-                # caller bookkeeping (spec: summary is a string map) — the
-                # streaming sink stamps its (appId, batchId) here for
-                # exactly-once replay detection, Flink's own pattern
-                **(p.get("summaryProperties") or {}),
             },
-            snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
-            ref=branch or "main", updates=updates,
+        })
+    else:
+        updates = _write_updates(
+            prev_meta, schema, spec, order_fields, user_props,
+            new_schema=reuse_schema is None
+            or evolved_last_column_id is not None,
+            new_spec=evolve_spec, replace=mode != "append",
         )
-
-    from pipeline_spark.sources.iceberg_rest import CommitConflictError
-
-    base_meta = prev_meta
-    attempts = 3
-    while True:
-        try:
-            return _commit(prev_meta)
-        except (FileExistsError, CommitConflictError) as conflict:
-            # a racing writer claimed this version / moved the ref.
-            # Only plain appends rebase: they read nothing a disjoint
-            # commit could change.  create/overwrite/replace and
-            # schema/spec-evolving appends re-plan loudly (a second
-            # creator or a full-table overwrite IS the conflict).
-            if (
-                attempts <= 0 or mode != "append"
-                or evolved_last_column_id is not None or evolve_spec
-                or base_meta is None
-            ):
-                raise
-            attempts -= 1
-            try:
-                fresh = table.load()
-                # disjointness proof: an append conflicts only with shape
-                # drift or a rollback of its base (check_adds=False —
-                # blind appends read no rows an interleave could change)
-                check_commit_conflicts(
-                    table_path, base_meta, fresh, check_adds=False
-                )
-            except FileExistsError:
-                raise  # a PROVEN conflict stays loud as-is
-            except Exception:
-                # the interleave can't even be validated (unreadable or
-                # inconsistent fresh metadata) — that is not a provable
-                # disjointness, so the original conflict stays loud
-                raise conflict from None
-            prev_meta = fresh
+    blind = mode == "append" and not updates
+    commit_changes(
+        table, prev_meta, Change(
+            "append" if mode == "append" else "overwrite",
+            added=[Added(f, _typed_partition(f, part_info), this_spec_id)
+                   for f in data_files],
+            updates=updates, replace_all=mode != "append",
+            # caller bookkeeping (spec: summary is a string map)
+            summary=dict(p.get("summaryProperties") or {}),
+        ),
+        reads="append" if blind else "table", txn=txn, ref=branch or "main",
+    )
 
 
 def _write_updates(
@@ -1287,6 +1542,24 @@ def _scan_nonempty(out_dir: str, spark=None) -> list:
         else:
             files.append(f)
     return files
+
+
+def _with_transforms(df, pfields: list[dict]) -> tuple[Any, list[tuple]]:
+    """``df`` plus one ``_ip_<i>`` column per partition field holding
+    its transform's value (consumed by ``partitionBy``), and the
+    ``(temp column, field, kind)`` list that types the hive dirs."""
+    from pipeline_spark.functions.icebergpart import transform_column
+
+    out, part_info = df, []
+    for i, fld in enumerate(pfields):
+        if fld["source"] not in df.columns:
+            raise ValueError(
+                f"iceberg partition source '{fld['source']}' not in input"
+            )
+        col, kind = transform_column(fld, df.schema[fld["source"]].dataType)
+        out = out.withColumn(f"_ip_{i}", col)
+        part_info.append((f"_ip_{i}", fld, kind))
+    return out, part_info
 
 
 def _typed_partition(f, part_info: list[tuple[str, dict, str]]) -> dict:
@@ -1403,7 +1676,8 @@ def alter_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
     historical name per field id so id-less files stay resolvable
     (spec: Name Mapping).  The alter is one optimistic commit:
     add-schema (fresh schema-id) + set-current-schema + set-properties,
-    asserting the current schema hasn't moved.
+    asserting the current schema hasn't moved; it rebases over data
+    commits (``reads="metadata"``).
     """
     renames = dict(p.get("renameColumn") or {})
     drops = list(p.get("dropColumn") or [])
@@ -1511,28 +1785,24 @@ def alter_iceberg_native(spark, p: dict[str, Any]) -> dict[str, Any]:
             if n and n not in entry_names:
                 entry_names.append(n)
         mapping.append({"field-id": f["id"], "names": entry_names})
-    commit(
-        table, meta,
-        [
-            # initial-default is a v3 construct (spec Default values): a
-            # spec-strict v2 reader would ignore it and resurrect nulls
-            *([{"action": "upgrade-format-version", "format-version": 3}]
-              if any_default and int(meta.get("format-version", 2)) < 3
-              else []),
-            {
-                "action": "add-schema",
-                "schema": {**cur, "schema-id": new_sid, "fields": new_fields},
-                "last-column-id": max(
-                    int(meta.get("last-column-id", 0)), next_col_id
-                ),
-            },
-            {"action": "set-current-schema", "schema-id": -1},
-            {"action": "set-properties", "updates": {
-                "schema.name-mapping.default": json.dumps(mapping),
-            }},
-        ],
-        [{"type": "assert-current-schema-id", "current-schema-id": cur_id}],
-    )
+    commit_changes(table, meta, Change(None, updates=[
+        # initial-default is a v3 construct (spec Default values): a
+        # spec-strict v2 reader would ignore it and resurrect nulls
+        *([{"action": "upgrade-format-version", "format-version": 3}]
+          if any_default and int(meta.get("format-version", 2)) < 3
+          else []),
+        {
+            "action": "add-schema",
+            "schema": {**cur, "schema-id": new_sid, "fields": new_fields},
+            "last-column-id": max(
+                int(meta.get("last-column-id", 0)), next_col_id
+            ),
+        },
+        {"action": "set-current-schema", "schema-id": -1},
+        {"action": "set-properties", "updates": {
+            "schema.name-mapping.default": json.dumps(mapping),
+        }},
+    ]), reads="metadata")
     out_alter = {"renamed": renames, "dropped": drops}
     if added_fields:
         out_alter["added"] = [f["name"] for f in added_fields]
@@ -1568,7 +1838,7 @@ def _alter_sort_order(table: IcebergTable, meta: dict,
             }},
             {"action": "set-default-sort-order", "sort-order-id": -1},
         ]
-    commit(table, meta, updates, [])
+    commit_changes(table, meta, Change(None, updates=updates), reads="metadata")
     return {"sort_by": sort_by}
 
 
@@ -1629,10 +1899,9 @@ def compact_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
 
         def commit_replace(plan) -> dict[str, int]:
             rl.replace(
-                plan.files, plan.staged, operation="replace",
-                read_where=None, check_adds=False,
-                drop_deletes={(d["path"], d.get("content_offset"))
-                              for d in rl.deletes},
+                plan.files, plan.staged, operation="replace", reads="files",
+                superseded={(d["path"], d.get("content_offset"))
+                            for d in rl.deletes},
             )
             return {"compacted_files": len(plan.files),
                     "new_files": len(plan.staged),
@@ -1803,14 +2072,19 @@ class _Rowlevel:
         )
 
     def replace(self, files: list[dict], staged: list[tuple], *,
-                operation: str, read_where: list[dict] | None,
-                **kw) -> int:
-        """One replace snapshot: ``files`` out, ``staged`` in; the
-        removed-file count."""
-        return _commit_file_replacement(
-            self.table, self.meta, self.cur_schema, self.spec0, files,
-            staged, operation=operation, read_where=read_where, **kw,
-        )
+                operation: str, reads: str | list[dict],
+                superseded: set = frozenset()) -> int:
+        """One copy-on-write snapshot: ``files`` out, the ``staged``
+        ``(file, partition[, spec id])`` tuples in (the default spec
+        when none is given), the ``superseded`` delete entries dropped
+        (a rewrite must have MATERIALIZED them); the removed-file
+        count."""
+        commit_changes(self.table, self.meta, Change(
+            operation,
+            added=[Added(*st) for st in staged],
+            removed={d["path"] for d in files}, superseded=set(superseded),
+        ), reads=reads)
+        return len(files)
 
 
 def _mutate_where(
@@ -1834,8 +2108,7 @@ def _mutate_where(
     def commit_rewrite(plan) -> dict:
         removed = rl.replace(
             plan.files, plan.staged,
-            operation="overwrite" if set_exprs else "delete",
-            read_where=where,
+            operation="overwrite" if set_exprs else "delete", reads=where,
         )
         return {
             f"{op}d_rows": plan.rows, "rewritten_files": removed,
@@ -1860,7 +2133,7 @@ def _mutate_where(
         if not rows:
             return None
         out = _write_position_deletes(
-            p, table, rl.meta, rl.deletes, rows, plan.staged
+            p, table, rl.meta, rl.deletes, rows, plan.staged, where
         )
         if set_exprs:
             out["updated_rows"] = out.pop("deleted_rows")
@@ -1881,11 +2154,13 @@ def _mutate_where(
 def _write_position_deletes(
     p: dict[str, Any], table: IcebergTable, meta: dict,
     prior_deletes: list[dict], rows: list, data_files: list[dict],
+    where: list[dict],
 ) -> dict[str, int]:
     """Commit matched ``(file_path, pos)`` rows as one position-delete
     parquet, or — on a v3 table, or ``format: puffin`` — one puffin of
     deletion vectors, in one snapshot with ``data_files`` (a
-    merge-on-read update's rewritten rows)."""
+    merge-on-read update's rewritten rows); the commit declares
+    ``where`` as read."""
     table_path = table.path
     fmt = str(
         p.get("format")
@@ -1983,8 +2258,8 @@ def _write_position_deletes(
                 "record_count": b["cardinality"],
             }
             for b in blobs
-        ], table=table, data_files=data_files, supersede=supersede or None,
-            base_meta=meta)
+        ], table=table, data_files=data_files, supersede=supersede,
+            reads=where)
         return {
             "deleted_rows": len(rows), "dv_blobs": len(blobs),
             "merged_dvs": merged_dvs,
@@ -2008,7 +2283,7 @@ def _write_position_deletes(
     )
     append_delete_files(
         table_path, [{"path": out, "content": 1}], table=table,
-        data_files=data_files, base_meta=meta,
+        data_files=data_files, reads=where,
     )
     return {"deleted_rows": len(rows)}
 
@@ -2140,23 +2415,16 @@ def _stage_default_spec_files(
         df_out = df_out.sortWithinPartitions(*sort_cols)
     part_info: list[tuple[str, dict, str]] = []
     if spec0.get("fields"):
-        from pipeline_spark.functions.icebergpart import (
-            parse_partition_spec,
-            transform_column,
-        )
+        from pipeline_spark.functions.icebergpart import parse_partition_spec
 
         names_by_id = {f["id"]: f["name"] for f in cur_schema["fields"]}
-        pfields = parse_partition_spec({"partitionSpec": [
-            {"field": names_by_id[sf["source-id"]],
-             "transform": sf["transform"], "name": sf["name"]}
-            for sf in spec0["fields"]
-        ]})
-        df_w = df_out
-        for i, fld in enumerate(pfields):
-            col, kind = transform_column(
-                fld, df_out.schema[fld["source"]].dataType)
-            df_w = df_w.withColumn(f"_ip_{i}", col)
-            part_info.append((f"_ip_{i}", fld, kind))
+        df_w, part_info = _with_transforms(df_out, parse_partition_spec(
+            {"partitionSpec": [
+                {"field": names_by_id[sf["source-id"]],
+                 "transform": sf["transform"], "name": sf["name"]}
+                for sf in spec0["fields"]
+            ]}
+        ))
         df_w.write.partitionBy(
             [t for t, _f, _k in part_info]).parquet(data_dir)
     else:
@@ -2167,7 +2435,9 @@ def _stage_default_spec_files(
     ]
 
 
-def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
+def upsert_iceberg_native(
+    spark, df, p: dict[str, Any], txn: tuple[str, int] | None = None,
+) -> dict[str, int]:
     """ONE-COMMIT keyed upsert (the Flink iceberg-connector commit
     shape): equality-delete files for every incoming key AND the upsert
     rows' data files land in the SAME snapshot under the SAME sequence
@@ -2183,6 +2453,8 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     layout (transforms recomputed from the spec's metadata), while the
     delete files stay global — the spec's partition-independent
     equality-delete shape.  A missing table degenerates to create.
+    ``txn=(appId, batchId)`` is the replayed-micro-batch guard of
+    :func:`write_iceberg_native`.
     """
     parse_legacy_global_deletes(p)  # fail typos at parameter-parse time
     from pyspark.sql import functions as F
@@ -2200,8 +2472,10 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     table = IcebergTable(p, must_exist=False)
     table_path, meta = table.path, table.meta
     if meta is None:
-        write_iceberg_native(upserts, {**p, "mode": "create"})
+        write_iceberg_native(upserts, {**p, "mode": "create"}, txn)
         return {"delete_files": 0, "data_files": -1}
+    if txn is not None and int(txn[1]) <= _last_batch(meta, txn[0]):
+        return {"delete_files": 0, "data_files": 0}  # a replayed batch
     spec0 = default_spec(meta)
     cur_schema = current_schema(meta)
     by_name = {f["name"]: f for f in cur_schema["fields"]}
@@ -2246,6 +2520,7 @@ def upsert_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
         table=table,
         data_files=data_files,
         summary_properties=p.get("summaryProperties"),
+        txn=txn,
     )
     return {"delete_files": len(del_files), "data_files": len(data_files)}
 
@@ -2268,172 +2543,6 @@ def update_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     return _mutate_where(spark, p, rowlevel.set_of("iceberg", p))
 
 
-def _commit_file_replacement(
-    table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
-    hit: list[dict], staged: list[tuple], operation: str = "overwrite",
-    *, read_where: list[dict] | None = None, check_adds: bool = True,
-    drop_deletes: set[tuple[str, int | None]] = frozenset(),
-    retries: int = 3,
-) -> int:
-    """Conflict-checked optimistic commit wrapper (r9, VERDICT r8 ask
-    #3 — the iceberg twin of delta's commit_with_conflict_check): the
-    create-exclusive version claim (local) / assert-ref-snapshot-id
-    (REST) makes a racing writer lose loudly; this wrapper then examines
-    the interleaved snapshots via :func:`check_commit_conflicts` and
-    RETRIES on fresh metadata iff the loser's read/write set is provably
-    untouched — an append and a disjoint-key-range merge both commit;
-    true conflicts keep failing with the same re-plan message.  The
-    expensive work (probe + staged file writes) is NOT redone: only the
-    metadata commit rebuilds on the fresh snapshot."""
-    from pipeline_spark.sources.iceberg_rest import CommitConflictError
-
-    base_meta = prev_meta
-    hit_paths = {d["path"] for d in hit}
-    while True:
-        try:
-            return _commit_file_replacement_once(
-                table, prev_meta, cur_schema, spec0, hit, staged, operation,
-                drop_deletes,
-            )
-        except (FileExistsError, CommitConflictError):
-            if retries <= 0:
-                raise
-            retries -= 1
-        fresh = table.load()
-        check_commit_conflicts(
-            table.path, base_meta, fresh,
-            removed_paths=hit_paths, read_where=read_where,
-            check_adds=check_adds,
-        )
-        prev_meta = fresh
-
-
-def _commit_file_replacement_once(
-    table: IcebergTable, prev_meta: dict, cur_schema: dict, spec0: dict,
-    hit: list[dict], staged: list[tuple], operation: str = "overwrite",
-    drop_deletes: set[tuple[str, int | None]] = frozenset(),
-) -> int:
-    """ONE replace snapshot for a file-scoped rewrite (shared by MERGE /
-    UPDATE / COW DELETE / compaction): untouched data manifests carry
-    forward VERBATIM, manifests that lost files rewrite in place
-    (survivors EXISTING at original sequence numbers, removed entries
-    DELETED), ``staged`` ``(file, partition[, spec id])`` tuples land as
-    ADDED with footer stats, one manifest per spec (the default spec
-    when none is given), and row-level delete manifests ride along
-    (rewrites must have MATERIALIZED their deletes) but for the
-    ``(path, content_offset)`` entries of ``drop_deletes``, which are
-    marked DELETED.  Returns the removed-file count."""
-    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
-
-    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
-    fv = int(prev_meta.get("format-version", 2))
-    hit_paths = {d["path"] for d in hit}
-    hit_paths |= {urllib.parse.unquote(x) for x in set(hit_paths)}
-
-    prev = _manifest_list_of(prev_meta, prev_meta.get("current-snapshot-id"))
-    if drop_deletes:
-        prev, _n = _supersede_prior_deletes(
-            prev, drop_deletes, table.meta_dir, f"{commit_uuid}-d",
-            snapshot_id,
-        )
-    out_manifests: list[dict] = []
-    for m in prev:
-        if m.get("content", 0) != 0:
-            out_manifests.append(m)  # delete manifests ride along
-            continue
-        wschema, mmeta, entries = read_ocf_file_with_meta(
-            _strip_scheme(m["manifest_path"])
-        )
-        live = [
-            e for e in entries
-            if e.get("status") != 2 and e.get("data_file")
-        ]
-        if not any(_strip_scheme(e["data_file"].get("file_path", ""))
-                   in hit_paths for e in live):
-            # untouched manifest: carry the LIST ENTRY forward verbatim —
-            # the 100 TB bulk of the table costs zero metadata writes
-            out_manifests.append(m)
-            continue
-        # rewrite this manifest in place: survivors EXISTING with their
-        # original (inheritance-materialized) sequence numbers, removed
-        # entries DELETED under the new snapshot.  The source manifest's
-        # embedded write-time schema / spec / partition avro layout are
-        # preserved byte-for-byte so schema-evolution inference and
-        # partition pruning stay exactly as the original generation
-        # declared them.
-        df_rec = next(
-            f for f in wschema["fields"] if f["name"] == "data_file"
-        )
-        inherit_seq = int(m.get("sequence_number", 0) or 0)
-        new_entries: list[dict] = []
-        for e in live:
-            eseq = e.get("sequence_number")
-            eseq = inherit_seq if eseq is None else int(eseq)
-            fseq = e.get("file_sequence_number")
-            removed = (_strip_scheme(e["data_file"].get("file_path", ""))
-                       in hit_paths)
-            new_entries.append({
-                **e, "status": 2 if removed else 0,
-                "snapshot_id": snapshot_id if removed else e.get("snapshot_id"),
-                "sequence_number": eseq,
-                "file_sequence_number": eseq if fseq is None else int(fseq),
-            })
-        out_manifests.append(write_manifest(
-            os.path.join(table.meta_dir,
-                         f"{commit_uuid}-m{len(out_manifests)}.avro"),
-            new_entries, seq=seq, snapshot_id=snapshot_id,
-            spec={"spec-id": int(m.get("partition_spec_id", 0) or 0),
-                  "fields": json.loads(
-                      (mmeta.get("partition-spec") or b"[]").decode())},
-            schema=(mmeta.get("schema") or b"{}").decode(), fv=fv,
-            part_fields=next(
-                f for f in df_rec["type"]["fields"] if f["name"] == "partition"
-            )["type"]["fields"],
-        ))
-
-    # ADDED manifests for the staged rewrite+upsert files (current
-    # schema, footer stats for future pruning; v3 row lineage: survivors'
-    # MATERIALIZED ids win per row, fresh rows derive first_row_id +
-    # position)
-    added = lakefiles.to_iceberg_entries(
-        [s[:2] for s in staged], snapshot_id, seq, cur_schema,
-        prev_meta if fv >= 3 else None,
-    )
-    by_spec: dict[int, list[dict]] = {}
-    for st, e in zip(staged, added):
-        sid = int(st[2]) if len(st) > 2 else int(spec0.get("spec-id", 0))
-        by_spec.setdefault(sid, []).append(e)
-    specs = {int(sp.get("spec-id", 0)): sp
-             for sp in prev_meta.get("partition-specs") or []}
-    for sid in sorted(by_spec, reverse=True):
-        out_manifests.insert(0, write_manifest(
-            os.path.join(table.meta_dir, f"{commit_uuid}-m{len(out_manifests)}.avro"),
-            by_spec[sid], seq=seq, snapshot_id=snapshot_id,
-            spec=specs.get(sid, spec0), schema=cur_schema, fv=fv,
-        ))
-    live_data = [m for m in out_manifests if m.get("content", 0) == 0]
-    new_list = [m for m in live_data if m.get("added_snapshot_id") == snapshot_id]
-    commit_snapshot(
-        table, prev_meta, out_manifests, {
-            "operation": operation,
-            "added-data-files": len(staged),
-            "deleted-data-files": sum(
-                int(m["deleted_files_count"]) for m in new_list),
-            "added-records": sum(int(m["added_rows_count"]) for m in new_list),
-            "deleted-records": sum(
-                int(m["deleted_rows_count"]) for m in new_list),
-            "total-records": sum(
-                int(m.get("added_rows_count") or 0)
-                + int(m.get("existing_rows_count") or 0) for m in live_data),
-            "total-data-files": sum(
-                int(m.get("added_files_count") or 0)
-                + int(m.get("existing_files_count") or 0) for m in live_data),
-        },
-        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
-    )
-    return sum(int(m["deleted_files_count"]) for m in new_list)
-
-
 def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     """FILE-SCOPED copy-on-write MERGE — the Iceberg twin of
     ``merge_delta_native`` and how Iceberg's own
@@ -2446,7 +2555,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
     — and whose data actually CONTAINS a match (one probe semi-join) —
     are rewritten.  At 100 TB a million-row CDC batch touches the few
     files its keys live in, not the table.  ONE atomic snapshot
-    (operation=overwrite, :func:`_commit_file_replacement`): untouched
+    (operation=overwrite, :func:`commit_changes`): untouched
     manifests carry forward verbatim, survivor rewrites (row-level
     deletes MATERIALIZED, v3 row ids kept) and the upsert batch (fresh
     rows: null lineage) are staged in one write under the default spec.
@@ -2501,8 +2610,7 @@ def merge_iceberg_native(spark, df, p: dict[str, Any]) -> dict[str, int]:
             return {"merged_rows": 0, "rewritten_files": 0, "added_files": 0}
         staged = rl.stage(rows)
         removed = rl.replace(
-            plan.files, staged, operation="overwrite",
-            read_where=plan.where or None,
+            plan.files, staged, operation="overwrite", reads=plan.where,
         )
         return {"merged_rows": plan.rows, "rewritten_files": removed,
                 "added_files": len(staged)}
@@ -2575,13 +2683,18 @@ def last_streaming_batch(p: dict[str, Any], app_id: str) -> int:
     the stream never wrote; a replayed micro-batch at or below this id
     must no-op for exactly-once."""
     try:
-        meta = IcebergTable(p, must_exist=False).meta or {}
+        meta = IcebergTable(p, must_exist=False).meta
     except ValueError:
         return -1
+    return _last_batch(meta, app_id)
+
+
+def _last_batch(meta: dict | None, app_id: str) -> int:
+    """:func:`last_streaming_batch` of the table metadata ``meta``."""
     best = -1
-    for s in meta.get("snapshots", []):
+    for s in (meta or {}).get("snapshots", []):
         sm = s.get("summary") or {}
-        if sm.get("pipeline-spark.app-id") == app_id:
+        if sm.get("pipeline-spark.app-id") == str(app_id):
             try:
                 best = max(best, int(sm.get("pipeline-spark.batch-id", -1)))
             except (TypeError, ValueError):
@@ -2742,12 +2855,7 @@ def rewrite_manifests_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]
     # partition record (spec Column Projection #2) — consolidation must
     # never merge fill manifests (add_files / delta-convert imports)
     # with materialized ones, or the probe becomes unsound
-    _cur_s = next(
-        (s for s in prev_meta.get("schemas", [])
-         if s.get("schema-id", 0) == prev_meta.get("current-schema-id", 0)),
-        {"fields": []},
-    )
-    _by_id_name = {f["id"]: f["name"] for f in _cur_s.get("fields", [])}
+    _by_id_name = {f["id"]: f["name"] for f in current_schema(prev_meta)["fields"]}
     ident_by_id = {}
     for _sp in prev_meta.get("partition-specs", []):
         for _pf in _sp.get("fields", []):
@@ -2973,458 +3081,67 @@ def _publish_metadata_exclusive(meta_dir: str, version: int, meta: dict) -> None
             fh.write(str(version))
 
 
-def check_commit_conflicts(
-    table_path: str, base_meta: dict, fresh_meta: dict, *,
-    removed_paths: set[str] | frozenset = frozenset(),
-    referenced_paths: set[str] | frozenset = frozenset(),
-    dv_referenced: set[str] | frozenset = frozenset(),
-    read_where: list[dict] | None = None,
-    check_adds: bool = True,
-) -> None:
-    """Decide whether a commit planned against ``base_meta`` may retry on
-    top of ``fresh_meta`` — delta's ConflictChecker semantics
-    (sinks/delta_native.py commit_with_conflict_check) re-expressed on
-    iceberg snapshot metadata.  Raises ``FileExistsError`` (re-plan)
-    unless every interleaved change is provably disjoint:
-
-    - schema / partition-spec / format-version drift → conflict (the
-      operation was planned under the old shape);
-    - a file this operation removes or references (``removed_paths`` for
-      COW rewrites, ``referenced_paths`` for position/DV deletes) is no
-      longer live → conflict (a concurrent writer rewrote it; our row
-      addresses / survivor scan are stale);
-    - an interleaved data file whose manifest bounds ADMIT this
-      operation's read predicate (``read_where``, the dataFilter shape)
-      → conflict — the rows it planned against have changed.
-      ``read_where=None`` with ``check_adds=True`` treats every add as
-      conflicting (full-scan operations); ``check_adds=False`` ignores
-      adds (layout rewrites / MOR delete appends — compaction reads no
-      rows a blind append could change);
-    - an interleaved row-level DELETE file whose effect lands inside
-      ``removed_paths`` → conflict (our rewrite, planned from base,
-      would erase it: position/DV deletes naming a removed file, any
-      new equality delete — our rewritten files take a HIGHER sequence
-      number, so the interleaved delete would no longer apply to rows
-      it deleted in serial order).
-
-    Disjoint operations — an append and a COW merge in different key
-    ranges, a compaction and a disjoint-partition delete — pass and the
-    caller rebuilds its commit on ``fresh_meta``."""
-    from pipeline_spark.sources.iceberg_native import (
-        _bounds_may_match,
-        norm_path as _norm,
-        plan_files,
-    )
-
-    # shape drift first: a metadata-only ALTER adds no snapshot, so this
-    # must run before the nothing-interleaved early exit
-    for k in ("current-schema-id", "default-spec-id"):
-        if fresh_meta.get(k) != base_meta.get(k):
-            raise FileExistsError(
-                f"iceberg: concurrent commit changed {k} ({k.replace('-', ' ')}"
-                " / table schema) mid-operation — re-plan against the new "
-                "snapshot"
-            )
-    bfv = int(base_meta.get("format-version", 2))
-    ffv = int(fresh_meta.get("format-version", 2))
-    if ffv != bfv and not (bfv == 2 and ffv == 3):
-        # the 2→3 upgrade (a concurrent DV delete) is the ONE benign
-        # transition: every committer here carries format-version forward
-        # and stamps v3 row lineage on rebase, and the DV's row-level
-        # effect is covered by the delete-on-rewritten-files check below.
-        # Anything else (downgrades, unknown versions) re-plans.
-        raise FileExistsError(
-            f"iceberg: concurrent commit changed format-version "
-            f"{bfv}→{ffv} mid-operation — re-plan against the new snapshot"
-        )
-    if fresh_meta.get("current-snapshot-id") == base_meta.get(
-        "current-snapshot-id"
-    ):
-        return  # nothing interleaved
-    fresh_ids = {
-        s.get("snapshot-id") for s in fresh_meta.get("snapshots") or []
-    }
-    base_cur = base_meta.get("current-snapshot-id")
-    # base_cur None = the operation planned against an empty table (a
-    # table whose first commit hadn't landed): nothing to roll back
-    if base_cur is not None and base_cur not in fresh_ids:
-        raise FileExistsError(
-            "iceberg: the snapshot this operation planned against was "
-            "rolled back or expired mid-operation — re-plan"
-        )
-
-    base_data, base_dels, _ = plan_files(table_path, meta=base_meta)
-    fresh_data, fresh_dels, _ = plan_files(table_path, meta=fresh_meta)
-    fresh_live = {_norm(d["path"]) for d in fresh_data}
-    needed = {_norm(x) for x in (*removed_paths, *referenced_paths)}
-    gone = needed - fresh_live
-    if gone:
-        raise FileExistsError(
-            f"iceberg: concurrent commit removed {len(gone)} file(s) this "
-            "operation also rewrites/references — re-plan against the new "
-            f"snapshot (e.g. {sorted(gone)[0]})"
-        )
-    base_live = {_norm(d["path"]) for d in base_data}
-    new_adds = [d for d in fresh_data if _norm(d["path"]) not in base_live]
-    if check_adds and new_adds:
-        cur_schema = current_schema(fresh_meta)
-        id2field = {f["id"]: f for f in cur_schema["fields"]}
-        for d in new_adds:
-            if read_where is None or _bounds_may_match(
-                d, read_where, id2field
-            ):
-                raise FileExistsError(
-                    "iceberg: concurrent commit added data matching this "
-                    "operation's read predicate — re-plan against the new "
-                    f"snapshot ({d['path']})"
-                )
-    if removed_paths or dv_referenced:
-        removed_norm = {_norm(x) for x in removed_paths}
-        # files this operation is writing a NEW deletion vector for: a
-        # concurrent row-level delete on the same file means our merged
-        # DV (planned from base) is incomplete — retrying would drop it
-        # or violate the one-DV-per-file rule
-        pos_targets = removed_norm | {_norm(x) for x in dv_referenced}
-        base_del_keys = {
-            (_norm(d["path"]), d.get("content_offset")) for d in base_dels
-        }
-        for d in fresh_dels:
-            if (_norm(d["path"]), d.get("content_offset")) in base_del_keys:
-                continue
-            if d.get("content") == 2:
-                if removed_norm:
-                    raise FileExistsError(
-                        "iceberg: concurrent equality delete landed while "
-                        "this operation rewrites files — the rewrite would "
-                        "outrank it (higher sequence number); re-plan"
-                    )
-                continue
-            ref = d.get("referenced_data_file")
-            if ref is not None:
-                if _norm(ref) in pos_targets:
-                    raise FileExistsError(
-                        "iceberg: concurrent row-level delete targets a "
-                        "file this operation rewrites or re-vectors — "
-                        "re-plan"
-                    )
-                continue
-            # position-delete parquet: driver-side peek at which files it
-            # names (small by design — maxDeleteRows-bounded)
-            import pyarrow.parquet as _pq
-
-            refs = {
-                _norm(x)
-                for x in _pq.read_table(
-                    d["path"], columns=["file_path"]
-                ).column("file_path").to_pylist()
-            }
-            if refs & pos_targets:
-                raise FileExistsError(
-                    "iceberg: concurrent position delete targets a file "
-                    "this operation rewrites or re-vectors — re-plan"
-                )
-
-
-def _supersede_prior_deletes(
-    prev_manifests: list[dict], superseded: set[tuple[str, int | None]],
-    meta_dir: str, commit_uuid: str, snapshot_id: int,
-) -> tuple[list[dict], int]:
-    """Rewrite delete manifests dropping superseded entries — the v3
-    at-most-one-DV-per-file rule: a writer adding a deletion vector for
-    a data file must MERGE the file's existing DV / position deletes
-    into the new vector and remove the old entries, or spec-strict
-    readers may apply only one of them (Iceberg spec §Deletion Vectors).
-
-    ``superseded`` identifies entries by ``(delete file path,
-    content_offset)`` — offset ``None`` matches a whole position-delete
-    parquet, an int matches one DV blob inside a shared puffin file.
-    Untouched manifests carry forward verbatim (their list entries are
-    returned as-is); touched ones rewrite in place with survivors
-    EXISTING at materialized sequence numbers and superseded entries
-    DELETED under the new snapshot.  Returns the new manifest-list
-    entries and the superseded-entry count."""
-    from pipeline_spark.functions.avroocf import read_ocf_file_with_meta
-
-    def _key(e: dict) -> tuple[str, int | None]:
-        d = e.get("data_file") or {}
-        off = d.get("content_offset")
-        return (
-            _strip_scheme(str(d.get("file_path") or "")),
-            int(off) if off is not None else None,
-        )
-
-    out: list[dict] = []
-    removed_total = 0
-    for m in prev_manifests:
-        if int(m.get("content", 0) or 0) != 1:
-            out.append(m)
-            continue
-        wschema, mmeta, entries = read_ocf_file_with_meta(
-            _strip_scheme(m["manifest_path"])
-        )
-        live = [
-            e for e in entries
-            if e.get("status") != 2 and e.get("data_file")
-        ]
-        if not any(_key(e) in superseded for e in live):
-            out.append(m)
-            continue
-        inherit_seq = int(m.get("sequence_number", 0) or 0)
-        new_entries: list[dict] = []
-        for e in live:
-            eseq = e.get("sequence_number")
-            eseq = inherit_seq if eseq is None else int(eseq)
-            fseq = e.get("file_sequence_number")
-            gone = _key(e) in superseded  # replaced by the merged DV
-            removed_total += gone
-            new_entries.append({
-                **e, "status": 2 if gone else 0,
-                "snapshot_id": snapshot_id if gone else e.get("snapshot_id"),
-                "sequence_number": eseq,
-                "file_sequence_number": eseq if fseq is None else int(fseq),
-            })
-        # -m100.. : a namespace apart from the commit's own -m0/-m1
-        out.append(write_manifest(
-            os.path.join(meta_dir, f"{commit_uuid}-m{100 + len(out)}.avro"),
-            new_entries, seq=inherit_seq, snapshot_id=snapshot_id,
-            spec={"spec-id": int(m.get("partition_spec_id", 0) or 0)},
-            content=1,
-            writer=(wschema, {
-                k: (mmeta.get(k) or b"").decode()
-                for k in ("schema", "partition-spec", "partition-spec-id",
-                          "format-version", "content")
-                if mmeta.get(k) is not None
-            }),
-        ))
-    return out, removed_total
-
-
 def append_delete_files(
     table_path: str, delete_files: list[dict], *,
     table: IcebergTable | None = None,
     data_files: list | None = None,
     summary_properties: dict | None = None,
     supersede: set[tuple[str, int | None]] | None = None,
-    base_meta: dict | None = None, retries: int = 3,
+    reads: str | list[dict] = "append",
+    txn: tuple[str, int] | None = None,
 ) -> None:
-    """Conflict-checked MOR commit wrapper (r9, VERDICT r8 ask #3): on a
-    lost optimistic race (create-exclusive version claim locally, 409 on
-    REST) the commit retries on fresh metadata iff the interleave is
-    provably disjoint — appends never conflict with equality-delete
-    upserts (the delete outranks them by sequence number, the Flink CDC
-    convention), while a concurrent rewrite of a file our position/DV
-    deletes reference, a concurrent delete on a file we're re-vectoring,
-    or a schema/spec change fails loudly.  ``table`` is the opened table
-    (default: the filesystem table at ``table_path``); ``base_meta`` is
-    the metadata the CALLER planned its row positions from (defaults to
-    the metadata this commit itself read)."""
-    from pipeline_spark.sources.iceberg_rest import CommitConflictError
+    """Commit a merge-on-read snapshot adding row-level DELETE files to
+    an existing table — the write side of the reader's delete
+    application (CDC-style ingestion appends equality deletes instead of
+    rewriting data files; spec §Row-level deletes).
 
+    Each entry: ``{"path": <parquet delete file>, "content": 1|2,
+    "equality_ids": [field-ids]}`` — content 1 = position deletes
+    (columns ``file_path``, ``pos``), content 2 = equality deletes (the
+    identifier columns named by ``equality_ids``); ``file`` is its read
+    :class:`~pipeline_spark.sinks.lakefiles.DataFile`.  A puffin
+    deletion vector adds ``format: PUFFIN``, ``referenced_data_file``,
+    ``content_offset``, ``content_size_in_bytes`` and ``record_count``.
+    ``data_files`` (``(DataFile, typed partition)`` pairs) land in the
+    same snapshot under the same sequence number (the Flink upsert
+    shape: the deletes apply to every earlier file, never to these),
+    ``supersede`` names the delete entries a merged deletion vector
+    replaces.  ``reads`` is what the deletes were planned from: blind
+    equality deletes read nothing (``"append"``), position deletes their
+    ``where``."""
     if table is None:
         table = IcebergTable({"path": table_path})
+    added = []
     for d in delete_files:
         content = int(d["content"])
         if content not in (1, 2):
             raise ValueError("delete file content must be 1 (position) or 2 (equality)")
         if content == 2 and not d.get("equality_ids"):
             raise ValueError("equality delete files need equality_ids")
-        if str(d.get("format", "")).upper() == "PUFFIN" and (
-            content != 1 or d.get("content_offset") is None
-            or not d.get("referenced_data_file")
-        ):
-            raise ValueError(
-                "puffin delete entries need content=1, "
-                "referenced_data_file, content_offset and "
-                "content_size_in_bytes"
-            )
-    # every parquet delete footer is read once, before any commit attempt
-    delete_files = [
-        d if "file" in d or str(d.get("format", "")).upper() == "PUFFIN"
-        else {**d, "file": lakefiles.read([(d["path"], {})])[0]}
-        for d in delete_files
-    ]
-
-    def _conflict_sets() -> tuple[set[str], set[str]]:
-        # computed lazily on FIRST conflict only — reading the delete
-        # parquets back would tax every conflict-free commit for a set
-        # that's consumed exclusively inside the retry branch
-        referenced: set[str] = set()
-        dv_refs: set[str] = set()
-        for d in delete_files:
-            if str(d.get("format", "")).upper() == "PUFFIN":
-                dv_refs.add(str(d.get("referenced_data_file") or ""))
-            elif int(d.get("content", 1)) == 1:
-                import pyarrow.parquet as _pq
-
-                referenced.update(
-                    _pq.read_table(d["path"], columns=["file_path"])
-                    .column("file_path").to_pylist()
-                )
-        return referenced, dv_refs
-
-    prev_meta = table.meta
-    sets = None
-    while True:
-        try:
-            return _append_delete_files_once(
-                table, prev_meta, delete_files, data_files=data_files,
-                summary_properties=summary_properties, supersede=supersede,
-            )
-        except (FileExistsError, CommitConflictError):
-            if retries <= 0:
-                raise
-            retries -= 1
-        fresh = table.load()
-        if sets is None:
-            sets = _conflict_sets()  # delete_files never change
-        referenced, dv_refs = sets
-        check_commit_conflicts(
-            table.path, base_meta or prev_meta, fresh,
-            referenced_paths=referenced | dv_refs, dv_referenced=dv_refs,
-            check_adds=False,
-        )
-        prev_meta = fresh
-
-
-def _append_delete_files_once(
-    table: IcebergTable, prev_meta: dict, delete_files: list[dict], *,
-    data_files: list | None = None,
-    summary_properties: dict | None = None,
-    supersede: set[tuple[str, int | None]] | None = None,
-) -> None:
-    """Commit a merge-on-read snapshot adding v2 row-level DELETE files
-    to an existing table — the write-side counterpart of the reader's
-    delete application (CDC-style ingestion appends equality deletes
-    instead of rewriting data files; spec §Row-level deletes).
-
-    Each entry: ``{"path": <parquet delete file>, "content": 1|2,
-    "equality_ids": [field-ids]}`` — content 1 = position deletes
-    (columns ``file_path``, ``pos``), content 2 = equality deletes
-    (the identifier columns named by ``equality_ids``); ``file`` is its
-    read :class:`~pipeline_spark.sinks.lakefiles.DataFile`.
-    ``data_files`` (``(DataFile, typed partition)`` pairs) land in the
-    same snapshot.
-    """
-    meta_dir = table.meta_dir
-    snapshot_id, seq, commit_uuid = _new_snapshot(prev_meta)
-
-    entries = []
-    any_dv = any(
-        str(d.get("format", "")).upper() == "PUFFIN" for d in delete_files
-    )
-    for d in delete_files:
-        # a puffin DV has one entry per blob, addressed inside the shared
-        # puffin file; record_count = DV cardinality
-        e = lakefiles.to_iceberg_entry(
-            d.get("file") or lakefiles.DataFile(
-                d["path"], os.path.getsize(d["path"]),
-                int(d.get("record_count") or 0),
-            ),
-            snapshot_id, seq, {}, content=int(d["content"]),
-            equality_ids=d.get("equality_ids"),
-        )
+        dv = None
         if str(d.get("format", "")).upper() == "PUFFIN":
-            e["data_file"].update(
-                file_format="PUFFIN",
-                referenced_data_file=d.get("referenced_data_file"),
-                content_offset=int(d["content_offset"]),
-                content_size_in_bytes=int(d.get("content_size_in_bytes") or 0),
-            )
-        entries.append(e)
-
-    cur_schema = current_schema(prev_meta)
-    spec0 = default_spec(prev_meta)
-    updates: list[dict] = []
-    if any_dv and int(prev_meta.get("format-version", 2)) < 3:
-        # puffin DVs are a v3 construct: a spec-strict reader must see
-        # format-version 3 or it would rightly reject the manifests
-        # (the catalog copy of the metadata upgrades too, ADVICE r8)
-        updates.append({"action": "upgrade-format-version", "format-version": 3})
-    fv = max(3 if any_dv else 2, int(prev_meta.get("format-version", 2)))
-    # this writer's deletes are GLOBAL (path-addressed positions /
-    # table-wide equality keys), and the spec scopes a delete manifest
-    # by its declared partition: on a PARTITIONED table an all-null
-    # record under spec-0 reads as the NULL partition to strict readers
-    # (iceberg-java's DeleteFileIndex), silently missing every real
-    # partition.  Declare delete manifests under an UNPARTITIONED spec
-    # instead — registered in the table metadata if not already there
-    # (r11; spec: global equality deletes use the unpartitioned spec).
-    del_spec = spec0
-    if spec0.get("fields"):
-        del_spec = next(
-            (sp for sp in prev_meta.get("partition-specs", [])
-             if not sp.get("fields")),
-            None,
-        )
-        if del_spec is None:
-            del_spec = {
-                "spec-id": max(
-                    (int(sp.get("spec-id", 0))
-                     for sp in prev_meta.get("partition-specs", [])),
-                    default=0,
-                ) + 1,
-                "fields": [],
-            }
-            # registered, default-spec-id unchanged
-            updates.append({"action": "add-spec", "spec": del_spec})
-    if any(
-        int(d.get("content", 1)) == 2 for d in delete_files
-    ) and "pipeline-spark.eq-scope-strict-since-seq" not in (
-        prev_meta.get("properties") or {}
-    ):
-        # r15: self-identifying equality deletes — the first eq-delete
-        # commit stamps its sequence number as the spec-strict-era
-        # cutoff; the reader's legacy-ambiguity detector treats every
-        # delete file at/after it as unambiguous (see
-        # sources/iceberg_native.py plan_equality_deletes)
-        updates.append({"action": "set-properties", "updates": {
-            "pipeline-spark.eq-scope-strict-since-seq": str(seq),
-        }})
-
-    # upsert shape (r7, the Flink-connector commit): DATA files land in
-    # the SAME snapshot under the SAME sequence number as the equality
-    # deletes — the strict below-sequence rule means the deletes apply
-    # to every EARLIER file but never to these, so delete-old-then-
-    # insert-new is one atomic commit
-    # v3 row lineage: the batch's files take explicit first_row_id off
-    # the table's next-row-id (fresh rows of this snapshot)
-    data_entries = lakefiles.to_iceberg_entries(
-        data_files or [], snapshot_id, seq, cur_schema,
-        prev_meta if fv >= 3 else None,
-    )
-
-    manifests = [dict(mf) for mf in _manifest_list_of(
-        prev_meta, prev_meta.get("current-snapshot-id"))]
-    superseded_count = 0
-    if supersede:
-        manifests, superseded_count = _supersede_prior_deletes(
-            manifests, supersede, meta_dir, commit_uuid, snapshot_id,
-        )
-    manifests.append(write_manifest(
-        os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
-        seq=seq, snapshot_id=snapshot_id, spec=del_spec, schema=cur_schema,
-        fv=fv, content=1, part_fields=[],
-    ))
-    if data_entries:
-        # the DATA manifest (unlike the delete manifest, which declares
-        # an unpartitioned spec) carries the table's default spec
-        manifests.append(write_manifest(
-            os.path.join(meta_dir, f"{commit_uuid}-m1.avro"), data_entries,
-            seq=seq, snapshot_id=snapshot_id, spec=spec0, schema=cur_schema,
-            fv=fv,
-        ))
-    commit_snapshot(
-        table, prev_meta, manifests, {
-            "operation": "overwrite" if data_entries else "delete",
-            "added-delete-files": len(entries),
-            "removed-delete-files": superseded_count,
-            "added-position-delete-records": sum(
-                int(e["data_file"]["record_count"]) for e in entries),
-            "added-data-files": len(data_entries),
-            "added-records": sum(
-                int(e["data_file"]["record_count"]) for e in data_entries),
-            **(summary_properties or {}),
-        },
-        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
-        updates=updates,
-    )
+            if content != 1 or d.get("content_offset") is None or not d.get(
+                "referenced_data_file"
+            ):
+                raise ValueError(
+                    "puffin delete entries need content=1, "
+                    "referenced_data_file, content_offset and "
+                    "content_size_in_bytes"
+                )
+            # one entry per blob inside the shared puffin file;
+            # record_count = the vector's cardinality
+            f = lakefiles.DataFile(d["path"], os.path.getsize(d["path"]),
+                                   int(d.get("record_count") or 0))
+            dv = {"referenced_data_file": d["referenced_data_file"],
+                  "content_offset": int(d["content_offset"]),
+                  "content_size_in_bytes": int(
+                      d.get("content_size_in_bytes") or 0)}
+        else:
+            f = d.get("file") or lakefiles.read([(d["path"], {})])[0]
+        added.append(Added(f, content=content,
+                           equality_ids=d.get("equality_ids"), dv=dv))
+    data = [Added(f, part) for f, part in data_files or []]
+    commit_changes(table, table.meta, Change(
+        "overwrite" if data else "delete", added=data + added,
+        superseded=set(supersede or ()), summary=dict(summary_properties or {}),
+    ), reads=reads, txn=txn)

@@ -238,12 +238,13 @@ def sync_uniform_append(
     manifests and row-id space coherent), or a schema drift."""
     from pipeline_spark.functions.icebergpart import parse_dir_value
     from pipeline_spark.sinks.iceberg_native import (
+        Added,
+        Change,
         IcebergTable,
-        _manifest_list_of,
-        _new_snapshot,
-        commit_snapshot,
+        _name_mapping_names,
+        commit_changes,
+        current_schema,
         default_spec,
-        write_manifest,
     )
 
     try:
@@ -262,28 +263,16 @@ def sync_uniform_append(
         # would silently drop the missed commits; full regen self-heals
         if props.get("delta.uniform.deltaVersion") != str(delta_version - 1):
             return False
-    cur_schema = next(
-        (s for s in meta.get("schemas", [])
-         if s.get("schema-id", 0) == meta.get("current-schema-id", 0)),
-        None,
-    )
-    snap_id_prev = meta.get("current-snapshot-id")
-    prev_snap = next(
-        (s for s in meta.get("snapshots", [])
-         if s.get("snapshot-id") == snap_id_prev),
-        None,
-    )
-    if cur_schema is None or prev_snap is None:
+    if meta.get("current-snapshot-id") not in {
+        s.get("snapshot-id") for s in meta.get("snapshots") or []
+    }:
         return False
+    cur_schema = current_schema(meta)
     # physical (file-side) name per field id via the name-mapping the
-    # converter wrote (names[0] = physical)
-    phys_by_id: dict[int, str] = {}
-    try:
-        for e in json.loads(props.get("schema.name-mapping.default", "[]")):
-            if e.get("field-id") is not None and e.get("names"):
-                phys_by_id[int(e["field-id"])] = e["names"][0]
-    except (ValueError, TypeError):
-        pass
+    # converter wrote (names[0] = physical); the manifests' write schema
+    # names columns as the files carry them, and keys their stats
+    phys_by_id = {fid: names[0]
+                  for fid, names in _name_mapping_names(meta).items() if names}
     spec = default_spec(meta)
     by_id = {f["id"]: f for f in cur_schema["fields"]}
     if any(sf.get("transform") != "identity" for sf in spec.get("fields", [])):
@@ -297,34 +286,21 @@ def sync_uniform_append(
         part_kinds.append(
             (sf["name"], phys_by_id.get(src_f["id"], src_f["name"]), kind)
         )
-    colmap = {
-        phys_by_id.get(f["id"], f["name"]): (f["id"], f["type"])
-        for f in cur_schema["fields"]
-        if isinstance(f["type"], str)
-        and f["name"] not in {n for n, _p, _k in part_kinds}
-    }
     write_fields = [
         {**f, "name": phys_by_id.get(f["id"], f["name"])}
         for f in cur_schema["fields"]
     ]
-    snapshot_id, seq, commit_uuid = _new_snapshot(meta)
-    entries = []
+    added = []
     for a in add_actions:
         f = lakefiles.DataFile.from_delta_stats(table, a)
         if f.rows is None:
             return False  # no numRecords: let the full regen footer-read
-        entries.append(lakefiles.to_iceberg_entry(f, snapshot_id, seq, {
+        added.append(Added(f, {
             pname: parse_dir_value(f.partition.get(phys), kind)
             for pname, phys, kind in part_kinds
-        }, colmap=colmap))
-    if not entries:
+        }))
+    if not added:
         return False
-    manifests = _manifest_list_of(meta, snap_id_prev)
-    manifests.append(write_manifest(
-        os.path.join(handle.meta_dir, f"{commit_uuid}-m0.avro"), entries,
-        seq=seq, snapshot_id=snapshot_id, spec=spec,
-        schema={**cur_schema, "fields": write_fields},
-    ))
     updates = []
     if delta_version is not None:
         updates.append({"action": "set-properties", "updates": {
@@ -334,16 +310,11 @@ def sync_uniform_append(
     old_ids = [s["snapshot-id"] for s in meta.get("snapshots") or []][:-9]
     if old_ids:
         updates.append({"action": "remove-snapshots", "snapshot-ids": old_ids})
-    commit_snapshot(
-        handle, meta, manifests, {
-            "operation": "append",
-            "added-data-files": len(entries),
-            "added-records": manifests[-1]["added_rows_count"],
-            "converted-from": "delta-uniform-append",
-        },
-        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
-        updates=updates,
-    )
+    commit_changes(handle, meta, Change(
+        "append", added=added, updates=updates,
+        summary={"converted-from": "delta-uniform-append"},
+        schema={**cur_schema, "fields": write_fields},
+    ), reads="table")
     return True
 
 
@@ -373,11 +344,11 @@ def _iceberg_metadata_over_delta(
     """
     from pipeline_spark.functions.icebergpart import parse_dir_value
     from pipeline_spark.sinks.iceberg_native import (
+        Added,
+        Change,
         IcebergTable,
-        _new_snapshot,
-        commit_snapshot,
+        commit_changes,
         create_table,
-        write_manifest,
     )
     from pipeline_spark.sources.delta_native import (
         _column_mapping,
@@ -451,14 +422,6 @@ def _iceberg_metadata_over_delta(
             for c, kind in part_kinds
         }
 
-    # footer stats keyed by the names files physically carry; partition
-    # columns never appear in delta parquet, so they stay out of the map
-    colmap = {
-        phys_of.get(f["name"], f["name"]): (f["id"], f["type"])
-        for f in ice_fields
-        if f["name"] not in part_cols and isinstance(f["type"], str)
-    }
-
     # name-mapping resolves files written without parquet field ids:
     # list the physical name first (what files carry), the logical name
     # as an alias when mapped
@@ -486,9 +449,6 @@ def _iceberg_metadata_over_delta(
     }), "__version": version - 1}
 
     dv_adds = [a for a in adds if a.get("deletionVector")]
-    fmt = 3 if dv_adds else 2
-    snapshot_id, seq, commit_uuid = _new_snapshot(base)
-    os.makedirs(meta_dir, exist_ok=True)
     if stats_source == "log":
         # UniForm sync path: bounds from the add's stats JSON (the
         # delta writer already computed them) — zero footer reads
@@ -501,33 +461,18 @@ def _iceberg_metadata_over_delta(
             (os.path.join(table, urllib.parse.unquote(a["path"])), {})
             for a in adds
         ], spark)
-    # v3 row lineage: converted files take explicit first_row_id so
-    # withRowIds works from the first read (next-row-id advances by the
-    # same running total)
-    frid = 0
-    entries = []
-    for f, a in zip(files, adds):
-        entries.append(lakefiles.to_iceberg_entry(
-            f, snapshot_id, seq, typed_partition(a), colmap=colmap,
-            first_row_id=frid if fmt >= 3 else None,
-        ))
-        frid += f.rows
-    manifests = [write_manifest(
-        os.path.join(meta_dir, f"{commit_uuid}-m0.avro"), entries,
-        seq=seq, snapshot_id=snapshot_id, spec=spec, schema=write_schema,
-        fv=fmt,
-    )]
-    total_rows = manifests[0]["added_rows_count"]
-
-    deleted_rows = 0
+    added = [Added(f, typed_partition(a)) for f, a in zip(files, adds)]
     if dv_adds:
-        # delta DV → iceberg v3 DV: both are roaring position bitmaps
-        # over an immutable file; decode each (KB-scale), re-frame as a
-        # puffin deletion-vector-v1 blob in ONE shared container
+        # delta DV → iceberg v3 DV (the producer raises the table to v3,
+        # and a v3 table gives the files explicit row ids): both are
+        # roaring position bitmaps over an immutable file; decode each
+        # (KB-scale), re-frame as a puffin deletion-vector-v1 blob in
+        # ONE shared container
         from pipeline_spark.functions.deltadv import load_dv_positions
         from pipeline_spark.functions.puffin import write_puffin_dvs
 
-        puffin_path = os.path.join(meta_dir, f"{commit_uuid}-dv.puffin")
+        os.makedirs(meta_dir, exist_ok=True)
+        puffin_path = os.path.join(meta_dir, f"{uuid.uuid4()}-dv.puffin")
         pairs = []
         for a in dv_adds:
             full = os.path.join(table, urllib.parse.unquote(a["path"]))
@@ -535,41 +480,22 @@ def _iceberg_metadata_over_delta(
             pairs.append((full, pos))
         descs = write_puffin_dvs(puffin_path, pairs)
         psize = os.path.getsize(puffin_path)
-        dentries = []
-        for a, d in zip(dv_adds, descs):
-            deleted_rows += d["cardinality"]
-            e = lakefiles.to_iceberg_entry(
-                lakefiles.DataFile(puffin_path, psize, d["cardinality"]),
-                snapshot_id, seq, typed_partition(a), content=1,
-            )
-            e["data_file"].update(
-                file_format="PUFFIN", referenced_data_file=d["referenced"],
-                content_offset=d["offset"], content_size_in_bytes=d["length"],
-            )
-            dentries.append(e)
-        manifests.append(write_manifest(
-            os.path.join(meta_dir, f"{commit_uuid}-m1.avro"), dentries,
-            seq=seq, snapshot_id=snapshot_id, spec=spec, schema=write_schema,
-            fv=fmt, content=1,
-        ))
-
-    commit_snapshot(
-        handle, base, manifests, {
-            "operation": "append",
-            "added-data-files": len(entries),
-            "added-records": total_rows,
-            "converted-from": "delta",
-            **({"added-delete-files": len(dv_adds),
-                "added-position-deletes": deleted_rows}
-               if dv_adds else {}),
-        },
-        snapshot_id=snapshot_id, seq=seq, commit_uuid=commit_uuid,
-        updates=[{"action": "upgrade-format-version", "format-version": 3}]
-        if fmt >= 3 else [],
-    )
+        added += [
+            Added(lakefiles.DataFile(puffin_path, psize, d["cardinality"]),
+                  typed_partition(a), spec_id=0, content=1, dv={
+                      "referenced_data_file": d["referenced"],
+                      "content_offset": d["offset"],
+                      "content_size_in_bytes": d["length"],
+                  })
+            for a, d in zip(dv_adds, descs)
+        ]
+    commit_changes(handle, base, Change(
+        "append", added=added, summary={"converted-from": "delta"},
+        schema=write_schema,
+    ), reads="table")
     return {
-        "converted_files": len(entries),
-        "rows": total_rows,
+        "converted_files": len(files),
+        "rows": sum(f.rows for f in files),
         "deletion_vectors": len(dv_adds),
         "version": version,
     }
