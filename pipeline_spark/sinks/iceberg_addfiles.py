@@ -19,7 +19,6 @@ spark-procedures/#add_files).
 from __future__ import annotations
 
 import json
-import os
 from typing import Any
 
 

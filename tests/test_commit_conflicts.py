@@ -33,22 +33,20 @@ from pipeline_spark.sources.iceberg_native import plan_files, read_iceberg_nativ
 SCHEMA = "id long, v string"
 
 
-def _df(spark, ids, v="v"):
-    return spark.createDataFrame([(i, v) for i in ids], SCHEMA).coalesce(1)
+def _df(spark, ids):
+    return spark.createDataFrame([(i, "v") for i in ids], SCHEMA).coalesce(1)
 
 
 class _Delta:
-    name = "delta"
-
     def __init__(self, spark, tbl):
         self.spark, self.tbl = spark, tbl
 
     def create(self, ids):
         dn.write_delta_native(self.spark, _df(self.spark, ids), {"path": self.tbl})
 
-    def append(self, ids, v="v"):
+    def append(self, ids):
         dn.write_delta_native(
-            self.spark, _df(self.spark, ids, v), {"path": self.tbl, "mode": "append"}
+            self.spark, _df(self.spark, ids), {"path": self.tbl, "mode": "append"}
         )
 
     def overwrite(self, ids):
@@ -85,6 +83,7 @@ class _Delta:
         )
 
     def commits(self):
+        """The table's version: one more per commit, data or metadata."""
         from pipeline_spark.sources.delta_native import _log_dir, latest_version
 
         return latest_version(_log_dir(self.tbl))
@@ -110,15 +109,13 @@ class _Delta:
 
 
 class _Iceberg(_Delta):
-    name = "iceberg"
-
     def create(self, ids):
         ice.write_iceberg_native(_df(self.spark, ids), {
             "path": self.tbl, "mode": "create",
         })
 
-    def append(self, ids, v="v"):
-        ice.write_iceberg_native(_df(self.spark, ids, v), {
+    def append(self, ids):
+        ice.write_iceberg_native(_df(self.spark, ids), {
             "path": self.tbl, "mode": "append",
         })
 
