@@ -91,13 +91,12 @@ def sql_lit(v):
 # '\\+' in SQL-literal escaping is the two-character regex \+ .
 def fp_norm_sql(src: str) -> str:
     """``_metadata.file_path`` (a URI: scheme + percent-encoding) → the
-    raw filesystem path driver-side code uses, as in stamp_lineage,
-    _apply_row_deletes, apply_identity_fill and the delta reader's
-    __dv_fp.  A hive partition value with a space arrives as %20 — an
-    undecoded comparison silently misses the file and deleted rows
-    resurrect.  ``url_decode`` form-decodes '+' as space, so a literal
-    '+' is escaped to %2B first; the URI encoder escapes '%' itself, so
-    every remaining %XX is a valid escape."""
+    raw filesystem path driver-side code uses: the ``__fp__`` both
+    formats' ``live_rows`` stamp.  A hive partition value with a space
+    arrives as %20 — an undecoded comparison silently misses the file
+    and deleted rows resurrect.  ``url_decode`` form-decodes '+' as
+    space, so a literal '+' is escaped to %2B first; the URI encoder
+    escapes '%' itself, so every remaining %XX is a valid escape."""
     return (
         "url_decode(regexp_replace(regexp_replace("
         f"{src}, '^file:/+', '/'), '\\\\+', '%2B'))"

@@ -652,40 +652,6 @@ def _clustering_columns(table: str, proto: dict) -> list[str]:
         return []
 
 
-def _keep_row_ids(spark, table: str, df, files: list[dict], rt_id, rt_cv):
-    """Row tracking through a rewrite (PROTOCOL.md Row Tracking): each
-    row of ``df`` (read with ``__dv_fp``/``__dv_ri``, which stay) keeps
-    its identity MATERIALIZED in the table's configured columns — the
-    value a prior rewrite stamped, else its file's baseRowId + position
-    and defaultRowCommitVersion."""
-    from pyspark.sql import functions as F
-
-    from pipeline_spark.functions.localframe import local_frame
-
-    rid = local_frame(
-        spark,
-        [
-            (
-                os.path.abspath(
-                    os.path.join(table, urllib.parse.unquote(a["path"]))
-                ),
-                int(a.get("baseRowId") or 0),
-                int(a.get("defaultRowCommitVersion") or 0),
-            )
-            for a in files
-        ],
-        "__rt_fp string, __rt_base long, __rt_dcv long",
-    )
-    df = df.join(
-        F.broadcast(rid), df["__dv_fp"] == rid["__rt_fp"], "left"
-    ).withColumn(
-        rt_id, F.coalesce(F.col(rt_id), F.col("__rt_base") + F.col("__dv_ri"))
-    )
-    if rt_cv:
-        df = df.withColumn(rt_cv, F.coalesce(F.col(rt_cv), F.col("__rt_dcv")))
-    return df.drop("__rt_fp", "__rt_base", "__rt_dcv")
-
-
 def delete_delta_native(spark, p: dict[str, Any]) -> dict[str, int]:
     """Row-level DELETE WHERE, copy-on-write (the jar-free Delta shape):
     only files whose ``add.stats`` ADMIT a match are probed, only files
@@ -1062,11 +1028,11 @@ def _mor(p: dict[str, Any]) -> bool:
 class _Rowlevel:
     """The Delta adapter of the row-level planner (sinks/rowlevel.py) over
     one snapshot, shared by DELETE, UPDATE, MERGE and OPTIMIZE: ``t``
-    describes the table — a DV-aware live-row reader with partition
-    literals (and, on a row-tracking table, each row's id and commit
-    version), per-partition staging under ``data-<op>-<id>/`` and
-    change-data staging — and the methods build the commits' actions
-    and publish them.
+    describes the table — the source's live-row reader
+    (:func:`sources.delta_native.live_rows`; on a row-tracking table
+    with each row's id and commit version), per-partition staging under
+    ``data-<op>-<id>/`` and change-data staging — and the methods build
+    the commits' actions and publish them.
 
     ``where`` and ``set`` are logical names; files, stats and
     partitionValues physical — translated at the boundaries.
@@ -1075,17 +1041,15 @@ class _Rowlevel:
 
     def __init__(self, spark, table: str, state: tuple, op: str, *,
                  cdf: bool, staged_by: tuple[str, int] | None = None):
-        from pyspark.sql.types import LongType, StructField, StructType
+        from pyspark.sql.types import StructType
 
         from pipeline_spark.functions.sqltext import qi
         from pipeline_spark.sinks import rowlevel
         from pipeline_spark.sources.delta_native import (
             _column_mapping,
             _stats_may_match,
-            partition_literal_sql,
-            read_files_with_dv,
+            live_rows,
             stats_to_logical,
-            to_logical_df,
             to_physical_df,
         )
 
@@ -1093,17 +1057,12 @@ class _Rowlevel:
         self.spark, self.table, self.state, self.op = spark, table, state, op
         self.proto = proto or {}
         self.cm = cm = _column_mapping(meta)
-        log_of = {v: k for k, v in cm["phys_of"].items()} if cm else {}
         part_cols = list(meta.get("partitionColumns") or [])
         part_set = set(part_cols)
         self.phys_part_cols = (
             [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
         )
         full = StructType.fromJson(json.loads(meta["schemaString"]))
-        read_fields = cm["phys_schema"].fields if cm else full.fields
-        fschema = StructType(
-            [f for f in read_fields if f.name not in self.phys_part_cols]
-        )
         self.log_fschema = log_fschema = [
             f for f in full.fields if f.name not in part_cols
         ]
@@ -1152,36 +1111,16 @@ class _Rowlevel:
             return list(by_pv.values())
 
         def read(files: list[dict], lineage: bool):
-            lineage = bool(lineage and rowtrack)
-            rt_cols = [rt_id, rt_cv] if lineage else []
-            sch = StructType(
-                list(fschema.fields)
-                + [StructField(c, LongType(), True) for c in rt_cols]
+            return live_rows(
+                spark, table, meta, files,
+                lineage=bool(lineage and rowtrack), positions=True,
             )
-            parts = []
-            for gfiles in groups(files):
-                # DV-aware: rows a file's deletion vector already
-                # removed neither match nor come back in a rewrite
-                df = read_files_with_dv(
-                    spark, table, sch, gfiles, with_meta=True
-                )
-                df = to_logical_df(
-                    df, cm, log_fschema, keep=(*rt_cols, "__dv_fp", "__dv_ri")
-                )
-                if lineage:
-                    df = _keep_row_ids(spark, table, df, gfiles, rt_id, rt_cv)
-                pv = gfiles[0].get("partitionValues") or {}
-                parts.append(df.selectExpr(
-                    *[qi(f.name) for f in log_fschema], *map(qi, rt_cols),
-                    "__dv_fp AS __fp__", "__dv_ri AS __pos__",
-                    *partition_literal_sql(pv.items(), types, log_of),
-                ))
-            out = parts[0]
-            for x in parts[1:]:
-                out = out.unionByName(x)
-            return out
 
         def stage(i: int, files: list[dict], df) -> list[tuple]:
+            if rowtrack:
+                df = df.withColumnsRenamed({
+                    "_row_id": rt_id, "_row_commit_version": rt_cv,
+                })
             return _write_files(
                 os.path.join(table, self.data_dir, f"grp-{i:05d}"),
                 to_physical_df(df, cm), files[0].get("partitionValues") or {},
@@ -1208,7 +1147,8 @@ class _Rowlevel:
             may_match=may_match, path_of=path_of, read=read, stage=stage,
             groups=groups, part_cols=part_cols, types=types,
             lineage=(
-                (rt_id, rt_cv, (prev_version or 0) + 1) if rowtrack else None
+                ("_row_id", "_row_commit_version", (prev_version or 0) + 1)
+                if rowtrack else None
             ),
             changes=changes if cdf else None, bin_key=pv_key,
         )

@@ -1842,22 +1842,6 @@ def _alter_sort_order(table: IcebergTable, meta: dict,
     return {"sort_by": sort_by}
 
 
-def _fill_schema_read(spark, meta: dict, files: list[dict],
-                      extra_row_id: bool = False):
-    """Multi-file scan under the TABLE schema — for file sets containing
-    identity-fill files (converted / add_files imports) or v3 lineage
-    reads: schema inference off a file missing a column (partition
-    column / not-yet-materialized ``_row_id``) would silently drop
-    values the OTHER files physically carry."""
-    from pipeline_spark.sources.iceberg_native import _spark_schema_of
-
-    sch = _spark_schema_of(meta)
-    if extra_row_id:
-        sch += (", `_row_id` bigint"
-                ", `_last_updated_sequence_number` bigint")
-    return spark.read.schema(sch).parquet(*[d["path"] for d in files])
-
-
 def compact_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
     """Rewrite-data-files compaction, planned by
     :func:`sinks.rowlevel.compact` over the Iceberg adapter: small files
@@ -1974,8 +1958,8 @@ def delete_iceberg_native(spark, p: dict[str, Any]) -> dict[str, int]:
 class _Rowlevel:
     """The Iceberg adapter of the row-level planner (sinks/rowlevel.py)
     over one snapshot, shared by DELETE, UPDATE, MERGE and compaction:
-    ``t`` describes the table — the snapshot's live files, a live-row
-    reader (schema-evolved, identity-fill and row-delete aware, v3
+    ``t`` describes the table — the snapshot's live files, the source's
+    live-row reader (:func:`sources.iceberg_native.live_rows`, v3
     lineage derived) and default-spec staging under ``data/<op>-<id>/``
     — and :meth:`replace` is the copy-on-write commit.  A compaction's
     read applies deletes irreversibly: an ambiguous legacy delete needs
@@ -1985,20 +1969,17 @@ class _Rowlevel:
                  op: str):
         from pipeline_spark.sinks import rowlevel
         from pipeline_spark.sources.iceberg_native import (
-            _apply_row_deletes,
+            Snapshot,
             _bounds_may_match,
             _schema_fields,
-            apply_identity_fill,
-            derive_row_ids,
-            evolved_scan,
-            identity_fill_plan,
+            live_rows,
             plan_files,
-            stamp_lineage,
         )
 
-        legacy = parse_legacy_global_deletes(p)
-        self.table = table
         data, deletes, meta = plan_files(table.path, meta=table.meta)
+        snap = Snapshot(meta, data, deletes, parse_legacy_global_deletes(p),
+                        "legacyGlobalDeletes" in p)
+        self.table = table
         self.meta = meta
         fields = _schema_fields(meta)
         id2field = {f["id"]: f for f in fields}
@@ -2013,40 +1994,10 @@ class _Rowlevel:
         )
 
         def read(files: list[dict], lineage: bool):
-            lineage = lineage and v3
-            # identity-fill files (delta-converted / add_files imports
-            # whose parquet never materialized the identity partition
-            # columns) read under the TABLE schema and fill from the
-            # manifest partition records, so predicates on partition
-            # columns match and a rewrite materializes the columns
-            fills, ftypes = identity_fill_plan(files, meta)
-            if any(d.get("renames") or d.get("absent") or d.get("dropped")
-                   for d in files):
-                df = evolved_scan(
-                    spark, spark.read, files, fields, with_lineage=True,
-                    keep_extra=LINEAGE_COLS if lineage else None,
-                )
-            elif fills or lineage:
-                df = _fill_schema_read(
-                    spark, meta, files, extra_row_id=lineage
-                )
-            else:
-                df = read_parquet(spark, *[d["path"] for d in files])
-            df = stamp_lineage(df)
-            if fills:
-                df = apply_identity_fill(spark, df, fills, ftypes)
-            if lineage:
-                df = derive_row_ids(spark, df, files, with_seq=True)
-            if deletes:
-                # LIVE rows only: a row a DV / position / equality
-                # delete already removed neither matches nor comes back
-                df = _apply_row_deletes(
-                    spark, df, files, deletes, meta, keep_lineage=True,
-                    legacy_global_deletes=legacy, all_data=data,
-                    irreversible=op == "compact",
-                    legacy_explicit="legacyGlobalDeletes" in p,
-                )
-            return df
+            return live_rows(
+                spark, snap, files, lineage=lineage and v3, positions=True,
+                irreversible=op == "compact",
+            )
 
         self.deletes = deletes
         self.t = rowlevel.Table(

@@ -569,7 +569,7 @@ def to_logical_df(df, cm: dict | None, fields, keep: tuple = ()):
     """Restore logical names on a physical-schema frame: one positional
     struct cast per column renames every nesting level.  ``fields`` =
     the logical StructFields to restore; ``keep`` = passthrough columns
-    (``__dv_fp``, ``_change_type``...) appended verbatim when present."""
+    (``__fp__``, ``_change_type``...) appended verbatim when present."""
     from pyspark.sql import functions as F
 
     from pipeline_spark.functions.sqltext import atomic_ddl, qi
@@ -640,63 +640,95 @@ def delta_source(ctx: ModuleContext) -> dict[str, Any]:
     return {"": read_delta_native(ctx.spark, ctx.params)}
 
 
-def read_files_with_dv(spark, table, fschema, adds, with_meta: bool = False):
-    """DataFrame over these add actions' data files with their deletion
-    vectors APPLIED — the one correct way to re-read table files once
-    DVs are writable state (mutation rewrites, compaction, CDF remove
-    derivation must never treat a DV-carrying file as fully live).
+def live_rows(spark, table: str, meta: dict, files: list[dict], *,
+              lineage: bool = False, positions: bool = False):
+    """The live rows of some add actions of one snapshot (``meta`` is its
+    metaData action): the logical columns, column mapping undone and
+    partition values attached, without the rows a deletion vector
+    removed.  The source, the row-level adapter and the change feed read
+    a Delta table through this one function.
 
-    Files without DVs read in one multi-path scan; DV files anti-join
-    their executor-decoded (file, row-index) frame.  ``with_meta=True``
-    keeps ``__dv_fp``/``__dv_ri`` (normalized file path + physical row
-    index) on the output for callers that need row identity.
-    """
+    A hive layout reads in one ``basePath`` scan (Spark prunes its
+    partition directories); any other layout in one scan per partition
+    tuple, its values attached as literals.  A DV file's rows anti-join
+    its executor-decoded ``(__fp__, __pos__)`` frame: the normalized
+    file path and physical row index, kept on the output with
+    ``positions``.  ``lineage`` adds ``_row_id`` and
+    ``_row_commit_version`` (PROTOCOL.md Row Tracking): the value a
+    rewrite materialized, else the file's baseRowId plus the row's
+    position and its defaultRowCommitVersion."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    from pipeline_spark.functions.sqltext import fp_norm_sql
+    from pipeline_spark.functions.sqltext import fp_norm_sql, qi
 
-    # r16: SQL text — one selectExpr round-trip instead of ~10 Column
-    # calls per scan (this helper runs on every DV-aware delta read)
-    meta_texts = [
-        fp_norm_sql("_metadata.file_path") + " AS __dv_fp",
-        "_metadata.row_index AS __dv_ri",
-    ]
-
+    schema = _schema_from_meta(meta)
+    part_cols = list(meta.get("partitionColumns") or [])
+    cm = _column_mapping(meta)
+    conf = meta.get("configuration") or {}
+    mat_id, mat_cv = (
+        conf.get("delta.rowTracking.materializedRowIdColumnName"),
+        conf.get("delta.rowTracking.materializedRowCommitVersionColumnName"),
+    ) if lineage else (None, None)
+    read_schema = StructType(
+        list((cm["phys_schema"] if cm else schema).fields)
+        + [StructField(c, LongType(), True) for c in (mat_id, mat_cv) if c]
+    )
+    phys_part = (
+        [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
+    )
     paths = [
-        os.path.join(table, urllib.parse.unquote(a["path"])) for a in adds
+        os.path.join(table, urllib.parse.unquote(a["path"])) for a in files
     ]
-    plain = [p for p, a in zip(paths, adds) if not a.get("deletionVector")]
     dv = [
-        (p, a["deletionVector"])
-        for p, a in zip(paths, adds)
-        if a.get("deletionVector")
+        (os.path.abspath(pth), a["deletionVector"])
+        for a, pth in zip(files, paths) if a.get("deletionVector")
     ]
-    parts = []
-    if plain:
-        # recursiveFileLookup: explicit-file scans must not run
-        # partition-directory inference — staged rewrite dirs
-        # (data-delete-*/grp-*) sit at different depths than plain
-        # data dirs and would raise CONFLICTING_DIRECTORY_STRUCTURES
-        df = (
-            spark.read.schema(fschema)
-            .option("recursiveFileLookup", "true")
-            .parquet(*plain)
+    tag = bool(dv or lineage or positions)
+
+    def scan(reader, sch, ps):
+        df = reader.schema(sch).parquet(*ps)
+        if not tag:
+            return df
+        # normalize the URI ("file:/p" → "/p", %XX decoded) so it
+        # matches the descriptor-side os.path.abspath form
+        return df.selectExpr(
+            "*", fp_norm_sql("_metadata.file_path") + " AS __fp__",
+            "_metadata.row_index AS __pos__",
         )
-        if with_meta:
-            df = df.selectExpr("*", *meta_texts)
-        parts.append(df)
+
+    if part_cols and _is_hive_layout(files, phys_part):
+        df = scan(spark.read.option("basePath", table), read_schema, paths)
+    else:
+        # explicit files skip partition-directory inference: staged
+        # rewrite dirs (data-delete-*/grp-*) sit at other depths than
+        # plain data dirs (CONFLICTING_DIRECTORY_STRUCTURES)
+        fschema = StructType(
+            [f for f in read_schema.fields if f.name not in phys_part]
+        )
+        types = {f.name: f.dataType for f in read_schema.fields}
+        groups: dict[tuple, list[str]] = {}
+        for a, pth in zip(files, paths):
+            pv = a.get("partitionValues") or {}
+            key = tuple(pv.get(c) for c in phys_part)
+            groups.setdefault(key, []).append(pth)
+        df = None
+        for key, gpaths in groups.items():
+            g = scan(
+                spark.read.option("recursiveFileLookup", "true"), fschema,
+                gpaths,
+            )
+            if phys_part:
+                g = g.selectExpr(
+                    "*", *partition_literal_sql(zip(phys_part, key), types)
+                )
+            df = g if df is None else df.unionByName(g)
     if dv:
-        df = (
-            spark.read.schema(fschema)
-            .option("recursiveFileLookup", "true")
-            .parquet(*[p for p, _ in dv])
-        ).selectExpr(
-            "*", *meta_texts
-        )
-        entries = [(os.path.abspath(p), json.dumps(d)) for p, d in dv]
         tbl = table
 
         def decode(it):
+            # bitmap decode runs ON EXECUTORS — deleted positions never
+            # materialize on the driver (a DV can carry millions of rows)
             import json as _j
 
             from pipeline_spark.functions.deltadv import load_dv_positions
@@ -711,21 +743,41 @@ def read_files_with_dv(spark, table, fschema, adds, with_meta: bool = False):
         )
 
         deleted, small = positions_frame(
-            spark, entries, decode, "__dv_fp string, __dv_ri bigint",
-            total_rows_of(d.get("cardinality") for _p, d in dv),
+            spark, [(fp, json.dumps(d)) for fp, d in dv], decode,
+            "__fp__ string, __pos__ bigint",
+            total_rows_of(d.get("cardinality") for _fp, d in dv),
         )
-        if small:
-            deleted = F.broadcast(deleted)
-        out = df.join(deleted, on=["__dv_fp", "__dv_ri"], how="left_anti")
-        if not with_meta:
-            out = out.drop("__dv_fp", "__dv_ri")
-        parts.append(out)
-    if not parts:
-        return local_frame(spark, [], fschema)
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
+        df = df.join(
+            F.broadcast(deleted) if small else deleted,
+            on=["__fp__", "__pos__"], how="left_anti",
+        )
+    meta_cols = ("__fp__", "__pos__") if positions or lineage else ()
+    df = to_logical_df(
+        df, cm, schema.fields,
+        keep=(*meta_cols, *filter(None, (mat_id, mat_cv))),
+    )
+    if not lineage:
+        return df
+    rid = local_frame(
+        spark,
+        [
+            (os.path.abspath(pth), int(a.get("baseRowId") or 0),
+             int(a.get("defaultRowCommitVersion") or 0))
+            for a, pth in zip(files, paths)
+        ],
+        "__rt_fp string, __rt_base long, __rt_dcv long",
+    )
+    df = df.join(F.broadcast(rid), df["__fp__"] == rid["__rt_fp"], "left")
+    return df.selectExpr(
+        *[qi(f.name) for f in schema.fields],
+        *(("__fp__", "__pos__") if positions else ()),
+        "coalesce({}, __rt_base + __pos__) AS _row_id".format(
+            qi(mat_id) if mat_id else "CAST(NULL AS BIGINT)"
+        ),
+        "coalesce({}, __rt_dcv) AS _row_commit_version".format(
+            qi(mat_cv) if mat_cv else "CAST(NULL AS BIGINT)"
+        ),
+    )
 
 
 def read_delta_cdf(spark, p: dict[str, Any]):
@@ -747,8 +799,9 @@ def read_delta_cdf(spark, p: dict[str, Any]):
     actionably); planning is O(commits in range) driver-side, file reads
     stay distributed.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
+
+    from pipeline_spark.functions.sqltext import qi
 
     table = p.get("path") or p.get("table") or p.get("input")
     if not table:
@@ -784,42 +837,24 @@ def read_delta_cdf(spark, p: dict[str, Any]):
     schema = _schema_from_meta(meta)
     part_cols = list(meta.get("partitionColumns") or [])
     cm = _column_mapping(meta)
-    # data/cdc files are written under PHYSICAL names on column-mapped
-    # tables: read under the physical schema, restore logical in attach()
-    phys_part_cols = (
+    # cdc files are written under PHYSICAL names on column-mapped tables:
+    # read under the physical schema, logical names restored after
+    read_fields = cm["phys_schema"].fields if cm else schema.fields
+    phys_part = (
         [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
     )
-    read_fields = cm["phys_schema"].fields if cm else schema.fields
-    fschema = StructType(
-        [f for f in read_fields if f.name not in phys_part_cols]
-    )
-    log_fschema = [f for f in schema.fields if f.name not in part_cols]
-    types = {f.name: f.dataType for f in schema.fields}
+    types = {f.name: f.dataType for f in read_fields}
     cdc_schema = StructType(
-        [*fschema.fields]
+        [f for f in read_fields if f.name not in phys_part]
     ).add("_change_type", "string")
 
-    def attach(df, pv, ctype, version, ts_ms):
-        df = to_logical_df(df, cm, log_fschema, keep=("_change_type",))
-        for c in part_cols:
-            v = (pv or {}).get(cm["phys_of"].get(c, c) if cm else c)
-            df = df.withColumn(
-                c,
-                F.lit(v).cast(types[c]) if v is not None
-                else F.lit(None).cast(types[c]),
-            )
-        if ctype is not None:
-            df = df.withColumn("_change_type", F.lit(ctype))
-        return (
-            df.withColumn("_commit_version", F.lit(version).cast("long"))
-            .withColumn(
-                "_commit_timestamp",
-                F.timestamp_millis(F.lit(ts_ms).cast("long")),
-            )
-            .select(
-                *[f.name for f in schema.fields],
-                "_change_type", "_commit_version", "_commit_timestamp",
-            )
+    def stamp(df, ctype, version, ts_ms):
+        return df.selectExpr(
+            *[qi(f.name) for f in schema.fields],
+            "_change_type" if ctype is None else f"'{ctype}' AS _change_type",
+            f"CAST({int(version)} AS BIGINT) AS _commit_version",
+            f"timestamp_millis(CAST({int(ts_ms)} AS BIGINT)) "
+            "AS _commit_timestamp",
         )
 
     parts = []
@@ -844,48 +879,48 @@ def read_delta_cdf(spark, p: dict[str, Any]):
                     "timestamp"
                 ):
                     ts_ms = int(action["commitInfo"]["timestamp"])
-        def by_partition(actions):
-            grouped: dict[tuple, list[dict]] = {}
-            for act in actions:
-                key = tuple(sorted((act.get("partitionValues") or {}).items()))
-                grouped.setdefault(key, []).append(act)
-            return grouped
-
         if cdc_actions:
             # one multi-path scan per partition tuple, not per file —
             # a realistic range would otherwise chain thousands of scans
-            for key, acts in by_partition(cdc_actions).items():
-                cpaths = [
-                    os.path.join(table, urllib.parse.unquote(c["path"]))
-                    for c in acts
-                ]
+            grouped: dict[tuple, list[str]] = {}
+            for c in cdc_actions:
+                pv = c.get("partitionValues") or {}
+                grouped.setdefault(
+                    tuple(pv.get(k) for k in phys_part), []
+                ).append(os.path.join(table, urllib.parse.unquote(c["path"])))
+            for key, cpaths in grouped.items():
                 df = spark.read.schema(cdc_schema).parquet(*cpaths)
-                parts.append(attach(df, dict(key), None, v, ts_ms))
+                if phys_part:
+                    df = df.selectExpr(
+                        "*", *partition_literal_sql(zip(phys_part, key), types)
+                    )
+                df = to_logical_df(
+                    df, cm, schema.fields, keep=("_change_type",)
+                )
+                parts.append(stamp(df, None, v, ts_ms))
             continue
-        for key, acts in by_partition(add_actions).items():
-            df = read_files_with_dv(spark, table, fschema, acts)
-            parts.append(attach(df, dict(key), "insert", v, ts_ms))
+        if add_actions:
+            df = live_rows(spark, table, meta, add_actions)
+            parts.append(stamp(df, "insert", v, ts_ms))
         if remove_actions:
             # delete rows = the removed files' content AS OF the prior
             # version: the pre-remove add carries the file's deletion
             # vector, which must not resurrect already-deleted rows
             prior_adds, _m2, _p2, _v2, _t2 = replay_state(table, v - 1)
             prior_by_path = {a["path"]: a for a in prior_adds}
-            for key, acts in by_partition(remove_actions).items():
-                resolved = []
-                for r in acts:
-                    path = os.path.join(
-                        table, urllib.parse.unquote(r["path"])
+            for r in remove_actions:
+                if not os.path.exists(
+                    os.path.join(table, urllib.parse.unquote(r["path"]))
+                ):
+                    raise FileNotFoundError(
+                        f"delta cdf: removed file {r['path']} (version "
+                        f"{v}) was vacuumed — its delete rows cannot "
+                        "be reconstructed"
                     )
-                    if not os.path.exists(path):
-                        raise FileNotFoundError(
-                            f"delta cdf: removed file {r['path']} (version "
-                            f"{v}) was vacuumed — its delete rows cannot "
-                            "be reconstructed"
-                        )
-                    resolved.append(prior_by_path.get(r["path"], r))
-                df = read_files_with_dv(spark, table, fschema, resolved)
-                parts.append(attach(df, dict(key), "delete", v, ts_ms))
+            df = live_rows(spark, table, meta, [
+                prior_by_path.get(r["path"], r) for r in remove_actions
+            ])
+            parts.append(stamp(df, "delete", v, ts_ms))
     if not parts:
         empty = StructType([*schema.fields]).add("_change_type", "string").add(
             "_commit_version", "long"
@@ -1050,17 +1085,15 @@ def data_filter_sql(dfilter: list[dict]) -> str:
     return " AND ".join(parts)
 
 
-def partition_literal_sql(values, types: dict, name_of=None) -> list[str]:
+def partition_literal_sql(values, types: dict) -> list[str]:
     """One partition group's values (``(physical column, partitionValues
     string)`` pairs) as ``CAST(<literal> AS <type>) AS <name>`` select
     texts — the lexical value cast to the column type, as F.lit(v).cast
-    does.  ``name_of`` maps a physical name to the output (logical) one;
-    ``types`` is keyed by output name."""
+    does; ``types`` is keyed by physical name."""
     from pipeline_spark.functions.sqltext import atomic_ddl, qi, sql_lit
 
     out = []
-    for c, v in values:
-        name = (name_of or {}).get(c, c)
+    for name, v in values:
         ddl = atomic_ddl(types[name])
         if ddl is None:
             raise ValueError(
@@ -1079,6 +1112,8 @@ def _apply_data_filter(df, dfilter: list[dict]):
 
 def read_delta_native(spark, p: dict[str, Any]):
     """DataFrame over a filesystem Delta table via the metadata path."""
+    from pyspark.sql.types import StructType
+
     table = p.get("path") or p.get("table") or p.get("input")
     if not table:
         raise ValueError("delta source: 'path' is required")
@@ -1092,7 +1127,15 @@ def read_delta_native(spark, p: dict[str, Any]):
     adds, meta, _proto, _v = replay_log(
         table, int(version) if version is not None else None
     )
+    # row tracking (PROTOCOL.md Row Tracking): ``withRowIds: true`` adds
+    # ``_row_id`` / ``_row_commit_version``, an empty read included
+    want_ri = bool(p.get("withRowIds"))
     schema = _schema_from_meta(meta)
+    empty = schema
+    if want_ri:
+        empty = StructType(schema.fields).add("_row_id", "long").add(
+            "_row_commit_version", "long"
+        )
     part_cols = list(meta.get("partitionColumns") or [])
     cm = _column_mapping(meta)
     # files, partitionValues keys and stats keys all use PHYSICAL names;
@@ -1139,26 +1182,9 @@ def read_delta_native(spark, p: dict[str, Any]):
             dfilter = [dfilter]
         adds = [a for a in adds if _stats_may_match(a, dfilter, schema)]
         if not adds:
-            return _apply_data_filter(local_frame(spark, [], schema), dfilter)
+            return _apply_data_filter(local_frame(spark, [], empty), dfilter)
     if not adds:
-        return local_frame(spark, [], schema)
-    paths = [os.path.join(table, urllib.parse.unquote(a["path"])) for a in adds]
-
-    from pyspark.sql import functions as F
-
-    # physical view of the table: column mapping renames, DV descriptors
-    read_schema = cm["phys_schema"] if cm else schema
-    # row tracking (PROTOCOL.md Row Tracking): ``withRowIds: true`` adds
-    # ``_row_id`` / ``_row_commit_version`` — a row's id is the
-    # MATERIALIZED column when a rewrite preserved it, else
-    # baseRowId + physical position (fresh rows); the commit version
-    # follows the same rule via defaultRowCommitVersion
-    want_ri = bool(p.get("withRowIds"))
-    conf_ri = meta.get("configuration") or {}
-    mat_id = conf_ri.get("delta.rowTracking.materializedRowIdColumnName")
-    mat_cv = conf_ri.get(
-        "delta.rowTracking.materializedRowCommitVersionColumnName"
-    )
+        return local_frame(spark, [], empty)
     if want_ri:
         missing_ri = [a["path"] for a in adds if a.get("baseRowId") is None]
         if missing_ri:
@@ -1166,164 +1192,8 @@ def read_delta_native(spark, p: dict[str, Any]):
                 "delta: withRowIds needs a row-tracking table — files "
                 f"without baseRowId: {missing_ri[:3]}"
             )
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        mat_fields = [
-            StructField(c, LongType(), True)
-            for c in (mat_id, mat_cv) if c
-        ]
-        if mat_fields:
-            read_schema = StructType(list(read_schema.fields) + mat_fields)
-    phys_part_cols = (
-        [cm["phys_of"].get(c, c) for c in part_cols] if cm else part_cols
-    )
-    dv_adds = [
-        (pth, a["deletionVector"])
-        for a, pth in zip(adds, paths)
-        if a.get("deletionVector")
-    ]
-
-    def add_meta(df):
-        # merge-on-read: tag every row with its file + physical row index
-        # so DV positions can anti-join it away (row-id derivation needs
-        # the same pair)
-        if not dv_adds and not want_ri:
-            return df
-        from pipeline_spark.functions.sqltext import fp_norm_sql
-
-        return df.selectExpr(
-            "*",
-            # normalize the URI ("file:/p" → "/p", %XX decoded) so it
-            # matches the descriptor-side os.path.abspath form
-            fp_norm_sql("_metadata.file_path") + " AS __dv_fp",
-            "_metadata.row_index AS __dv_ri",
-        )
-
-    def drop_deleted(df):
-        if not dv_adds:
-            return df
-        tbl = table
-        entries = [
-            (os.path.abspath(pth), json.dumps(desc)) for pth, desc in dv_adds
-        ]
-
-        def decode(it):
-            # bitmap decode runs ON EXECUTORS — deleted positions never
-            # materialize on the driver (a DV can carry millions of rows)
-            import json as _j
-
-            from pipeline_spark.functions.deltadv import load_dv_positions
-
-            for fp, dj in it:
-                for pos in load_dv_positions(tbl, _j.loads(dj)):
-                    yield (fp, int(pos))
-
-        from pipeline_spark.functions.dvframe import (
-            positions_frame,
-            total_rows_of,
-        )
-
-        deleted, small = positions_frame(
-            spark, entries, decode, "__dv_fp string, __dv_ri bigint",
-            total_rows_of(desc.get("cardinality") for _p, desc in dv_adds),
-        )
-        if small:
-            deleted = F.broadcast(deleted)
-        out = df.join(
-            deleted, on=["__dv_fp", "__dv_ri"], how="left_anti"
-        )
-        # survivors keep their PHYSICAL positions — exactly what the
-        # row-id derivation needs, so the stamp stays when requested
-        return out if want_ri else out.drop("__dv_fp", "__dv_ri")
-
-    def done(out):
-        # one positional struct cast per column restores the logical
-        # names at every nesting level — no per-field rewrites
-        keep = (
-            ("__dv_fp", "__dv_ri") + tuple(c for c in (mat_id, mat_cv) if c)
-            if want_ri else ()
-        )
-        out = to_logical_df(drop_deleted(out), cm, schema.fields, keep=keep)
-        if want_ri:
-            rid = local_frame(
-                spark,
-                [
-                    (
-                        os.path.abspath(pth),
-                        int(a["baseRowId"]),
-                        int(a.get("defaultRowCommitVersion") or 0),
-                    )
-                    for a, pth in zip(adds, paths)
-                ],
-                "__rt_fp string, __rt_base long, __rt_dcv long",
-            )
-            out = out.join(
-                F.broadcast(rid), out["__dv_fp"] == rid["__rt_fp"], "left"
-            )
-            mat_id_col = (
-                F.col(mat_id) if mat_id and mat_id in out.columns
-                else F.lit(None).cast("long")
-            )
-            mat_cv_col = (
-                F.col(mat_cv) if mat_cv and mat_cv in out.columns
-                else F.lit(None).cast("long")
-            )
-            out = out.withColumn(
-                "_row_id",
-                F.coalesce(mat_id_col, F.col("__rt_base") + F.col("__dv_ri")),
-            ).withColumn(
-                "_row_commit_version",
-                F.coalesce(mat_cv_col, F.col("__rt_dcv")),
-            ).drop(
-                "__dv_fp", "__dv_ri", "__rt_fp", "__rt_base", "__rt_dcv",
-                *[c for c in (mat_id, mat_cv) if c],
-            )
-        return _apply_data_filter(out, dfilter) if dfilter else out
-
-    if not part_cols:
-        # explicit files, no partition columns: skip directory inference
-        return done(
-            add_meta(
-                spark.read.schema(read_schema)
-                .option("recursiveFileLookup", "true")
-                .parquet(*paths)
-            )
-        )
-    if _is_hive_layout(adds, phys_part_cols):
-        # hive layout: directory-based partition columns, pruned by Spark
-        return done(
-            add_meta(
-                spark.read.schema(read_schema)
-                .option("basePath", table)
-                .parquet(*paths)
-            )
-        )
-    # non-hive layout: group files by partition tuple, attach literals
-    from pyspark.sql.types import StructType
-
-    fschema = StructType(
-        [f for f in read_schema.fields if f.name not in phys_part_cols]
-    )
-    types = {f.name: f.dataType for f in read_schema.fields}
-    groups: dict[tuple, list[str]] = {}
-    for a, path in zip(adds, paths):
-        pv = a.get("partitionValues") or {}
-        key = tuple(pv.get(c) for c in phys_part_cols)
-        groups.setdefault(key, []).append(path)
-    parts = []
-    for key, gpaths in groups.items():
-        df = add_meta(
-            spark.read.schema(fschema)
-            .option("recursiveFileLookup", "true")
-            .parquet(*gpaths)
-        )
-        parts.append(df.selectExpr(
-            "*", *partition_literal_sql(zip(phys_part_cols, key), types)
-        ))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return done(out)
+    out = live_rows(spark, table, meta, adds, lineage=want_ri)
+    return _apply_data_filter(out, dfilter) if dfilter else out
 
 
 def read_delta_history(spark, p: dict[str, Any]):

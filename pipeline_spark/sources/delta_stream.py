@@ -150,6 +150,40 @@ def _convert_part(value: str | None, type_name: str):
     return value
 
 
+def _live_file_rows(table: str, partition):
+    """``(physical row, logical tuple)`` for each live row of one
+    partition's data file, read on an executor: the rows its deletion
+    vector removed are skipped (emitting them would resurrect deleted
+    data), column-mapped values are renamed to their logical names and
+    hive partition columns filled from the add's partitionValues."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(partition.path)
+    cols = set(tbl.schema.names)
+    types = dict(partition.fields)
+    part_map = dict(partition.part_values)
+    deleted = set()
+    if partition.dv_json:
+        from pipeline_spark.functions.deltadv import load_dv_positions
+
+        deleted = {
+            int(x)
+            for x in load_dv_positions(table, json.loads(partition.dv_json))
+        }
+    pm = partition.phys_map
+    for idx, row in enumerate(tbl.to_pylist()):
+        if idx in deleted:
+            continue
+        out = []
+        for name, _t in partition.fields:
+            phys, spec = pm.get(name, (name, None))
+            if phys in cols:
+                out.append(_apply_rename(row.get(phys), spec))
+            else:
+                out.append(_convert_part(part_map.get(name), types[name]))
+        yield row, tuple(out)
+
+
 class _DeltaStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema):
         self.table = options.get("path")
@@ -250,37 +284,8 @@ class _DeltaStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: _FilePartition):
-        import pyarrow.parquet as pq
-
-        part_map = dict(partition.part_values)
-        tbl = pq.read_table(partition.path)
-        cols = set(tbl.schema.names)
-        types = dict(partition.fields)
-        deleted = set()
-        if partition.dv_json:
-            # merge-on-read: the initial snapshot's files may carry
-            # deletion vectors — emitting their raw rows would resurrect
-            # deleted data
-            from pipeline_spark.functions.deltadv import load_dv_positions
-
-            deleted = {
-                int(x)
-                for x in load_dv_positions(
-                    self.table, json.loads(partition.dv_json)
-                )
-            }
-        pm = partition.phys_map
-        for idx, row in enumerate(tbl.to_pylist()):
-            if idx in deleted:
-                continue
-            out = []
-            for name, _t in partition.fields:
-                phys, spec = pm.get(name, (name, None))
-                if phys in cols:
-                    out.append(_apply_rename(row.get(phys), spec))
-                else:
-                    out.append(_convert_part(part_map.get(name), types[name]))
-            yield tuple(out)
+        for _row, out in _live_file_rows(self.table, partition):
+            yield out
 
     def commit(self, end: dict) -> None:
         pass  # Spark's offset log is the source of truth
@@ -337,20 +342,16 @@ class DeltaCdfDataSource(DataSource):
         return _DeltaCdfStreamReader(self.options, schema)
 
 
-class _CdfFilePartition(InputPartition):
+class _CdfFilePartition(_FilePartition):
     def __init__(
         self, path, kind, version, ts_ms, fields, part_values, dv_json,
         phys_map=None,
     ):
-        self.path = path
+        super().__init__(path, part_values, fields, dv_json, phys_map)
         #: "cdc" (file carries _change_type) | "insert" | "delete"
         self.kind = kind
         self.version = version
         self.ts_ms = ts_ms
-        self.fields = fields          # [(name, typeName)] DATA columns only
-        self.part_values = part_values  # [(col, raw string | None)]
-        self.dv_json = dv_json        # deletionVector descriptor (JSON) | None
-        self.phys_map = phys_map or {}  # {logical: (physical, rename spec)}
 
 
 class _DeltaCdfStreamReader(DataSourceStreamReader):
@@ -466,22 +467,6 @@ class _DeltaCdfStreamReader(DataSourceStreamReader):
     def read(self, partition: _CdfFilePartition):
         import datetime as _dt2
 
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.path)
-        cols = set(tbl.schema.names)
-        types = dict(partition.fields)
-        part_map = dict(partition.part_values)
-        deleted = set()
-        if partition.dv_json:
-            from pipeline_spark.functions.deltadv import load_dv_positions
-
-            deleted = {
-                int(x)
-                for x in load_dv_positions(
-                    self.table, json.loads(partition.dv_json)
-                )
-            }
         # tz-AWARE UTC: the DataSource row serializer converts naive
         # datetimes through the MACHINE-local zone (time.mktime), which
         # both differs from the batch reader's timestamp_millis instant
@@ -489,21 +474,9 @@ class _DeltaCdfStreamReader(DataSourceStreamReader):
         ts = _dt2.datetime.fromtimestamp(
             partition.ts_ms / 1000.0, tz=_dt2.timezone.utc
         )
-        rows = tbl.to_pylist()
-        has_ct = "_change_type" in cols
-        pm = partition.phys_map
-        for idx, row in enumerate(rows):
-            if idx in deleted:
-                continue
-            ctype = row.get("_change_type") if has_ct else partition.kind
-            out = []
-            for name, _t in partition.fields:
-                phys, spec = pm.get(name, (name, None))
-                if phys in cols:
-                    out.append(_apply_rename(row.get(phys), spec))
-                else:
-                    out.append(_convert_part(part_map.get(name), types[name]))
-            yield tuple(out) + (ctype, partition.version, ts)
+        for row, out in _live_file_rows(self.table, partition):
+            ctype = row.get("_change_type", partition.kind)
+            yield out + (ctype, partition.version, ts)
 
     def commit(self, end: dict) -> None:
         pass

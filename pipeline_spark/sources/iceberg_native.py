@@ -35,7 +35,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from typing import Any
+from typing import Any, NamedTuple
 
 from pipeline_spark.functions.avroocf import read_ocf_file, read_ocf_file_with_meta
 from pipeline_spark.functions.localframe import local_frame
@@ -741,112 +741,97 @@ def plan_equality_deletes(
     return seq_rows, groups
 
 
-def _apply_row_deletes(
-    spark, df, data: list[dict], deletes: list[dict], meta: dict,
-    *, keep_lineage: bool = False, legacy_global_deletes: str = "refuse",
-    all_data: list[dict] | None = None,
-    irreversible: bool = False,
-    legacy_explicit: bool | None = None,
-):
-    """Merge-on-read: subtract position + equality delete files from the
-    scan (spec §Scan Planning).  Position deletes address exact
-    (file, row ordinal) pairs, matched against Spark's parquet
-    ``_metadata.file_path``/``row_index`` virtual columns; the
-    sequence-number check is unnecessary for them because data files are
-    immutable — a path named by a delete can never gain newer rows.
-    Equality deletes match null-safely on their identifier columns and
-    apply only to data files with data seq STRICTLY below the delete's.
-    """
-    from functools import reduce
+class Snapshot(NamedTuple):
+    """One planned snapshot (:func:`plan_files`): its table metadata,
+    every live data file, every live delete file, and how an ambiguous
+    legacy equality delete scopes (``legacyGlobalDeletes``;
+    ``legacy_explicit`` says the caller set it)."""
 
+    meta: dict
+    data: list[dict]
+    deletes: list[dict]
+    legacy: str = "refuse"
+    legacy_explicit: bool | None = None
+
+
+def _deleted_positions(spark, deletes: list[dict]) -> list:
+    """The ``(__dfp__, __dpos__)`` frames of the position deletes among
+    ``deletes``: each deleted row's scheme-stripped data-file path and
+    ordinal.  Position-delete parquet files read in one scan; v3 puffin
+    deletion vectors decode into one more frame — on the driver and
+    broadcast-hinted when the manifests' record counts (= DV
+    cardinality) say it is small, else on executors (dvframe.py)."""
     from pyspark.sql import functions as F
 
-    from pipeline_spark.functions.sqltext import (
-        fp_norm_sql,
-        scheme_strip_sql,
-    )
+    from pipeline_spark.functions.sqltext import scheme_strip_sql
 
-    if "__fp__" not in df.columns:
-        # URI → raw path: strip the scheme AND percent-decode — a hive
-        # partition value with a space arrives as %20 in
-        # _metadata.file_path and an undecoded comparison silently skips
-        # the seq test / position match (resurrecting deleted rows).
-        # '+' is pre-escaped so url_decode's form-decoding can't corrupt
-        # literal plus signs.  SQL text: one round-trip (r16).
-        df = df.selectExpr(
-            "*",
-            fp_norm_sql("_metadata.file_path") + " AS __fp__",
-            "_metadata.row_index AS __pos__",
-        )
-    # else: an evolved scan already stamped lineage at the per-file scan
-    # (the _metadata virtual columns don't survive a union/projection)
-    pos_all = [d for d in deletes if d["content"] == 1]
-    pdv = [d for d in pos_all if d.get("content_offset") is not None]
-    pos = [d for d in pos_all if d.get("content_offset") is None]
-    pos_frames = []
-    if pos:
-        pos_frames.append(
-            read_parquet(spark, *[d["path"] for d in pos])
-            .selectExpr(
-                scheme_strip_sql("file_path") + " AS __dfp__",
-                "pos AS __dpos__",
-            )
-        )
-    if pdv:
-        # v3 puffin deletion vectors, decoded into the same
-        # (file, ordinal) frame position deletes use.  The strategy —
-        # driver decode + broadcast vs executor decode — comes from the
-        # manifests' record_count (= DV cardinality), see dvframe.py.
+    pos = [d for d in deletes if d["content"] == 1]
+    files = [d["path"] for d in pos if d.get("content_offset") is None]
+    dvs = [d for d in pos if d.get("content_offset") is not None]
+    frames = []
+    if files:
+        frames.append(read_parquet(spark, *files).selectExpr(
+            scheme_strip_sql("file_path") + " AS __dfp__", "pos AS __dpos__",
+        ))
+    if dvs:
         from pipeline_spark.functions.dvframe import (
             positions_frame,
             total_rows_of,
         )
 
-        entries = [
-            (
-                d["referenced_data_file"], d["path"],
-                int(d["content_offset"]), int(d["content_size_in_bytes"]),
-            )
-            for d in pdv
-        ]
-
-        def _decode(it):
+        def decode(it):
             from pipeline_spark.functions.puffin import read_dv_positions
 
             for ref, path, off, ln in it:
                 for p_ in read_dv_positions(path, off, ln):
                     yield (ref, int(p_))
 
-        dv_df, dv_small = positions_frame(
-            spark, entries, _decode, "__dfp_raw string, __dpos__ long",
-            total_rows_of(d.get("record_count") for d in pdv),
+        dv_df, small = positions_frame(
+            spark,
+            [(norm_path(d["referenced_data_file"]), d["path"],
+              int(d["content_offset"]), int(d["content_size_in_bytes"]))
+             for d in dvs],
+            decode, "__dfp__ string, __dpos__ long",
+            total_rows_of(d.get("record_count") for d in dvs),
         )
-        dv_df = dv_df.selectExpr(
-            scheme_strip_sql("__dfp_raw") + " AS __dfp__",
-            "__dpos__",
-        )
-        pos_frames.append(F.broadcast(dv_df) if dv_small else dv_df)
+        frames.append(F.broadcast(dv_df) if small else dv_df)
+    return frames
+
+
+def _apply_row_deletes(spark, df, snap: Snapshot, files: list[dict], *,
+                       irreversible: bool = False):
+    """Merge-on-read: subtract the snapshot's position + equality delete
+    files from ``df``, a scan of ``files`` stamped with ``__fp__``/
+    ``__pos__`` (spec §Scan Planning).  Position deletes address exact
+    (file, row ordinal) pairs; the sequence-number check is unnecessary
+    for them because data files are immutable — a path named by a
+    delete can never gain newer rows.  Equality deletes match
+    null-safely on their identifier columns and apply only to data files
+    with data seq STRICTLY below the delete's.
+    """
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
     # each frame anti-joins separately so each keeps its own join
     # strategy (a union of a broadcastable DV frame with a parquet
     # position-delete scan would lose the broadcast); anti-of-union ==
-    # chained antis
-    for pos_df in pos_frames:
-        # the helper names are unique per side, so the unresolved-name
-        # condition binds identically to the df[..]==pos_df[..] form
-        # (one expr round-trip, r16)
+    # chained antis.  The helper names are unique per side, so the
+    # unresolved-name condition binds as df[..]==pos_df[..] would.
+    for pos_df in _deleted_positions(spark, snap.deletes):
         df = df.join(
             pos_df,
             F.expr("(__fp__ = __dfp__) AND (__pos__ = __dpos__)"),
             "left_anti",
         )
-    eq = [d for d in deletes if d["content"] == 2]
+    eq = [d for d in snap.deletes if d["content"] == 2]
     if eq:
         seq_rows, groups = plan_equality_deletes(
-            spark, eq, data, meta,
-            legacy_global_deletes=legacy_global_deletes,
-            all_data=all_data,
+            spark, eq, files, snap.meta,
+            legacy_global_deletes=snap.legacy,
+            all_data=snap.data,
             irreversible=irreversible,
-            legacy_explicit=legacy_explicit,
+            legacy_explicit=snap.legacy_explicit,
         )
         seq_df = local_frame(
             spark, seq_rows, "__sfp__ string, __dseq__ long, __dpart__ string"
@@ -864,11 +849,7 @@ def _apply_row_deletes(
                 cond = cond & (df["__dpart__"] == F.lit(pkey))
             df = df.join(dels, cond, "left_anti")
         df = df.drop("__dseq__", "__dpart__")
-    if keep_lineage:
-        # writers (position-delete planning, probe scans) still need the
-        # (file, ordinal) identity of each surviving row
-        return df
-    return df.drop("__fp__", "__pos__")
+    return df
 
 
 def evolved_scan(spark, reader, data: list[dict], fields: list[dict],
@@ -1205,6 +1186,73 @@ def derive_row_ids(spark, df, data: list[dict], *, with_seq: bool = False):
     return df.selectExpr(*exprs)
 
 
+def live_rows(spark, snap: Snapshot, files: list[dict], *,
+              lineage: bool = False, positions: bool = False,
+              irreversible: bool = False, merge_schema: bool = False):
+    """The live rows of some data files of one snapshot: the current
+    schema's columns (schema-evolved files migrated; an identity
+    partition column a file does not carry filled from its partition
+    record, spec §Column Projection rule 2), without the rows a position
+    delete, deletion vector or equality delete removed.  The source, the
+    row-level adapter and the changelog read an Iceberg table through
+    this one function.
+
+    ``__fp__``/``__pos__`` (normalized file path + row ordinal) are
+    stamped when a delete, a fill or lineage needs them, and kept on the
+    output with ``positions``.  ``lineage`` adds the v3 ``_row_id`` and
+    ``_last_updated_sequence_number`` (:func:`derive_row_ids`).
+    ``irreversible`` (a compaction) refuses to guess the scope of an
+    ambiguous legacy delete; ``merge_schema`` lets an unevolved scan
+    merge its files' schemas."""
+    meta = snap.meta
+    paths = [d["path"] for d in files]
+    fills, ftypes = identity_fill_plan(files, meta)
+    stamp = bool(snap.deletes or fills or lineage or positions)
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    extra = ["_row_id", "_last_updated_sequence_number"] if lineage else []
+    if any(d.get("renames") or d.get("absent") or d.get("dropped")
+           for d in files):
+        # the migrating scan: one group per schema generation, renames
+        # applied, added columns padded, dropped columns shed, lineage
+        # stamped per file (``_metadata`` does not survive its union)
+        df = evolved_scan(
+            spark, reader, files, _schema_fields(meta),
+            with_lineage=stamp, keep_extra=extra or None,
+        )
+    else:
+        if fills or lineage:
+            # pinned to the table schema: inference off a file missing a
+            # column (an identity-fill column, a not-yet-materialized
+            # _row_id) would drop the values other files carry
+            df = reader.schema(", ".join(
+                [_spark_schema_of(meta)] + [f"`{c}` bigint" for c in extra]
+            )).parquet(*paths)
+        else:
+            df = (reader.parquet(*paths) if merge_schema
+                  else read_parquet(spark, *paths))
+            # a rewrite's materialized lineage columns surface only
+            # with lineage
+            mat = [c for c in ("_row_id", "_last_updated_sequence_number")
+                   if c in df.columns]
+            if mat:
+                df = df.drop(*mat)
+        if stamp:
+            df = stamp_lineage(df)
+    if fills:
+        df = apply_identity_fill(spark, df, fills, ftypes)
+    if lineage:
+        df = derive_row_ids(spark, df, files, with_seq=True)
+    if snap.deletes:
+        df = _apply_row_deletes(
+            spark, df, snap, files, irreversible=irreversible
+        )
+    if stamp and not positions:
+        df = df.drop("__fp__", "__pos__")
+    return df
+
+
 def decode_bound(raw: bytes, ice_type: str):
     """Spec Appendix-D single-value deserialization (pruning subset).
 
@@ -1461,13 +1509,6 @@ def read_iceberg_native(spark, p: dict[str, Any]):
 
             empty = local_frame(spark, [], _spark_schema_of(meta))
             return _apply_data_filter(empty, dfilter)
-    reader = spark.read
-    if p.get("mergeSchema"):
-        reader = reader.option("mergeSchema", "true")
-    evolved = any(
-        d.get("renames") or d.get("absent") or d.get("dropped") for d in data
-    )
-    fills, ftypes = identity_fill_plan(data, meta)
     # v3 row lineage (spec §Row Lineage): ``withRowIds: true`` adds a
     # ``_row_id`` column — a rewrite's MATERIALIZED value when present,
     # else the file's explicit first_row_id + physical position
@@ -1477,56 +1518,11 @@ def read_iceberg_native(spark, p: dict[str, Any]):
             "iceberg: withRowIds needs a format-version 3 table "
             "(row lineage)"
         )
-    need_stamp = bool(deletes) or bool(fills) or want_ri
-    if not evolved:
-        if fills or want_ri:
-            # schema-pinned multi-file scan: inference off a file missing
-            # a column (identity fill / not-yet-materialized _row_id)
-            # would drop values other files physically carry
-            sch = _spark_schema_of(meta)
-            if want_ri:
-                sch += (", `_row_id` bigint"
-                        ", `_last_updated_sequence_number` bigint")
-            df = reader.schema(sch).parquet(*[d["path"] for d in data])
-        else:
-            df = (
-                reader.parquet(*[d["path"] for d in data])
-                if p.get("mergeSchema")
-                else read_parquet(spark, *[d["path"] for d in data])
-            )
-            for _mc in ("_row_id", "_last_updated_sequence_number"):
-                if _mc in df.columns:
-                    # rewrite-materialized metadata columns — surface
-                    # only under withRowIds
-                    df = df.drop(_mc)
-        if need_stamp:
-            df = stamp_lineage(df)
-    else:
-        # schema-evolved files: the migrating scan (one group per schema
-        # generation, renames applied, added columns null-padded, dropped
-        # columns shed).  With row-level deletes the scan carries lineage
-        # columns stamped per-file, so MOR subtraction works identically
-        # to the unevolved path (r7, VERDICT r6 ask #5).
-        df = evolved_scan(
-            spark, reader, data, _schema_fields(meta),
-            with_lineage=need_stamp,
-            keep_extra=(
-                ["_row_id", "_last_updated_sequence_number"]
-                if want_ri else None
-            ),
-        )
-    if fills:
-        df = apply_identity_fill(spark, df, fills, ftypes)
-    if want_ri:
-        df = derive_row_ids(spark, df, data, with_seq=True)
-    if deletes:
-        df = _apply_row_deletes(
-            spark, df, data, deletes, meta,
-            legacy_global_deletes=parse_legacy_global_deletes(p),
-            all_data=all_data,
-        )
-    elif need_stamp:
-        df = df.drop("__fp__", "__pos__")
+    snap = Snapshot(meta, all_data, deletes, parse_legacy_global_deletes(p))
+    df = live_rows(
+        spark, snap, data, lineage=want_ri,
+        merge_schema=bool(p.get("mergeSchema")),
+    )
     if dfilter:
         from pipeline_spark.sources.delta_native import _apply_data_filter
 
@@ -1535,45 +1531,6 @@ def read_iceberg_native(spark, p: dict[str, Any]):
         from pyspark.sql import functions as F
 
         df = df.select(*[F.col(c) for c in p["fields"]])
-    return df
-
-
-def _state_with_lineage(spark, data: list[dict], deletes: list[dict],
-                        meta: dict, *, legacy_global_deletes: str = "refuse",
-                        all_data: list[dict] | None = None):
-    """The live rows of a (data, deletes) plan with stable row identity
-    kept on the output (``__cfp__`` = normalized file path, ``__cpos__``
-    = ordinal) — row deletes applied.  The changelog's building block."""
-    from pyspark.sql import functions as F
-
-    fields = _schema_fields(meta)
-    evolved = any(
-        d.get("renames") or d.get("absent") or d.get("dropped")
-        for d in data
-    )
-    if evolved:
-        df = evolved_scan(spark, spark.read, data, fields, with_lineage=True)
-    else:
-        df = read_parquet(spark, *[d["path"] for d in data]).select(
-            "*",
-            F.url_decode(F.regexp_replace(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ), r"\+", "%2B",
-            )).alias("__fp__"),
-            F.col("_metadata.row_index").alias("__pos__"),
-        )
-    df = df.withColumn("__cfp__", F.col("__fp__")).withColumn(
-        "__cpos__", F.col("__pos__")
-    )
-    if deletes:
-        df = _apply_row_deletes(
-            spark, df, data, deletes, meta,
-            legacy_global_deletes=legacy_global_deletes,
-            all_data=all_data,
-        )
-    else:
-        df = df.drop("__fp__", "__pos__")
     return df
 
 
@@ -1695,23 +1652,17 @@ def read_iceberg_changelog(
             d for d in cur_dels
             if (d["path"], d.get("content_offset")) not in prev_del_keys
         ]
+        prev = Snapshot(meta, prev_data, prev_dels, _lgd)
         if added:
-            ev = any(
-                d.get("renames") or d.get("absent") or d.get("dropped")
-                for d in added
-            )
-            df = (
-                evolved_scan(spark, spark.read, added, fields)
-                if ev else read_parquet(spark, *[d["path"] for d in added])
-            )
-            parts.append(_stamp(df, "insert", ordinal, sid))
+            parts.append(_stamp(
+                live_rows(spark, Snapshot(meta, cur_data, []), added),
+                "insert", ordinal, sid,
+            ))
         if removed:
             # rows live at the PRIOR snapshot: apply the prior delete set
-            live = _state_with_lineage(
-                spark, removed, prev_dels, meta,
-                legacy_global_deletes=_lgd, all_data=prev_data,
-            )
-            parts.append(_stamp(live, "delete", ordinal, sid))
+            parts.append(_stamp(
+                live_rows(spark, prev, removed), "delete", ordinal, sid
+            ))
         if added_dels and prev_data:
             # r12 (VERDICT r11 ask #3): resolving which prior-state rows
             # the NEW delete files remove used to rebuild the FULL prior
@@ -1723,84 +1674,34 @@ def read_iceberg_changelog(
             # definition), conservative for equality (manifest stats;
             # files without stats are kept).
             hits = []
-            pos_pairs = None
+            ref_paths = {
+                norm_path(d["referenced_data_file"]) for d in added_dels
+                if d.get("content_offset") is not None
+            }
             pos_files = [
-                d for d in added_dels
+                d["path"] for d in added_dels
                 if d["content"] == 1 and d.get("content_offset") is None
             ]
-            pdv = [
-                d for d in added_dels
-                if d["content"] == 1 and d.get("content_offset") is not None
-            ]
-            ref_paths = {norm_path(d["referenced_data_file"]) for d in pdv}
             if pos_files:
-                from pipeline_spark.functions.sqltext import (
-                    scheme_strip_sql,
-                )
-
-                pos_pairs = read_parquet(
-                    spark, *[d["path"] for d in pos_files]
-                ).selectExpr(
-                    scheme_strip_sql("file_path") + " AS __dfp__",
-                    "pos AS __dpos__",
-                )
                 # delete files are batch-sized; their referenced-file
                 # set is smaller still (metadata-scale collect)
                 ref_paths.update(
-                    norm_path(r["__dfp__"])
-                    for r in pos_pairs.select("__dfp__").distinct().collect()
+                    norm_path(r[0]) for r in read_parquet(spark, *pos_files)
+                    .select("file_path").distinct().collect()
                 )
-            if pdv:
-                from pipeline_spark.functions.dvframe import (
-                    positions_frame,
-                    total_rows_of,
-                )
-
-                entries = [
-                    (d["referenced_data_file"], d["path"],
-                     int(d["content_offset"]),
-                     int(d["content_size_in_bytes"]))
-                    for d in pdv
-                ]
-
-                def _decode(it):
-                    from pipeline_spark.functions.puffin import (
-                        read_dv_positions,
-                    )
-
-                    for ref, path, off, ln in it:
-                        for p_ in read_dv_positions(path, off, ln):
-                            yield (ref, int(p_))
-
-                dvdf, _dv_small = positions_frame(
-                    spark, entries, _decode, "__dfp__ string, __dpos__ long",
-                    total_rows_of(d.get("record_count") for d in pdv),
-                )
-                if _dv_small and pos_pairs is None:
-                    # a driver-built frame has no Catalyst stats; hint
-                    # the semi-join build side when cardinality is known
-                    # small (parquet pos frames auto-broadcast by size)
-                    dvdf = F.broadcast(dvdf)
-                pos_pairs = (
-                    dvdf if pos_pairs is None
-                    else pos_pairs.unionByName(dvdf)
-                )
-            if pos_pairs is not None:
-                pos_data = [
-                    d for d in prev_data
-                    if norm_path(d["path"]) in ref_paths
-                ]
-                if pos_data:
-                    state = _state_with_lineage(
-                        spark, pos_data, prev_dels, meta,
-                        legacy_global_deletes=_lgd, all_data=prev_data,
-                    )
-                    hits.append(state.join(
-                        pos_pairs,
-                        (state["__cfp__"] == pos_pairs["__dfp__"])
-                        & (state["__cpos__"] == pos_pairs["__dpos__"]),
+            pos_data = [
+                d for d in prev_data if norm_path(d["path"]) in ref_paths
+            ]
+            if pos_data:
+                state = live_rows(spark, prev, pos_data, positions=True)
+                hits += [
+                    state.join(
+                        pos_df,
+                        F.expr("(__fp__ = __dfp__) AND (__pos__ = __dpos__)"),
                         "left_semi",
-                    ))
+                    )
+                    for pos_df in _deleted_positions(spark, added_dels)
+                ]
             id2name = _field_names_by_id(meta)
             id2field = {f["id"]: f for f in _schema_fields(meta)}
             # group the new equality-delete files by their equality_ids
@@ -1856,16 +1757,15 @@ def read_iceberg_changelog(
                 ]
                 if not eq_data:
                     continue
-                state = _state_with_lineage(
-                    spark, eq_data, prev_dels, meta,
-                    legacy_global_deletes=_lgd, all_data=prev_data,
-                )
+                state = live_rows(spark, prev, eq_data, positions=True)
                 cond = reduce(
                     lambda a, b: a & b,
                     [state[c].eqNullSafe(keys[f"__eq_{c}__"]) for c in cols],
                 )
                 hits.append(state.join(keys, cond, "left_semi"))
             if hits:
+                # distinct by row identity: a row two delete files hit
+                # is one delete, two equal rows are two
                 dels = hits[0]
                 for x in hits[1:]:
                     dels = dels.unionByName(x)

@@ -411,3 +411,31 @@ def test_multiple_eq_delete_files_one_group(spark, tmp_path):
     out = read_iceberg_changelog(spark, {"path": tbl})
     dels = [c for c in _changes(out) if c[0] == "delete"]
     assert dels == [("delete", 1, "v1", 1), ("delete", 5, "v5", 1)]
+
+
+def test_imported_table_changes_carry_identity_partition(spark, tmp_path):
+    """An ``add_files``-imported hive directory never wrote its ``par``
+    column into the parquet files: the changelog reads them through the
+    same live-row reader as the source, so inserts and the rows a later
+    delete removes carry ``par`` from the partition records (spec
+    §Column Projection, rule 2)."""
+    from pipeline_spark.sinks.iceberg_addfiles import add_files_iceberg_native
+
+    src = str(tmp_path / "hive")
+    rows = [(i, f"v{i}", i % 2) for i in range(4)]
+    spark.createDataFrame(rows, "id long, v string, par long").write \
+        .partitionBy("par").parquet(src)
+    tbl = str(tmp_path / "imported")
+    add_files_iceberg_native(spark, {"path": tbl, "sourceDir": src})
+    delete_iceberg_native(
+        spark, {"path": tbl, "where": [{"key": "id", "op": "=", "value": 1}]}
+    )
+    out = read_iceberg_changelog(spark, {"path": tbl})
+    got = sorted(
+        (r["_change_type"], r["id"], r["v"], r["par"], r["_change_ordinal"])
+        for r in out.collect()
+    )
+    assert got == sorted(
+        [("insert", i, v, par, 0) for i, v, par in rows]
+        + [("delete", 1, "v1", 1, 1)]
+    )

@@ -5,7 +5,7 @@ tests/test_delta_concurrency.py).
 The local metadata publication is a create-EXCLUSIVE version claim;
 REST commits assert-ref-snapshot-id.  A losing MERGE / UPDATE / DELETE
 (COW or MOR) examines the interleaved snapshots via
-check_commit_conflicts and retries iff its read/write set is provably
+sinks/conflicts.check and retries iff its read/write set is provably
 untouched: an append and a disjoint-key merge BOTH commit; true
 conflicts (same file rewritten, data added inside the loser's read
 predicate, schema changed, a concurrent delete on a file being

@@ -185,3 +185,14 @@ def test_pinned_zorder_keeps_row_ids(spark, tmp_path):
     state.create(ks=[None])
     state.compact(zorder=True)
     state.teardown()
+
+
+def test_pinned_delete_of_every_row_keeps_row_id_columns(spark, tmp_path):
+    """The shrunk failure the slow tier's random examples found: a Delta
+    read ``withRowIds`` of a table whose every row was deleted had no
+    ``_row_id`` column."""
+    Lakehouse.spark, Lakehouse.root = spark, str(tmp_path)
+    state = Lakehouse()
+    state.create(ks=[0])
+    state.delete(mor=False, where=("<", 1))
+    state.teardown()

@@ -230,7 +230,7 @@ ALLOWED = {
     ("sinks/iceberg_addfiles.py", "add_files_iceberg_native"):
         "basePath read that exists to run Spark's partition discovery over a "
         "hive layout, which read_parquet declines",
-    ("sources/iceberg_native.py", "read_iceberg_native"):
+    ("sources/iceberg_native.py", "live_rows"):
         "the mergeSchema option reads every footer, which read_parquet declines",
 }
 
